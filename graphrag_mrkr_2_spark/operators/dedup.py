@@ -211,7 +211,7 @@ def _xxhash64_rehash_matrix(h_signed: "np.ndarray", num_hashes: int):
     numpy arrays (multiplication/addition wrap mod 2^64 exactly like Java
     longs). Returns an int64 (rows, num_hashes) matrix; bit-identity with
     the JVM expression is pinned by
-    tests/test_dedup.py::test_numpy_rehash_matches_spark_xxhash64.
+    tests/test_dedup_ann.py::test_numpy_rehash_matches_spark_xxhash64.
     """
     import numpy as np
 

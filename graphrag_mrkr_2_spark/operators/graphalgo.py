@@ -265,6 +265,9 @@ def connected_components(
     ``local_threshold``: edge lists at or below this size are solved with
     driver-side union-find (one collect) instead of the distributed loop —
     the loop's per-iteration job latency dwarfs the work for small graphs.
+    The size is the count of RAW input rows, as given: directed, possibly
+    duplicated, not symmetrized or deduplicated first (so an undirected
+    graph supplied in both directions counts each edge twice).
     Set 0 to force the distributed path (tests do). At 10^12-document scale
     the global match graph far exceeds any sane threshold, so the
     large-star/small-star path is the one that runs.

@@ -32,6 +32,14 @@ Documented divergences (none affect (subj, pred, obj) identity — SURVEY §7.4)
 - description keep-longer tie-breaks are first-seen in the reference;
   max_by(length) here.
 
+Orphan entities (C5, entity_graph.py:292-341): the batch path does not
+union orphan rows into entities_doc, because the X10 endpoint check leaves
+none. consolidate_relationships_per_doc keeps a relationship only if both
+upper(trim()) endpoint keys are in its document's entity name set
+(triples.py:543-544), and orphan_entities_per_doc anti-joins on that same
+key against that same entities_doc. orphan_entities_per_doc stays as the C5
+operator for relationships that skip the endpoint check.
+
 Scale notes:
 - extraction is chunk-local: no shuffle; Arrow batch size bounds UDF memory.
 - every groupBy below benefits from Spark's built-in partial (map-side)
@@ -557,8 +565,9 @@ def orphan_entities_per_doc(
     """C5 — endpoints that resolve to no entity by name become orphan rows
     (type '', importance 0, mention_count 0, is_orphan=true;
     entity_graph.py:292-341). Empty by construction after the consolidation
-    endpoint check; real for the direct-persistence path and exercised by
-    the F4 fixtures.
+    endpoint check (triples.py:543-544), so ``canonicalize`` does not call
+    it; real for the direct-persistence path and exercised by the F4
+    fixtures.
     """
     endpoints = (
         rels_doc.select("document_id", F.col("source_entity").alias("name"))
@@ -593,6 +602,14 @@ def canonicalize(
     Importance gate per document_processor.py:1096-1108 applied after
     consolidation, before graph assembly (a no-op in practice because the
     low-value filter already dropped importance<0.3 — kept for parity).
+
+    entities_doc carries ``is_orphan = False`` on every row and no C5
+    orphan rows are unioned in: the X10 endpoint check
+    (triples.py:543-544) drops every relationship whose source or target
+    key is missing from the document's gated entity set, so
+    ``orphan_entities_per_doc(rels_doc, entities_doc)`` is empty by
+    construction, and unioning it in would re-run the relationship
+    consolidation and an anti-join inside every entities_doc query.
     """
     ents = entity_mentions(mentions)
     rels = relationship_mentions(mentions)
@@ -603,11 +620,7 @@ def canonicalize(
     rels_doc = consolidate_relationships_per_doc(
         rels, entities_doc, strength_threshold, provenance_cap
     )
-    orphans = orphan_entities_per_doc(rels_doc, entities_doc)
-    entities_doc = entities_doc.withColumn("is_orphan", F.lit(False)).unionByName(
-        orphans
-    )
-    return entities_doc, rels_doc
+    return entities_doc.withColumn("is_orphan", F.lit(False)), rels_doc
 
 
 # ---------------------------------------------------------------------------

@@ -11,11 +11,13 @@ SURVEY §3.1) — but partition-grained instead of row-grained.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from collections.abc import Callable
+from dataclasses import dataclass, field
+from functools import cache, cached_property
 
 from pyspark.sql import DataFrame
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import DEFAULT_CONFIG, ExtractionConfig, PipelineConfig
 from ..operators.extract import chunk_pages, extract_text, filter_chunks, repartition_by_url
 from ..operators.triples import (
     build_edges,
@@ -28,13 +30,49 @@ from ..operators.triples import (
 
 @dataclass
 class KgResult:
-    chunks: DataFrame
+    """The tables of one KG build.
+
+    ``mentions`` is planned by run_kg_pipeline; every other table is planned
+    on first access and then reused. A caller that reads only the mentions
+    and chunks therefore plans no canonicalization or graph assembly, and a
+    fused build plans the modular chunk table only if ``chunks`` is read.
+    """
+
     mentions: DataFrame
-    entities_doc: DataFrame
-    rels_doc: DataFrame
-    nodes: DataFrame
-    edges: DataFrame
-    triples: DataFrame
+    chunk_plan: Callable[[], DataFrame] = field(repr=False)
+    extraction: ExtractionConfig = field(repr=False)
+
+    @cached_property
+    def chunks(self) -> DataFrame:
+        return self.chunk_plan()
+
+    @cached_property
+    def _canonical(self) -> tuple[DataFrame, DataFrame]:
+        return canonicalize(
+            self.mentions,
+            importance_threshold=self.extraction.importance_score_threshold,
+            strength_threshold=self.extraction.strength_threshold,
+        )
+
+    @cached_property
+    def entities_doc(self) -> DataFrame:
+        return self._canonical[0]
+
+    @cached_property
+    def rels_doc(self) -> DataFrame:
+        return self._canonical[1]
+
+    @cached_property
+    def nodes(self) -> DataFrame:
+        return build_nodes(self.entities_doc)
+
+    @cached_property
+    def edges(self) -> DataFrame:
+        return build_edges(self.rels_doc)
+
+    @cached_property
+    def triples(self) -> DataFrame:
+        return build_triples(self.edges)
 
 
 def run_kg_pipeline(
@@ -52,6 +90,9 @@ def run_kg_pipeline(
 ) -> KgResult:
     """pages(url, warc_ts, html, text, lang) → KG tables.
 
+    Only the mentions are planned here (and, under ``materialize_chunks``,
+    extracted and pinned); the returned KgResult plans every other table on
+    first access.
     ``num_partitions``: salted url-hash repartition width before the heavy
     UDF stages (head-domain skew, north_rule). None → keep input layout.
     ``curate_urls``: normalize URLs (operators/urlops.py) and drop
@@ -166,11 +207,13 @@ def run_kg_pipeline(
     if "text" not in pages.columns:
         pages = extract_text(pages)
 
-    # chunks stays lazily available for downstream consumers (similarity,
-    # sentences); under the fused plan it is only computed when accessed.
-    chunks = filter_chunks(
-        chunk_pages(pages, strategy=strategy, cfg=cfg.chunking), cfg=cfg.content_filter
-    )
+    # the modular chunk table feeds the unfused extraction; a fused build
+    # without materialize_chunks plans it only if result.chunks is read
+    @cache
+    def chunk_plan() -> DataFrame:
+        return filter_chunks(
+            chunk_pages(pages, strategy=strategy, cfg=cfg.chunking), cfg=cfg.content_filter
+        )
 
     if fused:
         from ..operators.triples import extract_mentions_fused
@@ -231,11 +274,14 @@ def run_kg_pipeline(
 
             mention_cols = [f.name for f in MENTION_SCHEMA.fields]
             mentions = unified.where(F.col("kind") != "chunk").select(*mention_cols)
-            chunks = unified.where(F.col("kind") == "chunk").select(
-                "chunk_id", "document_id", "content", "page", "start_offset",
-                "end_offset", "chunk_index", "content_hash", "url",
-                "heading_path", "section_title",
-            )
+
+            def chunk_plan() -> DataFrame:  # the pinned chunk rows
+                return unified.where(F.col("kind") == "chunk").select(
+                    "chunk_id", "document_id", "content", "page", "start_offset",
+                    "end_offset", "chunk_index", "content_hash", "url",
+                    "heading_path", "section_title",
+                )
+
             cache_mentions = False  # the checkpoint already materializes
         else:
             mentions = extract_mentions_fused(
@@ -246,16 +292,7 @@ def run_kg_pipeline(
                 max_gleanings=cfg.extraction.max_gleanings,
             )
     else:
-        mentions = extract_mentions(chunks, max_gleanings=cfg.extraction.max_gleanings)
+        mentions = extract_mentions(chunk_plan(), max_gleanings=cfg.extraction.max_gleanings)
     if cache_mentions:
         mentions = mentions.cache()
-
-    entities_doc, rels_doc = canonicalize(
-        mentions,
-        importance_threshold=cfg.extraction.importance_score_threshold,
-        strength_threshold=cfg.extraction.strength_threshold,
-    )
-    nodes = build_nodes(entities_doc)
-    edges = build_edges(rels_doc)
-    triples = build_triples(edges)
-    return KgResult(chunks, mentions, entities_doc, rels_doc, nodes, edges, triples)
+    return KgResult(mentions, chunk_plan, cfg.extraction)

@@ -178,6 +178,124 @@ def test_spark_orphans(spark):
     assert orphans[0]["name"] == "UNKNOWN Y" and orphans[0]["is_orphan"]
 
 
+def _old_canonicalize(mentions):
+    """canonicalize as it was while it unioned the C5 orphans into
+    entities_doc; the invariant test pins the current one to it."""
+    from graphrag_mrkr_2_spark.operators.triples import (
+        consolidate_entities_per_doc,
+        consolidate_relationships_per_doc,
+        entity_mentions,
+        orphan_entities_per_doc,
+        relationship_mentions,
+    )
+
+    entities_doc = consolidate_entities_per_doc(entity_mentions(mentions)).where(
+        F.col("importance_score") >= 0.3
+    )
+    rels_doc = consolidate_relationships_per_doc(
+        relationship_mentions(mentions), entities_doc, 0.4
+    )
+    orphans = orphan_entities_per_doc(rels_doc, entities_doc)
+    entities_doc = entities_doc.withColumn("is_orphan", F.lit(False)).unionByName(
+        orphans
+    )
+    return entities_doc, rels_doc
+
+
+def _row_set(df):
+    """Order-independent multiset of rows (arrays as tuples)."""
+    from collections import Counter
+
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+    )
+
+
+def _variant_mentions(spark):
+    """Mentions with case/whitespace/suffix name variants, a relationship
+    to a missing endpoint, a sub-0.3 entity (and a relationship into it)
+    and a sub-0.4 relationship, across two documents."""
+    from graphrag_mrkr_2_spark.operators.triples import MENTION_SCHEMA
+
+    def ent(doc, chunk, name, importance, ty="SERVICE", desc="d"):
+        return ("entity", chunk, doc, name, ty, None, desc, importance, None, [chunk])
+
+    def rel(doc, chunk, src, tgt, strength, ty="USES", desc="r"):
+        return ("relationship", chunk, doc, src, ty, tgt, desc, None, strength, [chunk])
+
+    rows = [
+        ent("d1", "c1", "Admin Panel", 0.8, "COMPONENT", "zebra"),
+        ent("d1", "c2", "ADMIN PANEL", 0.6, "COMPONENT", "alpha"),
+        ent("d1", "c2", "admin panel ", 0.5, "SERVICE"),
+        ent("d1", "c1", "ACME CORP", 0.7),
+        ent("d1", "c2", "ACME CORPORATION", 0.9),
+        ent("d1", "c3", "FAINT THING", 0.2),
+        rel("d1", "c1", "ADMIN PANEL", "ACME CORP", 0.5),
+        rel("d1", "c2", "admin panel ", "acme corp", 0.7),
+        rel("d1", "c2", "ADMIN PANEL", "ACME CORPORATION", 0.3, "WEAK"),
+        rel("d1", "c2", "ACME CORPORATION", "GHOST NODE", 0.9),
+        rel("d1", "c3", "ACME CORP", "FAINT THING", 0.8),
+        ent("d2", "c9", "ACME CORP", 0.4),
+        ent("d2", "c9", "Admin Panel", 0.9),
+        rel("d2", "c9", "Admin Panel", "ACME CORP", 0.6, "CALLS"),
+        rel("d2", "c9", "ACME CORP", "ADMIN PANEL", 0.45),
+        rel("d2", "c9", "ACME CORP", "ACME CORPORATION", 0.9),
+    ]
+    return spark.createDataFrame(rows, MENTION_SCHEMA)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("source", ["pages40", "adversarial", "variants"])
+def test_canonicalize_leaves_no_orphans(spark, source):
+    """C5 invariant: after the X10 endpoint check no relationship endpoint
+    lacks an entity, so canonicalize unions no orphans and the global
+    tables equal those of the orphan-unioned expression."""
+    from graphrag_mrkr_2_spark.operators.triples import (
+        build_edges,
+        build_nodes,
+        build_triples,
+        canonicalize,
+        extract_mentions_fused,
+        orphan_entities_per_doc,
+    )
+    from graphrag_mrkr_2_spark.sources.pages import (
+        generate_adversarial_pages,
+        generate_pages,
+    )
+
+    if source == "variants":
+        mentions = _variant_mentions(spark)
+    else:
+        pages = (
+            generate_pages(spark, 40)
+            if source == "pages40"
+            else generate_adversarial_pages(spark, 16)
+        )
+        # pinned once so both expressions read the same mention rows
+        mentions = extract_mentions_fused(pages).localCheckpoint(eager=True)
+
+    e_doc, r_doc = canonicalize(mentions)
+    old_e_doc, old_r_doc = _old_canonicalize(mentions)
+    assert orphan_entities_per_doc(r_doc, e_doc).count() == 0
+    assert r_doc.count() > 0
+
+    nodes = build_nodes(e_doc)
+    assert _row_set(nodes) == _row_set(build_nodes(old_e_doc))
+    edges = build_edges(r_doc)
+    old_edges = build_edges(old_r_doc)
+    assert _row_set(edges) == _row_set(old_edges)
+    assert _row_set(build_triples(edges)) == _row_set(build_triples(old_edges))
+    assert not any(r["is_orphan"] for r in nodes.select("is_orphan").collect())
+
+    if source == "variants":
+        names = {r["name"] for r in nodes.collect()}
+        assert "GHOST NODE" not in names and "FAINT THING" not in names
+        triples = {tuple(r) for r in build_triples(edges).collect()}
+        assert ("ACME CORPORATION", "USES", "GHOST NODE") not in triples
+        assert ("ADMIN PANEL", "WEAK", "ACME CORPORATION") not in triples
+        assert ("ACME CORP", "USES", "FAINT THING") not in triples
+
+
 @pytest.mark.spark
 def test_description_summarization_gate(spark):
     """C7 — only long, frequently-mentioned descriptions are rewritten

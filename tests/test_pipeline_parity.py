@@ -138,3 +138,48 @@ def test_frozen_triples_regression(spark):
         for r in run_kg_pipeline(generate_pages(spark, 40), num_partitions=8).triples.collect()
     }
     assert got == expected
+
+
+def _row_set(df):
+    """Order-independent multiset of rows (arrays as tuples)."""
+    from collections import Counter
+
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+    )
+
+
+@pytest.mark.spark
+def test_kg_result_plans_downstream_tables_lazily(spark, monkeypatch):
+    """run_kg_pipeline plans only the mentions (and the chunks it must
+    pin); canonicalize and the modular chunk plan run on first access of
+    a table that needs them, and the tables equal the explicit chain."""
+    from graphrag_mrkr_2_spark.operators import triples
+    from graphrag_mrkr_2_spark.plans import pipeline
+    from graphrag_mrkr_2_spark.sources.pages import generate_pages
+
+    def boom(*_args, **_kwargs):
+        raise AssertionError("planned eagerly")
+
+    pages = generate_pages(spark, 12)
+    with monkeypatch.context() as mp:
+        for mod, name in [(triples, "canonicalize"), (pipeline, "canonicalize"),
+                          (pipeline, "chunk_pages"), (pipeline, "filter_chunks")]:
+            mp.setattr(mod, name, boom)
+        res = pipeline.run_kg_pipeline(pages, num_partitions=3, materialize_chunks=True)
+        assert res.chunks.count() > 0
+        assert res.mentions.where("kind = 'entity'").count() > 0
+        with pytest.raises(AssertionError, match="planned eagerly"):
+            res.nodes
+
+    e_doc, r_doc = triples.canonicalize(res.mentions)
+    edges = triples.build_edges(r_doc)
+    assert _row_set(res.nodes) == _row_set(triples.build_nodes(e_doc))
+    assert _row_set(res.edges) == _row_set(edges)
+    expected = _row_set(triples.build_triples(edges))
+    assert _row_set(res.triples) == expected and expected
+
+    modular = pipeline.run_kg_pipeline(pages, num_partitions=3, fused=False)
+    assert modular.chunks.count() == res.chunks.count()
+    assert _row_set(modular.triples) == expected
+    modular.mentions.unpersist()

@@ -230,3 +230,58 @@ def test_evaluate_robots_broadcasts_small_robots_side(spark):
     plan = _plan(evaluate_robots(urls, robots))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan
+
+
+def _has_shuffle_exchange(df) -> bool:
+    """Walk the physical plan's node classes (not its text) for a
+    ShuffleExchangeExec."""
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+@pytest.mark.spark
+def test_repartition_skip_gate_markers(spark, tmp_path):
+    """run_kg_pipeline skips its url-hash exchange only for a plain
+    splittable columnar scan with >= defaultParallelism partitions; the
+    gate reads markers from the physical-plan text, so pin them against
+    this Spark version: a filtered scan and an in-memory relation must
+    keep the exchange."""
+    import re
+
+    from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
+    from graphrag_mrkr_2_spark.sources.pages import (
+        PAGES_SCHEMA,
+        generate_pages,
+        make_page,
+    )
+
+    width = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "pages")
+    generate_pages(spark, 64, partitions=16).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() >= width
+
+    def gate_plan(pages) -> str:
+        return pages.select("url", "html", "text")._jdf.queryExecution().sparkPlan().toString()
+
+    def exchanged(pages) -> bool:
+        res = run_kg_pipeline(pages, num_partitions=width, cache_mentions=False)
+        return _has_shuffle_exchange(res.mentions)
+
+    plain = gate_plan(scan)
+    assert "FileScan parquet" in plain and not re.search(r"\bFilter\b", plain)
+    assert not exchanged(scan)
+
+    filtered = scan.where(F.col("url") != "")
+    assert re.search(r"\bFilter\b", gate_plan(filtered))
+    assert exchanged(filtered)
+
+    local = spark.createDataFrame([make_page(i) for i in range(8)], PAGES_SCHEMA)
+    assert "FileScan" not in gate_plan(local)
+    assert exchanged(local)
