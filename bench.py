@@ -172,8 +172,8 @@ def main() -> None:
     extras["triples_per_sec"] = round(n_triples / dt, 2)
 
     # --- chunk materialization + similarity edges ---------------------------
-    # chunks are materialized ONCE (as plans/checkpoint.py does between
-    # stages in a real deployment) so the similarity timing measures
+    # chunks are materialized ONCE (as run_kg_pipeline(snapshot_root=...)
+    # does between stages in a real deployment) so the similarity timing measures
     # embedding + gram-matrix work, not a second HTML parse of every page
     # (VERDICT r1 #6). The parse cost is reported as its own line.
     from graphrag_mrkr_2_spark.operators.similarity import (

@@ -19,7 +19,7 @@ network), so this module provides the same contract on plain parquet:
 
 On a cluster with the Iceberg runtime, ``SnapshotCatalog`` is replaced by
 ``df.writeTo(table).overwritePartitions()`` plus snapshot summary properties
-— the call sites (plans/checkpoint.py) are the seam.
+— the call sites (plans/pipeline.py) are the seam.
 """
 
 from __future__ import annotations
@@ -195,7 +195,6 @@ class SnapshotCatalog:
         name: str,
         df_fn,
         input_fingerprint: str,
-        metrics_fn=None,
         partition_by: str | None = None,
     ) -> DataFrame:
         """Compute-or-reuse: if the current snapshot was produced from the
@@ -205,12 +204,9 @@ class SnapshotCatalog:
         cur = self.current_snapshot(name)
         if cur is not None and cur.get("input_fingerprint") == input_fingerprint:
             return self.read(name)
-        df = df_fn()
-        metrics = metrics_fn(df) if metrics_fn else None
         self.write(
             name,
-            df,
-            metrics=metrics,
+            df_fn(),
             input_fingerprint=input_fingerprint,
             partition_by=partition_by,
         )

@@ -20,8 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.extract import chunk_pages, filter_chunks  # noqa: F401 (re-export for callers)
-from ..operators.triples import extract_mentions
 from ..sources.pages import PAGES_SCHEMA
 
 

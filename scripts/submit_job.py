@@ -10,17 +10,30 @@ executors) and takes only data paths + knobs:
         --master <cluster-master> \
         --py-files /tmp/graphrag_mrkr_2_spark.zip \
         scripts/submit_job.py \
-        --pages  <pages parquet/warc dir> \
-        --out    <output catalog dir> \
-        [--format parquet|warc|jsonl|binary] [--demo-pages N]
+        --pages  <pages parquet/warc dir> | --demo-pages N \
+        --out    <snapshot catalog dir> \
+        [--format parquet|warc|jsonl|csv|binary] [--partitions 64] \
+        [--strategy html_heading] [--fingerprint <input lineage id>]
 
-On a real cluster nothing changes except ``--master`` and the paths; in
-this sandbox ``scripts/submit_smoke.sh`` runs it end-to-end under
-``local[4]`` with the zip shipped exactly as above (the driver process
-imports the package from the zip, not from the working tree).
+--pages is read with ``--format`` (non-parquet inputs go through
+sources/loaders.py); --demo-pages N generates N deterministic synthetic
+crawl pages (sources/pages.py) instead.
 
-Writes nodes/edges/triples parquet under --out and prints one JSON line of
-counts + timings to stdout for the calling orchestrator.
+The build is run_kg_pipeline with ``snapshot_root=--out``: every stage
+(extracted, entities_doc, rels_doc, nodes, edges, triples) is committed as a
+catalog snapshot (sources/catalog.py), so a re-run over the same input
+resumes from the committed stages instead of recomputing them. The input is
+identified by --fingerprint, by default ``demo-N`` or ``<format>:<path>``;
+pass a new one when the data at a path changes.
+
+``scripts/run_spark_submit.sh`` packages the zip and submits this script;
+``scripts/submit_smoke.sh`` runs it end-to-end under ``local[4]`` from a
+scratch cwd, so the driver imports the package from the zip, not from the
+working tree.
+
+Prints one JSON line to stdout for the calling orchestrator: the node, edge
+and triple counts (the committed snapshots' manifest row counts) and the
+wall time.
 """
 
 from __future__ import annotations
@@ -30,19 +43,27 @@ import json
 import sys
 import time
 
+TABLES = ("nodes", "edges", "triples")
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--pages", required=False, help="input pages (parquet dir)")
-    ap.add_argument(
+    src = ap.add_mutually_exclusive_group(required=True)
+    src.add_argument("--pages", help="input pages path, read with --format")
+    src.add_argument(
         "--demo-pages",
         type=int,
-        default=0,
         help="demo mode: N deterministic synthetic crawl pages (sources/pages.py)",
     )
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--format", default="parquet", choices=["parquet", "warc", "jsonl", "binary"])
-    ap.add_argument("--max-pages", type=int, default=0)
+    ap.add_argument("--out", required=True, help="snapshot catalog root")
+    ap.add_argument(
+        "--format", default="parquet", choices=["parquet", "warc", "jsonl", "csv", "binary"]
+    )
+    ap.add_argument(
+        "--partitions", type=int, default=None, help="url-hash repartition width"
+    )
+    ap.add_argument("--strategy", default="html_heading")
+    ap.add_argument("--fingerprint", default=None, help="input lineage fingerprint")
     args = ap.parse_args()
 
     # imports AFTER argparse so --help works without the zip on sys.path
@@ -56,35 +77,36 @@ def main() -> int:
 
     t0 = time.time()
     if args.pages:
-        if args.format == "warc":
-            pages = loaders.read_warc_pages(spark, args.pages)
-        elif args.format == "jsonl":
-            pages = loaders.read_jsonl_pages(spark, args.pages)
-        elif args.format == "binary":
-            pages = loaders.read_binary_documents(spark, args.pages)
-        else:
-            pages = spark.read.parquet(args.pages)
+        reader = {
+            "parquet": lambda s, p: s.read.parquet(p),
+            "warc": loaders.read_warc_pages,
+            "jsonl": loaders.read_jsonl_pages,
+            "csv": loaders.read_csv_pages,
+            # structure_hybrid re-parses the raw payload (run_kg_pipeline)
+            "binary": lambda s, p: loaders.read_binary_documents(
+                s, p, keep_binary=args.strategy == "structure_hybrid"
+            ),
+        }[args.format]
+        pages = reader(spark, args.pages)
+        fingerprint = args.fingerprint or f"{args.format}:{args.pages}"
     else:
-        assert args.demo_pages, "need --pages or --demo-pages N"
         from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
         pages = generate_pages(spark, args.demo_pages)
-    if args.max_pages:
-        pages = pages.limit(args.max_pages)
+        fingerprint = args.fingerprint or f"demo-{args.demo_pages}"
 
-    result = run_kg_pipeline(pages)
-    nodes, edges, triples = result.nodes, result.edges, result.triples
-    nodes.write.mode("overwrite").parquet(f"{args.out}/nodes")
-    edges.write.mode("overwrite").parquet(f"{args.out}/edges")
-    triples.write.mode("overwrite").parquet(f"{args.out}/triples")
-
-    summary = {
-        "n_nodes": spark.read.parquet(f"{args.out}/nodes").count(),
-        "n_edges": spark.read.parquet(f"{args.out}/edges").count(),
-        "n_triples": spark.read.parquet(f"{args.out}/triples").count(),
-        "wall_sec": round(time.time() - t0, 2),
-        "package_source": __import__("graphrag_mrkr_2_spark").__file__,
-    }
+    result = run_kg_pipeline(
+        pages,
+        num_partitions=args.partitions,
+        strategy=args.strategy,
+        snapshot_root=args.out,
+        input_fingerprint=fingerprint,
+    )
+    for table in TABLES:
+        getattr(result, table)  # commits the table (or resumes its snapshot)
+    summary = {f"n_{t}": result.catalog.current_snapshot(t)["row_count"] for t in TABLES}
+    summary["wall_sec"] = round(time.time() - t0, 2)
+    summary["package_source"] = __import__("graphrag_mrkr_2_spark").__file__
     print(json.dumps(summary))
     spark.stop()
     return 0

@@ -51,27 +51,71 @@ def test_materialize_skips_on_same_fingerprint(spark, tmp_path):
     assert cat.current_snapshot("t")["snapshot_id"] == 1
 
 
+KG_STAGES = ("extracted", "entities_doc", "rels_doc", "nodes", "edges", "triples")
+
+
+def _triple_set(df) -> set:
+    return {(r["subj"], r["pred"], r["obj"]) for r in df.collect()}
+
+
 @pytest.mark.spark
 def test_checkpointed_pipeline_resume(spark, tmp_path):
     """Kill-and-resume semantics: a second run over the same input reuses
-    every committed stage (no new snapshots)."""
-    from graphrag_mrkr_2_spark.plans.checkpoint import run_checkpointed
+    every committed stage (no new snapshots), and a config change commits
+    new downstream snapshots, not only a new extraction."""
+    from graphrag_mrkr_2_spark.config import ExtractionConfig, PipelineConfig
+    from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
-    pages = generate_pages(spark, 6)
     root = str(tmp_path / "cat")
-    r1 = run_checkpointed(spark, pages, root, input_fingerprint="pages-v1")
-    t1 = {(r["subj"], r["pred"], r["obj"]) for r in r1["triples"].collect()}
     cat = SnapshotCatalog(spark, root)
-    snaps_before = {t: cat.current_snapshot(t)["snapshot_id"] for t in ("chunks", "mentions", "triples")}
 
-    r2 = run_checkpointed(spark, generate_pages(spark, 6), root, input_fingerprint="pages-v1")
-    t2 = {(r["subj"], r["pred"], r["obj"]) for r in r2["triples"].collect()}
-    snaps_after = {t: cat.current_snapshot(t)["snapshot_id"] for t in ("chunks", "mentions", "triples")}
+    def build(cfg=PipelineConfig()):
+        res = run_kg_pipeline(
+            generate_pages(spark, 6),
+            cfg=cfg,
+            snapshot_root=root,
+            input_fingerprint="pages-v1",
+        )
+        res.nodes
+        return _triple_set(res.triples)
 
-    assert t1 == t2
-    assert snaps_before == snaps_after  # nothing recomputed
-    assert cat.current_snapshot("triples")["metrics"]["triple_count"] == len(t1)
+    def snapshot_ids():
+        return {t: cat.current_snapshot(t)["snapshot_id"] for t in KG_STAGES}
+
+    t1 = build()
+    snaps_before = snapshot_ids()
+    t2 = build()
+    assert t1 == t2 and t1
+    assert snapshot_ids() == snaps_before  # nothing recomputed
+    assert cat.current_snapshot("triples")["row_count"] == len(t1)
+
+    # strength_threshold only gates canonicalize, yet it must not resume the
+    # old nodes/triples
+    build(PipelineConfig(extraction=ExtractionConfig(strength_threshold=0.9)))
+    snaps_cfg = snapshot_ids()
+    for table in ("extracted", "nodes", "triples"):
+        assert snaps_cfg[table] != snaps_before[table], table
+
+
+@pytest.mark.spark
+def test_snapshot_root_pins_extraction_without_materialize_chunks(spark, tmp_path):
+    """snapshot_root alone pins the unified pass as the ``extracted``
+    snapshot, so it needs an input_fingerprint; it is not ignored when
+    materialize_chunks is off."""
+    from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
+    from graphrag_mrkr_2_spark.sources.pages import generate_pages
+
+    root = str(tmp_path / "cat")
+    with pytest.raises(ValueError, match="input_fingerprint"):
+        run_kg_pipeline(generate_pages(spark, 6), snapshot_root=root)
+
+    res = run_kg_pipeline(
+        generate_pages(spark, 6), snapshot_root=root, input_fingerprint="pages-v1"
+    )
+    cat = SnapshotCatalog(spark, root)
+    assert cat.exists("extracted")
+    assert res.chunks.count() == cat.read("extracted").where("kind = 'chunk'").count()
 
 
 @pytest.mark.spark
@@ -80,17 +124,18 @@ def test_fused_kill_and_resume(spark, tmp_path, monkeypatch):
     killed right after the extraction snapshot commits must resume to
     IDENTICAL triples without re-parsing a single page (reference recovery
     semantics: document_processor.py:141-280 stage fields)."""
-    import graphrag_mrkr_2_spark.plans.checkpoint as cp
-    from graphrag_mrkr_2_spark.plans.checkpoint import run_checkpointed_fused
-    from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
+    import graphrag_mrkr_2_spark.operators.triples as triples_mod
+    import graphrag_mrkr_2_spark.plans.pipeline as pipeline
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
-    pages = generate_pages(spark, 6)
     root = str(tmp_path / "cat")
 
-    # count actual extraction-plan builds through the snapshot seam
-    import graphrag_mrkr_2_spark.operators.triples as triples_mod
+    def build():
+        return pipeline.run_kg_pipeline(
+            generate_pages(spark, 6), snapshot_root=root, input_fingerprint="pages-v1"
+        )
 
+    # count actual extraction-plan builds through the snapshot seam
     parses = []
     real_fused = triples_mod.extract_mentions_fused
 
@@ -108,9 +153,9 @@ def test_fused_kill_and_resume(spark, tmp_path, monkeypatch):
     def exploding_canonicalize(*a, **k):
         raise Boom("killed mid-pipeline")
 
-    monkeypatch.setattr(cp, "canonicalize", exploding_canonicalize)
+    monkeypatch.setattr(pipeline, "canonicalize", exploding_canonicalize)
     with pytest.raises(Boom):
-        run_checkpointed_fused(spark, pages, root, input_fingerprint="pages-v1")
+        build().triples
     cat = SnapshotCatalog(spark, root)
     assert cat.exists("extracted") and not cat.exists("triples")
     ext_snap = cat.current_snapshot("extracted")["snapshot_id"]
@@ -118,20 +163,18 @@ def test_fused_kill_and_resume(spark, tmp_path, monkeypatch):
 
     # run 2: resume — extraction snapshot reused (same id, NO new parse),
     # pipeline completes
-    monkeypatch.setattr(cp, "canonicalize", triples_mod.canonicalize)
-    r = run_checkpointed_fused(
-        spark, generate_pages(spark, 6), root, input_fingerprint="pages-v1"
-    )
-    resumed = {(x["subj"], x["pred"], x["obj"]) for x in r["triples"].collect()}
+    monkeypatch.setattr(pipeline, "canonicalize", triples_mod.canonicalize)
+    r = build()
+    resumed = _triple_set(r.triples)
     assert parses == [1]  # zero re-parsing on resume
     assert cat.current_snapshot("extracted")["snapshot_id"] == ext_snap
 
     # triples identical to an uninterrupted in-memory fused run
-    direct = run_kg_pipeline(generate_pages(spark, 6), materialize_chunks=True)
-    expected = {(x["subj"], x["pred"], x["obj"]) for x in direct.triples.collect()}
+    direct = pipeline.run_kg_pipeline(generate_pages(spark, 6), materialize_chunks=True)
+    expected = _triple_set(direct.triples)
     assert resumed == expected and resumed
     # the resumed chunk table also reads straight from the snapshot
-    assert r["chunks"].count() == direct.chunks.count()
+    assert r.chunks.count() == direct.chunks.count()
 
 
 def test_pipeline_materialize_chunks_via_snapshot(spark, tmp_path, monkeypatch):

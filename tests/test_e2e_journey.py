@@ -65,7 +65,7 @@ def test_full_journey(spark, tmp_path):
     assert exact_duplicates(texted, text_col="text", id_col="doc_id").count() >= 1
 
     # -- KG construction with URL curation (the utm dup must vanish)
-    res = run_kg_pipeline(pages, curate_urls=True, cache_mentions=False)
+    res = run_kg_pipeline(pages, curate_urls=True)
     n_docs = res.mentions.select("document_id").distinct().count()
     assert n_docs == 5  # 5 distinct crawl pages; dup curated away; docx page
     # has no extractable mock-tuple content but decoded fine above

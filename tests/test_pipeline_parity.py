@@ -150,7 +150,7 @@ def _row_set(df):
 
 
 @pytest.mark.spark
-def test_kg_result_plans_downstream_tables_lazily(spark, monkeypatch):
+def test_kg_result_plans_downstream_tables_lazily(spark, monkeypatch, modular_kg):
     """run_kg_pipeline plans only the mentions (and the chunks it must
     pin); canonicalize and the modular chunk plan run on first access of
     a table that needs them, and the tables equal the explicit chain."""
@@ -179,7 +179,6 @@ def test_kg_result_plans_downstream_tables_lazily(spark, monkeypatch):
     expected = _row_set(triples.build_triples(edges))
     assert _row_set(res.triples) == expected and expected
 
-    modular = pipeline.run_kg_pipeline(pages, num_partitions=3, fused=False)
-    assert modular.chunks.count() == res.chunks.count()
-    assert _row_set(modular.triples) == expected
-    modular.mentions.unpersist()
+    modular_chunks, modular_triples = modular_kg(pages)
+    assert modular_chunks.count() == res.chunks.count()
+    assert _row_set(modular_triples) == expected

@@ -234,12 +234,19 @@ def test_evaluate_robots_broadcasts_small_robots_side(spark):
 
 def _has_shuffle_exchange(df) -> bool:
     """Walk the physical plan's node classes (not its text) for a
-    ShuffleExchangeExec."""
+    ShuffleExchangeExec, descending into the plan behind a cached
+    relation (run_kg_pipeline caches its unpinned mentions) and into the
+    input plan of an adaptive (AQE) node."""
     stack = [df._jdf.queryExecution().sparkPlan()]
     while stack:
         node = stack.pop()
-        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+        name = node.getClass().getSimpleName()
+        if name == "ShuffleExchangeExec":
             return True
+        if name == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        elif name == "AdaptiveSparkPlanExec":
+            stack.append(node.inputPlan())
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
     return False
@@ -271,7 +278,7 @@ def test_repartition_skip_gate_markers(spark, tmp_path):
         return pages.select("url", "html", "text")._jdf.queryExecution().sparkPlan().toString()
 
     def exchanged(pages) -> bool:
-        res = run_kg_pipeline(pages, num_partitions=width, cache_mentions=False)
+        res = run_kg_pipeline(pages, num_partitions=width)
         return _has_shuffle_exchange(res.mentions)
 
     plain = gate_plan(scan)

@@ -315,29 +315,30 @@ class TestPipelineStructureHybrid:
 
         return PipelineConfig(content_filter=ContentFilterConfig(min_chunk_length=5))
 
-    def test_fused_matches_modular_and_keeps_structure(self, spark, binary_doc_dir):
+    def test_fused_matches_modular_and_keeps_structure(
+        self, spark, binary_doc_dir, modular_kg
+    ):
         from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
         from graphrag_mrkr_2_spark.sources.loaders import read_binary_documents
 
         pages = read_binary_documents(spark, binary_doc_dir, keep_binary=True)
         fused = run_kg_pipeline(pages, cfg=self._cfg(), strategy="structure_hybrid")
-        modular = run_kg_pipeline(
-            pages, cfg=self._cfg(), strategy="structure_hybrid", fused=False
+        m_chunks, m_triples = modular_kg(
+            pages, cfg=self._cfg(), strategy="structure_hybrid"
         )
 
         t_f = {(r["subj"], r["pred"], r["obj"]) for r in fused.triples.collect()}
-        t_m = {(r["subj"], r["pred"], r["obj"]) for r in modular.triples.collect()}
+        t_m = {(r["subj"], r["pred"], r["obj"]) for r in m_triples.collect()}
         assert t_f == t_m
 
         # the structure strategy really ran: heading-aware chunk ids match
         # the modular chunk_pages output, heading_path populated for docx
         cols = ["chunk_id", "chunk_index", "content_hash", "heading_path", "page"]
         c_f = {tuple(r[c] for c in cols) for r in fused.chunks.select(*cols).collect()}
-        c_m = {tuple(r[c] for c in cols) for r in modular.chunks.select(*cols).collect()}
+        c_m = {tuple(r[c] for c in cols) for r in m_chunks.select(*cols).collect()}
         assert c_f == c_m and c_f
         assert any(r[3] for r in c_f), "no heading_path — structure never ran"
         fused.mentions.unpersist()
-        modular.mentions.unpersist()
 
     def test_materialized_unified_pass_carries_structure_metadata(
         self, spark, binary_doc_dir

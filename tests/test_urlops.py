@@ -167,8 +167,8 @@ class TestPipelineCuration:
             "url", F.concat("url", F.lit("?utm_source=feed#top"))
         )
         pages = base.unionByName(dup)
-        res = run_kg_pipeline(pages, curate_urls=True, cache_mentions=False)
-        res_base = run_kg_pipeline(base, cache_mentions=False)
+        res = run_kg_pipeline(pages, curate_urls=True)
+        res_base = run_kg_pipeline(base)
         t_curated = {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()}
         t_base = {(r["subj"], r["pred"], r["obj"]) for r in res_base.triples.collect()}
         assert t_curated == t_base  # duplicates contributed nothing extra
@@ -181,7 +181,7 @@ class TestPipelineCuration:
         pages = generate_pages(spark, 12)
         n_domains = with_normalized_urls(pages).select("domain").distinct().count()
         res = run_kg_pipeline(
-            pages, curate_urls=True, max_pages_per_domain=1, cache_mentions=False
+            pages, curate_urls=True, max_pages_per_domain=1
         )
         kept_chunk_docs = res.mentions.select("document_id").distinct().count()
         assert kept_chunk_docs <= n_domains
@@ -216,7 +216,7 @@ class TestReviewRegressions:
         dup = base.withColumn("url", F.concat("url", F.lit("?utm_source=x")))
         pages = base.unionByName(dup)
         res = run_kg_pipeline(
-            pages, max_pages_per_domain=1000, cache_mentions=False
+            pages, max_pages_per_domain=1000
         )
         n_docs = res.mentions.select("document_id").distinct().count()
         # utm-variant urls hash to DIFFERENT document ids -> both kept
