@@ -1611,15 +1611,14 @@ def q_web_decompress(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTTP Content-Encoding layer (r7) with an EXACT oracle: per doc, a
     deterministic formula text is compressed into a REAL HTTP response —
     rotating by doc_id over gzip, deflate (zlib-wrapped), br (a real
-    libbrotlienc stream decoded by the pure RFC 7932 decoder in
-    functions/brotlidec.py), br (uncompressed-metablock stream), zstd
-    (a real libzstd stream decoded by the pure RFC 8878 decoder in
-    functions/zstddec.py) and chunked transfer framing + gzip — wrapped
-    in a WARC response record and pushed through the REAL loader path
+    libbrotlienc stream), br (uncompressed-metablock stream), zstd (a real
+    libzstd stream) and chunked transfer framing + gzip — wrapped in a WARC
+    response record and pushed through the REAL loader path
     (sources/loaders.parse_warc_bytes → functions/httppayload.
-    decode_http_payload). DuckDB reconstructs the text from the formula,
-    so a match proves header parsing, de-chunking and every decoder in
-    the chain end-to-end. The reference has no HTTP/compression layer at
+    decode_http_payload, which decodes br and zstd with the system
+    libbrotlidec/libzstd inside the Python workers). DuckDB reconstructs
+    the text from the formula, so a match proves header parsing,
+    de-chunking and every decoder in the chain end-to-end. The reference has no HTTP/compression layer at
     all (ingestion/loaders/ starts from decoded text)."""
 
     def _make(batches):
@@ -1628,11 +1627,9 @@ def q_web_decompress(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         import pandas as pd
 
-        from graphrag_mrkr_2_spark.functions.brotlidec import (
+        from graphrag_mrkr_2_spark.functions.httppayload import (
             encode_brotli_native,
             encode_brotli_uncompressed,
-        )
-        from graphrag_mrkr_2_spark.functions.httppayload import (
             encode_zstd_native as _zstd,
         )
         from graphrag_mrkr_2_spark.sources.loaders import parse_warc_bytes
@@ -3203,8 +3200,8 @@ def oracle_sql() -> dict[str, str]:
         # HTTP Content-Encoding layer: DuckDB rebuilds the page text from
         # the formula; Spark recovers it through real WARC records whose
         # HTTP bodies are gzip/deflate/br/zstd-compressed (and chunked),
-        # decoded by the pure RFC 7932 brotli decoder + stdlib zlib +
-        # the libzstd seam via the actual loader path
+        # decoded by stdlib zlib + libbrotlidec + libzstd via the actual
+        # loader path
         "web_decompress": """
             SELECT CAST(doc_id AS VARCHAR) AS doc_id,
                    CASE doc_id % 6 WHEN 0 THEN 'gzip' WHEN 1 THEN 'deflate'

@@ -882,19 +882,17 @@ def main() -> None:
     # --- HTTP Content-Encoding layer (r7) ------------------------------------
     # extras: WARC records whose HTTP bodies are REALLY compressed
     # (gzip/deflate/br/zstd + chunked, rotating) pushed through the full
-    # loader path — parse_warc_bytes → decode_http_payload.  The br quarter
-    # rides the pure RFC 7932 decoder (the deliberately slow always-available
-    # path); the pure-vs-native brotli rate is disclosed separately below.
+    # loader path — parse_warc_bytes → decode_http_payload (br and zstd
+    # through the system libbrotlidec/libzstd); the brotli decode rate is
+    # disclosed separately below.
     def _encode_warc_bodies(batches):
         import gzip as gzip_mod
         import zlib
 
         import pandas as pd
 
-        from graphrag_mrkr_2_spark.functions.brotlidec import (
-            encode_brotli_native,
-        )
         from graphrag_mrkr_2_spark.functions.httppayload import (
+            encode_brotli_native,
             encode_zstd_native as _zstd,
         )
 
@@ -953,11 +951,10 @@ def main() -> None:
     )
     web_payloads.unpersist()
 
-    # pure-vs-native brotli decode rate on one representative page blob
+    # libbrotlidec decode rate on one representative page blob
     # (driver-side micro-measure, same disclosure style as SCALE.md codec
-    # rates; the operator path above already exercises both in-pipeline)
-    from graphrag_mrkr_2_spark.functions.brotlidec import (
-        decode_brotli as _br_pure,
+    # rates)
+    from graphrag_mrkr_2_spark.functions.httppayload import (
         decode_brotli_native as _br_native,
         encode_brotli_native as _br_enc,
     )
@@ -968,11 +965,6 @@ def main() -> None:
         f"token{i} value{i * 7 % 97} mixed page content {i % 13}"
         for i in range(8000)) + "</body></html>").encode()
     _blob_br = _br_enc(_blob_plain, 9)
-    t0 = time.time()
-    for _ in range(3):
-        _br_pure(_blob_br)
-    extras["brotli_pure_mbps"] = round(
-        3 * len(_blob_plain) / (time.time() - t0) / 1e6, 2)
     t0 = time.time()
     for _ in range(200):
         _br_native(_blob_br)

@@ -9,12 +9,15 @@ RFC 8878's registered token). The reference (danve93/graphrag-mrkr-2) has
 no HTTP layer at all — its loaders start from decoded text — so this module
 is what makes the WARC loader produce the bytes a browser would have seen.
 
-Decoders: gzip/deflate ride stdlib zlib (bounded, multi-member gzip,
-raw-deflate fallback for the classic server bug); br rides the pure
-RFC 7932 decoder in functions/brotlidec.py (system libbrotlidec injectable,
-bit-identical — see tests/test_brotlidec.py); zstd rides the pure RFC 8878
-decoder in functions/zstddec.py (system libzstd injectable via
-decode_zstd_native, A/B'd in tests/test_zstddec.py).
+One decoder per Content-Encoding token: gzip/deflate ride stdlib zlib
+(bounded, multi-member gzip, raw-deflate fallback for the classic server
+bug); br rides the system libbrotlidec and zstd the system libzstd, both
+through ctypes and loaded once per process by soname (libbrotlidec.so.1,
+libzstd.so.1). Every executor that parses WARC records therefore needs
+both libraries; a missing one raises OSError and fails the task instead
+of quarantining every br/zstd record. encode_brotli_native (libbrotlienc),
+encode_brotli_uncompressed and encode_zstd_native build fixtures and bench
+inputs.
 
 Every decode is bounded by ``max_output`` (decompression-bomb guard: a
 format-valid gzip or brotli stream expands ~1e3..1e6:1, and a crawl WILL
@@ -23,12 +26,9 @@ contain hostile payloads).
 
 from __future__ import annotations
 
+import ctypes
+import functools
 import zlib
-
-from graphrag_mrkr_2_spark.functions.brotlidec import (
-    decode_brotli,
-    decode_brotli_native,
-)
 
 _DEFAULT_MAX_OUTPUT = 64 << 20  # 64 MiB decompressed per payload
 
@@ -150,68 +150,190 @@ def decode_deflate(data: bytes,
         return _bounded_inflate(data, -15, max_output)
 
 
-_ZSTD_LIB = "/lib/x86_64-linux-gnu/libzstd.so.1"
+# ZSTD_inBuffer and ZSTD_outBuffer share this layout
+class _ZstdBuffer(ctypes.Structure):
+    _fields_ = [("ptr", ctypes.c_void_p),
+                ("size", ctypes.c_size_t),
+                ("pos", ctypes.c_size_t)]
 
 
-class _ZstdBuf:
-    """Lazy one-time libzstd load + prototype setup per process."""
+_SIZE_P = ctypes.POINTER(ctypes.c_size_t)
+_BYTES_PP = ctypes.POINTER(ctypes.POINTER(ctypes.c_ubyte))
+# library sonames and ctypes prototypes, loaded once per process by _native
+_SONAMES = {
+    "brotlidec": "libbrotlidec.so.1",
+    "brotlienc": "libbrotlienc.so.1",
+    "zstd": "libzstd.so.1",
+}
+_PROTOTYPES = {
+    "brotlidec": {
+        "BrotliDecoderCreateInstance": (ctypes.c_void_p,
+                                        [ctypes.c_void_p] * 3),
+        "BrotliDecoderDecompressStream": (
+            ctypes.c_int,
+            [ctypes.c_void_p, _SIZE_P, _BYTES_PP, _SIZE_P, _BYTES_PP,
+             _SIZE_P]),
+        "BrotliDecoderDestroyInstance": (None, [ctypes.c_void_p]),
+    },
+    "brotlienc": {
+        "BrotliEncoderCompress": (
+            ctypes.c_int,
+            [ctypes.c_int, ctypes.c_int, ctypes.c_int, ctypes.c_size_t,
+             ctypes.c_char_p, _SIZE_P, ctypes.c_char_p]),
+    },
+    "zstd": {
+        "ZSTD_createDStream": (ctypes.c_void_p, []),
+        "ZSTD_decompressStream": (
+            ctypes.c_size_t,
+            [ctypes.c_void_p, ctypes.POINTER(_ZstdBuffer),
+             ctypes.POINTER(_ZstdBuffer)]),
+        "ZSTD_freeDStream": (ctypes.c_size_t, [ctypes.c_void_p]),
+        "ZSTD_isError": (ctypes.c_uint, [ctypes.c_size_t]),
+        "ZSTD_getErrorName": (ctypes.c_char_p, [ctypes.c_size_t]),
+        "ZSTD_compressBound": (ctypes.c_size_t, [ctypes.c_size_t]),
+        "ZSTD_compress": (
+            ctypes.c_size_t,
+            [ctypes.c_char_p, ctypes.c_size_t, ctypes.c_char_p,
+             ctypes.c_size_t, ctypes.c_int]),
+    },
+}
 
-    lib = None
-    Buf = None
 
-    @classmethod
-    def load(cls):
-        if cls.lib is None:
-            import ctypes
+@functools.cache
+def _native(name: str) -> ctypes.CDLL:
+    """Load a system library by soname and set its prototypes, once per
+    process (the WARC path decodes one payload per record). A missing
+    library raises OSError: the br/zstd tokens have no other decoder, so
+    it must fail the task rather than quarantine every such record."""
+    lib = ctypes.CDLL(_SONAMES[name])
+    for fn, (restype, argtypes) in _PROTOTYPES[name].items():
+        proto = getattr(lib, fn)
+        proto.restype, proto.argtypes = restype, argtypes
+    return lib
 
-            lib = ctypes.CDLL(_ZSTD_LIB)
 
-            class _Buf(ctypes.Structure):
-                _fields_ = [("dst", ctypes.c_void_p),
-                            ("size", ctypes.c_size_t),
-                            ("pos", ctypes.c_size_t)]
+def decode_brotli_native(data: bytes,
+                         max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
+    """br (RFC 7932) via the system libbrotlidec streaming API."""
+    lib = _native("brotlidec")
+    st = lib.BrotliDecoderCreateInstance(None, None, None)
+    if not st:
+        raise ValueError("libbrotlidec: instance creation failed")
+    try:
+        inbuf = (ctypes.c_ubyte * max(1, len(data))).from_buffer_copy(
+            data or b"\x00")
+        next_in = ctypes.cast(inbuf, ctypes.POINTER(ctypes.c_ubyte))
+        avail_in = ctypes.c_size_t(len(data))
+        chunks = []
+        total = 0
+        while True:
+            outbuf = (ctypes.c_ubyte * 65536)()
+            next_out = ctypes.cast(outbuf, ctypes.POINTER(ctypes.c_ubyte))
+            avail_out = ctypes.c_size_t(len(outbuf))
+            res = lib.BrotliDecoderDecompressStream(
+                st, ctypes.byref(avail_in), ctypes.byref(next_in),
+                ctypes.byref(avail_out), ctypes.byref(next_out), None)
+            produced = len(outbuf) - avail_out.value
+            if produced:
+                chunks.append(bytes(outbuf[:produced]))
+                total += produced
+                if total > max_output:
+                    raise ValueError("brotli: output exceeds max_output")
+            if res == 1:  # SUCCESS
+                if avail_in.value:
+                    raise ValueError(
+                        "brotli: trailing garbage after final metablock")
+                return b"".join(chunks)
+            if res == 3:  # NEEDS_MORE_OUTPUT
+                continue
+            if res == 2:  # NEEDS_MORE_INPUT -> truncated stream
+                raise ValueError("brotli: bitstream truncated")
+            raise ValueError("brotli: malformed stream")
+    finally:
+        lib.BrotliDecoderDestroyInstance(st)
 
-            lib.ZSTD_createDStream.restype = ctypes.c_void_p
-            lib.ZSTD_decompressStream.restype = ctypes.c_size_t
-            lib.ZSTD_decompressStream.argtypes = [ctypes.c_void_p,
-                                                  ctypes.POINTER(_Buf),
-                                                  ctypes.POINTER(_Buf)]
-            lib.ZSTD_isError.restype = ctypes.c_uint
-            lib.ZSTD_isError.argtypes = [ctypes.c_size_t]
-            lib.ZSTD_freeDStream.argtypes = [ctypes.c_void_p]
-            cls.lib, cls.Buf = lib, _Buf
-        return cls.lib, cls.Buf
+
+def encode_brotli_native(data: bytes, quality: int = 5, lgwin: int = 22,
+                         mode: int = 0) -> bytes:
+    """Compress via the system libbrotlienc (fixtures and bench inputs)."""
+    lib = _native("brotlienc")
+    n = ctypes.c_size_t(len(data) + (len(data) >> 1) + 1024)
+    buf = ctypes.create_string_buffer(n.value)
+    if not lib.BrotliEncoderCompress(quality, lgwin, mode, len(data),
+                                     data, ctypes.byref(n), buf):
+        raise ValueError("libbrotlienc: compression failed")
+    return buf.raw[:n.value]
+
+
+def encode_brotli_uncompressed(data: bytes) -> bytes:
+    """A valid RFC 7932 stream that stores ``data`` uncompressed: WBITS=16,
+    a chain of ISUNCOMPRESSED metablocks (<= 65536 bytes each, MNIBBLES=4),
+    then an empty ISLAST metablock. Needs no library, so fixtures can be
+    built anywhere."""
+    bits = []  # (value, nbits), LSB-first
+
+    def put(v: int, n: int) -> None:
+        bits.append((v, n))
+
+    out = bytearray()
+    acc = 0
+    nacc = 0
+
+    def flush_byte_boundary() -> None:
+        nonlocal acc, nacc
+        for v, n in bits:
+            acc |= v << nacc
+            nacc += n
+        bits.clear()
+        while nacc >= 8:
+            out.append(acc & 0xFF)
+            acc >>= 8
+            nacc -= 8
+
+    put(0, 1)  # WBITS = 16
+    view = memoryview(data)
+    for i in range(0, len(data), 65536):
+        chunk = view[i:i + 65536]
+        put(0, 1)                      # ISLAST = 0
+        put(0, 2)                      # MNIBBLES code 0 -> 4 nibbles
+        put(len(chunk) - 1, 16)        # MLEN - 1
+        put(1, 1)                      # ISUNCOMPRESSED
+        flush_byte_boundary()
+        if nacc:                       # align with zero padding
+            out.append(acc & 0xFF)
+            acc = 0
+            nacc = 0
+        out += chunk
+    put(1, 1)  # ISLAST
+    put(1, 1)  # ISLASTEMPTY
+    flush_byte_boundary()
+    if nacc:
+        out.append(acc & 0xFF)
+    return bytes(out)
 
 
 def decode_zstd_native(data: bytes,
                        max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
-    """zstd (RFC 8878) via the system libzstd streaming API — since r8 the
-    DEFAULT hot path via the prefer-native seam (see set_content_decoders);
-    the pure decoder in functions/zstddec.py stays the always-available
-    fallback (A/B'd bit-identical in tests/test_zstddec.py)."""
-    import ctypes
-
-    try:
-        lib, _Buf = _ZstdBuf.load()
-    except OSError as e:
-        raise ValueError(f"libzstd unavailable: {e}") from e
-
+    """zstd (RFC 8878) via the system libzstd streaming API."""
+    lib = _native("zstd")
     ds = lib.ZSTD_createDStream()
     if not ds:
         raise ValueError("libzstd: stream creation failed")
     try:
         src = ctypes.create_string_buffer(data, len(data))
-        inb = _Buf(ctypes.cast(src, ctypes.c_void_p), len(data), 0)
+        inb = _ZstdBuffer(ctypes.cast(src, ctypes.c_void_p), len(data), 0)
         chunks = []
         total = 0
         while True:
             in_before = inb.pos
             dst = ctypes.create_string_buffer(1 << 17)
-            outb = _Buf(ctypes.cast(dst, ctypes.c_void_p), len(dst), 0)
+            outb = _ZstdBuffer(ctypes.cast(dst, ctypes.c_void_p), len(dst),
+                               0)
             ret = lib.ZSTD_decompressStream(ds, ctypes.byref(outb),
                                             ctypes.byref(inb))
             if lib.ZSTD_isError(ret):
-                raise ValueError("zstd: malformed stream")
+                raise ValueError(
+                    f"zstd: {lib.ZSTD_getErrorName(ret).decode()}")
             if outb.pos:
                 chunks.append(dst.raw[:outb.pos])
                 total += outb.pos
@@ -224,27 +346,12 @@ def decode_zstd_native(data: bytes,
             if outb.pos == 0 and inb.pos == in_before:
                 raise ValueError("zstd: decoder made no progress")
     finally:
-        lib.ZSTD_freeDStream(ctypes.c_void_p(ds))
+        lib.ZSTD_freeDStream(ds)
 
 
 def encode_zstd_native(data: bytes, level: int = 3) -> bytes:
-    """One-shot zstd compress via libzstd — the fixture/bench twin of
-    decode_zstd_native (shared here so the three fixture sites don't each
-    hand-roll the binding; review r7 finding)."""
-    import ctypes
-
-    try:
-        lib = ctypes.CDLL(_ZSTD_LIB)
-    except OSError as e:
-        raise ValueError(f"libzstd unavailable: {e}") from e
-    lib.ZSTD_compressBound.restype = ctypes.c_size_t
-    lib.ZSTD_compressBound.argtypes = [ctypes.c_size_t]
-    lib.ZSTD_compress.restype = ctypes.c_size_t
-    lib.ZSTD_compress.argtypes = [ctypes.c_char_p, ctypes.c_size_t,
-                                  ctypes.c_char_p, ctypes.c_size_t,
-                                  ctypes.c_int]
-    lib.ZSTD_isError.restype = ctypes.c_uint
-    lib.ZSTD_isError.argtypes = [ctypes.c_size_t]
+    """One-shot zstd compress via libzstd (fixtures and bench inputs)."""
+    lib = _native("zstd")
     bound = lib.ZSTD_compressBound(len(data))
     dst = ctypes.create_string_buffer(bound)
     n = lib.ZSTD_compress(dst, bound, data, len(data), level)
@@ -253,103 +360,13 @@ def encode_zstd_native(data: bytes, level: int = 3) -> bytes:
     return dst.raw[:n]
 
 
-def _decode_zstd(body: bytes, max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
-    from graphrag_mrkr_2_spark.functions.zstddec import decode_zstd
-
-    return decode_zstd(body, max_output)
-
-
-def _decode_brotli_pure(body: bytes, max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
-    return decode_brotli(body, max_output)
-
-
-def _prefer_native(native_fn, pure_fn, load_fn):
-    """Prefer-native-with-pure-fallback decoder (VERDICT r7 #1).
-
-    The native bindings are bit-identical to the pure RFC decoders
-    (tests/test_brotlidec.py, test_zstddec.py) and ~10-14x faster
-    (BENCH_DIAG brotli_pure_mbps ~4.6 vs native ~58), so the hot path
-    defaults to them; the pure decoders remain the always-available
-    fallback wherever the system libraries are absent. Availability is
-    decided by actually running ``load_fn`` (the ctypes load + prototype
-    setup) once per process — ANY loader failure, including a resolvable
-    soname with a missing symbol (AttributeError), routes to the pure
-    decoder (review r8: an error-message-substring taxonomy was too
-    fragile). The state dict is per-worker, so each executor process
-    settles its own answer on first use. Once native is selected, a
-    MALFORMED-stream error from it propagates exactly like the pure
-    decoder's, preserving the caller's per-payload quarantine semantics."""
-    state: dict[str, bool | None] = {"native": None}
-
-    def dec(body: bytes, max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
-        if state["native"] is None:
-            try:
-                load_fn()
-                state["native"] = True
-            except Exception:
-                state["native"] = False
-        if state["native"]:
-            return native_fn(body, max_output)
-        return pure_fn(body, max_output)
-
-    return dec
-
-
-def _load_brotli():
-    from graphrag_mrkr_2_spark.functions.brotlidec import _load_brotli_dec
-
-    _load_brotli_dec()
-
-
-_DECODER_MODES = {
-    "br": {
-        "auto": _prefer_native(decode_brotli_native, _decode_brotli_pure,
-                               _load_brotli),
-        "native": decode_brotli_native,
-        "pure": _decode_brotli_pure,
-    },
-    "zstd": {
-        "auto": _prefer_native(decode_zstd_native, _decode_zstd,
-                               _ZstdBuf.load),
-        "native": decode_zstd_native,
-        "pure": _decode_zstd,
-    },
-}
-
 _DECODERS = {
     "gzip": decode_gzip,
     "x-gzip": decode_gzip,
     "deflate": decode_deflate,
-    "br": _DECODER_MODES["br"]["auto"],
-    "zstd": _DECODER_MODES["zstd"]["auto"],
+    "br": decode_brotli_native,
+    "zstd": decode_zstd_native,
 }
-
-
-def set_content_decoders(br=None, zstd=None) -> None:
-    """Public seam for the br/zstd Content-Encoding decoders (mirrors the
-    ``NativeImageDecoder`` posture; VERDICT r7 'Next round' #1).
-
-    Each argument is ``"auto"`` (DEFAULT: system libbrotlidec/libzstd,
-    bit-identical and ~10-14x faster, with the pure RFC 7932/8878 decoders
-    as automatic fallback where the libraries are absent), ``"native"``
-    (fail rather than fall back), ``"pure"`` (the always-available
-    from-scratch decoders — the correctness anchor and A/B baseline), or a
-    callable ``(body, max_output) -> bytes``. ``None`` leaves a decoder
-    unchanged. Per-process: the default needs no configuration anywhere;
-    an explicit override applies to the process that calls it (driver, or
-    a worker via an importable module's init)."""
-    for token, choice in (("br", br), ("zstd", zstd)):
-        if choice is None:
-            continue
-        if callable(choice):
-            _DECODERS[token] = choice
-        elif choice in _DECODER_MODES[token]:
-            _DECODERS[token] = _DECODER_MODES[token][choice]
-        else:
-            raise ValueError(
-                f"unknown decoder choice {choice!r} for {token!r} "
-                "(use 'auto', 'native', 'pure', or a callable)"
-            )
 
 
 def decode_content_encoding(body: bytes, encoding: str | None,

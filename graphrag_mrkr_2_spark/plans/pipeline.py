@@ -102,6 +102,21 @@ class KgResult:
         return self._table("triples", lambda: build_triples(self.edges))
 
 
+def _is_columnar_file_scan(df: DataFrame) -> bool:
+    """True when ``df``'s physical plan is only ProjectExec nodes over one
+    parquet or orc FileSourceScanExec. Walks node classes, never plan
+    text: a path, column or table name can print any marker. A Filter
+    fails the check too — a selective filter over a url-clustered table
+    voids the bytes-balance the repartition skip relies on."""
+    node = df._jdf.queryExecution().sparkPlan()
+    while node.getClass().getSimpleName() == "ProjectExec":
+        node = node.child()
+    if node.getClass().getSimpleName() != "FileSourceScanExec":
+        return False
+    fmt = node.relation().fileFormat().getClass().getSimpleName()
+    return fmt in ("ParquetFileFormat", "OrcFileFormat")
+
+
 def run_kg_pipeline(
     pages: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
@@ -194,40 +209,19 @@ def run_kg_pipeline(
         # vs 3.7-6.0 s through the 192-partition exchange, identical output).
         # The skip gate therefore requires BOTH (review r8): a plain
         # splittable columnar scan — anything else (binaryFile WARC loads,
-        # in-memory relations, already-shuffled lineage such as the
-        # curate_urls path above) keeps the rebalance, because partition
-        # COUNT alone cannot prove per-partition balance — and at least
-        # core-width parallelism. The probes are plan-only (no jobs: the
-        # physical-plan string and the scan RDD's partition count of a
-        # projection over a file scan); mention/chunk outputs are identical
-        # either way (ids are content/url-derived, aggregations keyed).
+        # in-memory relations, filters, Python stages, already-shuffled
+        # lineage such as the curate_urls path above) keeps the rebalance,
+        # because partition COUNT alone cannot prove per-partition balance —
+        # and at least core-width parallelism. The probes are plan-only (no
+        # jobs: the physical plan's node classes and the scan RDD's
+        # partition count); mention/chunk outputs are identical either way
+        # (ids are content/url-derived, aggregations keyed).
         sc = pages.sparkSession.sparkContext
         skip = False
         if not (curate_urls or max_pages_per_domain):
-            try:
-                plan = pages._jdf.queryExecution().sparkPlan().toString()
-                # Filter nodes reject the skip too (review r8): a selective
-                # filter over a url-clustered table voids the bytes-balance
-                # assumption even on a splittable scan — surviving rows can
-                # concentrate in a few scan partitions. Word-boundary match:
-                # every scan prints "PushedFilters:/DataFilters:" which must
-                # NOT trip this.
-                import re as _re
-
-                splittable = (
-                    ("FileScan parquet" in plan or "FileScan orc" in plan)
-                    and not any(
-                        marker in plan
-                        for marker in ("binaryFile", "ExistingRDD", "Exchange",
-                                       "MapInPandas", "EvalPython")
-                    )
-                    and not _re.search(r"\bFilter\b", plan)
-                )
-                if splittable:
-                    n_input = pages.rdd.getNumPartitions()
-                    skip = n_input >= min(num_partitions, sc.defaultParallelism)
-            except Exception:
-                skip = False
+            if _is_columnar_file_scan(pages):
+                n_input = pages.rdd.getNumPartitions()
+                skip = n_input >= min(num_partitions, sc.defaultParallelism)
         if not skip:
             pages = repartition_by_url(pages, num_partitions)
 

@@ -1,12 +1,14 @@
-"""Brotli decoder (functions/brotlidec.py) — RFC 7932 conformance.
+"""Brotli Content-Encoding (functions/httppayload.py, system libbrotlidec)
+— RFC 7932 conformance.
 
-The oracle is the system brotli itself: fixtures are compressed by
-libbrotlienc (an encoder this repo does not reimplement), the pure decoder
-must reproduce libbrotlidec's output byte-for-byte, agree with it on every
-truncation point and on accept/reject for bit corruptions, and the constant
-tables in _brotlitables.py must equal a fresh extraction from
-libbrotlicommon. The reference (danve93/graphrag-mrkr-2) has no compression
-layer at all — this backs the webtext Content-Encoding path.
+The oracle is the plaintext: fixtures are compressed by libbrotlienc at
+every quality, window and mode (or by this repo's uncompressed-metablock
+encoder, or assembled by hand) and must decode back to exactly the input.
+Truncations, trailing garbage, format violations and the max_output bomb
+guard must raise ValueError — the error the WARC loader quarantines on —
+and corrupt or random input must never raise anything else. The reference
+(danve93/graphrag-mrkr-2) has no compression layer at all — this backs the
+webtext Content-Encoding path.
 """
 
 from __future__ import annotations
@@ -16,18 +18,12 @@ import random
 
 import pytest
 
-from graphrag_mrkr_2_spark.functions import _brotlitables as T
-from graphrag_mrkr_2_spark.functions.brotlidec import (
-    _dict_word,
-    decode_brotli,
+from graphrag_mrkr_2_spark.functions.httppayload import (
     decode_brotli_native,
+    decode_content_encoding,
     encode_brotli_native,
     encode_brotli_uncompressed,
 )
-
-_LIB = "/lib/x86_64-linux-gnu/libbrotlienc.so.1"
-needs_lib = pytest.mark.skipif(not os.path.exists(_LIB),
-                               reason="system brotli not present")
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -48,22 +44,7 @@ def _corpora() -> list[bytes]:
     ]
 
 
-@needs_lib
 class TestAgainstSystemBrotli:
-    def test_tables_match_fresh_extraction(self):
-        import sys
-        sys.path.insert(0, os.path.join(_REPO, "scripts"))
-        from extract_brotli_tables import extract
-
-        fresh = extract()
-        assert fresh["dictionary"] == T.DICTIONARY
-        assert fresh["size_bits_by_length"] == T.SIZE_BITS_BY_LENGTH
-        assert fresh["offsets_by_length"] == T.OFFSETS_BY_LENGTH
-        assert fresh["transforms"] == [tuple(t) for t in T.TRANSFORMS]
-        assert fresh["context_lut"] == T.CONTEXT_LUT
-        assert fresh["block_len_ranges"] == [tuple(r)
-                                             for r in T.BLOCK_LEN_RANGES]
-
     def test_roundtrip_all_qualities_windows_modes(self):
         # qualities pick distinct encoder paths (q0/q1 fast two-pass, q2-9
         # hash chains, q10/q11 zopflification + static dictionary); small
@@ -73,35 +54,12 @@ class TestAgainstSystemBrotli:
                 for w in (10, 18, 24):
                     for mode in (0, 1):
                         c = encode_brotli_native(t, q, w, mode)
-                        assert decode_brotli_native(c) == t
-                        assert decode_brotli(c) == t, (len(t), q, w, mode)
-
-    def test_dictionary_transforms_all_121(self):
-        """_dict_word vs BrotliTransformDictionaryWord for every transform
-        over several word lengths/indices."""
-        import ctypes
-
-        c = ctypes.CDLL("/lib/x86_64-linux-gnu/libbrotlicommon.so.1")
-        c.BrotliGetTransforms.restype = ctypes.c_void_p
-        trs = c.BrotliGetTransforms()
-        c.BrotliTransformDictionaryWord.restype = ctypes.c_int
-        c.BrotliTransformDictionaryWord.argtypes = [
-            ctypes.c_char_p, ctypes.c_char_p, ctypes.c_int,
-            ctypes.c_void_p, ctypes.c_int]
-        for length in (4, 5, 8, 13, 19, 24):
-            bits = T.SIZE_BITS_BY_LENGTH[length]
-            for idx in (0, 1, (1 << bits) - 1):
-                off = T.OFFSETS_BY_LENGTH[length] + idx * length
-                word = T.DICTIONARY[off:off + length]
-                for t in range(len(T.TRANSFORMS)):
-                    dst = ctypes.create_string_buffer(length + 32)
-                    n = c.BrotliTransformDictionaryWord(
-                        dst, word, length, trs, t)
-                    assert _dict_word(length, (t << bits) | idx) == \
-                        dst.raw[:n], (length, idx, t)
+                        assert decode_brotli_native(c) == t, (len(t), q, w,
+                                                              mode)
 
     def test_truncation_agreement(self):
-        """Every proper prefix must be rejected by BOTH decoders."""
+        """Every proper prefix must be rejected, by the decoder and by the
+        Content-Encoding chain alike."""
         rng = random.Random(1)
         stream = encode_brotli_native(
             open(os.path.join(_REPO, "SURVEY.md"), "rb").read()[:20000],
@@ -110,32 +68,39 @@ class TestAgainstSystemBrotli:
         cuts += [len(stream) - 1]
         for cut in cuts:
             with pytest.raises(ValueError):
-                decode_brotli(stream[:cut])
-            with pytest.raises(ValueError):
                 decode_brotli_native(stream[:cut])
+            with pytest.raises(ValueError):
+                decode_content_encoding(stream[:cut], "br")
 
     def test_bit_corruption_agreement(self):
-        """Single-bit flips: pure and native must agree on accept/reject,
-        and produce identical bytes when both accept."""
+        """Single-bit flips: the decoder returns bytes or raises
+        ValueError, never anything else, and the WARC loader agrees with
+        it — decoded bytes when it accepts, the raw body (quarantine) when
+        it rejects."""
+        from graphrag_mrkr_2_spark.sources.loaders import parse_warc_bytes
+
         rng = random.Random(2)
         stream = encode_brotli_native(
             open(os.path.join(_REPO, "SURVEY.md"), "rb").read()[:20000],
             9, 22)
+        rejected = 0
         for _ in range(150):
             b = bytearray(stream)
             i = rng.randrange(len(b))
             b[i] ^= 1 << rng.randrange(8)
+            body = bytes(b)
             try:
-                pv = decode_brotli(bytes(b), max_output=10_000_000)
+                expect = decode_brotli_native(body)
             except ValueError:
-                pv = None
-            try:
-                nv = decode_brotli_native(bytes(b), max_output=10_000_000)
-            except ValueError:
-                nv = None
-            assert (pv is None) == (nv is None), i
-            if pv is not None:
-                assert pv == nv, i
+                expect = body
+                rejected += 1
+            payload = (b"HTTP/1.1 200 OK\r\nContent-Encoding: br\r\n\r\n"
+                       + body)
+            record = (b"WARC/1.0\r\nWARC-Type: response\r\n"
+                      b"Content-Length: %d\r\n\r\n" % len(payload)
+                      + payload + b"\r\n\r\n")
+            assert parse_warc_bytes(record)[0]["html"] == expect, i
+        assert rejected  # corruption is detected, not silently accepted
 
     def test_native_accepts_our_uncompressed_encoder(self):
         for t in _corpora():
@@ -143,30 +108,34 @@ class TestAgainstSystemBrotli:
 
 
 class TestPureDecoder:
-    """Cases that need no system library."""
+    """Streams from the uncompressed-metablock encoder or assembled by
+    hand: no encoder library involved."""
 
     def test_uncompressed_roundtrip(self):
         for t in _corpora():
-            assert decode_brotli(encode_brotli_uncompressed(t)) == t
+            assert decode_brotli_native(encode_brotli_uncompressed(t)) == t
 
     def test_uncompressed_multi_metablock(self):
         data = bytes(range(256)) * 1024  # 256 KiB -> four metablocks
-        assert decode_brotli(encode_brotli_uncompressed(data)) == data
+        assert decode_brotli_native(encode_brotli_uncompressed(data)) == data
 
     def test_empty_input_rejected(self):
         with pytest.raises(ValueError):
-            decode_brotli(b"")
+            decode_brotli_native(b"")
 
     def test_trailing_garbage_rejected(self):
         s = encode_brotli_uncompressed(b"hi")
         with pytest.raises(ValueError):
-            decode_brotli(s + b"\x00")
+            decode_brotli_native(s + b"\x00")
 
     def test_max_output_guard(self):
         s = encode_brotli_uncompressed(b"x" * 100_000)
-        assert len(decode_brotli(s, max_output=100_000)) == 100_000
+        assert len(decode_brotli_native(s, max_output=100_000)) == 100_000
         with pytest.raises(ValueError):
-            decode_brotli(s, max_output=99_999)
+            decode_brotli_native(s, max_output=99_999)
+        bomb = encode_brotli_native(b"\x00" * (4 << 20), 5)  # ~1e4:1
+        with pytest.raises(ValueError, match="max_output"):
+            decode_brotli_native(bomb, max_output=1 << 20)
 
     def test_metadata_block_skipped(self):
         # hand-assembled: WBITS=16, one metadata block (2 skip bytes), then
@@ -213,7 +182,7 @@ class TestPureDecoder:
             out.append(acc & 0xFF)
         out += payload
         out.append(0x03)  # ISLAST, ISLASTEMPTY
-        assert decode_brotli(bytes(out)) == payload
+        assert decode_brotli_native(bytes(out)) == payload
 
     def test_nonzero_padding_rejected(self):
         s = bytearray(encode_brotli_uncompressed(b"hi"))
@@ -221,12 +190,7 @@ class TestPureDecoder:
         # is padding that must be zero
         s[-1] |= 0x80
         with pytest.raises(ValueError):
-            decode_brotli(bytes(s))
-
-    def test_metadata_cannot_be_last(self):
-        # ISLAST=1 followed by ISLASTEMPTY=0 + MNIBBLES=3 is a format error
-        with pytest.raises(ValueError):
-            decode_brotli(bytes([0b0_11_0_1_0 | 0]))  # crafted low bits
+            decode_brotli_native(bytes(s))
 
     def test_fuzz_never_crashes(self):
         """Random garbage must raise ValueError, never anything else."""
@@ -235,6 +199,6 @@ class TestPureDecoder:
             blob = bytes(rng.randrange(256)
                          for _ in range(rng.randrange(1, 200)))
             try:
-                decode_brotli(blob, max_output=1 << 20)
+                decode_brotli_native(blob, max_output=1 << 20)
             except ValueError:
                 pass

@@ -1,38 +1,33 @@
 """HTTP payload layer (functions/httppayload.py): header parsing, chunked
 transfer decoding, the Content-Encoding chain, and the WARC loader wiring.
 
-Fixture encodings come from stdlib zlib/gzip and — where a system library
-exists — libbrotlienc/libzstd, so every decode is checked against an
-independent encoder. The reference has no HTTP layer (its loaders start
-from decoded text), cited at ingestion/loaders/.
+Fixture encodings come from stdlib zlib/gzip and libbrotlienc/libzstd, so
+every decode is checked against an independent encoder. The reference has
+no HTTP layer (its loaders start from decoded text), cited at
+ingestion/loaders/.
 """
 
 from __future__ import annotations
 
 import gzip as gzip_mod
-import os
 import zlib
 
 import pytest
 
-from graphrag_mrkr_2_spark.functions.brotlidec import (
-    encode_brotli_native,
-    encode_brotli_uncompressed,
-)
+from graphrag_mrkr_2_spark.functions import httppayload as hp
 from graphrag_mrkr_2_spark.functions.httppayload import (
     decode_content_encoding,
     decode_gzip,
     decode_http_payload,
     decode_zstd_native,
     dechunk,
+    encode_brotli_native,
+    encode_brotli_uncompressed,
     encode_zstd_native as _zstd_compress,
     parse_http_response,
 )
 
 BODY = ("The quick brown fox. " * 200).encode()
-
-_HAS_ZSTD = os.path.exists("/lib/x86_64-linux-gnu/libzstd.so.1")
-_HAS_BR = os.path.exists("/lib/x86_64-linux-gnu/libbrotlienc.so.1")
 
 
 def _chunked(body: bytes, sizes=(7, 64, 1)) -> bytes:
@@ -114,12 +109,10 @@ class TestContentEncoding:
         blob = encode_brotli_uncompressed(BODY)
         assert decode_content_encoding(blob, "br") == BODY
 
-    @pytest.mark.skipif(not _HAS_BR, reason="libbrotlienc absent")
     def test_br_real_stream(self):
         assert decode_content_encoding(
             encode_brotli_native(BODY, 9), "br") == BODY
 
-    @pytest.mark.skipif(not _HAS_ZSTD, reason="libzstd absent")
     def test_zstd(self):
         assert decode_content_encoding(_zstd_compress(BODY), "zstd") == BODY
         with pytest.raises(ValueError):
@@ -189,59 +182,70 @@ class TestWarcIntegration:
             self._record(junk, b"Content-Encoding: gzip\r\n"))
         assert pages[0]["html"] == junk  # raw bytes kept, record not dropped
 
+    @pytest.mark.parametrize("lib,token,encode", [
+        ("brotlidec", "br", encode_brotli_uncompressed),
+        ("zstd", "zstd", _zstd_compress),
+    ])
+    def test_missing_library_fails_loudly(self, monkeypatch, lib, token,
+                                          encode):
+        """br/zstd have one decoder each: without its library the loader
+        must raise, not quarantine every such record as malformed."""
+        from graphrag_mrkr_2_spark.sources.loaders import parse_warc_bytes
+
+        record = self._record(encode(b"<p>page</p>"),
+                              b"Content-Encoding: %s\r\n" % token.encode())
+        monkeypatch.setitem(hp._SONAMES, lib, "libmissing-%s.so.1" % lib)
+        hp._native.cache_clear()
+        try:
+            with pytest.raises(OSError):
+                parse_warc_bytes(record)
+        finally:
+            hp._native.cache_clear()
+
+
+@pytest.mark.spark
+def test_web_decompress_matches_oracle(spark):
+    """q_web_decompress end to end: gzip, deflate, br, uncompressed br,
+    zstd and chunked+gzip WARC records decoded inside the Python workers
+    must equal the DuckDB oracle's rows, columns and values."""
+    import sys
+
+    import duckdb
+    from test_plan_properties import SF_DIR
+
+    sys.path.insert(0, ".")
+    import __spark_entry__ as em
+
+    df = em.q_web_decompress(spark, SF_DIR)
+    got = [tuple(r) for r in df.collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'")
+    res = con.execute(em.oracle_sql()["web_decompress"])
+    want = res.fetchall()
+    assert df.columns == [d[0] for d in res.description]
+    assert len(got) == len(want)
+    assert sorted(got) == sorted(want)
+    assert {r[1] for r in got} == {"gzip", "deflate", "br", "zstd",
+                                   "chunked+gzip"}
+
 
 class TestPreferNativeSeam:
-    """r8 (VERDICT r7 #1): br/zstd default to the bit-identical native
-    decoders with automatic pure fallback; set_content_decoders is the
-    public override mirroring the NativeImageDecoder posture."""
+    """br and zstd decode with the system libbrotlidec/libzstd, bit-exact
+    to the plaintext; a malformed stream raises ValueError so the loader
+    quarantines that record."""
 
     def _fixtures(self):
-        from graphrag_mrkr_2_spark.functions.brotlidec import encode_brotli_native
-        from graphrag_mrkr_2_spark.functions.httppayload import encode_zstd_native
-
         raw = b"<html>" + b"decoder seam fixture " * 500 + b"</html>"
-        return raw, encode_brotli_native(raw, 5), encode_zstd_native(raw)
+        return raw, encode_brotli_native(raw, 5), _zstd_compress(raw)
 
     def test_default_auto_decodes_bit_identical(self):
         raw, br, zs = self._fixtures()
         assert decode_content_encoding(br, "br") == raw
         assert decode_content_encoding(zs, "zstd") == raw
 
-    def test_pure_and_native_modes_agree(self):
-        from graphrag_mrkr_2_spark.functions import httppayload as hp
-
-        raw, br, zs = self._fixtures()
-        try:
-            hp.set_content_decoders(br="pure", zstd="pure")
-            assert hp.decode_content_encoding(br, "br") == raw
-            assert hp.decode_content_encoding(zs, "zstd") == raw
-            hp.set_content_decoders(br="native", zstd="native")
-            assert hp.decode_content_encoding(br, "br") == raw
-            assert hp.decode_content_encoding(zs, "zstd") == raw
-        finally:
-            hp.set_content_decoders(br="auto", zstd="auto")
-
-    def test_auto_falls_back_when_library_missing(self, monkeypatch):
-        from graphrag_mrkr_2_spark.functions import brotlidec as bd
-        from graphrag_mrkr_2_spark.functions import httppayload as hp
-
-        raw, br, _zs = self._fixtures()
-        monkeypatch.setattr(bd, "_NATIVE_DEC_LIB", None)
-        monkeypatch.setattr(bd, "_BROTLI_LIB", "/nonexistent/libbrotlidec.so")
-        fresh = hp._prefer_native(
-            bd.decode_brotli_native, hp._decode_brotli_pure, bd._load_brotli_dec
-        )
-        assert fresh(br) == raw  # pure fallback, availability memoized
-        assert fresh(br) == raw
-
     def test_malformed_stream_still_raises_for_quarantine(self):
         with pytest.raises(ValueError):
             decode_content_encoding(b"\x00\x01\x02garbage", "br")
         with pytest.raises(ValueError):
             decode_content_encoding(b"\x28\xb5\x2f\xfdgarbage", "zstd")
-
-    def test_unknown_choice_rejected(self):
-        from graphrag_mrkr_2_spark.functions import httppayload as hp
-
-        with pytest.raises(ValueError, match="unknown decoder choice"):
-            hp.set_content_decoders(br="fast")
