@@ -19,6 +19,7 @@ edge list is localCheckpoint()-ed to truncate lineage.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -101,20 +102,19 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _local_components(edges: DataFrame) -> DataFrame:
-    """Driver-side union-find for small edge lists.
+def _local_components_rows(rows, spark) -> DataFrame:
+    """Driver-side union-find over already-collected (u, v) rows.
 
     The alternating-star loop costs ~10-20 Spark jobs of fixed scheduling
-    latency — pure waste on a graph that fits in one collect. Component ids
-    (min node id) are identical to the distributed result by construction.
-    """
-    return _local_components_rows(edges.collect(), edges.sparkSession)
+    latency — pure waste on a graph that fits in one collect. Tolerates
+    directed, duplicated and self-loop-free-or-not input — the result is the
+    same (node, component=min id) mapping the symmetric-distinct loop
+    computes.
 
-
-def _local_components_rows(rows, spark) -> DataFrame:
-    """Union-find over already-collected (u, v) rows. Tolerates directed,
-    duplicated and self-loop-free-or-not input — the result is the same
-    (node, component=min id) mapping the symmetric-distinct loop computes."""
+    The mapping is handed to Spark as a pyarrow Table, so it plans as a
+    LocalRelation (also when empty): downstream joins read it in the JVM. A
+    Python list would go through a PythonRDD and start a Python-worker stage
+    on every read; an empty pandas frame falls back to that same path."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -142,8 +142,14 @@ def _local_components_rows(rows, spark) -> DataFrame:
                 parent[rv] = ru
             else:
                 parent[ru] = rv
-    out = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(out, "node string, component string")
+    nodes = list(parent)
+    table = pa.table(
+        {
+            "node": pa.array(nodes, pa.string()),
+            "component": pa.array([find(n) for n in nodes], pa.string()),
+        }
+    )
+    return spark.createDataFrame(table)
 
 
 def label_propagation(
@@ -267,10 +273,11 @@ def connected_components(
     the loop's per-iteration job latency dwarfs the work for small graphs.
     The size is the count of RAW input rows, as given: directed, possibly
     duplicated, not symmetrized or deduplicated first (so an undirected
-    graph supplied in both directions counts each edge twice).
-    Set 0 to force the distributed path (tests do). At 10^12-document scale
-    the global match graph far exceeds any sane threshold, so the
-    large-star/small-star path is the one that runs.
+    graph supplied in both directions counts each edge twice). The local
+    result is an Arrow-built local relation, so reading it starts no
+    Python-worker stage. Set 0 to force the distributed path (tests do).
+    At 10^12-document scale the global match graph far exceeds any sane
+    threshold, so the large-star/small-star path is the one that runs.
 
     Every distributed iteration materializes via localCheckpoint: the loop's
     convergence check is an action, so without truncation each iteration

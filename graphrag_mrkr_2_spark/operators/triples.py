@@ -644,12 +644,16 @@ def capped_provenance(
     buckets: int = 32,
 ) -> DataFrame:
     """(key_cols..., source_chunks) with the lexicographically-first ``cap``
-    distinct chunk ids per key, computed with BOUNDED aggregation buffers.
+    distinct chunk ids per key, with the per-key buffer split ``buckets``
+    ways.
 
-    Slice-after-collect_list still materializes the full set in one reduce
+    Slice-after-collect_list materializes a key's full set in one reduce
     buffer; this instead distincts exploded (key, chunk) rows, pre-reduces
-    per (key, hash-bucket) with a per-bucket slice (buffer <= cap), then
-    merges the <= buckets*cap survivors per key (buffer <= buckets*cap).
+    per (key, hash-bucket), then merges the <= buckets*cap survivors per key
+    (buffer <= buckets*cap). The per-bucket collect_list still holds every
+    distinct chunk id of its bucket (about N/buckets for a key with N) before
+    the slice; only its OUTPUT is <= cap. So a mega-entity's peak buffer is
+    divided by ``buckets``, not bounded by ``cap``.
     Result is identical to slice(sorted_union, cap) because the global
     lexicographic minimum cap elements survive their buckets."""
     exploded = (
@@ -677,7 +681,8 @@ def build_nodes(
     (e:Entity {name}) — entity_graph.py:445-458); id = md5(lower(name))[:16]
     (entity_graph.py:400-404). Same-name/different-type collapses here, as in
     the reference's persistence layer. Provenance is union-sorted and capped
-    through bounded buffers (capped_provenance)."""
+    (capped_provenance: the output is <= cap, the per-bucket buffers are
+    not)."""
     main = (
         entities_doc.groupBy(F.col("name"))
         .agg(

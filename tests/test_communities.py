@@ -1,5 +1,7 @@
 """F6 clustering fixture: planted two-cluster graph + weight normalization."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -110,6 +112,50 @@ def test_membership_deterministic(planted_edges):
     m1 = {(r["node"], r["community_id"]) for r in detect_communities(pe).collect()}
     m2 = {(r["node"], r["community_id"]) for r in detect_communities(pe).collect()}
     assert m1 == m2
+
+
+@pytest.mark.spark
+def test_no_giant_probe_below_cap(planted_edges, monkeypatch):
+    """21 edges under the default cap: no component can be giant, so the
+    per-component size probe (a DataFrame.isEmpty job) must never run."""
+    def probe(self):
+        raise AssertionError("giant-component probe ran below the cap")
+
+    pe = project_edges(normalize_edge_weights(planted_edges))
+    # the concrete class: pyspark.sql.DataFrame is only its abstract base
+    monkeypatch.setattr(type(pe), "isEmpty", probe)
+    assert detect_communities(pe).count() == 10
+
+
+# A 15-node graph on which the seeded Leiden kernel lands on a different
+# partition when it sees the edges in reverse order.
+ORDER_SENSITIVE = (
+    "0-1 0-3 0-9 0-10 1-6 1-7 1-8 1-11 2-4 2-10 2-12 3-8 3-9 3-10 3-12 3-14 4-5 "
+    "4-7 4-8 4-10 5-7 6-8 6-9 7-8 7-10 7-12 7-14 8-13 9-10 9-11 9-12 9-13 11-12 "
+    "12-14 13-14"
+)
+
+
+@pytest.mark.spark
+def test_membership_independent_of_row_order(spark):
+    """The per-component kernel must see one edge order whatever order the
+    shuffle delivers rows in: the same edges, in one partition in forward,
+    reversed and shuffled order, give identical memberships."""
+    rows = []
+    for pair in ORDER_SENSITIVE.split():
+        a, b = pair.split("-")
+        rows.append((f"n{int(a):02d}", f"n{int(b):02d}", 1.0))
+
+    def membership(rs):
+        df = spark.createDataFrame(rs, "src string, dst string, weight double").coalesce(1)
+        return sorted((r["node"], r["community_id"]) for r in detect_communities(df).collect())
+
+    forward = membership(rows)
+    assert len(forward) == 15
+    shuffled = rows[:]
+    random.Random(7).shuffle(shuffled)
+    assert membership(rows[::-1]) == forward
+    assert membership(shuffled) == forward
 
 
 @pytest.mark.spark

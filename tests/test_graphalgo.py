@@ -67,3 +67,30 @@ def test_mega_hub_no_wide_aggregation_buffer(spark):
     comps = {r["component"] for r in got.collect()}
     assert comps == {"hub", "x1"}
     assert got.count() == n + 1 + 3
+
+
+def _optimized_plan_classes(df) -> set[str]:
+    """Node class names of the optimized logical plan (not its text)."""
+    names, stack = set(), [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        names.add(node.getClass().getSimpleName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+@pytest.mark.spark
+def test_local_result_is_local_relation(spark):
+    """The union-find mapping is built as an Arrow table, so it plans as a
+    LocalRelation and reading it starts no Python-worker stage. A row list
+    would plan as a LogicalRDD over a PythonRDD; an empty pandas frame
+    falls back to the same path, so the empty case is checked too."""
+    small = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")], ["u", "v"])
+    empty = spark.createDataFrame([], "u string, v string")
+    for edges, n_rows in ((small, 5), (empty, 0)):
+        got = connected_components(edges)
+        classes = _optimized_plan_classes(got)
+        assert "LocalRelation" in classes and "LogicalRDD" not in classes, classes
+        assert got.schema.simpleString() == "struct<node:string,component:string>"
+        assert got.count() == n_rows
