@@ -43,17 +43,15 @@ _KG_CACHE: dict[int, object] = {}
 
 def _kg(spark: SparkSession):
     """Memoized per-session KG pipeline result — several queries() entries
-    project different tables of the same run; materialize_chunks=True runs
-    the unified fused pass (mentions + chunk rows from ONE parse,
-    checkpointed), so the chunk-table queries below reuse it instead of
-    re-chunking (parity pinned by test_materialize_chunks_unified_pass)."""
+    project different tables of the same run; the builder pins the unified
+    fused pass (mentions + chunk rows from ONE parse), so the chunk-table
+    queries below reuse it instead of re-chunking (parity pinned by
+    test_unified_pass_matches_modular_build)."""
     key = id(spark)
     if key not in _KG_CACHE:
         from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
 
-        _KG_CACHE[key] = run_kg_pipeline(
-            _pages(spark), num_partitions=8, materialize_chunks=True
-        )
+        _KG_CACHE[key] = run_kg_pipeline(_pages(spark), num_partitions=8)
     return _KG_CACHE[key]
 
 

@@ -106,7 +106,7 @@ def main() -> None:
     # a 1/10-size warm-up leaves the steady state ~3x slower than after a
     # full pass (C2 compilation thresholds + Arrow/Python worker reuse);
     # a multi-hour 100 TB job runs warm, so the warm rate is the honest one.
-    warm = run_kg_pipeline(pages, num_partitions=cpus * 6, materialize_chunks=True)
+    warm = run_kg_pipeline(pages, num_partitions=cpus * 6)
     warm.triples.count()
     spark.catalog.clearCache()
 
@@ -119,12 +119,11 @@ def main() -> None:
     half_pages = n_pages // 2
 
     def _timed_kg(df, n):
-        # materialize_chunks: ONE fused pass emits mentions AND chunk rows
-        # (checkpointed) — the similarity stage below reads the chunk table
-        # without a second HTML parse, and the timing here covers the full
-        # materialization honestly.
+        # ONE fused pass emits mentions AND chunk rows (pinned) — the
+        # similarity stage below reads the chunk table without a second HTML
+        # parse, and the timing here covers the full materialization honestly.
         t0 = time.time()
-        r = run_kg_pipeline(df, num_partitions=cpus * 6, materialize_chunks=True)
+        r = run_kg_pipeline(df, num_partitions=cpus * 6)
         r.triples.count()
         dt = time.time() - t0
         return r, dt
@@ -133,7 +132,6 @@ def main() -> None:
     for _ in range(2):
         res_half, dt = _timed_kg(pages.limit(half_pages), half_pages)
         dt_half = dt if dt_half is None else min(dt_half, dt)
-        res_half.mentions.unpersist()
         spark.catalog.clearCache()
 
     dt = None
@@ -141,7 +139,6 @@ def main() -> None:
     with _load_span("kg_pipeline"):
         for _ in range(2):
             if res is not None:
-                res.mentions.unpersist()
                 spark.catalog.clearCache()
             res, d = _timed_kg(pages, n_pages)
             dt = d if dt is None else min(dt, d)
@@ -403,8 +400,6 @@ def main() -> None:
     skew["shards_zipf_max_over_budget_frac"] = round(
         (max(fills.values()) - shard_budget) / shard_budget, 3
     )
-
-    res.mentions.unpersist()
 
     # --- entity resolution (ER blocking path, VERDICT r2 #3) ----------------
     from graphrag_mrkr_2_spark.operators.resolution import entity_mapping

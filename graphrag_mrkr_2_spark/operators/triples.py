@@ -29,8 +29,10 @@ Documented divergences (none affect (subj, pred, obj) identity — SURVEY §7.4)
 - when one name carries several types, the reference keeps the dict-insertion
   "last" type (entity_extraction.py:1147); we keep the lexicographically
   greatest type deterministically.
-- description keep-longer tie-breaks are first-seen in the reference;
-  max_by(length) here.
+- description keep-longer tie-breaks are first-seen in the reference. The
+  global node merge (build_nodes) breaks equal-length ties by the greatest
+  description, so ``nodes`` does not depend on row order; the per-document
+  consolidation still keeps max_by(length), whose ties follow row order.
 
 Orphan entities (C5, entity_graph.py:292-341): the batch path does not
 union orphan rows into entities_doc, because the X10 endpoint check leaves
@@ -687,7 +689,9 @@ def build_nodes(
         entities_doc.groupBy(F.col("name"))
         .agg(
             F.max("type").alias("type"),
-            F.max_by("description", F.length("description")).alias("description"),
+            F.max_by(
+                "description", F.struct(F.length("description"), F.col("description"))
+            ).alias("description"),
             F.avg("importance_score").alias("importance_score"),
             F.sum("mention_count").alias("mention_count"),
             F.min(F.col("is_orphan").cast("int")).cast("boolean").alias("is_orphan"),

@@ -102,6 +102,18 @@ def with_normalized_urls(
     )
 
 
+def dedup_normalized_urls(df: DataFrame) -> DataFrame:
+    """Crawl dedup (C4-style): one row per ``norm_url`` (tracking params,
+    fragments, default ports... collapse), deterministically the one with
+    the min raw ``url``. Input comes from ``with_normalized_urls``."""
+    w = Window.partitionBy("norm_url").orderBy("url")
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def cap_per_domain(
     df: DataFrame,
     max_per_domain: int,

@@ -4,9 +4,9 @@ The reference ingests per-uploaded-document with a background thread pool
 (SURVEY §3.1) — i.e. micro-batched arrival. The Spark-native equivalent is a
 file-source stream over the pages table directory: every new parquet file of
 crawled pages flows through the SAME chunk→extract→canonicalize operators
-(mapInPandas works identically on streaming DataFrames), and graph-table
-merges happen in ``foreachBatch`` where batch-scoped groupBys + snapshot
-appends implement the MERGE semantics.
+(mapInPandas works identically on streaming DataFrames). Each
+``foreachBatch`` commits its per-document tables as snapshots, and
+compaction merges them with the batch build's global groupBys.
 
 Also provides windowed event-stream aggregation (watermark + tumbling
 window) over an events-shaped stream — the standard late-data-tolerant
@@ -55,11 +55,11 @@ def start_kg_stream(
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ):
     """Continuous KG construction: each micro-batch canonicalizes its own
-    mentions and appends to the snapshot catalog; cross-batch entity merge is
-    the same MERGE-by-name reduction applied at read/compaction time (the
-    aggregations are associative, so batch-local partials compose exactly —
-    entity_graph.py merge semantics are reduction-safe by construction)."""
-    from ..operators.triples import build_edges, build_nodes, canonicalize
+    mentions and appends its per-document ``entities_doc``/``rels_doc`` to
+    the snapshot catalog. canonicalize only groups within a document, so
+    while every document arrives in one micro-batch these are exactly the
+    batch build's rows; ``compact_stream_batches`` runs the global merge."""
+    from ..operators.triples import canonicalize
     from ..sources.catalog import SnapshotCatalog
 
     mentions = streaming_mentions(stream_pages(spark, pages_dir), cfg)
@@ -68,21 +68,17 @@ def start_kg_stream(
     def _process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        entities_doc, rels_doc = canonicalize(
+        tables = canonicalize(
             batch_df,
             importance_threshold=cfg.extraction.importance_score_threshold,
             strength_threshold=cfg.extraction.strength_threshold,
         )
-        cat.write(
-            f"nodes_batches/batch-{batch_id:06d}",
-            build_nodes(entities_doc),
-            input_fingerprint=f"stream-batch-{batch_id}",
-        )
-        cat.write(
-            f"edges_batches/batch-{batch_id:06d}",
-            build_edges(rels_doc),
-            input_fingerprint=f"stream-batch-{batch_id}",
-        )
+        for name, df in zip(("entities_doc", "rels_doc"), tables):
+            cat.write(
+                f"{name}_batches/batch-{batch_id:06d}",
+                df,
+                input_fingerprint=f"stream-batch-{batch_id}",
+            )
 
     return (
         mentions.writeStream.foreachBatch(_process_batch)
@@ -93,61 +89,31 @@ def start_kg_stream(
 
 
 def compact_stream_batches(spark: SparkSession, catalog_root: str) -> dict[str, DataFrame]:
-    """Merge all per-batch node/edge snapshots into global tables — the same
-    global groupBys as the batch pipeline (associative merge)."""
+    """Global nodes/edges/triples over every committed micro-batch: the
+    batch pipeline's build_nodes/build_edges/build_triples over the union
+    of the per-batch ``entities_doc``/``rels_doc``, so the merge is the
+    batch merge (no average of per-batch averages)."""
     import os
 
-    from ..operators.triples import build_triples
+    from ..operators.triples import build_edges, build_nodes, build_triples
     from ..sources.catalog import SnapshotCatalog
 
     cat = SnapshotCatalog(spark, catalog_root)
 
-    def _union(prefix: str) -> DataFrame | None:
+    def _union(prefix: str) -> DataFrame:
         base = os.path.join(catalog_root, prefix)
-        if not os.path.isdir(base):
-            return None
         out = None
         for b in sorted(os.listdir(base)):
             df = cat.read(f"{prefix}/{b}")
             out = df if out is None else out.unionByName(df)
         return out
 
-    nodes_raw = _union("nodes_batches")
-    edges_raw = _union("edges_batches")
-    from ..operators.triples import capped_provenance
-
-    nodes = (
-        nodes_raw.groupBy("name")
-        .agg(
-            F.max("type").alias("type"),
-            F.max_by("description", F.length("description")).alias("description"),
-            F.avg("importance_score").alias("importance_score"),
-            F.sum("mention_count").alias("mention_count"),
-            F.min(F.col("is_orphan").cast("int")).cast("boolean").alias("is_orphan"),
-            F.sum("doc_count").alias("doc_count"),
-        )
-        .withColumn("entity_id", F.substring(F.md5(F.lower(F.col("name"))), 1, 16))
-        .join(capped_provenance(nodes_raw, ["name"]), "name", "left")
-        .withColumn(
-            "source_chunks",
-            F.coalesce(F.col("source_chunks"), F.array().cast("array<string>")),
-        )
-    )
-    edges = (
-        edges_raw.groupBy("subj", "obj", "rel_type")
-        .agg(
-            F.sum("strength").alias("strength"),
-            F.sum("mention_count").alias("mention_count"),
-            F.sum("doc_count").alias("doc_count"),
-        )
-        .withColumn("edge_type", F.lit("RELATED_TO"))
-        .join(capped_provenance(edges_raw, ["subj", "obj", "rel_type"]), ["subj", "obj", "rel_type"], "left")
-        .withColumn(
-            "source_chunks",
-            F.coalesce(F.col("source_chunks"), F.array().cast("array<string>")),
-        )
-    )
-    return {"nodes": nodes, "edges": edges, "triples": build_triples(edges)}
+    edges = build_edges(_union("rels_doc_batches"))
+    return {
+        "nodes": build_nodes(_union("entities_doc_batches")),
+        "edges": edges,
+        "triples": build_triples(edges),
+    }
 
 
 # ---------------------------------------------------------------------------

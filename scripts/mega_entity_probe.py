@@ -64,8 +64,7 @@ def main() -> None:
             "overwrite").parquet(pages_dir)
     pages = spark.read.parquet(pages_dir)
 
-    res = run_kg_pipeline(pages, num_partitions=cpus * 6,
-                          materialize_chunks=True)
+    res = run_kg_pipeline(pages, num_partitions=cpus * 6)
     mentions_base = res.mentions.localCheckpoint(eager=True)
     planted = res.chunks.select(
         F.lit("entity").alias("kind"),

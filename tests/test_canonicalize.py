@@ -313,3 +313,43 @@ def test_description_summarization_gate(spark):
     assert len(out["E LONG HOT"]) < len(long_desc)  # compressed
     assert out["E LONG COLD"] == long_desc          # untouched
     assert out["E SHORT HOT"] == "short"            # untouched
+
+
+@pytest.mark.spark
+def test_build_nodes_independent_of_row_order(spark):
+    """A node's description is the longest one, and among equal-length
+    descriptions the greatest, whatever order the rows arrive in: the same
+    entities_doc rows, in one partition in forward, reversed and shuffled
+    order, give identical nodes. The last documents carry two equal-length
+    descriptions per name, so the plan's sort on (name, document_id)
+    cannot hide an order-dependent tie-break."""
+    import random
+
+    from graphrag_mrkr_2_spark.operators.triples import build_nodes
+
+    schema = (
+        "document_id string, name string, type string, description string, "
+        "importance_score double, source_chunks array<string>, "
+        "mention_count bigint, is_orphan boolean"
+    )
+    descs = [("desc qq", "short"), ("desc mm", "desc aa"), ("desc zz", "desc bb")]
+    rows = [
+        (f"d{i}", name, "CONCEPT", desc, 0.5, [f"d{i}_c0"], 1, False)
+        for i, pair in enumerate(descs)
+        for desc in pair
+        for name in ("ALPHA", "BETA")
+    ]
+
+    def nodes(rs):
+        df = spark.createDataFrame(rs, schema).coalesce(1)
+        return sorted(
+            (r["name"], r["description"], r["doc_count"], tuple(r["source_chunks"]))
+            for r in build_nodes(df).collect()
+        )
+
+    forward = nodes(rows)
+    shuffled = rows[:]
+    random.Random(7).shuffle(shuffled)
+    assert nodes(rows[::-1]) == forward
+    assert nodes(shuffled) == forward
+    assert [d for _, d, _, _ in forward] == ["desc zz", "desc zz"]

@@ -29,6 +29,10 @@ def test_full_journey(spark, tmp_path):
     )
     from graphrag_mrkr_2_spark.operators.dedup import exact_duplicates
     from graphrag_mrkr_2_spark.operators.textclean import redact_pii
+    from graphrag_mrkr_2_spark.operators.urlops import (
+        dedup_normalized_urls,
+        with_normalized_urls,
+    )
     from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
     from graphrag_mrkr_2_spark.sources.catalog import SnapshotCatalog
     from graphrag_mrkr_2_spark.sources.loaders import (
@@ -65,7 +69,7 @@ def test_full_journey(spark, tmp_path):
     assert exact_duplicates(texted, text_col="text", id_col="doc_id").count() >= 1
 
     # -- KG construction with URL curation (the utm dup must vanish)
-    res = run_kg_pipeline(pages, curate_urls=True)
+    res = run_kg_pipeline(dedup_normalized_urls(with_normalized_urls(pages)))
     n_docs = res.mentions.select("document_id").distinct().count()
     assert n_docs == 5  # 5 distinct crawl pages; dup curated away; docx page
     # has no extractable mock-tuple content but decoded fine above

@@ -96,27 +96,48 @@ def test_pipeline_determinism(spark):
     assert t1 == t2  # partitioning must not change results
 
 
+_CHUNK_KEY_COLS = ["chunk_id", "document_id", "chunk_index", "content_hash", "heading_path", "content"]
+
+
+def _chunk_set(df) -> set:
+    return {tuple(r[c] for c in _CHUNK_KEY_COLS) for r in df.select(*_CHUNK_KEY_COLS).collect()}
+
+
+def _triple_set(df) -> set:
+    return {(r["subj"], r["pred"], r["obj"]) for r in df.collect()}
+
+
 @pytest.mark.spark
-def test_materialize_chunks_unified_pass_parity(spark):
-    """materialize_chunks=True (one fused pass emitting mentions AND chunk
-    rows, checkpointed once) must produce the same triples and the same
-    chunk table as the default plan that re-runs chunk_pages."""
+def test_unified_pass_matches_modular_build(spark, modular_kg):
+    """The builder's one fused pass (mentions AND chunk rows, pinned once)
+    produces the same chunk table and triples as the unfused
+    chunk_pages → filter_chunks → extract_mentions chain."""
     from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
     pages = generate_pages(spark, 12)
-    base = run_kg_pipeline(pages, num_partitions=3)
-    uni = run_kg_pipeline(pages, num_partitions=3, materialize_chunks=True)
+    res = run_kg_pipeline(pages, num_partitions=3)
+    m_chunks, m_triples = modular_kg(pages)
 
-    t_base = {(r["subj"], r["pred"], r["obj"]) for r in base.triples.collect()}
-    t_uni = {(r["subj"], r["pred"], r["obj"]) for r in uni.triples.collect()}
-    assert t_uni == t_base and t_uni
+    t_uni = _triple_set(res.triples)
+    assert t_uni == _triple_set(m_triples) and t_uni
+    c_uni = _chunk_set(res.chunks)
+    assert c_uni == _chunk_set(m_chunks) and c_uni
 
-    cols = ["chunk_id", "document_id", "chunk_index", "content_hash", "heading_path", "content"]
-    c_base = {tuple(r[c] for c in cols) for r in base.chunks.select(*cols).collect()}
-    c_uni = {tuple(r[c] for c in cols) for r in uni.chunks.select(*cols).collect()}
-    assert c_uni == c_base and c_uni
-    base.mentions.unpersist()
+
+@pytest.mark.spark
+def test_materialize_chunks_is_ignored(spark):
+    """materialize_chunks is kept only as an accepted keyword: with it set,
+    the builder's chunks and triples are unchanged."""
+    from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
+    from graphrag_mrkr_2_spark.sources.pages import generate_pages
+
+    pages = generate_pages(spark, 8)
+    base = run_kg_pipeline(pages, num_partitions=2)
+    flagged = run_kg_pipeline(pages, num_partitions=2, materialize_chunks=True)
+    assert _triple_set(flagged.triples) == _triple_set(base.triples)
+    assert _row_set(flagged.chunks) == _row_set(base.chunks)
+    assert _row_set(base.chunks)
 
 
 @pytest.mark.spark
@@ -151,9 +172,9 @@ def _row_set(df):
 
 @pytest.mark.spark
 def test_kg_result_plans_downstream_tables_lazily(spark, monkeypatch, modular_kg):
-    """run_kg_pipeline plans only the mentions (and the chunks it must
-    pin); canonicalize and the modular chunk plan run on first access of
-    a table that needs them, and the tables equal the explicit chain."""
+    """run_kg_pipeline runs and pins only the fused pass (mentions and
+    chunks); canonicalize runs on first access of a table that needs it,
+    and the tables equal the explicit chain."""
     from graphrag_mrkr_2_spark.operators import triples
     from graphrag_mrkr_2_spark.plans import pipeline
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
@@ -163,10 +184,9 @@ def test_kg_result_plans_downstream_tables_lazily(spark, monkeypatch, modular_kg
 
     pages = generate_pages(spark, 12)
     with monkeypatch.context() as mp:
-        for mod, name in [(triples, "canonicalize"), (pipeline, "canonicalize"),
-                          (pipeline, "chunk_pages"), (pipeline, "filter_chunks")]:
-            mp.setattr(mod, name, boom)
-        res = pipeline.run_kg_pipeline(pages, num_partitions=3, materialize_chunks=True)
+        for mod in (triples, pipeline):
+            mp.setattr(mod, "canonicalize", boom)
+        res = pipeline.run_kg_pipeline(pages, num_partitions=3)
         assert res.chunks.count() > 0
         assert res.mentions.where("kind = 'entity'").count() > 0
         with pytest.raises(AssertionError, match="planned eagerly"):

@@ -232,34 +232,20 @@ def test_evaluate_robots_broadcasts_small_robots_side(spark):
     assert "SortMergeJoin" not in plan
 
 
-def _has_shuffle_exchange(df) -> bool:
-    """Walk the physical plan's node classes (not its text) for a
-    ShuffleExchangeExec, descending into the plan behind a cached
-    relation (run_kg_pipeline caches its unpinned mentions) and into the
-    input plan of an adaptive (AQE) node."""
-    stack = [df._jdf.queryExecution().sparkPlan()]
-    while stack:
-        node = stack.pop()
-        name = node.getClass().getSimpleName()
-        if name == "ShuffleExchangeExec":
-            return True
-        if name == "InMemoryTableScanExec":
-            stack.append(node.relation().cachedPlan())
-        elif name == "AdaptiveSparkPlanExec":
-            stack.append(node.inputPlan())
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
-    return False
-
-
 @pytest.mark.spark
-def test_repartition_skip_gate_markers(spark, tmp_path_factory):
+def test_repartition_skip_gate_markers(spark, tmp_path_factory, monkeypatch):
     """run_kg_pipeline skips its url-hash exchange only for a plain
     splittable columnar scan with >= defaultParallelism partitions. The
     gate walks plan node classes, so a scan whose path prints a plan
     marker (Filter, Exchange, ExistingRDD) still skips, while a filtered
-    scan and an in-memory relation keep the exchange."""
-    from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
+    scan, a curated scan and an in-memory relation keep the exchange. The
+    mentions are read from the pinned pass, so a recorder around
+    repartition_by_url observes the gate."""
+    from graphrag_mrkr_2_spark.operators.urlops import (
+        dedup_normalized_urls,
+        with_normalized_urls,
+    )
+    from graphrag_mrkr_2_spark.plans import pipeline
     from graphrag_mrkr_2_spark.sources.pages import (
         PAGES_SCHEMA,
         generate_pages,
@@ -269,9 +255,20 @@ def test_repartition_skip_gate_markers(spark, tmp_path_factory):
     width = spark.sparkContext.defaultParallelism
     pages = generate_pages(spark, 64, partitions=16)
 
+    calls = []
+    real_repartition = pipeline.repartition_by_url
+
+    def recording_repartition(df, num_partitions):
+        calls.append(num_partitions)
+        return real_repartition(df, num_partitions)
+
+    monkeypatch.setattr(pipeline, "repartition_by_url", recording_repartition)
+
     def exchanged(pages) -> bool:
-        res = run_kg_pipeline(pages, num_partitions=width)
-        return _has_shuffle_exchange(res.mentions)
+        calls.clear()
+        pipeline.run_kg_pipeline(pages, num_partitions=width)
+        assert calls in ([], [width])
+        return bool(calls)
 
     # a short base dir keeps the whole path inside the plan's printed
     # Location (Spark truncates it at spark.sql.maxMetadataStringLength)
@@ -283,6 +280,7 @@ def test_repartition_skip_gate_markers(spark, tmp_path_factory):
         assert scan.rdd.getNumPartitions() >= width
         assert not exchanged(scan), sub
         assert exchanged(scan.where(F.col("url") != "")), sub
+    assert exchanged(dedup_normalized_urls(with_normalized_urls(scan)))
 
     local = spark.createDataFrame([make_page(i) for i in range(8)], PAGES_SCHEMA)
     assert exchanged(local)

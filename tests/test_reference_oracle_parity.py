@@ -325,7 +325,6 @@ def test_spark_attributes_match_actual_reference(spark):
         )
         for r in res.rels_doc.collect()
     }
-    res.mentions.unpersist()
 
     assert got_nodes.keys() == ref_nodes.keys()
     mismatched = {k: (got_nodes[k], ref_nodes[k]) for k in ref_nodes if got_nodes[k] != ref_nodes[k]}
@@ -378,7 +377,6 @@ def test_spark_pipeline_matches_actual_reference_100_pages(spark):
 
     res = run_kg_pipeline(generate_pages(spark, n), num_partitions=8)
     spark_triples = {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()}
-    res.mentions.unpersist()
 
     # cross-page entity reuse consolidates heavily: 100 pages -> 65 triples
     # (vs 45 at 20 pages) -- still strictly more variety than the base test
@@ -428,7 +426,6 @@ def test_spark_pipeline_matches_actual_reference_1000_pages(spark):
             "document_id", "chunk_id"
         ).collect()
     }
-    res.mentions.unpersist()
 
     expected_chunks = {
         (doc_id, cid) for doc_id, kept in docs for cid, _ in kept
@@ -465,7 +462,6 @@ def test_adversarial_html_parity(spark):
     res = run_kg_pipeline(generate_adversarial_pages(spark, n), num_partitions=8)
     spark_triples = {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()}
     chunk_rows = res.chunks.select("document_id", "chunk_id", "content").collect()
-    res.mentions.unpersist()
 
     spark_chunk_ids = {(r["document_id"], r["chunk_id"]) for r in chunk_rows}
     expected_ids = {(doc_id, cid) for doc_id, kept in docs for cid, _ in kept}

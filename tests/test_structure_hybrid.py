@@ -338,7 +338,6 @@ class TestPipelineStructureHybrid:
         c_m = {tuple(r[c] for c in cols) for r in m_chunks.select(*cols).collect()}
         assert c_f == c_m and c_f
         assert any(r[3] for r in c_f), "no heading_path — structure never ran"
-        fused.mentions.unpersist()
 
     def test_materialized_unified_pass_carries_structure_metadata(
         self, spark, binary_doc_dir
@@ -347,12 +346,7 @@ class TestPipelineStructureHybrid:
         from graphrag_mrkr_2_spark.sources.loaders import read_binary_documents
 
         pages = read_binary_documents(spark, binary_doc_dir, keep_binary=True)
-        uni = run_kg_pipeline(
-            pages,
-            cfg=self._cfg(),
-            strategy="structure_hybrid",
-            materialize_chunks=True,
-        )
+        uni = run_kg_pipeline(pages, cfg=self._cfg(), strategy="structure_hybrid")
         rows = uni.chunks.collect()
         assert {r.heading_path for r in rows if r.url.endswith("report.docx")} == {
             "Overview",
@@ -360,7 +354,6 @@ class TestPipelineStructureHybrid:
         }
         # pdf page numbers come from the structure blocks, not byte offsets
         assert sorted(r.page for r in rows if r.url.endswith("paper.pdf")) == [1, 2]
-        uni.mentions.unpersist()
 
     def test_missing_binary_column_is_a_plan_time_error(self, spark):
         from graphrag_mrkr_2_spark.operators.extract import chunk_pages

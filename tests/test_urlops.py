@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from graphrag_mrkr_2_spark.operators.urlops import (
     cap_per_domain,
+    dedup_normalized_urls,
     with_normalized_urls,
 )
 
@@ -156,8 +157,8 @@ class TestDomainCap:
 
 class TestPipelineCuration:
     def test_url_dedup_and_domain_cap_in_pipeline(self, spark):
-        """curate_urls collapses tracking-param variants of the same page and
-        max_pages_per_domain bounds hot domains — before any heavy stage."""
+        """dedup_normalized_urls in front of the builder collapses
+        tracking-param variants of the same page before any heavy stage."""
         from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
         from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
@@ -167,22 +168,20 @@ class TestPipelineCuration:
             "url", F.concat("url", F.lit("?utm_source=feed#top"))
         )
         pages = base.unionByName(dup)
-        res = run_kg_pipeline(pages, curate_urls=True)
+        res = run_kg_pipeline(dedup_normalized_urls(with_normalized_urls(pages)))
         res_base = run_kg_pipeline(base)
         t_curated = {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()}
         t_base = {(r["subj"], r["pred"], r["obj"]) for r in res_base.triples.collect()}
         assert t_curated == t_base  # duplicates contributed nothing extra
 
     def test_domain_cap_reduces_pages(self, spark):
-        from graphrag_mrkr_2_spark.operators.urlops import with_normalized_urls
+        """cap_per_domain in front of the builder bounds hot domains."""
         from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
         from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
-        pages = generate_pages(spark, 12)
-        n_domains = with_normalized_urls(pages).select("domain").distinct().count()
-        res = run_kg_pipeline(
-            pages, curate_urls=True, max_pages_per_domain=1
-        )
+        curated = with_normalized_urls(generate_pages(spark, 12))
+        n_domains = curated.select("domain").distinct().count()
+        res = run_kg_pipeline(cap_per_domain(dedup_normalized_urls(curated), 1))
         kept_chunk_docs = res.mentions.select("document_id").distinct().count()
         assert kept_chunk_docs <= n_domains
 
@@ -208,16 +207,14 @@ class TestReviewRegressions:
         assert _norm(spark, "HTTPS://Host.example:443/a")[0] == "https://host.example/a"
 
     def test_cap_without_dedup_keeps_duplicate_norm_urls(self, spark):
-        """max_pages_per_domain alone must NOT collapse same-norm_url pages."""
+        """cap_per_domain alone must NOT collapse same-norm_url pages."""
         from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
         from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
         base = generate_pages(spark, 4)
         dup = base.withColumn("url", F.concat("url", F.lit("?utm_source=x")))
         pages = base.unionByName(dup)
-        res = run_kg_pipeline(
-            pages, max_pages_per_domain=1000
-        )
+        res = run_kg_pipeline(cap_per_domain(with_normalized_urls(pages), 1000))
         n_docs = res.mentions.select("document_id").distinct().count()
         # utm-variant urls hash to DIFFERENT document ids -> both kept
         assert n_docs == 8
