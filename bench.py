@@ -7,7 +7,7 @@ Headline workloads:
                    (pages count scales with sf: 100000*sf, min 500) —
                    chunk → extract+glean → canonicalize → nodes/edges/triples
   kg_similarity    embeddings + per-doc SIMILAR_TO edges over the same chunks
-  kg_communities   weight norm + CC + per-component Louvain over KG edges
+  kg_communities   weight norm + CC + per-component Leiden over KG edges
   dedup_minhash    MinHash-LSH near-dup pairs over the documents table
   dedup_exact      exact-hash dedup groups over documents
   ann_knn          exact knn join (5 queries) over the embeddings table

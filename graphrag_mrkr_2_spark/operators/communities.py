@@ -19,8 +19,7 @@ Spark-first re-architecture:
      implementation (functions/leiden.py — local moving + refinement +
      aggregation per Traag et al. 2019, modularity objective, seeded
      deterministic; the same algorithm/objective as the reference's igraph
-     community_leiden call). ``method="louvain"`` keeps the networkx
-     stand-in as a comparison baseline. Giant components exceeding
+     community_leiden call). Giant components exceeding
      ``max_component_size`` route to distributed weighted label propagation
      rather than OOMing an executor.
   G4 membership writeback: a join, not per-row SETs
@@ -103,9 +102,8 @@ def detect_communities(
     seed: int = 42,
     max_component_size: int = 500_000,
     level: int = 0,
-    method: str = "leiden",
 ) -> DataFrame:
-    """G3 — CC then per-component Louvain/Leiden-style modularity clustering.
+    """G3 — CC then per-component Leiden modularity clustering.
 
     Returns (node, community_id, level). Community ids are globally unique
     and deterministic (hash of the community's minimum node id — no
@@ -144,36 +142,24 @@ def detect_communities(
 
     def _cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         # multi-edges within a component: UNDIRECTED key, keep the max
-        # weight — the nx.Graph behavior of the r2 path; without the
-        # canonical key, (a,b,3) + (b,a,1) would double-count in the leiden
-        # builder and last-write-win in networkx
+        # weight; without the canonical key, (a,b,3) + (b,a,1) would
+        # double-count in the leiden builder
         dedup: dict[tuple, float] = {}
         for s, d, w in zip(pdf["src"], pdf["dst"], pdf["weight"]):
             key = (s, d) if s <= d else (d, s)
             dedup[key] = max(dedup.get(key, 0.0), float(w))
-        # sorted: the kernels index nodes by first appearance, so the
+        # sorted: the kernel indexes nodes by first appearance, so the
         # seeded visit order must not depend on shuffle row order
         edge_list = [(s, d, w) for (s, d), w in sorted(dedup.items())]
 
-        if method == "leiden":
-            from graphrag_mrkr_2_spark.functions.leiden import leiden_communities
+        from graphrag_mrkr_2_spark.functions.leiden import leiden_communities
 
-            mem = leiden_communities(edge_list, resolution=resolution, seed=seed)
-            comms: dict[int, list] = {}
-            for node, c in mem.items():
-                comms.setdefault(c, []).append(node)
-            groups = list(comms.values())
-        else:
-            import networkx as nx
-
-            g = nx.Graph()
-            for s, d, w in edge_list:
-                g.add_edge(s, d, weight=w)
-            groups = nx.community.louvain_communities(
-                g, weight="weight", resolution=resolution, seed=seed
-            )
+        mem = leiden_communities(edge_list, resolution=resolution, seed=seed)
+        groups: dict[int, list] = {}
+        for node, c in mem.items():
+            groups.setdefault(c, []).append(node)
         rows = []
-        for members in groups:
+        for members in groups.values():
             anchor = min(str(m) for m in members)
             cid = _stable_id(anchor)
             for m in members:

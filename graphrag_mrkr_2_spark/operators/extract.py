@@ -16,7 +16,7 @@ Spark-first design notes (scale rationale in SURVEY §4/§7):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -30,7 +30,11 @@ from pyspark.sql.types import (
 
 from ..config import ChunkingConfig, ContentFilterConfig
 from ..functions.charsets import to_text
-from ..functions.chunking import chunk_document
+from ..functions.chunking import (
+    StructureHybridChunker,
+    assign_text_units,
+    chunk_document,
+)
 from ..functions.html_text import HtmlHeadingChunker, extract_plain_text
 
 # ---------------------------------------------------------------------------
@@ -106,6 +110,111 @@ CHUNK_SCHEMA = StructType(
 )
 
 
+# the page column each strategy chunks from
+STRATEGY_INPUT = {"html_heading": "html", "structure_hybrid": "binary", "legacy": "text"}
+
+
+def chunk_inputs(
+    pages: DataFrame,
+    strategy: str,
+    id_col: str = "url",
+    html_col: str = "html",
+    text_col: str = "text",
+    binary_col: str = "binary",
+) -> DataFrame:
+    """``pages`` projected to the columns ``strategy`` reads, renamed to
+    ``page_chunker``'s argument names: url, the strategy's input column,
+    and text when present (the offset base for html/structure chunks).
+
+    An unknown strategy or a missing input column is a plan-time
+    ``ValueError``, not a per-row failure in a Python worker. A missing
+    ``binary`` column in particular would otherwise send every row down
+    structure_hybrid's per-document legacy downgrade, a silent corpus-wide
+    misconfiguration.
+    """
+    need = STRATEGY_INPUT.get(strategy)
+    if need is None:
+        raise ValueError(
+            f"unknown chunking strategy {strategy!r}; expected one of {sorted(STRATEGY_INPUT)}"
+        )
+    source = {"url": id_col, "html": html_col, "text": text_col, "binary": binary_col}
+    if source[need] not in pages.columns:
+        hint = "; load with keep_binary=True" if need == "binary" else ""
+        raise ValueError(
+            f"strategy={strategy!r} reads the {need} column {source[need]!r}, "
+            f"which the pages lack (have: {pages.columns}){hint}"
+        )
+    wanted = [k for k in dict.fromkeys(["url", need, "text"]) if source[k] in pages.columns]
+    return pages.select(*[F.col(source[k]).alias(k) for k in wanted])
+
+
+def page_tuples(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """(url, html, text, binary) per row of a ``chunk_inputs`` batch; a
+    column the strategy does not read is None."""
+    absent = [None] * len(pdf)
+    return zip(*(pdf[c] if c in pdf.columns else absent for c in ("url", "html", "text", "binary")))
+
+
+def page_chunker(strategy: str, cfg: ChunkingConfig | None = None) -> Callable[..., list[dict]]:
+    """The one page → chunks kernel: ``(url, html, text, binary)`` → chunk
+    rows holding the CHUNK_SCHEMA fields, for a strategy ``chunk_inputs``
+    accepted (it also picks the columns the kernel reads).
+
+    'html_heading' is HtmlHeadingChunker.chunk_html
+    (core/html_chunker.py:93-124) over the charset-sniffed html (r7);
+    'legacy' is the recursive splitter (core/chunking.py:260-264) over
+    text; 'structure_hybrid' is the docling_hybrid analog
+    (core/chunking.py:149-158 + core/docling_chunker.py): structured blocks
+    parsed from the binary payload (docx headings/tables, pdf pages) are
+    packed by StructureHybridChunker and their page numbers override the
+    offset-derived ones, while a payload that yields no structure falls
+    back to legacy (_resolve_chunking_strategy, core/chunking.py:288-292).
+    Stable ids {doc}_tu_{start}_{end}_{sha1[:8]} per core/chunking.py:508-513.
+    """
+    cfg = cfg or ChunkingConfig()
+    budget = (
+        cfg.chunk_target_tokens,
+        cfg.chunk_min_tokens,
+        cfg.chunk_max_tokens,
+        cfg.chunk_overlap_tokens,
+        cfg.include_heading_path,
+    )
+    html_chunker = HtmlHeadingChunker(*budget)
+    structure_chunker = StructureHybridChunker(*budget)
+
+    def chunk(url, html, text, binary) -> list[dict]:
+        url = str(url)
+        doc_id = document_id_for_url(url)
+        pieces = None  # None: the legacy recursive split of text
+        if strategy == "html_heading":
+            html = to_text(html)
+            pieces = html_chunker.chunk_html(html)
+            text = text or extract_plain_text(html)
+        elif strategy == "structure_hybrid":
+            from ..functions.docformats import decode_document, document_blocks
+
+            data = bytes(binary) if isinstance(binary, (bytes, bytearray)) else None
+            blocks = document_blocks(data, url) if data else None
+            text = text or (decode_document(data, url) if data else None)
+            if blocks:
+                pieces = structure_chunker.chunk_blocks(blocks)
+        if pieces is None:
+            units = chunk_document(doc_id, text or "", cfg.chunk_size, cfg.chunk_overlap)
+            metas = [{}] * len(units)
+        else:
+            units = assign_text_units(doc_id, text or "", [p["text"] for p in pieces])
+            metas = [p["metadata"] for p in pieces]
+        for unit, meta in zip(units, metas):
+            unit["url"] = url
+            unit["heading_path"] = meta.get("heading_path")
+            unit["section_title"] = meta.get("section_title")
+            if meta.get("page") is not None:
+                unit["page"] = meta["page"]
+        return units
+
+    return chunk
+
+
 def chunk_pages(
     pages: DataFrame,
     strategy: str = "html_heading",
@@ -115,129 +224,19 @@ def chunk_pages(
     text_col: str = "text",
     binary_col: str = "binary",
 ) -> DataFrame:
-    """Chunk pages into TextUnits (one output row per chunk).
-
-    strategy='html_heading' replicates HtmlHeadingChunker.chunk_html
-    (core/html_chunker.py:93-124); 'legacy' replicates the recursive splitter
-    (core/chunking.py:260-264); 'structure_hybrid' is the docling_hybrid
-    analog (core/chunking.py:149-158 + core/docling_chunker.py): structured
-    blocks parsed from the ``binary_col`` payload (docx headings/tables, pdf
-    pages) are packed by StructureHybridChunker, and rows whose payload
-    yields no structure fall back to legacy per the reference's
-    _resolve_chunking_strategy downgrade (core/chunking.py:288-292).
-    Stable ids {doc}_tu_{start}_{end}_{sha1[:8]}
-    per core/chunking.py:508-513. Chunk-local => mapInPandas, no shuffle.
-    """
-    cfg = cfg or ChunkingConfig()
-    use_html = strategy == "html_heading"
-    use_structure = strategy == "structure_hybrid"
-    target, minimum, maximum, overlap = (
-        cfg.chunk_target_tokens,
-        cfg.chunk_min_tokens,
-        cfg.chunk_max_tokens,
-        cfg.chunk_overlap_tokens,
-    )
-    chunk_size, chunk_overlap = cfg.chunk_size, cfg.chunk_overlap
-    include_heading = cfg.include_heading_path
-
-    if use_structure and binary_col not in pages.columns:
-        # without the payload column EVERY row would take the per-document
-        # legacy downgrade — that silent corpus-wide misconfiguration should
-        # be a plan-time error (the per-row downgrade is for documents whose
-        # payload yields no structure, not for a missing column)
-        raise ValueError(
-            f"strategy='structure_hybrid' needs the '{binary_col}' payload "
-            f"column (have: {pages.columns}); load with keep_binary=True"
-        )
-    cols = (
-        [id_col]
-        + ([html_col] if use_html else [])
-        + ([binary_col] if use_structure else [])
-        + [text_col]
-    )
-    # always carry text when available for offset assignment
-    cols = list(dict.fromkeys([c for c in cols if c in pages.columns]))
+    """Chunk pages into TextUnits, one output row per chunk: ``page_chunker``
+    over the ``chunk_inputs`` columns in one mapInPandas (chunk-local, no
+    shuffle). The fused extraction pass runs the same kernel."""
+    inputs = chunk_inputs(pages, strategy, id_col, html_col, text_col, binary_col)
+    columns = [f.name for f in CHUNK_SCHEMA.fields]
 
     def _chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.chunking import StructureHybridChunker, assign_text_units
-        from ..functions.docformats import decode_document, document_blocks
-
-        chunker = HtmlHeadingChunker(target, minimum, maximum, overlap, include_heading)
-        structure_chunker = StructureHybridChunker(
-            target, minimum, maximum, overlap, include_heading
-        )
+        chunk = page_chunker(strategy, cfg)
         for pdf in batches:
-            rows: list[dict] = []
-            for rec in pdf.itertuples(index=False):
-                url = getattr(rec, id_col)
-                doc_id = document_id_for_url(str(url))
-                if use_html:
-                    raw = getattr(rec, html_col)
-                    html = to_text(raw)  # charset-sniffing decode (r7)
-                    pieces = chunker.chunk_html(html)
-                    base_text = (
-                        getattr(rec, text_col, None) if text_col in pdf.columns else None
-                    ) or extract_plain_text(html)
-                    units = assign_text_units(doc_id, base_text, [p["text"] for p in pieces])
-                    for unit, piece in zip(units, pieces):
-                        meta = piece["metadata"]
-                        rows.append(
-                            {
-                                **unit,
-                                "url": str(url),
-                                "heading_path": meta.get("heading_path"),
-                                "section_title": meta.get("section_title"),
-                            }
-                        )
-                elif use_structure:
-                    raw = getattr(rec, binary_col, None) if binary_col in pdf.columns else None
-                    data = bytes(raw) if isinstance(raw, (bytes, bytearray)) else None
-                    blocks = document_blocks(data, str(url)) if data else None
-                    base_text = (
-                        getattr(rec, text_col, None) if text_col in pdf.columns else None
-                    ) or (decode_document(data, str(url)) if data else None) or ""
-                    if blocks:
-                        pieces = structure_chunker.chunk_blocks(blocks)
-                        units = assign_text_units(
-                            doc_id, base_text, [p["text"] for p in pieces]
-                        )
-                        for unit, piece in zip(units, pieces):
-                            meta = piece["metadata"]
-                            row = {
-                                **unit,
-                                "url": str(url),
-                                "heading_path": meta.get("heading_path"),
-                                "section_title": meta.get("section_title"),
-                            }
-                            if meta.get("page") is not None:
-                                row["page"] = meta["page"]
-                            rows.append(row)
-                    else:
-                        # structure unavailable → legacy downgrade
-                        # (core/chunking.py:288-292)
-                        for unit in chunk_document(
-                            doc_id, base_text, chunk_size, chunk_overlap
-                        ):
-                            rows.append(
-                                {
-                                    **unit,
-                                    "url": str(url),
-                                    "heading_path": None,
-                                    "section_title": None,
-                                }
-                            )
-                else:
-                    text = getattr(rec, text_col) or ""
-                    for unit in chunk_document(doc_id, text, chunk_size, chunk_overlap):
-                        rows.append(
-                            {**unit, "url": str(url), "heading_path": None, "section_title": None}
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in CHUNK_SCHEMA.fields],
-            )
+            rows = [row for page in page_tuples(pdf) for row in chunk(*page)]
+            yield pd.DataFrame(rows, columns=columns)
 
-    return pages.select(*cols).mapInPandas(_chunk, CHUNK_SCHEMA)
+    return inputs.mapInPandas(_chunk, CHUNK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

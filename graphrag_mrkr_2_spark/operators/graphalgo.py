@@ -162,7 +162,7 @@ def label_propagation(
     """Weighted synchronous label propagation → (node, label).
 
     The distributed community-detection path for components too large for
-    in-executor Louvain (core/graph_clustering.py:158-176 hands whatever it
+    in-executor Leiden (core/graph_clustering.py:158-176 hands whatever it
     gets to igraph in ONE process — the reference's scale ceiling). Each
     round is the same skew-safe shape as the CC star steps:
 

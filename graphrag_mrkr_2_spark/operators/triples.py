@@ -52,7 +52,8 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from dataclasses import asdict
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -67,7 +68,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.charsets import to_text
 from ..functions.extraction import extract_chunk_with_gleaning
 from ..functions.mock_llm import mock_llm_response
 
@@ -87,6 +87,53 @@ MENTION_SCHEMA = StructType(
 )
 
 
+MENTION_COLUMNS = [f.name for f in MENTION_SCHEMA.fields]
+
+
+def mention_frame(
+    chunks: Iterable[tuple[str, str, str | None]],
+    llm: Callable[[str, str, int], str],
+    max_gleanings: int,
+) -> pd.DataFrame:
+    """Gleaning extraction over (chunk_id, document_id, content) → one
+    MENTION_SCHEMA frame ('entity'/'relationship' rows), built from one
+    list per column. The doubles are float64 arrays; the other columns keep
+    explicit Nones, because a NaN-filled column breaks Arrow's
+    list<string> conversion for source_chunks."""
+    cols: dict[str, list] = {c: [] for c in MENTION_COLUMNS}
+    (kind, chunk_ids, doc_ids, names, types, targets,
+     descriptions, importances, strengths, provs) = cols.values()
+    for chunk_id, doc_id, content in chunks:
+        entities, relationships = extract_chunk_with_gleaning(
+            content or "", chunk_id, llm, max_gleanings=max_gleanings
+        )
+        for e in entities:
+            kind.append("entity")
+            chunk_ids.append(chunk_id)
+            doc_ids.append(doc_id)
+            names.append(e["name"])
+            types.append(e["type"])
+            targets.append(None)
+            descriptions.append(e["description"])
+            importances.append(e["importance_score"])
+            strengths.append(None)
+            provs.append(e["source_chunks"])
+        for r in relationships:
+            kind.append("relationship")
+            chunk_ids.append(chunk_id)
+            doc_ids.append(doc_id)
+            names.append(r["source_entity"])
+            types.append(r["relationship_type"])
+            targets.append(r["target_entity"])
+            descriptions.append(r["description"])
+            importances.append(None)
+            strengths.append(r["strength"])
+            provs.append(r["source_chunks"])
+    cols["importance"] = pd.array(importances, dtype="float64")
+    cols["strength"] = pd.array(strengths, dtype="float64")
+    return pd.DataFrame(cols)
+
+
 def extract_mentions(
     chunks: DataFrame,
     llm: Callable[[str, str, int], str] = mock_llm_response,
@@ -101,45 +148,11 @@ def extract_mentions(
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[dict] = []
-            for rec in pdf.itertuples(index=False):
-                chunk_id = rec.chunk_id
-                doc_id = rec.document_id
-                text = getattr(rec, content_col) or ""
-                entities, relationships = extract_chunk_with_gleaning(
-                    text, chunk_id, llm, max_gleanings=max_gleanings
-                )
-                for e in entities:
-                    rows.append(
-                        {
-                            "kind": "entity",
-                            "chunk_id": chunk_id,
-                            "document_id": doc_id,
-                            "name": e["name"],
-                            "type": e["type"],
-                            "target": None,
-                            "description": e["description"],
-                            "importance": e["importance_score"],
-                            "strength": None,
-                            "source_chunks": e["source_chunks"],
-                        }
-                    )
-                for r in relationships:
-                    rows.append(
-                        {
-                            "kind": "relationship",
-                            "chunk_id": chunk_id,
-                            "document_id": doc_id,
-                            "name": r["source_entity"],
-                            "type": r["relationship_type"],
-                            "target": r["target_entity"],
-                            "description": r["description"],
-                            "importance": None,
-                            "strength": r["strength"],
-                            "source_chunks": r["source_chunks"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in MENTION_SCHEMA.fields])
+            out = mention_frame(
+                zip(pdf["chunk_id"], pdf["document_id"], pdf[content_col]), llm, max_gleanings
+            )
+            if len(out):
+                yield out
 
     return chunks.select("chunk_id", "document_id", content_col).mapInPandas(
         _extract, MENTION_SCHEMA
@@ -160,6 +173,14 @@ UNIFIED_EXTRA_FIELDS = [
 
 UNIFIED_SCHEMA = StructType([*MENTION_SCHEMA.fields, *UNIFIED_EXTRA_FIELDS])
 
+# nullable dtypes both halves of a unified batch share before the concat:
+# an all-None object column next to a typed one is a pandas FutureWarning,
+# and float64-with-NaN does not convert to an int Spark column
+_UNIFIED_DTYPES = {
+    "importance": "float64", "strength": "float64", "page": "Int32",
+    "chunk_index": "Int32", "start_offset": "Int64", "end_offset": "Int64",
+}
+
 
 def extract_mentions_fused(
     pages: DataFrame,
@@ -172,250 +193,58 @@ def extract_mentions_fused(
     html_col: str = "html",
     text_col: str = "text",
     binary_col: str = "binary",
-    emit_chunks: bool = False,
 ) -> DataFrame:
-    """Fused S2+S3+S4+S5: pages → mention rows in ONE mapInPandas stage.
+    """Fused S2+S3+S4+S5: pages → UNIFIED_SCHEMA rows in ONE mapInPandas.
 
-    The modular operators (chunk_pages → with_content_filter →
-    extract_mentions) ship every chunk's content across the Arrow boundary
-    twice (JVM→Python for chunking output, JVM→Python again for extraction
-    input). All three steps are chunk-local, so fusing them keeps the page
-    content in Python from parse to mention emission — measured ~6× on the
-    end-to-end pipeline. The content filter runs as the pure-Python oracle
-    (functions/quality.should_embed_chunk), which unit tests pin equal to
-    the JVM column-expression variant.
-
-    ``emit_chunks=True`` widens the output to UNIFIED_SCHEMA and also emits
-    one kind='chunk' row per surviving TextUnit — so a consumer that needs
-    BOTH the mentions and the chunk table (similarity, checkpointing) pays
-    the HTML parse exactly once instead of running chunk_pages again
-    (round-1 bench showed that second parse as its own 7s line).
+    Per page: ``extract.page_chunker`` (the kernel ``chunk_pages`` runs)
+    over the ``extract.chunk_inputs`` columns, the content filter as the
+    pure-Python oracle (functions/quality.should_embed_chunk, pinned equal
+    to the JVM column expressions by unit tests), then ``mention_frame`` on
+    the surviving chunks. Each batch yields the mention rows and one
+    kind='chunk' row per surviving TextUnit, so each page crosses the Arrow
+    boundary once and is parsed once, whether the consumer reads the
+    mentions (``canonicalize`` selects rows by ``kind``), the chunk table,
+    or both.
     """
-    from ..config import ChunkingConfig, ContentFilterConfig
-    from ..functions.chunking import (
-        StructureHybridChunker,
-        assign_text_units,
-        chunk_document,
-    )
-    from ..functions.html_text import HtmlHeadingChunker, extract_plain_text
-    from ..functions.extraction import extract_chunk_with_gleaning
+    from ..config import ContentFilterConfig
     from ..functions.quality import should_embed_chunk
-    from .extract import document_id_for_url
+    from .extract import CHUNK_SCHEMA, chunk_inputs, page_chunker, page_tuples
 
-    chunk_cfg = chunk_cfg or ChunkingConfig()
-    filter_cfg = filter_cfg or ContentFilterConfig()
-    use_html = strategy == "html_heading"
-    use_structure = strategy == "structure_hybrid"
-    chunker = HtmlHeadingChunker(
-        chunk_cfg.chunk_target_tokens,
-        chunk_cfg.chunk_min_tokens,
-        chunk_cfg.chunk_max_tokens,
-        chunk_cfg.chunk_overlap_tokens,
-        chunk_cfg.include_heading_path,
-    )
-    fkw = dict(
-        min_chunk_length=filter_cfg.min_chunk_length,
-        max_chunk_length=filter_cfg.max_chunk_length,
-        min_unique_word_ratio=filter_cfg.min_unique_word_ratio,
-        max_special_char_ratio=filter_cfg.max_special_char_ratio,
-        min_alphanumeric_ratio=filter_cfg.min_alphanumeric_ratio,
-    )
-
-    structure_chunker = StructureHybridChunker(
-        chunk_cfg.chunk_target_tokens,
-        chunk_cfg.chunk_min_tokens,
-        chunk_cfg.chunk_max_tokens,
-        chunk_cfg.chunk_overlap_tokens,
-        chunk_cfg.include_heading_path,
-    )
-
-    if use_structure and binary_col not in pages.columns:
-        raise ValueError(
-            f"strategy='structure_hybrid' needs the '{binary_col}' payload "
-            f"column (have: {pages.columns}); load with keep_binary=True"
-        )
-    wanted = [id_col] + ([binary_col] if use_structure else []) + [html_col, text_col]
-    cols = [c for c in dict.fromkeys(wanted) if c in pages.columns]
+    inputs = chunk_inputs(pages, strategy, id_col, html_col, text_col, binary_col)
+    fkw = asdict(filter_cfg or ContentFilterConfig())
+    chunk_cols = [f.name for f in CHUNK_SCHEMA.fields]
+    out_cols = [f.name for f in UNIFIED_SCHEMA.fields]
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        chunk = page_chunker(strategy, chunk_cfg)
         for pdf in batches:
-            # columnar accumulation: pd.DataFrame-from-dict-of-lists is much
-            # cheaper than from list-of-dicts in the hot path
-            kind, chunk_ids, doc_ids, names, types, targets = [], [], [], [], [], []
-            descriptions, importances, strengths, provs = [], [], [], []
-            chunk_rows: list[dict] = []
-
-            def emit(k, cid, did, nm, ty, tg, de, im, st, pv):
-                kind.append(k)
-                chunk_ids.append(cid)
-                doc_ids.append(did)
-                names.append(nm)
-                types.append(ty)
-                targets.append(tg)
-                descriptions.append(de)
-                importances.append(im)
-                strengths.append(st)
-                provs.append(pv)
-
-            for rec in pdf.itertuples(index=False):
-                url = str(getattr(rec, id_col))
-                doc_id = document_id_for_url(url)
-                if use_html:
-                    raw = getattr(rec, html_col)
-                    # charset-sniffing decode (r7) — MUST match the
-                    # modular chunk_pages path byte-for-byte or the
-                    # fused/modular parity breaks on legacy-encoded pages
-                    html = to_text(raw)
-                    pieces = chunker.chunk_html(html)
-                    base_text = (
-                        getattr(rec, text_col, None) if text_col in pdf.columns else None
-                    ) or extract_plain_text(html)
-                    units = assign_text_units(doc_id, base_text, [p["text"] for p in pieces])
-                    metas = [p["metadata"] for p in pieces]
-                elif use_structure:
-                    from ..functions.docformats import decode_document, document_blocks
-
-                    raw = (
-                        getattr(rec, binary_col, None)
-                        if binary_col in pdf.columns
-                        else None
-                    )
-                    data = bytes(raw) if isinstance(raw, (bytes, bytearray)) else None
-                    blocks = document_blocks(data, url) if data else None
-                    base_text = (
-                        getattr(rec, text_col, None) if text_col in pdf.columns else None
-                    ) or (decode_document(data, url) if data else None) or ""
-                    if blocks:
-                        pieces = structure_chunker.chunk_blocks(blocks)
-                        units = assign_text_units(
-                            doc_id, base_text, [p["text"] for p in pieces]
-                        )
-                        metas = [p["metadata"] for p in pieces]
-                    else:
-                        # structure unavailable → legacy downgrade, same as
-                        # chunk_pages (core/chunking.py:288-292)
-                        units = chunk_document(
-                            doc_id, base_text, chunk_cfg.chunk_size,
-                            chunk_cfg.chunk_overlap,
-                        )
-                        metas = [{} for _ in units]
-                else:
-                    text = getattr(rec, text_col) or ""
-                    units = chunk_document(
-                        doc_id, text, chunk_cfg.chunk_size, chunk_cfg.chunk_overlap
-                    )
-                    metas = [{} for _ in units]
-                for unit, meta in zip(units, metas):
-                    content = unit["content"]
-                    ok, _reason = should_embed_chunk(content, **fkw)
-                    if not ok:
-                        continue
-                    chunk_id = unit["chunk_id"]
-                    if emit_chunks:
-                        chunk_rows.append(
-                            {
-                                "kind": "chunk",
-                                "chunk_id": chunk_id,
-                                "document_id": doc_id,
-                                # explicit Nones: a column absent from the
-                                # dicts would concat as float NaN, which
-                                # Arrow cannot convert for ArrayType
-                                "name": None,
-                                "type": None,
-                                "target": None,
-                                "description": None,
-                                "importance": None,
-                                "strength": None,
-                                "source_chunks": None,
-                                "url": url,
-                                "content": content,
-                                # structure blocks carry a real page number
-                                # (pdf pages); it overrides the offset-derived
-                                # one, same as chunk_pages' structure branch
-                                "page": (
-                                    meta["page"]
-                                    if meta.get("page") is not None
-                                    else unit["page"]
-                                ),
-                                "start_offset": unit["start_offset"],
-                                "end_offset": unit["end_offset"],
-                                "chunk_index": unit["chunk_index"],
-                                "content_hash": unit["content_hash"],
-                                "heading_path": meta.get("heading_path"),
-                                "section_title": meta.get("section_title"),
-                            }
-                        )
-                    entities, relationships = extract_chunk_with_gleaning(
-                        content, chunk_id, llm, max_gleanings=max_gleanings
-                    )
-                    for e in entities:
-                        emit(
-                            "entity", chunk_id, doc_id, e["name"], e["type"], None,
-                            e["description"], e["importance_score"], None,
-                            e["source_chunks"],
-                        )
-                    for r in relationships:
-                        emit(
-                            "relationship", chunk_id, doc_id, r["source_entity"],
-                            r["relationship_type"], r["target_entity"],
-                            r["description"], None, r["strength"], r["source_chunks"],
-                        )
-            if not kind and not chunk_rows:
-                # a batch where every chunk was filtered (or extraction found
-                # nothing) must yield NOTHING: an all-empty dict-of-lists
-                # frame defaults every column to float64, and Arrow cannot
-                # cast an empty float64 ndarray to list<string> for
-                # source_chunks (surfaced by short structure_hybrid docs)
-                continue
-            mentions_pdf = pd.DataFrame(
-                {
-                    "kind": kind,
-                    "chunk_id": chunk_ids,
-                    "document_id": doc_ids,
-                    "name": names,
-                    "type": types,
-                    "target": targets,
-                    "description": descriptions,
-                    "importance": pd.array(importances, dtype="float64"),
-                    "strength": pd.array(strengths, dtype="float64"),
-                    "source_chunks": provs,
-                }
-            )
-            if not emit_chunks:
-                yield mentions_pdf
-                continue
-            out_cols = [f.name for f in UNIFIED_SCHEMA.fields]
-            for c in out_cols:
-                if c not in mentions_pdf.columns:
-                    mentions_pdf[c] = None
-            chunks_pdf = pd.DataFrame(chunk_rows, columns=out_cols)
-            # Align dtypes BEFORE concat: an all-NA object column on one
-            # side of a concat with a typed column on the other is a pandas
-            # FutureWarning today and a dtype change on the next major.
-            # Nullable Int for the offset fields also keeps Arrow happy
-            # (float64-with-NaN does not convert to an int Spark column).
-            dtypes = {"importance": "float64", "strength": "float64",
-                      "page": "Int32", "chunk_index": "Int32",
-                      "start_offset": "Int64", "end_offset": "Int64"}
-            # .copy(): mentions_pdf[out_cols] is a slice — mutating it below
-            # would raise SettingWithCopyWarning per column per batch
-            parts = [
-                p for p in (mentions_pdf[out_cols].copy(), chunks_pdf) if len(p)
+            kept = [
+                row
+                for page in page_tuples(pdf)
+                for row in chunk(*page)
+                if should_embed_chunk(row["content"], **fkw)[0]
             ]
+            mentions = mention_frame(
+                ((r["chunk_id"], r["document_id"], r["content"]) for r in kept),
+                llm,
+                max_gleanings,
+            )
+            chunks = pd.DataFrame(kept, columns=chunk_cols)
+            chunks["kind"] = "chunk"
+            # a batch where every chunk was filtered must yield NOTHING: an
+            # empty frame cannot carry list<string> for source_chunks
+            parts = [p for p in (mentions, chunks) if len(p)]
             if not parts:
                 continue
             for p in parts:
-                for c, dt in dtypes.items():
+                for c in out_cols:
+                    if c not in p.columns:
+                        p[c] = None
+                for c, dt in _UNIFIED_DTYPES.items():
                     p[c] = pd.array(p[c], dtype=dt)
-            both = (
-                parts[0].copy()
-                if len(parts) == 1
-                else pd.concat(parts, ignore_index=True)
-            )
-            yield both
+            yield pd.concat([p[out_cols] for p in parts], ignore_index=True)
 
-    schema = UNIFIED_SCHEMA if emit_chunks else MENTION_SCHEMA
-    return pages.select(*cols).mapInPandas(_run, schema)
+    return inputs.mapInPandas(_run, UNIFIED_SCHEMA)
 
 
 def entity_mentions(mentions: DataFrame) -> DataFrame:

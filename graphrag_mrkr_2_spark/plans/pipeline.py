@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, ExtractionConfig, PipelineConfig
 from ..operators.extract import extract_text, repartition_by_url
 from ..operators.triples import (
-    MENTION_SCHEMA,
+    MENTION_COLUMNS,
     build_edges,
     build_nodes,
     build_triples,
@@ -204,7 +204,6 @@ def run_kg_pipeline(
             chunk_cfg=cfg.chunking,
             filter_cfg=cfg.content_filter,
             max_gleanings=cfg.extraction.max_gleanings,
-            emit_chunks=True,
         )
 
     catalog = fingerprint = None
@@ -227,9 +226,8 @@ def run_kg_pipeline(
         fingerprint = f"{input_fingerprint}/extracted-{snap}"
     else:
         unified = unified_plan().localCheckpoint(eager=True)
-    mention_cols = [f.name for f in MENTION_SCHEMA.fields]
     return KgResult(
-        mentions=unified.where(F.col("kind") != "chunk").select(*mention_cols),
+        mentions=unified.where(F.col("kind") != "chunk").select(*MENTION_COLUMNS),
         chunks=unified.where(F.col("kind") == "chunk").select(*_CHUNK_COLS),
         extraction=cfg.extraction,
         catalog=catalog,

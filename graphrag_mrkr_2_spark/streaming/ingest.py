@@ -35,7 +35,9 @@ def stream_pages(spark: SparkSession, pages_dir: str, max_files_per_trigger: int
 def streaming_mentions(pages_stream: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """chunk → filter → extract on a streaming DataFrame — the same fused
     mapInPandas stage as batch (stateless per-row transforms stream without
-    watermarks; one Arrow crossing per page)."""
+    watermarks; one Arrow crossing per page). It returns UNIFIED_SCHEMA
+    rows: the mentions plus one kind='chunk' row per kept chunk, which
+    ``canonicalize`` skips because it selects rows by ``kind``."""
     from ..operators.triples import extract_mentions_fused
 
     return extract_mentions_fused(

@@ -108,16 +108,18 @@ def _triple_set(df) -> set:
 
 
 @pytest.mark.spark
-def test_unified_pass_matches_modular_build(spark, modular_kg):
+@pytest.mark.parametrize("strategy", ["html_heading", "legacy"])
+def test_unified_pass_matches_modular_build(spark, modular_kg, strategy):
     """The builder's one fused pass (mentions AND chunk rows, pinned once)
     produces the same chunk table and triples as the unfused
-    chunk_pages → filter_chunks → extract_mentions chain."""
+    chunk_pages → filter_chunks → extract_mentions chain, for each
+    strategy that chunks web pages."""
     from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
     pages = generate_pages(spark, 12)
-    res = run_kg_pipeline(pages, num_partitions=3)
-    m_chunks, m_triples = modular_kg(pages)
+    res = run_kg_pipeline(pages, num_partitions=3, strategy=strategy)
+    m_chunks, m_triples = modular_kg(pages, strategy=strategy)
 
     t_uni = _triple_set(res.triples)
     assert t_uni == _triple_set(m_triples) and t_uni

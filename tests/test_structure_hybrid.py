@@ -368,3 +368,19 @@ class TestPipelineStructureHybrid:
             extract_mentions_fused(pages, strategy="structure_hybrid")
         with pytest.raises(ValueError, match="binary"):
             run_kg_pipeline(pages, strategy="structure_hybrid")
+
+        # legacy chunks the text column; without it, fail at plan time
+        # rather than in a Python worker
+        no_text = pages.drop("text")
+        with pytest.raises(ValueError, match="text"):
+            chunk_pages(no_text, strategy="legacy")
+        with pytest.raises(ValueError, match="text"):
+            extract_mentions_fused(no_text, strategy="legacy")
+
+        # a misspelled strategy is an error, not a quiet legacy run
+        with pytest.raises(ValueError, match="html-heading"):
+            chunk_pages(pages, strategy="html-heading")
+        with pytest.raises(ValueError, match="html-heading"):
+            extract_mentions_fused(pages, strategy="html-heading")
+        with pytest.raises(ValueError, match="html-heading"):
+            run_kg_pipeline(pages, strategy="html-heading")
