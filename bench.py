@@ -239,8 +239,8 @@ def main() -> None:
     mem = detect_communities(project_edges(normalize_edge_weights(kg_edges)))
     extras["kg_communities"] = mem.select("community_id").distinct().count()
     queries["kg_communities"] = round(time.time() - t0, 3)
-    # second trial (fresh detect_communities — its CC loop is many small
-    # jobs, the most interference-sensitive query in the suite)
+    # second trial (fresh detect_communities — a few short jobs whose
+    # time is mostly scheduling latency, so one trial is noise-prone)
     with _load_span("kg_communities"):
         t0 = time.time()
         mem2 = detect_communities(project_edges(normalize_edge_weights(kg_edges)))

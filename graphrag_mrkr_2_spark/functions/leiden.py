@@ -26,11 +26,13 @@ Modularity gain for moving node v (strength k_v) from community A to B:
 with γ = resolution — the same objective igraph maximizes for
 ``objective_function="modularity"``.
 
-Scale role: this is the per-COMPONENT kernel inside
-``communities.detect_communities``'s applyInPandas stage — the distributed
-decomposition (connected components first, giants routed to distributed
-LPA) is what holds at 100 TB; this kernel only ever sees one small-enough
-component.
+Scale role: this is the per-COMPONENT kernel of
+``communities.detect_communities``. Graphs of at most
+``graphalgo.LOCAL_EDGE_LIMIT`` edges run it on the driver after one
+collect; larger graphs run it inside an applyInPandas stage, one group per
+component. The distributed decomposition (connected components first,
+giants routed to distributed LPA) is what holds at 100 TB; this kernel only
+ever sees one small-enough component.
 """
 
 from __future__ import annotations

@@ -21,7 +21,10 @@ Spark-first re-architecture:
      deterministic; the same algorithm/objective as the reference's igraph
      community_leiden call). Giant components exceeding
      ``max_component_size`` route to distributed weighted label propagation
-     rather than OOMing an executor.
+     rather than OOMing an executor. A graph of at most
+     graphalgo.LOCAL_EDGE_LIMIT edges is collected once and clustered on
+     the driver by the same union-find and the same per-component kernel,
+     as the reference does for every graph.
   G4 membership writeback: a join, not per-row SETs
      (graph_clustering.py:179-210).
 """
@@ -29,7 +32,8 @@ Spark-first re-architecture:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -38,7 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .graphalgo import connected_components, label_propagation
+from . import graphalgo
 
 
 def normalize_edge_weights(
@@ -109,6 +113,14 @@ def detect_communities(
     and deterministic (hash of the community's minimum node id — no
     driver-side counters).
 
+    A graph of at most graphalgo.LOCAL_EDGE_LIMIT edges (and at most
+    ``max_component_size``) is collected once and clustered on the driver:
+    the union-find of connected_components' local path groups the edges by
+    component and the per-component kernel runs on each group, as the
+    reference clusters its whole graph in one process. Larger graphs go
+    through connected_components, a join and an applyInPandas stage that
+    runs the same kernel; both paths emit the same rows.
+
     Components small enough to fit one executor are clustered inside
     applyInPandas (modularity — the reference's semantics). Components whose
     edge count exceeds ``max_component_size`` — at web scale exactly the
@@ -124,47 +136,51 @@ def detect_communities(
     component size aggregate and its probe job are skipped; only above the
     cap does the giant probe run (and LPA, if some component exceeds it).
 
-    Default threshold calibration (measured, round 3): the pure-Python
-    Leiden kernel runs ~70 µs/edge (5 s / 100k edges, 37 s / 500k, linear)
-    — 500_000 bounds the worst single-task latency near half a minute;
-    raise it if per-component quality on multi-million-edge components is
-    worth minutes-long tasks (an igraph-C kernel at the same seam would
-    move this knob ~50×).
+    Calibration (4 cores, local[4], Spark 4.1.2; median of 3). The
+    pure-Python Leiden kernel on one component costs 8-11 µs/edge on dense
+    planted blocks (0.11 s / 10k edges, 0.84 s / 100k) and 38-52 µs/edge on
+    sparse ones of mean degree 4 (2.1 s / 50k, 3.8-5.2 s / 100k), so the
+    500_000 cap bounds the worst single-task latency near half a minute.
+    Raise it if per-component quality on multi-million-edge components is
+    worth minutes-long tasks. Whole call, driver path vs Spark path
+    (LOCAL_EDGE_LIMIT=0), pinned and counted:
+
+        graph                              10k edges    50k          100k
+        dense, 50-edge components          0.86/2.57    2.78/11.97   4.70/11.80 s
+        dense, one component               0.41/0.87    1.22/1.51    2.13/2.29 s
+        sparse, 2000-edge components           -        2.29/3.18    4.56/5.91 s
+        sparse, one component                  -        3.09/3.89    6.22/6.55 s
+
+    The driver path wins at every size up to the shared 100k limit: the
+    Spark path's extra jobs and Python-worker start cost more than its
+    parallelism saves, because adaptive execution packs these few MB into
+    one or two tasks.
     """
     # one pinned edge table feeds CC, the size gate and the clustering join,
-    # so the input lineage runs once instead of once per consumer
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), F.col(weight_col).alias("weight")
-    ).localCheckpoint(eager=True)
-    n_edges = e.count()
-    cc = connected_components(e, "src", "dst")
+    # so the input lineage runs once instead of once per consumer; the
+    # Observation counts it in the same pass
+    obs = Observation()
+    e = (
+        edges.select(
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), F.col(weight_col).alias("weight")
+        )
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    n_edges = obs.get["n"]
+    # a limit of 0 disables the driver path, as local_threshold=0 does CC's
+    limit = graphalgo.LOCAL_EDGE_LIMIT
+    if limit > 0 and n_edges <= min(max_component_size, limit):
+        return _cluster_on_driver(e.collect(), resolution, seed, level, e.sparkSession)
+
+    cc = graphalgo.connected_components(e, "src", "dst")
     tagged = e.join(cc.withColumnRenamed("node", "src"), "src")
 
     def _cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        # multi-edges within a component: UNDIRECTED key, keep the max
-        # weight; without the canonical key, (a,b,3) + (b,a,1) would
-        # double-count in the leiden builder
-        dedup: dict[tuple, float] = {}
-        for s, d, w in zip(pdf["src"], pdf["dst"], pdf["weight"]):
-            key = (s, d) if s <= d else (d, s)
-            dedup[key] = max(dedup.get(key, 0.0), float(w))
-        # sorted: the kernel indexes nodes by first appearance, so the
-        # seeded visit order must not depend on shuffle row order
-        edge_list = [(s, d, w) for (s, d), w in sorted(dedup.items())]
-
-        from graphrag_mrkr_2_spark.functions.leiden import leiden_communities
-
-        mem = leiden_communities(edge_list, resolution=resolution, seed=seed)
-        groups: dict[int, list] = {}
-        for node, c in mem.items():
-            groups.setdefault(c, []).append(node)
-        rows = []
-        for members in groups.values():
-            anchor = min(str(m) for m in members)
-            cid = _stable_id(anchor)
-            for m in members:
-                rows.append({"node": m, "community_id": cid, "level": level})
-        return pd.DataFrame(rows, columns=["node", "community_id", "level"])
+        rows = _members(pdf["src"], pdf["dst"], pdf["weight"], resolution, seed)
+        return pd.DataFrame(
+            [(node, cid, level) for node, cid in rows], columns=["node", "community_id", "level"]
+        )
 
     # a component's edges are a subset of all edges, so at or below the cap
     # no component can be giant: skip the size aggregate and its probe job
@@ -190,7 +206,7 @@ def detect_communities(
     if comp_sizes.where(F.col("n_edges") > max_component_size).limit(1).isEmpty():
         return small_mem
 
-    lpa = label_propagation(giant, "src", "dst", "weight")
+    lpa = graphalgo.label_propagation(giant, "src", "dst", "weight")
     # community id = hash of the community's min node id (same determinism
     # contract as _stable_id on the applyInPandas path)
     anchors = lpa.groupBy("label").agg(F.min("node").alias("anchor"))
@@ -203,6 +219,61 @@ def detect_communities(
         )
     )
     return small_mem.unionByName(giant_mem)
+
+
+def _members(srcs, dsts, weights, resolution: float, seed: int) -> list[tuple[str, int]]:
+    """One component's edges → [(node, community_id)] by seeded Leiden.
+
+    The one per-component kernel of both clustering paths: the driver path
+    and the applyInPandas stage call it on the same edge set and so emit
+    the same rows."""
+    # multi-edges within a component: UNDIRECTED key, keep the max
+    # weight; without the canonical key, (a,b,3) + (b,a,1) would
+    # double-count in the leiden builder
+    dedup: dict[tuple, float] = {}
+    for s, d, w in zip(srcs, dsts, weights):
+        key = (s, d) if s <= d else (d, s)
+        dedup[key] = max(dedup.get(key, 0.0), float(w))
+    # sorted: the kernel indexes nodes by first appearance, so the
+    # seeded visit order must not depend on row order
+    edge_list = [(s, d, w) for (s, d), w in sorted(dedup.items())]
+
+    from graphrag_mrkr_2_spark.functions.leiden import leiden_communities
+
+    mem = leiden_communities(edge_list, resolution=resolution, seed=seed)
+    groups: dict[int, list] = {}
+    for node, c in mem.items():
+        groups.setdefault(c, []).append(node)
+    rows = []
+    for members in groups.values():
+        cid = _stable_id(min(str(m) for m in members))
+        rows.extend((m, cid) for m in members)
+    return rows
+
+
+def _cluster_on_driver(rows, resolution: float, seed: int, level: int, spark) -> DataFrame:
+    """Collected (src, dst, weight) rows → membership, clustered in this
+    process: union-find groups the edges by component (an edge belongs to
+    its src's component, as the Spark path's join on src assigns it), and
+    each group runs the same kernel as the applyInPandas stage.
+
+    The result is an Arrow-built LocalRelation with _MEMBERSHIP_SCHEMA, also
+    when empty, so reading it starts no Python-worker stage."""
+    comp = graphalgo._union_find((s, d) for s, d, _ in rows)
+    groups: dict[str, list] = {}
+    for row in rows:
+        c = comp.get(row[0])
+        if c is not None:
+            groups.setdefault(c, []).append(row)
+    members = [m for g in groups.values() for m in _members(*zip(*g), resolution, seed)]
+    table = pa.table(
+        {
+            "node": pa.array([n for n, _ in members], pa.string()),
+            "community_id": pa.array([c for _, c in members], pa.int64()),
+            "level": pa.array([level] * len(members), pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table, schema=_MEMBERSHIP_SCHEMA)
 
 
 def _stable_id(anchor: str) -> int:

@@ -20,7 +20,7 @@ edge list is localCheckpoint()-ed to truncate lineage.
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -94,27 +94,30 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
+# Edge lists of at most this many rows are handled on the driver after one
+# collect: connected_components' default ``local_threshold`` and the gate of
+# communities.detect_communities' driver path.
+LOCAL_EDGE_LIMIT = 100_000
+
+
+def _checksum(df: DataFrame, a: str, b: str) -> tuple[int, int]:
+    """(row count, XOR of row hashes) over columns a, b: an order-free
+    fingerprint of a pair set, compared between loop rounds."""
+    row = df.agg(
         F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
+        F.coalesce(F.bit_xor(F.xxhash64(a, b)), F.lit(0)).alias("h"),
     ).collect()[0]
     return int(row["n"]), int(row["h"])
 
 
-def _local_components_rows(rows, spark) -> DataFrame:
-    """Driver-side union-find over already-collected (u, v) rows.
+def _union_find(pairs) -> dict[str, str]:
+    """(u, v) pairs → {node: component}, component = the component's min id.
 
-    The alternating-star loop costs ~10-20 Spark jobs of fixed scheduling
-    latency — pure waste on a graph that fits in one collect. Tolerates
-    directed, duplicated and self-loop-free-or-not input — the result is the
-    same (node, component=min id) mapping the symmetric-distinct loop
-    computes.
-
-    The mapping is handed to Spark as a pyarrow Table, so it plans as a
-    LocalRelation (also when empty): downstream joins read it in the JVM. A
-    Python list would go through a PythonRDD and start a Python-worker stage
-    on every read; an empty pandas frame falls back to that same path."""
+    Tolerates directed, duplicated and self-loop input. Pure self-loops and
+    null endpoints are skipped: they never enter the symmetric-distinct
+    loop either (its SQL u != v filter is null-rejecting), and identical
+    node coverage matters because callers left-join the mapping and
+    coalesce(component, node)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -125,13 +128,8 @@ def _local_components_rows(rows, spark) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        u, v = r["u"], r["v"]
+    for u, v in pairs:
         if u is None or v is None or u == v:
-            # pure self-loops and null endpoints never enter the
-            # symmetric-distinct loop either (its SQL u != v filter is
-            # null-rejecting) — identical node coverage matters: callers
-            # left-join this and coalesce(component, node)
             continue
         parent.setdefault(u, u)
         parent.setdefault(v, v)
@@ -142,11 +140,26 @@ def _local_components_rows(rows, spark) -> DataFrame:
                 parent[rv] = ru
             else:
                 parent[ru] = rv
-    nodes = list(parent)
+    return {n: find(n) for n in list(parent)}
+
+
+def _local_components_rows(rows, spark) -> DataFrame:
+    """Driver-side union-find over already-collected (u, v) rows.
+
+    The alternating-star loop costs ~10-20 Spark jobs of fixed scheduling
+    latency — pure waste on a graph that fits in one collect. The result is
+    the same (node, component=min id) mapping the symmetric-distinct loop
+    computes.
+
+    The mapping is handed to Spark as a pyarrow Table, so it plans as a
+    LocalRelation (also when empty): downstream joins read it in the JVM. A
+    Python list would go through a PythonRDD and start a Python-worker stage
+    on every read; an empty pandas frame falls back to that same path."""
+    comp = _union_find((r["u"], r["v"]) for r in rows)
     table = pa.table(
         {
-            "node": pa.array(nodes, pa.string()),
-            "component": pa.array([find(n) for n in nodes], pa.string()),
+            "node": pa.array(list(comp), pa.string()),
+            "component": pa.array(list(comp.values()), pa.string()),
         }
     )
     return spark.createDataFrame(table)
@@ -209,14 +222,7 @@ def label_propagation(
 
     from pyspark.sql.window import Window
 
-    def _checksum(lbl: DataFrame) -> tuple[int, int]:
-        row = lbl.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("node", "label")), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    history = [_checksum(labels)]
+    history = [_checksum(labels, "node", "label")]
     for _ in range(max_iterations):
         msgs = sym.join(
             labels.select(F.col("node").alias("v"), "label"), "v"
@@ -239,7 +245,7 @@ def label_propagation(
         if changed == 0:
             labels = new_labels
             break
-        cs = _checksum(new_labels)
+        cs = _checksum(new_labels, "node", "label")
         if len(history) >= 2 and cs == history[-2]:
             # period-2 oscillation: per-node min of the two swapping states
             labels = (
@@ -260,7 +266,7 @@ def connected_components(
     src_col: str = "u",
     dst_col: str = "v",
     max_iterations: int = 20,
-    local_threshold: int = 100_000,
+    local_threshold: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Edge list → (node, component) with component = min node id (orderable).
 
@@ -287,16 +293,18 @@ def connected_components(
     raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     if local_threshold > 0:
         # checkpoint the RAW edges (one evaluation of the possibly
-        # expensive lineage), then count + collect the materialized blocks.
-        # The r1-r7 shape symmetrized + distinct-exchanged BEFORE the
-        # checkpoint, paying a full explode+shuffle+dedup even when the
-        # graph then fit in one collect; union-find is insensitive to
-        # direction/duplicates, so feeding it the raw rows yields the
-        # identical (node, component) mapping. (An incremental limit-probe
-        # was tried first and rejected: CollectLimit's scale-up rounds cost
-        # more scheduling latency than the count they avoid.)
-        raw_ckpt = raw.localCheckpoint(eager=True)
-        if raw_ckpt.count() <= local_threshold:
+        # expensive lineage) and count them in the same pass through an
+        # Observation, then collect the materialized blocks. The r1-r7 shape
+        # symmetrized + distinct-exchanged BEFORE the checkpoint, paying a
+        # full explode+shuffle+dedup even when the graph then fit in one
+        # collect; union-find is insensitive to direction/duplicates, so
+        # feeding it the raw rows yields the identical (node, component)
+        # mapping. (An incremental limit-probe was tried first and rejected:
+        # CollectLimit's scale-up rounds cost more scheduling latency than
+        # the count they avoid.)
+        obs = Observation()
+        raw_ckpt = raw.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+        if obs.get["n"] <= local_threshold:
             return _local_components_rows(raw_ckpt.collect(), edges.sparkSession)
         e = _symmetric(raw_ckpt).localCheckpoint(eager=True)
     else:
@@ -305,7 +313,7 @@ def connected_components(
     for _ in range(max_iterations):
         e = _large_star(e)
         e = _small_star(e).localCheckpoint(eager=True)
-        cur = _checksum(e)
+        cur = _checksum(e, "u", "v")
         if prev == cur:
             break
         prev = cur

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+from graphrag_mrkr_2_spark.operators import graphalgo
 from graphrag_mrkr_2_spark.operators.communities import (
     community_summaries,
     detect_communities,
@@ -67,6 +68,27 @@ def test_two_planted_communities(planted_edges):
         comms.setdefault(r["community_id"], set()).add(r["node"])
     groups = sorted(sorted(v) for v in comms.values())
     assert groups == [
+        ["e0", "e1", "e2", "e3", "e4"],
+        ["e5", "e6", "e7", "e8", "e9"],
+    ]
+
+
+@pytest.mark.spark
+def test_small_graph_clusters_without_python_workers(planted_edges, monkeypatch):
+    """21 edges, under both the cap and the driver limit: the graph is
+    collected and clustered in the driver, so no applyInPandas stage (and
+    no Python worker) is planned."""
+    from pyspark.sql.group import GroupedData
+
+    def no_workers(self, *args, **kwargs):
+        raise AssertionError("applyInPandas planned on a small graph")
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", no_workers)
+    mem = detect_communities(project_edges(normalize_edge_weights(planted_edges)))
+    comms = {}
+    for r in mem.collect():
+        comms.setdefault(r["community_id"], set()).add(r["node"])
+    assert sorted(sorted(v) for v in comms.values()) == [
         ["e0", "e1", "e2", "e3", "e4"],
         ["e5", "e6", "e7", "e8", "e9"],
     ]
@@ -136,15 +158,20 @@ ORDER_SENSITIVE = (
 )
 
 
+def _order_sensitive_rows():
+    rows = []
+    for pair in ORDER_SENSITIVE.split():
+        a, b = pair.split("-")
+        rows.append((f"n{int(a):02d}", f"n{int(b):02d}", 1.0))
+    return rows
+
+
 @pytest.mark.spark
 def test_membership_independent_of_row_order(spark):
     """The per-component kernel must see one edge order whatever order the
     shuffle delivers rows in: the same edges, in one partition in forward,
     reversed and shuffled order, give identical memberships."""
-    rows = []
-    for pair in ORDER_SENSITIVE.split():
-        a, b = pair.split("-")
-        rows.append((f"n{int(a):02d}", f"n{int(b):02d}", 1.0))
+    rows = _order_sensitive_rows()
 
     def membership(rs):
         df = spark.createDataFrame(rs, "src string, dst string, weight double").coalesce(1)
@@ -174,3 +201,61 @@ def test_writeback_and_summaries(spark, planted_edges):
         assert r["n_members"] == 5
         # top members ranked by mention_count desc
         assert r["top_entities"][0] in ("NAME 4", "NAME 9")
+
+
+def _parity_cases():
+    """name -> (edge rows, number of member nodes)."""
+    fwd = _order_sensitive_rows()
+    shuffled = fwd[:]
+    random.Random(7).shuffle(shuffled)
+    multi = [
+        ("a", "b", 3.0), ("b", "a", 1.0), ("b", "c", 2.0), ("c", "c", 5.0),  # multi-edge, loop
+        ("x", "y", 1.0), ("y", "z", 0.5), ("z", "x", 0.25),
+        ("p", "q", 1.0), ("s", "s", 1.0),  # a pure self-loop joins no component
+    ]
+    return {
+        "order_forward": (fwd, 15),
+        "order_reversed": (fwd[::-1], 15),
+        "order_shuffled": (shuffled, 15),
+        "multi_component": (multi, 8),
+        "empty": ([], 0),
+    }
+
+
+def _paths_agree(monkeypatch, df):
+    """detect_communities on the Spark path (driver limit 0: CC, join,
+    applyInPandas) and on the driver path (the default limit) must give the
+    same rows and the same schema, nullability included."""
+    from pyspark.sql.group import GroupedData
+
+    calls = []
+    apply_in_pandas = GroupedData.applyInPandas
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return apply_in_pandas(self, *args, **kwargs)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy)
+    got = {}
+    for path, limit in (("spark", 0), ("driver", graphalgo.LOCAL_EDGE_LIMIT)):
+        monkeypatch.setattr(graphalgo, "LOCAL_EDGE_LIMIT", limit)
+        calls.clear()
+        mem = detect_communities(df)
+        assert bool(calls) == (path == "spark")
+        got[path] = (mem.schema, sorted(tuple(r) for r in mem.collect()))
+    assert got["driver"] == got["spark"]
+    return got["driver"][1]
+
+
+@pytest.mark.spark
+def test_driver_and_spark_paths_agree_on_planted(planted_edges, monkeypatch):
+    rows = _paths_agree(monkeypatch, project_edges(normalize_edge_weights(planted_edges)))
+    assert len(rows) == 10 and len({r[1] for r in rows}) == 2
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("case", sorted(_parity_cases()))
+def test_driver_and_spark_paths_agree(spark, monkeypatch, case):
+    rows, n_nodes = _parity_cases()[case]
+    df = spark.createDataFrame(rows, "src string, dst string, weight double").coalesce(1)
+    assert len(_paths_agree(monkeypatch, df)) == n_nodes

@@ -40,6 +40,20 @@ def test_random_graphs(spark):
 
 
 @pytest.mark.spark
+def test_local_path_counts_from_the_pin(spark, monkeypatch):
+    """The local path reads its edge count from an Observation on the pin,
+    so it runs no separate count() query."""
+    def no_count(self):
+        raise AssertionError("connected_components ran a count() query")
+
+    df = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")], ["u", "v"])
+    monkeypatch.setattr(type(df), "count", no_count)
+    g = nx.Graph([("a", "b"), ("b", "c"), ("x", "y")])
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    assert got == {n: min(c) for c in nx.connected_components(g) for n in c}
+
+
+@pytest.mark.spark
 def test_path_graph_worst_case_diameter(spark):
     _check(spark, [(f"p{i:03d}", f"p{i + 1:03d}") for i in range(40)])
 
