@@ -34,16 +34,6 @@ class ExtractionConfig:
 
 
 @dataclass(frozen=True)
-class SimilarityConfig:
-    # settings.py:168-171
-    similarity_threshold: float = 0.7
-    max_similarity_connections: int = 5
-    # our embedding stand-in (reference: 1536-d ada-002, settings.py:95-97);
-    # tests/bench use a deterministic 32-d hash embedding (FIXTURES.md F5)
-    embedding_dim: int = 32
-
-
-@dataclass(frozen=True)
 class ContentFilterConfig:
     # ingestion/content_filters.py:86-118 constructor defaults
     min_chunk_length: int = 50
@@ -54,23 +44,10 @@ class ContentFilterConfig:
 
 
 @dataclass(frozen=True)
-class ClusteringConfig:
-    # settings.py:431-437
-    resolution: float = 1.0
-    min_edge_weight: float = 0.0
-    default_level: int = 0
-
-
-@dataclass(frozen=True)
 class PipelineConfig:
     chunking: ChunkingConfig = field(default_factory=ChunkingConfig)
     extraction: ExtractionConfig = field(default_factory=ExtractionConfig)
-    similarity: SimilarityConfig = field(default_factory=SimilarityConfig)
     content_filter: ContentFilterConfig = field(default_factory=ContentFilterConfig)
-    clustering: ClusteringConfig = field(default_factory=ClusteringConfig)
-    # scale knobs (ours, not the reference's): partition count for heavy
-    # stages; at cluster scale set to ~2-3x total cores. None → leave to AQE.
-    shuffle_partitions: int | None = None
 
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -29,8 +29,8 @@ with γ = resolution — the same objective igraph maximizes for
 Scale role: this is the per-COMPONENT kernel of
 ``communities.detect_communities``. Graphs of at most
 ``graphalgo.LOCAL_EDGE_LIMIT`` edges run it on the driver after one
-collect; larger graphs run it inside an applyInPandas stage, one group per
-component. The distributed decomposition (connected components first,
+collect; larger graphs run it inside one mapInPandas stage that walks the
+component runs of each key-sorted task. The distributed decomposition (connected components first,
 giants routed to distributed LPA) is what holds at 100 TB; this kernel only
 ever sees one small-enough component.
 """

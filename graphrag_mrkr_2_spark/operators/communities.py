@@ -15,7 +15,8 @@ Spark-first re-architecture:
      graph_clustering.py:78-103; settings.py:434-436).
   G3 clustering: connected components FIRST (distributed, graphalgo.py) —
      at web scale components are overwhelmingly small; each component is
-     then clustered independently inside applyInPandas with a real LEIDEN
+     then clustered independently in one sorted mapInPandas walk (one
+     Python pass per task over its component runs) with a real LEIDEN
      implementation (functions/leiden.py — local moving + refinement +
      aggregation per Traag et al. 2019, modularity objective, seeded
      deterministic; the same algorithm/objective as the reference's igraph
@@ -43,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from . import graphalgo
+from .dedup import sorted_runs
 
 
 def normalize_edge_weights(
@@ -118,11 +120,12 @@ def detect_communities(
     the union-find of connected_components' local path groups the edges by
     component and the per-component kernel runs on each group, as the
     reference clusters its whole graph in one process. Larger graphs go
-    through connected_components, a join and an applyInPandas stage that
-    runs the same kernel; both paths emit the same rows.
+    through connected_components, a join and one mapInPandas stage that
+    walks the component runs of each task (``_cluster_sorted``) and runs
+    the same kernel; both paths emit the same rows.
 
-    Components small enough to fit one executor are clustered inside
-    applyInPandas (modularity — the reference's semantics). Components whose
+    Components small enough to fit one executor are clustered in that
+    stage (modularity — the reference's semantics). Components whose
     edge count exceeds ``max_component_size`` — at web scale exactly the
     giant component that matters most — are routed to distributed weighted
     label propagation (graphalgo.label_propagation) instead of being
@@ -143,18 +146,20 @@ def detect_communities(
     500_000 cap bounds the worst single-task latency near half a minute.
     Raise it if per-component quality on multi-million-edge components is
     worth minutes-long tasks. Whole call, driver path vs Spark path
-    (LOCAL_EDGE_LIMIT=0), pinned and counted:
+    (LOCAL_EDGE_LIMIT=0), input pinned, output pinned and counted; in
+    brackets the Spark path's old per-component applyInPandas stage:
 
-        graph                              10k edges    50k          100k
-        dense, 50-edge components          0.86/2.57    2.78/11.97   4.70/11.80 s
-        dense, one component               0.41/0.87    1.22/1.51    2.13/2.29 s
-        sparse, 2000-edge components           -        2.29/3.18    4.56/5.91 s
-        sparse, one component                  -        3.09/3.89    6.22/6.55 s
+        graph                        10k edges         50k               100k
+        dense, 50-edge components    0.80/1.47 (2.10)  1.89/2.28 (5.17)  2.92/2.76 (5.81) s
+        dense, one component         0.53/1.01 (1.10)  1.60/1.98 (1.88)  3.71/4.22 (4.37) s
+        sparse, 2000-edge components     -             2.16/2.02 (2.71)  3.37/3.11 (5.11) s
+        sparse, one component            -             3.18/3.39 (3.47)  5.71/7.16 (7.07) s
 
-    The driver path wins at every size up to the shared 100k limit: the
-    Spark path's extra jobs and Python-worker start cost more than its
-    parallelism saves, because adaptive execution packs these few MB into
-    one or two tasks.
+    The sorted walk removed the per-component Python call and pandas frame
+    (about 3 ms a component here), so many-component graphs near the 100k limit
+    now cluster as fast on Spark as on the driver; single components and
+    smaller graphs still favour the driver, so the gate stays at the shared
+    limit.
     """
     # one pinned edge table feeds CC, the size gate and the clustering join,
     # so the input lineage runs once instead of once per consumer; the
@@ -176,16 +181,10 @@ def detect_communities(
     cc = graphalgo.connected_components(e, "src", "dst")
     tagged = e.join(cc.withColumnRenamed("node", "src"), "src")
 
-    def _cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = _members(pdf["src"], pdf["dst"], pdf["weight"], resolution, seed)
-        return pd.DataFrame(
-            [(node, cid, level) for node, cid in rows], columns=["node", "community_id", "level"]
-        )
-
     # a component's edges are a subset of all edges, so at or below the cap
     # no component can be giant: skip the size aggregate and its probe job
     if n_edges <= max_component_size:
-        return tagged.groupBy("component").applyInPandas(_cluster, _MEMBERSHIP_SCHEMA)
+        return _cluster_sorted(tagged, resolution, seed, level)
 
     comp_sizes = tagged.groupBy("component").agg(F.count(F.lit(1)).alias("n_edges"))
     tagged = tagged.join(
@@ -196,7 +195,7 @@ def detect_communities(
     )
     small = tagged.where(~F.col("is_giant")).drop("is_giant")
     giant = tagged.where(F.col("is_giant")).drop("is_giant")
-    small_mem = small.groupBy("component").applyInPandas(_cluster, _MEMBERSHIP_SCHEMA)
+    small_mem = _cluster_sorted(small, resolution, seed, level)
 
     # cheap scalar gate: LPA's iterative loop runs actions, so don't enter it
     # when no single component exceeds the cap. Probe comp_sizes, not
@@ -208,7 +207,7 @@ def detect_communities(
 
     lpa = graphalgo.label_propagation(giant, "src", "dst", "weight")
     # community id = hash of the community's min node id (same determinism
-    # contract as _stable_id on the applyInPandas path)
+    # contract as _stable_id on the kernel path)
     anchors = lpa.groupBy("label").agg(F.min("node").alias("anchor"))
     giant_mem = (
         lpa.join(anchors, "label")
@@ -225,8 +224,8 @@ def _members(srcs, dsts, weights, resolution: float, seed: int) -> list[tuple[st
     """One component's edges → [(node, community_id)] by seeded Leiden.
 
     The one per-component kernel of both clustering paths: the driver path
-    and the applyInPandas stage call it on the same edge set and so emit
-    the same rows."""
+    and the Spark path's mapInPandas walk call it on the same edge set and
+    so emit the same rows."""
     # multi-edges within a component: UNDIRECTED key, keep the max
     # weight; without the canonical key, (a,b,3) + (b,a,1) would
     # double-count in the leiden builder
@@ -251,11 +250,47 @@ def _members(srcs, dsts, weights, resolution: float, seed: int) -> list[tuple[st
     return rows
 
 
+def _cluster_sorted(tagged: DataFrame, resolution: float, seed: int, level: int) -> DataFrame:
+    """(src, dst, weight, component) edges → membership in ONE mapInPandas
+    pass: hash-partition and sort by component, then walk the component
+    runs of each task with dedup.sorted_runs and run the kernel on each.
+    A per-component applyInPandas paid a Python call and a pandas frame per
+    group, about 3 ms each on 4 cores — most of the stage when components
+    are tiny (calibration table in detect_communities).
+    The explicit partition count keeps adaptive execution from packing the
+    small shuffle into one or two tasks."""
+    n_shuffle = int(tagged.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    src = (
+        tagged.select("component", "src", "dst", "weight")
+        .repartition(n_shuffle, F.col("component"))
+        .sortWithinPartitions("component")
+    )
+
+    def _run(batches):
+        cols = (
+            (
+                pdf["component"].to_numpy(),
+                (pdf["src"].to_numpy(), pdf["dst"].to_numpy(), pdf["weight"].to_numpy()),
+            )
+            for pdf in batches
+        )
+        rows: list = []
+        for _, edges in sorted_runs(cols):
+            rows.extend(_members(*edges, resolution, seed))
+            if len(rows) >= 4096:
+                yield pd.DataFrame(rows, columns=["node", "community_id"]).assign(level=level)
+                rows = []
+        if rows:
+            yield pd.DataFrame(rows, columns=["node", "community_id"]).assign(level=level)
+
+    return src.mapInPandas(_run, _MEMBERSHIP_SCHEMA)
+
+
 def _cluster_on_driver(rows, resolution: float, seed: int, level: int, spark) -> DataFrame:
     """Collected (src, dst, weight) rows → membership, clustered in this
     process: union-find groups the edges by component (an edge belongs to
     its src's component, as the Spark path's join on src assigns it), and
-    each group runs the same kernel as the applyInPandas stage.
+    each group runs the same kernel as the Spark path's walk.
 
     The result is an Arrow-built LocalRelation with _MEMBERSHIP_SCHEMA, also
     when empty, so reading it starts no Python-worker stage."""

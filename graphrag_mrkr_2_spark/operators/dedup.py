@@ -196,6 +196,62 @@ def ngram_jaccard_pairs(
 
 
 # ---------------------------------------------------------------------------
+# key-sorted run walk (shared by minhash, J1 grams and communities)
+# ---------------------------------------------------------------------------
+
+
+def sorted_runs(batches):
+    """Yield ``(key, columns)`` once per run of equal keys in key-sorted
+    batches — the batch-level group walk every mapInPandas stage over a
+    ``repartition(n, key).sortWithinPartitions(key)`` input shares, so no
+    per-group Python call or pandas frame is paid.
+
+    ``batches`` yields ``(keys, columns)``: a 1-d array of run keys and a
+    tuple of arrays with one row per key (a matrix counts as one array).
+    Each run arrives whole, as that tuple sliced to the run's rows; a run
+    split across Arrow-batch edges is concatenated. Null keys (None or NaN)
+    equal each other and form their own run. A key that comes back after
+    its run ended raises ValueError: the input was not contiguous per key,
+    and walking on would emit that group twice. A seen-set, not a key
+    comparison, detects it, so keys of any hashable type (null included)
+    work.
+    """
+    import numpy as np
+
+    seen: set = set()
+    key = None
+    parts: list = []
+    for keys, cols in batches:
+        n = len(keys)
+        if not n:
+            continue
+        null = pd.isna(keys)
+        edge = np.flatnonzero((keys[1:] != keys[:-1]) & ~(null[1:] & null[:-1])) + 1
+        for s, e in zip([0, *edge.tolist()], [*edge.tolist(), n]):
+            k = None if null[s] else keys[s]
+            piece = tuple(c[s:e] for c in cols)
+            if parts and k == key:
+                parts.append(piece)
+                continue
+            if parts:
+                yield key, _joined(parts)
+                seen.add(key)
+            if k in seen:
+                raise ValueError(f"key {k!r} reappears after its run ended: input not sorted by key")
+            key, parts = k, [piece]
+    if parts:
+        yield key, _joined(parts)
+
+
+def _joined(parts: list) -> tuple:
+    import numpy as np
+
+    if len(parts) == 1:
+        return parts[0]
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+# ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
@@ -260,8 +316,8 @@ def minhash_signatures(
     (whole-stage codegen, one compact-row exchange — see shingle_tokens);
     the k-fold re-hash + per-doc min runs as ONE vectorized numpy
     ``mapInPandas`` stage over the window's doc-sorted output (guide §4.2
-    — a (rows x k) uint64 matrix per Arrow batch, signed-min reduceat per
-    doc run, tail group carried across batch boundaries). The r2-r7 shape
+    — a (rows x k) uint64 matrix per Arrow batch, a signed min per doc run
+    handed over by ``sorted_runs``). The r2-r7 shape
     ran k min(xxhash64(h, i)) aggregates in a groupBy — 64 per-row
     aggregate expression evaluations outside any vectorization, measured
     r8 at 3.1-3.4 s vs 0.95 s for this stage at sf0.1/local[32] with
@@ -281,45 +337,70 @@ def minhash_signatures(
     )
 
     def _run(batches):
-        started = False
-        pend_doc = None
-        pend_min = None
+        # one vectorized re-hash per Arrow batch; the walk hands each doc's
+        # rows of the (rows x k) matrix over once, split batches joined
+        hashed = (
+            (
+                pdf["doc"].to_numpy(),
+                (_xxhash64_rehash_matrix(pdf["h"].to_numpy(dtype=np.int64), num_hashes),),
+            )
+            for pdf in batches
+        )
         out_docs: list = []
         out_sigs: list = []
-
-        def flush():
-            out_docs.append(pend_doc)
-            out_sigs.append(pend_min.tolist())
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            docs = pdf["doc"].to_numpy()
-            hh = _xxhash64_rehash_matrix(
-                pdf["h"].to_numpy(dtype=np.int64), num_hashes
-            )
-            change = np.flatnonzero(docs[1:] != docs[:-1]) + 1
-            bounds = np.concatenate(([0], change, [len(docs)]))
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                d = docs[s]
-                m = hh[s:e].min(axis=0)
-                if started and d == pend_doc:
-                    pend_min = np.minimum(pend_min, m)
-                else:
-                    if started:
-                        flush()
-                    started = True
-                    pend_doc = d
-                    pend_min = m
+        for doc, (hh,) in sorted_runs(hashed):
+            out_docs.append(doc)
+            out_sigs.append(hh.min(axis=0).tolist())
             if len(out_docs) >= 512:
                 yield pd.DataFrame({"doc": out_docs, "signature": out_sigs})
                 out_docs, out_sigs = [], []
-        if started:
-            flush()
         if out_docs:
             yield pd.DataFrame({"doc": out_docs, "signature": out_sigs})
 
     return toks.mapInPandas(_run, f"doc {id_type}, signature array<long>")
+
+
+def _minhash_buckets(sigs: DataFrame, key: str, bands: int, rows: int) -> DataFrame:
+    """(id, band, bucket) rows of a (key, signature) frame: band b's bucket
+    is xxhash64 of its ``rows`` signature slots joined by ','."""
+    return sigs.select(
+        F.col(key).alias("id"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            F.concat_ws(
+                                ",",
+                                *[F.col("signature")[b * rows + j].cast("string") for j in range(rows)],
+                            )
+                        ).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("id", "bb.band", "bb.bucket")
+
+
+def band_pairs(buckets: DataFrame) -> DataFrame:
+    """Undirected candidate pairs (id1 < id2) of an (id, band, bucket)
+    frame: ids sharing a bucket in at least one band. The one banded-LSH
+    self-join of minhash, hyperplane and ER blocking — an equi-join keyed
+    by (band, bucket), one shuffle, AQE covers bucket skew; ``distinct``
+    folds pairs that collide in several bands."""
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+        .distinct()
+    )
 
 
 def minhash_lsh_pairs(
@@ -351,37 +432,8 @@ def minhash_lsh_pairs(
         eager=True
     )
 
-    band_entries = sigs.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[F.col("signature")[b * r + j].cast("string") for j in range(r)],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
-
-    a = band_entries.alias("a")
-    b = band_entries.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc1"), F.col("b.doc").alias("doc2"))
-        .distinct()
+    candidates = band_pairs(_minhash_buckets(sigs, "doc", bands, r)).select(
+        F.col("id1").alias("doc1"), F.col("id2").alias("doc2")
     )
     if not verify:
         return candidates
@@ -546,14 +598,6 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
 def _multiband_hyperplane_buckets(
     df: DataFrame,
     id_col: str,
@@ -625,58 +669,32 @@ def embedding_near_dupes(
     method="exact": the quadratic self-join — the correctness baseline for
     tests and small n (tests assert lsh ≡ exact on planted fixtures).
     """
-    v = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    )
-    cos = _dot(F.col("a.vec"), F.col("b.vec")) / (
-        _norm(F.col("a.vec")) * _norm(F.col("b.vec"))
-    )
+    from .ann import _as_double, _dot, _norm
+
+    v = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec"))
     if method == "exact":
         a, b = v.alias("a"), v.alias("b")
-        return (
-            a.join(b, F.col("a.id") < F.col("b.id"))
-            .select(
-                F.col("a.id").alias("id1"),
-                F.col("b.id").alias("id2"),
-                cos.alias("cosine"),
-            )
-            .where(F.col("cosine") >= threshold)
+        pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
+            F.col("a.id").alias("id1"),
+            F.col("b.id").alias("id2"),
+            F.col("a.vec").alias("v1"),
+            F.col("b.vec").alias("v2"),
         )
-    if method != "lsh":
+    elif method == "lsh":
+        # checkpoint: the banded self-join reads this from both sides —
+        # without it the hyperplane-projection UDF ran twice per call (r8)
+        bb = _multiband_hyperplane_buckets(
+            df, id_col, vec_col, bands, planes_per_band, seed
+        ).localCheckpoint(eager=True)
+        pairs = (
+            band_pairs(bb)
+            .join(v.select(F.col("id").alias("id1"), F.col("vec").alias("v1")), "id1")
+            .join(v.select(F.col("id").alias("id2"), F.col("vec").alias("v2")), "id2")
+        )
+    else:
         raise ValueError(f"unknown method {method!r} (use 'lsh' or 'exact')")
-
-    # checkpoint: the banded self-join reads this from both sides — without
-    # it the hyperplane-projection UDF ran twice per call (r8)
-    bb = _multiband_hyperplane_buckets(
-        df, id_col, vec_col, bands, planes_per_band, seed
-    ).localCheckpoint(eager=True)
-    ba, bcol = bb.alias("ba"), bb.alias("bb")
-    candidates = (
-        ba.join(
-            bcol,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.bucket") == F.col("bb.bucket"))
-            & (F.col("ba.id") < F.col("bb.id")),
-        )
-        .select(F.col("ba.id").alias("id1"), F.col("bb.id").alias("id2"))
-        .distinct()
-    )
-    return (
-        candidates.join(
-            v.select(F.col("id").alias("id1"), F.col("vec").alias("v1")), "id1"
-        )
-        .join(v.select(F.col("id").alias("id2"), F.col("vec").alias("v2")), "id2")
-        .select(
-            "id1",
-            "id2",
-            (
-                _dot(F.col("v1"), F.col("v2"))
-                / (_norm(F.col("v1")) * _norm(F.col("v2")))
-            ).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    cos = _dot(F.col("v1"), F.col("v2")) / (_norm(F.col("v1")) * _norm(F.col("v2")))
+    return pairs.select("id1", "id2", cos.alias("cosine")).where(F.col("cosine") >= threshold)
 
 
 def pick_representatives(

@@ -13,8 +13,10 @@ Beyond", SoCC'14) as a DataFrame loop:
 
 Each round is two hash aggregations + a join; converges in O(log n) rounds
 even on path graphs. Works on any orderable id type (we use the node id
-strings directly — no global re-indexing shuffle needed). Every k rounds the
-edge list is localCheckpoint()-ed to truncate lineage.
+strings directly — no global re-indexing shuffle needed). Every round's
+edge list is localCheckpoint()-ed to truncate lineage (the convergence
+check is an action, so an unpinned loop would recompute the whole upstream
+plan each round).
 """
 
 from __future__ import annotations

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ann import _as_double, _dot, _norm
+from .dedup import _minhash_buckets, band_pairs, char_ngram_tokens
 from .graphalgo import connected_components
 
 
@@ -56,8 +58,6 @@ def candidate_pairs(
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    from .dedup import char_ngram_tokens
-
     toks = char_ngram_tokens(entities, id_col, name_col, n)
     sigs = (
         toks.groupBy("id")
@@ -77,36 +77,7 @@ def candidate_pairs(
         # twice (same finding as minhash_lsh_pairs). Rows are (id, k longs).
         .localCheckpoint(eager=True)
     )
-    band_entries = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[F.col("signature")[b * r + j].cast("string") for j in range(r)],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    a, b = band_entries.alias("a"), band_entries.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
-    )
+    return band_pairs(_minhash_buckets(sigs, "id", bands, r))
 
 
 def score_pairs(
@@ -126,7 +97,7 @@ def score_pairs(
     """
     cols = [F.col(id_col).alias("id"), _char_ngrams_expr(F.col(name_col), n).alias("grams")]
     if vec_col:
-        cols.append(F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"))
+        cols.append(_as_double(F.col(vec_col)).alias("vec"))
     g = entities.select(*cols)
 
     def _side(side: str) -> DataFrame:
@@ -146,20 +117,8 @@ def score_pairs(
     )
     out_cols = ["id1", "id2", "jaccard"]
     if vec_col:
-        dot = F.aggregate(
-            F.zip_with(F.col("v_id1"), F.col("v_id2"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-        def norm(c):
-            return F.sqrt(
-                F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-            )
-
-        scored = scored.withColumn(
-            "cosine", dot / (norm(F.col("v_id1")) * norm(F.col("v_id2")))
-        )
+        v1, v2 = F.col("v_id1"), F.col("v_id2")
+        scored = scored.withColumn("cosine", _dot(v1, v2) / (_norm(v1) * _norm(v2)))
         out_cols.append("cosine")
     return scored.select(*out_cols)
 

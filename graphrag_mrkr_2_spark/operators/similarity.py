@@ -14,14 +14,13 @@ Reference semantics:
 
 Spark shape: a within-document self-join is shuffle-partitioned by
 document_id (docs are small → no skew blowup); the global entity variant is
-quadratic and therefore gated behind LSH bucketing (bucket column from
-ann.hyperplane_buckets) — at 10^12 docs J1 stays per-doc (linear), J2 runs
-bucketed.
+quadratic and therefore gated behind banded random-hyperplane LSH
+(dedup._multiband_hyperplane_buckets → dedup.band_pairs; a precomputed
+bucket column, e.g. from ann.hyperplane_buckets, can replace it) — at 10^12
+docs J1 stays per-doc (linear), J2 runs bucketed.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -30,6 +29,8 @@ from pyspark.sql.types import ArrayType, FloatType
 from pyspark.sql.window import Window
 
 from ..functions.embeddings import DEFAULT_DIM, pseudo_embed_many
+from .ann import _as_double, _dot, _norm
+from .dedup import _multiband_hyperplane_buckets, band_pairs, sorted_runs
 
 
 def with_embeddings(
@@ -43,20 +44,6 @@ def with_embeddings(
         return pd.Series(list(mat))
 
     return df.withColumn(out_col, _embed(F.col(text_col)))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
-def _cosine(a, b):
-    da = F.transform(a, lambda x: x.cast("double"))
-    db = F.transform(b, lambda x: x.cast("double"))
-    return _dot(da, db) / (_norm(da) * _norm(db))
 
 
 def chunk_similarity_edges(
@@ -79,10 +66,11 @@ def chunk_similarity_edges(
     right = chunks.select(
         F.col(doc_col).alias("doc"), F.col(id_col).alias("dst"), F.col(vec_col).alias("v2")
     )
+    v1, v2 = _as_double(F.col("v1")), _as_double(F.col("v2"))
     pairs = (
         left.join(right, "doc")
         .where(F.col("src") != F.col("dst"))
-        .withColumn("score", _cosine(F.col("v1"), F.col("v2")))
+        .withColumn("score", _dot(v1, v2) / (_norm(v1) * _norm(v2)))
         .where(F.col("score") >= threshold)
     )
     w = Window.partitionBy("doc", "src").orderBy(F.desc("score"), F.asc("dst"))
@@ -117,8 +105,9 @@ def chunk_similarity_edges_grams(
     interpreted per-pair array folds (~10× at bench scale).
 
     Physical shape (r8): repartition by document + sortWithinPartitions +
-    ONE ``mapInPandas`` pass that walks document groups inside each Arrow
-    batch (carrying the split tail group across batch boundaries). The
+    ONE ``mapInPandas`` pass that walks document runs across the Arrow
+    batches with ``dedup.sorted_runs`` (a document split across a batch
+    edge arrives whole; one that recurs unsorted raises). The
     r3-r7 ``groupBy(doc).applyInPandas`` shape paid a per-GROUP Python
     call + pandas-frame construction for every document — at web scale
     documents are tiny groups, and that per-group overhead dominated the
@@ -162,50 +151,21 @@ def chunk_similarity_edges_grams(
             out.append((doc, k[0], k[1], v[0], v[1]))
 
     def _run(batches):
-        # one task handles MANY documents: groups are contiguous because the
-        # input is hash-partitioned AND sorted by doc; a group split across
-        # two Arrow batches is carried over in pend_* until the doc changes
-        pend_doc = None
-        pend_ids: list = []
-        pend_vecs: list = []
-        started = False
-
-        def flush(out):
-            _gram_rows(pend_doc, pend_ids, pend_vecs, out)
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            docs = pdf[doc_col].to_numpy()
-            ids_col = pdf[id_col]
-            vec_col_s = pdf[vec_col]
-            out: list[tuple] = []
-            start = 0
-            for k in range(1, len(docs) + 1):
-                if k == len(docs) or docs[k] != docs[start]:
-                    d = docs[start]
-                    if started and d == pend_doc:
-                        pend_ids.extend(ids_col.iloc[start:k])
-                        pend_vecs.extend(vec_col_s.iloc[start:k])
-                    else:
-                        if started:
-                            flush(out)
-                        started = True
-                        pend_doc = d
-                        pend_ids = list(ids_col.iloc[start:k])
-                        pend_vecs = list(vec_col_s.iloc[start:k])
-                    start = k
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["document_id", "id1", "id2", "score", "rank"]
-                )
-        if started:
-            out = []
-            flush(out)
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["document_id", "id1", "id2", "score", "rank"]
-                )
+        # one task handles MANY documents: runs are contiguous because the
+        # input is hash-partitioned AND sorted by doc
+        cols = (
+            (pdf[doc_col].to_numpy(), (pdf[id_col].to_numpy(), pdf[vec_col].to_numpy()))
+            for pdf in batches
+        )
+        names = ["document_id", "id1", "id2", "score", "rank"]
+        out: list[tuple] = []
+        for doc, (ids, vecs) in sorted_runs(cols):
+            _gram_rows(doc, list(ids), vecs, out)
+            if len(out) >= 4096:
+                yield pd.DataFrame(out, columns=names)
+                out = []
+        if out:
+            yield pd.DataFrame(out, columns=names)
 
     # explicit partition count: the per-row payload here is tiny (id + a
     # 32-float vector), so an AQE-coalescible un-numbered repartition would
@@ -255,43 +215,41 @@ def entity_similarity_edges(
     )
     v = nodes.select(*cols)
     a, b = v.alias("a"), v.alias("b")
-    cond = F.col("a.id") != F.col("b.id")
+    lt = F.col("a.id") < F.col("b.id")
     if bucket_col:
-        join = a.join(b, F.col("a.b") == F.col("b.b")).where(cond)
+        join = a.join(b, (F.col("a.b") == F.col("b.b")) & lt)
     elif method == "exact":
-        join = a.crossJoin(b).where(cond)
+        join = a.crossJoin(b).where(lt)
     elif method == "lsh":
-        from .dedup import _multiband_hyperplane_buckets
-
         bb = _multiband_hyperplane_buckets(
             nodes, id_col, vec_col, bands, planes_per_band, seed
         ).localCheckpoint(eager=True)  # read from both band-join sides (r8)
-        cand = (
-            bb.alias("ba")
-            .join(
-                bb.alias("bb"),
-                (F.col("ba.band") == F.col("bb.band"))
-                & (F.col("ba.bucket") == F.col("bb.bucket"))
-                & (F.col("ba.id") != F.col("bb.id")),
-            )
-            .select(F.col("ba.id").alias("cid1"), F.col("bb.id").alias("cid2"))
-            .distinct()
-        )
         join = (
-            cand.join(v.select(F.col("id").alias("cid1"), F.col("v").alias("v1")), "cid1")
-            .join(v.select(F.col("id").alias("cid2"), F.col("v").alias("v2")), "cid2")
+            band_pairs(bb)
+            .join(v.select(F.col("id").alias("id1"), F.col("v").alias("v1")), "id1")
+            .join(v.select(F.col("id").alias("id2"), F.col("v").alias("v2")), "id2")
             .select(
-                F.struct(F.col("cid1").alias("id"), F.col("v1").alias("v")).alias("a"),
-                F.struct(F.col("cid2").alias("id"), F.col("v2").alias("v")).alias("b"),
+                F.struct(F.col("id1").alias("id"), F.col("v1").alias("v")).alias("a"),
+                F.struct(F.col("id2").alias("id"), F.col("v2").alias("v")).alias("b"),
             )
         )
     else:
         raise ValueError(f"unknown method {method!r} (use 'lsh' or 'exact')")
-    pairs = join.select(
-        F.col("a.id").alias("src"),
-        F.col("b.id").alias("dst"),
-        _cosine(F.col("a.v"), F.col("b.v")).alias("similarity"),
-    ).where(F.col("similarity") >= threshold)
+    # each undirected pair is scored once, then mirrored so both endpoints
+    # rank it: the cosine fold is symmetric bit for bit
+    va, vb = _as_double(F.col("a.v")), _as_double(F.col("b.v"))
+    sim = (_dot(va, vb) / (_norm(va) * _norm(vb))).alias("similarity")
+    scored = join.select(F.col("a.id").alias("a"), F.col("b.id").alias("b"), sim).where(
+        F.col("similarity") >= threshold
+    )
+    pairs = scored.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("src"), F.col("b").alias("dst"), "similarity"),
+                F.struct(F.col("b").alias("src"), F.col("a").alias("dst"), "similarity"),
+            )
+        ).alias("e")
+    ).select("e.*")
     w = Window.partitionBy("src").orderBy(F.desc("similarity"), F.asc("dst"))
     ranked = pairs.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= max_connections

@@ -38,7 +38,7 @@ Orphan entities (C5, entity_graph.py:292-341): the batch path does not
 union orphan rows into entities_doc, because the X10 endpoint check leaves
 none. consolidate_relationships_per_doc keeps a relationship only if both
 upper(trim()) endpoint keys are in its document's entity name set
-(triples.py:543-544), and orphan_entities_per_doc anti-joins on that same
+(triples.py:371-376), and orphan_entities_per_doc anti-joins on that same
 key against that same entities_doc. orphan_entities_per_doc stays as the C5
 operator for relationships that skip the endpoint check.
 
@@ -396,7 +396,7 @@ def orphan_entities_per_doc(
     """C5 — endpoints that resolve to no entity by name become orphan rows
     (type '', importance 0, mention_count 0, is_orphan=true;
     entity_graph.py:292-341). Empty by construction after the consolidation
-    endpoint check (triples.py:543-544), so ``canonicalize`` does not call
+    endpoint check (triples.py:371-376), so ``canonicalize`` does not call
     it; real for the direct-persistence path and exercised by the F4
     fixtures.
     """
@@ -436,7 +436,7 @@ def canonicalize(
 
     entities_doc carries ``is_orphan = False`` on every row and no C5
     orphan rows are unioned in: the X10 endpoint check
-    (triples.py:543-544) drops every relationship whose source or target
+    (triples.py:371-376) drops every relationship whose source or target
     key is missing from the document's gated entity set, so
     ``orphan_entities_per_doc(rels_doc, entities_doc)`` is empty by
     construction, and unioning it in would re-run the relationship

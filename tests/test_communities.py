@@ -76,15 +76,17 @@ def test_two_planted_communities(planted_edges):
 @pytest.mark.spark
 def test_small_graph_clusters_without_python_workers(planted_edges, monkeypatch):
     """21 edges, under both the cap and the driver limit: the graph is
-    collected and clustered in the driver, so no applyInPandas stage (and
-    no Python worker) is planned."""
+    collected and clustered in the driver, so no mapInPandas or
+    applyInPandas stage (and no Python worker) is planned."""
     from pyspark.sql.group import GroupedData
 
     def no_workers(self, *args, **kwargs):
-        raise AssertionError("applyInPandas planned on a small graph")
+        raise AssertionError("Python-worker stage planned on a small graph")
 
+    pe = project_edges(normalize_edge_weights(planted_edges))
     monkeypatch.setattr(GroupedData, "applyInPandas", no_workers)
-    mem = detect_communities(project_edges(normalize_edge_weights(planted_edges)))
+    monkeypatch.setattr(type(pe), "mapInPandas", no_workers)
+    mem = detect_communities(pe)
     comms = {}
     for r in mem.collect():
         comms.setdefault(r["community_id"], set()).add(r["node"])
@@ -224,18 +226,16 @@ def _parity_cases():
 
 def _paths_agree(monkeypatch, df):
     """detect_communities on the Spark path (driver limit 0: CC, join,
-    applyInPandas) and on the driver path (the default limit) must give the
-    same rows and the same schema, nullability included."""
-    from pyspark.sql.group import GroupedData
-
+    one sorted mapInPandas walk) and on the driver path (the default limit)
+    must give the same rows and the same schema, nullability included."""
     calls = []
-    apply_in_pandas = GroupedData.applyInPandas
+    map_in_pandas = type(df).mapInPandas
 
     def spy(self, *args, **kwargs):
         calls.append(1)
-        return apply_in_pandas(self, *args, **kwargs)
+        return map_in_pandas(self, *args, **kwargs)
 
-    monkeypatch.setattr(GroupedData, "applyInPandas", spy)
+    monkeypatch.setattr(type(df), "mapInPandas", spy)
     got = {}
     for path, limit in (("spark", 0), ("driver", graphalgo.LOCAL_EDGE_LIMIT)):
         monkeypatch.setattr(graphalgo, "LOCAL_EDGE_LIMIT", limit)

@@ -377,3 +377,53 @@ def test_minhash_signatures_match_jvm_aggregate_form(spark):
     sdf = df.select(F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text")
     srows = minhash_signatures(sdf, num_hashes=4).collect()
     assert srows and all(isinstance(r["doc"], str) for r in srows)
+
+
+def _walk(batches):
+    """sorted_runs over pandas batches of (k, v): [(key, [v...])]."""
+    from graphrag_mrkr_2_spark.operators.dedup import sorted_runs
+
+    cols = ((pdf["k"].to_numpy(), (pdf["v"].to_numpy(),)) for pdf in batches)
+    return [(k, list(v)) for k, (v,) in sorted_runs(cols)]
+
+
+def _batches(*keys_per_batch):
+    import pandas as pd
+
+    out, i = [], 0
+    for keys in keys_per_batch:
+        out.append(pd.DataFrame({"k": pd.Series(keys, dtype=object), "v": range(i, i + len(keys))}))
+        i += len(keys)
+    return out
+
+
+def test_sorted_runs_joins_runs_across_batch_edges():
+    assert _walk(_batches(["a", "a"], ["a", "b"], ["b"])) == [("a", [0, 1, 2]), ("b", [3, 4])]
+
+
+def test_sorted_runs_rejects_a_key_after_its_run():
+    with pytest.raises(ValueError, match="reappears"):
+        _walk(_batches(["a", "b"], ["a"]))
+    with pytest.raises(ValueError, match="reappears"):
+        _walk(_batches(["a", "b", "a"]))
+
+
+def test_sorted_runs_empty_batch_changes_nothing():
+    plain = _walk(_batches(["a", "a"], ["a", "b"], ["b"]))
+    assert _walk(_batches(["a", "a"], [], ["a", "b"], [], ["b"])) == plain
+    assert _walk(_batches([], [])) == []
+
+
+def test_sorted_runs_null_key_is_its_own_run():
+    assert _walk(_batches(["a", None], [None, "b"])) == [("a", [0]), (None, [1, 2]), ("b", [3])]
+    # float keys: pandas turns a null long into NaN, which must still run
+    import numpy as np
+
+    from graphrag_mrkr_2_spark.operators.dedup import sorted_runs
+
+    keys = [np.array([1.0, np.nan]), np.array([np.nan, 2.0])]
+    got = [(k, list(v)) for k, (v,) in sorted_runs((k, (k,)) for k in keys)]
+    assert [k for k, _ in got] == [1.0, None, 2.0] and len(got[1][1]) == 2
+    # a null run that comes back is out of order too
+    with pytest.raises(ValueError):
+        _walk(_batches([None, "a"], [None]))
