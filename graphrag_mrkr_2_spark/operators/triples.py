@@ -572,10 +572,12 @@ def build_edges(
 
 
 def build_triples(edges: DataFrame) -> DataFrame:
-    """(subj, pred, obj) — the P/R comparison surface (BASELINE.json)."""
-    return edges.select(
-        F.col("subj"), F.col("rel_type").alias("pred"), F.col("obj")
-    ).distinct()
+    """(subj, pred, obj) — the P/R comparison surface (BASELINE.json).
+
+    ``edges`` must be ``build_edges`` output, which is already unique on
+    (subj, obj, rel_type): it groups by that key and left-joins provenance
+    grouped by the same key. So no ``distinct`` (and no extra job) here."""
+    return edges.select(F.col("subj"), F.col("rel_type").alias("pred"), F.col("obj"))
 
 
 def mentions_table(entities_doc: DataFrame) -> DataFrame:

@@ -353,3 +353,75 @@ def test_build_nodes_independent_of_row_order(spark):
     assert nodes(rows[::-1]) == forward
     assert nodes(shuffled) == forward
     assert [d for _, d, _, _ in forward] == ["desc zz", "desc zz"]
+
+
+UNICODE_NAMES = ["İstanbul Port", "Iñigo Labs", "ΟΔΟΣ", "Straße AG", "ǅemal", "Admin Panel"]
+
+
+def _case_variants(name):
+    return [name, name.upper(), name.lower(), name.title(), f"{name} "]
+
+
+@pytest.mark.spark
+def test_unicode_keys_match_python_case_mapping(spark):
+    """entity_id and the per-document merge key agree with Python's
+    locale-free case mapping on non-ASCII names (dotted capital I, ñ, final
+    sigma, ß → SS, the titlecase digraph ǅ): every variant's id is
+    normalize.entity_id, and one document's variants merge as
+    ``name.strip().upper()`` groups them. The session maps case on the JVM
+    path, not ICU, unless the driver's locale tailors case mapping.
+
+    Stage 1 of the merge keys on lower(name) and stage 2 on the
+    upper(trim(name)) of one representative, chosen by row order (ROADMAP
+    D6). Where one lower key spans two upper keys ("İ" U+0130 lowers to
+    "i" + U+0307, which uppers to "I" + U+0307), which upper group it joins
+    depends on that choice, so those groups are checked by their total
+    mention count only."""
+    from collections import Counter, defaultdict
+
+    from graphrag_mrkr_2_spark.functions.normalize import entity_id
+    from graphrag_mrkr_2_spark.operators.triples import (
+        MENTION_SCHEMA,
+        build_nodes,
+        canonicalize,
+    )
+    from graphrag_mrkr_2_spark.session import needs_icu_case_mapping
+
+    language = spark.sparkContext._jvm.java.util.Locale.getDefault().getLanguage()
+    if not needs_icu_case_mapping(language):
+        assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+
+    variants = sorted({v for n in UNICODE_NAMES for v in _case_variants(n)})
+
+    def nodes(doc_of):
+        rows = [
+            ("entity", f"c{i}", doc_of(i), v, "CONCEPT", None, "d", 0.8, None, [f"c{i}"])
+            for i, v in enumerate(variants)
+        ]
+        entities_doc, _ = canonicalize(spark.createDataFrame(rows, MENTION_SCHEMA))
+        return build_nodes(entities_doc).collect()
+
+    # every variant in its own document: one node per distinct name
+    per_name = nodes(lambda i: f"d{i}")
+    assert sorted(r["name"] for r in per_name) == variants
+    for r in per_name:
+        assert r["entity_id"] == entity_id(r["name"]), r["name"]
+
+    # all variants in one document: one node per Python upper(strip) group
+    upper_keys_of = defaultdict(set)
+    for v in variants:
+        upper_keys_of[v.lower()].add(v.strip().upper())
+    ambiguous = set().union(*(ks for ks in upper_keys_of.values() if len(ks) > 1))
+    assert ambiguous == {"İSTANBUL PORT", "İSTANBUL PORT".lower().upper()}
+
+    def group(name):
+        k = name.strip().upper()
+        return "ambiguous" if k in ambiguous else k
+
+    merged = nodes(lambda i: "d0")
+    mentions = Counter()
+    for r in merged:
+        mentions[group(r["name"])] += r["mention_count"]
+    assert mentions == Counter(group(v) for v in variants)
+    exact = [group(r["name"]) for r in merged if group(r["name"]) != "ambiguous"]
+    assert len(exact) == len(set(exact))  # one node per upper(strip) group
