@@ -15,51 +15,30 @@ break-iterator data. On a 4-core box that first call over 20k rows took
 1.85-2.19 s in a fresh ``local[4]`` session against 0.45-0.48 s on the JVM
 path, and ICU frames were 13% of the CPU samples of a cold
 ``mentions_graph`` build; warm, the two paths cost the same.
-``case_mapping_conf`` switches the sessions this package creates to
-``UTF8String``'s ASCII fast path and ``String.toLowerCase``/``toUpperCase``.
+``get_spark`` sets ``spark.sql.icu.caseMappings.enabled=false``, so
+``lower``/``upper`` take ``UTF8String``'s ASCII fast path or
+``String.toLowerCase``/``toUpperCase``.
 
 On an ``en`` JVM both paths and Python's ``str.lower``/``str.upper`` agree on
 ``İstanbul``, ``Iñigo``, ``ΟΔΟΣ``, ``Straße`` and ``ǅemal``. Two limits:
 
-- ``String`` depends on the JVM's default locale for Turkish, Azerbaijani
-  and Lithuanian, so under those languages ICU stays on and nothing changes.
-  Spark's ICU path follows the default locale too (``Iñigo`` lowers to
-  ``ıñigo`` on both paths under ``tr``), so keys there are locale-tailored
-  either way. Only the driver's locale is checked: executors are assumed to
-  run under the same locale as the driver.
+- Keys depend on the JVM's default locale, on either path: under a Turkish
+  or Azerbaijani locale ``Iñigo`` lowers to ``ıñigo`` with ICU on and off,
+  and Lithuanian tailors ``Ì`` the same way on both. Executors are assumed
+  to run under one locale.
 - The JVM path uses the JDK's Unicode tables (Unicode 13 on Java 17; ICU 77
   has Unicode 16). Letters given case pairs since then, such as ``Ⱟ``
   (U+2C2F) and ``Ꟁ`` (U+A7C0), are left as they are, so their ids differ
-  from ``normalize.entity_id`` on Python 3.11 (Unicode 14).
+  from ``normalize.entity_id`` on Python 3.11 (Unicode 14). This is accepted
+  for the cold-start saving and pinned by
+  ``tests/test_canonicalize.py::test_unicode_keys_match_python_case_mapping``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
-
-# Languages whose java.lang.String case mapping differs from the locale-free one.
-_LOCALE_CASED_LANGUAGES = frozenset({"tr", "az", "lt"})
-
-
-def needs_icu_case_mapping(language: str) -> bool:
-    """True when a JVM whose default locale has this ISO 639 language tag
-    would map case differently from the locale-free (ICU root) mapping."""
-    return language in _LOCALE_CASED_LANGUAGES
-
-
-def case_mapping_conf(sc: SparkContext) -> dict[str, str]:
-    """Session conf that turns ICU case mapping off, or ``{}`` when the
-    driver JVM's locale needs it (see the module docstring). Pass it to the
-    session builder: ``spark.conf.set`` on a live session would build the
-    session state there and then (about 0.35 s), which the first query
-    otherwise pays."""
-    language = sc._jvm.java.util.Locale.getDefault().getLanguage()
-    if needs_icu_case_mapping(language):
-        return {}
-    return {"spark.sql.icu.caseMappings.enabled": "false"}
 
 
 def get_spark(
@@ -73,24 +52,26 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else 32
 
-    conf = {
-        "spark.app.name": app_name,
-        "spark.master": master,
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+    builder = (
+        SparkSession.builder.appName(app_name)
+        .master(master)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime coalescing, skew-join splitting — core of the
         # skew story at web scale (SURVEY §4)
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow transport for every pandas UDF / mapInPandas stage
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # big HTML blobs: keep scan partitions bounded
-        "spark.sql.files.maxPartitionBytes": "128m",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        "spark.ui.enabled": "false",
-        "spark.sql.session.timeZone": "UTC",
-        **(extra_conf or {}),
-    }
-    sc = SparkContext.getOrCreate(SparkConf().setAll(conf.items()))
-    return SparkSession.builder.config(map={**case_mapping_conf(sc), **conf}).getOrCreate()
+        .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.session.timeZone", "UTC")
+        # JVM case mapping, not ICU: skips ICU's one-time init (module docstring)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+    )
+    for k, v in (extra_conf or {}).items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()

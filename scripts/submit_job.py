@@ -67,14 +67,15 @@ def main() -> int:
     args = ap.parse_args()
 
     # imports AFTER argparse so --help works without the zip on sys.path
-    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
-    from graphrag_mrkr_2_spark.session import case_mapping_conf
-
-    # not get_spark: its master would override spark-submit's --master
-    sc = SparkContext.getOrCreate(SparkConf().setAppName("kg-construct"))
-    spark = SparkSession.builder.config(map=case_mapping_conf(sc)).getOrCreate()
+    # not get_spark: its master would override spark-submit's --master.
+    # JVM case mapping as in get_spark (graphrag_mrkr_2_spark/session.py)
+    spark = (
+        SparkSession.builder.appName("kg-construct")
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline

@@ -1,6 +1,8 @@
 """F4 canonicalization/dedup cases (mirrors reference test_entity_graph.py)
 against BOTH the sequential port and the Spark aggregations."""
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -369,7 +371,12 @@ def test_unicode_keys_match_python_case_mapping(spark):
     sigma, ß → SS, the titlecase digraph ǅ): every variant's id is
     normalize.entity_id, and one document's variants merge as
     ``name.strip().upper()`` groups them. The session maps case on the JVM
-    path, not ICU, unless the driver's locale tailors case mapping.
+    path, not ICU.
+
+    Expected divergence: the JVM path uses Java 17's Unicode 13 tables, so
+    "Ⱟ" (U+2C2F) and "Ꟁ" (U+A7C0), lowercased only since Unicode 14, keep
+    their case and their Spark id is md5 of the unlowered name, not
+    normalize.entity_id. A JDK upgrade or ICU turned back on fails here.
 
     Stage 1 of the merge keys on lower(name) and stage 2 on the
     upper(trim(name)) of one representative, chosen by row order (ROADMAP
@@ -385,11 +392,8 @@ def test_unicode_keys_match_python_case_mapping(spark):
         build_nodes,
         canonicalize,
     )
-    from graphrag_mrkr_2_spark.session import needs_icu_case_mapping
 
-    language = spark.sparkContext._jvm.java.util.Locale.getDefault().getLanguage()
-    if not needs_icu_case_mapping(language):
-        assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
 
     variants = sorted({v for n in UNICODE_NAMES for v in _case_variants(n)})
 
@@ -425,3 +429,17 @@ def test_unicode_keys_match_python_case_mapping(spark):
     assert mentions == Counter(group(v) for v in variants)
     exact = [group(r["name"]) for r in merged if group(r["name"]) != "ambiguous"]
     assert len(exact) == len(set(exact))  # one node per upper(strip) group
+
+    # letters lowercased only since Unicode 14 stay as they are on Java 17
+    unlowered = ["Ⱟ", "Ꟁ"]
+    rows = [
+        ("entity", f"c{i}", f"d{i}", v, "CONCEPT", None, "d", 0.8, None, [f"c{i}"])
+        for i, v in enumerate(unlowered)
+    ]
+    entities_doc, _ = canonicalize(spark.createDataFrame(rows, MENTION_SCHEMA))
+    ids = {r["name"]: r["entity_id"] for r in build_nodes(entities_doc).collect()}
+    assert sorted(ids) == sorted(unlowered)
+    for name, eid in ids.items():
+        assert name.lower() != name  # Python (Unicode 14+) lowers it
+        assert eid == hashlib.md5(name.encode()).hexdigest()[:16], name
+        assert eid != entity_id(name), name
