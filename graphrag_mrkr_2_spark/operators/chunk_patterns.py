@@ -57,9 +57,11 @@ from pyspark.sql.window import Window
 
 __all__ = ["ChunkPattern", "BUILTIN_PATTERNS", "chunk_suggestions"]
 
-# (?U) = Java UNICODE_CHARACTER_CLASS, so \s matches NBSP & friends like
-# Python's str.strip()/re \s in the reference learner (parity on scraped text)
-_STRIP_RE = r"(?U)^\s+|\s+$"
+# Python's str.strip() as a regex (parity on scraped text): (?U) = Java
+# UNICODE_CHARACTER_CLASS, so \s matches NBSP & friends, and str.isspace()
+# also holds for the separators U+001C-U+001F. Spark's trim strips only
+# U+0020.
+_STRIP_RE = r"(?U)^[\s\x1c-\x1f]+|[\s\x1c-\x1f]+$"
 _WS_RUN_RE = r"(?U)\s+"
 _ALNUM_RE = r"[\p{L}\p{N}]"  # ≈ Python str.isalnum (exact on ASCII)
 

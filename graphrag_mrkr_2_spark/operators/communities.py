@@ -10,9 +10,10 @@ Spark-first re-architecture:
      (graph_clustering.py:39-75).
   G2 weight normalization: per-edge-type preference chain
      SIMILAR_TO→(similarity, score), RELATED_TO→(strength,), generic
-     fallback weight→similarity→score→strength→1.0, then drop
-     < clustering_min_edge_weight (leiden_utils.py:22-73,
-     graph_clustering.py:78-103; settings.py:434-436).
+     fallback weight→similarity→score→strength→1.0 (leiden_utils.py:22-73,
+     graph_clustering.py:78-103). The reference then drops weights below
+     clustering_min_edge_weight, whose default 0.0 (settings.py:434-436)
+     drops nothing, so no filter is applied.
   G3 clustering: connected components FIRST (distributed, graphalgo.py) —
      at web scale components are overwhelmingly small; each component is
      then clustered independently in one sorted mapInPandas walk (one
@@ -47,12 +48,9 @@ from . import graphalgo
 from .dedup import sorted_runs
 
 
-def normalize_edge_weights(
-    edges: DataFrame,
-    type_col: str = "edge_type",
-    min_edge_weight: float = 0.0,
-) -> DataFrame:
-    """G2 — coalesce weight per edge label preference (leiden_utils.py:22-73)."""
+def normalize_edge_weights(edges: DataFrame) -> DataFrame:
+    """G2 — coalesce ``weight`` per ``edge_type`` label preference
+    (leiden_utils.py:22-73)."""
 
     def col_or_null(name: str):
         return F.col(name) if name in edges.columns else F.lit(None).cast("double")
@@ -63,25 +61,20 @@ def normalize_edge_weights(
         col_or_null("weight"), col_or_null("similarity"), col_or_null("score"), col_or_null("strength")
     )
     weight = (
-        F.when(F.col(type_col) == "SIMILAR_TO", F.coalesce(similar, generic))
-        .when(F.col(type_col) == "RELATED_TO", F.coalesce(related, generic))
+        F.when(F.col("edge_type") == "SIMILAR_TO", F.coalesce(similar, generic))
+        .when(F.col("edge_type") == "RELATED_TO", F.coalesce(related, generic))
         .otherwise(generic)
     )
-    weight = F.coalesce(weight, F.lit(1.0)).cast("double")
-    out = edges.withColumn("weight", weight)
-    if min_edge_weight > 0.0:
-        out = out.where(F.col("weight") >= min_edge_weight)
-    return out
+    return edges.withColumn("weight", F.coalesce(weight, F.lit(1.0)).cast("double"))
 
 
-def project_edges(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
-    """G1 — undirected canonical projection (graph_clustering.py:39-75)."""
+def project_edges(edges: DataFrame) -> DataFrame:
+    """G1 — undirected canonical projection of (src, dst, weight)
+    (graph_clustering.py:39-75)."""
     return (
         edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("src"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("dst"),
+            F.least(F.col("src"), F.col("dst")).alias("src"),
+            F.greatest(F.col("src"), F.col("dst")).alias("dst"),
             F.col("weight"),
         )
         .where(F.col("src") != F.col("dst"))
@@ -99,21 +92,13 @@ _MEMBERSHIP_SCHEMA = StructType(
 )
 
 
-def detect_communities(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "weight",
-    resolution: float = 1.0,
-    seed: int = 42,
-    max_component_size: int = 500_000,
-    level: int = 0,
-) -> DataFrame:
-    """G3 — CC then per-component Leiden modularity clustering.
+def detect_communities(edges: DataFrame, max_component_size: int = 500_000) -> DataFrame:
+    """G3 — CC then per-component Leiden modularity clustering of
+    (src, dst, weight) edges.
 
-    Returns (node, community_id, level). Community ids are globally unique
-    and deterministic (hash of the community's minimum node id — no
-    driver-side counters).
+    Returns (node, community_id, level), level always 0. Community ids are
+    globally unique and deterministic (hash of the community's minimum node
+    id — no driver-side counters).
 
     A graph of at most graphalgo.LOCAL_EDGE_LIMIT edges (and at most
     ``max_component_size``) is collected once and clustered on the driver:
@@ -166,9 +151,7 @@ def detect_communities(
     # Observation counts it in the same pass
     obs = Observation()
     e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), F.col(weight_col).alias("weight")
-        )
+        edges.select("src", "dst", "weight")
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
@@ -176,7 +159,7 @@ def detect_communities(
     # a limit of 0 disables the driver path, as local_threshold=0 does CC's
     limit = graphalgo.LOCAL_EDGE_LIMIT
     if limit > 0 and n_edges <= min(max_component_size, limit):
-        return _cluster_on_driver(e.collect(), resolution, seed, level, e.sparkSession)
+        return _cluster_on_driver(e.collect(), e.sparkSession)
 
     cc = graphalgo.connected_components(e, "src", "dst")
     tagged = e.join(cc.withColumnRenamed("node", "src"), "src")
@@ -184,7 +167,7 @@ def detect_communities(
     # a component's edges are a subset of all edges, so at or below the cap
     # no component can be giant: skip the size aggregate and its probe job
     if n_edges <= max_component_size:
-        return _cluster_sorted(tagged, resolution, seed, level)
+        return _cluster_sorted(tagged)
 
     comp_sizes = tagged.groupBy("component").agg(F.count(F.lit(1)).alias("n_edges"))
     tagged = tagged.join(
@@ -195,7 +178,7 @@ def detect_communities(
     )
     small = tagged.where(~F.col("is_giant")).drop("is_giant")
     giant = tagged.where(F.col("is_giant")).drop("is_giant")
-    small_mem = _cluster_sorted(small, resolution, seed, level)
+    small_mem = _cluster_sorted(small)
 
     # cheap scalar gate: LPA's iterative loop runs actions, so don't enter it
     # when no single component exceeds the cap. Probe comp_sizes, not
@@ -214,14 +197,15 @@ def detect_communities(
         .select(
             "node",
             F.pmod(F.xxhash64("anchor"), F.lit(2**62)).alias("community_id"),
-            F.lit(level).cast("long").alias("level"),
+            F.lit(0).cast("long").alias("level"),
         )
     )
     return small_mem.unionByName(giant_mem)
 
 
-def _members(srcs, dsts, weights, resolution: float, seed: int) -> list[tuple[str, int]]:
-    """One component's edges → [(node, community_id)] by seeded Leiden.
+def _members(srcs, dsts, weights) -> list[tuple[str, int]]:
+    """One component's edges → [(node, community_id)] by Leiden with the
+    reference's modularity resolution 1.0, seeded 42.
 
     The one per-component kernel of both clustering paths: the driver path
     and the Spark path's mapInPandas walk call it on the same edge set and
@@ -239,7 +223,7 @@ def _members(srcs, dsts, weights, resolution: float, seed: int) -> list[tuple[st
 
     from graphrag_mrkr_2_spark.functions.leiden import leiden_communities
 
-    mem = leiden_communities(edge_list, resolution=resolution, seed=seed)
+    mem = leiden_communities(edge_list, resolution=1.0, seed=42)
     groups: dict[int, list] = {}
     for node, c in mem.items():
         groups.setdefault(c, []).append(node)
@@ -250,7 +234,7 @@ def _members(srcs, dsts, weights, resolution: float, seed: int) -> list[tuple[st
     return rows
 
 
-def _cluster_sorted(tagged: DataFrame, resolution: float, seed: int, level: int) -> DataFrame:
+def _cluster_sorted(tagged: DataFrame) -> DataFrame:
     """(src, dst, weight, component) edges → membership in ONE mapInPandas
     pass: hash-partition and sort by component, then walk the component
     runs of each task with dedup.sorted_runs and run the kernel on each.
@@ -276,17 +260,17 @@ def _cluster_sorted(tagged: DataFrame, resolution: float, seed: int, level: int)
         )
         rows: list = []
         for _, edges in sorted_runs(cols):
-            rows.extend(_members(*edges, resolution, seed))
+            rows.extend(_members(*edges))
             if len(rows) >= 4096:
-                yield pd.DataFrame(rows, columns=["node", "community_id"]).assign(level=level)
+                yield pd.DataFrame(rows, columns=["node", "community_id"]).assign(level=0)
                 rows = []
         if rows:
-            yield pd.DataFrame(rows, columns=["node", "community_id"]).assign(level=level)
+            yield pd.DataFrame(rows, columns=["node", "community_id"]).assign(level=0)
 
     return src.mapInPandas(_run, _MEMBERSHIP_SCHEMA)
 
 
-def _cluster_on_driver(rows, resolution: float, seed: int, level: int, spark) -> DataFrame:
+def _cluster_on_driver(rows, spark) -> DataFrame:
     """Collected (src, dst, weight) rows → membership, clustered in this
     process: union-find groups the edges by component (an edge belongs to
     its src's component, as the Spark path's join on src assigns it), and
@@ -300,12 +284,12 @@ def _cluster_on_driver(rows, resolution: float, seed: int, level: int, spark) ->
         c = comp.get(row[0])
         if c is not None:
             groups.setdefault(c, []).append(row)
-    members = [m for g in groups.values() for m in _members(*zip(*g), resolution, seed)]
+    members = [m for g in groups.values() for m in _members(*zip(*g))]
     table = pa.table(
         {
             "node": pa.array([n for n, _ in members], pa.string()),
             "community_id": pa.array([c for _, c in members], pa.int64()),
-            "level": pa.array([level] * len(members), pa.int64()),
+            "level": pa.array([0] * len(members), pa.int64()),
         }
     )
     return spark.createDataFrame(table, schema=_MEMBERSHIP_SCHEMA)

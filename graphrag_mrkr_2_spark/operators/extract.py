@@ -36,6 +36,7 @@ from ..functions.chunking import (
     chunk_document,
 )
 from ..functions.html_text import HtmlHeadingChunker, extract_plain_text
+from .chunk_patterns import _STRIP_RE
 
 # ---------------------------------------------------------------------------
 # S1: plain-text extraction (T1 — core/html_chunker.py:88-91)
@@ -53,12 +54,10 @@ def document_id_for_url(url: str) -> str:
     return hashlib.md5(url.encode("utf-8", "replace")).hexdigest()
 
 
-def repartition_by_url(df: DataFrame, num_partitions: int, salt: int = 1) -> DataFrame:
-    """Salted url-hash repartition for head-domain skew (SURVEY §4).
-
-    ``salt > 1`` spreads rows of a single hot key range across ``salt``
-    buckets; with hashing on full url the key space is already fine-grained,
-    so salt only matters when callers later co-group by domain.
+def repartition_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Url-hash repartition for head-domain skew (SURVEY §4): hashing the
+    full url keeps the key space fine-grained, so a hot domain spreads
+    over every partition.
 
     The partitioning KEY keeps 64x more distinct values than output
     partitions: hashing a key with exactly ``num_partitions`` values into
@@ -67,12 +66,12 @@ def repartition_by_url(df: DataFrame, num_partitions: int, salt: int = 1) -> Dat
     measured r8: 122/192 partitions non-empty, max 226 rows vs 52 median,
     a straggler tail on the Python-heavy stage downstream).
     """
-    key = F.pmod(F.xxhash64(F.col("url")), F.lit(num_partitions * salt * 64))
+    key = F.pmod(F.xxhash64(F.col("url")), F.lit(num_partitions * 64))
     return df.repartition(num_partitions, key)
 
 
-def extract_text(pages: DataFrame, html_col: str = "html", out_col: str = "text") -> DataFrame:
-    """Decode the html binary column to plain text (T1).
+def extract_text(pages: DataFrame) -> DataFrame:
+    """Decode the ``html`` binary column to a plain ``text`` column (T1).
 
     Bytes → str rides the WHATWG charset sniffer (r7,
     functions/charsets.py): BOM, meta prescan, strict-UTF-8 with a
@@ -86,7 +85,7 @@ def extract_text(pages: DataFrame, html_col: str = "html", out_col: str = "text"
     def _extract(html: pd.Series) -> pd.Series:
         return html.map(lambda b: extract_plain_text(to_text(b)))
 
-    return pages.withColumn(out_col, _extract(F.col(html_col)))
+    return pages.withColumn("text", _extract(F.col("html")))
 
 
 # ---------------------------------------------------------------------------
@@ -114,17 +113,10 @@ CHUNK_SCHEMA = StructType(
 STRATEGY_INPUT = {"html_heading": "html", "structure_hybrid": "binary", "legacy": "text"}
 
 
-def chunk_inputs(
-    pages: DataFrame,
-    strategy: str,
-    id_col: str = "url",
-    html_col: str = "html",
-    text_col: str = "text",
-    binary_col: str = "binary",
-) -> DataFrame:
-    """``pages`` projected to the columns ``strategy`` reads, renamed to
-    ``page_chunker``'s argument names: url, the strategy's input column,
-    and text when present (the offset base for html/structure chunks).
+def chunk_inputs(pages: DataFrame, strategy: str) -> DataFrame:
+    """``pages`` projected to the columns ``strategy`` reads: url, the
+    strategy's input column, and text when present (the offset base for
+    html/structure chunks).
 
     An unknown strategy or a missing input column is a plan-time
     ``ValueError``, not a per-row failure in a Python worker. A missing
@@ -137,15 +129,13 @@ def chunk_inputs(
         raise ValueError(
             f"unknown chunking strategy {strategy!r}; expected one of {sorted(STRATEGY_INPUT)}"
         )
-    source = {"url": id_col, "html": html_col, "text": text_col, "binary": binary_col}
-    if source[need] not in pages.columns:
+    if need not in pages.columns:
         hint = "; load with keep_binary=True" if need == "binary" else ""
         raise ValueError(
-            f"strategy={strategy!r} reads the {need} column {source[need]!r}, "
+            f"strategy={strategy!r} reads the {need!r} column, "
             f"which the pages lack (have: {pages.columns}){hint}"
         )
-    wanted = [k for k in dict.fromkeys(["url", need, "text"]) if source[k] in pages.columns]
-    return pages.select(*[F.col(source[k]).alias(k) for k in wanted])
+    return pages.select(*[c for c in dict.fromkeys(["url", need, "text"]) if c in pages.columns])
 
 
 def page_tuples(pdf: pd.DataFrame) -> Iterator[tuple]:
@@ -219,15 +209,11 @@ def chunk_pages(
     pages: DataFrame,
     strategy: str = "html_heading",
     cfg: ChunkingConfig | None = None,
-    id_col: str = "url",
-    html_col: str = "html",
-    text_col: str = "text",
-    binary_col: str = "binary",
 ) -> DataFrame:
     """Chunk pages into TextUnits, one output row per chunk: ``page_chunker``
     over the ``chunk_inputs`` columns in one mapInPandas (chunk-local, no
     shuffle). The fused extraction pass runs the same kernel."""
-    inputs = chunk_inputs(pages, strategy, id_col, html_col, text_col, binary_col)
+    inputs = chunk_inputs(pages, strategy)
     columns = [f.name for f in CHUNK_SCHEMA.fields]
 
     def _chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -302,10 +288,10 @@ def with_content_filter(
     return chunks.withColumn("filter_reason", reason)
 
 
-def filter_chunks(chunks: DataFrame, content_col: str = "content", cfg: ContentFilterConfig | None = None) -> DataFrame:
+def filter_chunks(chunks: DataFrame, cfg: ContentFilterConfig | None = None) -> DataFrame:
     """Keep only chunks passing the content filter."""
     return (
-        with_content_filter(chunks, content_col, cfg)
+        with_content_filter(chunks, cfg=cfg)
         .where(F.col("filter_reason").isNull())
         .drop("filter_reason")
     )
@@ -394,7 +380,7 @@ def post_entity_chunk_removal(
             & (F.col("relationship_count") == 0)
         )
         | (
-            (F.length(F.trim(F.col(content_col))) < 30)
+            (F.length(F.regexp_replace(F.col(content_col), _STRIP_RE, "")) < 30)
             & (F.col("entity_count") == 0)
         )
     )

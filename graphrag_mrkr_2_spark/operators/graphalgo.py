@@ -172,7 +172,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "weight",
-    max_iterations: int = 10,
 ) -> DataFrame:
     """Weighted synchronous label propagation → (node, label).
 
@@ -188,8 +187,9 @@ def label_propagation(
     a per-node top-1 window. No neighbor-set materialization, so a mega-hub
     is bounded by its distinct neighbor-label count after the partial agg.
     Synchronous updates with min-label tie-break are deterministic; the loop
-    stops early when no label changes (checked via count, an action, so each
-    round is localCheckpoint-ed to truncate lineage).
+    runs at most 10 rounds and stops early when no label changes (checked
+    via count, an action, so each round is localCheckpoint-ed to truncate
+    lineage).
 
     Synchronous LPA famously oscillates on automorphic structures (two
     symmetric nodes swap labels forever — GraphX/GraphFrames LPA document
@@ -225,7 +225,7 @@ def label_propagation(
     from pyspark.sql.window import Window
 
     history = [_checksum(labels, "node", "label")]
-    for _ in range(max_iterations):
+    for _ in range(10):
         msgs = sym.join(
             labels.select(F.col("node").alias("v"), "label"), "v"
         ).select("u", "label", "w")
@@ -267,7 +267,6 @@ def connected_components(
     edges: DataFrame,
     src_col: str = "u",
     dst_col: str = "v",
-    max_iterations: int = 20,
     local_threshold: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Edge list → (node, component) with component = min node id (orderable).
@@ -287,8 +286,9 @@ def connected_components(
     At 10^12-document scale the global match graph far exceeds any sane
     threshold, so the large-star/small-star path is the one that runs.
 
-    Every distributed iteration materializes via localCheckpoint: the loop's
-    convergence check is an action, so without truncation each iteration
+    The distributed loop runs at most 20 rounds, and every round
+    materializes via localCheckpoint: the loop's
+    convergence check is an action, so without truncation each round
     would recompute the whole upstream lineage (and the plan would double
     per round).
     """
@@ -312,7 +312,7 @@ def connected_components(
     else:
         e = _symmetric(raw).localCheckpoint(eager=True)
     prev = None
-    for _ in range(max_iterations):
+    for _ in range(20):
         e = _large_star(e)
         e = _small_star(e).localCheckpoint(eager=True)
         cur = _checksum(e, "u", "v")

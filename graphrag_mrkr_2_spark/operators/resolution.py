@@ -197,8 +197,6 @@ def tfidf_scores(
 
 def entity_mapping(
     entities: DataFrame,
-    id_col: str = "entity_id",
-    name_col: str = "name",
     threshold: float = 0.8,
     n: int = 3,
     num_hashes: int = 32,
@@ -213,7 +211,7 @@ def entity_mapping(
     ``cosine_threshold`` are given) embedding cosine ≥ cosine_threshold,
     OR (when ``tfidf_threshold`` is given) name TF-IDF cosine ≥ it — the
     north star's three scoring legs, each computed on candidates only."""
-    cands = candidate_pairs(entities, id_col, name_col, n, num_hashes, bands)
+    cands = candidate_pairs(entities, n=n, num_hashes=num_hashes, bands=bands)
     if tfidf_threshold is not None:
         # two consumers (jaccard scoring + tfidf scoring) — materialize the
         # blocking output once instead of recomputing the LSH DAG per branch.
@@ -223,7 +221,7 @@ def entity_mapping(
         # the signature subtree, the expensive half, is already
         # checkpointed inside candidate_pairs.)
         cands = cands.localCheckpoint(eager=True)
-    scored = score_pairs(cands, entities, id_col, name_col, n, vec_col=vec_col)
+    scored = score_pairs(cands, entities, n=n, vec_col=vec_col)
     gate = F.col("jaccard") >= threshold
     if vec_col and cosine_threshold is not None:
         gate = gate | (F.col("cosine") >= cosine_threshold)
@@ -232,32 +230,30 @@ def entity_mapping(
         # tokens (CJK, punctuation) has no tfidf row — it must still flow
         # through the jaccard/cosine gates, scoring 0 on this signal only
         scored = scored.join(
-            tfidf_scores(cands, entities, id_col, name_col),
+            tfidf_scores(cands, entities),
             ["id1", "id2"],
             "left",
         ).withColumn("tfidf_cosine", F.coalesce(F.col("tfidf_cosine"), F.lit(0.0)))
         gate = gate | (F.col("tfidf_cosine") >= tfidf_threshold)
     matches = scored.where(gate)
     comp = connected_components(matches, "id1", "id2")
-    all_ids = entities.select(F.col(id_col).alias("node")).distinct()
+    all_ids = entities.select(F.col("entity_id").alias("node")).distinct()
     return (
         all_ids.join(comp, "node", "left")
         .select(
-            F.col("node").alias(id_col),
+            F.col("node").alias("entity_id"),
             F.coalesce(F.col("component"), F.col("node")).alias("canonical_id"),
         )
     )
 
 
-def apply_mapping(
-    df: DataFrame, mapping: DataFrame, cols: list[str], id_col: str = "entity_id"
-) -> DataFrame:
+def apply_mapping(df: DataFrame, mapping: DataFrame, cols: list[str]) -> DataFrame:
     """Rewrite the given id columns through the canonical mapping
     (broadcast join per column — C8's edge redirect as joins)."""
     out = df
     for c in cols:
         m = mapping.select(
-            F.col(id_col).alias(c), F.col("canonical_id").alias(f"__canon_{c}")
+            F.col("entity_id").alias(c), F.col("canonical_id").alias(f"__canon_{c}")
         )
         out = (
             out.join(F.broadcast(m), c, "left")

@@ -33,17 +33,16 @@ from .ann import _as_double, _dot, _norm
 from .dedup import _multiband_hyperplane_buckets, band_pairs, sorted_runs
 
 
-def with_embeddings(
-    df: DataFrame, text_col: str = "content", out_col: str = "embedding", dim: int = DEFAULT_DIM
-) -> DataFrame:
-    """T8 — deterministic pseudo-embedding (FIXTURES.md F5) via pandas UDF."""
+def with_embeddings(df: DataFrame, text_col: str = "content") -> DataFrame:
+    """T8 — deterministic DEFAULT_DIM-float pseudo-embedding (FIXTURES.md F5)
+    of ``text_col`` as an ``embedding`` column, via pandas UDF."""
 
     @F.pandas_udf(ArrayType(FloatType()))
     def _embed(texts: pd.Series) -> pd.Series:
-        mat = pseudo_embed_many(texts.fillna("").tolist(), dim)
+        mat = pseudo_embed_many(texts.fillna("").tolist(), DEFAULT_DIM)
         return pd.Series(list(mat))
 
-    return df.withColumn(out_col, _embed(F.col(text_col)))
+    return df.withColumn("embedding", _embed(F.col(text_col)))
 
 
 def chunk_similarity_edges(
@@ -91,14 +90,7 @@ def chunk_similarity_edges(
     )
 
 
-def chunk_similarity_edges_grams(
-    chunks: DataFrame,
-    threshold: float = 0.7,
-    max_connections: int = 5,
-    id_col: str = "chunk_id",
-    doc_col: str = "document_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def chunk_similarity_edges_grams(chunks: DataFrame, threshold: float = 0.7) -> DataFrame:
     """J1 via per-document NumPy gram matrices — the plan SURVEY §2.5
     prescribes: documents are small (tens of chunks), so the all-pairs
     cosine is one vectorized matmul per group instead of a self-join with
@@ -113,7 +105,9 @@ def chunk_similarity_edges_grams(
     documents are tiny groups, and that per-group overhead dominated the
     stage 3:1 over the actual math (measured r8: 7.0 s -> 2.2 s at sf0.1,
     byte-identical output). Output contract identical to
-    chunk_similarity_edges (tests assert it).
+    chunk_similarity_edges with its default columns (``chunk_id``,
+    ``document_id``, ``embedding``) and ``max_connections=5`` (tests assert
+    it).
     """
     import numpy as np
 
@@ -137,7 +131,7 @@ def chunk_similarity_edges_grams(
                 if row[j] < threshold:
                     break
                 rank += 1
-                if rank > max_connections:
+                if rank > 5:
                     break
                 key = (min(ids[i], ids[j]), max(ids[i], ids[j]))
                 score = float(row[j])
@@ -154,7 +148,7 @@ def chunk_similarity_edges_grams(
         # one task handles MANY documents: runs are contiguous because the
         # input is hash-partitioned AND sorted by doc
         cols = (
-            (pdf[doc_col].to_numpy(), (pdf[id_col].to_numpy(), pdf[vec_col].to_numpy()))
+            (pdf["document_id"].to_numpy(), (pdf["chunk_id"].to_numpy(), pdf["embedding"].to_numpy()))
             for pdf in batches
         )
         names = ["document_id", "id1", "id2", "score", "rank"]
@@ -173,9 +167,9 @@ def chunk_similarity_edges_grams(
     # kernel; the session's shuffle parallelism is the scale-adaptive knob
     n_shuffle = int(chunks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     src = (
-        chunks.select(doc_col, id_col, vec_col)
-        .repartition(n_shuffle, F.col(doc_col))
-        .sortWithinPartitions(doc_col)
+        chunks.select("document_id", "chunk_id", "embedding")
+        .repartition(n_shuffle, F.col("document_id"))
+        .sortWithinPartitions("document_id")
     )
     out = src.mapInPandas(
         _run,

@@ -47,7 +47,8 @@ Scale notes:
 - every groupBy below benefits from Spark's built-in partial (map-side)
   aggregation; mega-entity keys ("THE"-like) produce one partial row per map
   partition, so the final reduce sees O(#partitions) rows per key, not
-  O(#mentions). Provenance arrays can be capped via ``provenance_cap``.
+  O(#mentions). The global tables cap each key's provenance at
+  DEFAULT_GLOBAL_PROVENANCE_CAP chunk ids (``capped_provenance``).
 """
 
 from __future__ import annotations
@@ -189,10 +190,6 @@ def extract_mentions_fused(
     filter_cfg=None,
     llm: Callable[[str, str, int], str] = mock_llm_response,
     max_gleanings: int = 1,
-    id_col: str = "url",
-    html_col: str = "html",
-    text_col: str = "text",
-    binary_col: str = "binary",
 ) -> DataFrame:
     """Fused S2+S3+S4+S5: pages → UNIFIED_SCHEMA rows in ONE mapInPandas.
 
@@ -210,7 +207,7 @@ def extract_mentions_fused(
     from ..functions.quality import should_embed_chunk
     from .extract import CHUNK_SCHEMA, chunk_inputs, page_chunker, page_tuples
 
-    inputs = chunk_inputs(pages, strategy, id_col, html_col, text_col, binary_col)
+    inputs = chunk_inputs(pages, strategy)
     fkw = asdict(filter_cfg or ContentFilterConfig())
     chunk_cols = [f.name for f in CHUNK_SCHEMA.fields]
     out_cols = [f.name for f in UNIFIED_SCHEMA.fields]
@@ -277,11 +274,8 @@ def relationship_mentions(mentions: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _union_sorted_chunks(col_name: str, cap: int | None):
-    arr = F.array_sort(F.array_distinct(F.flatten(F.collect_list(F.col(col_name)))))
-    if cap is not None:
-        arr = F.slice(arr, 1, cap)
-    return arr
+def _union_sorted_chunks():
+    return F.array_sort(F.array_distinct(F.flatten(F.collect_list(F.col("source_chunks")))))
 
 
 def _desc_set_union():
@@ -297,9 +291,7 @@ def _desc_set_union():
     return F.array_join(cleaned, "\n")
 
 
-def consolidate_entities_per_doc(
-    ents: DataFrame, provenance_cap: int | None = None
-) -> DataFrame:
+def consolidate_entities_per_doc(ents: DataFrame) -> DataFrame:
     """X9 global dedup + entity-dict collapse, per document.
 
     Stage 1 — key (lower(name), type) (entity_extraction.py:494):
@@ -315,7 +307,7 @@ def consolidate_entities_per_doc(
             F.first("name").alias("name"),
             F.max_by("description", F.length("description")).alias("description"),
             F.avg("importance_score").alias("importance_score"),
-            _union_sorted_chunks("source_chunks", provenance_cap).alias("source_chunks"),
+            _union_sorted_chunks().alias("source_chunks"),
             F.count(F.lit(1)).alias("mention_count"),
         )
         .drop("name_key")
@@ -331,7 +323,7 @@ def consolidate_entities_per_doc(
             F.max("type").alias("type"),
             F.max_by("description", F.length("description")).alias("description"),
             F.avg("importance_score").alias("importance_score"),
-            _union_sorted_chunks("source_chunks", provenance_cap).alias("source_chunks"),
+            _union_sorted_chunks().alias("source_chunks"),
             F.sum("mention_count").alias("mention_count"),
         )
         .drop("name_key")
@@ -343,7 +335,6 @@ def consolidate_relationships_per_doc(
     rels: DataFrame,
     entities_doc: DataFrame,
     strength_threshold: float = 0.4,
-    provenance_cap: int | None = None,
 ) -> DataFrame:
     """X10 endpoint check + C2 strength gate + C4 relationship merge.
 
@@ -384,7 +375,7 @@ def consolidate_relationships_per_doc(
         .agg(
             F.sum("strength").alias("strength"),
             _desc_set_union().alias("description"),
-            _union_sorted_chunks("source_chunks", provenance_cap).alias("source_chunks"),
+            _union_sorted_chunks().alias("source_chunks"),
             F.count(F.lit(1)).alias("mention_count"),
         )
     )
@@ -426,7 +417,6 @@ def canonicalize(
     mentions: DataFrame,
     importance_threshold: float = 0.3,
     strength_threshold: float = 0.4,
-    provenance_cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full S6: mentions → (entities_doc, relationships_doc).
 
@@ -445,12 +435,10 @@ def canonicalize(
     ents = entity_mentions(mentions)
     rels = relationship_mentions(mentions)
 
-    entities_doc = consolidate_entities_per_doc(ents, provenance_cap).where(
+    entities_doc = consolidate_entities_per_doc(ents).where(
         F.col("importance_score") >= importance_threshold
     )
-    rels_doc = consolidate_relationships_per_doc(
-        rels, entities_doc, strength_threshold, provenance_cap
-    )
+    rels_doc = consolidate_relationships_per_doc(rels, entities_doc, strength_threshold)
     return entities_doc.withColumn("is_orphan", F.lit(False)), rels_doc
 
 
@@ -459,24 +447,18 @@ def canonicalize(
 # ---------------------------------------------------------------------------
 
 
-# global tables default to a bounded provenance union: an uncapped
+# global tables take a bounded provenance union: an uncapped
 # collect_list for a mega-entity ("THE" across 10^12 docs) materializes the
 # whole provenance in ONE aggregation buffer — the same trap class as the
-# round-1 CC collect_set. Per-doc consolidations stay uncapped by default
+# round-1 CC collect_set. Per-doc consolidations stay uncapped
 # (bounded by chunks-per-document).
 DEFAULT_GLOBAL_PROVENANCE_CAP = 1000
 
 
-def capped_provenance(
-    df: DataFrame,
-    key_cols: list[str],
-    chunk_col: str = "source_chunks",
-    cap: int = DEFAULT_GLOBAL_PROVENANCE_CAP,
-    buckets: int = 32,
-) -> DataFrame:
-    """(key_cols..., source_chunks) with the lexicographically-first ``cap``
-    distinct chunk ids per key, with the per-key buffer split ``buckets``
-    ways.
+def capped_provenance(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """(key_cols..., source_chunks) with the lexicographically-first
+    ``cap`` = DEFAULT_GLOBAL_PROVENANCE_CAP distinct chunk ids per key, with
+    the per-key buffer split ``buckets`` = 32 ways.
 
     Slice-after-collect_list materializes a key's full set in one reduce
     buffer; this instead distincts exploded (key, chunk) rows, pre-reduces
@@ -487,8 +469,9 @@ def capped_provenance(
     divided by ``buckets``, not bounded by ``cap``.
     Result is identical to slice(sorted_union, cap) because the global
     lexicographic minimum cap elements survive their buckets."""
+    cap, buckets = DEFAULT_GLOBAL_PROVENANCE_CAP, 32
     exploded = (
-        df.select(*key_cols, F.explode_outer(F.col(chunk_col)).alias("__chunk"))
+        df.select(*key_cols, F.explode_outer(F.col("source_chunks")).alias("__chunk"))
         .where(F.col("__chunk").isNotNull())
         .distinct()
     )
@@ -500,14 +483,11 @@ def capped_provenance(
     return per_bucket.groupBy(*key_cols).agg(
         F.slice(
             F.array_sort(F.flatten(F.collect_list("__part"))), 1, cap
-        ).alias(chunk_col)
+        ).alias("source_chunks")
     )
 
 
-def build_nodes(
-    entities_doc: DataFrame,
-    provenance_cap: int = DEFAULT_GLOBAL_PROVENANCE_CAP,
-) -> DataFrame:
+def build_nodes(entities_doc: DataFrame) -> DataFrame:
     """Global entity table: MERGE-by-name across documents (graph_db MERGE
     (e:Entity {name}) — entity_graph.py:445-458); id = md5(lower(name))[:16]
     (entity_graph.py:400-404). Same-name/different-type collapses here, as in
@@ -528,17 +508,14 @@ def build_nodes(
         )
         .withColumn("entity_id", F.substring(F.md5(F.lower(F.col("name"))), 1, 16))
     )
-    prov = capped_provenance(entities_doc, ["name"], cap=provenance_cap)
+    prov = capped_provenance(entities_doc, ["name"])
     return main.join(prov, "name", "left").withColumn(
         "source_chunks",
         F.coalesce(F.col("source_chunks"), F.array().cast("array<string>")),
     )
 
 
-def build_edges(
-    rels_doc: DataFrame,
-    provenance_cap: int = DEFAULT_GLOBAL_PROVENANCE_CAP,
-) -> DataFrame:
+def build_edges(rels_doc: DataFrame) -> DataFrame:
     """Global RELATED_TO edges keyed on (source, target, type) — directed, as
     entity_graph MERGE (source)-[r:RELATED_TO {type}]->(target)
     (entity_graph.py:461-473). Cross-document strength is summed (the
@@ -564,7 +541,7 @@ def build_edges(
         .withColumn("source_id", F.substring(F.md5(F.lower(F.col("subj"))), 1, 16))
         .withColumn("target_id", F.substring(F.md5(F.lower(F.col("obj"))), 1, 16))
     )
-    prov = capped_provenance(keyed, ["subj", "obj", "rel_type"], cap=provenance_cap)
+    prov = capped_provenance(keyed, ["subj", "obj", "rel_type"])
     return main.join(prov, ["subj", "obj", "rel_type"], "left").withColumn(
         "source_chunks",
         F.coalesce(F.col("source_chunks"), F.array().cast("array<string>")),

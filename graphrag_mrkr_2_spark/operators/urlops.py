@@ -4,7 +4,7 @@ per-domain caps.
 The reference ingests uploaded files, so it has no URL layer; at the
 north-rule's 10^12-page crawl scale these are the standard curation passes
 (C4/CC-Net-style URL canonicalization before dedup; per-domain caps against
-head-domain dominance — the same skew the pipeline's salted url-hash
+head-domain dominance — the same skew the pipeline's url-hash
 repartition addresses at the shuffle level, applied here at the DATA level).
 
 All column expressions (whole-stage codegen, no Python). Every regex is

@@ -132,7 +132,7 @@ def run_kg_pipeline(
     crosses the Arrow boundary once and the HTML is parsed once. That
     output is pinned here, the build's one pin site (KgResult); every
     other table is planned on first access.
-    ``num_partitions``: salted url-hash repartition width before the heavy
+    ``num_partitions``: url-hash repartition width before the heavy
     UDF stage (head-domain skew, north_rule). None → keep input layout.
     URL curation (operators/urlops.py: ``dedup_normalized_urls``,
     ``cap_per_domain``) goes in front of this call, on ``pages``.

@@ -8,7 +8,7 @@ network), so this module provides the same contract on plain parquet:
 - every write creates an immutable ``snapshot-<n>`` directory (data never
   rewritten in place);
 - a ``manifest.json`` per snapshot records: snapshot id, parent id, the
-  caller's input fingerprint (lineage), row count, per-partition row counts,
+  caller's input fingerprint (lineage), row count, per-file row counts,
   arbitrary stage metrics (e.g. triple_count), schema, timestamp;
 - commits are atomic: data + manifest are fully written before the
   ``_current`` pointer file is atomically renamed into place — a killed job
@@ -29,6 +29,7 @@ import os
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,15 +100,15 @@ class SnapshotCatalog:
             writer = writer.partitionBy(partition_by)
         writer.parquet(data_dir)
 
-        # lineage: per-partition row counts of the committed files
-        committed = self.spark.read.parquet(data_dir)
+        # lineage: row counts of the committed part files, one entry per
+        # file in path order, from the parquet footers (no Spark job);
+        # partition_by subdirectories count too
+        files = sorted(
+            os.path.join(d, f) for d, _, names in os.walk(data_dir) for f in names
+            if f.endswith(".parquet")
+        )
         per_part = [
-            {"partition_id": int(r["pid"]), "rows": int(r["rows"])}
-            for r in committed.groupBy(
-                F.spark_partition_id().alias("pid")
-            )
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
+            {"partition_id": i, "rows": pq.read_metadata(f).num_rows} for i, f in enumerate(files)
         ]
         row_count = sum(p["rows"] for p in per_part)
 
@@ -121,7 +122,7 @@ class SnapshotCatalog:
             "row_count": row_count,
             "partition_counts": per_part,
             "metrics": metrics or {},
-            "schema": committed.schema.jsonValue(),
+            "schema": self.spark.read.parquet(data_dir).schema.jsonValue(),
         }
         with open(os.path.join(tdir, snap_dir, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=2)
@@ -190,13 +191,7 @@ class SnapshotCatalog:
 
     # -- resume -------------------------------------------------------------
 
-    def materialize(
-        self,
-        name: str,
-        df_fn,
-        input_fingerprint: str,
-        partition_by: str | None = None,
-    ) -> DataFrame:
+    def materialize(self, name: str, df_fn, input_fingerprint: str) -> DataFrame:
         """Compute-or-reuse: if the current snapshot was produced from the
         same input fingerprint, read it (stage skip); else run ``df_fn()``
         and commit. This is the kill-and-resume primitive: a re-run after a
@@ -204,10 +199,5 @@ class SnapshotCatalog:
         cur = self.current_snapshot(name)
         if cur is not None and cur.get("input_fingerprint") == input_fingerprint:
             return self.read(name)
-        self.write(
-            name,
-            df_fn(),
-            input_fingerprint=input_fingerprint,
-            partition_by=partition_by,
-        )
+        self.write(name, df_fn(), input_fingerprint=input_fingerprint)
         return self.read(name)

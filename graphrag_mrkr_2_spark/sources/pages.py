@@ -4,7 +4,7 @@ Schema per BASELINE.json input_hint:
     (url string, warc_ts timestamp, html binary, text string, lang string)
 
 - urls: ``https://{domain}/{section}/{slug}-{i}``; domains Zipf-distributed
-  so a few head domains own ~30% of rows (exercises salted repartitioning).
+  so a few head domains own ~30% of rows (exercises url-hash repartitioning).
 - html: rendered from the F2 template (nav/toc/footer noise that must NOT
   leak into text; article with h1/h2/h3, paragraphs, ul, pre, table,
   blockquote; one long paragraph exceeding max tokens to force splits).

@@ -443,3 +443,63 @@ def test_unicode_keys_match_python_case_mapping(spark):
         assert name.lower() != name  # Python (Unicode 14+) lowers it
         assert eid == hashlib.md5(name.encode()).hexdigest()[:16], name
         assert eid != entity_id(name), name
+
+
+@pytest.mark.spark
+def test_global_provenance_cap(spark):
+    """An entity and a relationship mentioned in 1500 chunks over 48
+    documents keep the lexicographically first DEFAULT_GLOBAL_PROVENANCE_CAP
+    chunk ids, sorted, in nodes and edges; mention_count and doc_count still
+    count every mention."""
+    from graphrag_mrkr_2_spark.operators.triples import (
+        DEFAULT_GLOBAL_PROVENANCE_CAP,
+        MENTION_SCHEMA,
+        build_edges,
+        build_nodes,
+        canonicalize,
+    )
+
+    assert DEFAULT_GLOBAL_PROVENANCE_CAP == 1000
+    n, n_docs = 1500, 48
+    # hex ids: their sorted order is not their generation order
+    chunks = [hashlib.md5(str(i).encode()).hexdigest() for i in range(n)]
+    rows = []
+    for i, c in enumerate(chunks):
+        doc = f"doc{i % n_docs}"
+        for name in ("Mega Corp", "Small Co"):
+            rows.append(("entity", c, doc, name, "ORGANIZATION", None, "a firm", 0.9, None, [c]))
+        rows.append(("relationship", c, doc, "Mega Corp", "OWNS", "Small Co", "owns", None, 0.9, [c]))
+    entities_doc, rels_doc = canonicalize(spark.createDataFrame(rows, MENTION_SCHEMA))
+    first = sorted(chunks)[:DEFAULT_GLOBAL_PROVENANCE_CAP]
+
+    (node,) = build_nodes(entities_doc).where(F.col("name") == "Mega Corp").collect()
+    (edge,) = build_edges(rels_doc).collect()
+    for row in (node, edge):
+        assert row["source_chunks"] == first
+        assert row["mention_count"] == n
+        assert row["doc_count"] == n_docs
+
+
+@pytest.mark.spark
+def test_mentions_table_explodes_provenance(spark):
+    """J4: one (entity_id, chunk_id) row per distinct pair in the exploded
+    entities_doc provenance, with entity_id = normalize.entity_id(name)."""
+    from graphrag_mrkr_2_spark.functions.normalize import entity_id
+    from graphrag_mrkr_2_spark.operators.extract import chunk_pages, filter_chunks
+    from graphrag_mrkr_2_spark.operators.triples import (
+        canonicalize,
+        extract_mentions,
+        mentions_table,
+    )
+    from graphrag_mrkr_2_spark.sources.pages import generate_pages
+
+    chunks = filter_chunks(chunk_pages(generate_pages(spark, 15)))
+    entities_doc, _ = canonicalize(extract_mentions(chunks))
+    expected = {
+        (entity_id(r["name"]), c)
+        for r in entities_doc.collect()
+        for c in r["source_chunks"]
+    }
+    got = mentions_table(entities_doc).collect()
+    assert len(got) == len(expected) > 0
+    assert {(r["entity_id"], r["chunk_id"]) for r in got} == expected

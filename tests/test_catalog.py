@@ -23,6 +23,36 @@ def test_write_read_roundtrip(spark, tmp_path):
 
 
 @pytest.mark.spark
+def test_row_counts_come_from_the_committed_files(spark, tmp_path):
+    """row_count and partition_counts hold one entry per part file, in path
+    order, partition_by subdirectories included; an empty table counts 0."""
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    empty = cat.write("empty", spark.range(10).where("id < 0"))
+    assert empty["row_count"] == 0
+    assert all(p["rows"] == 0 for p in empty["partition_counts"])
+    assert cat.read("empty").count() == 0
+
+    df = spark.range(0, 100, 1, 3).select(
+        F.col("id"), (F.col("id") % 4).cast("string").alias("k")
+    )
+    m = cat.write("parts", df, partition_by="k")
+    data = os.path.join(str(tmp_path), "parts", m["snapshot_dir"], "data")
+    files = sorted(
+        os.path.join(d, f) for d, _, names in os.walk(data) for f in names
+        if f.endswith(".parquet")
+    )
+    parts = m["partition_counts"]
+    assert [p["partition_id"] for p in parts] == list(range(len(files)))
+    per_dir = {}
+    for f, p in zip(files, parts):
+        k = os.path.basename(os.path.dirname(f))
+        per_dir[k] = per_dir.get(k, 0) + p["rows"]
+    assert per_dir == {f"k={i}": 25 for i in range(4)}
+    assert m["row_count"] == 100
+    assert [f["name"] for f in m["schema"]["fields"]] == ["id", "k"]
+
+
+@pytest.mark.spark
 def test_time_travel(spark, tmp_path):
     cat = SnapshotCatalog(spark, str(tmp_path))
     cat.write("t", spark.range(10))
