@@ -2450,23 +2450,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # DuckDB oracles
 # ---------------------------------------------------------------------------
 
+# Python's str.strip() in DuckDB: its trim, like Spark's, strips only
+# U+0020, and RE2's \s is ASCII, so the 29 str.isspace() code points are
+# spelled out (the operators strip with chunk_patterns._STRIP_RE)
+_PY_SPACE = (r"[\x09-\x0d\x1c-\x20\x85\xa0\x{1680}\x{2000}-\x{200a}"
+             r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]")
+
+
+def _strip_sql(expr: str) -> str:
+    return f"regexp_replace({expr}, '^{_PY_SPACE}+|{_PY_SPACE}+$', '', 'g')"
+
+
 _FILTER_REASON_SQL = """
 CASE
-  WHEN length(trim(text)) < 50 THEN 'too_short'
-  WHEN length(trim(text)) > 100000 THEN 'too_long'
-  WHEN len(regexp_split_to_array(trim(text), '\\s+')) = 0 THEN 'repetitive'
-  WHEN CAST(len(list_distinct(regexp_split_to_array(trim(text), '\\s+'))) AS DOUBLE)
-       / len(regexp_split_to_array(trim(text), '\\s+')) < 0.3 THEN 'repetitive'
-  WHEN len(regexp_split_to_array(trim(text), '\\s+')) >= 4
-       AND CAST(len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                w -> lower(w) = lower(regexp_split_to_array(trim(text), '\\s+')[1]))) AS DOUBLE)
-           / len(regexp_split_to_array(trim(text), '\\s+')) > 0.7 THEN 'repetitive'
-  WHEN CAST(length(regexp_replace(trim(text), '[^\\p{L}\\p{N}]', '', 'g')) AS DOUBLE)
-       / length(trim(text)) < 0.3 THEN 'bad_char_distribution'
-  WHEN CAST((length(trim(text))
-             - length(regexp_replace(trim(text), '[^\\p{L}\\p{N}]', '', 'g'))
-             - length(regexp_replace(trim(text), '[^\\s]', '', 'g'))) AS DOUBLE)
-       / length(trim(text)) > 0.5 THEN 'bad_char_distribution'
+  WHEN length(s) < 50 THEN 'too_short'
+  WHEN length(s) > 100000 THEN 'too_long'
+  WHEN len(regexp_split_to_array(s, '\\s+')) = 0 THEN 'repetitive'
+  WHEN CAST(len(list_distinct(regexp_split_to_array(s, '\\s+'))) AS DOUBLE)
+       / len(regexp_split_to_array(s, '\\s+')) < 0.3 THEN 'repetitive'
+  WHEN len(regexp_split_to_array(s, '\\s+')) >= 4
+       AND CAST(len(list_filter(regexp_split_to_array(s, '\\s+'),
+                w -> lower(w) = lower(regexp_split_to_array(s, '\\s+')[1]))) AS DOUBLE)
+           / len(regexp_split_to_array(s, '\\s+')) > 0.7 THEN 'repetitive'
+  WHEN CAST(length(regexp_replace(s, '[^\\p{L}\\p{N}]', '', 'g')) AS DOUBLE)
+       / length(s) < 0.3 THEN 'bad_char_distribution'
+  WHEN CAST((length(s)
+             - length(regexp_replace(s, '[^\\p{L}\\p{N}]', '', 'g'))
+             - length(regexp_replace(s, '[^\\s]', '', 'g'))) AS DOUBLE)
+       / length(s) > 0.5 THEN 'bad_char_distribution'
   ELSE 'passed'
 END
 """
@@ -2485,7 +2496,8 @@ def oracle_sql() -> dict[str, str]:
     return {
         "doc_content_filter": f"""
             SELECT reason, COUNT(*) AS n_docs FROM (
-              SELECT {_FILTER_REASON_SQL} AS reason FROM documents
+              SELECT {_FILTER_REASON_SQL} AS reason
+              FROM (SELECT {_strip_sql('text')} AS s FROM documents)
             ) GROUP BY reason ORDER BY reason
         """,
         # SUM(BIGINT) is HUGEINT in DuckDB — cast back to BIGINT so the
@@ -2539,29 +2551,31 @@ def oracle_sql() -> dict[str, str]:
         """,
         # T5 quality score — mirrors operators/extract.with_quality_score
         # term by term in the same arithmetic order (IEEE doubles agree)
-        "doc_quality": """
+        "doc_quality": f"""
             WITH base AS (
               SELECT doc_id, text AS c, CAST(length(text) AS DOUBLE) AS total,
-                     list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)),
-                                 x -> x <> '') AS lines
+                     list_filter(list_transform(string_split(text, chr(10)),
+                                                x -> {_strip_sql('x')}),
+                                 x -> x <> '') AS lines,
+                     length({_strip_sql('text')}) AS stripped_len
               FROM documents
             ),
             m AS (
-              SELECT doc_id, c, total, lines,
-                     length(regexp_replace(c, '[^\\p{L}\\p{N}]', '', 'g')) / total AS text_ratio,
+              SELECT doc_id, c, total, lines, stripped_len,
+                     length(regexp_replace(c, '[^\\p{{L}}\\p{{N}}]', '', 'g')) / total AS text_ratio,
                      length(regexp_replace(c, '[^\\s]', '', 'g')) / total AS ws_ratio,
                      CASE WHEN len(lines) > 0 THEN
                        CAST(list_sum(list_transform(lines,
                             x -> len(regexp_split_to_array(x, '\\s+')))) AS DOUBLE) / len(lines)
                      ELSE 0.0 END AS avg_wpl,
                      regexp_matches(c, '[^\\x00-\\x7F]') AS has_artifacts,
-                     len(list_filter(regexp_split_to_array(c, '[^\\p{L}\\p{N}_]+'),
+                     len(list_filter(regexp_split_to_array(c, '[^\\p{{L}}\\p{{N}}_]+'),
                          w -> length(w) >= 1 AND length(w) <= 2)) > total * 0.1 AS has_fragmented,
                      contains(c, '   ') AS has_triple_space
               FROM base
             )
             SELECT doc_id,
-                   ROUND(CASE WHEN length(trim(c)) < 5 THEN 0.0 ELSE
+                   ROUND(CASE WHEN stripped_len < 5 THEN 0.0 ELSE
                      (text_ratio * 0.4 + (1.0 - ws_ratio) * 0.3
                       + LEAST(avg_wpl / 5, 1.0) * 0.3)
                      * (CASE WHEN has_artifacts THEN 0.8 ELSE 1.0 END)

@@ -30,14 +30,11 @@ decoder library for them exists in this container (SCALE.md).
 from __future__ import annotations
 
 import ctypes
-import ctypes.util
 import struct
-import threading
 
 import numpy as np
 
-_LOCK = threading.Lock()
-_STATE: dict[str, object] = {}
+from graphrag_mrkr_2_spark.functions.nativecodecs import load_library
 
 _DAV1D_CANDIDATES = ("libdav1d.so.6", "libdav1d.so",
                      "/usr/lib/x86_64-linux-gnu/libdav1d.so.6")
@@ -68,79 +65,33 @@ def _noop_free(_buf, _cookie):  # the Python-side buffer owns the memory
     return None
 
 
-def _load(name: str, candidates) -> object:
-    if name in _STATE:
-        return _STATE[name]
-    with _LOCK:
-        if name in _STATE:
-            return _STATE[name]
-        lib = None
-        names = list(candidates)
-        found = ctypes.util.find_library(name)
-        if found:
-            names.insert(0, found)
-        for cand in names:
-            try:
-                lib = ctypes.CDLL(cand)
-                break
-            except OSError:
-                continue
-        _STATE[name] = lib
-        return lib
+_VP, _INT = ctypes.c_void_p, ctypes.c_int
+_DAV1D_PROTOTYPES = {
+    "dav1d_default_settings": (None, [_VP]),
+    "dav1d_open": (_INT, [ctypes.POINTER(_VP), _VP]),
+    "dav1d_data_wrap": (_INT, [_VP, ctypes.c_char_p, ctypes.c_size_t,
+                               _FREE_CB_TYPE, _VP]),
+    "dav1d_send_data": (_INT, [_VP, _VP]),
+    "dav1d_get_picture": (_INT, [_VP, _VP]),
+    "dav1d_picture_unref": (None, [_VP]),
+    "dav1d_data_unref": (None, [_VP]),
+    "dav1d_close": (None, [ctypes.POINTER(_VP)]),
+}
+_AOM_PROTOTYPES = {
+    "aom_codec_av1_dx": (_VP, []),
+    "aom_codec_dec_init_ver": (_INT, [_VP, _VP, _VP, ctypes.c_long, _INT]),
+    "aom_codec_decode": (_INT, [_VP, ctypes.c_char_p, ctypes.c_size_t, _VP]),
+    "aom_codec_get_frame": (_VP, [_VP, ctypes.POINTER(_VP)]),
+    "aom_codec_destroy": (_INT, [_VP]),
+}
 
 
 def _load_dav1d():
-    lib = _load("dav1d", _DAV1D_CANDIDATES)
-    if lib is None or getattr(lib, "_bound", False):
-        return lib
-    try:
-        vp, i = ctypes.c_void_p, ctypes.c_int
-        lib.dav1d_default_settings.argtypes = [vp]
-        lib.dav1d_default_settings.restype = None
-        lib.dav1d_open.argtypes = [ctypes.POINTER(vp), vp]
-        lib.dav1d_open.restype = i
-        lib.dav1d_data_wrap.argtypes = [vp, ctypes.c_char_p, ctypes.c_size_t,
-                                        _FREE_CB_TYPE, vp]
-        lib.dav1d_data_wrap.restype = i
-        lib.dav1d_send_data.argtypes = [vp, vp]
-        lib.dav1d_send_data.restype = i
-        lib.dav1d_get_picture.argtypes = [vp, vp]
-        lib.dav1d_get_picture.restype = i
-        lib.dav1d_picture_unref.argtypes = [vp]
-        lib.dav1d_picture_unref.restype = None
-        lib.dav1d_data_unref.argtypes = [vp]
-        lib.dav1d_data_unref.restype = None
-        lib.dav1d_close.argtypes = [ctypes.POINTER(vp)]
-        lib.dav1d_close.restype = None
-        lib._bound = True
-    except AttributeError:
-        lib = None
-        _STATE["dav1d"] = None
-    return lib
+    return load_library(_DAV1D_CANDIDATES, _DAV1D_PROTOTYPES, find="dav1d")
 
 
 def _load_aom():
-    lib = _load("aom", _AOM_CANDIDATES)
-    if lib is None or getattr(lib, "_bound", False):
-        return lib
-    try:
-        vp, i = ctypes.c_void_p, ctypes.c_int
-        lib.aom_codec_av1_dx.argtypes = []
-        lib.aom_codec_av1_dx.restype = vp
-        lib.aom_codec_dec_init_ver.argtypes = [vp, vp, vp, ctypes.c_long, i]
-        lib.aom_codec_dec_init_ver.restype = i
-        lib.aom_codec_decode.argtypes = [vp, ctypes.c_char_p,
-                                         ctypes.c_size_t, vp]
-        lib.aom_codec_decode.restype = i
-        lib.aom_codec_get_frame.argtypes = [vp, ctypes.POINTER(vp)]
-        lib.aom_codec_get_frame.restype = vp
-        lib.aom_codec_destroy.argtypes = [vp]
-        lib.aom_codec_destroy.restype = i
-        lib._bound = True
-    except AttributeError:
-        lib = None
-        _STATE["aom"] = None
-    return lib
+    return load_library(_AOM_CANDIDATES, _AOM_PROTOTYPES, find="aom")
 
 
 def dav1d_available() -> bool:

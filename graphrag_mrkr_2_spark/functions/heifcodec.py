@@ -30,15 +30,12 @@ dims/codec/duration from the item-property boxes with no codec at all.
 from __future__ import annotations
 
 import ctypes
-import ctypes.util
 import os
 import tempfile
-import threading
 
 import numpy as np
 
-_LOCK = threading.Lock()
-_STATE: dict[str, object] = {}
+from graphrag_mrkr_2_spark.functions.nativecodecs import load_library
 
 _HEIF_CANDIDATES = (
     "libheif.so.1",
@@ -77,80 +74,49 @@ class _Nclx(ctypes.Structure):
     ]
 
 
-def _sig(lib, name, restype, argtypes):
-    fn = getattr(lib, name)
-    fn.restype = restype
-    fn.argtypes = argtypes
-    return fn
+_VP, _INT = ctypes.c_void_p, ctypes.c_int
+_P, _U8P = ctypes.POINTER, ctypes.POINTER(ctypes.c_uint8)
+# a libheif without one of these symbols (1.6.x lacks
+# heif_have_decoder_for_format) counts as unavailable
+_HEIF_PROTOTYPES = {
+    "heif_context_alloc": (_VP, []),
+    "heif_context_free": (None, [_VP]),
+    "heif_context_read_from_memory_without_copy": (
+        _HeifError, [_VP, _VP, ctypes.c_size_t, _VP]),
+    "heif_context_get_primary_image_handle": (_HeifError, [_VP, _P(_VP)]),
+    "heif_image_handle_get_width": (_INT, [_VP]),
+    "heif_image_handle_get_height": (_INT, [_VP]),
+    "heif_image_handle_has_alpha_channel": (_INT, [_VP]),
+    "heif_decode_image": (_HeifError, [_VP, _P(_VP), _INT, _INT, _VP]),
+    "heif_image_get_plane_readonly": (_U8P, [_VP, _INT, _P(_INT)]),
+    "heif_image_get_width": (_INT, [_VP, _INT]),
+    "heif_image_get_height": (_INT, [_VP, _INT]),
+    "heif_image_release": (None, [_VP]),
+    "heif_image_handle_release": (None, [_VP]),
+    "heif_have_decoder_for_format": (_INT, [_INT]),
+    "heif_have_encoder_for_format": (_INT, [_INT]),
+    "heif_context_get_encoder_for_format": (_HeifError, [_VP, _INT, _P(_VP)]),
+    "heif_encoder_release": (None, [_VP]),
+    "heif_encoder_set_lossless": (_HeifError, [_VP, _INT]),
+    "heif_encoder_set_parameter_string": (
+        _HeifError, [_VP, ctypes.c_char_p, ctypes.c_char_p]),
+    "heif_encoder_set_parameter_integer": (
+        _HeifError, [_VP, ctypes.c_char_p, _INT]),
+    "heif_image_create": (_HeifError, [_INT, _INT, _INT, _INT, _P(_VP)]),
+    "heif_image_add_plane": (_HeifError, [_VP, _INT, _INT, _INT, _INT]),
+    "heif_image_get_plane": (_U8P, [_VP, _INT, _P(_INT)]),
+    "heif_image_set_nclx_color_profile": (_HeifError, [_VP, _VP]),
+    "heif_nclx_color_profile_alloc": (_VP, []),
+    "heif_nclx_color_profile_free": (None, [_VP]),
+    "heif_context_encode_image": (_HeifError, [_VP, _VP, _VP, _VP, _P(_VP)]),
+    "heif_context_write_to_file": (_HeifError, [_VP, ctypes.c_char_p]),
+    "heif_encoding_options_alloc": (_VP, []),
+    "heif_encoding_options_free": (None, [_VP]),
+}
 
 
 def _load_heif():
-    """CDLL for libheif with argtypes set, or None. Cached per process."""
-    if "heif" in _STATE:
-        return _STATE["heif"]
-    with _LOCK:
-        if "heif" in _STATE:
-            return _STATE["heif"]
-        lib = None
-        names = list(_HEIF_CANDIDATES)
-        found = ctypes.util.find_library("heif")
-        if found:
-            names.insert(0, found)
-        for name in names:
-            try:
-                lib = ctypes.CDLL(name)
-                break
-            except OSError:
-                continue
-        try:
-            if lib is None:
-                raise AttributeError("libheif not loadable")
-            p, vp, i = ctypes.POINTER, ctypes.c_void_p, ctypes.c_int
-            u8p = p(ctypes.c_uint8)
-            _sig(lib, "heif_context_alloc", vp, [])
-            _sig(lib, "heif_context_free", None, [vp])
-            _sig(lib, "heif_context_read_from_memory_without_copy",
-                 _HeifError, [vp, vp, ctypes.c_size_t, vp])
-            _sig(lib, "heif_context_get_primary_image_handle",
-                 _HeifError, [vp, p(vp)])
-            _sig(lib, "heif_image_handle_get_width", i, [vp])
-            _sig(lib, "heif_image_handle_get_height", i, [vp])
-            _sig(lib, "heif_image_handle_has_alpha_channel", i, [vp])
-            _sig(lib, "heif_decode_image", _HeifError, [vp, p(vp), i, i, vp])
-            _sig(lib, "heif_image_get_plane_readonly", u8p, [vp, i, p(i)])
-            _sig(lib, "heif_image_get_width", i, [vp, i])
-            _sig(lib, "heif_image_get_height", i, [vp, i])
-            _sig(lib, "heif_image_release", None, [vp])
-            _sig(lib, "heif_image_handle_release", None, [vp])
-            _sig(lib, "heif_have_decoder_for_format", i, [i])
-            _sig(lib, "heif_have_encoder_for_format", i, [i])
-            _sig(lib, "heif_context_get_encoder_for_format",
-                 _HeifError, [vp, i, p(vp)])
-            _sig(lib, "heif_encoder_release", None, [vp])
-            _sig(lib, "heif_encoder_set_lossless", _HeifError, [vp, i])
-            _sig(lib, "heif_encoder_set_parameter_string", _HeifError,
-                 [vp, ctypes.c_char_p, ctypes.c_char_p])
-            _sig(lib, "heif_encoder_set_parameter_integer", _HeifError,
-                 [vp, ctypes.c_char_p, i])
-            _sig(lib, "heif_image_create", _HeifError, [i, i, i, i, p(vp)])
-            _sig(lib, "heif_image_add_plane", _HeifError, [vp, i, i, i, i])
-            _sig(lib, "heif_image_get_plane", u8p, [vp, i, p(i)])
-            _sig(lib, "heif_image_set_nclx_color_profile", _HeifError, [vp, vp])
-            _sig(lib, "heif_nclx_color_profile_alloc", vp, [])
-            _sig(lib, "heif_nclx_color_profile_free", None, [vp])
-            _sig(lib, "heif_context_encode_image", _HeifError,
-                 [vp, vp, vp, vp, p(vp)])
-            _sig(lib, "heif_context_write_to_file", _HeifError,
-                 [vp, ctypes.c_char_p])
-            _sig(lib, "heif_encoding_options_alloc", vp, [])
-            _sig(lib, "heif_encoding_options_free", None, [vp])
-        except AttributeError:
-            # a libheif too old to export every bound symbol (e.g. 1.6.x
-            # predates heif_have_decoder_for_format) is "unavailable", not
-            # a crash — callers check for None (review r6 finding #1)
-            lib = None
-        _STATE["heif"] = lib
-        return lib
+    return load_library(_HEIF_CANDIDATES, _HEIF_PROTOTYPES, find="heif")
 
 
 def _check(err: _HeifError, what: str) -> None:

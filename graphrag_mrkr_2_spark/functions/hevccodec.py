@@ -24,78 +24,44 @@ with partition count like every other codec kernel here.
 from __future__ import annotations
 
 import ctypes
-import ctypes.util
 import struct
 
 import numpy as np
+
+from graphrag_mrkr_2_spark.functions.nativecodecs import load_library
 
 # Shared layout convention with av1codec: 0=mono, 1=420, 2=422, 3=444.
 # de265_chroma uses the same numbering (de265.h: de265_chroma_mono=0,
 # _420=1, _422=2, _444=3), so planes flow into the same RGB kernels.
 _LAYOUT_I400, _LAYOUT_I420, _LAYOUT_I422, _LAYOUT_I444 = 0, 1, 2, 3
 
-_DE265_CANDIDATES = ("libde265.so.0", "libde265.so", "de265")
-
-_STATE: dict = {}
+_DE265_CANDIDATES = ("libde265.so.0", "libde265.so")
+_VP, _INT = ctypes.c_void_p, ctypes.c_int
+_DE265_PROTOTYPES = {
+    "de265_new_decoder": (_VP, []),
+    "de265_free_decoder": (_INT, [_VP]),
+    # de265_error de265_push_NAL(ctx, const void*, int, de265_PTS (int64),
+    #                            void* user)
+    "de265_push_NAL": (_INT, [_VP, ctypes.c_char_p, _INT, ctypes.c_int64,
+                              _VP]),
+    "de265_flush_data": (_INT, [_VP]),
+    "de265_decode": (_INT, [_VP, ctypes.POINTER(_INT)]),
+    "de265_peek_next_picture": (_VP, [_VP]),
+    "de265_release_next_picture": (None, [_VP]),
+    "de265_get_image_width": (_INT, [_VP, _INT]),
+    "de265_get_image_height": (_INT, [_VP, _INT]),
+    "de265_get_chroma_format": (_INT, [_VP]),
+    "de265_get_bits_per_pixel": (_INT, [_VP, _INT]),
+    "de265_get_image_plane": (ctypes.POINTER(ctypes.c_uint8),
+                              [_VP, _INT, ctypes.POINTER(_INT)]),
+    "de265_get_image_matrix_coefficients": (_INT, [_VP]),
+    "de265_get_image_full_range_flag": (_INT, [_VP]),
+    "de265_get_error_text": (ctypes.c_char_p, [_INT]),
+}
 
 
 def _load_de265():
-    if "de265" in _STATE:
-        return _STATE["de265"]
-    lib = None
-    for name in _DE265_CANDIDATES:
-        try:
-            lib = ctypes.CDLL(name)
-            break
-        except OSError:
-            lib = None
-    if lib is None:
-        found = ctypes.util.find_library("de265")
-        if found:
-            try:
-                lib = ctypes.CDLL(found)
-            except OSError:
-                lib = None
-    if lib is not None:
-        try:
-            vp, i = ctypes.c_void_p, ctypes.c_int
-            lib.de265_new_decoder.argtypes = []
-            lib.de265_new_decoder.restype = vp
-            lib.de265_free_decoder.argtypes = [vp]
-            lib.de265_free_decoder.restype = i
-            # de265_error de265_push_NAL(ctx, const void*, int,
-            #                            de265_PTS (int64), void* user)
-            lib.de265_push_NAL.argtypes = [vp, ctypes.c_char_p, i,
-                                           ctypes.c_int64, vp]
-            lib.de265_push_NAL.restype = i
-            lib.de265_flush_data.argtypes = [vp]
-            lib.de265_flush_data.restype = i
-            lib.de265_decode.argtypes = [vp, ctypes.POINTER(i)]
-            lib.de265_decode.restype = i
-            lib.de265_peek_next_picture.argtypes = [vp]
-            lib.de265_peek_next_picture.restype = vp
-            lib.de265_release_next_picture.argtypes = [vp]
-            lib.de265_release_next_picture.restype = None
-            lib.de265_get_image_width.argtypes = [vp, i]
-            lib.de265_get_image_width.restype = i
-            lib.de265_get_image_height.argtypes = [vp, i]
-            lib.de265_get_image_height.restype = i
-            lib.de265_get_chroma_format.argtypes = [vp]
-            lib.de265_get_chroma_format.restype = i
-            lib.de265_get_bits_per_pixel.argtypes = [vp, i]
-            lib.de265_get_bits_per_pixel.restype = i
-            lib.de265_get_image_plane.argtypes = [vp, i, ctypes.POINTER(i)]
-            lib.de265_get_image_plane.restype = ctypes.POINTER(ctypes.c_uint8)
-            lib.de265_get_image_matrix_coefficients.argtypes = [vp]
-            lib.de265_get_image_matrix_coefficients.restype = i
-            lib.de265_get_image_full_range_flag.argtypes = [vp]
-            lib.de265_get_image_full_range_flag.restype = i
-            lib.de265_get_error_text.argtypes = [i]
-            lib.de265_get_error_text.restype = ctypes.c_char_p
-        except AttributeError:
-            lib = None  # too-old libde265 without a needed accessor
-    _STATE["de265"] = lib
-    return lib
+    return load_library(_DE265_CANDIDATES, _DE265_PROTOTYPES, find="de265")
 
 
 def de265_available() -> bool:

@@ -27,8 +27,9 @@ contain hostile payloads).
 from __future__ import annotations
 
 import ctypes
-import functools
 import zlib
+
+from graphrag_mrkr_2_spark.functions.nativecodecs import load_library
 
 _DEFAULT_MAX_OUTPUT = 64 << 20  # 64 MiB decompressed per payload
 
@@ -199,16 +200,13 @@ _PROTOTYPES = {
 }
 
 
-@functools.cache
 def _native(name: str) -> ctypes.CDLL:
-    """Load a system library by soname and set its prototypes, once per
-    process (the WARC path decodes one payload per record). A missing
+    """The system library ``name`` with its prototypes bound. A missing
     library raises OSError: the br/zstd tokens have no other decoder, so
     it must fail the task rather than quarantine every such record."""
-    lib = ctypes.CDLL(_SONAMES[name])
-    for fn, (restype, argtypes) in _PROTOTYPES[name].items():
-        proto = getattr(lib, fn)
-        proto.restype, proto.argtypes = restype, argtypes
+    lib = load_library((_SONAMES[name],), _PROTOTYPES[name])
+    if lib is None:
+        raise OSError(f"{_SONAMES[name]} is not loadable")
     return lib
 
 

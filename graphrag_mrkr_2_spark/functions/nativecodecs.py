@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import ctypes
 import ctypes.util
+import functools
 import os
 import subprocess
 import threading
@@ -40,8 +41,45 @@ from typing import Optional
 
 import numpy as np
 
-_LOCK = threading.Lock()
-_STATE: dict[str, object] = {}
+# (find, *candidates) -> the bound CDLL, or None when unavailable
+_LIBRARIES: dict = {}
+# guards _LIBRARIES and the JPEG shim compile, whose scratch file names are
+# unique per process, not per thread
+_LOAD_LOCK = threading.Lock()
+
+
+def load_library(candidates, prototypes, find=None):
+    """The one loader of native libraries: a ``ctypes.CDLL`` for the first
+    of ``ctypes.util.find_library(find)`` and ``candidates`` (sonames or
+    paths) that loads, with each ``{symbol: (restype, argtypes)}`` entry of
+    ``prototypes`` bound. None when none loads or a symbol is missing: a
+    library too old to export one counts as unavailable, not as a crash.
+    Each ``(find, candidates)`` loads once per process, bound to the table
+    of its first call."""
+    key = (find, *candidates)
+    with _LOAD_LOCK:
+        if key not in _LIBRARIES:
+            _LIBRARIES[key] = _bind(
+                (ctypes.util.find_library(find) if find else None, *candidates),
+                prototypes)
+        return _LIBRARIES[key]
+
+
+def _bind(names, prototypes):
+    for name in filter(None, names):
+        try:
+            lib = ctypes.CDLL(name)
+        except OSError:
+            continue
+        try:
+            for symbol, (restype, argtypes) in prototypes.items():
+                fn = getattr(lib, symbol)
+                fn.restype, fn.argtypes = restype, argtypes
+        except AttributeError:
+            return None
+        return lib
+    return None
+
 
 # ---------------------------------------------------------------------------
 # libwebp (no compile needed — the distro ships the full decode API)
@@ -52,44 +90,18 @@ _WEBP_CANDIDATES = (
     "libwebp.so",
     "/usr/lib/x86_64-linux-gnu/libwebp.so.7",
 )
+_WEBP_PROTOTYPES = {
+    "WebPDecodeRGBA": (
+        ctypes.POINTER(ctypes.c_uint8),
+        [ctypes.c_char_p, ctypes.c_size_t, ctypes.POINTER(ctypes.c_int),
+         ctypes.POINTER(ctypes.c_int)]),
+    # WebPFree needs libwebp >= 0.5
+    "WebPFree": (None, [ctypes.c_void_p]),
+}
 
 
 def _load_webp():
-    """CDLL for libwebp with argtypes set, or None. Cached per process."""
-    if "webp" in _STATE:
-        return _STATE["webp"]
-    with _LOCK:
-        if "webp" in _STATE:
-            return _STATE["webp"]
-        lib = None
-        names = list(_WEBP_CANDIDATES)
-        found = ctypes.util.find_library("webp")
-        if found:
-            names.insert(0, found)
-        for name in names:
-            try:
-                lib = ctypes.CDLL(name)
-                break
-            except OSError:
-                continue
-        try:
-            if lib is None:
-                raise AttributeError("libwebp not loadable")
-            lib.WebPDecodeRGBA.restype = ctypes.POINTER(ctypes.c_uint8)
-            lib.WebPDecodeRGBA.argtypes = [
-                ctypes.c_char_p,
-                ctypes.c_size_t,
-                ctypes.POINTER(ctypes.c_int),
-                ctypes.POINTER(ctypes.c_int),
-            ]
-            lib.WebPFree.restype = None
-            lib.WebPFree.argtypes = [ctypes.c_void_p]
-        except AttributeError:
-            # a libwebp too old to export every bound symbol (WebPFree
-            # needs >= 0.5) is "unavailable", not a crash (review r6 #1)
-            lib = None
-        _STATE["webp"] = lib
-        return lib
+    return load_library(_WEBP_CANDIDATES, _WEBP_PROTOTYPES, find="webp")
 
 
 def webp_available() -> bool:
@@ -225,31 +237,25 @@ def _compile_jpeg_shim(cache: str) -> Optional[str]:
             pass
 
 
+_JPEG_SHIM_PROTOTYPES = {
+    "shim_decode_jpeg": (
+        ctypes.POINTER(ctypes.c_uint8),
+        [ctypes.c_char_p, ctypes.c_ulong, ctypes.POINTER(ctypes.c_int),
+         ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int)]),
+    "shim_free": (None, [ctypes.POINTER(ctypes.c_uint8)]),
+}
+
+
+@functools.cache
+def _jpeg_shim_path() -> Optional[str]:
+    with _LOAD_LOCK:
+        return _compile_jpeg_shim(_cache_dir())
+
+
 def _load_jpeg_shim():
-    if "jpeg" in _STATE:
-        return _STATE["jpeg"]
-    with _LOCK:
-        if "jpeg" in _STATE:
-            return _STATE["jpeg"]
-        lib = None
-        so_path = _compile_jpeg_shim(_cache_dir())
-        if so_path is not None:
-            try:
-                lib = ctypes.CDLL(so_path)
-                lib.shim_decode_jpeg.restype = ctypes.POINTER(ctypes.c_uint8)
-                lib.shim_decode_jpeg.argtypes = [
-                    ctypes.c_char_p,
-                    ctypes.c_ulong,
-                    ctypes.POINTER(ctypes.c_int),
-                    ctypes.POINTER(ctypes.c_int),
-                    ctypes.POINTER(ctypes.c_int),
-                ]
-                lib.shim_free.restype = None
-                lib.shim_free.argtypes = [ctypes.POINTER(ctypes.c_uint8)]
-            except OSError:
-                lib = None
-        _STATE["jpeg"] = lib
-        return lib
+    so_path = _jpeg_shim_path()
+    return None if so_path is None else load_library(
+        (so_path,), _JPEG_SHIM_PROTOTYPES)
 
 
 def jpeg_available() -> bool:
@@ -291,7 +297,7 @@ class NativeImageDecoder:
     """Picklable decoder for ``image_features(decoder=...)``.
 
     Holds only plain config so Spark can ship it to executors; the ctypes
-    handles load lazily per worker process (module-level ``_STATE`` cache).
+    handles load lazily, once per worker process (``load_library``).
     ``__call__(payload, fmt)`` returns decoded pixels or None — None means
     "not mine / native rejected it", and the operator falls back to the
     pure kernel, so injection can never lose a payload the pure path

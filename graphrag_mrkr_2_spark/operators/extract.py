@@ -244,7 +244,8 @@ def with_content_filter(
     bad_char_distribution.
     """
     cfg = cfg or ContentFilterConfig()
-    c = F.trim(F.col(content_col))
+    # str.strip(), not F.trim (which strips only U+0020), as in the twin
+    c = F.regexp_replace(F.col(content_col), _STRIP_RE, "")
     length = F.length(c)
     words = F.split(c, r"\s+")
     n_words = F.size(words)
@@ -297,15 +298,6 @@ def filter_chunks(chunks: DataFrame, cfg: ContentFilterConfig | None = None) -> 
     )
 
 
-def filter_metrics(chunks: DataFrame, content_col: str = "content", cfg: ContentFilterConfig | None = None) -> DataFrame:
-    """Histogram of filter reasons (content_filters.py:23-70 FilterMetrics)."""
-    return (
-        with_content_filter(chunks, content_col, cfg)
-        .groupBy(F.coalesce(F.col("filter_reason"), F.lit("passed")).alias("reason"))
-        .agg(F.count(F.lit(1)).alias("n_chunks"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # T5: quality scoring — column expressions (oracle: functions/quality.py)
 # ---------------------------------------------------------------------------
@@ -325,8 +317,11 @@ def with_quality_score(chunks: DataFrame, content_col: str = "content") -> DataF
     text_ratio = alnum / total
     ws_ratio = space / total
 
+    # str.strip() per line and on the whole text, as in the twin (F.trim
+    # strips only U+0020)
     lines = F.filter(
-        F.transform(F.split(c, "\n"), lambda x: F.trim(x)), lambda x: x != ""
+        F.transform(F.split(c, "\n"), lambda x: F.regexp_replace(x, _STRIP_RE, "")),
+        lambda x: x != "",
     )
     total_words = F.aggregate(
         lines, F.lit(0), lambda acc, x: acc + F.size(F.split(x, r"\s+"))
@@ -354,7 +349,9 @@ def with_quality_score(chunks: DataFrame, content_col: str = "content") -> DataF
         * F.when(has_triple_space, 0.9).otherwise(1.0)
         * F.when(total < 30, 0.6).otherwise(1.0)
     )
-    score = F.when(F.length(F.trim(c)) < 5, F.lit(0.0)).otherwise(score)
+    score = F.when(
+        F.length(F.regexp_replace(c, _STRIP_RE, "")) < 5, F.lit(0.0)
+    ).otherwise(score)
     return chunks.withColumn("quality_score", score)
 
 

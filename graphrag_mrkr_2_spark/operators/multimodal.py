@@ -100,6 +100,48 @@ def media_repartition(df: DataFrame, num_partitions: int, payload_col: str = "pa
     return df.repartition(num_partitions, F.xxhash64(F.col(payload_col)))
 
 
+def _row_table(df: DataFrame, key_col: str, value_col: str,
+               schema: StructType, rows_of, strict: bool) -> DataFrame:
+    """The one row walk of the payload and round-trip operators: a
+    ``mapInPandas`` over ``(key_col, value_col)`` whose rows are
+    ``(str(key), *row)`` for each tuple ``rows_of(value)`` yields, with the
+    columns of ``schema``. When ``rows_of`` raises, ``strict`` re-raises and
+    otherwise quarantines that input row (zero output rows)."""
+    columns = schema.fieldNames()
+
+    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for key, value in zip(pdf[key_col], pdf[value_col]):
+                try:
+                    out = list(rows_of(value))
+                except Exception:
+                    if strict:
+                        raise
+                    continue  # quarantine: malformed payload, zero rows
+                rows += [(str(key), *row) for row in out]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.select(*dict.fromkeys((key_col, value_col))).mapInPandas(
+        _walk, schema)
+
+
+def _weighted_checksum(arr: np.ndarray) -> str:
+    """The round-trip kernels' checksum: sum(value * (flat index + 1)) over
+    ``arr`` in C order, as a string (DuckDB recomputes it from the
+    formula; a string sidesteps its HUGEINT SUM vs Spark BIGINT)."""
+    flat = arr.astype(np.int64).ravel()
+    return str(int(flat @ np.arange(1, flat.size + 1, dtype=np.int64)))
+
+
+def _formula_pixels(shape: tuple, base: int, steps: tuple) -> np.ndarray:
+    """The round-trip kernels' deterministic uint8 pixels over ``shape``:
+    (base + sum(index_k * steps_k)) mod 256."""
+    idx = np.indices(shape, dtype=np.int64)
+    return ((base + sum(s * i for s, i in zip(steps, idx))) % 256).astype(
+        np.uint8)
+
+
 DECODED_DOC_SCHEMA = StructType(
     [
         StructField("media_id", StringType(), False),
@@ -466,55 +508,20 @@ def image_roundtrip_checksums(
         encode_webp_lossless,
     )
 
-    weights = (
-        np.arange(height * width * 3, dtype=np.int64).reshape(height, width, 3) + 1
-    )
-    r_idx = np.arange(height, dtype=np.int64)[:, None, None]
-    c_idx = np.arange(width, dtype=np.int64)[None, :, None]
-    ch_idx = np.arange(3, dtype=np.int64)[None, None, :]
+    def rows_of(doc_id):
+        doc_id = int(doc_id)
+        px = _formula_pixels((height, width, 3), doc_id * 7, (31, 13, 5))
+        codecs = (
+            (lambda p: encode_png(p, filter_type=doc_id % 5), decode_png),
+            (encode_bmp, decode_bmp),
+            (encode_gif, decode_gif),
+            (encode_webp_lossless, decode_webp),
+        )
+        yield width, height, *(
+            _weighted_checksum(dec(enc(px))) for enc, dec in codecs)
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                doc_id = int(getattr(rec, id_col))
-                px = (
-                    (doc_id * 7 + r_idx * 31 + c_idx * 13 + ch_idx * 5) % 256
-                ).astype(np.uint8)
-                sums = {}
-                for fmt, enc, dec in (
-                    ("png", lambda p: encode_png(p, filter_type=doc_id % 5), decode_png),
-                    ("bmp", encode_bmp, decode_bmp),
-                    ("gif", encode_gif, decode_gif),
-                    ("webp", encode_webp_lossless, decode_webp),
-                ):
-                    back = dec(enc(px)).astype(np.int64)
-                    sums[fmt] = str(int((back * weights).sum()))
-                rows.append(
-                    {
-                        "doc_id": str(doc_id),
-                        "width": width,
-                        "height": height,
-                        "png_checksum": sums["png"],
-                        "bmp_checksum": sums["bmp"],
-                        "gif_checksum": sums["gif"],
-                        "webp_checksum": sums["webp"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "png_checksum",
-                    "bmp_checksum",
-                    "gif_checksum",
-                    "webp_checksum",
-                ],
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(_roundtrip, IMAGE_ROUNDTRIP_SCHEMA)
+    return _row_table(df, id_col, id_col, IMAGE_ROUNDTRIP_SCHEMA, rows_of,
+                      strict=True)
 
 
 HEIF_ROUNDTRIP_SCHEMA = StructType(
@@ -548,45 +555,15 @@ def heif_roundtrip_checksums(
         encode_heif_lossless,
     )
 
-    weights = (
-        np.arange(height * width * 3, dtype=np.int64).reshape(height, width, 3) + 1
-    )
-    r_idx = np.arange(height, dtype=np.int64)[:, None, None]
-    c_idx = np.arange(width, dtype=np.int64)[None, :, None]
-    ch_idx = np.arange(3, dtype=np.int64)[None, None, :]
+    def rows_of(doc_id):
+        px = _formula_pixels((height, width, 3), int(doc_id) * 7, (31, 13, 5))
+        yield width, height, *(
+            _weighted_checksum(
+                decode_heif_native(encode_heif_lossless(px, fmt=fmt)))
+            for fmt in ("avif", "heic"))
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                doc_id = int(getattr(rec, id_col))
-                px = (
-                    (doc_id * 7 + r_idx * 31 + c_idx * 13 + ch_idx * 5) % 256
-                ).astype(np.uint8)
-                sums = {}
-                for fmt in ("avif", "heic"):
-                    back = decode_heif_native(
-                        encode_heif_lossless(px, fmt=fmt)
-                    ).astype(np.int64)
-                    sums[fmt] = str(int((back * weights).sum()))
-                rows.append(
-                    {
-                        "doc_id": str(doc_id),
-                        "width": width,
-                        "height": height,
-                        "avif_checksum": sums["avif"],
-                        "heic_checksum": sums["heic"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height",
-                    "avif_checksum", "heic_checksum",
-                ],
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(_roundtrip, HEIF_ROUNDTRIP_SCHEMA)
+    return _row_table(df, id_col, id_col, HEIF_ROUNDTRIP_SCHEMA, rows_of,
+                      strict=True)
 
 
 AV1_ROUNDTRIP_SCHEMA = StructType(
@@ -621,46 +598,16 @@ def av1_roundtrip_checksums(
     )
     from graphrag_mrkr_2_spark.functions.heifcodec import encode_heif_lossless
 
-    f_idx = np.arange(n_frames, dtype=np.int64)[:, None, None, None]
-    r_idx = np.arange(height, dtype=np.int64)[None, :, None, None]
-    c_idx = np.arange(width, dtype=np.int64)[None, None, :, None]
-    ch_idx = np.arange(3, dtype=np.int64)[None, None, None, :]
-    weights = (
-        np.arange(n_frames * height * width * 3, dtype=np.int64)
-        .reshape(n_frames, height, width, 3) + 1
-    )
+    def rows_of(doc_id):
+        px = _formula_pixels((n_frames, height, width, 3), int(doc_id) * 7,
+                             (97, 31, 13, 5))
+        obus = [avif_primary_obu(encode_heif_lossless(frame)) for frame in px]
+        samples = mkv_video_samples(mux_webm_av1(obus, width, height))
+        decoded = decode_av1_frames([p for _, _, p in samples])
+        yield n_frames, width, height, _weighted_checksum(np.stack(decoded))
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                doc_id = int(getattr(rec, id_col))
-                px = (
-                    (doc_id * 7 + f_idx * 97 + r_idx * 31 + c_idx * 13
-                     + ch_idx * 5) % 256
-                ).astype(np.uint8)
-                obus = [avif_primary_obu(encode_heif_lossless(px[f]))
-                        for f in range(n_frames)]
-                webm = mux_webm_av1(obus, width, height)
-                samples = mkv_video_samples(webm)
-                decoded = decode_av1_frames([p for _, _, p in samples])
-                back = np.stack(decoded).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": str(doc_id),
-                        "n_frames": n_frames,
-                        "width": width,
-                        "height": height,
-                        "av1_checksum": str(int((back * weights).sum())),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "width", "height",
-                         "av1_checksum"],
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(_roundtrip, AV1_ROUNDTRIP_SCHEMA)
+    return _row_table(df, id_col, id_col, AV1_ROUNDTRIP_SCHEMA, rows_of,
+                      strict=True)
 
 
 HEVC_ROUNDTRIP_SCHEMA = StructType(
@@ -702,51 +649,22 @@ def hevc_roundtrip_checksums(
         mux_mp4_video,
     )
 
-    f_idx = np.arange(n_frames, dtype=np.int64)[:, None, None, None]
-    r_idx = np.arange(height, dtype=np.int64)[None, :, None, None]
-    c_idx = np.arange(width, dtype=np.int64)[None, None, :, None]
-    ch_idx = np.arange(3, dtype=np.int64)[None, None, None, :]
-    weights = (
-        np.arange(n_frames * height * width * 3, dtype=np.int64)
-        .reshape(n_frames, height, width, 3) + 1
-    )
+    def rows_of(doc_id):
+        px = _formula_pixels((n_frames, height, width, 3), int(doc_id) * 11,
+                             (89, 29, 17, 3))
+        record, samples = encode_hevc_samples(list(px))
+        mp4 = mux_mp4_video(samples, width, height, "hvc1", record)
+        info = mp4_video_track_info(mp4)
+        cfg = parse_hvcc(info["config"])
+        nals = list(cfg["param_nals"])
+        for _, _, p in info["samples"]:
+            nals += split_length_prefixed(p, cfg["nal_length_size"])
+        decoded = decode_hevc_frames(
+            nals, width=info["width"], height=info["height"])
+        yield n_frames, width, height, _weighted_checksum(np.stack(decoded))
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                doc_id = int(getattr(rec, id_col))
-                px = (
-                    (doc_id * 11 + f_idx * 89 + r_idx * 29 + c_idx * 17
-                     + ch_idx * 3) % 256
-                ).astype(np.uint8)
-                record, samples = encode_hevc_samples(
-                    [px[f] for f in range(n_frames)])
-                mp4 = mux_mp4_video(samples, width, height, "hvc1", record)
-                info = mp4_video_track_info(mp4)
-                cfg = parse_hvcc(info["config"])
-                nals = list(cfg["param_nals"])
-                for _, _, p in info["samples"]:
-                    nals += split_length_prefixed(p, cfg["nal_length_size"])
-                decoded = decode_hevc_frames(
-                    nals, width=info["width"], height=info["height"])
-                back = np.stack(decoded).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": str(doc_id),
-                        "n_frames": n_frames,
-                        "width": width,
-                        "height": height,
-                        "hevc_checksum": str(int((back * weights).sum())),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "width", "height",
-                         "hevc_checksum"],
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(_roundtrip, HEVC_ROUNDTRIP_SCHEMA)
+    return _row_table(df, id_col, id_col, HEVC_ROUNDTRIP_SCHEMA, rows_of,
+                      strict=True)
 
 
 AUDIO_ROUNDTRIP_SCHEMA = StructType(
@@ -773,29 +691,13 @@ def audio_roundtrip_checksums(
 
     idx = np.arange(n_samples, dtype=np.int64)
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                doc_id = int(getattr(rec, id_col))
-                s = (((doc_id * 31 + idx * 17) % 65536) - 32768).astype(np.int16)
-                back, got_rate = decode_wav(encode_wav(s, rate))
-                checksum = int(
-                    (back[:, 0].astype(np.int64) * (idx + 1)).sum()
-                )
-                rows.append(
-                    {
-                        "doc_id": str(doc_id),
-                        "n_samples": int(back.shape[0]),
-                        "sample_rate": int(got_rate),
-                        "wav_checksum": str(checksum),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "sample_rate", "wav_checksum"]
-            )
+    def rows_of(doc_id):
+        s = (((int(doc_id) * 31 + idx * 17) % 65536) - 32768).astype(np.int16)
+        back, got_rate = decode_wav(encode_wav(s, rate))
+        yield int(back.shape[0]), int(got_rate), _weighted_checksum(back[:, 0])
 
-    return df.select(F.col(id_col)).mapInPandas(_roundtrip, AUDIO_ROUNDTRIP_SCHEMA)
+    return _row_table(df, id_col, id_col, AUDIO_ROUNDTRIP_SCHEMA, rows_of,
+                      strict=True)
 
 
 FRAME_SCHEMA = StructType(
@@ -1359,31 +1261,15 @@ def with_probed_media(df: DataFrame, id_col: str = "media_id", payload_col: str 
     """(id, payload) → full MEDIA_SCHEMA rows with kind/codec/dims/duration
     probed from the real container headers. Unknown payloads keep
     kind='unknown' so downstream filters can quarantine them."""
+    meta_fields = MEDIA_SCHEMA["meta"].dataType.fieldNames()
 
-    def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(getattr(rec, payload_col)) if getattr(rec, payload_col) is not None else b""
-                p = probe_media(payload)
-                rows.append(
-                    {
-                        "media_id": str(getattr(rec, id_col)),
-                        "kind": p["kind"] or "unknown",
-                        "payload": payload,
-                        "meta": {
-                            "codec": p["codec"],
-                            "width": p["width"],
-                            "height": p["height"],
-                            "duration_ms": p["duration_ms"],
-                            "sample_rate": p["sample_rate"],
-                            "channels": p["channels"],
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
+    def rows_of(payload):
+        payload = bytes(payload or b"")
+        p = probe_media(payload)
+        yield p["kind"] or "unknown", payload, {k: p[k] for k in meta_fields}
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(_probe, MEDIA_SCHEMA)
+    return _row_table(df, id_col, payload_col, MEDIA_SCHEMA, rows_of,
+                      strict=True)
 
 
 def metadata_only_stats(media: DataFrame) -> DataFrame:
@@ -1538,64 +1424,34 @@ def extract_subtitle_text(media: DataFrame, strict: bool = False) -> DataFrame:
     capped (subtitles.MAX_CUES) so one adversarial payload cannot fan
     out unboundedly. strict=True raises on undecodable payloads,
     strict=False quarantines them (zero rows for that id)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from graphrag_mrkr_2_spark.functions.mediaprobe import (
-            sniff_mkv,
-            sniff_mp4,
-        )
-        from graphrag_mrkr_2_spark.functions.subtitles import (
-            mkv_subtitle_cues,
-            mp4_subtitle_cues,
-            parse_ass,
-            parse_srt,
-            parse_webvtt,
-            sniff_subtitle,
-        )
-
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(rec.payload) if rec.payload is not None else b""
-                try:
-                    kind = sniff_subtitle(payload)
-                    if kind == "srt":
-                        cues = parse_srt(payload.decode("utf-8", "replace"))
-                    elif kind == "webvtt":
-                        cues = parse_webvtt(
-                            payload.decode("utf-8", "replace"))
-                    elif kind == "ass":
-                        cues = parse_ass(
-                            payload.decode("utf-8", "replace"))
-                    elif sniff_mkv(payload):
-                        cues = mkv_subtitle_cues(payload)
-                    elif sniff_mp4(payload):
-                        cues = mp4_subtitle_cues(payload)
-                    else:
-                        raise ValueError("no subtitle content detected")
-                except Exception:
-                    if strict:
-                        raise
-                    continue  # quarantine: malformed payload, zero rows
-                for i, (start, end, text) in enumerate(cues):
-                    rows.append(
-                        {
-                            "media_id": str(rec.media_id),
-                            "cue_index": i,
-                            "start_ms": int(start),
-                            "end_ms": int(end),
-                            "text": text,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "cue_index", "start_ms", "end_ms",
-                         "text"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _extract, SUBTITLE_SCHEMA
+    from graphrag_mrkr_2_spark.functions.mediaprobe import sniff_mkv, sniff_mp4
+    from graphrag_mrkr_2_spark.functions.subtitles import (
+        mkv_subtitle_cues,
+        mp4_subtitle_cues,
+        parse_ass,
+        parse_srt,
+        parse_webvtt,
+        sniff_subtitle,
     )
+
+    text_parsers = {"srt": parse_srt, "webvtt": parse_webvtt, "ass": parse_ass}
+
+    def rows_of(payload):
+        payload = bytes(payload or b"")
+        kind = sniff_subtitle(payload)
+        if kind in text_parsers:
+            cues = text_parsers[kind](payload.decode("utf-8", "replace"))
+        elif sniff_mkv(payload):
+            cues = mkv_subtitle_cues(payload)
+        elif sniff_mp4(payload):
+            cues = mp4_subtitle_cues(payload)
+        else:
+            raise ValueError("no subtitle content detected")
+        for i, (start, end, text) in enumerate(cues):
+            yield i, int(start), int(end), text
+
+    return _row_table(media, "media_id", "payload", SUBTITLE_SCHEMA, rows_of,
+                      strict)
 
 
 MEDIA_TAGS_SCHEMA = StructType(
@@ -1619,42 +1475,16 @@ def extract_media_tags_table(media: DataFrame, strict: bool = False) -> DataFram
     with normalized columns; unrecognized/malformed payloads quarantine
     to zero rows (strict=True raises). Arrow mapInPandas like every
     other payload kernel here."""
+    from graphrag_mrkr_2_spark.functions.mediatags import extract_media_tags
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from graphrag_mrkr_2_spark.functions.mediatags import (
-            extract_media_tags,
-        )
+    tag_fields = MEDIA_TAGS_SCHEMA.fieldNames()[1:]
 
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(rec.payload) if rec.payload is not None else b""
-                try:
-                    tags = extract_media_tags(payload)
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                rows.append(
-                    {
-                        "media_id": str(rec.media_id),
-                        "fmt": tags.get("fmt"),
-                        "title": tags.get("title"),
-                        "artist": tags.get("artist"),
-                        "album": tags.get("album"),
-                        "comment": tags.get("comment"),
-                        "lyrics": tags.get("lyrics"),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fmt", "title", "artist", "album",
-                         "comment", "lyrics"],
-            )
+    def rows_of(payload):
+        tags = extract_media_tags(bytes(payload or b""))
+        yield tuple(tags.get(f) for f in tag_fields)
 
-    return media.select("media_id", "payload").mapInPandas(
-        _extract, MEDIA_TAGS_SCHEMA
-    )
+    return _row_table(media, "media_id", "payload", MEDIA_TAGS_SCHEMA,
+                      rows_of, strict)
 
 
 EXIF_SCHEMA = StructType(
@@ -1680,44 +1510,16 @@ def extract_exif_table(media: DataFrame, strict: bool = False) -> DataFrame:
     drops. One normalized row per recognized payload; files without an
     Exif segment still emit their row (fmt set, text columns NULL);
     unrecognized/malformed payloads quarantine (strict=True raises)."""
+    from graphrag_mrkr_2_spark.functions.exiftags import extract_exif
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from graphrag_mrkr_2_spark.functions.exiftags import extract_exif
+    tag_fields = EXIF_SCHEMA.fieldNames()[1:]
 
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(rec.payload) if rec.payload is not None else b""
-                try:
-                    tags = extract_exif(payload)
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                rows.append(
-                    {
-                        "media_id": str(rec.media_id),
-                        "fmt": tags.get("fmt"),
-                        "description": tags.get("description"),
-                        "artist": tags.get("artist"),
-                        "copyright": tags.get("copyright"),
-                        "title": tags.get("title"),
-                        "comment": tags.get("comment"),
-                        "author": tags.get("author"),
-                        "subject": tags.get("subject"),
-                        "keywords": tags.get("keywords"),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fmt", "description", "artist",
-                         "copyright", "title", "comment", "author",
-                         "subject", "keywords"],
-            )
+    def rows_of(payload):
+        tags = extract_exif(bytes(payload or b""))
+        yield tuple(tags.get(f) for f in tag_fields)
 
-    return media.select("media_id", "payload").mapInPandas(
-        _extract, EXIF_SCHEMA
-    )
+    return _row_table(media, "media_id", "payload", EXIF_SCHEMA, rows_of,
+                      strict)
 
 
 CHAPTER_SCHEMA = StructType(
@@ -1736,54 +1538,28 @@ def extract_chapter_text(media: DataFrame, strict: bool = False) -> DataFrame:
     table-of-contents text of crawl video, one row per chapter.
     Payloads without a chapter structure quarantine to zero rows
     (strict=True raises)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from graphrag_mrkr_2_spark.functions.mediaprobe import (
-            sniff_mkv,
-            sniff_mp4,
-        )
-        from graphrag_mrkr_2_spark.functions.subtitles import (
-            mkv_chapters,
-            mp4_chapters,
-        )
-
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(rec.payload) if rec.payload is not None else b""
-                try:
-                    if sniff_mkv(payload):
-                        chapters = mkv_chapters(payload)
-                    elif sniff_mp4(payload):
-                        chapters = mp4_chapters(payload)
-                    else:
-                        raise ValueError("no chapter-bearing container")
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                # a well-formed container with no chapters is NOT an
-                # error (matches extract_subtitle_text's zero-cue
-                # behavior): zero rows, even under strict
-                if not chapters:
-                    continue
-                for i, (start, title) in enumerate(chapters):
-                    rows.append(
-                        {
-                            "media_id": str(rec.media_id),
-                            "chapter_index": i,
-                            "start_ms": int(start),
-                            "title": title,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "chapter_index", "start_ms", "title"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _extract, CHAPTER_SCHEMA
+    from graphrag_mrkr_2_spark.functions.mediaprobe import sniff_mkv, sniff_mp4
+    from graphrag_mrkr_2_spark.functions.subtitles import (
+        mkv_chapters,
+        mp4_chapters,
     )
+
+    def rows_of(payload):
+        payload = bytes(payload or b"")
+        if sniff_mkv(payload):
+            chapters = mkv_chapters(payload)
+        elif sniff_mp4(payload):
+            chapters = mp4_chapters(payload)
+        else:
+            raise ValueError("no chapter-bearing container")
+        # a well-formed container with no chapters is NOT an error
+        # (matches extract_subtitle_text's zero-cue behavior): zero rows,
+        # even under strict
+        for i, (start, title) in enumerate(chapters):
+            yield i, int(start), title
+
+    return _row_table(media, "media_id", "payload", CHAPTER_SCHEMA, rows_of,
+                      strict)
 
 
 def route_web_payloads(

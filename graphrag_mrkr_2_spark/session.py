@@ -1,9 +1,17 @@
 """SparkSession factory with scale-oriented defaults.
 
-Single place where execution knobs live so tests, bench.py, and spark-submit
-jobs get identical behavior. Designed for a multi-executor cluster; in this
-sandbox it runs local[N] (the same code path — only master/partition counts
-change).
+Single place where execution knobs live for the sessions this package
+creates: tests, bench.py, perfbench and the scripts under scripts/. Designed for
+a multi-executor cluster; run as local[N] it takes the same code path (only
+master/partition counts change).
+
+spark-submit jobs do not get all of these settings. ``scripts/submit_job.py``
+does not call ``get_spark`` (its master would override spark-submit's
+``--master``) and sets only the case-mapping option below, so its other
+settings are Spark's defaults: 200 shuffle partitions (not the CPU count),
+10000 rows per Arrow batch (not 2048), the JVM's time zone (not UTC) and
+Arrow off for ``toPandas``/``createDataFrame``. Pass ``--conf`` flags to
+spark-submit to match these sessions.
 
 Case mapping. Every canonical key of the KG build is a case mapping: the
 entity id is ``md5(lower(name))[:16]`` and the merge key is

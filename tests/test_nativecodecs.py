@@ -219,3 +219,48 @@ class TestImageFeaturesInjection:
         }
         assert injected == pure
         assert set(pure) >= {"jpg444", "jpg420", "png", "gif", "webp_l"}
+
+
+class TestLoadLibrary:
+    """``load_library`` is the one ctypes loader of the media stack: a
+    library that does not load, or that lacks a bound symbol, is
+    unavailable (None), and each library loads once per process."""
+
+    @pytest.fixture(autouse=True)
+    def _empty_cache(self, monkeypatch):
+        monkeypatch.setattr(nc, "_LIBRARIES", {})
+
+    def test_bogus_soname_is_unavailable(self):
+        assert nc.load_library(("libno-such-library.so.9",), {}) is None
+        assert nc.load_library((), {}, find="no-such-library") is None
+
+    def test_missing_symbol_is_unavailable(self):
+        table = {"zlibVersion": (ctypes.c_char_p, []),
+                 "zlib_no_such_symbol": (None, [])}
+        assert nc.load_library(("libz.so.1",), table, find="z") is None
+
+    def test_loads_once_and_binds_the_table(self):
+        table = {"zlibVersion": (ctypes.c_char_p, [])}
+        lib = nc.load_library(("libz.so.1",), table, find="z")
+        assert lib is not None
+        assert lib is nc.load_library(("libz.so.1",), table, find="z")
+        assert lib.zlibVersion().startswith(b"1.")
+
+    def test_too_old_libraries_make_the_codecs_unavailable(self, monkeypatch):
+        from graphrag_mrkr_2_spark.functions import av1codec, heifcodec, hevccodec
+
+        for table in (nc._WEBP_PROTOTYPES, nc._JPEG_SHIM_PROTOTYPES,
+                      heifcodec._HEIF_PROTOTYPES, hevccodec._DE265_PROTOTYPES,
+                      av1codec._DAV1D_PROTOTYPES, av1codec._AOM_PROTOTYPES):
+            monkeypatch.setitem(table, "symbol_newer_than_this_library",
+                                (None, []))
+        assert not nc.webp_available()
+        assert not nc.jpeg_available()
+        assert nc.decode_webp_native(b"RIFF\0\0\0\0WEBP") is None
+        assert nc.decode_jpeg_native(b"\xff\xd8\xff") is None
+        assert not heifcodec.heif_available("avif")
+        assert not heifcodec.heif_available("heic")
+        assert not hevccodec.de265_available()
+        assert not av1codec.dav1d_available()
+        assert not av1codec.aom_decoder_available()
+        assert nc.NativeImageDecoder().available_formats() == ()

@@ -63,6 +63,42 @@ def test_spark_filter_matches_oracle(spark):
         assert got[i] == expected, f"sample {i}: spark={got[i]} oracle={expected}"
 
 
+# edge whitespace beyond U+0020, the only character Spark's trim strips
+PADDED = [
+    "lorem ipsum dolor sit amet consectetur adipiscing\n\n\n",  # 49 stripped
+    "abcd\n\n",  # 4 stripped
+    "\t\r\n" + SAMPLES[0] + "\x0b\x0c",
+    "\n" + "words that are all different here and now ok" + "\r\n\t",
+    "Line one has words\t\nLine two has words\r\nLine three\x0b\n\t\n",
+    "\u00a0\u3000" + SAMPLES[6] + "\x1c\u2003",  # stripped by the filter only
+]
+
+
+@pytest.mark.spark
+def test_filter_and_quality_strip_like_their_twins(spark):
+    """with_content_filter and with_quality_score strip like str.strip(),
+    whole text and per line, so they agree with should_embed_chunk and
+    analyze_text_quality on whitespace-padded text."""
+    from graphrag_mrkr_2_spark.operators.extract import (
+        with_content_filter,
+        with_quality_score,
+    )
+
+    df = spark.createDataFrame(list(enumerate(PADDED)), ["i", "content"])
+    reasons = {r["i"]: r["filter_reason"] for r in with_content_filter(df).collect()}
+    assert reasons[0] == "too_short"
+    for i, s in enumerate(PADDED):
+        ok, reason = should_embed_chunk(s)
+        assert reasons[i] == (None if ok else reason), f"sample {i}"
+    # the quality score also counts unstripped whitespace, where Java's \s
+    # is ASCII: compare the samples padded with ASCII whitespace only
+    scores = {r["i"]: r["quality_score"] for r in with_quality_score(df).collect()}
+    assert scores[1] == 0.0
+    for i, s in enumerate(PADDED[:5]):
+        expected = analyze_text_quality(s)["quality_score"]
+        assert scores[i] == pytest.approx(expected, abs=1e-9), f"sample {i}"
+
+
 @pytest.mark.spark
 def test_spark_quality_matches_oracle(spark):
     from graphrag_mrkr_2_spark.operators.extract import with_quality_score
