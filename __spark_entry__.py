@@ -2450,33 +2450,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # DuckDB oracles
 # ---------------------------------------------------------------------------
 
-# Python's str.strip() in DuckDB: its trim, like Spark's, strips only
-# U+0020, and RE2's \s is ASCII, so the 29 str.isspace() code points are
-# spelled out (the operators strip with chunk_patterns._STRIP_RE)
+# Python's str.isspace() in DuckDB: its trim, like Spark's, strips only
+# U+0020, and RE2's \s is ASCII without even U+000B, so the 29 str.isspace()
+# code points are spelled out (the operators use chunk_patterns._PY_SPACE)
 _PY_SPACE = (r"[\x09-\x0d\x1c-\x20\x85\xa0\x{1680}\x{2000}-\x{200a}"
              r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]")
+_PY_NON_SPACE = "[^" + _PY_SPACE[1:]
 
 
 def _strip_sql(expr: str) -> str:
     return f"regexp_replace({expr}, '^{_PY_SPACE}+|{_PY_SPACE}+$', '', 'g')"
 
 
-_FILTER_REASON_SQL = """
+_FILTER_REASON_SQL = f"""
 CASE
   WHEN length(s) < 50 THEN 'too_short'
   WHEN length(s) > 100000 THEN 'too_long'
-  WHEN len(regexp_split_to_array(s, '\\s+')) = 0 THEN 'repetitive'
-  WHEN CAST(len(list_distinct(regexp_split_to_array(s, '\\s+'))) AS DOUBLE)
-       / len(regexp_split_to_array(s, '\\s+')) < 0.3 THEN 'repetitive'
-  WHEN len(regexp_split_to_array(s, '\\s+')) >= 4
-       AND CAST(len(list_filter(regexp_split_to_array(s, '\\s+'),
-                w -> lower(w) = lower(regexp_split_to_array(s, '\\s+')[1]))) AS DOUBLE)
-           / len(regexp_split_to_array(s, '\\s+')) > 0.7 THEN 'repetitive'
-  WHEN CAST(length(regexp_replace(s, '[^\\p{L}\\p{N}]', '', 'g')) AS DOUBLE)
+  WHEN len(regexp_split_to_array(s, '{_PY_SPACE}+')) = 0 THEN 'repetitive'
+  WHEN CAST(len(list_distinct(regexp_split_to_array(s, '{_PY_SPACE}+'))) AS DOUBLE)
+       / len(regexp_split_to_array(s, '{_PY_SPACE}+')) < 0.3 THEN 'repetitive'
+  WHEN len(regexp_split_to_array(s, '{_PY_SPACE}+')) >= 4
+       AND CAST(len(list_filter(regexp_split_to_array(s, '{_PY_SPACE}+'),
+                w -> lower(w) = lower(regexp_split_to_array(s, '{_PY_SPACE}+')[1]))) AS DOUBLE)
+           / len(regexp_split_to_array(s, '{_PY_SPACE}+')) > 0.7 THEN 'repetitive'
+  WHEN CAST(length(regexp_replace(s, '[^\\p{{L}}\\p{{N}}]', '', 'g')) AS DOUBLE)
        / length(s) < 0.3 THEN 'bad_char_distribution'
   WHEN CAST((length(s)
-             - length(regexp_replace(s, '[^\\p{L}\\p{N}]', '', 'g'))
-             - length(regexp_replace(s, '[^\\s]', '', 'g'))) AS DOUBLE)
+             - length(regexp_replace(s, '[^\\p{{L}}\\p{{N}}]', '', 'g'))
+             - length(regexp_replace(s, '{_PY_NON_SPACE}', '', 'g'))) AS DOUBLE)
        / length(s) > 0.5 THEN 'bad_char_distribution'
   ELSE 'passed'
 END
@@ -2563,10 +2564,10 @@ def oracle_sql() -> dict[str, str]:
             m AS (
               SELECT doc_id, c, total, lines, stripped_len,
                      length(regexp_replace(c, '[^\\p{{L}}\\p{{N}}]', '', 'g')) / total AS text_ratio,
-                     length(regexp_replace(c, '[^\\s]', '', 'g')) / total AS ws_ratio,
+                     length(regexp_replace(c, '{_PY_NON_SPACE}', '', 'g')) / total AS ws_ratio,
                      CASE WHEN len(lines) > 0 THEN
                        CAST(list_sum(list_transform(lines,
-                            x -> len(regexp_split_to_array(x, '\\s+')))) AS DOUBLE) / len(lines)
+                            x -> len(regexp_split_to_array(x, '{_PY_SPACE}+')))) AS DOUBLE) / len(lines)
                      ELSE 0.0 END AS avg_wpl,
                      regexp_matches(c, '[^\\x00-\\x7F]') AS has_artifacts,
                      len(list_filter(regexp_split_to_array(c, '[^\\p{{L}}\\p{{N}}_]+'),

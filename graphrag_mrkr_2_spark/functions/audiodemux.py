@@ -37,6 +37,10 @@ from graphrag_mrkr_2_spark.functions.av1codec import (
     ebml_header,
 )
 
+# Frames one payload may fan out to: a malformed sample table or page
+# stream must not explode a partition.
+MAX_FRAMES = 2000
+
 
 def _xiph_sizes(sizes) -> bytes:
     out = bytearray()
@@ -67,11 +71,10 @@ def _ebml_lace_svint(delta: int) -> bytes:
 
 
 def mux_mkv_audio(frames, codec_id: bytes = b"A_OPUS",
-                  sample_rate: float = 48000.0, channels: int = 2,
                   codec_private: bytes = None,
-                  frame_duration_ms: int = 20,
                   lacing: str = None, frames_per_block: int = 4) -> bytes:
-    """Single-audio-track Matroska/WebM muxer (fixture/oracle path).
+    """Single-audio-track Matroska/WebM muxer (fixture/oracle path):
+    48 kHz stereo, 20 ms frames.
 
     ``lacing``: None (one SimpleBlock per frame — what remuxed Opus
     ships), or 'xiph' / 'ebml' / 'fixed' packing ``frames_per_block``
@@ -90,35 +93,35 @@ def mux_mkv_audio(frames, codec_id: bytes = b"A_OPUS",
     info = _el(0x1549A966, b"".join([
         _el(0x2AD7B1, _uint_payload(1_000_000)),  # TimestampScale: 1 ms
         _el(0x4489, struct.pack(
-            ">d", float(len(frames) * frame_duration_ms))),
+            ">d", float(len(frames) * 20))),
     ]))
     track_fields = [
         _el(0xD7, _uint_payload(1)),              # TrackNumber
         _el(0x73C5, _uint_payload(1)),            # TrackUID
         _el(0x83, _uint_payload(2)),              # TrackType: audio
         _el(0x86, bytes(codec_id)),               # CodecID
-        _el(0x23E383, _uint_payload(frame_duration_ms * 1_000_000)),
+        _el(0x23E383, _uint_payload(20 * 1_000_000)),  # DefaultDuration
     ]
     if codec_private:
         track_fields.append(_el(0x63A2, bytes(codec_private)))
     track_fields.append(
         _el(0xE1, b"".join([                      # Audio
-            _el(0xB5, struct.pack(">d", float(sample_rate))),
-            _el(0x9F, _uint_payload(channels)),
+            _el(0xB5, struct.pack(">d", 48000.0)),
+            _el(0x9F, _uint_payload(2)),
         ])))
     tracks = _el(0x1654AE6B, _el(0xAE, b"".join(track_fields)))
 
     blocks = []
     if lacing is None:
         for idx, frame in enumerate(frames):
-            ts = idx * frame_duration_ms
+            ts = idx * 20
             blocks.append(_el(_MKV_SIMPLEBLOCK,
                               b"\x81" + struct.pack(">hB", ts, 0x80) + frame))
     else:
         fpb = max(1, int(frames_per_block))
         for base in range(0, len(frames), fpb):
             group = frames[base:base + fpb]
-            ts = base * frame_duration_ms
+            ts = base * 20
             if len(group) == 1:
                 blocks.append(_el(
                     _MKV_SIMPLEBLOCK,
@@ -170,13 +173,13 @@ def mkv_audio_track_info(data: bytes) -> dict:
     }
 
 
-def mkv_audio_samples(data: bytes, limit: int = 10_000) -> list:
+def mkv_audio_samples(data: bytes) -> list:
     """``[(ts_ms, payload), ...]`` coded audio frames of the first audio
     track — the raw per-frame bytes an injected decoder consumes."""
-    return mkv_audio_track_info(data)["samples"][:limit]
+    return mkv_audio_track_info(data)["samples"][:MAX_FRAMES]
 
 
-def mp3_frames(data: bytes, limit: int = 100_000) -> list:
+def mp3_frames(data: bytes) -> list:
     """``[(ts_ms, frame_bytes), ...]`` by walking Layer-III frame headers
     from the first validated sync (after any ID3v2 block, with the same
     second-frame-consistency gate ``probe_mp3`` uses to reject random
@@ -195,7 +198,7 @@ def mp3_frames(data: bytes, limit: int = 100_000) -> list:
         raise ValueError("no MP3 frame sync found")
     pos, hdr = found
     out, tick = [], 0  # tick counts samples at the stream rate
-    while hdr is not None and len(out) < limit:
+    while hdr is not None and len(out) < MAX_FRAMES:
         fl = hdr["frame_len"]
         if pos + fl > len(data):
             break
@@ -206,7 +209,7 @@ def mp3_frames(data: bytes, limit: int = 100_000) -> list:
     return out
 
 
-def ogg_packets(data: bytes, limit: int = 10_000) -> list:
+def ogg_packets(data: bytes) -> list:
     """Logical packets of the FIRST Ogg stream, in order, header packets
     (OpusHead/OpusTags, Vorbis ident/comment/setup) included — the exact
     byte strings RFC 3533 page lacing reassembles: segments concatenate
@@ -219,7 +222,7 @@ def ogg_packets(data: bytes, limit: int = 10_000) -> list:
         raise ValueError("not an Ogg stream")
     pos, serial = 0, None
     packets, cur, cur_open = [], bytearray(), False
-    while pos + 27 <= len(data) and len(packets) < limit:
+    while pos + 27 <= len(data) and len(packets) < MAX_FRAMES:
         if data[pos:pos + 4] != b"OggS" or data[pos + 4] != 0:
             raise ValueError("Ogg: bad page header")
         htype = data[pos + 5]
@@ -261,7 +264,7 @@ def ogg_packets(data: bytes, limit: int = 10_000) -> list:
             if s < 255:
                 packets.append(bytes(cur))
                 cur = bytearray()
-                if len(packets) >= limit:
+                if len(packets) >= MAX_FRAMES:
                     break
         cur_open = bool(segs) and segs[-1] == 255
         pos = page_end

@@ -41,22 +41,18 @@ CL100K_PATTERN = (
 )
 
 
-def _compile(pattern: str):
-    import regex
-
-    return regex.compile(pattern)
-
-
 class BytePairEncoder:
     """Greedy lowest-rank BPE over pre-tokenized UTF-8 byte runs."""
 
-    def __init__(self, ranks: dict[bytes, int], pattern: str = CL100K_PATTERN) -> None:
+    def __init__(self, ranks: dict[bytes, int]) -> None:
+        import regex
+
         self._ranks = ranks
         self._tokens = {rank: tok for tok, rank in ranks.items()}
-        self._re = _compile(pattern)
+        self._re = regex.compile(CL100K_PATTERN)
 
     @classmethod
-    def from_tiktoken_file(cls, path: str, pattern: str = CL100K_PATTERN) -> "BytePairEncoder":
+    def from_tiktoken_file(cls, path: str) -> "BytePairEncoder":
         """Load a ``.tiktoken`` ranks file: one ``base64(token) rank`` per line."""
         ranks: dict[bytes, int] = {}
         with open(path, "rb") as fh:
@@ -66,7 +62,7 @@ class BytePairEncoder:
                     continue
                 tok_b64, rank = line.split()
                 ranks[base64.b64decode(tok_b64)] = int(rank)
-        return cls(ranks, pattern)
+        return cls(ranks)
 
     # -- core ---------------------------------------------------------------
 

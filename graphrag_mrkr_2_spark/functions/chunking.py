@@ -27,14 +27,12 @@ class RecursiveCharacterSplitter:
         self,
         chunk_size: int = 1200,
         chunk_overlap: int = 150,
-        separators: tuple[str, ...] = ("\n\n", "\n", " ", ""),
     ) -> None:
         self.chunk_size = chunk_size
         self.chunk_overlap = chunk_overlap
-        self.separators = list(separators)
 
     def split_text(self, text: str) -> list[str]:
-        return self._split(text, self.separators)
+        return self._split(text, ["\n\n", "\n", " ", ""])
 
     def _split(self, text: str, separators: list[str]) -> list[str]:
         final_chunks: list[str] = []

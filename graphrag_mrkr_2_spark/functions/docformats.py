@@ -364,7 +364,11 @@ def _xlsx_dataframe(rows: list[list]):
     return df.map(lambda v: None if (isinstance(v, str) and v in _NA_VALUES) else v)
 
 
-def xlsx_text(data: bytes, max_rows_per_sheet: int = 1000, max_sheets: int = 20) -> str | None:
+XLSX_MAX_SHEETS = 20  # sheets rendered per workbook
+XLSX_MAX_ROWS = 1000  # rows read per sheet
+
+
+def xlsx_text(data: bytes) -> str | None:
     """XLSX → analysis text mirroring the reference XLSXLoader.load
     assembly (xlsx_loader.py:525-649): workbook header, then per sheet the
     '=== WORKSHEET ===' analysis core (type-by-name-keyword :46-62,
@@ -385,10 +389,10 @@ def xlsx_text(data: bytes, max_rows_per_sheet: int = 1000, max_sheets: int = 20)
     parts.append(f"Sheet names: {', '.join(sheets)}")
     parts.append("")
     for n_done, (name, rows) in enumerate(sheets.items()):
-        if n_done >= max_sheets:
+        if n_done >= XLSX_MAX_SHEETS:
             parts.append(f"... and {len(sheets) - n_done} more sheets (limit reached)")
             break
-        df = _xlsx_dataframe(rows[: max_rows_per_sheet + 1])
+        df = _xlsx_dataframe(rows[: XLSX_MAX_ROWS + 1])
         if df.empty:
             parts.append(f"WORKSHEET '{name}': [Empty]")
             parts.append("")

@@ -305,12 +305,11 @@ def decode_hevc_frames_yuv(nals) -> list:
         lib.de265_free_decoder(ctx)
 
 
-def decode_hevc_frames(nals, matrix: str = "auto",
-                       width: int = None, height: int = None) -> list:
+def decode_hevc_frames(nals, width: int = None, height: int = None) -> list:
     """Decode raw HEVC NALs to RGB ``(h, w, 3) uint8`` frames.
 
-    Same conversion contract as ``av1codec.decode_av1_frames``:
-    ``matrix='auto'`` reads the stream's own VUI matrix_coefficients —
+    Same conversion contract as ``av1codec.decode_av1_frames`` with
+    ``matrix='auto'``: the stream's own VUI matrix_coefficients pick it —
     0 + 4:4:4 → identity/GBR plane permutation (the lossless fixture
     config, bit-exact), anything else → BT.601 with the VP8 kernel's
     fixed-point coefficients. The conversion choice is NOT part of the
@@ -328,10 +327,7 @@ def decode_hevc_frames(nals, matrix: str = "auto",
         if u is None:
             rgb = np.repeat(y[:, :, None], 3, axis=2)
         else:
-            m = matrix
-            if m == "auto":
-                m = ("identity"
-                     if mtrx == 0 and layout == _LAYOUT_I444 else "bt601")
+            m = "identity" if mtrx == 0 and layout == _LAYOUT_I444 else "bt601"
             rgb = _yuv_to_rgb(y, u, v, layout, m)
         if width is not None and height is not None:
             if width > rgb.shape[1] or height > rgb.shape[0]:

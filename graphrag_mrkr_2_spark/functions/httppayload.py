@@ -347,12 +347,13 @@ def decode_zstd_native(data: bytes,
         lib.ZSTD_freeDStream(ds)
 
 
-def encode_zstd_native(data: bytes, level: int = 3) -> bytes:
-    """One-shot zstd compress via libzstd (fixtures and bench inputs)."""
+def encode_zstd_native(data: bytes) -> bytes:
+    """One-shot zstd compress via libzstd at level 3 (fixtures and bench
+    inputs)."""
     lib = _native("zstd")
     bound = lib.ZSTD_compressBound(len(data))
     dst = ctypes.create_string_buffer(bound)
-    n = lib.ZSTD_compress(dst, bound, data, len(data), level)
+    n = lib.ZSTD_compress(dst, bound, data, len(data), 3)
     if lib.ZSTD_isError(n):
         raise ValueError("zstd: compression failed")
     return dst.raw[:n]
@@ -386,8 +387,7 @@ def decode_content_encoding(body: bytes, encoding: str | None,
     return body
 
 
-def decode_http_payload(raw: bytes,
-                        max_output: int = _DEFAULT_MAX_OUTPUT):
+def decode_http_payload(raw: bytes):
     """Full pipeline for a WARC 'response' payload: parse the HTTP
     response, undo chunked transfer framing, undo the Content-Encoding
     chain. Returns (status, headers, body). Raises ValueError on any
@@ -397,6 +397,5 @@ def decode_http_payload(raw: bytes,
     te_tokens = [t.strip().lower() for t in te.split(",") if t.strip()]
     if te_tokens and te_tokens[-1] == "chunked":
         body = dechunk(body)
-    body = decode_content_encoding(body, headers.get("content-encoding"),
-                                   max_output)
+    body = decode_content_encoding(body, headers.get("content-encoding"))
     return status, headers, body

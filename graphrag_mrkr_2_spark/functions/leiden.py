@@ -194,11 +194,11 @@ def leiden_communities(
     nodes=None,
     resolution: float = 1.0,
     seed: int = 42,
-    max_levels: int = 20,
 ) -> dict:
     """Cluster an undirected weighted edge list [(u, v, w)] → {node:
-    community_index}. Isolated nodes (``nodes`` minus edge endpoints) each
-    get their own community. Deterministic for a fixed seed."""
+    community_index}, aggregating at most 20 levels. Isolated nodes
+    (``nodes`` minus edge endpoints) each get their own community.
+    Deterministic for a fixed seed."""
     idx, adj, strength, self_w, two_m = _build(edges, nodes)
     n = len(adj)
     if n == 0:
@@ -211,7 +211,7 @@ def leiden_communities(
     chain = [np.arange(n)]
     membership = np.arange(n)
     tot = strength.copy()
-    for _ in range(max_levels):
+    for _ in range(20):
         moved = _move_nodes(adj, strength, membership, tot, two_m, resolution, rng)
         n_comms = len(set(membership.tolist()))
         if n_comms == len(adj):
@@ -246,9 +246,9 @@ def leiden_communities(
     return out
 
 
-def modularity(edges, membership: dict, resolution: float = 1.0) -> float:
-    """Weighted modularity of a membership dict over an edge list (the
-    quantity igraph reports alongside the partition)."""
+def modularity(edges, membership: dict) -> float:
+    """Weighted modularity (resolution 1) of a membership dict over an edge
+    list (the quantity igraph reports alongside the partition)."""
     idx, adj, strength, self_w, two_m = _build(edges, list(membership))
     if two_m <= 0:
         return 0.0
@@ -263,6 +263,6 @@ def modularity(edges, membership: dict, resolution: float = 1.0) -> float:
     # each undirected edge counted once in `edges`; modularity uses 2m scale
     # (self-loops contribute w here and 2w to strength — consistent with
     # the _build convention)
-    return (2.0 * intra) / two_m - resolution * sum(
+    return (2.0 * intra) / two_m - sum(
         t * t for t in tot.values()
     ) / (two_m * two_m)

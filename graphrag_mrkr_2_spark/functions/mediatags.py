@@ -452,13 +452,13 @@ def build_vorbis_comment(tags: dict, vendor: str = "spark-graft") -> bytes:
     return out
 
 
-def build_flac_with_tags(tags: dict, sample_rate: int = 44100) -> bytes:
-    """fLaC + valid STREAMINFO + a VORBIS_COMMENT block (last)."""
+def build_flac_with_tags(tags: dict) -> bytes:
+    """fLaC + valid STREAMINFO (44.1 kHz) + a VORBIS_COMMENT block (last)."""
     info = bytearray(34)
     info[0:2] = (4096).to_bytes(2, "big")   # min block size
     info[2:4] = (4096).to_bytes(2, "big")   # max block size
     # sample rate (20 bits) | channels-1 (3) | bps-1 (5) | total (36)
-    packed = (sample_rate << 44) | (1 << 41) | (15 << 36) | sample_rate
+    packed = (44100 << 44) | (1 << 41) | (15 << 36) | 44100
     info[10:18] = packed.to_bytes(8, "big")
     comment = build_vorbis_comment(tags)
     return (b"fLaC"
@@ -466,10 +466,10 @@ def build_flac_with_tags(tags: dict, sample_rate: int = 44100) -> bytes:
             + bytes([0x80 | 4]) + len(comment).to_bytes(3, "big") + comment)
 
 
-def _ogg_page(payload: bytes, serial: int = 1, seq: int = 0,
+def _ogg_page(payload: bytes, seq: int = 0,
               header_type: int = 0, granule: int = 0) -> bytes:
-    """Minimal Ogg page (zero CRC — the in-repo parsers don't validate
-    CRC32, documented here; payloads ≤ 255*255 bytes)."""
+    """Minimal Ogg page of stream serial 1 (zero CRC — the in-repo parsers
+    don't validate CRC32, documented here; payloads ≤ 255*255 bytes)."""
     segs = []
     rest = payload
     while True:
@@ -478,7 +478,7 @@ def _ogg_page(payload: bytes, serial: int = 1, seq: int = 0,
             break
         rest = rest[255:]
     return (b"OggS\x00" + bytes([header_type])
-            + struct.pack("<q", granule) + struct.pack("<I", serial)
+            + struct.pack("<q", granule) + struct.pack("<I", 1)
             + struct.pack("<I", seq) + b"\x00\x00\x00\x00"
             + bytes([len(segs)]) + bytes(segs) + payload)
 

@@ -703,10 +703,13 @@ def mux_fmp4_video(samples, width: int, height: int, codec: str,
     return b"".join(out)
 
 
-def mp4_video_samples(data: bytes, limit: int = 10_000) -> list:
+MAX_SAMPLES = 10_000  # samples one *_samples call returns
+
+
+def mp4_video_samples(data: bytes) -> list:
     """``[(ts_ms, keyframe, payload), ...]`` for the first video track —
     the same shape ``av1codec.mkv_video_samples`` returns for WebM."""
-    return mp4_video_track_info(data)["samples"][:limit]
+    return mp4_video_track_info(data)["samples"][:MAX_SAMPLES]
 
 
 def mp4_audio_track_info(data: bytes) -> dict:
@@ -728,16 +731,15 @@ def mp4_audio_track_info(data: bytes) -> dict:
     raise ValueError("MP4: no audio track")
 
 
-def mp4_audio_samples(data: bytes, limit: int = 10_000) -> list:
+def mp4_audio_samples(data: bytes) -> list:
     """``[(ts_ms, payload), ...]`` coded audio frames of the first audio
     track — the raw per-sample bytes an injected decoder consumes."""
     return [(ts, p) for ts, _k, p
-            in mp4_audio_track_info(data)["samples"][:limit]]
+            in mp4_audio_track_info(data)["samples"][:MAX_SAMPLES]]
 
 
 def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int,
                   config_record: bytes = None,
-                  sample_duration_ms: int = 20,
                   chunk_pattern=(3, 1, 2)) -> bytes:
     """Write coded audio samples into a minimal-but-valid MP4.
 
@@ -748,7 +750,8 @@ def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int,
     ``chunk_pattern`` cycles per-chunk sample counts — audio chunking is
     ragged in real interleaved files, so the fixture writes a multi-run
     stsc by default instead of the degenerate fixed-size layout.
-    Timescale is 1000 (1 ms units), matching the video muxer."""
+    Timescale is 1000 (1 ms units), matching the video muxer; every sample
+    lasts 20 ms."""
     samples = [bytes(s) for s in samples]
     if not samples:
         raise ValueError("mux_mp4_audio: no samples")
@@ -758,7 +761,7 @@ def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int,
     if len(fourcc) != 4:
         raise ValueError(f"bad MP4 audio fourcc {codec!r}")
     n = len(samples)
-    duration = n * sample_duration_ms
+    duration = n * 20
 
     ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) +
                 b"isom" + b"iso2" + b"mp41")
@@ -793,7 +796,7 @@ def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int,
     ]))
     stsd = _full_box(b"stsd", 0, 0, struct.pack(">I", 1) + entry)
     stts = _full_box(b"stts", 0, 0,
-                     struct.pack(">III", 1, n, sample_duration_ms))
+                     struct.pack(">III", 1, n, 20))
     # stsc runs: collapse equal consecutive per-chunk counts
     sc_runs = []
     for ci, c in enumerate(per_chunk, start=1):

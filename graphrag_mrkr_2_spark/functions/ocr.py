@@ -346,7 +346,6 @@ def detect_ocr_language(text: str | None, default_language: str = "eng") -> str:
 def process_standalone_image(
     payload: bytes,
     ocr: OcrEngine | None,
-    default_language: str = "eng",
 ) -> dict:
     """Decode an image payload and extract text with smart OCR.
 
@@ -376,7 +375,7 @@ def process_standalone_image(
             "content_analysis": content_analysis,
             "ocr_applied": 0,
             "ocr_items": [],
-            "detected_language": default_language,
+            "detected_language": "eng",
         }
         if not content_analysis["needs_ocr"]:
             return {"content": None, "ocr_metadata": ocr_metadata}
@@ -384,9 +383,9 @@ def process_standalone_image(
             ocr_metadata["error"] = "no OCR engine injected"
             return {"content": None, "ocr_metadata": ocr_metadata}
 
-        ocr_text = ocr(img, content_analysis["primary_type"], default_language)
+        ocr_text = ocr(img, content_analysis["primary_type"], "eng")
         if ocr_text and ocr_text.strip():
-            detected_language = detect_ocr_language(ocr_text, default_language)
+            detected_language = detect_ocr_language(ocr_text)
             ocr_metadata["detected_language"] = detected_language
             ocr_metadata["ocr_applied"] = 1
             ocr_metadata["ocr_items"].append(

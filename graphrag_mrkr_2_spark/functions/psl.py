@@ -143,6 +143,7 @@ def load_rules() -> tuple[str, ...]:
     return PSL_RULES
 
 
+@lru_cache(maxsize=4)
 def _partition_rules(rules: tuple[str, ...]):
     """Split rules into {label_count: set} maps for normal / wildcard /
     exception rules. Wildcards are keyed by their BASE label count."""
@@ -164,12 +165,7 @@ def _partition_rules(rules: tuple[str, ...]):
     return normal, wild, exc
 
 
-@lru_cache(maxsize=4)
-def _compiled(rules: tuple[str, ...]):
-    return _partition_rules(rules)
-
-
-def registered_domain_expr(host: Column, rules: tuple[str, ...] | None = None) -> Column:
+def registered_domain_expr(host: Column) -> Column:
     """Registered (PSL-aware) domain of a lowercase host column.
 
     Implements the PSL match algorithm as a priority when-chain over
@@ -179,7 +175,7 @@ def registered_domain_expr(host: Column, rules: tuple[str, ...] | None = None) -
     Registered domain = public suffix + one label; a host that is itself a
     public suffix (or a single label) returns unchanged.
     """
-    normal, wild, exc = _compiled(rules if rules is not None else load_rules())
+    normal, wild, exc = _partition_rules(load_rules())
     nl = F.size(F.split(host, r"\."))
     # IP literals have no registrable boundary — the implicit '*' rule would
     # truncate 104.16.2.8 to '2.8' and merge unrelated servers into one cap

@@ -153,11 +153,11 @@ class SequentialEntityGraph:
 def run_reference_pipeline(
     docs: list[tuple[str, list[tuple[str, str]]]],
     llm: Callable[[str, str, int], str] = mock_llm_response,
-    max_gleanings: int = 1,
-    importance_threshold: float = 0.3,
-    strength_threshold: float = 0.4,
 ) -> tuple[set[tuple[str, str, str]], dict]:
     """docs: [(doc_id, [(chunk_id, chunk_text), ...]), ...].
+
+    One gleaning pass per chunk; entities below importance 0.3 and
+    relationships below strength 0.4 stay out of the graph.
 
     Returns (global_triples, per-doc stats). Global triple identity follows
     the Neo4j MERGE keys: node by name, edge by (source, target, type).
@@ -166,14 +166,14 @@ def run_reference_pipeline(
     stats = {"entities": 0, "relationships": 0}
     for doc_id, chunks in docs:
         per_chunk = [
-            extract_chunk_with_gleaning(text, chunk_id, llm, max_gleanings)
+            extract_chunk_with_gleaning(text, chunk_id, llm)
             for chunk_id, text in chunks
         ]
         entity_dict, rels_by_pair = consolidate(per_chunk)
 
         graph = SequentialEntityGraph()
         for entity in entity_dict.values():
-            if entity["importance_score"] >= importance_threshold:
+            if entity["importance_score"] >= 0.3:
                 graph.add_entity(
                     entity["name"],
                     entity["type"],
@@ -183,7 +183,7 @@ def run_reference_pipeline(
                 )
         for rels in rels_by_pair.values():
             for rel in rels:
-                if rel["strength"] >= strength_threshold:
+                if rel["strength"] >= 0.4:
                     graph.add_relationship(
                         rel["source_entity"],
                         rel["target_entity"],

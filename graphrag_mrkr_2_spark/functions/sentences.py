@@ -20,8 +20,9 @@ _WS_RE = re.compile(r"\s+")
 _BOUNDARY_RE = re.compile(r"(?<=[.!?])\s+(?=[A-Z])")
 
 
-def split_into_sentences(text: str, min_length: int = 10) -> list[str]:
-    """core/sentence_chunker.py:22-66 (split_into_sentences)."""
+def split_into_sentences(text: str) -> list[str]:
+    """core/sentence_chunker.py:22-66 (split_into_sentences); sentences
+    shorter than 10 characters are dropped."""
     if not text or not text.strip():
         return []
     text = _WS_RE.sub(" ", text.strip())
@@ -36,7 +37,7 @@ def split_into_sentences(text: str, min_length: int = 10) -> list[str]:
     sentences = []
     for sentence in raw_sentences:
         sentence = sentence.replace("<PERIOD>", ".").strip()
-        if len(sentence) >= min_length:
+        if len(sentence) >= 10:
             sentences.append(sentence)
 
     if not sentences and text.strip():

@@ -24,7 +24,7 @@ _MAX_SITEMAP_BYTES = 52_428_800  # the protocol's own 50 MB limit
 _MAX_URLS = 50_000               # likewise
 
 
-def bounded_gunzip(data: bytes, cap: int = _MAX_SITEMAP_BYTES) -> bytes:
+def bounded_gunzip(data: bytes) -> bytes:
     """STREAM-decompress a gzip member with the cap applied as bytes
     materialize — a one-shot gzip.decompress would fully expand a ~1000:1
     bomb before any size check could run (review r7). Raises ValueError on
@@ -32,12 +32,12 @@ def bounded_gunzip(data: bytes, cap: int = _MAX_SITEMAP_BYTES) -> bytes:
     discovery-expansion operator; review r8)."""
     try:
         with gzip.GzipFile(fileobj=io.BytesIO(data)) as gf:
-            out = gf.read(cap + 1)
+            out = gf.read(_MAX_SITEMAP_BYTES + 1)
     except (OSError, EOFError, zlib.error) as e:
         raise ValueError(f"bad gzip member: {e}") from e
-    if len(out) > cap:
+    if len(out) > _MAX_SITEMAP_BYTES:
         raise ValueError(
-            f"gzip member exceeds the {cap >> 20} MB decompression cap"
+            f"gzip member exceeds the {_MAX_SITEMAP_BYTES >> 20} MB decompression cap"
         )
     return out
 

@@ -167,7 +167,7 @@ def parse_webvtt(text: str, strip_tags: bool = True) -> list:
     return cues
 
 
-def mkv_subtitle_cues(data: bytes, limit: int = MAX_CUES) -> list:
+def mkv_subtitle_cues(data: bytes) -> list:
     """Cues from the FIRST subtitle track (TrackType 0x11, CodecID
     S_TEXT/UTF8, S_TEXT/WEBVTT or S_TEXT/ASCII) of a Matroska/WebM file:
     ``[(start_ms, end_ms, text), ...]``. Rides the shared two-pass walker
@@ -204,7 +204,7 @@ def mkv_subtitle_cues(data: bytes, limit: int = MAX_CUES) -> list:
         text = text.strip()
         if text:
             cues.append((int(start), int(start + dur), text))
-        if len(cues) >= limit:
+        if len(cues) >= MAX_CUES:
             break
     return cues
 
@@ -273,7 +273,7 @@ def mux_mkv_subtitles(cues, codec: bytes = b"S_TEXT/UTF8",
     return ebml + _el(0x18538067, info + tracks + b"".join(clusters))
 
 
-def mp4_subtitle_cues(data: bytes, limit: int = MAX_CUES) -> list:
+def mp4_subtitle_cues(data: bytes) -> list:
     """Cues from the FIRST 3GPP timed-text (tx3g) track of an MP4:
     ``[(start_ms, end_ms, text), ...]``. Samples are ``u16 length +
     UTF-8 text``; empty samples are the spec's gap encoding and are
@@ -293,7 +293,7 @@ def mp4_subtitle_cues(data: bytes, limit: int = MAX_CUES) -> list:
         text = payload[2:2 + n].decode("utf-8", "replace").strip()
         if text:
             cues.append((int(ts), int(ts + dur), text))
-        if len(cues) >= limit:
+        if len(cues) >= MAX_CUES:
             break
     return cues
 

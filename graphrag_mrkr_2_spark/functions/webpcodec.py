@@ -563,13 +563,6 @@ def _walk_chunks(data: bytes) -> dict:
     return chunks
 
 
-def _find_vp8l_chunk(data: bytes) -> bytes:
-    chunks = _walk_chunks(data)
-    if b"VP8L" in chunks:
-        return chunks[b"VP8L"]
-    raise ValueError("WEBP container has no VP8L chunk")
-
-
 def _unfilter_alpha(plane: np.ndarray, method: int) -> np.ndarray:
     """Inverse of the WEBP alpha-plane row filters (container spec §Alpha;
     semantics of libwebp dsp/filters.c Unfilter, row 0 always horizontal

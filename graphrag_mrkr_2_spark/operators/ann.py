@@ -42,57 +42,47 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def cosine_to_query(df: DataFrame, query_vec: list[float], vec_col: str = "embedding") -> DataFrame:
+def cosine_to_query(df: DataFrame, query_vec: list[float]) -> DataFrame:
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     cos = _dot(v, q) / (_norm(v) * _norm(q))
     return df.withColumn("cosine", cos)
 
 
-def brute_force_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k by cosine (ties broken by id asc for determinism)."""
+def brute_force_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
+    """Exact top-k by cosine (ties broken by vec_id asc for determinism)."""
     return (
-        cosine_to_query(df, query_vec, vec_col)
-        .select(F.col(id_col), F.col("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        cosine_to_query(df, query_vec)
+        .select("vec_id", "cosine")
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def knn_join(
-    items: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    item_id: str = "vec_id",
-    query_id: str = "query_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k items of (query_id, vec_id, ivec, qvec) pairs by the
+    exact JVM cosine (ties broken by vec_id asc)."""
+    iv, qv = _as_double(F.col("ivec")), _as_double(F.col("qvec"))
+    scored = pairs.select(
+        "query_id", "vec_id", (_dot(iv, qv) / (_norm(iv) * _norm(qv))).alias("cosine")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def knn_join(items: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact k-NN join: for each query row, top-k items by cosine.
 
     Broadcast the (small) query side; per-query window top-k. Exact but
     O(|items|·|queries|) — the correctness baseline for lsh_topk.
     """
-    q = queries.select(
-        F.col(query_id), _as_double(F.col(vec_col)).alias("qvec")
-    )
-    it = items.select(F.col(item_id), _as_double(F.col(vec_col)).alias("ivec"))
-    scored = it.crossJoin(F.broadcast(q)).select(
-        query_id,
-        item_id,
-        (_dot(F.col("ivec"), F.col("qvec")) / (_norm(F.col("ivec")) * _norm(F.col("qvec")))).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(item_id))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    q = queries.select("query_id", F.col("embedding").alias("qvec"))
+    it = items.select("vec_id", F.col("embedding").alias("ivec"))
+    return _cosine_topk(it.crossJoin(F.broadcast(q)), k)
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.RandomState(seed)
+def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.RandomState(7)
     return rng.normal(size=(n_planes, dim)).astype(float)
 
 
@@ -109,11 +99,9 @@ def hyperplane_signature(vec_col, planes: np.ndarray):
     return sig
 
 
-def hyperplane_buckets(
-    df: DataFrame, dim: int, n_planes: int = 8, vec_col: str = "embedding", seed: int = 7
-) -> DataFrame:
-    planes = _hyperplanes(dim, n_planes, seed)
-    return df.withColumn("bucket", hyperplane_signature(F.col(vec_col), planes))
+def hyperplane_buckets(df: DataFrame, dim: int, n_planes: int = 8) -> DataFrame:
+    planes = _hyperplanes(dim, n_planes)
+    return df.withColumn("bucket", hyperplane_signature(F.col("embedding"), planes))
 
 
 def lsh_topk(
@@ -122,10 +110,6 @@ def lsh_topk(
     dim: int,
     k: int = 5,
     n_planes: int = 8,
-    item_id: str = "vec_id",
-    query_id: str = "query_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
 ) -> DataFrame:
     """ANN top-k: score only items sharing the query's hyperplane bucket.
 
@@ -133,22 +117,13 @@ def lsh_topk(
     planes or multiprobe). At 10^12 scale add multiprobe neighbors of the
     bucket id (hamming-1 flips) — same join shape.
     """
-    bi = hyperplane_buckets(items, dim, n_planes, vec_col, seed).select(
-        F.col(item_id), F.col(vec_col).alias("ivec"), "bucket"
+    bi = hyperplane_buckets(items, dim, n_planes).select(
+        "vec_id", F.col("embedding").alias("ivec"), "bucket"
     )
-    bq = hyperplane_buckets(queries, dim, n_planes, vec_col, seed).select(
-        F.col(query_id), F.col(vec_col).alias("qvec"), "bucket"
+    bq = hyperplane_buckets(queries, dim, n_planes).select(
+        "query_id", F.col("embedding").alias("qvec"), "bucket"
     )
-    scored = bi.join(bq, "bucket").select(
-        query_id,
-        item_id,
-        (
-            _dot(_as_double(F.col("ivec")), _as_double(F.col("qvec")))
-            / (_norm(_as_double(F.col("ivec"))) * _norm(_as_double(F.col("qvec"))))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(item_id))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _cosine_topk(bi.join(bq, "bucket"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -162,29 +137,18 @@ def _normalize_rows(m: np.ndarray) -> np.ndarray:
     return m / n
 
 
-def ivf_train(
-    items: DataFrame,
-    n_lists: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_iter: int = 5,
-    seed: int = 7,
-    sample_fraction: float = None,
-) -> np.ndarray:
+def ivf_train(items: DataFrame, n_lists: int = 16, max_iter: int = 5) -> np.ndarray:
     """Spherical k-means centroids, (n_lists, dim) float64, rows L2-normal.
 
     100-TB shape: initialization is a hash-ordered bounded sample
     (n_lists rows), each Lloyd iteration is ONE map-side-combined groupBy —
     the per-dimension sums are plain JVM ``F.sum(vec[i])`` aggregates, so
     the shuffle carries n_lists x dim doubles, and only the centroid matrix
-    is collected.  Pass ``sample_fraction`` to train on a sample (standard
-    IVF practice — the quantizer does not need the full corpus).
+    is collected.
     """
-    if sample_fraction is not None:
-        items = items.sample(fraction=sample_fraction, seed=seed)
     init = (
-        items.select(_as_double(F.col(vec_col)).alias("v"))
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
+        items.select(_as_double(F.col("embedding")).alias("v"))
+        .orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(7)))
         .limit(n_lists)
         .collect()
     )
@@ -195,7 +159,7 @@ def ivf_train(
     # persist the projected vectors: each Lloyd iteration re-reads them,
     # and re-scanning the full upstream lineage max_iter times is the
     # dominant cost at corpus scale (review r5 finding #7)
-    vecs = items.select(_as_double(F.col(vec_col)).alias("v")).persist()
+    vecs = items.select(_as_double(F.col("embedding")).alias("v")).persist()
     try:
         for _ in range(max_iter):
             assign = _assign_udf(centroids)
@@ -239,12 +203,10 @@ def _probe_udf(centroids: np.ndarray, nprobe: int):
     return probe
 
 
-def ivf_assign(
-    df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding"
-) -> DataFrame:
+def ivf_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Attach the IVF ``list_id`` column (nearest centroid by cosine)."""
     return df.withColumn(
-        "list_id", _assign_udf(centroids)(_as_double(F.col(vec_col)))
+        "list_id", _assign_udf(centroids)(_as_double(F.col("embedding")))
     )
 
 
@@ -254,9 +216,6 @@ def ivf_topk(
     centroids: np.ndarray,
     k: int = 5,
     nprobe: int = 4,
-    item_id: str = "vec_id",
-    query_id: str = "query_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN top-k: queries score only items in their ``nprobe`` nearest
     lists; survivors are rescored with the exact JVM cosine.
@@ -266,24 +225,15 @@ def ivf_topk(
     balance (k-means keeps lists comparable; a pathological corpus shows up
     as a hot list_id, fixable by raising n_lists).  ``nprobe == n_lists``
     degenerates to the exact knn_join result — the correctness anchor."""
-    bi = ivf_assign(items, centroids, vec_col).select(
-        F.col(item_id), F.col(vec_col).alias("ivec"), "list_id"
+    bi = ivf_assign(items, centroids).select(
+        "vec_id", F.col("embedding").alias("ivec"), "list_id"
     )
     bq = (
         queries.select(
-            F.col(query_id),
-            F.col(vec_col).alias("qvec"),
-            _probe_udf(centroids, nprobe)(_as_double(F.col(vec_col))).alias("probes"),
+            "query_id",
+            F.col("embedding").alias("qvec"),
+            _probe_udf(centroids, nprobe)(_as_double(F.col("embedding"))).alias("probes"),
         )
-        .select(query_id, "qvec", F.explode("probes").alias("list_id"))
+        .select("query_id", "qvec", F.explode("probes").alias("list_id"))
     )
-    scored = bi.join(bq, "list_id").select(
-        query_id,
-        item_id,
-        (
-            _dot(_as_double(F.col("ivec")), _as_double(F.col("qvec")))
-            / (_norm(_as_double(F.col("ivec"))) * _norm(_as_double(F.col("qvec"))))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(item_id))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _cosine_topk(bi.join(bq, "list_id"), k)

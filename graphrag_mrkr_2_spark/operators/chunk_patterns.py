@@ -57,11 +57,14 @@ from pyspark.sql.window import Window
 
 __all__ = ["ChunkPattern", "BUILTIN_PATTERNS", "chunk_suggestions"]
 
-# Python's str.strip() as a regex (parity on scraped text): (?U) = Java
-# UNICODE_CHARACTER_CLASS, so \s matches NBSP & friends, and str.isspace()
-# also holds for the separators U+001C-U+001F. Spark's trim strips only
-# U+0020.
-_STRIP_RE = r"(?U)^[\s\x1c-\x1f]+|[\s\x1c-\x1f]+$"
+# Python's str.isspace() as a Java regex class (parity on scraped text):
+# under (?U) = Java UNICODE_CHARACTER_CLASS, \s matches NBSP & friends, and
+# str.isspace() also holds for the separators U+001C-U+001F. Spark's trim
+# strips only U+0020, and Java's \s without (?U) is ASCII.
+_PY_SPACE = r"\s\x1c-\x1f"
+_STRIP_RE = rf"(?U)^[{_PY_SPACE}]+|[{_PY_SPACE}]+$"  # str.strip()
+_PY_SPACE_RUN_RE = rf"(?U)[{_PY_SPACE}]+"  # what str.split() splits on
+_PY_NON_SPACE_RE = rf"(?U)[^{_PY_SPACE}]"  # one character not str.isspace()
 _WS_RUN_RE = r"(?U)\s+"
 _ALNUM_RE = r"[\p{L}\p{N}]"  # ≈ Python str.isalnum (exact on ASCII)
 
@@ -163,14 +166,11 @@ def _suggestion_frame(
     pattern_idx: int,
     reasoning,
     related,
-    doc_col: str,
-    id_col: str,
-    index_col: str,
 ) -> DataFrame:
     return df.select(
-        F.col(doc_col).alias("document_id"),
-        F.col(id_col).alias("chunk_id"),
-        F.col(index_col).cast("int").alias("chunk_index"),
+        "document_id",
+        "chunk_id",
+        F.col("chunk_index").cast("int").alias("chunk_index"),
         F.lit(pattern.action).alias("action"),
         F.lit(float(pattern.confidence)).alias("confidence"),
         reasoning.alias("reasoning"),
@@ -183,26 +183,22 @@ def _suggestion_frame(
 def chunk_suggestions(
     chunks: DataFrame,
     patterns: tuple[ChunkPattern, ...] | list[ChunkPattern] | None = None,
-    min_confidence: float = 0.5,
     max_suggestions: int = 10,
-    doc_col: str = "document_id",
-    id_col: str = "chunk_id",
-    content_col: str = "content",
-    index_col: str = "chunk_index",
 ) -> DataFrame:
     """Apply chunk patterns over the chunks table; one row per suggestion.
 
     Output: (document_id, chunk_id, chunk_index, action, confidence,
     reasoning, pattern_name, related_chunk_ids array<string>) — the
-    ChunkSuggestion.to_dict shape (chunk_pattern_learner.py:44-55), limited
-    to ``max_suggestions`` per document in the reference's sort order
+    ChunkSuggestion.to_dict shape (chunk_pattern_learner.py:44-55), of
+    confidence at least 0.5, limited to ``max_suggestions`` per document in
+    the reference's sort order
     (get_suggestions :117-124: confidence DESC, stable over pattern then
     chunk iteration order).
     """
     pats = [p for p in (patterns if patterns is not None else BUILTIN_PATTERNS) if p.enabled]
-    src = chunks.select(doc_col, id_col, content_col, index_col)
+    src = chunks.select("document_id", "chunk_id", "content", "chunk_index")
 
-    content = F.col(content_col)
+    content = F.col("content")
     stripped_len = F.length(F.regexp_replace(content, _STRIP_RE, ""))
     no_related = F.lit(None).cast("array<string>")
 
@@ -239,9 +235,6 @@ def chunk_suggestions(
                     i,
                     F.lit(f"Matched pattern: {p.name}"),
                     no_related,
-                    doc_col,
-                    id_col,
-                    index_col,
                 )
             )
         elif p.match_type == "length" and c.get("min_consecutive", 1) == 1:
@@ -260,9 +253,6 @@ def chunk_suggestions(
                         f"Length %d matches criteria for {fname}", stripped_len
                     ),
                     no_related,
-                    doc_col,
-                    id_col,
-                    index_col,
                 )
             )
         elif p.match_type == "length":
@@ -273,18 +263,18 @@ def chunk_suggestions(
                 continue
             max_len = int(c["max_length"])
             min_run = int(c.get("min_consecutive", 1))
-            w_all = Window.partitionBy(doc_col).orderBy(index_col)
+            w_all = Window.partitionBy("document_id").orderBy("chunk_index")
             numbered = src.withColumn("_rn", F.row_number().over(w_all)).where(
                 stripped_len < F.lit(max_len)
             )
-            w_match = Window.partitionBy(doc_col).orderBy(index_col)
+            w_match = Window.partitionBy("document_id").orderBy("chunk_index")
             runs = (
                 numbered.withColumn("_grp", F.col("_rn") - F.row_number().over(w_match))
-                .groupBy(doc_col, "_grp")
+                .groupBy("document_id", "_grp")
                 .agg(
                     F.count(F.lit(1)).alias("_run_len"),
                     F.sort_array(
-                        F.collect_list(F.struct(F.col(index_col), F.col(id_col)))
+                        F.collect_list(F.struct("chunk_index", "chunk_id"))
                     ).alias("_members"),
                 )
                 .where(F.col("_run_len") >= min_run)
@@ -292,9 +282,9 @@ def chunk_suggestions(
             first = F.element_at("_members", 1)
             frames.append(
                 runs.select(
-                    F.col(doc_col).alias("document_id"),
-                    first.getField(id_col).alias("chunk_id"),
-                    first.getField(index_col).cast("int").alias("chunk_index"),
+                    "document_id",
+                    first.getField("chunk_id").alias("chunk_id"),
+                    first.getField("chunk_index").cast("int").alias("chunk_index"),
                     F.lit(p.action).alias("action"),
                     F.lit(float(p.confidence)).alias("confidence"),
                     F.format_string(
@@ -304,7 +294,7 @@ def chunk_suggestions(
                     F.lit(p.name).alias("pattern_name"),
                     F.transform(
                         F.slice(F.col("_members"), 2, F.size("_members") - 1),
-                        lambda m: m.getField(id_col),
+                        lambda m: m.getField("chunk_id"),
                     ).alias("related_chunk_ids"),
                     F.lit(i).alias("_pattern_idx"),
                 )
@@ -327,21 +317,18 @@ def chunk_suggestions(
                         F.floor(ratio * 100).cast("int"),
                     ),
                     no_related,
-                    doc_col,
-                    id_col,
-                    index_col,
                 )
             )
         elif p.match_type == "similarity" and c.get("method") == "exact_normalized":
             norm = F.regexp_replace(
                 F.lower(F.regexp_replace(content, _STRIP_RE, "")), _WS_RUN_RE, " "
             )
-            w = Window.partitionBy(doc_col, "_norm").orderBy(index_col)
+            w = Window.partitionBy("document_id", "_norm").orderBy("chunk_index")
             dupes = (
                 src.withColumn("_norm", norm)
                 .where(F.length("_norm") >= 20)
                 .withColumn("_occ", F.row_number().over(w))
-                .withColumn("_first_id", F.first(id_col).over(w))
+                .withColumn("_first_id", F.first("chunk_id").over(w))
                 .where(F.col("_occ") > 1)
             )
             frames.append(
@@ -351,9 +338,6 @@ def chunk_suggestions(
                     i,
                     F.lit("Duplicate content of another chunk"),
                     F.array(F.col("_first_id")),
-                    doc_col,
-                    id_col,
-                    index_col,
                 )
             )
 
@@ -368,7 +352,7 @@ def chunk_suggestions(
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)
-    out = out.where(F.col("confidence") >= F.lit(float(min_confidence)))
+    out = out.where(F.col("confidence") >= F.lit(0.5))
     rank_w = Window.partitionBy("document_id").orderBy(
         F.desc("confidence"), F.asc("_pattern_idx"), F.asc("chunk_index")
     )

@@ -301,19 +301,16 @@ def _stable_id(anchor: str) -> int:
     return int.from_bytes(hashlib.sha1(anchor.encode()).digest()[:8], "big") % (2**62)
 
 
-def write_membership(nodes: DataFrame, membership: DataFrame, id_col: str = "entity_id") -> DataFrame:
+def write_membership(nodes: DataFrame, membership: DataFrame) -> DataFrame:
     """G4 — join membership onto the node table (graph_clustering.py:179-210)."""
     return nodes.join(
-        membership.withColumnRenamed("node", id_col), id_col, "left"
+        membership.withColumnRenamed("node", "entity_id"), "entity_id", "left"
     ).withColumn("level", F.coalesce(F.col("level"), F.lit(0)))
 
 
-def community_summaries(
-    nodes_with_membership: DataFrame,
-    top_entities: int = 10,
-) -> DataFrame:
+def community_summaries(nodes_with_membership: DataFrame) -> DataFrame:
     """G5 (non-LLM core) — per-community aggregates feeding the summarizer
-    (core/community_summarizer.py:21-175): member count, top entities by
+    (core/community_summarizer.py:21-175): member count, top 10 entities by
     mention_count, mean importance. The LLM text generation is an optional
     mapInPandas stage at deployment (out of the P/R-critical path).
 
@@ -333,7 +330,7 @@ def community_summaries(
     )
     tops = (
         base.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= top_entities)
+        .where(F.col("__rn") <= 10)
         .groupBy("community_id", "level")
         .agg(
             F.transform(

@@ -16,7 +16,7 @@ Reference:
   settings.py:348), then propagated onto every chunk's metadata.
 
 Spark shape (same seam pattern as C7/T8): per-document content assembly is
-pure JVM — a bounded per-doc collect_list (<= batch_size rows, no skew) +
+pure JVM — a bounded per-doc collect_list (<= 20 rows, no skew) +
 concat + the truncation rules as column expressions — and the LLM is an
 injectable BATCH callable crossing to Python once per Arrow batch via
 mapInPandas. The default callables are deterministic, network-free
@@ -50,28 +50,23 @@ DocSummarizerFn = Callable[[list[str]], list[dict]]
 DocClassifierFn = Callable[[list[str]], list[dict]]
 
 
-def assemble_document_content(
-    chunks: DataFrame,
-    doc_col: str = "document_id",
-    content_col: str = "content",
-    index_col: str = "chunk_index",
-    batch_size: int = 20,
-) -> DataFrame:
-    """(document_id, content): first ``batch_size`` chunks joined by \\n\\n,
-    then the reference's smart truncation (document_summarizer.py:248-258).
+def assemble_document_content(chunks: DataFrame) -> DataFrame:
+    """(document_id, content): the first 20 chunks (the reference's
+    summarization batch size) joined by \\n\\n, then its smart truncation
+    (document_summarizer.py:248-258).
 
-    All JVM: the per-doc collect_list is bounded by batch_size so no
+    All JVM: the per-doc collect_list is bounded by 20 rows so no
     aggregation-buffer skew; truncation is substring/instr expressions.
     """
     assembled = (
-        chunks.where(F.col(index_col) < batch_size)
-        .groupBy(F.col(doc_col).alias("document_id"))
+        chunks.where(F.col("chunk_index") < 20)
+        .groupBy("document_id")
         .agg(
             F.array_join(
                 F.transform(
                     F.array_sort(
                         F.collect_list(
-                            F.struct(F.col(index_col).alias("i"), F.col(content_col).alias("c"))
+                            F.struct(F.col("chunk_index").alias("i"), F.col("content").alias("c"))
                         )
                     ),
                     lambda s: s["c"],
@@ -163,10 +158,9 @@ _CLASSIFY_SCHEMA = (
 def summarize_documents(
     chunks: DataFrame,
     summarizer: DocSummarizerFn = deterministic_doc_summarizer,
-    batch_size: int = 20,
 ) -> DataFrame:
     """T10 summary leg → (document_id, summary, document_type, hashtags)."""
-    docs = assemble_document_content(chunks, batch_size=batch_size)
+    docs = assemble_document_content(chunks)
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -188,11 +182,10 @@ def summarize_documents(
 def classify_documents(
     chunks: DataFrame,
     classifier: DocClassifierFn = deterministic_doc_classifier,
-    batch_size: int = 20,
 ) -> DataFrame:
     """T10 classification leg → (document_id, categories, confidence,
     keywords, difficulty)."""
-    docs = assemble_document_content(chunks, batch_size=batch_size)
+    docs = assemble_document_content(chunks)
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -212,27 +205,20 @@ def classify_documents(
     return docs.mapInPandas(_run, _CLASSIFY_SCHEMA)
 
 
-def propagate_category(
-    chunks: DataFrame,
-    classified: DataFrame,
-    doc_col: str = "document_id",
-    confidence_threshold: float = 0.7,
-    default_category: str = "general",
-) -> DataFrame:
+def propagate_category(chunks: DataFrame, classified: DataFrame) -> DataFrame:
     """document_processor.py:1531-1545: doc_category = categories[0] when
-    confidence >= threshold else the default; joined onto every chunk as a
+    confidence >= 0.7 else 'general'; joined onto every chunk as a
     ``category`` column (the reference mutates each chunk's metadata dict —
     a column IS chunk metadata here). Plain equi-join on document_id; the
     doc-level side is one row per doc, broadcastable when small."""
     doc_cat = classified.select(
-        F.col("document_id").alias(doc_col),
+        "document_id",
         F.when(
-            (F.col("confidence") >= confidence_threshold)
-            & (F.size("categories") > 0),
+            (F.col("confidence") >= 0.7) & (F.size("categories") > 0),
             F.col("categories")[0],
         )
-        .otherwise(F.lit(default_category))
+        .otherwise(F.lit("general"))
         .alias("category"),
     )
-    out = chunks.join(doc_cat, doc_col, "left")
-    return out.withColumn("category", F.coalesce("category", F.lit(default_category)))
+    out = chunks.join(doc_cat, "document_id", "left")
+    return out.withColumn("category", F.coalesce("category", F.lit("general")))

@@ -36,7 +36,7 @@ from ..functions.chunking import (
     chunk_document,
 )
 from ..functions.html_text import HtmlHeadingChunker, extract_plain_text
-from .chunk_patterns import _STRIP_RE
+from .chunk_patterns import _PY_NON_SPACE_RE, _PY_SPACE_RUN_RE, _STRIP_RE
 
 # ---------------------------------------------------------------------------
 # S1: plain-text extraction (T1 — core/html_chunker.py:88-91)
@@ -244,10 +244,11 @@ def with_content_filter(
     bad_char_distribution.
     """
     cfg = cfg or ContentFilterConfig()
-    # str.strip(), not F.trim (which strips only U+0020), as in the twin
+    # str.strip(), str.split() and str.isspace() as in the twin, not F.trim
+    # (which strips only U+0020) and Java's plain \s (ASCII only)
     c = F.regexp_replace(F.col(content_col), _STRIP_RE, "")
     length = F.length(c)
-    words = F.split(c, r"\s+")
+    words = F.split(c, _PY_SPACE_RUN_RE)
     n_words = F.size(words)
     unique_ratio = F.size(F.array_distinct(words)) / n_words
     first_word = F.lower(F.element_at(words, 1))
@@ -264,7 +265,7 @@ def with_content_filter(
     first_word_count = F.size(lowered) - F.size(F.array_remove(lowered, first_word))
     # character classes: \p{L}\p{N} ≈ Python str.isalnum (exact on ASCII)
     alnum = F.length(F.regexp_replace(c, r"[^\p{L}\p{N}]", ""))
-    space = F.length(F.regexp_replace(c, r"[^\s]", ""))
+    space = F.length(F.regexp_replace(c, _PY_NON_SPACE_RE, ""))
     special = length - alnum - space
 
     reason = (
@@ -313,18 +314,19 @@ def with_quality_score(chunks: DataFrame, content_col: str = "content") -> DataF
     c = F.col(content_col)
     total = F.length(c)
     alnum = F.length(F.regexp_replace(c, r"[^\p{L}\p{N}]", ""))
-    space = F.length(F.regexp_replace(c, r"[^\s]", ""))
+    space = F.length(F.regexp_replace(c, _PY_NON_SPACE_RE, ""))
     text_ratio = alnum / total
     ws_ratio = space / total
 
-    # str.strip() per line and on the whole text, as in the twin (F.trim
-    # strips only U+0020)
+    # str.strip() per line and on the whole text, str.split() words and
+    # str.isspace() counts, as in the twin (F.trim strips only U+0020, and
+    # Java's plain \s is ASCII)
     lines = F.filter(
         F.transform(F.split(c, "\n"), lambda x: F.regexp_replace(x, _STRIP_RE, "")),
         lambda x: x != "",
     )
     total_words = F.aggregate(
-        lines, F.lit(0), lambda acc, x: acc + F.size(F.split(x, r"\s+"))
+        lines, F.lit(0), lambda acc, x: acc + F.size(F.split(x, _PY_SPACE_RUN_RE))
     )
     avg_wpl = F.when(F.size(lines) > 0, total_words / F.size(lines)).otherwise(F.lit(0.0))
 
@@ -355,18 +357,14 @@ def with_quality_score(chunks: DataFrame, content_col: str = "content") -> DataF
     return chunks.withColumn("quality_score", score)
 
 
-def post_entity_chunk_removal(
-    chunks: DataFrame,
-    entity_counts: DataFrame,
-    content_col: str = "content",
-) -> DataFrame:
+def post_entity_chunk_removal(chunks: DataFrame, entity_counts: DataFrame) -> DataFrame:
     """T6 — drop chunks by quality + extraction yield (core/ocr.py:300-330).
 
     ``entity_counts``: (chunk_id, entity_count, relationship_count). Chunks
     missing from it count as 0/0. Broadcast-joinable in practice (counts are
     small); left join + filter keeps the plan shuffle-light.
     """
-    scored = with_quality_score(chunks, content_col)
+    scored = with_quality_score(chunks)
     joined = scored.join(entity_counts, on="chunk_id", how="left").fillna(
         {"entity_count": 0, "relationship_count": 0}
     )
@@ -377,7 +375,7 @@ def post_entity_chunk_removal(
             & (F.col("relationship_count") == 0)
         )
         | (
-            (F.length(F.regexp_replace(F.col(content_col), _STRIP_RE, "")) < 30)
+            (F.length(F.regexp_replace(F.col("content"), _STRIP_RE, "")) < 30)
             & (F.col("entity_count") == 0)
         )
     )

@@ -95,9 +95,9 @@ MEDIA_SCHEMA = StructType(
 )
 
 
-def media_repartition(df: DataFrame, num_partitions: int, payload_col: str = "payload") -> DataFrame:
+def media_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Spread payloads by content hash (head-host skew protection)."""
-    return df.repartition(num_partitions, F.xxhash64(F.col(payload_col)))
+    return df.repartition(num_partitions, F.xxhash64(F.col("payload")))
 
 
 def _row_table(df: DataFrame, key_col: str, value_col: str,
@@ -151,14 +151,10 @@ DECODED_DOC_SCHEMA = StructType(
 )
 
 
-def decode_documents(
-    df: DataFrame,
-    id_col: str = "media_id",
-    fmt_col: str = "fmt",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Binary document payloads → text via the pure-stdlib format kernels
-    (functions/docformats.py; reference ingestion/loaders/*). Rows whose
+def decode_documents(df: DataFrame) -> DataFrame:
+    """Binary document (media_id, fmt, payload) rows → text via the
+    pure-stdlib format kernels (functions/docformats.py; reference
+    ingestion/loaders/*). Rows whose
     payload fails to decode (corrupt, empty, unknown format) come back with
     text NULL — quarantine, never a failed 100 TB job.
 
@@ -173,19 +169,18 @@ def decode_documents(
                 decode_document(
                     bytes(p) if p is not None else None, f or ""
                 )
-                for p, f in zip(pdf[payload_col], pdf[fmt_col])
+                for p, f in zip(pdf["payload"], pdf["fmt"])
             ]
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col].astype(str),
-                    "fmt": pdf[fmt_col],
+                    "media_id": pdf["media_id"].astype(str),
+                    "fmt": pdf["fmt"],
                     "text": pd.Series(texts, dtype=object),
                 }
             )
 
-    return df.select(
-        F.col(id_col), F.col(fmt_col), F.col(payload_col)
-    ).mapInPandas(_decode, DECODED_DOC_SCHEMA)
+    return df.select("media_id", "fmt", "payload").mapInPandas(
+        _decode, DECODED_DOC_SCHEMA)
 
 
 ENCODED_DOC_SCHEMA = StructType(
@@ -975,11 +970,7 @@ _MP4_AUDIO_FOURCCS = {
 }
 
 
-def sample_audio_payloads(
-    media: DataFrame,
-    strict: bool = False,
-    max_samples: int = 2000,
-) -> DataFrame:
+def sample_audio_payloads(media: DataFrame, strict: bool = False) -> DataFrame:
     """Coded-audio frame extraction via row-multiplying mapInPandas —
     the audio twin of ``sample_video_frames``. The DEMUX layer is real
     for every audio framing real crawls ship: MP4 audio tracks
@@ -997,12 +988,13 @@ def sample_audio_payloads(
     decoder library of any kind exists in this container, SCALE.md).
     Unknown/corrupt payloads: strict=True raises, strict=False emits
     deterministic fake rows so the Arrow plumbing stays testable.
-    ``max_samples`` bounds one row's fan-out (a malformed sample table
-    must not explode a partition)."""
+    ``audiodemux.MAX_FRAMES`` bounds one row's fan-out (a malformed sample
+    table must not explode a partition)."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from graphrag_mrkr_2_spark.functions.audiocodecs import sniff_audio
         from graphrag_mrkr_2_spark.functions.audiodemux import (
+            MAX_FRAMES,
             mkv_audio_track_info,
             mp3_frames,
             ogg_packets,
@@ -1029,20 +1021,20 @@ def sample_audio_payloads(
                         codec = _MP4_AUDIO_FOURCCS.get(
                             info["codec"], info["codec"])
                         samples = [(ts, codec, p) for ts, _k, p
-                                   in info["samples"][:max_samples]]
+                                   in info["samples"][:MAX_FRAMES]]
                     elif sniff_mkv(payload):
                         info = mkv_audio_track_info(payload)
                         codec = _MKV_AUDIO_CODEC_IDS.get(
                             info["codec"], info["codec"])
                         samples = [(ts, codec, p) for ts, p
-                                   in info["samples"][:max_samples]]
+                                   in info["samples"][:MAX_FRAMES]]
                     elif sniff_ogg(payload):
                         codec = probe_ogg(payload).get("codec") or "ogg"
                         samples = [(0, codec, p) for p
-                                   in ogg_packets(payload, limit=max_samples)]
+                                   in ogg_packets(payload)]
                     elif sniff_mp3(payload):
                         samples = [(ts, "mp3", p) for ts, p
-                                   in mp3_frames(payload, limit=max_samples)]
+                                   in mp3_frames(payload)]
                 except Exception:
                     if strict:
                         raise
@@ -1257,8 +1249,8 @@ def _clean_probe(out: dict) -> dict:
     return out
 
 
-def with_probed_media(df: DataFrame, id_col: str = "media_id", payload_col: str = "payload") -> DataFrame:
-    """(id, payload) → full MEDIA_SCHEMA rows with kind/codec/dims/duration
+def with_probed_media(df: DataFrame) -> DataFrame:
+    """(media_id, payload) → full MEDIA_SCHEMA rows with kind/codec/dims/duration
     probed from the real container headers. Unknown payloads keep
     kind='unknown' so downstream filters can quarantine them."""
     meta_fields = MEDIA_SCHEMA["meta"].dataType.fieldNames()
@@ -1268,7 +1260,7 @@ def with_probed_media(df: DataFrame, id_col: str = "media_id", payload_col: str 
         p = probe_media(payload)
         yield p["kind"] or "unknown", payload, {k: p[k] for k in meta_fields}
 
-    return _row_table(df, id_col, payload_col, MEDIA_SCHEMA, rows_of,
+    return _row_table(df, "media_id", "payload", MEDIA_SCHEMA, rows_of,
                       strict=True)
 
 
@@ -1305,9 +1297,6 @@ def extract_image_text(
     ocr=None,
     enable_ocr: bool = True,
     strict: bool = False,
-    default_language: str = "eng",
-    id_col: str = "media_id",
-    payload_col: str = "payload",
     passthrough_cols: list[str] | None = None,
 ) -> DataFrame:
     """Pixels→text for standalone images — the reference image loader's
@@ -1343,7 +1332,7 @@ def extract_image_text(
     )
     if not enable_ocr:
         return media.select(
-            F.col(id_col).cast("string").alias("media_id")
+            F.col("media_id").cast("string").alias("media_id")
         ).limit(0).select(
             F.col("media_id"),
             *[
@@ -1356,14 +1345,8 @@ def extract_image_text(
         for pdf in batches:
             rows = []
             for rec in pdf.itertuples(index=False):
-                payload = (
-                    bytes(getattr(rec, payload_col))
-                    if getattr(rec, payload_col) is not None
-                    else b""
-                )
-                result = process_standalone_image(
-                    payload, ocr, default_language=default_language
-                )
+                payload = bytes(rec.payload) if rec.payload is not None else b""
+                result = process_standalone_image(payload, ocr)
                 meta = result["ocr_metadata"]
                 analysis = meta.get("content_analysis", {})
                 err = meta.get("error")
@@ -1381,7 +1364,7 @@ def extract_image_text(
                 rows.append(
                     {
                         **{c: getattr(rec, c) for c in extra},
-                        "media_id": str(getattr(rec, id_col)),
+                        "media_id": str(rec.media_id),
                         "content": result["content"],
                         "processing_method": "image_ocr",
                         "file_type": meta.get("file_type", "standalone_image"),
@@ -1397,9 +1380,8 @@ def extract_image_text(
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
-    return media.select(
-        F.col(id_col), F.col(payload_col), *[F.col(c) for c in extra]
-    ).mapInPandas(_extract, out_schema)
+    return media.select("media_id", "payload", *extra).mapInPandas(
+        _extract, out_schema)
 
 
 SUBTITLE_SCHEMA = StructType(
@@ -1562,13 +1544,9 @@ def extract_chapter_text(media: DataFrame, strict: bool = False) -> DataFrame:
                       strict)
 
 
-def route_web_payloads(
-    df: DataFrame,
-    payload_col: str = "payload",
-    content_type_col: str | None = None,
-) -> DataFrame:
-    """Classify raw crawled payloads into decoder families (r7): adds
-    ``kind``/``subtype`` columns via functions/mimesniff.sniff_web_payload
+def route_web_payloads(df: DataFrame, content_type_col: str | None = None) -> DataFrame:
+    """Classify raw crawled ``payload`` values into decoder families (r7):
+    adds ``kind``/``subtype`` columns via functions/mimesniff.sniff_web_payload
     — WHATWG magic-byte sniffing first, the declared Content-Type (when a
     column is supplied) only as the text/binary tie-break. The output is
     the routing layer a 100 TB crawl job fans out on: one filtered branch
@@ -1593,7 +1571,7 @@ def route_web_payloads(
             cts = (pdf[content_type_col]
                    if content_type_col and content_type_col in pdf.columns
                    else [None] * len(pdf))
-            for payload, ct in zip(pdf[payload_col], cts):
+            for payload, ct in zip(pdf["payload"], cts):
                 try:
                     kind, subtype = sniff_web_payload(
                         bytes(payload) if payload is not None else b"",

@@ -45,16 +45,14 @@ def tokenize(col):
     return F.filter(F.split(F.lower(col), r"[^\p{L}\p{N}]+"), lambda t: t != "")
 
 
-def build_bm25_index(
-    chunks: DataFrame, id_col: str = "chunk_id", text_col: str = "content"
-) -> dict[str, DataFrame]:
-    """Posting lists (term, chunk, tf) + doc lengths + corpus stats.
+def build_bm25_index(chunks: DataFrame) -> dict[str, DataFrame]:
+    """Posting lists (term, chunk, tf) + doc lengths of (chunk_id, content).
 
     Two aggregations total; both partial-aggregate map-side. At web scale the
     postings table is the thing you bucket by term.
     """
     toks = chunks.select(
-        F.col(id_col).alias("chunk"), F.explode(tokenize(F.col(text_col))).alias("term")
+        F.col("chunk_id").alias("chunk"), F.explode(tokenize(F.col("content"))).alias("term")
     )
     postings = toks.groupBy("term", "chunk").agg(F.count(F.lit(1)).alias("tf"))
     doc_len = toks.groupBy("chunk").agg(F.count(F.lit(1)).alias("dl"))
@@ -64,11 +62,10 @@ def build_bm25_index(
 def bm25_search(
     index: dict[str, DataFrame],
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     top_k: int = 10,
 ) -> DataFrame:
-    """Okapi BM25 over the inverted index for one query's terms.
+    """Okapi BM25 (k1 = 1.2, b = 0.75) over the inverted index for one
+    query's terms.
 
     Fully lazy: the corpus scalars (N, avgdl) ride along as a broadcast
     1-row aggregate instead of two driver collects, so one query is ONE
@@ -94,8 +91,8 @@ def bm25_search(
         .withColumn(
             "score",
             idf
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
+            * (F.col("tf") * 2.2)
+            / (F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl"))),
         )
         .groupBy("chunk")
         .agg(F.sum("score").alias("score"))
@@ -110,32 +107,30 @@ def bm25_search(
 # ---------------------------------------------------------------------------
 
 
-def rrf_fuse(ranked_lists: list[DataFrame], k: int = 60, id_col: str = "chunk") -> DataFrame:
+def rrf_fuse(ranked_lists: list[DataFrame]) -> DataFrame:
     """Reciprocal Rank Fusion (rag/retriever.py:41-62): each input DF must
-    carry (id_col, rank) with rank starting at 1; fused score sums 1/(k+rank)."""
+    carry (chunk, rank) with rank starting at 1; fused score sums
+    1/(60+rank)."""
     parts = [
-        df.select(F.col(id_col), (1.0 / (F.lit(k) + F.col("rank"))).alias("part"))
+        df.select("chunk", (1.0 / (F.lit(60) + F.col("rank"))).alias("part"))
         for df in ranked_lists
     ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return (
-        out.groupBy(id_col)
+        out.groupBy("chunk")
         .agg(F.sum("part").alias("rrf_score"))
-        .orderBy(F.desc("rrf_score"), F.asc(id_col))
+        .orderBy(F.desc("rrf_score"), F.asc("chunk"))
     )
 
 
 def weighted_fuse(
     chunk_scores: DataFrame,
     entity_scores: DataFrame,
-    chunk_weight: float = 0.7,
-    entity_weight: float = 0.3,
-    id_col: str = "chunk",
 ) -> DataFrame:
     """Q4 hybrid weighted fusion (README.md:61 — 70% chunk / 30% entity).
-    Inputs carry (id_col, score) each, min-max normalized before mixing.
+    Inputs carry (chunk, score) each, min-max normalized before mixing.
     Normalization scalars ride as broadcast 1-row aggregates — no collects,
     the whole fusion is one lazy plan."""
 
@@ -147,21 +142,21 @@ def weighted_fuse(
         span = F.col("hi") - F.col("lo")
         span = F.when(span != 0.0, span).otherwise(F.lit(1.0))
         return df.crossJoin(F.broadcast(stats)).select(
-            id_col, ((F.col("score") - F.col("lo")) / span).alias("nscore")
+            "chunk", ((F.col("score") - F.col("lo")) / span).alias("nscore")
         )
 
     c = norm(chunk_scores).withColumnRenamed("nscore", "cscore")
     e = norm(entity_scores).withColumnRenamed("nscore", "escore")
     return (
-        c.join(e, id_col, "outer")
+        c.join(e, "chunk", "outer")
         .fillna({"cscore": 0.0, "escore": 0.0})
         .select(
-            id_col,
-            (F.col("cscore") * chunk_weight + F.col("escore") * entity_weight).alias(
+            "chunk",
+            (F.col("cscore") * 0.7 + F.col("escore") * 0.3).alias(
                 "hybrid_score"
             ),
         )
-        .orderBy(F.desc("hybrid_score"), F.asc(id_col))
+        .orderBy(F.desc("hybrid_score"), F.asc("chunk"))
     )
 
 
@@ -177,11 +172,6 @@ def find_scored_paths(
     max_hops: int = 2,
     beam_size: int = 8,
     min_strength: float = 0.0,
-    src_col: str = "source_id",
-    dst_col: str = "target_id",
-    weight_col: str = "strength",
-    node_id_col: str = "entity_id",
-    importance_col: str = "importance_score",
 ) -> DataFrame:
     """Q5 exact reference semantics (core/graph_db.py:4788-4967
     find_scored_paths):
@@ -210,22 +200,22 @@ def find_scored_paths(
     """
     sym = (
         edges.select(
-            F.col(src_col).alias("a"),
-            F.col(dst_col).alias("b"),
-            F.col(weight_col).cast("double").alias("w"),
+            F.col("source_id").alias("a"),
+            F.col("target_id").alias("b"),
+            F.col("strength").cast("double").alias("w"),
         )
         .unionByName(
             edges.select(
-                F.col(dst_col).alias("a"),
-                F.col(src_col).alias("b"),
-                F.col(weight_col).cast("double").alias("w"),
+                F.col("target_id").alias("a"),
+                F.col("source_id").alias("b"),
+                F.col("strength").cast("double").alias("w"),
             )
         )
         .where(F.col("w") >= min_strength)
     )
     imp = nodes.select(
-        F.col(node_id_col).alias("b"),
-        F.coalesce(F.col(importance_col).cast("double"), F.lit(0.5)).alias("imp_b"),
+        F.col("entity_id").alias("b"),
+        F.coalesce(F.col("importance_score").cast("double"), F.lit(0.5)).alias("imp_b"),
     )
 
     spark = edges.sparkSession
@@ -233,8 +223,8 @@ def find_scored_paths(
     frontier = (
         seeds.join(
             nodes.select(
-                F.col(node_id_col).alias("last"),
-                F.coalesce(F.col(importance_col).cast("double"), F.lit(0.5)).alias("score"),
+                F.col("entity_id").alias("last"),
+                F.coalesce(F.col("importance_score").cast("double"), F.lit(0.5)).alias("score"),
             ),
             "last",
         )
@@ -284,30 +274,27 @@ def beam_expand(
     seeds: DataFrame,
     max_hops: int = 2,
     beam_size: int = 8,
-    min_strength: float = 0.0,
-    src_col: str = "source_id",
-    dst_col: str = "target_id",
-    weight_col: str = "strength",
 ) -> DataFrame:
     """Frontier-expansion variant of Q5 (engine extension, NOT the
     reference's path semantics — use find_scored_paths for exact parity).
 
     seeds: (seed_id). Returns (seed_id, node, hop, path_score) — per seed,
     each hop keeps the top ``beam_size`` frontier nodes by accumulated path
-    score (product of edge weights), expanding edges in both directions.
+    score (product of non-negative edge strengths), expanding edges in both
+    directions.
     Useful as a retrieval expander when per-node reach matters more than
     enumerated paths.
     """
     sym = (
         edges.select(
-            F.col(src_col).alias("a"), F.col(dst_col).alias("b"), F.col(weight_col).alias("w")
+            F.col("source_id").alias("a"), F.col("target_id").alias("b"), F.col("strength").alias("w")
         )
         .unionByName(
             edges.select(
-                F.col(dst_col).alias("a"), F.col(src_col).alias("b"), F.col(weight_col).alias("w")
+                F.col("target_id").alias("a"), F.col("source_id").alias("b"), F.col("strength").alias("w")
             )
         )
-        .where(F.col("w") >= min_strength)
+        .where(F.col("w") >= 0.0)
     )
 
     frontier = seeds.select(
@@ -354,8 +341,8 @@ _SENT_SCHEMA = StructType(
 )
 
 
-def split_sentences(chunks: DataFrame, id_col: str = "chunk_id", text_col: str = "content") -> DataFrame:
-    """T9 — sentence rows per chunk (ids mirror sha256(chunk:sN)[:16],
+def split_sentences(chunks: DataFrame) -> DataFrame:
+    """T9 — sentence rows per (chunk_id, content) chunk (ids mirror sha256(chunk:sN)[:16],
     document_processor.py:1016)."""
 
     def _split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -364,13 +351,11 @@ def split_sentences(chunks: DataFrame, id_col: str = "chunk_id", text_col: str =
         for pdf in batches:
             rows = []
             for rec in pdf.itertuples(index=False):
-                for i, s in enumerate(split_into_sentences(getattr(rec, text_col) or "")):
-                    rows.append(
-                        {"chunk_id": getattr(rec, id_col), "sentence_index": i, "sentence": s}
-                    )
+                for i, s in enumerate(split_into_sentences(rec.content or "")):
+                    rows.append({"chunk_id": rec.chunk_id, "sentence_index": i, "sentence": s})
             yield pd.DataFrame(rows, columns=["chunk_id", "sentence_index", "sentence"])
 
-    out = chunks.select(id_col, text_col).mapInPandas(_split, _SENT_SCHEMA)
+    out = chunks.select("chunk_id", "content").mapInPandas(_split, _SENT_SCHEMA)
     return out.withColumn(
         "sentence_id",
         F.substring(
@@ -442,11 +427,10 @@ def default_expansion_llm(queries: pd.Series) -> pd.Series:
 def expand_query_terms(
     queries: DataFrame,
     llm=default_expansion_llm,
-    query_col: str = "query",
-    count_col: str = "initial_results_count",
     min_threshold: int = 3,
 ) -> DataFrame:
-    """Batch sparse-retrieval query expansion (rag/query_expansion.py:14-103).
+    """Batch sparse-retrieval query expansion (rag/query_expansion.py:14-103)
+    of (query, initial_results_count) rows.
 
     Reference semantics: queries whose initial retrieval returned >=
     min_threshold results are NOT expanded (returns []); the rest go to the
@@ -466,7 +450,7 @@ def expand_query_terms(
     # NULL counts (e.g. a missed count join upstream) must not drop the row:
     # treat unknown as dense (no expansion), keeping the operator
     # row-preserving for any input
-    is_sparse = F.coalesce(F.col(count_col) < min_threshold, F.lit(False))
+    is_sparse = F.coalesce(F.col("initial_results_count") < min_threshold, F.lit(False))
     sparse = queries.where(is_sparse)
     dense = queries.where(~is_sparse)
 
@@ -474,7 +458,7 @@ def expand_query_terms(
     def _parse(raw: pd.Series) -> pd.Series:
         return raw.map(_parse_expansion)
 
-    expanded = sparse.withColumn("expanded_terms", _parse(_gen(F.col(query_col))))
+    expanded = sparse.withColumn("expanded_terms", _parse(_gen(F.col("query"))))
     return dense.withColumn(
         "expanded_terms", F.array().cast("array<string>")
     ).unionByName(expanded)
@@ -491,13 +475,11 @@ def graph_expand_chunks(
     chunk_docs: DataFrame,
     max_seeds: int = 3,
     total_cap: int = 10,
-    query_col: str = "query_id",
-    chunk_col: str = "chunk_id",
-    rank_col: str = "rank",
 ) -> DataFrame:
-    """Graph-based context expansion (rag/nodes/graph_reasoning.py:14-94):
-    from each query's top ``max_seeds`` retrieved chunks, pull chunks
-    reachable over SIMILAR_TO edges (depth 1-2) and HAS_CHUNK document
+    """Graph-based context expansion (rag/nodes/graph_reasoning.py:14-94) of
+    the (query_id, chunk_id, rank) ``retrieved`` rows: from each query's
+    top ``max_seeds`` retrieved chunks, pull chunks reachable over
+    SIMILAR_TO edges (depth 1-2) and HAS_CHUNK document
     siblings (depth 2: chunk → its document → sibling chunks), skip chunks
     already retrieved, and cap the enhanced list at ``total_cap`` rows per
     query (originals always kept; expansions fill the remainder).
@@ -511,8 +493,8 @@ def graph_expand_chunks(
     the (pre-bucketed) edge tables; the cap is a per-query window. No
     driver loops — thousands of queries expand in one plan.
     """
-    seeds = retrieved.where(F.col(rank_col) <= max_seeds).select(
-        F.col(query_col), F.col(chunk_col).alias("seed"), F.col(rank_col).alias("seed_rank")
+    seeds = retrieved.where(F.col("rank") <= max_seeds).select(
+        F.col("query_id"), F.col("chunk_id").alias("seed"), F.col("rank").alias("seed_rank")
     )
 
     sym = similar_edges.select(
@@ -523,12 +505,12 @@ def graph_expand_chunks(
 
     # depth 1: similar neighbors
     d1 = seeds.join(sym, seeds["seed"] == sym["a"]).select(
-        query_col, "seed", "seed_rank", F.col("b").alias("chunk"), F.lit(1).alias("distance")
+        "query_id", "seed", "seed_rank", F.col("b").alias("chunk"), F.lit(1).alias("distance")
     )
     # depth 2a: similar-of-similar
     sym2 = sym.select(F.col("a").alias("m"), F.col("b").alias("c"))
     d2a = d1.join(sym2, d1["chunk"] == sym2["m"]).select(
-        query_col, "seed", "seed_rank", F.col("c").alias("chunk"), F.lit(2).alias("distance")
+        "query_id", "seed", "seed_rank", F.col("c").alias("chunk"), F.lit(2).alias("distance")
     )
     # depth 2b: document siblings (chunk -HAS_CHUNK-> doc -HAS_CHUNK-> chunk)
     cd1 = chunk_docs.select(F.col("chunk_id").alias("seed_c"), F.col("document_id").alias("d"))
@@ -536,27 +518,27 @@ def graph_expand_chunks(
     d2b = (
         seeds.join(cd1, seeds["seed"] == cd1["seed_c"])
         .join(cd2, "d")
-        .select(query_col, "seed", "seed_rank", F.col("sib").alias("chunk"), F.lit(2).alias("distance"))
+        .select("query_id", "seed", "seed_rank", F.col("sib").alias("chunk"), F.lit(2).alias("distance"))
     )
 
     cand = d1.unionByName(d2a).unionByName(d2b).where(F.col("chunk") != F.col("seed"))
     # drop anything already retrieved for that query
     cand = cand.join(
-        retrieved.select(F.col(query_col), F.col(chunk_col).alias("chunk")),
-        [query_col, "chunk"],
+        retrieved.select(F.col("query_id"), F.col("chunk_id").alias("chunk")),
+        ["query_id", "chunk"],
         "left_anti",
     )
     # best (lowest seed_rank, then distance) occurrence per (query, chunk)
-    w_dedup = Window.partitionBy(query_col, "chunk").orderBy(
+    w_dedup = Window.partitionBy("query_id", "chunk").orderBy(
         F.asc("seed_rank"), F.asc("distance"), F.asc("seed")
     )
     cand = cand.withColumn("__d", F.row_number().over(w_dedup)).where(F.col("__d") == 1).drop("__d")
 
-    n_orig = retrieved.groupBy(query_col).agg(F.count(F.lit(1)).alias("n_orig"))
-    w_fill = Window.partitionBy(query_col).orderBy(
+    n_orig = retrieved.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_orig"))
+    w_fill = Window.partitionBy("query_id").orderBy(
         F.asc("seed_rank"), F.asc("distance"), F.asc("chunk")
     )
-    w_seed = Window.partitionBy(query_col, "seed").orderBy(
+    w_seed = Window.partitionBy("query_id", "seed").orderBy(
         F.asc("distance"), F.asc("chunk")
     )
     # the reference appends THEN checks the cap, breaking only the current
@@ -568,7 +550,7 @@ def graph_expand_chunks(
     expansions = (
         cand.withColumn("__rn", F.row_number().over(w_fill))
         .withColumn("__rn_seed", F.row_number().over(w_seed))
-        .join(F.broadcast(n_orig), query_col)
+        .join(F.broadcast(n_orig), "query_id")
         .where(
             (F.col("__rn") <= F.greatest(F.lit(total_cap) - F.col("n_orig"), F.lit(0)))
             | (F.col("__rn_seed") == 1)
@@ -578,16 +560,16 @@ def graph_expand_chunks(
     )
 
     originals = retrieved.select(
-        F.col(query_col),
-        F.col(chunk_col),
-        F.col(rank_col).cast("int").alias("rank"),
+        F.col("query_id"),
+        F.col("chunk_id"),
+        F.col("rank").cast("int").alias("rank"),
         F.lit(False).alias("is_expansion"),
         F.lit(None).cast("string").alias("seed_chunk"),
         F.lit(0).alias("distance"),
     )
     expanded = expansions.select(
-        F.col(query_col),
-        F.col("chunk").alias(chunk_col),
+        F.col("query_id"),
+        F.col("chunk").alias("chunk_id"),
         (F.col("n_orig") + F.col("__rn")).cast("int").alias("rank"),
         F.lit(True).alias("is_expansion"),
         F.col("seed").alias("seed_chunk"),

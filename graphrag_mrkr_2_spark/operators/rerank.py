@@ -58,19 +58,16 @@ Scorer = Callable[[pd.Series, pd.Series], pd.Series]
 def rerank_candidates(
     candidates: DataFrame,
     scorer: Scorer = lexical_overlap_scorer,
-    query_col: str = "query",
-    text_col: str = "content",
-    query_id_col: str = "query_id",
-    score_col: str = "hybrid_score",
     max_candidates: int = 100,
     blend_weight: float = 0.0,
 ) -> DataFrame:
-    """Rerank per-query candidates; returns the input columns plus
-    ``rerank_score``, ``combined_score`` and ``final_rank`` (1-based).
+    """Rerank per-query candidates (query_id, query, content, hybrid_score);
+    returns the input columns plus ``rerank_score``, ``combined_score`` and
+    ``final_rank`` (1-based).
 
-    Incoming order per query = ``score_col`` descending (the retriever's
+    Incoming order per query = ``hybrid_score`` descending (the retriever's
     hybrid order the reference receives its candidate list in), ties broken
-    by ``text_col`` for determinism where a Python list would carry arrival
+    by ``content`` for determinism where a Python list would carry arrival
     order.
     """
 
@@ -78,17 +75,17 @@ def rerank_candidates(
     def _score(q: pd.Series, t: pd.Series) -> pd.Series:
         return scorer(q, t)
 
-    w_in = Window.partitionBy(query_id_col).orderBy(
-        F.desc(score_col), F.asc(text_col)
+    w_in = Window.partitionBy("query_id").orderBy(
+        F.desc("hybrid_score"), F.asc("content")
     )
     pos = candidates.withColumn("__pos", F.row_number().over(w_in))
 
     head = pos.where(F.col("__pos") <= max_candidates).withColumn(
-        "rerank_score", _score(F.col(query_col), F.col(text_col))
+        "rerank_score", _score(F.col("query"), F.col("content"))
     )
     combined = (
         F.lit(float(blend_weight)) * F.col("rerank_score")
-        + F.lit(1.0 - float(blend_weight)) * F.col(score_col).cast("double")
+        + F.lit(1.0 - float(blend_weight)) * F.col("hybrid_score").cast("double")
         if blend_weight > 0.0
         else F.col("rerank_score")
     )
@@ -103,7 +100,7 @@ def rerank_candidates(
     )
     # head sorts by combined desc (stable: original position breaks ties);
     # tail follows in original order — the reference's to_rank + rest
-    w_out = Window.partitionBy(query_id_col).orderBy(
+    w_out = Window.partitionBy("query_id").orderBy(
         F.asc("__k1"), F.desc_nulls_last("combined_score"), F.asc("__pos")
     )
     return (

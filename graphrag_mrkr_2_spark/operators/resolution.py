@@ -123,13 +123,8 @@ def score_pairs(
     return scored.select(*out_cols)
 
 
-def tfidf_scores(
-    pairs: DataFrame,
-    entities: DataFrame,
-    id_col: str = "entity_id",
-    name_col: str = "name",
-) -> DataFrame:
-    """TF-IDF cosine over name tokens for candidate pairs — the north
+def tfidf_scores(pairs: DataFrame, entities: DataFrame) -> DataFrame:
+    """TF-IDF cosine over (entity_id, name) tokens for candidate pairs — the north
     star's "TF-IDF ... cosine scoring" leg, computed corpus-wide:
 
       tf(id, t)  = token count within the entity's name
@@ -143,17 +138,17 @@ def tfidf_scores(
     all-pairs. Everything JVM-side.
     """
     toks = entities.select(
-        F.col(id_col).alias("id"),
+        F.col("entity_id").alias("id"),
         F.explode(
             F.filter(
-                F.split(F.lower(F.trim(F.col(name_col))), r"[^a-z0-9]+"),
+                F.split(F.lower(F.trim(F.col("name"))), r"[^a-z0-9]+"),
                 lambda w: w != "",
             )
         ).alias("token"),
     )
     tf = toks.groupBy("id", "token").agg(F.count(F.lit(1)).alias("tf"))
     n_total = entities.select(
-        F.countDistinct(F.col(id_col)).alias("n_docs")
+        F.countDistinct(F.col("entity_id")).alias("n_docs")
     )
     df_t = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     weights = (

@@ -42,14 +42,9 @@ from pyspark.sql.window import Window
 DEFAULT_GAP_SECONDS = 6 * 3600
 
 
-def sessionize_events(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-) -> DataFrame:
-    """Batch sessionization: lag-gap flag → running session index → groupBy.
+def sessionize_events(events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS) -> DataFrame:
+    """Batch sessionization of (user_id, ts, value) events: lag-gap flag →
+    running session index → groupBy.
 
     The gap compares FULL-precision timestamps (timestamp_diff in exact
     integer microseconds; works on TIMESTAMP and TIMESTAMP_NTZ alike with no
@@ -57,12 +52,12 @@ def sessionize_events(
     would sessionize sub-second boundary straddlers differently from the
     streaming twin's (ts - last).total_seconds() and from a fractional-epoch
     oracle (ADVICE r2)."""
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    prev_ts = F.lag(ts_col).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts")
+    prev_ts = F.lag("ts").over(w)
     gap_us = int(gap_seconds * 1_000_000)
     new_session = F.when(
         prev_ts.isNull()
-        | (F.timestamp_diff("MICROSECOND", prev_ts, F.col(ts_col)) > gap_us),
+        | (F.timestamp_diff("MICROSECOND", prev_ts, F.col("ts")) > gap_us),
         F.lit(1),
     ).otherwise(F.lit(0))
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -70,12 +65,12 @@ def sessionize_events(
         "__sidx", F.sum("__new").over(w_run)
     )
     return (
-        with_idx.groupBy(F.col(user_col), F.col("__sidx"))
+        with_idx.groupBy("user_id", "__sidx")
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(value_col).alias("total_value"),
+            F.sum("value").alias("total_value"),
         )
         .drop("__sidx")
     )
@@ -104,14 +99,9 @@ _SESSION_STATE = StructType(
 )
 
 
-def sessionize_stream(
-    events: DataFrame,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming sessionization via applyInPandasWithState.
+def sessionize_stream(events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS) -> DataFrame:
+    """Streaming sessionization of (user_id, ts, value) events via
+    applyInPandasWithState.
 
     Emits a session row when a later event CLOSES it (gap exceeded), i.e.
     exactly the sessions the batch twin reports minus each user's final
@@ -125,7 +115,7 @@ def sessionize_stream(
         batches = [p for p in pdfs if len(p)]
         if not batches:
             return
-        rows = pd.concat(batches, ignore_index=True).sort_values(ts_col)
+        rows = pd.concat(batches, ignore_index=True).sort_values("ts")
         if state.exists:
             start, last, n, total = state.get
             start, last = pd.Timestamp(start), pd.Timestamp(last)
@@ -134,7 +124,7 @@ def sessionize_stream(
             n, total = 0, 0.0
 
         closed = []
-        for ts, val in zip(rows[ts_col], rows[value_col]):
+        for ts, val in zip(rows["ts"], rows["value"]):
             ts = pd.Timestamp(ts)
             if last is not None and (ts - last).total_seconds() > gap_seconds:
                 closed.append((user, start, last, n, total))
@@ -160,7 +150,7 @@ def sessionize_stream(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return events.groupBy(F.col(user_col)).applyInPandasWithState(
+    return events.groupBy("user_id").applyInPandasWithState(
         _update,
         outputStructType=_SESSION_OUT,
         stateStructType=_SESSION_STATE,

@@ -15,9 +15,8 @@ Reference semantics:
 Spark shape: a within-document self-join is shuffle-partitioned by
 document_id (docs are small → no skew blowup); the global entity variant is
 quadratic and therefore gated behind banded random-hyperplane LSH
-(dedup._multiband_hyperplane_buckets → dedup.band_pairs; a precomputed
-bucket column, e.g. from ann.hyperplane_buckets, can replace it) — at 10^12
-docs J1 stays per-doc (linear), J2 runs bucketed.
+(dedup._multiband_hyperplane_buckets → dedup.band_pairs) — at 10^12 docs J1
+stays per-doc (linear), J2 runs bucketed.
 """
 
 from __future__ import annotations
@@ -49,21 +48,19 @@ def chunk_similarity_edges(
     chunks: DataFrame,
     threshold: float = 0.7,
     max_connections: int = 5,
-    id_col: str = "chunk_id",
-    doc_col: str = "document_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """J1 — within-document SIMILAR_TO edges with per-source rank.
+    """J1 — within-document SIMILAR_TO edges with per-source rank, over
+    (document_id, chunk_id, embedding).
 
     Directed top-k per source first (rank semantics of graph_db.py:2056-2083),
     then undirected canonicalization (least/greatest) keeping the best
     (score, min rank) per pair — matching the MERGE-undirected persistence.
     """
     left = chunks.select(
-        F.col(doc_col).alias("doc"), F.col(id_col).alias("src"), F.col(vec_col).alias("v1")
+        F.col("document_id").alias("doc"), F.col("chunk_id").alias("src"), F.col("embedding").alias("v1")
     )
     right = chunks.select(
-        F.col(doc_col).alias("doc"), F.col(id_col).alias("dst"), F.col(vec_col).alias("v2")
+        F.col("document_id").alias("doc"), F.col("chunk_id").alias("dst"), F.col("embedding").alias("v2")
     )
     v1, v2 = _as_double(F.col("v1")), _as_double(F.col("v2"))
     pairs = (
@@ -105,9 +102,7 @@ def chunk_similarity_edges_grams(chunks: DataFrame, threshold: float = 0.7) -> D
     documents are tiny groups, and that per-group overhead dominated the
     stage 3:1 over the actual math (measured r8: 7.0 s -> 2.2 s at sf0.1,
     byte-identical output). Output contract identical to
-    chunk_similarity_edges with its default columns (``chunk_id``,
-    ``document_id``, ``embedding``) and ``max_connections=5`` (tests assert
-    it).
+    chunk_similarity_edges with ``max_connections=5`` (tests assert it).
     """
     import numpy as np
 
@@ -181,16 +176,10 @@ def chunk_similarity_edges_grams(chunks: DataFrame, threshold: float = 0.7) -> D
 def entity_similarity_edges(
     nodes: DataFrame,
     threshold: float = 0.7,
-    max_connections: int = 5,
-    id_col: str = "entity_id",
-    vec_col: str = "embedding",
-    bucket_col: str | None = None,
     method: str = "lsh",
-    bands: int = 12,
-    planes_per_band: int = 4,
-    seed: int = 7,
 ) -> DataFrame:
-    """J2 — entity SIMILAR_TO edges (global).
+    """J2 — entity SIMILAR_TO edges (global) over (entity_id, embedding),
+    each entity keeping its top 5.
 
     method="lsh" (DEFAULT — the scale path): candidates from banded
     random-hyperplane buckets (equi-join keyed by (band, bucket), AQE covers
@@ -200,24 +189,15 @@ def entity_similarity_edges(
     crossJoin is reachable only as the explicitly named method="exact"
     baseline (round-1's trap default, now inverted — same posture as
     dedup.embedding_near_dupes).
-
-    ``bucket_col``: a precomputed coarse bucket (e.g. ann.hyperplane_buckets)
-    restricts the join to that bucketing instead (overrides method).
     """
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")] + (
-        [F.col(bucket_col).alias("b")] if bucket_col else []
-    )
-    v = nodes.select(*cols)
-    a, b = v.alias("a"), v.alias("b")
-    lt = F.col("a.id") < F.col("b.id")
-    if bucket_col:
-        join = a.join(b, (F.col("a.b") == F.col("b.b")) & lt)
-    elif method == "exact":
-        join = a.crossJoin(b).where(lt)
+    v = nodes.select(F.col("entity_id").alias("id"), F.col("embedding").alias("v"))
+    if method == "exact":
+        a, b = v.alias("a"), v.alias("b")
+        join = a.crossJoin(b).where(F.col("a.id") < F.col("b.id"))
     elif method == "lsh":
-        bb = _multiband_hyperplane_buckets(
-            nodes, id_col, vec_col, bands, planes_per_band, seed
-        ).localCheckpoint(eager=True)  # read from both band-join sides (r8)
+        bb = _multiband_hyperplane_buckets(nodes, "entity_id", 12, 4).localCheckpoint(
+            eager=True
+        )  # read from both band-join sides (r8)
         join = (
             band_pairs(bb)
             .join(v.select(F.col("id").alias("id1"), F.col("v").alias("v1")), "id1")
@@ -246,7 +226,7 @@ def entity_similarity_edges(
     ).select("e.*")
     w = Window.partitionBy("src").orderBy(F.desc("similarity"), F.asc("dst"))
     ranked = pairs.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= max_connections
+        F.col("rank") <= 5
     )
     return (
         ranked.select(

@@ -126,7 +126,7 @@ def extract_mentions_default(query: str) -> list[str]:
     return uniq[:5]
 
 
-def prepare_node_embeddings(nodes: DataFrame, name_col: str = "name") -> DataFrame:
+def prepare_node_embeddings(nodes: DataFrame) -> DataFrame:
     """Embed the distinct node names ONCE for reuse across queries.
 
     The KG pipeline already carries T8 embeddings for nodes; when a caller
@@ -134,20 +134,14 @@ def prepare_node_embeddings(nodes: DataFrame, name_col: str = "name") -> DataFra
     ``StructuredQueryExecutor(node_embeddings=...)`` instead — this helper
     exists for callers holding only the raw node table. Returns
     ``(name, embedding)``."""
-    from pyspark.sql import functions as F
-
     from .similarity import with_embeddings
 
-    return with_embeddings(nodes.select(name_col).distinct(), text_col=name_col).select(
-        F.col(name_col).alias("name"), F.col("embedding")
-    )
+    return with_embeddings(nodes.select("name").distinct(), text_col="name")
 
 
 def link_entities_batch(
     mention_sets: dict,
     nodes: DataFrame | None = None,
-    name_col: str = "name",
-    threshold: float = 0.85,
     node_embeddings: DataFrame | None = None,
 ) -> dict:
     """Link ALL pending queries' mentions in ONE broadcast+window plan.
@@ -186,7 +180,7 @@ def link_entities_batch(
     if node_embeddings is None:
         if nodes is None:
             raise ValueError("link_entities_batch needs nodes or node_embeddings")
-        node_embeddings = prepare_node_embeddings(nodes, name_col)
+        node_embeddings = prepare_node_embeddings(nodes)
 
     spark = node_embeddings.sparkSession
     mrows = []
@@ -211,7 +205,7 @@ def link_entities_batch(
         node_embeddings.crossJoin(F.broadcast(m_df))
         .select("query_mention", "name", (dot / nnorm).alias("confidence"))
         .withColumn("__rn", F.row_number().over(w))
-        .where((F.col("__rn") == 1) & (F.col("confidence") >= threshold))
+        .where((F.col("__rn") == 1) & (F.col("confidence") >= 0.85))
         .collect()
     )
     best = {
@@ -225,25 +219,12 @@ def link_entities_batch(
     return out
 
 
-def link_entities(
-    mentions: list[str],
-    nodes: DataFrame | None = None,
-    name_col: str = "name",
-    threshold: float = 0.85,
-    node_embeddings: DataFrame | None = None,
-) -> list[dict]:
+def link_entities(mentions: list[str], nodes: DataFrame) -> list[dict]:
     """Best embedding match per mention at the reference's 0.85 threshold
-    (:304-346) — single-query wrapper over ``link_entities_batch``; pass
-    ``node_embeddings`` to skip re-embedding the node-name table."""
+    (:304-346) — single-query wrapper over ``link_entities_batch``."""
     if not mentions:
         return []
-    return link_entities_batch(
-        {0: mentions},
-        nodes,
-        name_col=name_col,
-        threshold=threshold,
-        node_embeddings=node_embeddings,
-    )[0]
+    return link_entities_batch({0: mentions}, nodes)[0]
 
 
 def _q(name: str) -> str:
@@ -316,15 +297,11 @@ class StructuredQueryExecutor:
 
     def __init__(
         self,
-        max_correction_attempts: int = 2,
-        entity_linking_threshold: float = 0.85,
         sql_generator: SqlGenerator = default_sql_generator,
         sql_corrector: SqlCorrector = default_sql_corrector,
         mention_extractor: Callable[[str], list[str]] = extract_mentions_default,
         node_embeddings: DataFrame | None = None,
     ) -> None:
-        self.max_correction_attempts = max_correction_attempts
-        self.entity_linking_threshold = entity_linking_threshold
         self.sql_generator = sql_generator
         self.sql_corrector = sql_corrector
         self.mention_extractor = mention_extractor
@@ -376,12 +353,7 @@ class StructuredQueryExecutor:
 
         nodes.createOrReplaceTempView("kg_nodes")
         edges.createOrReplaceTempView("kg_edges")
-        linked = link_entities_batch(
-            mention_sets,
-            nodes,
-            threshold=self.entity_linking_threshold,
-            node_embeddings=self.node_embeddings,
-        )
+        linked = link_entities_batch(mention_sets, nodes, node_embeddings=self.node_embeddings)
         results: list[dict] = []
         for i, pre in enumerate(prelim):
             if pre is not None:
@@ -399,7 +371,7 @@ class StructuredQueryExecutor:
 
         corrections = 0
         current = sql
-        for attempt in range(self.max_correction_attempts + 1):
+        for attempt in range(3):  # the first try and up to 2 corrections
             if not validate_readonly_sql(current):
                 return {
                     "success": False,
@@ -419,7 +391,7 @@ class StructuredQueryExecutor:
                     "corrections": corrections,
                 }
             except Exception as exc:  # noqa: BLE001 — reference catches all (:537)
-                if attempt >= self.max_correction_attempts:
+                if attempt >= 2:
                     return {
                         "success": False,
                         "error": str(exc),

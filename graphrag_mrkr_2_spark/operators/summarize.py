@@ -24,43 +24,41 @@ from pyspark.sql import functions as F
 SummarizerFn = Callable[[list[str]], list[str]]
 
 
-def deterministic_summarizer(texts: list[str], target_chars: int = 300) -> list[str]:
-    """Stand-in for the LLM: keep leading description lines up to the target
-    length (descriptions accumulate as sorted newline-joined sets, so a
+def deterministic_summarizer(texts: list[str]) -> list[str]:
+    """Stand-in for the LLM: keep leading description lines up to 300
+    characters (descriptions accumulate as sorted newline-joined sets, so a
     prefix is a deterministic, meaningful digest)."""
     out = []
     for t in texts:
-        if len(t) <= target_chars:
+        if len(t) <= 300:
             out.append(t)
             continue
         kept: list[str] = []
         used = 0
         for line in t.split("\n"):
-            if used + len(line) + 1 > target_chars and kept:
+            if used + len(line) + 1 > 300 and kept:
                 break
             kept.append(line)
             used += len(line) + 1
-        out.append("\n".join(kept)[:target_chars])
+        out.append("\n".join(kept)[:300])
     return out
 
 
-def should_summarize_col(desc_col, mentions_col, min_mentions: int = 3, min_length: int = 200):
-    """description_summarizer.py:347-373 (_should_summarize) as a predicate."""
+def should_summarize_col():
+    """description_summarizer.py:347-373 (_should_summarize) as a predicate
+    over ``description`` and ``mention_count``."""
+    desc = F.col("description")
     return (
-        desc_col.isNotNull()
-        & (F.length(F.trim(desc_col)) > 0)
-        & (mentions_col >= min_mentions)
-        & (F.length(desc_col) >= min_length)
+        desc.isNotNull()
+        & (F.length(F.trim(desc)) > 0)
+        & (F.col("mention_count") >= 3)
+        & (F.length(desc) >= 200)
     )
 
 
 def summarize_descriptions(
     nodes: DataFrame,
     summarizer: SummarizerFn = deterministic_summarizer,
-    desc_col: str = "description",
-    mentions_col: str = "mention_count",
-    min_mentions: int = 3,
-    min_length: int = 200,
 ) -> DataFrame:
     """Rewrite qualifying descriptions through the summarizer seam.
 
@@ -68,10 +66,7 @@ def summarize_descriptions(
     schema equals the input (description replaced in place), so this drops
     into the pipeline between build_nodes and persistence.
     """
-    gate = should_summarize_col(
-        F.col(desc_col), F.col(mentions_col), min_mentions, min_length
-    )
-    marked = nodes.withColumn("__summarize", gate)
+    marked = nodes.withColumn("__summarize", should_summarize_col())
 
     schema = nodes.schema
 
@@ -79,7 +74,8 @@ def summarize_descriptions(
         for pdf in batches:
             mask = pdf["__summarize"].fillna(False)
             if mask.any():
-                pdf.loc[mask, desc_col] = summarizer(pdf.loc[mask, desc_col].tolist())
+                pdf.loc[mask, "description"] = summarizer(
+                    pdf.loc[mask, "description"].tolist())
             yield pdf.drop(columns=["__summarize"])
 
     return marked.mapInPandas(_run, schema)

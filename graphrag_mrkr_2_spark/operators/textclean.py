@@ -43,14 +43,10 @@ def ascii_word_tokens(col):
     return F.filter(F.split(F.lower(col), r"[^a-z0-9]+"), lambda w: w != "")
 
 
-def redact_pii(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "clean_text",
-    with_counts: bool = True,
-) -> DataFrame:
-    """Replace PII spans with typed tokens; optionally add per-kind match
-    counts. Pure column expressions — codegen end to end.
+def redact_pii(df: DataFrame) -> DataFrame:
+    """Replace PII spans of ``text`` with typed tokens into ``clean_text``,
+    and add per-kind match counts ``n_<kind>``. Pure column expressions —
+    codegen end to end.
 
     Counts are computed INDEPENDENTLY per kind on the raw text (a span
     consumed by an earlier redaction can still be counted by a later kind,
@@ -58,25 +54,20 @@ def redact_pii(
     per-pattern detection rates for corpus triage, not a partition of the
     redacted spans. The redaction chain itself applies the patterns in
     PII_PATTERNS order, so every span is replaced exactly once."""
-    redacted = F.col(text_col)
+    redacted = F.col("text")
     out = df
-    if with_counts:
-        for kind, pattern, _ in PII_PATTERNS:
-            out = out.withColumn(
-                f"n_{kind}",
-                F.size(F.regexp_extract_all(F.col(text_col), F.lit(pattern), F.lit(0))),
-            )
+    for kind, pattern, _ in PII_PATTERNS:
+        out = out.withColumn(
+            f"n_{kind}",
+            F.size(F.regexp_extract_all(F.col("text"), F.lit(pattern), F.lit(0))),
+        )
     for _, pattern, token in PII_PATTERNS:
         redacted = F.regexp_replace(redacted, pattern, token)
-    return out.withColumn(out_col, redacted)
+    return out.withColumn("clean_text", redacted)
 
 
-def repetition_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Gopher-style repetition signals per document:
+def repetition_stats(df: DataFrame) -> DataFrame:
+    """Gopher-style repetition signals per (doc_id, text) document:
 
     - ``dup_line_frac``: fraction of non-blank lines that are duplicates of
       an earlier identical line (count-based, Rae et al. Table A1);
@@ -92,14 +83,14 @@ def repetition_stats(
     """
     lines = (
         df.select(
-            F.col(id_col), F.explode(F.split(F.col(text_col), "\n")).alias("line")
+            F.col("doc_id"), F.explode(F.split(F.col("text"), "\n")).alias("line")
         )
         .where(F.trim(F.col("line")) != "")
     )
     line_stats = (
-        lines.groupBy(id_col, "line")
+        lines.groupBy("doc_id", "line")
         .agg(F.count(F.lit(1)).alias("c"), F.length("line").alias("chars"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             (
                 (F.sum("c") - F.count(F.lit(1))) / F.sum("c")
@@ -112,13 +103,13 @@ def repetition_stats(
     )
 
     words = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            ascii_word_tokens(F.col(text_col))
+            ascii_word_tokens(F.col("text"))
         ).alias("word"),
     )
-    word_counts = words.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("c"))
-    word_stats = word_counts.groupBy(id_col).agg(
+    word_counts = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c"))
+    word_stats = word_counts.groupBy("doc_id").agg(
         (F.max("c") / F.sum("c")).alias("top_word_frac")
     )
 
@@ -127,12 +118,12 @@ def repetition_stats(
     # MATERIALIZED token array (materialized so the split isn't re-evaluated
     # per element inside the lambda)
     toks_df = df.select(
-        F.col(id_col),
-        ascii_word_tokens(F.col(text_col)).alias("__toks"),
+        F.col("doc_id"),
+        ascii_word_tokens(F.col("text")).alias("__toks"),
     )
     t = F.col("__toks")
     bigrams = toks_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
                 F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
@@ -140,17 +131,17 @@ def repetition_stats(
             )
         ).alias("bigram"),
     )
-    bigram_counts = bigrams.groupBy(id_col, "bigram").agg(F.count(F.lit(1)).alias("c"))
-    bigram_stats = bigram_counts.groupBy(id_col).agg(
+    bigram_counts = bigrams.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("c"))
+    bigram_stats = bigram_counts.groupBy("doc_id").agg(
         (F.max("c") / F.sum("c")).alias("top_bigram_frac")
     )
 
     return (
-        df.select(id_col)
+        df.select("doc_id")
         .distinct()
-        .join(line_stats, id_col, "left")
-        .join(word_stats, id_col, "left")
-        .join(bigram_stats, id_col, "left")
+        .join(line_stats, "doc_id", "left")
+        .join(word_stats, "doc_id", "left")
+        .join(bigram_stats, "doc_id", "left")
     )
 
 
@@ -158,11 +149,10 @@ def ngram_hashes(
     df: DataFrame,
     n: int,
     id_col: str = "doc_id",
-    text_col: str = "text",
     unique_id: bool = True,
 ) -> DataFrame:
-    """(id, gram_hash) for every word n-gram OCCURRENCE — xxhash64 over the
-    space-joined lowercase tokens.
+    """(id, gram_hash) for every word n-gram OCCURRENCE of ``text`` —
+    xxhash64 over the space-joined lowercase tokens.
 
     Built on the explode + window-lead shape of dedup.shingle_tokens
     (dedup.py:58-84) so every expression stays in whole-stage codegen —
@@ -185,7 +175,7 @@ def ngram_hashes(
 
     toks_df = df.select(
         F.col(id_col),
-        ascii_word_tokens(F.col(text_col)).alias("__toks"),
+        ascii_word_tokens(F.col("text")).alias("__toks"),
     )
     if unique_id:
         # repartition by id BEFORE the explode: the window's exchange then
@@ -225,17 +215,13 @@ def ngram_hashes(
     )
 
 
-def _ngram_hashes_interpreted(
-    df: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The pre-r4 higher-order-function gram builder, kept ONLY as the
-    equality oracle for ngram_hashes (tests) — do not use on scan paths."""
+def _ngram_hashes_interpreted(df: DataFrame, n: int) -> DataFrame:
+    """The pre-r4 higher-order-function gram builder over (doc_id, text),
+    kept ONLY as the equality oracle for ngram_hashes (tests) — do not use
+    on scan paths."""
     toks_df = df.select(
-        F.col(id_col),
-        ascii_word_tokens(F.col(text_col)).alias("__toks"),
+        F.col("doc_id"),
+        ascii_word_tokens(F.col("text")).alias("__toks"),
     )
     t = F.col("__toks")
     grams = F.transform(
@@ -244,21 +230,17 @@ def _ngram_hashes_interpreted(
             F.concat_ws(" ", F.array([F.element_at(t, i + j + 1) for j in range(n)]))
         ),
     )
-    return toks_df.select(F.col(id_col), F.explode(grams).alias("gram_hash"))
+    return toks_df.select(F.col("doc_id"), F.explode(grams).alias("gram_hash"))
 
 
 def contamination_overlap(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_id_col: str = "bench_id",
-    broadcast_bench: bool = True,
-    docs_unique_id: bool = True,
 ) -> DataFrame:
     """GPT-3-style decontamination: per (document, benchmark n-gram set)
-    overlap. Returns (doc_id, n_hits, n_grams, overlap_frac) for documents
+    overlap of (doc_id, text) documents against (bench_id, text) benchmark
+    rows. Returns (doc_id, n_hits, n_grams, overlap_frac) for documents
     sharing ≥1 distinct n-gram with ANY benchmark row.
 
     Plan: benchmark grams are hashed + distinct once (tiny → broadcast);
@@ -271,28 +253,21 @@ def contamination_overlap(
     "any benchmark row" invites duplicate ``bench_id`` values (one id per
     benchmark name, many rows), the side is small, and a duplicate-keyed
     window would silently corrupt the probe set (review r4 pass-3 #1).
-    Set ``docs_unique_id=False`` if the CORPUS side can carry duplicate
-    ids too (costs downstream re-exchanges).
+    The corpus side's doc_ids are unique, as everywhere in the repo.
     """
-    bench_grams = (
-        ngram_hashes(
-            benchmark, n, id_col=bench_id_col, text_col=text_col, unique_id=False
-        )
+    bench_grams = F.broadcast(
+        ngram_hashes(benchmark, n, id_col="bench_id", unique_id=False)
         .select("gram_hash")
         .distinct()
     )
-    if broadcast_bench:
-        bench_grams = F.broadcast(bench_grams)
-    doc_grams = ngram_hashes(
-        docs, n, id_col=id_col, text_col=text_col, unique_id=docs_unique_id
-    ).distinct()
-    totals = doc_grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
+    doc_grams = ngram_hashes(docs, n).distinct()
+    totals = doc_grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     hits = (
         doc_grams.join(bench_grams, "gram_hash")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
-        hits.join(totals, id_col)
+        hits.join(totals, "doc_id")
         .withColumn("overlap_frac", F.col("n_hits") / F.col("n_grams"))
     )

@@ -36,8 +36,8 @@ def _stopword_hits(text_col, words: list[str]):
     return F.size(F.regexp_extract_all(F.lower(text_col), F.lit(pattern), F.lit(0)))
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
-    """Language ID: CJK char-ratio branch ('zh' when >5% of chars are in the
+def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Language ID into ``lang_pred``: CJK char-ratio branch ('zh' when >5% of chars are in the
     unified-ideograph block), else argmax over stopword-profile hit counts.
 
     Ties or zero hits → 'und'. A language wins only when strictly greater
@@ -64,7 +64,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pre
             else pred.when(cond, F.lit(lang))
         )
     pred = pred.otherwise(F.lit("und"))
-    return df.withColumn(out_col, F.when(is_zh, F.lit("zh")).otherwise(pred))
+    return df.withColumn("lang_pred", F.when(is_zh, F.lit("zh")).otherwise(pred))
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -84,38 +84,26 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerprint") -> DataFrame:
-    """Document fingerprint: md5 over the whitespace-normalized, lowercased
+def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Document ``fingerprint``: md5 over the whitespace-normalized, lowercased
     text — the canonical-form hash used for near-exact dedup grouping."""
     normalized = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    return df.withColumn(out_col, F.md5(normalized))
+    return df.withColumn("fingerprint", F.md5(normalized))
 
 
-def corpus_language_histogram(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return (
-        with_lang_id(df, text_col)
-        .groupBy("lang_pred")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def corpus_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str | None = "lang",
-) -> DataFrame:
-    """Corpus-level reporting a curation run ends with: per group (language
-    by default) document count, token totals, and EXACT length percentiles
+def corpus_stats(docs: DataFrame) -> DataFrame:
+    """Corpus-level reporting a curation run ends with: per ``lang`` (as
+    ``grp``) document count, token totals, and EXACT length percentiles
     (p50/p95/p99 via Spark's exact ``percentile`` — at reporting
     cardinality the exact sort-based aggregate is affordable and lets an
     external SQL engine reproduce the numbers bit-for-bit; swap to
     approx_percentile when groups reach billions)."""
     from .textclean import ascii_word_tokens
 
-    toks = F.size(ascii_word_tokens(F.col(text_col)))
+    toks = F.size(ascii_word_tokens(F.col("text")))
     base = docs.select(
-        (F.col(group_col) if group_col else F.lit("all")).alias("grp"),
-        F.length(text_col).cast("double").alias("n_chars"),
+        F.col("lang").alias("grp"),
+        F.length("text").cast("double").alias("n_chars"),
         toks.cast("long").alias("n_tokens"),
     )
     return base.groupBy("grp").agg(

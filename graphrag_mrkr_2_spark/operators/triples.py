@@ -139,7 +139,6 @@ def extract_mentions(
     chunks: DataFrame,
     llm: Callable[[str, str, int], str] = mock_llm_response,
     max_gleanings: int = 1,
-    content_col: str = "content",
 ) -> DataFrame:
     """S4+S5: run the gleaning extraction per chunk, emit mention rows.
 
@@ -150,12 +149,12 @@ def extract_mentions(
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = mention_frame(
-                zip(pdf["chunk_id"], pdf["document_id"], pdf[content_col]), llm, max_gleanings
+                zip(pdf["chunk_id"], pdf["document_id"], pdf["content"]), llm, max_gleanings
             )
             if len(out):
                 yield out
 
-    return chunks.select("chunk_id", "document_id", content_col).mapInPandas(
+    return chunks.select("chunk_id", "document_id", "content").mapInPandas(
         _extract, MENTION_SCHEMA
     )
 

@@ -69,14 +69,11 @@ def normalize_url(col: Column) -> Column:
     return out
 
 
-def url_domain(col: Column, strip_www: bool = True) -> Column:
-    """Host part of the URL (lowercased), optionally minus a leading www. —
-    the cheap approximation kept for callers that explicitly want hosts;
-    the default per-domain grouping key is :func:`registered_domain`."""
-    host = F.lower(F.regexp_extract(col, _HOST, 1))
-    if strip_www:
-        host = F.regexp_replace(host, r"^www\.", "")
-    return host
+def url_domain(col: Column) -> Column:
+    """Host part of the URL (lowercased) minus a leading www. — the cheap
+    approximation kept for callers that explicitly want hosts; the
+    per-domain grouping key is :func:`registered_domain`."""
+    return F.regexp_replace(F.lower(F.regexp_extract(col, _HOST, 1)), r"^www\.", "")
 
 
 def registered_domain(col: Column) -> Column:
@@ -93,12 +90,11 @@ def registered_domain(col: Column) -> Column:
     return registered_domain_expr(F.lower(F.regexp_extract(col, _HOST, 1)))
 
 
-def with_normalized_urls(
-    df: DataFrame, url_col: str = "url", out_col: str = "norm_url", psl: bool = True
-) -> DataFrame:
-    dom = registered_domain(F.col(out_col)) if psl else url_domain(F.col(out_col))
-    return df.withColumn(out_col, normalize_url(F.col(url_col))).withColumn(
-        "domain", dom
+def with_normalized_urls(df: DataFrame) -> DataFrame:
+    """Adds ``norm_url`` (:func:`normalize_url` of ``url``) and its
+    :func:`registered_domain` as ``domain``."""
+    return df.withColumn("norm_url", normalize_url(F.col("url"))).withColumn(
+        "domain", registered_domain(F.col("norm_url"))
     )
 
 
@@ -117,17 +113,16 @@ def dedup_normalized_urls(df: DataFrame) -> DataFrame:
 def cap_per_domain(
     df: DataFrame,
     max_per_domain: int,
-    domain_col: str = "domain",
     order_col: str = "url",
 ) -> DataFrame:
-    """Keep at most N rows per domain, deterministically (md5-order over
+    """Keep at most N rows per ``domain``, deterministically (md5-order over
     ``order_col`` — reproducible at any cluster size, no RNG).
 
     One window per domain partition — the head-domain key is exactly the hot
     key, but row_number's per-partition state is O(1) and AQE splits skewed
     shuffle partitions; this never buffers a domain's rows.
     """
-    w = Window.partitionBy(domain_col).orderBy(
+    w = Window.partitionBy("domain").orderBy(
         F.md5(F.col(order_col).cast("string")), F.col(order_col)
     )
     return (
@@ -141,13 +136,10 @@ def evaluate_robots(
     urls: DataFrame,
     robots: DataFrame,
     user_agent: str = "graphrag-mrkr-2-spark",
-    url_col: str = "url",
-    domain_col: str = "domain",
-    robots_col: str = "robots_txt",
 ) -> DataFrame:
-    """RFC 9309 robots evaluation at corpus scale (r7): join each URL to
-    its domain's robots.txt and add ``robots_allowed`` (plus the
-    extracted ``path``). 100-TB shape: the join is a plain equi-join on
+    """RFC 9309 robots evaluation at corpus scale (r7): join each ``url``
+    to its domain's robots.txt (``robots`` rows of domain, robots_txt) and
+    add ``robots_allowed`` (plus the extracted ``path``). 100-TB shape: the join is a plain equi-join on
     the domain key (robots corpora are tiny next to URL corpora — AQE
     broadcasts them when they fit); evaluation is one Arrow pass with a
     per-batch parse cache, so each distinct robots.txt is parsed once
@@ -161,13 +153,13 @@ def evaluate_robots(
 
     import pandas as pd
 
-    with_domain = urls.withColumn("__dom", url_domain(F.col(url_col)))
+    with_domain = urls.withColumn("__dom", url_domain(F.col("url")))
     # the robots side carries bare hosts; normalize them the same way
     # url_domain normalizes URL hosts (lowercase, no leading www.)
-    robots_key = F.regexp_replace(F.lower(F.col(domain_col)), r"^www\.", "")
+    robots_key = F.regexp_replace(F.lower(F.col("domain")), r"^www\.", "")
     joined = with_domain.join(
         robots.select(robots_key.alias("__dom"),
-                      F.col(robots_col).alias("__robots")),
+                      F.col("robots_txt").alias("__robots")),
         "__dom",
         "left",
     )
@@ -203,7 +195,7 @@ def evaluate_robots(
         for pdf in batches:
             allowed = []
             paths = []
-            for url, txt in zip(pdf[url_col], pdf["__robots"]):
+            for url, txt in zip(pdf["url"], pdf["__robots"]):
                 path = _url_path(str(url or ""))
                 paths.append(path)
                 if txt is None or not isinstance(txt, str):
@@ -237,14 +229,10 @@ def evaluate_robots(
     return joined.mapInPandas(_eval, schema).drop("__dom")
 
 
-def expand_discovery_payloads(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "url",
-) -> DataFrame:
-    """Explode crawled discovery documents — sitemaps (urlset/
+def expand_discovery_payloads(df: DataFrame) -> DataFrame:
+    """Explode crawled discovery (url, payload) documents — sitemaps (urlset/
     sitemapindex/text/gzip) and RSS/Atom feeds — into one row per
-    discovered URL (r7): columns (id, doc_kind, entry_index, loc, title,
+    discovered URL (r7): columns (id = url, doc_kind, entry_index, loc, title,
     lastmod). Per-payload quarantine: a malformed document contributes
     zero rows instead of failing the task. 100-TB shape: one Arrow pass,
     no shuffle; the output unions into the URL-curation chain
@@ -261,7 +249,7 @@ def expand_discovery_payloads(
 
         for pdf in batches:
             rows: list[dict] = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for rid, payload in zip(pdf["url"], pdf["payload"]):
                 data = bytes(payload) if payload is not None else b""
                 # ADVICE r7: un-gzip ONCE up front (bounded_gunzip — the
                 # same 50 MB streaming-capped member handling parse_sitemap
@@ -296,7 +284,7 @@ def expand_discovery_payloads(
                 rows, columns=["id", "doc_kind", "entry_index", "loc",
                                "title", "lastmod"])
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
+    return df.select("url", "payload").mapInPandas(
         _expand,
         "id string, doc_kind string, entry_index int, loc string, "
         "title string, lastmod string",

@@ -70,17 +70,15 @@ def _conform(df: DataFrame) -> DataFrame:
     return out.select(*cols.keys())
 
 
-def read_jsonl_pages(
-    spark: SparkSession, path: str, quarantine_col: str = "_corrupt_record"
-) -> DataFrame:
+def read_jsonl_pages(spark: SparkSession, path: str) -> DataFrame:
     """JSONL → pages. PERMISSIVE mode keeps malformed lines in a quarantine
     column instead of failing the 100 TB job on one bad row; callers can
     split them off with ``where(col('_corrupt_record').isNotNull())``."""
     schema = StructType(
-        [*PAGES_SCHEMA.fields, StructField(quarantine_col, StringType(), True)]
+        [*PAGES_SCHEMA.fields, StructField("_corrupt_record", StringType(), True)]
     )
     raw = spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
-    return _conform(raw.where(F.col(quarantine_col).isNull())).where(
+    return _conform(raw.where(F.col("_corrupt_record").isNull())).where(
         F.col("url").isNotNull()
     )
 
@@ -310,10 +308,14 @@ def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
     return files.mapInPandas(_parse, PAGES_SCHEMA).where(F.col("url") != "")
 
 
+# Largest file the binaryFile loaders read; larger ones are skipped.
+MAX_FILE_BYTES = 256 * 1024 * 1024
+
+
 def read_binary_documents(
     spark: SparkSession,
     path: str,
-    max_bytes: int = 256 * 1024 * 1024,
+    max_bytes: int = MAX_FILE_BYTES,
     keep_binary: bool = False,
 ) -> DataFrame:
     """PDF/DOCX/XLSX/PPTX files → pages(url, warc_ts, html, text, lang).
@@ -376,9 +378,6 @@ def read_image_documents(
     path: str,
     ocr=None,
     enable_ocr: bool = True,
-    strict: bool = False,
-    default_language: str = "eng",
-    max_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Standalone image files → pages(url, warc_ts, html, text, lang) via
     intelligent OCR — the reference ImageLoader as a distributed source
@@ -396,7 +395,7 @@ def read_image_documents(
     files = (
         spark.read.format("binaryFile")
         .load(path)
-        .where(F.col("length") <= max_bytes)
+        .where(F.col("length") <= MAX_FILE_BYTES)
         .select(
             F.col("path").alias("media_id"),
             F.col("modificationTime").cast("string").alias("warc_ts"),
@@ -407,8 +406,6 @@ def read_image_documents(
         files,
         ocr=ocr,
         enable_ocr=enable_ocr,
-        strict=strict,
-        default_language=default_language,
         passthrough_cols=["warc_ts"],  # rides the UDF — no join, no shuffle
     )
     # no-text → None contract: images without extractable text yield no page

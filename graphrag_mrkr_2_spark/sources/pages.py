@@ -169,7 +169,7 @@ def make_page(i: int, seed: int = 42) -> dict:
 _ADVERSARIAL_VARIANTS = 8
 
 
-def make_adversarial_page(i: int, seed: int = 42, big_page_chars: int = 200_000) -> dict:
+def make_adversarial_page(i: int, big_page_chars: int = 200_000) -> dict:
     """Hostile-input page generator (VERDICT r3 'Next round' #8): the checked-
     in fixture source for the adversarial parity gate. Variant ``i % 8``:
 
@@ -192,7 +192,7 @@ def make_adversarial_page(i: int, seed: int = 42, big_page_chars: int = 200_000)
     keeping the byte-identical-per-url invariant.
     """
     nvocab = len(ENTITY_VOCAB)
-    base = _hint(seed, i, "aent", nvocab)
+    base = _hint(42, i, "aent", nvocab)
     mentions = [(base + 5 * j) % nvocab for j in range(4)]
     mentions = list(dict.fromkeys(mentions))
     names = [ENTITY_VOCAB[v][0] for v in mentions]
@@ -258,18 +258,12 @@ def make_adversarial_page(i: int, seed: int = 42, big_page_chars: int = 200_000)
     }
 
 
-def generate_adversarial_pages(
-    spark: SparkSession,
-    n: int,
-    seed: int = 42,
-    big_page_chars: int = 200_000,
-    partitions: int | None = None,
-) -> DataFrame:
-    partitions = partitions or max(1, min(16, n // 8 or 1))
+def generate_adversarial_pages(spark: SparkSession, n: int) -> DataFrame:
+    partitions = max(1, min(16, n // 8 or 1))
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = [make_adversarial_page(int(i), seed, big_page_chars) for i in pdf["id"]]
+            rows = [make_adversarial_page(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(rows, columns=[f.name for f in PAGES_SCHEMA.fields])
 
     return spark.range(0, n, numPartitions=partitions).mapInPandas(_gen, PAGES_SCHEMA)

@@ -19,20 +19,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import DEFAULT_CONFIG
 from ..sources.pages import PAGES_SCHEMA
 
 
-def stream_pages(spark: SparkSession, pages_dir: str, max_files_per_trigger: int = 4) -> DataFrame:
-    """File-source stream over an append-only pages parquet directory."""
+def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
+    """File-source stream over an append-only pages parquet directory, at
+    most 4 files per trigger."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 4)
         .parquet(pages_dir)
     )
 
 
-def streaming_mentions(pages_stream: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+def streaming_mentions(pages_stream: DataFrame) -> DataFrame:
     """chunk → filter → extract on a streaming DataFrame — the same fused
     mapInPandas stage as batch (stateless per-row transforms stream without
     watermarks; one Arrow crossing per page). It returns UNIFIED_SCHEMA
@@ -40,6 +41,7 @@ def streaming_mentions(pages_stream: DataFrame, cfg: PipelineConfig = DEFAULT_CO
     ``canonicalize`` skips because it selects rows by ``kind``."""
     from ..operators.triples import extract_mentions_fused
 
+    cfg = DEFAULT_CONFIG
     return extract_mentions_fused(
         pages_stream,
         strategy="html_heading",
@@ -54,7 +56,6 @@ def start_kg_stream(
     pages_dir: str,
     catalog_root: str,
     checkpoint_dir: str,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
 ):
     """Continuous KG construction: each micro-batch canonicalizes its own
     mentions and appends its per-document ``entities_doc``/``rels_doc`` to
@@ -64,7 +65,7 @@ def start_kg_stream(
     from ..operators.triples import canonicalize
     from ..sources.catalog import SnapshotCatalog
 
-    mentions = streaming_mentions(stream_pages(spark, pages_dir), cfg)
+    mentions = streaming_mentions(stream_pages(spark, pages_dir))
     cat = SnapshotCatalog(spark, catalog_root)
 
     def _process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -72,8 +73,8 @@ def start_kg_stream(
             return
         tables = canonicalize(
             batch_df,
-            importance_threshold=cfg.extraction.importance_score_threshold,
-            strength_threshold=cfg.extraction.strength_threshold,
+            importance_threshold=DEFAULT_CONFIG.extraction.importance_score_threshold,
+            strength_threshold=DEFAULT_CONFIG.extraction.strength_threshold,
         )
         for name, df in zip(("entities_doc", "rels_doc"), tables):
             cat.write(
@@ -126,16 +127,14 @@ def compact_stream_batches(spark: SparkSession, catalog_root: str) -> dict[str, 
 def windowed_event_counts(
     events: DataFrame,
     window_duration: str = "1 minute",
-    watermark: str = "2 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
 ) -> DataFrame:
-    """Late-data-tolerant tumbling-window rollup (works on batch DFs too —
+    """Late-data-tolerant tumbling-window rollup of (ts, event_type, value)
+    events, with a 2-minute watermark on streams (works on batch DFs too —
     Spark evaluates window()/watermark identically, which is how the tests
     pin semantics without a live stream)."""
-    df = events.withWatermark(ts_col, watermark) if events.isStreaming else events
+    df = events.withWatermark("ts", "2 minutes") if events.isStreaming else events
     return (
-        df.groupBy(F.window(F.col(ts_col), window_duration).alias("w"), F.col(key_col))
+        df.groupBy(F.window(F.col("ts"), window_duration).alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("total_value"),
@@ -143,7 +142,7 @@ def windowed_event_counts(
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
-            key_col,
+            "event_type",
             "n_events",
             "total_value",
         )

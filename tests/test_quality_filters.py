@@ -90,11 +90,38 @@ def test_filter_and_quality_strip_like_their_twins(spark):
     for i, s in enumerate(PADDED):
         ok, reason = should_embed_chunk(s)
         assert reasons[i] == (None if ok else reason), f"sample {i}"
-    # the quality score also counts unstripped whitespace, where Java's \s
-    # is ASCII: compare the samples padded with ASCII whitespace only
     scores = {r["i"]: r["quality_score"] for r in with_quality_score(df).collect()}
     assert scores[1] == 0.0
-    for i, s in enumerate(PADDED[:5]):
+    for i, s in enumerate(PADDED):
+        expected = analyze_text_quality(s)["quality_score"]
+        assert scores[i] == pytest.approx(expected, abs=1e-9), f"sample {i}"
+
+
+# words joined by whitespace that Java's plain \s (and RE2's) does not know
+SEPARATORS = ("\u00a0", "\u3000", "\x0b", " \u00a0 ")
+JOINED = (
+    [sep.join(f"word{i}" for i in range(12)) + sep + "end of the line" for sep in SEPARATORS]
+    + [sep.join(["repeat"] * 30) for sep in SEPARATORS]
+    + ["alpha\u00a0beta gamma\u3000delta\nepsilon\x0bzeta eta theta iota kappa lambda"]
+)
+
+
+@pytest.mark.spark
+def test_filter_and_quality_split_like_their_twins(spark):
+    """with_content_filter splits words and counts spaces, and
+    with_quality_score counts spaces and splits each line, by str.isspace(),
+    as should_embed_chunk and analyze_text_quality do."""
+    from graphrag_mrkr_2_spark.operators.extract import (
+        with_content_filter,
+        with_quality_score,
+    )
+
+    df = spark.createDataFrame(list(enumerate(JOINED)), ["i", "content"])
+    reasons = {r["i"]: r["filter_reason"] for r in with_content_filter(df).collect()}
+    scores = {r["i"]: r["quality_score"] for r in with_quality_score(df).collect()}
+    for i, s in enumerate(JOINED):
+        ok, reason = should_embed_chunk(s)
+        assert reasons[i] == (None if ok else reason), f"sample {i}"
         expected = analyze_text_quality(s)["quality_score"]
         assert scores[i] == pytest.approx(expected, abs=1e-9), f"sample {i}"
 
