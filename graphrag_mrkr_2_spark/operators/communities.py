@@ -44,6 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import pin
 from . import graphalgo
 from .dedup import sorted_runs
 
@@ -150,10 +151,9 @@ def detect_communities(edges: DataFrame, max_component_size: int = 500_000) -> D
     # so the input lineage runs once instead of once per consumer; the
     # Observation counts it in the same pass
     obs = Observation()
-    e = (
+    e = pin(
         edges.select("src", "dst", "weight")
         .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     n_edges = obs.get["n"]
     # a limit of 0 disables the driver path, as local_threshold=0 does CC's

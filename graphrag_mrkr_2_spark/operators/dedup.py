@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 # ---------------------------------------------------------------------------
 # shingling (shared by jaccard + minhash)
 # ---------------------------------------------------------------------------
@@ -408,7 +410,7 @@ def minhash_lsh_pairs(
     # runtime-reused — the window + k-fold re-hash above it executed twice
     # (r8 plan audit; 2.4-2.7 s -> 1.9 s at sf0.1 with the checkpoint).
     # The checkpointed rows are tiny: (doc, k longs).
-    sigs = minhash_signatures(df).localCheckpoint(eager=True)
+    sigs = pin(minhash_signatures(df))
 
     candidates = band_pairs(_minhash_buckets(sigs, "doc", 16, 4)).select(
         F.col("id1").alias("doc1"), F.col("id2").alias("doc2")
@@ -420,7 +422,7 @@ def minhash_lsh_pairs(
     # jaccard pass re-shingles O(candidates) docs, not the whole corpus.
     # Candidates feed two consumers (the id set and the pair join) —
     # materialize once or the banding path runs twice.
-    candidates = candidates.localCheckpoint(eager=True)
+    candidates = pin(candidates)
     cand_ids = (
         candidates.select(F.col("doc1").alias("doc_id"))
         .unionByName(candidates.select(F.col("doc2").alias("doc_id")))
@@ -513,7 +515,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     # materialize the fingerprints once (r8): the band self-join references
     # this subtree from both sides, so without the checkpoint the per-doc
     # fingerprint UDF ran twice per call. Rows are (doc, one long).
-    fp = simhash_fingerprints(df).localCheckpoint(eager=True)
+    fp = pin(simhash_fingerprints(df))
     nbands = max_hamming + 1
     assert 1 <= nbands <= 64, "max_hamming must be in [0, 63]"
     base, rem = divmod(64, nbands)
@@ -641,7 +643,7 @@ def embedding_near_dupes(
     elif method == "lsh":
         # checkpoint: the banded self-join reads this from both sides —
         # without it the hyperplane-projection UDF ran twice per call (r8)
-        bb = _multiband_hyperplane_buckets(df, "vec_id", 12, 6).localCheckpoint(eager=True)
+        bb = pin(_multiband_hyperplane_buckets(df, "vec_id", 12, 6))
         pairs = (
             band_pairs(bb)
             .join(v.select(F.col("id").alias("id1"), F.col("vec").alias("v1")), "id1")

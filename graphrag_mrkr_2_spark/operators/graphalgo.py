@@ -14,9 +14,10 @@ Beyond", SoCC'14) as a DataFrame loop:
 Each round is two hash aggregations + a join; converges in O(log n) rounds
 even on path graphs. Works on any orderable id type (we use the node id
 strings directly — no global re-indexing shuffle needed). Every round's
-edge list is localCheckpoint()-ed to truncate lineage (the convergence
-check is an action, so an unpinned loop would recompute the whole upstream
-plan each round).
+edge list is pinned with ``session.pin`` to truncate lineage (the
+convergence check is an action, so an unpinned loop would recompute the
+whole upstream plan each round); ``pin``'s docstring says when a pin
+survives a lost executor.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..session import pin
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -188,8 +191,7 @@ def label_propagation(
     is bounded by its distinct neighbor-label count after the partial agg.
     Synchronous updates with min-label tie-break are deterministic; the loop
     runs at most 10 rounds and stops early when no label changes (checked
-    via count, an action, so each round is localCheckpoint-ed to truncate
-    lineage).
+    via count, an action, so each round is pinned to truncate lineage).
 
     Synchronous LPA famously oscillates on automorphic structures (two
     symmetric nodes swap labels forever — GraphX/GraphFrames LPA document
@@ -207,19 +209,17 @@ def label_propagation(
         F.struct(F.col("u").alias("u"), F.col("v").alias("v"), F.col("w").alias("w")),
         F.struct(F.col("v").alias("u"), F.col("u").alias("v"), F.col("w").alias("w")),
     )
-    sym = (
+    sym = pin(
         e.select(F.explode(both).alias("x"))
         .select("x.u", "x.v", "x.w")
         .where(F.col("u") != F.col("v"))
         .groupBy("u", "v")
         .agg(F.max("w").alias("w"))
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = pin(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
 
     from pyspark.sql.window import Window
@@ -231,11 +231,10 @@ def label_propagation(
         ).select("u", "label", "w")
         scores = msgs.groupBy("u", "label").agg(F.sum("w").alias("score"))
         w_top = Window.partitionBy("u").orderBy(F.desc("score"), F.asc("label"))
-        new_labels = (
+        new_labels = pin(
             scores.withColumn("rn", F.row_number().over(w_top))
             .where(F.col("rn") == 1)
             .select(F.col("u").alias("node"), "label")
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.join(
@@ -250,12 +249,11 @@ def label_propagation(
         cs = _checksum(new_labels, "node", "label")
         if len(history) >= 2 and cs == history[-2]:
             # period-2 oscillation: per-node min of the two swapping states
-            labels = (
+            labels = pin(
                 new_labels.join(
                     labels.select("node", F.col("label").alias("old")), "node"
                 )
                 .select("node", F.least("label", "old").alias("label"))
-                .localCheckpoint(eager=True)
             )
             break
         history.append(cs)
@@ -286,11 +284,10 @@ def connected_components(
     At 10^12-document scale the global match graph far exceeds any sane
     threshold, so the large-star/small-star path is the one that runs.
 
-    The distributed loop runs at most 20 rounds, and every round
-    materializes via localCheckpoint: the loop's
-    convergence check is an action, so without truncation each round
-    would recompute the whole upstream lineage (and the plan would double
-    per round).
+    The distributed loop runs at most 20 rounds, and every round is
+    pinned: the loop's convergence check is an action, so without
+    truncation each round would recompute the whole upstream lineage (and
+    the plan would double per round).
     """
     raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     if local_threshold > 0:
@@ -305,16 +302,16 @@ def connected_components(
         # CollectLimit's scale-up rounds cost more scheduling latency than
         # the count they avoid.)
         obs = Observation()
-        raw_ckpt = raw.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+        raw_ckpt = pin(raw.observe(obs, F.count(F.lit(1)).alias("n")))
         if obs.get["n"] <= local_threshold:
             return _local_components_rows(raw_ckpt.collect(), edges.sparkSession)
-        e = _symmetric(raw_ckpt).localCheckpoint(eager=True)
+        e = pin(_symmetric(raw_ckpt))
     else:
-        e = _symmetric(raw).localCheckpoint(eager=True)
+        e = pin(_symmetric(raw))
     prev = None
     for _ in range(20):
         e = _large_star(e)
-        e = _small_star(e).localCheckpoint(eager=True)
+        e = pin(_small_star(e))
         cur = _checksum(e, "u", "v")
         if prev == cur:
             break

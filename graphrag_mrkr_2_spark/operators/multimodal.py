@@ -45,8 +45,6 @@ Design notes for 100 TB of media:
 - payloads stay in ``binary`` columns; all row-multiplying work happens in
   ``mapInPandas`` so a partition streams through Arrow batches without
   materializing the whole partition;
-- ``media_repartition`` salts by content hash so giant files from one crawl
-  host don't pin a partition;
 - metadata (codec, dims, duration) travels as a typed struct, filterable
   JVM-side without touching bytes (column pruning keeps scans cheap — a
   metadata-only query never reads the payload pages in parquet).
@@ -93,11 +91,6 @@ MEDIA_SCHEMA = StructType(
         ),
     ]
 )
-
-
-def media_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Spread payloads by content hash (head-host skew protection)."""
-    return df.repartition(num_partitions, F.xxhash64(F.col("payload")))
 
 
 def _row_table(df: DataFrame, key_col: str, value_col: str,
@@ -1143,8 +1136,6 @@ def probe_media(payload: bytes) -> dict:
 
                 w, h = webp_dimensions(payload)
             else:  # tiff — walk the first IFD for tags 256/257
-                from graphrag_mrkr_2_spark.functions.tiffcodec import decode_tiff  # noqa: F401
-
                 e = "<" if payload[:2] == b"II" else ">"
                 (ifd,) = _struct.unpack(e + "I", payload[4:8])
                 (n,) = _struct.unpack(e + "H", payload[ifd : ifd + 2])
@@ -1318,9 +1309,8 @@ def extract_image_text(
       ``error`` says why) so mixed corpora keep flowing.
 
     100-TB shape: one mapInPandas pass, payloads streamed per Arrow batch,
-    never collected; pair with ``media_repartition`` upstream for size
-    skew.  The pure-NumPy pixel analysis is the same cost class as the
-    image codecs — inject a native engine through this seam for
+    never collected. The pure-NumPy pixel analysis is the same cost class
+    as the image codecs — inject a native engine through this seam for
     production-scale OCR.
     """
     from graphrag_mrkr_2_spark.functions.ocr import process_standalone_image

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from ..session import pin
+
 # ---------------------------------------------------------------------------
 # Q2: BM25
 # ---------------------------------------------------------------------------
@@ -220,7 +222,7 @@ def find_scored_paths(
 
     spark = edges.sparkSession
     seeds = spark.createDataFrame([(s,) for s in seed_ids], "last string")
-    frontier = (
+    frontier = pin(
         seeds.join(
             nodes.select(
                 F.col("entity_id").alias("last"),
@@ -229,7 +231,6 @@ def find_scored_paths(
             "last",
         )
         .select(F.array("last").alias("path"), "last", F.lit(0).alias("hop"), "score")
-        .localCheckpoint(eager=True)
     )
 
     result = frontier
@@ -253,11 +254,10 @@ def find_scored_paths(
             ).alias("score"),
         )
         w_global = Window.orderBy(F.desc("score"), F.asc(F.to_json(F.struct("path"))))
-        pruned = (
+        pruned = pin(
             expanded.withColumn("rn", F.row_number().over(w_global))
             .where(F.col("rn") <= beam_size)
             .drop("rn")
-            .localCheckpoint(eager=True)
         )
         # reference order (:4950-4956): frontier becomes the pruned set FIRST,
         # then the empty check breaks — so a dead-end hop leaves an empty

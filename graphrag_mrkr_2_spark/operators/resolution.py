@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
 from .ann import _as_double, _dot, _norm
 from .dedup import _minhash_buckets, band_pairs, char_ngram_tokens
 from .graphalgo import connected_components
@@ -59,7 +60,11 @@ def candidate_pairs(
     assert num_hashes % bands == 0
     r = num_hashes // bands
     toks = char_ngram_tokens(entities, id_col, name_col, n)
-    sigs = (
+    # materialize once (r8): the band self-join below references this
+    # subtree from BOTH sides and only the bottom exchange is runtime-
+    # reused — without the checkpoint the gram explode + k-min agg ran
+    # twice (same finding as minhash_lsh_pairs). Rows are (id, k longs).
+    sigs = pin(
         toks.groupBy("id")
         .agg(
             *[
@@ -71,11 +76,6 @@ def candidate_pairs(
             "id",
             F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("signature"),
         )
-        # materialize once (r8): the band self-join below references this
-        # subtree from BOTH sides and only the bottom exchange is runtime-
-        # reused — without the checkpoint the gram explode + k-min agg ran
-        # twice (same finding as minhash_lsh_pairs). Rows are (id, k longs).
-        .localCheckpoint(eager=True)
     )
     return band_pairs(_minhash_buckets(sigs, "id", bands, r))
 
@@ -215,7 +215,7 @@ def entity_mapping(
         # scoring-side joins re-read the one-job pipelined plan at sf0.1;
         # the signature subtree, the expensive half, is already
         # checkpointed inside candidate_pairs.)
-        cands = cands.localCheckpoint(eager=True)
+        cands = pin(cands)
     scored = score_pairs(cands, entities, n=n, vec_col=vec_col)
     gate = F.col("jaccard") >= threshold
     if vec_col and cosine_threshold is not None:

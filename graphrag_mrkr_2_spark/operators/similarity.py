@@ -28,6 +28,7 @@ from pyspark.sql.types import ArrayType, FloatType
 from pyspark.sql.window import Window
 
 from ..functions.embeddings import DEFAULT_DIM, pseudo_embed_many
+from ..session import pin
 from .ann import _as_double, _dot, _norm
 from .dedup import _multiband_hyperplane_buckets, band_pairs, sorted_runs
 
@@ -195,9 +196,8 @@ def entity_similarity_edges(
         a, b = v.alias("a"), v.alias("b")
         join = a.crossJoin(b).where(F.col("a.id") < F.col("b.id"))
     elif method == "lsh":
-        bb = _multiband_hyperplane_buckets(nodes, "entity_id", 12, 4).localCheckpoint(
-            eager=True
-        )  # read from both band-join sides (r8)
+        # read from both band-join sides (r8)
+        bb = pin(_multiband_hyperplane_buckets(nodes, "entity_id", 12, 4))
         join = (
             band_pairs(bb)
             .join(v.select(F.col("id").alias("id1"), F.col("v").alias("v1")), "id1")

@@ -30,6 +30,7 @@ from ..operators.triples import (
     build_triples,
     canonicalize,
 )
+from ..session import pin
 from ..sources.catalog import SnapshotCatalog
 
 _CHUNK_COLS = [
@@ -48,15 +49,14 @@ class KgResult:
     access and then reused, so a caller that reads only the mentions and
     chunks plans no canonicalization or graph assembly.
 
-    Without a ``catalog`` the pin is an eager ``localCheckpoint``:
-    lineage-free executor-local blocks, so such a build is for
-    single-process runs only (an executor loss would kill the job). With a
-    ``catalog`` (``snapshot_root``, the durable mode) the pin is the
-    ``extracted`` snapshot, and each downstream table is committed on first
-    access as the snapshot of the same name and read back from it. Its
-    fingerprint is ``{fingerprint}/{name}-v1``, and ``fingerprint`` names
-    the ``extracted`` snapshot it derives from, so a new input or config
-    recomputes every table while a re-run reuses them all.
+    Without a ``catalog`` the pin is ``session.pin``, whose docstring says
+    when it survives a lost executor. With a ``catalog`` (``snapshot_root``,
+    the durable mode) the pin is the ``extracted`` snapshot, and each
+    downstream table is committed on first access as the snapshot of the
+    same name and read back from it. Its fingerprint is
+    ``{fingerprint}/{name}-v1``, and ``fingerprint`` names the ``extracted``
+    snapshot it derives from, so a new input or config recomputes every
+    table while a re-run reuses them all.
     """
 
     mentions: DataFrame
@@ -146,8 +146,8 @@ def run_kg_pipeline(
     resumes while new or differently curated data recomputes. It is
     combined with a digest of the extraction-affecting config so a
     strategy/cfg change recomputes instead of resuming a stale snapshot.
-    Without ``snapshot_root`` the pin is an eager ``localCheckpoint``,
-    lineage-free and for single-process runs only.
+    Without ``snapshot_root`` the pin is ``session.pin``; its docstring
+    says when it survives a lost executor.
     """
     if snapshot_root and input_fingerprint is None:
         # a defaulted fingerprint would silently resume corpus A's snapshot
@@ -225,7 +225,7 @@ def run_kg_pipeline(
         snap = catalog.current_snapshot("extracted")["snapshot_id"]
         fingerprint = f"{input_fingerprint}/extracted-{snap}"
     else:
-        unified = unified_plan().localCheckpoint(eager=True)
+        unified = pin(unified_plan())
     return KgResult(
         mentions=unified.where(F.col("kind") != "chunk").select(*MENTION_COLUMNS),
         chunks=unified.where(F.col("kind") == "chunk").select(*_CHUNK_COLS),

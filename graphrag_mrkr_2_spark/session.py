@@ -11,7 +11,9 @@ does not call ``get_spark`` (its master would override spark-submit's
 settings are Spark's defaults: 200 shuffle partitions (not the CPU count),
 10000 rows per Arrow batch (not 2048), the JVM's time zone (not UTC) and
 Arrow off for ``toPandas``/``createDataFrame``. Pass ``--conf`` flags to
-spark-submit to match these sessions.
+spark-submit to match these sessions, and ``--conf spark.checkpoint.dir=…``
+(a directory every executor can reach) to make every stage pin (``pin``)
+a reliable checkpoint.
 
 Case mapping. Every canonical key of the KG build is a case mapping: the
 entity id is ``md5(lower(name))[:16]`` and the merge key is
@@ -46,7 +48,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -83,3 +85,34 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and cut its lineage: every stage pin of the
+    package goes through here.
+
+    A pinned table is one whose plan would otherwise run more than once,
+    because two consumers read it (a self-join's two sides) or because a
+    loop's convergence check is an action. The mode is the deployment's,
+    read from the session's SparkContext, so there is no option to pass:
+
+    - A checkpoint directory is set (``--conf spark.checkpoint.dir=…`` or
+      ``SparkContext.setCheckpointDir``): ``checkpoint(eager=True)``. The
+      rows are written to files under that directory, so a task that reads
+      them after an executor is lost re-reads the files instead of failing
+      the job. Spark keeps the files after the job; set
+      ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` to delete
+      each one once its DataFrame is garbage-collected, or clear the
+      directory between jobs.
+    - No directory (the default; ``get_spark`` sets none):
+      ``localCheckpoint(eager=True)``, blocks in executor storage and no
+      files, but lineage-free: if an executor that holds a block is lost,
+      the block cannot be recomputed and the job fails. Fit for
+      ``local[N]``, where losing an executor loses the job anyway.
+
+    Both run ``df``'s plan once, one task per partition, and an
+    ``Observation`` on ``df`` reports its metrics after the pin returns.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

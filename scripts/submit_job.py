@@ -8,6 +8,7 @@ executors) and takes only data paths + knobs:
     zip -qr /tmp/graphrag_mrkr_2_spark.zip graphrag_mrkr_2_spark
     spark-submit \
         --master <cluster-master> \
+        [--conf spark.checkpoint.dir=<dir every executor can reach>] \
         --py-files /tmp/graphrag_mrkr_2_spark.zip \
         scripts/submit_job.py \
         --pages  <pages parquet/warc dir> | --demo-pages N \
@@ -25,6 +26,10 @@ catalog snapshot (sources/catalog.py), so a re-run over the same input
 resumes from the committed stages instead of recomputing them. The input is
 identified by --fingerprint, by default ``demo-N`` or ``<format>:<path>``;
 pass a new one when the data at a path changes.
+
+``--conf spark.checkpoint.dir=…`` makes every stage pin the package makes
+outside the catalog (``session.pin``: entity resolution, communities, the
+dedup and query operators) a reliable checkpoint; see ``pin``'s docstring.
 
 ``scripts/run_spark_submit.sh`` packages the zip and submits this script;
 ``scripts/submit_smoke.sh`` runs it end-to-end under ``local[4]`` from a
