@@ -837,8 +837,10 @@ def q_incremental_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_er_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8/S7 entity resolution driven end-to-end (LSH blocking → n-gram
-    jaccard scoring → distributed CC → canonical mapping) on entity-like
-    names derived from the documents table (first 3 words). At τ=0.999 the
+    jaccard scoring → CC → canonical mapping) on entity-like names derived
+    from the documents table (first 3 words); up to
+    graphalgo.LOCAL_EDGE_LIMIT names the three steps run on the driver after
+    one collect, above it as Spark jobs, with the same rows. At τ=0.999 the
     match gate is exactly gram-SET equality (names have < 1000 grams, so no
     jaccard lands in [0.999, 1)) — which both makes the DuckDB oracle exact
     AND guarantees LSH recall 1.0 (identical gram sets hash to identical

@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from graphrag_mrkr_2_spark.session import get_spark
+from graphrag_mrkr_2_spark.session import get_spark, pin
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -227,7 +227,7 @@ def main() -> None:
     t0 = time.time()
     # materialize once: three downstream actions (CC count/collect, membership
     # count) would otherwise recompute the canonicalization chain each time
-    kg_edges_src = res.edges.localCheckpoint(eager=True)
+    kg_edges_src = pin(res.edges)
     kg_edges = kg_edges_src.select(
         F.col("source_id").alias("src"),
         F.col("target_id").alias("dst"),
@@ -271,7 +271,7 @@ def main() -> None:
         _build_nodes(e_doc).count()
         _build_triples(_build_edges(r_doc)).count()
 
-    mentions_base = res.mentions.localCheckpoint(eager=True)
+    mentions_base = pin(res.mentions)
     skew["mega_entity_unskewed_sec"] = best_of_2(lambda: _kg_downstream(mentions_base))
     planted = res.chunks.select(
         F.lit("entity").alias("kind"),
@@ -285,7 +285,7 @@ def main() -> None:
         F.lit(None).cast("double").alias("strength"),
         F.array(F.col("chunk_id")).alias("source_chunks"),
     )
-    mentions_skewed = mentions_base.unionByName(planted).localCheckpoint(eager=True)
+    mentions_skewed = pin(mentions_base.unionByName(planted))
     # r7 (VERDICT r6 #3 root cause): skewed-vs-base was confounded — the
     # planted rows add one mention per chunk (~+26% input), so the ratio
     # measured ROW COUNT, not the hot key (r6's 1.192 "watch").  The honest
@@ -295,7 +295,7 @@ def main() -> None:
     # the row-count effect is reported separately.
     planted_ctl = planted.withColumn(
         "name", F.concat(F.lit("PLANTED "), F.col("chunk_id")))
-    mentions_ctl = mentions_base.unionByName(planted_ctl).localCheckpoint(eager=True)
+    mentions_ctl = pin(mentions_base.unionByName(planted_ctl))
     skew["mega_entity_control_sec"] = best_of_2(lambda: _kg_downstream(mentions_ctl))
     skew["mega_entity_skewed_sec"] = best_of_2(lambda: _kg_downstream(mentions_skewed))
     skew["mega_entity_ratio"] = round(

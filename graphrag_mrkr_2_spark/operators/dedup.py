@@ -23,6 +23,7 @@ make results order-insensitive.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -209,8 +210,6 @@ def sorted_runs(batches):
     comparison, detects it, so keys of any hashable type (null included)
     work.
     """
-    import numpy as np
-
     seen: set = set()
     key = None
     parts: list = []
@@ -237,8 +236,6 @@ def sorted_runs(batches):
 
 
 def _joined(parts: list) -> tuple:
-    import numpy as np
-
     if len(parts) == 1:
         return parts[0]
     return tuple(np.concatenate(c) for c in zip(*parts))
@@ -249,51 +246,55 @@ def _joined(parts: list) -> tuple:
 # ---------------------------------------------------------------------------
 
 
-def _xxhash64_rehash_matrix(h_signed: "np.ndarray", num_hashes: int):
-    """Vectorized twin of Spark's ``xxhash64(h, lit(i))`` for a LongType
-    column ``h`` and IntegerType literal ``i`` in 0..num_hashes-1.
+# XXH64 primes as uint64 numpy scalars: multiplication and addition wrap
+# mod 2^64 exactly like Java longs.
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
 
-    Spark chains per-field XXH64 steps with seed 42: first the 8-byte step
-    (hashLong) over ``h``, then — because a Python int literal plans as
-    IntegerType — the 4-byte step (hashInt) over ``i``. Both steps are the
-    published XXH64 small-input schedule, reproduced here over uint64
-    numpy arrays (multiplication/addition wrap mod 2^64 exactly like Java
-    longs). Returns an int64 (rows, num_hashes) matrix; bit-identity with
-    the JVM expression is pinned by
-    tests/test_dedup_ann.py::test_numpy_rehash_matches_spark_xxhash64.
-    """
-    import numpy as np
 
-    U = np.uint64
-    P1 = U(0x9E3779B185EBCA87)
-    P2 = U(0xC2B2AE3D27D4EB4F)
-    P3 = U(0x165667B19E3779F9)
-    P4 = U(0x85EBCA77C2B2AE63)
-    P5 = U(0x27D4EB2F165667C5)
+def _xxh64_fmix(h: np.ndarray) -> np.ndarray:
+    """XXH64's final avalanche over a uint64 array."""
+    h = h ^ (h >> np.uint64(33))
+    h = h * _P2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _xxh64_hash_long(h_signed: np.ndarray) -> np.ndarray:
+    """Spark's ``xxhash64(h)`` of a LongType column: XXH64's 8-byte step
+    (``hashLong``) with seed 42, over an int64 array; returns uint64."""
     with np.errstate(over="ignore"):
-        h = h_signed.view(U)
-        # hashLong(h, seed=42)
-        acc = U(42) + P5 + U(8)
-        k1 = h * P2
-        k1 = ((k1 << U(31)) | (k1 >> U(33))) * P1
-        acc = acc ^ k1
-        acc = ((acc << U(27)) | (acc >> U(37))) * P1 + P4
-        acc = acc ^ (acc >> U(33))
-        acc = acc * P2
-        acc = acc ^ (acc >> U(29))
-        acc = acc * P3
-        acc = acc ^ (acc >> U(32))
-        # hashInt(i, seed=acc), broadcast over the seed column
-        ik1 = (np.arange(num_hashes, dtype=U) & U(0xFFFFFFFF)) * P1
-        m = acc[:, None] + P5 + U(4)
-        m = m ^ ik1[None, :]
-        m = ((m << U(23)) | (m >> U(41))) * P2 + P3
-        m = m ^ (m >> U(33))
-        m = m * P2
-        m = m ^ (m >> U(29))
-        m = m * P3
-        m = m ^ (m >> U(32))
-    return m.view(np.int64)
+        k1 = h_signed.view(np.uint64) * _P2
+        k1 = ((k1 << np.uint64(31)) | (k1 >> np.uint64(33))) * _P1
+        acc = (np.uint64(42) + _P5 + np.uint64(8)) ^ k1
+        acc = ((acc << np.uint64(27)) | (acc >> np.uint64(37))) * _P1 + _P4
+        return _xxh64_fmix(acc)
+
+
+def _xxh64_hash_int(seed: np.ndarray, i: np.ndarray) -> np.ndarray:
+    """XXH64's 4-byte step (``hashInt``) of IntegerType values ``i`` seeded
+    with uint64 ``seed``; the two broadcast. Spark's ``xxhash64(x, lit(i))``
+    chains its per-field steps, so it equals this step seeded with
+    ``xxhash64(x)``. Returns int64, the sign Spark's hash carries."""
+    with np.errstate(over="ignore"):
+        m = (seed + _P5 + np.uint64(4)) ^ ((i.astype(np.uint64) & np.uint64(0xFFFFFFFF)) * _P1)
+        m = ((m << np.uint64(23)) | (m >> np.uint64(41))) * _P2 + _P3
+        return _xxh64_fmix(m).view(np.int64)
+
+
+def _xxhash64_rehash_matrix(h_signed: np.ndarray, num_hashes: int) -> np.ndarray:
+    """Vectorized twin of Spark's ``xxhash64(h, lit(i))`` for a LongType
+    column ``h`` and IntegerType literal ``i`` in 0..num_hashes-1: the
+    ``hashLong`` step over ``h``, then — because a Python int literal plans
+    as IntegerType — the ``hashInt`` step over ``i``. Returns an int64
+    (rows, num_hashes) matrix; bit-identity with the JVM expression is
+    pinned by tests/test_dedup_ann.py::test_numpy_rehash_matches_spark_xxhash64.
+    """
+    return _xxh64_hash_int(_xxh64_hash_long(h_signed)[:, None], np.arange(num_hashes))
 
 
 def minhash_signatures(df: DataFrame, num_hashes: int = 64) -> DataFrame:
@@ -314,8 +315,6 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 64) -> DataFrame:
     duplicate-insensitive, which also preserves the window's doc-sorted
     row order end to end).
     """
-    import numpy as np
-
     id_type = df.schema["doc_id"].dataType.simpleString()
     # distinct=False: min is duplicate-insensitive, and the non-distinct
     # path preserves the window's doc-contiguous row order the group walk
@@ -472,8 +471,6 @@ def simhash_fingerprints(df: DataFrame) -> DataFrame:
     """
     import hashlib
 
-    import numpy as np
-
     @F.pandas_udf("long")
     def _simhash(texts: pd.Series) -> pd.Series:
         out = np.zeros(len(texts), dtype=np.uint64)
@@ -579,8 +576,6 @@ def _multiband_hyperplane_buckets(
     stalls Catalyst codegen — same lesson as simhash_fingerprints). Plane
     matrix is seeded (7) → deterministic across runs and partitionings.
     """
-    import numpy as np
-
     from pyspark.sql.types import ArrayType, LongType
 
     n_planes = bands * planes_per_band

@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from graphrag_mrkr_2_spark.session import get_spark
+from graphrag_mrkr_2_spark.session import get_spark, pin
 
 
 def _proc_stat():
@@ -65,7 +65,7 @@ def main() -> None:
     pages = spark.read.parquet(pages_dir)
 
     res = run_kg_pipeline(pages, num_partitions=cpus * 6)
-    mentions_base = res.mentions.localCheckpoint(eager=True)
+    mentions_base = pin(res.mentions)
     planted = res.chunks.select(
         F.lit("entity").alias("kind"),
         F.col("chunk_id"),
@@ -78,15 +78,13 @@ def main() -> None:
         F.lit(None).cast("double").alias("strength"),
         F.array(F.col("chunk_id")).alias("source_chunks"),
     )
-    mentions_skewed = mentions_base.unionByName(planted).localCheckpoint(
-        eager=True)
+    mentions_skewed = pin(mentions_base.unionByName(planted))
     # control arm: the SAME number of planted rows but each with a
     # DISTINCT name — separates "more input rows" from "hot key".  The
     # honest skew overhead is skewed vs control, not skewed vs base.
     planted_ctl = planted.withColumn(
         "name", F.concat(F.lit("PLANTED "), F.col("chunk_id")))
-    mentions_control = mentions_base.unionByName(planted_ctl).localCheckpoint(
-        eager=True)
+    mentions_control = pin(mentions_base.unionByName(planted_ctl))
     print(f"rows: base {mentions_base.count()}, "
           f"control {mentions_control.count()}, "
           f"skewed {mentions_skewed.count()}")

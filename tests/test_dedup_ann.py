@@ -346,6 +346,27 @@ def test_numpy_rehash_matches_spark_xxhash64(spark):
         assert got == mat[:, i].tolist()
 
 
+def test_numpy_hash_int_step_matches_spark_xxhash64(spark):
+    """The hashInt step seeded with Spark's xxhash64(gram) must equal the
+    JVM expression xxhash64(gram, lit(i)): entity resolution's driver path
+    builds its minhash slots this way. A null gram is skipped by Spark's
+    field chain, so its seed is the bare seed 42."""
+    import numpy as np
+
+    from pyspark.sql import functions as F
+
+    from graphrag_mrkr_2_spark.operators.dedup import _xxh64_hash_int
+
+    grams = [" ad", "adm", "pan", "ß", "İs", "東京都", "a", " ", None]
+    df = spark.createDataFrame([(g,) for g in grams], "gram string")
+    seed_rows = df.select(F.xxhash64("gram")).collect()
+    assert seed_rows[-1][0] == 42
+    seeds = np.array([r[0] for r in seed_rows], np.int64).view(np.uint64)
+    mat = _xxh64_hash_int(seeds[:, None], np.arange(32))
+    want = df.select(*[F.xxhash64("gram", F.lit(i)) for i in range(32)]).collect()
+    assert mat.tolist() == [list(r) for r in want]
+
+
 def test_minhash_signatures_match_jvm_aggregate_form(spark):
     """The r8 numpy signature stage must equal the r2-r7 JVM k-min-agg
     form exactly (same hash family over the same shingle set)."""

@@ -1,11 +1,12 @@
 """One materialization seam: every stage pin of the package is ``session.pin``.
 
 ``test_pin_is_the_only_checkpoint_call`` is AST only (no Spark): a
-``localCheckpoint(...)`` or ``.checkpoint(...)`` call anywhere in
-``graphrag_mrkr_2_spark/`` outside ``session.pin`` is a second
-materialization policy. ``test_reliable_pins_keep_every_row`` runs the
-pinned stages with a checkpoint directory set (reliable checkpoints) and
-without one (local checkpoints) and compares their rows.
+``localCheckpoint(...)`` or ``.checkpoint(...)`` call in a ``*.py`` of the
+repo outside ``tests/`` and ``perfbench/`` and outside ``session.pin`` is a
+second materialization policy.
+``test_reliable_pins_keep_every_row`` runs the pinned stages with a
+checkpoint directory set (reliable checkpoints) and without one (local
+checkpoints) and compares their rows.
 """
 
 import ast
@@ -18,15 +19,17 @@ from test_dedup_ann import DOCS
 from graphrag_mrkr_2_spark.operators import graphalgo
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-PACKAGE = ROOT / "graphrag_mrkr_2_spark"
 PIN_METHODS = ("localCheckpoint", "checkpoint")
+UNGUARDED = ("tests", "perfbench")
 
 
 def _checkpoint_calls():
     """[(module, enclosing top-level function or None, method name)]."""
     found = []
-    for path in sorted(PACKAGE.rglob("*.py")):
+    for path in sorted(ROOT.rglob("*.py")):
         mod = path.relative_to(ROOT).as_posix()
+        if mod.split("/")[0] in UNGUARDED:
+            continue
         tree = ast.parse(path.read_text())
         owners = {}
         for top in tree.body:
@@ -43,6 +46,10 @@ def _checkpoint_calls():
 
 
 def test_pin_is_the_only_checkpoint_call():
+    """Every ``*.py`` in the repo except ``tests/`` (which pins its own
+    fixtures) and ``perfbench/``. ``perfbench/`` still holds five ``localCheckpoint(eager=True)`` calls of
+    its own (``kgbuild.py`` 3, ``run.py`` 2); they move to ``session.pin``
+    with the benchmark change of ROADMAP D9, and the guard widens then."""
     calls = _checkpoint_calls()
     outside = [c for c in calls if c[:2] != ("graphrag_mrkr_2_spark/session.py", "pin")]
     assert not outside, f"pin through session.pin instead: {outside}"
@@ -68,6 +75,9 @@ def _pinned_outputs(spark):
     res = run_kg_pipeline(generate_pages(spark, 40), num_partitions=8)
     out = {t: rows(getattr(res, t)) for t in ("chunks", "mentions", "nodes", "edges", "triples")}
     out["entity_mapping"] = rows(entity_mapping(res.nodes, threshold=0.7))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graphalgo, "LOCAL_EDGE_LIMIT", 0)
+        out["entity_mapping_spark"] = rows(entity_mapping(res.nodes, threshold=0.7))
     edges = res.edges.select(
         F.col("source_id").alias("src"),
         F.col("target_id").alias("dst"),
