@@ -666,12 +666,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS: exact-jaccard near-dup pairs → connected
-    components → (doc, cluster) with cluster = min doc id. local_threshold=0
-    forces the distributed large-star/small-star loop, so the driver's
+    components → (doc, cluster) with cluster = min doc id. The pairs go
+    straight to the distributed large-star/small-star loop
+    (``graphalgo.star_components``, whatever their count), so the driver's
     DuckDB oracle (recursive-CTE transitive closure) is a hard external
     check on the distributed CC itself, not just on the pair generation."""
     from graphrag_mrkr_2_spark.operators.dedup import ngram_jaccard_pairs
-    from graphrag_mrkr_2_spark.operators.graphalgo import connected_components
+    from graphrag_mrkr_2_spark.operators.graphalgo import star_components
 
     # CC orders by STRING id — zero-pad so lexicographic min == numeric min
     pairs = ngram_jaccard_pairs(
@@ -680,7 +681,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lpad(F.col("doc1").cast("string"), 12, "0").alias("u"),
         F.lpad(F.col("doc2").cast("string"), 12, "0").alias("v"),
     )
-    cc = connected_components(pairs, local_threshold=0)
+    cc = star_components(pairs)
     return (
         cc.select(
             F.col("node").cast("bigint").alias("doc"),
@@ -1054,7 +1055,7 @@ def q_chunk_suggestions(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic 7-chunk template exercising every builtin pattern
     (placeholder, separator, short, low-density, consecutive-short runs,
     normalized duplicates); DuckDB reconstructs the expected 10 suggestions
-    per document (exactly max_suggestions) with their reference-format
+    per document (exactly chunk_patterns.MAX_SUGGESTIONS) with their reference-format
     reasonings and ordering — verifying the codegen predicates, both
     windowed patterns, the confidence sort, and the per-document limit."""
     from graphrag_mrkr_2_spark.operators.chunk_patterns import chunk_suggestions

@@ -252,7 +252,7 @@ def main() -> None:
     # buckets) measured under planted skew instead of asserted. Each probe
     # reports (unskewed, skewed, ratio); target ratio <= 1.5. Numbers land in
     # SCALE.md per round.
-    from graphrag_mrkr_2_spark.operators.graphalgo import connected_components
+    from graphrag_mrkr_2_spark.operators.graphalgo import star_components
     from graphrag_mrkr_2_spark.operators.triples import (
         build_edges as _build_edges,
         build_nodes as _build_nodes,
@@ -310,7 +310,7 @@ def main() -> None:
 
     # 2) CC hub: one node with 120k neighbors vs the same edge count spread
     # over random pairs — stresses the de-skewed large/small-star steps
-    # (graphalgo.py min-agg + join-back; local_threshold=0 forces the
+    # (graphalgo.py min-agg + join-back; star_components runs the
     # distributed loop in both runs).
     hub_edges = spark.range(120_000).select(
         F.lit("hub").alias("u"), F.concat(F.lit("n"), F.col("id")).alias("v")
@@ -320,10 +320,10 @@ def main() -> None:
         F.concat(F.lit("a"), F.pmod(F.xxhash64("id", F.lit(2)), F.lit(240_000))).alias("v"),
     )
     skew["cc_random_sec"] = best_of_2(
-        lambda: connected_components(rand_edges, "u", "v", local_threshold=0).count()
+        lambda: star_components(rand_edges, "u", "v").count()
     )
     skew["cc_hub_sec"] = best_of_2(
-        lambda: connected_components(hub_edges, "u", "v", local_threshold=0).count()
+        lambda: star_components(hub_edges, "u", "v").count()
     )
     skew["cc_hub_ratio"] = round(skew["cc_hub_sec"] / max(skew["cc_random_sec"], 1e-9), 3)
 

@@ -70,16 +70,21 @@ def _ebml_lace_svint(delta: int) -> bytes:
     raise ValueError("EBML lace delta too large")
 
 
+# Fixture muxer settings no product caller varies; tests patch them.
+MKV_AUDIO_CODEC_PRIVATE = b""
+MKV_AUDIO_FRAMES_PER_BLOCK = 4
+OGG_SERIAL = 1
+
+
 def mux_mkv_audio(frames, codec_id: bytes = b"A_OPUS",
-                  codec_private: bytes = None,
-                  lacing: str = None, frames_per_block: int = 4) -> bytes:
+                  lacing: str = None) -> bytes:
     """Single-audio-track Matroska/WebM muxer (fixture/oracle path):
     48 kHz stereo, 20 ms frames.
 
     ``lacing``: None (one SimpleBlock per frame — what remuxed Opus
-    ships), or 'xiph' / 'ebml' / 'fixed' packing ``frames_per_block``
-    frames per SimpleBlock with that lace coding — Vorbis/MP3 muxers
-    lace heavily, so the demuxer must be driven through all three.
+    ships), or 'xiph' / 'ebml' / 'fixed' packing
+    ``MKV_AUDIO_FRAMES_PER_BLOCK`` frames per SimpleBlock with that lace
+    coding — Vorbis/MP3 muxers lace heavily, so the demuxer must be driven through all three.
     'fixed' requires equal-size frames (that's its point).  The track
     writes DefaultDuration so de-laced frames get real timestamps, and
     SamplingFrequency/Channels so the track dict carries audio meta."""
@@ -102,8 +107,8 @@ def mux_mkv_audio(frames, codec_id: bytes = b"A_OPUS",
         _el(0x86, bytes(codec_id)),               # CodecID
         _el(0x23E383, _uint_payload(20 * 1_000_000)),  # DefaultDuration
     ]
-    if codec_private:
-        track_fields.append(_el(0x63A2, bytes(codec_private)))
+    if MKV_AUDIO_CODEC_PRIVATE:
+        track_fields.append(_el(0x63A2, bytes(MKV_AUDIO_CODEC_PRIVATE)))
     track_fields.append(
         _el(0xE1, b"".join([                      # Audio
             _el(0xB5, struct.pack(">d", 48000.0)),
@@ -118,7 +123,7 @@ def mux_mkv_audio(frames, codec_id: bytes = b"A_OPUS",
             blocks.append(_el(_MKV_SIMPLEBLOCK,
                               b"\x81" + struct.pack(">hB", ts, 0x80) + frame))
     else:
-        fpb = max(1, int(frames_per_block))
+        fpb = max(1, int(MKV_AUDIO_FRAMES_PER_BLOCK))
         for base in range(0, len(frames), fpb):
             group = frames[base:base + fpb]
             ts = base * 20
@@ -271,7 +276,7 @@ def ogg_packets(data: bytes) -> list:
     return packets
 
 
-def mux_ogg(packets, serial: int = 1, page_segment_cap: int = 255) -> bytes:
+def mux_ogg(packets, page_segment_cap: int = 255) -> bytes:
     """Write logical packets into an Ogg stream (fixture/oracle path).
 
     Standard RFC 3533 lacing: packets split into 255-byte segments plus
@@ -313,7 +318,7 @@ def mux_ogg(packets, serial: int = 1, page_segment_cap: int = 255) -> bytes:
         off += total
         granule = -1 if (segs and segs[-1] == 255) else off
         out.append(b"OggS\x00" + bytes([htype])
-                   + struct.pack("<q", granule) + struct.pack("<I", serial)
+                   + struct.pack("<q", granule) + struct.pack("<I", OGG_SERIAL)
                    + struct.pack("<I", seq) + b"\x00\x00\x00\x00"
                    + bytes([len(segs)]) + bytes(segs) + body)
         seq += 1

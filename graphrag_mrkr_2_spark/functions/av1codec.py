@@ -218,25 +218,21 @@ def decode_av1_frames_yuv(obus) -> list:
         lib.dav1d_close(ctypes.byref(ctx))
 
 
-def decode_av1_frames(obus, matrix: str = "auto") -> list:
+def decode_av1_frames(obus) -> list:
     """Decode AV1 temporal units to RGB ``(h, w, 3) uint8`` frames.
 
-    ``matrix='auto'`` (default, what sample_video_frames uses) reads the
-    stream's own sequence header: matrix_coefficients 0 + 4:4:4 →
-    identity/GBR plane permutation (bit-exact, the lossless fixture
-    config), anything else → BT.601 with the same fixed-point
-    coefficients as the VP8 kernel. 'identity'/'bt601' force a
-    conversion. The conversion choice is NOT part of the decoder
-    conformance surface — the dav1d-vs-aom A/B compares raw planes."""
+    The matrix comes from the stream's own sequence header:
+    matrix_coefficients 0 + 4:4:4 → identity/GBR plane permutation
+    (bit-exact, the lossless fixture config), anything else → BT.601 with
+    the same fixed-point coefficients as the VP8 kernel. The conversion
+    choice is NOT part of the decoder conformance surface — the
+    dav1d-vs-aom A/B compares raw planes."""
     out = []
     for y, u, v, layout, mtrx, _full in decode_av1_frames_yuv(obus):
         if u is None:
             out.append(np.repeat(y[:, :, None], 3, axis=2))
             continue
-        m = matrix
-        if m == "auto":
-            m = ("identity"
-                 if mtrx == 0 and layout == _LAYOUT_I444 else "bt601")
+        m = "identity" if mtrx == 0 and layout == _LAYOUT_I444 else "bt601"
         out.append(_yuv_to_rgb(y, u, v, layout, m))
     return out
 
@@ -417,32 +413,36 @@ def _uint_payload(v: int) -> bytes:
     return v.to_bytes(n, "big")
 
 
-def mux_webm_av1(frames, width: int, height: int,
-                 frame_duration_ms: int = 40) -> bytes:
+# Fixture muxer settings no product caller varies; tests patch them.
+MKV_FRAME_MS = 40
+MKV_VIDEO_CODEC_PRIVATE = b""
+MKV_VIDEO_KEYFRAMES = None  # per-frame flags; None marks every frame key
+
+
+def mux_webm_av1(frames, width: int, height: int) -> bytes:
     """Wrap AV1 keyframe OBU streams into a minimal-but-valid WebM file:
     EBML header (DocType webm), Segment{Info, Tracks[V_AV1], one Cluster
     of SimpleBlocks (no lacing, keyframe flag set)}. Fixture/oracle path —
     the demuxer and probe_mkv both read it back."""
-    return mux_mkv_video(frames, width, height, codec_id=b"V_AV1",
-                         frame_duration_ms=frame_duration_ms)
+    return mux_mkv_video(frames, width, height, codec_id=b"V_AV1")
 
 
 def mux_mkv_video(frames, width: int, height: int,
-                  codec_id: bytes = b"V_AV1", codec_private: bytes = None,
-                  frame_duration_ms: int = 40, keyframes=None) -> bytes:
-    """Generalized single-video-track Matroska/WebM muxer. ``codec_id`` is
-    the Matroska CodecID (V_AV1, V_MPEGH/ISO/HEVC, V_VP8, …);
-    ``codec_private`` becomes the CodecPrivate element (hvcC record for
-    HEVC — samples stay length-prefixed exactly as in MP4). ``keyframes``
-    optionally flags each SimpleBlock (default: all key — what the
-    all-intra fixture paths emit); real VP8/HEVC WebM marks interframes
-    non-key and the decode side routes on that flag. DocType stays
+                  codec_id: bytes = b"V_AV1") -> bytes:
+    """Generalized single-video-track Matroska/WebM muxer, one frame every
+    ``MKV_FRAME_MS``. ``codec_id`` is the Matroska CodecID (V_AV1,
+    V_MPEGH/ISO/HEVC, V_VP8, …); ``MKV_VIDEO_CODEC_PRIVATE`` becomes the
+    CodecPrivate element (hvcC record for HEVC — samples stay
+    length-prefixed exactly as in MP4). ``MKV_VIDEO_KEYFRAMES`` optionally
+    flags each SimpleBlock (default: all key — what the all-intra fixture
+    paths emit); real VP8/HEVC WebM marks interframes non-key and the
+    decode side routes on that flag. DocType stays
     ``webm`` (every demuxer accepts it; probe_mkv doesn't gate on it)."""
     frames = list(frames)
     ebml = ebml_header(b"webm")
     info = _el(0x1549A966, b"".join([
         _el(0x2AD7B1, _uint_payload(1_000_000)),  # TimestampScale: 1 ms
-        _el(0x4489, struct.pack(">d", float(len(frames) * frame_duration_ms))),
+        _el(0x4489, struct.pack(">d", float(len(frames) * MKV_FRAME_MS))),
     ]))
     track_fields = [
         _el(0xD7, _uint_payload(1)),          # TrackNumber
@@ -450,8 +450,8 @@ def mux_mkv_video(frames, width: int, height: int,
         _el(0x83, _uint_payload(1)),          # TrackType: video
         _el(0x86, bytes(codec_id)),           # CodecID
     ]
-    if codec_private:
-        track_fields.append(_el(0x63A2, bytes(codec_private)))
+    if MKV_VIDEO_CODEC_PRIVATE:
+        track_fields.append(_el(0x63A2, bytes(MKV_VIDEO_CODEC_PRIVATE)))
     track_fields.append(
         _el(0xE0, b"".join([                  # Video
             _el(0xB0, _uint_payload(width)),
@@ -460,8 +460,8 @@ def mux_mkv_video(frames, width: int, height: int,
     tracks = _el(0x1654AE6B, _el(0xAE, b"".join(track_fields)))
     blocks = []
     for idx, obu in enumerate(frames):
-        ts = idx * frame_duration_ms
-        key = keyframes[idx] if keyframes is not None else True
+        ts = idx * MKV_FRAME_MS
+        key = MKV_VIDEO_KEYFRAMES[idx] if MKV_VIDEO_KEYFRAMES is not None else True
         # SimpleBlock: track vint (0x81 = track 1), s16 relative timestamp,
         # flags (0x80 = keyframe), then the frame payload (no lacing)
         blocks.append(_el(_MKV_SIMPLEBLOCK,

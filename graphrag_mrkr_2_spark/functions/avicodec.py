@@ -32,22 +32,25 @@ def _list(listtype: bytes, payload: bytes) -> bytes:
     return _chunk(b"LIST", listtype + payload)
 
 
-def encode_avi_mjpeg(
-    frames: list[bytes], width: int, height: int, fps: int = 25
-) -> bytes:
-    """Wrap pre-encoded JPEG frames into an MJPEG AVI container."""
+# Frame rate the fixture muxer writes; tests patch it.
+AVI_FPS = 25
+
+
+def encode_avi_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
+    """Wrap pre-encoded JPEG frames into an MJPEG AVI container at
+    ``AVI_FPS`` frames per second."""
     if not frames:
         raise ValueError("encode_avi_mjpeg needs at least one frame")
-    period_us = int(round(1_000_000 / max(1, fps)))
+    period_us = int(round(1_000_000 / max(1, AVI_FPS)))
     max_bytes = max(len(f) for f in frames)
     avih = struct.pack(
         "<IIIIIIIIIIIIII",
-        period_us, max_bytes * fps, 0, 0x10, len(frames), 0, 1, max_bytes,
+        period_us, max_bytes * AVI_FPS, 0, 0x10, len(frames), 0, 1, max_bytes,
         width, height, 0, 0, 0, 0,
     )
     strh = struct.pack(
         "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"MJPG", 0, 0, 0, 0, 1, fps, 0, len(frames),
+        b"vids", b"MJPG", 0, 0, 0, 0, 1, AVI_FPS, 0, len(frames),
         max_bytes, 0xFFFFFFFF, 0, 0, 0, int(width), int(height),
     )
     # BITMAPINFOHEADER

@@ -160,7 +160,7 @@ def chunk_document(document_id: str, text: str, chunk_size: int = 1200, chunk_ov
     return assign_text_units(document_id, text, splitter.split_text(text))
 
 
-def resolve_chunking_strategy(file_extension: str | None, has_structure: bool = False) -> str:
+def resolve_chunking_strategy(file_extension: str | None, has_structure: bool) -> str:
     """Strategy resolution mirroring ChunkingService._resolve_chunking_strategy
     (core/chunking.py:283-295): html extensions → html_heading; pdf (and here
     docx, whose OOXML styles carry the same document-model structure docling

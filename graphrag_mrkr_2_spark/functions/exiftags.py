@@ -243,14 +243,13 @@ def splice_exif_app1(jpeg: bytes, tags: dict) -> bytes:
     return jpeg[:2] + app1 + jpeg[2:]
 
 
-def build_exif_jpeg(tags: dict, px=None) -> bytes:
-    """A REAL decodable JPEG (functions/jpegcodec.encode_jpeg) with the
-    EXIF APP1 segment spliced after SOI — what crawl camera files look
-    like."""
+def build_exif_jpeg(tags: dict) -> bytes:
+    """A REAL decodable 8x8 mid-grey JPEG (functions/jpegcodec.encode_jpeg)
+    with the EXIF APP1 segment spliced after SOI — what crawl camera files
+    look like."""
     import numpy as np
 
     from graphrag_mrkr_2_spark.functions.jpegcodec import encode_jpeg
 
-    if px is None:
-        px = np.full((8, 8, 3), 128, dtype=np.uint8)
+    px = np.full((8, 8, 3), 128, dtype=np.uint8)
     return splice_exif_app1(encode_jpeg(px), tags)

@@ -46,7 +46,7 @@ _HEIF_CANDIDATES = (
 # public enums (libheif.h, stable since 1.0)
 _COLORSPACE_YCBCR = 0
 _COLORSPACE_RGB = 1
-_CHROMA_444 = 3
+_CHROMA_420 = 1
 _CHROMA_INTERLEAVED_RGB = 10
 _CHROMA_INTERLEAVED_RGBA = 11
 _CHANNEL_Y, _CHANNEL_CB, _CHANNEL_CR = 0, 1, 2
@@ -189,17 +189,17 @@ def decode_heif_native(data: bytes) -> np.ndarray:
         lib.heif_context_free(ctx)
 
 
-def decode_heif_native_yuv(data: bytes, chroma: str = "420") -> tuple:
-    """Decode an AVIF/HEIC payload to raw ``(y, cb, cr)`` uint8 planes (no
-    RGB conversion; cb/cr keep their subsampled dims, None when absent).
+def decode_heif_native_yuv(data: bytes) -> tuple:
+    """Decode a 4:2:0 AVIF/HEIC payload to raw ``(y, cb, cr)`` uint8 planes
+    (no RGB conversion; cb/cr keep their subsampled dims, None when absent).
     This is the plane-level A/B surface: a direct codec binding
     (``hevccodec``/``av1codec``) must reproduce these planes bit-exactly
     on the same payload, with no color conversion policy in the
     comparison.
 
-    ``chroma`` must STATE the stream's native subsampling ('420'/'422'/
-    '444'): libheif only passes planes through untouched when the
-    requested chroma equals the coded one — requesting
+    The request STATES the stream's native 4:2:0 subsampling: libheif only
+    passes planes through untouched when the requested chroma equals the
+    coded one — requesting
     heif_chroma_undefined makes 1.15 CONVERT (measured: a 4:2:0 stream
     came back 4:4:4 with ±1 luma wobble from the resampling round-trip),
     which would poison the A/B."""
@@ -217,12 +217,9 @@ def decode_heif_native_yuv(data: bytes, chroma: str = "420") -> tuple:
             ctx, buf, len(data), None), "read")
         _check(lib.heif_context_get_primary_image_handle(
             ctx, ctypes.byref(handle)), "primary handle")
-        chroma_enum = {"420": 1, "422": 2, "444": _CHROMA_444}.get(chroma)
-        if chroma_enum is None:
-            raise ValueError(f"unsupported chroma {chroma!r}")
         _check(lib.heif_decode_image(
             handle, ctypes.byref(img), _COLORSPACE_YCBCR,
-            chroma_enum, None), "decode")
+            _CHROMA_420, None), "decode")
 
         def _read(channel):
             w = lib.heif_image_get_width(img, channel)

@@ -19,7 +19,7 @@ of quarantining every br/zstd record. encode_brotli_native (libbrotlienc),
 encode_brotli_uncompressed and encode_zstd_native build fixtures and bench
 inputs.
 
-Every decode is bounded by ``max_output`` (decompression-bomb guard: a
+Every decode is bounded by ``MAX_OUTPUT`` (decompression-bomb guard: a
 format-valid gzip or brotli stream expands ~1e3..1e6:1, and a crawl WILL
 contain hostile payloads).
 """
@@ -31,7 +31,10 @@ import zlib
 
 from graphrag_mrkr_2_spark.functions.nativecodecs import load_library
 
-_DEFAULT_MAX_OUTPUT = 64 << 20  # 64 MiB decompressed per payload
+MAX_OUTPUT = 64 << 20  # 64 MiB decompressed per payload
+# libbrotlienc window bits and mode (0 = generic) of the fixture encoder
+BROTLI_LGWIN = 22
+BROTLI_MODE = 0
 
 
 def parse_http_response(raw: bytes):
@@ -119,7 +122,7 @@ def _bounded_inflate(data: bytes, wbits: int, max_output: int) -> bytes:
     return out
 
 
-def decode_gzip(data: bytes, max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
+def decode_gzip(data: bytes) -> bytes:
     """Bounded multi-member gzip decode (zlib wbits 31 per member)."""
     chunks = []
     total = 0
@@ -127,11 +130,11 @@ def decode_gzip(data: bytes, max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
     while rest:
         d = zlib.decompressobj(31)
         try:
-            out = d.decompress(rest, max_output - total + 1)
+            out = d.decompress(rest, MAX_OUTPUT - total + 1)
         except zlib.error as e:
             raise ValueError(f"gzip: {e}") from e
         total += len(out)
-        if total > max_output:
+        if total > MAX_OUTPUT:
             raise ValueError("gzip: output exceeds max_output")
         if not d.eof:
             raise ValueError("gzip: truncated stream")
@@ -140,15 +143,14 @@ def decode_gzip(data: bytes, max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
     return b"".join(chunks)
 
 
-def decode_deflate(data: bytes,
-                   max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
+def decode_deflate(data: bytes) -> bytes:
     """Content-Encoding: deflate — zlib-wrapped per the RFC, with the
     raw-deflate fallback for the classic IIS/server bug (a crawl sees
     both)."""
     try:
-        return _bounded_inflate(data, 15, max_output)
+        return _bounded_inflate(data, 15, MAX_OUTPUT)
     except ValueError:
-        return _bounded_inflate(data, -15, max_output)
+        return _bounded_inflate(data, -15, MAX_OUTPUT)
 
 
 # ZSTD_inBuffer and ZSTD_outBuffer share this layout
@@ -210,8 +212,7 @@ def _native(name: str) -> ctypes.CDLL:
     return lib
 
 
-def decode_brotli_native(data: bytes,
-                         max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
+def decode_brotli_native(data: bytes) -> bytes:
     """br (RFC 7932) via the system libbrotlidec streaming API."""
     lib = _native("brotlidec")
     st = lib.BrotliDecoderCreateInstance(None, None, None)
@@ -235,7 +236,7 @@ def decode_brotli_native(data: bytes,
             if produced:
                 chunks.append(bytes(outbuf[:produced]))
                 total += produced
-                if total > max_output:
+                if total > MAX_OUTPUT:
                     raise ValueError("brotli: output exceeds max_output")
             if res == 1:  # SUCCESS
                 if avail_in.value:
@@ -251,13 +252,12 @@ def decode_brotli_native(data: bytes,
         lib.BrotliDecoderDestroyInstance(st)
 
 
-def encode_brotli_native(data: bytes, quality: int = 5, lgwin: int = 22,
-                         mode: int = 0) -> bytes:
+def encode_brotli_native(data: bytes, quality: int = 5) -> bytes:
     """Compress via the system libbrotlienc (fixtures and bench inputs)."""
     lib = _native("brotlienc")
     n = ctypes.c_size_t(len(data) + (len(data) >> 1) + 1024)
     buf = ctypes.create_string_buffer(n.value)
-    if not lib.BrotliEncoderCompress(quality, lgwin, mode, len(data),
+    if not lib.BrotliEncoderCompress(quality, BROTLI_LGWIN, BROTLI_MODE, len(data),
                                      data, ctypes.byref(n), buf):
         raise ValueError("libbrotlienc: compression failed")
     return buf.raw[:n.value]
@@ -310,8 +310,7 @@ def encode_brotli_uncompressed(data: bytes) -> bytes:
     return bytes(out)
 
 
-def decode_zstd_native(data: bytes,
-                       max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
+def decode_zstd_native(data: bytes) -> bytes:
     """zstd (RFC 8878) via the system libzstd streaming API."""
     lib = _native("zstd")
     ds = lib.ZSTD_createDStream()
@@ -335,7 +334,7 @@ def decode_zstd_native(data: bytes,
             if outb.pos:
                 chunks.append(dst.raw[:outb.pos])
                 total += outb.pos
-                if total > max_output:
+                if total > MAX_OUTPUT:
                     raise ValueError("zstd: output exceeds max_output")
             if inb.pos == len(data):
                 if ret != 0:
@@ -368,8 +367,7 @@ _DECODERS = {
 }
 
 
-def decode_content_encoding(body: bytes, encoding: str | None,
-                            max_output: int = _DEFAULT_MAX_OUTPUT) -> bytes:
+def decode_content_encoding(body: bytes, encoding: str | None) -> bytes:
     """Apply a Content-Encoding chain (RFC 9110 §8.4) in reverse order.
     ``encoding`` is the raw header value, e.g. ``"gzip"`` or
     ``"gzip, br"``. Unknown tokens raise ValueError (the caller decides
@@ -383,7 +381,7 @@ def decode_content_encoding(body: bytes, encoding: str | None,
         dec = _DECODERS.get(token)
         if dec is None:
             raise ValueError(f"unknown content-encoding {token!r}")
-        body = dec(body, max_output)
+        body = dec(body)
     return body
 
 

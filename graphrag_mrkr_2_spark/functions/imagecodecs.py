@@ -503,9 +503,7 @@ def _write_subblocks(out: bytearray, seg: bytes) -> None:
     out += b"\x00"
 
 
-def encode_gif_frames(
-    frames: list[np.ndarray], delays_ms: list[int] | None = None
-) -> bytes:
+def encode_gif_frames(frames: list[np.ndarray], delays_ms: list[int]) -> bytes:
     """Encode full-screen RGB frames (shared <=256-color palette across all
     frames) to an animated GIF89a with per-frame GCE delays — the
     round-trip oracle for :func:`gif_frames` (disposal 0, no
@@ -515,7 +513,6 @@ def encode_gif_frames(
     h, w, _ = frames[0].shape
     if any(f.shape != (h, w, 3) for f in frames):
         raise ValueError("encode_gif_frames needs uniform (h, w, 3) frames")
-    delays_ms = delays_ms or [100] * len(frames)
     if len(delays_ms) != len(frames):
         raise ValueError("delays_ms must have one entry per frame")
     stack = np.concatenate([f.reshape(-1, 3) for f in frames], axis=0)

@@ -760,14 +760,17 @@ def _magnitude(v: int) -> tuple[int, int]:
     return size, code
 
 
-def encode_jpeg(
-    pixels: np.ndarray, quality: int = 90, subsampling: str = "444"
-) -> bytes:
+# Encoder settings no product caller varies; tests patch them.
+JPEG_QUALITY = 90
+JPEG_SUBSAMPLING = "444"
+
+
+def encode_jpeg(pixels: np.ndarray) -> bytes:
     """Encode (h, w, 3) RGB or (h, w)/(h, w, 1) grayscale uint8 to a
-    baseline JPEG with the Annex-K standard tables. ``subsampling``:
-    '444' (one block per component per MCU) or '420' (2x2 Y blocks +
-    box-filtered Cb/Cr per MCU — exercises the decoder's interleaved-MCU
-    and chroma-upsampling paths)."""
+    baseline JPEG with the Annex-K standard tables at ``JPEG_QUALITY``.
+    ``JPEG_SUBSAMPLING``: '444' (one block per component per MCU) or '420'
+    (2x2 Y blocks + box-filtered Cb/Cr per MCU — exercises the decoder's
+    interleaved-MCU and chroma-upsampling paths)."""
     px = np.asarray(pixels, dtype=np.float64)
     gray = px.ndim == 2 or px.shape[2] == 1
     if px.ndim == 2:
@@ -775,7 +778,7 @@ def encode_jpeg(
     h, w = px.shape[:2]
     if gray:
         comps = [px[:, :, 0] - 128.0]
-        qts = [_quality_scale(_QT_LUMA, quality)]
+        qts = [_quality_scale(_QT_LUMA, JPEG_QUALITY)]
         qids = [0]
     else:  # noqa: RET506 — symmetric branches
         r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
@@ -783,7 +786,7 @@ def encode_jpeg(
         cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
         cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
         comps = [y - 128.0, cb - 128.0, cr - 128.0]
-        qts = [_quality_scale(_QT_LUMA, quality), _quality_scale(_QT_CHROMA, quality)]
+        qts = [_quality_scale(_QT_LUMA, JPEG_QUALITY), _quality_scale(_QT_CHROMA, JPEG_QUALITY)]
         qids = [0, 1, 1]
 
     # quant tables travel (and are applied to zigzag coefficients) in
@@ -844,14 +847,14 @@ def encode_jpeg(
 
     bw = _BitWriterJ()
     pred = [0] * len(comps)
-    if gray or subsampling == "444":
+    if gray or JPEG_SUBSAMPLING == "444":
         samplings = [0x11] * len(comps)
         planes = [_pad_to(c, 8) for c in comps]
         for by in range((h + 7) // 8):
             for bx in range((w + 7) // 8):
                 for ci, p in enumerate(planes):
                     _emit_block(p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8], ci, pred)
-    elif subsampling == "420":
+    elif JPEG_SUBSAMPLING == "420":
         samplings = [0x22, 0x11, 0x11]
         yp = _pad_to(comps[0], 16)
         # chroma: 2x2 box mean on the padded full-res plane, then pad to 8
@@ -870,7 +873,7 @@ def encode_jpeg(
                 for ci, p in enumerate(subs, start=1):
                     _emit_block(p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8], ci, pred)
     else:
-        raise ValueError(f"unsupported subsampling {subsampling!r} ('444'/'420')")
+        raise ValueError(f"unsupported subsampling {JPEG_SUBSAMPLING!r} ('444'/'420')")
     entropy = bw.flush()
 
     out = bytearray(b"\xff\xd8")

@@ -39,15 +39,13 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["leiden_communities", "modularity"]
+__all__ = ["leiden_communities"]
 
 
-def _build(edges, nodes=None):
+def _build(edges):
     """Edge list [(u, v, w)] → (index, adjacency list[dict], strengths,
     self-loop weights, 2m)."""
     idx: dict = {}
-    for n in nodes or ():
-        idx.setdefault(n, len(idx))
     for u, v, _ in edges:
         idx.setdefault(u, len(idx))
         idx.setdefault(v, len(idx))
@@ -191,15 +189,14 @@ def _aggregate(adj, strength, self_w, refined, membership):
 
 def leiden_communities(
     edges,
-    nodes=None,
     resolution: float = 1.0,
     seed: int = 42,
 ) -> dict:
     """Cluster an undirected weighted edge list [(u, v, w)] → {node:
-    community_index}, aggregating at most 20 levels. Isolated nodes
-    (``nodes`` minus edge endpoints) each get their own community.
-    Deterministic for a fixed seed."""
-    idx, adj, strength, self_w, two_m = _build(edges, nodes)
+    community_index}, aggregating at most 20 levels. Nodes are indexed by
+    first appearance; a node whose only edges are zero-weight self-loops is
+    isolated and gets its own community. Deterministic for a fixed seed."""
+    idx, adj, strength, self_w, two_m = _build(edges)
     n = len(adj)
     if n == 0:
         return {}
@@ -244,25 +241,3 @@ def leiden_communities(
             renum[c] = len(renum)
         out[node] = renum[c]
     return out
-
-
-def modularity(edges, membership: dict) -> float:
-    """Weighted modularity (resolution 1) of a membership dict over an edge
-    list (the quantity igraph reports alongside the partition)."""
-    idx, adj, strength, self_w, two_m = _build(edges, list(membership))
-    if two_m <= 0:
-        return 0.0
-    intra = 0.0
-    tot: dict[int, float] = {}
-    for node, i in idx.items():
-        c = membership[node]
-        tot[c] = tot.get(c, 0.0) + strength[i]
-    for u, v, w in edges:
-        if membership[u] == membership[v]:
-            intra += float(w)
-    # each undirected edge counted once in `edges`; modularity uses 2m scale
-    # (self-loops contribute w here and 2w to strength — consistent with
-    # the _build convention)
-    return (2.0 * intra) / two_m - sum(
-        t * t for t in tot.values()
-    ) / (two_m * two_m)

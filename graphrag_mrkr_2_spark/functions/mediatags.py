@@ -437,14 +437,18 @@ def build_id3v2(tags: dict, version: int = 4) -> bytes:
     return header + payload
 
 
-def build_vorbis_comment(tags: dict, vendor: str = "spark-graft") -> bytes:
+# Vendor string the fixture writer puts in every comment; tests patch it.
+VORBIS_VENDOR = "spark-graft"
+
+
+def build_vorbis_comment(tags: dict) -> bytes:
     fields = []
     key_map = {"title": "TITLE", "artist": "ARTIST", "album": "ALBUM",
                "comment": "COMMENT", "lyrics": "LYRICS"}
     for key, name in key_map.items():
         if key in tags:
             fields.append(f"{name}={tags[key]}".encode("utf-8"))
-    vend = vendor.encode("utf-8")
+    vend = VORBIS_VENDOR.encode("utf-8")
     out = struct.pack("<I", len(vend)) + vend
     out += struct.pack("<I", len(fields))
     for f in fields:

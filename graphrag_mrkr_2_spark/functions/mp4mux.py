@@ -118,17 +118,28 @@ def _build_moov(width: int, height: int, stbl: bytes, duration: int,
     return _box(b"moov", mvhd + trak + mvex)
 
 
+# Fixture muxer settings no product caller varies; tests patch them.
+MP4_FRAME_MS = 40
+MP4_SAMPLES_PER_CHUNK = 2
+FMP4_SAMPLES_PER_FRAGMENT = 2
+FMP4_KEYFRAMES = None  # per-sample flags; None marks every sample key
+FMP4_MEHD = False
+FMP4_SIDX = False
+MP4_AUDIO_CONFIG_RECORD = None
+MP4_AUDIO_CHUNK_PATTERN = (3, 1, 2)
+
+
 def mux_mp4_video(samples, width: int, height: int, codec: str,
-                  config_record: bytes, frame_duration_ms: int = 40,
-                  samples_per_chunk: int = 2) -> bytes:
-    """Write coded video samples into a minimal-but-valid MP4.
+                  config_record: bytes) -> bytes:
+    """Write coded video samples into a minimal-but-valid MP4, one sample
+    every ``MP4_FRAME_MS``.
 
     ``samples``: list of coded sample byte strings (length-prefixed NALs
     for hvc1, low-overhead OBUs for av01). ``codec``: sample-entry fourcc
     ('hvc1'/'av01'). ``config_record``: the codec config box payload
-    (hvcC/av1C record bytes). Chunking at ``samples_per_chunk`` exercises
-    real stsc/stco interleaving rather than the degenerate one-chunk case.
-    Timescale is 1000 (1 ms units) in both mvhd and mdhd."""
+    (hvcC/av1C record bytes). Chunking at ``MP4_SAMPLES_PER_CHUNK``
+    exercises real stsc/stco interleaving rather than the degenerate
+    one-chunk case. Timescale is 1000 (1 ms units) in both mvhd and mdhd."""
     samples = [bytes(s) for s in samples]
     if not samples:
         raise ValueError("mux_mp4_video: no samples")
@@ -136,13 +147,13 @@ def mux_mp4_video(samples, width: int, height: int, codec: str,
     if fourcc not in _VIDEO_CONFIG_BOXES:
         raise ValueError(f"unsupported MP4 video codec {codec!r}")
     n = len(samples)
-    duration = n * frame_duration_ms
+    duration = n * MP4_FRAME_MS
 
     ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) +
                 b"isom" + b"iso2" + b"mp41")
     mdat_payload = b"".join(samples)
-    # chunk layout: fixed-size runs of samples_per_chunk (last chunk ragged)
-    spc = max(1, int(samples_per_chunk))
+    # chunk layout: fixed-size runs of MP4_SAMPLES_PER_CHUNK (last ragged)
+    spc = max(1, int(MP4_SAMPLES_PER_CHUNK))
     chunk_sizes = []
     for i in range(0, n, spc):
         chunk_sizes.append(sum(len(s) for s in samples[i:i + spc]))
@@ -155,7 +166,7 @@ def mux_mp4_video(samples, width: int, height: int, codec: str,
     entry = _sample_entry(fourcc, width, height, config_record)
     stsd = _full_box(b"stsd", 0, 0, struct.pack(">I", 1) + entry)
     stts = _full_box(b"stts", 0, 0,
-                     struct.pack(">III", 1, n, frame_duration_ms))
+                     struct.pack(">III", 1, n, MP4_FRAME_MS))
     # all-intra fixtures: stss omitted == every sample is sync
     last_run = n - (len(chunk_sizes) - 1) * spc
     if len(chunk_sizes) == 1:
@@ -604,29 +615,27 @@ def _parse_fragments(data: bytes, track_id: int, timescale: int,
 
 
 def mux_fmp4_video(samples, width: int, height: int, codec: str,
-                   config_record: bytes, frame_duration_ms: int = 40,
-                   samples_per_fragment: int = 2, keyframes=None,
-                   mehd: bool = False, sidx: bool = False) -> bytes:
+                   config_record: bytes) -> bytes:
     """Fragmented-MP4 twin of ``mux_mp4_video`` (fixture path for the
     DASH/CMAF demux leg): init segment (ftyp + moov with EMPTY sample
     tables + mvex/trex) followed by one moof+mdat pair per
-    ``samples_per_fragment`` samples — tfhd default-base-is-moof, tfdt
+    ``FMP4_SAMPLES_PER_FRAGMENT`` samples — tfhd default-base-is-moof, tfdt
     decode times, trun with data-offset + per-sample sizes.
-    ``keyframes`` (default all-key) additionally writes per-sample trun
+    ``FMP4_KEYFRAMES`` (default all-key) additionally writes per-sample trun
     flags with sample_is_non_sync_sample set on interframes — the field
     real DASH video uses to mark its GOP structure.
 
-    ``mehd`` writes the movie-extends header (ISO 14496-12 §8.8.2) with
-    the total fragment_duration; ``sidx`` writes a segment index
+    ``FMP4_MEHD`` writes the movie-extends header (ISO 14496-12 §8.8.2) with
+    the total fragment_duration; ``FMP4_SIDX`` writes a segment index
     (§8.16.3) between the init segment and the first moof, one
     media-referencing entry per fragment — the two spec'd duration fast
     paths for fMP4 probes (r7, probe_mp4 precedence mvhd→mehd→sidx)."""
     samples = [bytes(s) for s in samples]
     if not samples:
         raise ValueError("mux_fmp4_video: no samples")
-    if keyframes is not None and len(keyframes) != len(samples):
+    if FMP4_KEYFRAMES is not None and len(FMP4_KEYFRAMES) != len(samples):
         raise ValueError(
-            f"mux_fmp4_video: {len(keyframes)} keyframe flags for "
+            f"mux_fmp4_video: {len(FMP4_KEYFRAMES)} keyframe flags for "
             f"{len(samples)} samples")
     fourcc = codec.encode("ascii")
     if fourcc not in _VIDEO_CONFIG_BOXES:
@@ -641,17 +650,17 @@ def mux_fmp4_video(samples, width: int, height: int, codec: str,
         _full_box(b"stco", 0, 0, struct.pack(">I", 0)),
     ]))
     mvex_children = b""
-    if mehd:
+    if FMP4_MEHD:
         mvex_children += _full_box(b"mehd", 1, 0, struct.pack(
-            ">Q", len(samples) * frame_duration_ms))
+            ">Q", len(samples) * MP4_FRAME_MS))
     mvex_children += _full_box(b"trex", 0, 0, struct.pack(
-        ">IIIII", 1, 1, frame_duration_ms, 0, 0))
+        ">IIIII", 1, 1, MP4_FRAME_MS, 0, 0))
     mvex = _box(b"mvex", mvex_children)
     out = [_box(b"ftyp", b"iso5" + struct.pack(">I", 512) +
                 b"iso5" + b"iso6" + b"mp41"),
            _build_moov(width, height, stbl, 0, mvex)]
 
-    spf = max(1, int(samples_per_fragment))
+    spf = max(1, int(FMP4_SAMPLES_PER_FRAGMENT))
     seq = 0
     tcur = 0
     frag_meta = []  # (moof+mdat bytes, duration ticks) per fragment
@@ -664,13 +673,13 @@ def mux_fmp4_video(samples, width: int, height: int, codec: str,
         tfdt = _full_box(b"tfdt", 1, 0, struct.pack(">Q", tcur))
         # trun flags: data-offset (0x1) + sample-size (0x200), plus
         # per-sample flags (0x400) when a keyframe pattern was given
-        frag_keys = (keyframes[i:i + spf] if keyframes is not None
+        frag_keys = (FMP4_KEYFRAMES[i:i + spf] if FMP4_KEYFRAMES is not None
                      else [True] * len(frag))
-        tr_flags = 0x000201 | (0x000400 if keyframes is not None else 0)
+        tr_flags = 0x000201 | (0x000400 if FMP4_KEYFRAMES is not None else 0)
         fields = b"".join(
             struct.pack(">I", len(s)) +
             (struct.pack(">I", 0 if k else 0x00010000)
-             if keyframes is not None else b"")
+             if FMP4_KEYFRAMES is not None else b"")
             for s, k in zip(frag, frag_keys))
         # data offset = moof size + mdat header (8), relative to moof
         # start (default-base-is-moof); moof size is fixed once the
@@ -691,9 +700,9 @@ def mux_fmp4_video(samples, width: int, height: int, codec: str,
         out.append(moof)
         out.append(mdat)
         frag_meta.append((len(moof) + len(mdat),
-                          len(frag) * frame_duration_ms))
-        tcur += len(frag) * frame_duration_ms
-    if sidx:
+                          len(frag) * MP4_FRAME_MS))
+        tcur += len(frag) * MP4_FRAME_MS
+    if FMP4_SIDX:
         refs = b"".join(
             struct.pack(">III", size, dur, 0x90000000)  # SAP=1, type 1
             for size, dur in frag_meta)
@@ -738,25 +747,24 @@ def mp4_audio_samples(data: bytes) -> list:
             in mp4_audio_track_info(data)["samples"][:MAX_SAMPLES]]
 
 
-def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int,
-                  config_record: bytes = None,
-                  chunk_pattern=(3, 1, 2)) -> bytes:
+def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int) -> bytes:
     """Write coded audio samples into a minimal-but-valid MP4.
 
     ``samples``: list of coded frame byte strings (AAC raw frames for
     mp4a, Opus packets for Opus, MP3 frames for '.mp3').  ``codec``: the
-    sample-entry fourcc ('mp4a'/'Opus'/'fLaC'/'.mp3').  ``config_record``:
-    the codec config box payload (esds/dOps/dfLa record bytes) or None.
-    ``chunk_pattern`` cycles per-chunk sample counts — audio chunking is
-    ragged in real interleaved files, so the fixture writes a multi-run
-    stsc by default instead of the degenerate fixed-size layout.
+    sample-entry fourcc ('mp4a'/'Opus'/'fLaC'/'.mp3').
+    ``MP4_AUDIO_CONFIG_RECORD``: the codec config box payload
+    (esds/dOps/dfLa record bytes) or None.
+    ``MP4_AUDIO_CHUNK_PATTERN`` cycles per-chunk sample counts — audio
+    chunking is ragged in real interleaved files, so the fixture writes a
+    multi-run stsc by default instead of the degenerate fixed-size layout.
     Timescale is 1000 (1 ms units), matching the video muxer; every sample
     lasts 20 ms."""
     samples = [bytes(s) for s in samples]
     if not samples:
         raise ValueError("mux_mp4_audio: no samples")
-    if not chunk_pattern or any(c < 1 for c in chunk_pattern):
-        raise ValueError("mux_mp4_audio: chunk_pattern needs counts >= 1")
+    if not MP4_AUDIO_CHUNK_PATTERN or any(c < 1 for c in MP4_AUDIO_CHUNK_PATTERN):
+        raise ValueError("mux_mp4_audio: chunk pattern needs counts >= 1")
     fourcc = codec.encode("ascii")
     if len(fourcc) != 4:
         raise ValueError(f"bad MP4 audio fourcc {codec!r}")
@@ -766,10 +774,10 @@ def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int,
     ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) +
                 b"isom" + b"iso2" + b"mp41")
     mdat_payload = b"".join(samples)
-    # ragged chunk layout: cycle chunk_pattern until samples run out
+    # ragged chunk layout: cycle MP4_AUDIO_CHUNK_PATTERN until samples run out
     per_chunk, i, pi = [], 0, 0
     while i < n:
-        c = min(chunk_pattern[pi % len(chunk_pattern)], n - i)
+        c = min(MP4_AUDIO_CHUNK_PATTERN[pi % len(MP4_AUDIO_CHUNK_PATTERN)], n - i)
         per_chunk.append(c)
         i += c
         pi += 1
@@ -785,8 +793,8 @@ def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int,
         # need a v1 entry + srat box this fixture muxer doesn't write
         raise ValueError("mux_mp4_audio: rate > 65535 Hz")
     cfg_type = _AUDIO_CONFIG_BOXES.get(fourcc)
-    cfg_box = (_box(cfg_type, bytes(config_record))
-               if cfg_type and config_record is not None else b"")
+    cfg_box = (_box(cfg_type, bytes(MP4_AUDIO_CONFIG_RECORD))
+               if cfg_type and MP4_AUDIO_CONFIG_RECORD is not None else b"")
     entry = _box(fourcc, b"".join([
         b"\x00" * 6, struct.pack(">H", 1),     # reserved + data_ref_index
         b"\x00" * 8,                           # reserved (version 0)

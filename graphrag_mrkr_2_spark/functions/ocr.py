@@ -309,7 +309,11 @@ def detect_image_content(img: np.ndarray) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def detect_ocr_language(text: str | None, default_language: str = "eng") -> str:
+# Tesseract language of short or unrecognized text (core/ocr.py's default)
+OCR_DEFAULT_LANGUAGE = "eng"
+
+
+def detect_ocr_language(text: str | None) -> str:
     """Map extracted text to a Tesseract language code.
 
     The reference runs langdetect and maps {en,fr,de,es,it}→tesseract codes,
@@ -325,7 +329,7 @@ def detect_ocr_language(text: str | None, default_language: str = "eng") -> str:
     )
 
     if not text or len(text.strip()) < 20:
-        return default_language
+        return OCR_DEFAULT_LANGUAGE
     low = text.lower()
     scores = {
         lang: len(re.findall(r"\b(?:" + "|".join(ws) + r")\b", low))
@@ -333,9 +337,9 @@ def detect_ocr_language(text: str | None, default_language: str = "eng") -> str:
     }
     for lang in _LANG_PRIORITY:
         if all(scores[lang] > scores[o] for o in _LANG_PRIORITY if o != lang):
-            code = _TESSERACT_LANG.get(lang, default_language)
-            return code if code in _SUPPORTED_LANGUAGES else default_language
-    return default_language
+            code = _TESSERACT_LANG.get(lang, OCR_DEFAULT_LANGUAGE)
+            return code if code in _SUPPORTED_LANGUAGES else OCR_DEFAULT_LANGUAGE
+    return OCR_DEFAULT_LANGUAGE
 
 
 # ---------------------------------------------------------------------------

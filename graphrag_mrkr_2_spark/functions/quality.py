@@ -97,7 +97,7 @@ def assess_chunk_quality(chunk: str) -> dict:
     }
 
 
-def should_remove_chunk(chunk_text: str, entity_count: int = 0, relationship_count: int = 0) -> bool:
+def should_remove_chunk(chunk_text: str, entity_count: int, relationship_count: int) -> bool:
     """core/ocr.py:300-330 (should_remove_chunk)."""
     qa = assess_chunk_quality(chunk_text)
     if qa["quality_score"] < 0.2 and entity_count == 0 and relationship_count == 0:

@@ -45,11 +45,15 @@ def split_into_sentences(text: str) -> list[str]:
     return sentences
 
 
-def get_sentence_window(sentences: list[str], target_index: int, window_size: int = 5) -> str:
+# sentences kept on each side of the target sentence
+SENTENCE_WINDOW = 5
+
+
+def get_sentence_window(sentences: list[str], target_index: int) -> str:
     """core/sentence_chunker.py:68-110 (get_sentence_window)."""
     if not sentences:
         return ""
     target_index = max(0, min(target_index, len(sentences) - 1))
-    start_index = max(0, target_index - window_size)
-    end_index = min(len(sentences), target_index + window_size + 1)
+    start_index = max(0, target_index - SENTENCE_WINDOW)
+    end_index = min(len(sentences), target_index + SENTENCE_WINDOW + 1)
     return " ".join(sentences[start_index:end_index])

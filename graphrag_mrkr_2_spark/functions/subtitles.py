@@ -111,14 +111,20 @@ def _emit_srt_block(block: list, cues: list) -> None:
         cues.append((start, end, body))
 
 
-def parse_webvtt(text: str, strip_tags: bool = True) -> list:
+# Fixture and parser settings no product caller varies; tests patch them.
+WEBVTT_STRIP_TAGS = True
+MKV_SUBTITLE_CODEC = b"S_TEXT/UTF8"
+MKV_SUBTITLE_TRACK = 1
+
+
+def parse_webvtt(text: str) -> list:
     """WebVTT → ``[(start_ms, end_ms, cue_text), ...]``.
 
     Handles the WEBVTT header line (with optional trailing metadata),
     NOTE/STYLE/REGION blocks (skipped), optional cue identifiers, cue
     settings after the timing line, and voice/class markup
-    (``<v Name>``, ``<i>``, ``<c.x>``) stripped by default — the text is
-    the training payload, the styling is not."""
+    (``<v Name>``, ``<i>``, ``<c.x>``) stripped while ``WEBVTT_STRIP_TAGS``
+    — the text is the training payload, the styling is not."""
     lines = text.lstrip("﻿").splitlines()
     hdr = 0  # sniff_subtitle tolerates leading blank lines; match it here
     while hdr < len(lines) and not lines[hdr].strip():
@@ -160,7 +166,7 @@ def parse_webvtt(text: str, strip_tags: bool = True) -> list:
             body_lines.append(lines[i].rstrip("\r"))
             i += 1
         body = "\n".join(body_lines).strip()
-        if strip_tags:
+        if WEBVTT_STRIP_TAGS:
             body = _VTT_TAG.sub("", body)
         if body:
             cues.append((start, end, body))
@@ -224,16 +230,16 @@ def format_srt(cues) -> str:
     return "\n".join(blocks)
 
 
-def mux_mkv_subtitles(cues, codec: bytes = b"S_TEXT/UTF8",
-                      track_num: int = 1) -> bytes:
-    """Wrap cues into a minimal Matroska file with one subtitle track
-    (fixture/oracle path — ``mkv_subtitle_cues`` reads it back): each cue
-    a BlockGroup{Block, BlockDuration} so durations round-trip, one
-    cluster per cue (absolute time in the cluster base — in-block
-    relative timestamps are signed 16-bit), 1 ms TimestampScale.
-    ``track_num`` up to 127 exercises the all-ones vint edge (0xFF)."""
-    if not 1 <= int(track_num) <= 127:
-        raise ValueError("track_num must fit a 1-byte vint (1..127)")
+def mux_mkv_subtitles(cues) -> bytes:
+    """Wrap cues into a minimal Matroska file with one subtitle track of
+    codec ``MKV_SUBTITLE_CODEC`` (fixture/oracle path —
+    ``mkv_subtitle_cues`` reads it back): each cue a BlockGroup{Block,
+    BlockDuration} so durations round-trip, one cluster per cue (absolute
+    time in the cluster base — in-block relative timestamps are signed
+    16-bit), 1 ms TimestampScale. ``MKV_SUBTITLE_TRACK`` up to 127
+    exercises the all-ones vint edge (0xFF)."""
+    if not 1 <= int(MKV_SUBTITLE_TRACK) <= 127:
+        raise ValueError("track number must fit a 1-byte vint (1..127)")
     import struct
 
     from graphrag_mrkr_2_spark.functions.av1codec import (
@@ -249,10 +255,10 @@ def mux_mkv_subtitles(cues, codec: bytes = b"S_TEXT/UTF8",
         _el(0x4489, struct.pack(">d", float(total))),
     ]))
     tracks = _el(0x1654AE6B, _el(0xAE, b"".join([
-        _el(0xD7, _uint_payload(int(track_num))),
+        _el(0xD7, _uint_payload(int(MKV_SUBTITLE_TRACK))),
         _el(0x73C5, _uint_payload(1)),
         _el(0x83, _uint_payload(0x11)),       # TrackType: subtitle
-        _el(0x86, bytes(codec)),
+        _el(0x86, bytes(MKV_SUBTITLE_CODEC)),
     ])))
     # one Cluster PER CUE with the cluster base carrying the absolute
     # time: the in-block relative timestamp is a SIGNED 16-bit int, so a
@@ -262,7 +268,7 @@ def mux_mkv_subtitles(cues, codec: bytes = b"S_TEXT/UTF8",
     for start, end, text in cues:
         if start < 0:
             raise ValueError("negative cue start")
-        block = bytes([0x80 | int(track_num)]) + struct.pack(">h", 0) \
+        block = bytes([0x80 | int(MKV_SUBTITLE_TRACK)]) + struct.pack(">h", 0) \
             + b"\x00" + text.encode("utf-8")
         group = _el(0xA0, b"".join([          # BlockGroup
             _el(0xA1, block),                 # Block

@@ -324,35 +324,39 @@ def decode_tiff(data: bytes) -> np.ndarray:
     return px
 
 
-def encode_tiff(
-    pixels: np.ndarray, compression: str = "none", predictor: int = 1
-) -> bytes:
+# Encoder settings no product caller varies; tests patch them.
+TIFF_COMPRESSION = "none"
+TIFF_PREDICTOR = 1
+
+
+def encode_tiff(pixels: np.ndarray) -> bytes:
     """Encode (h, w, c∈{1,3,4}) uint8 to a little-endian single-strip TIFF.
-    ``compression``: 'none' or 'lzw' (TIFF §13, early-change widths);
-    ``predictor``: 1 (none) or 2 (horizontal differencing — the standard
-    LZW companion). Round-trip oracle for the decoder's compressed paths."""
+    ``TIFF_COMPRESSION``: 'none' or 'lzw' (TIFF §13, early-change widths);
+    ``TIFF_PREDICTOR``: 1 (none) or 2 (horizontal differencing — the
+    standard LZW companion). Round-trip oracle for the decoder's compressed
+    paths."""
     px = np.ascontiguousarray(pixels, dtype=np.uint8)
     if px.ndim == 2:
         px = px[:, :, None]
     h, w, spp = px.shape
     if spp not in (1, 3, 4):
         raise ValueError("encode_tiff expects 1, 3 or 4 channels")
-    if predictor == 2:
+    if TIFF_PREDICTOR == 2:
         diff = px.astype(np.int16)
         diff[:, 1:, :] -= px[:, :-1, :].astype(np.int16)
         body_px = (diff & 0xFF).astype(np.uint8)
-    elif predictor == 1:
+    elif TIFF_PREDICTOR == 1:
         body_px = px
     else:
-        raise ValueError(f"unsupported predictor {predictor}")
+        raise ValueError(f"unsupported predictor {TIFF_PREDICTOR}")
     body = body_px.tobytes()
-    if compression == "lzw":
+    if TIFF_COMPRESSION == "lzw":
         comp_tag = 5
         body = _tiff_lzw_encode(body)
-    elif compression == "none":
+    elif TIFF_COMPRESSION == "none":
         comp_tag = 1
     else:
-        raise ValueError(f"unsupported compression {compression!r}")
+        raise ValueError(f"unsupported compression {TIFF_COMPRESSION!r}")
     photometric = 1 if spp == 1 else 2
 
     entries = []
@@ -379,7 +383,7 @@ def encode_tiff(
         entry(258, 3, spp, long_(bits_off))
     entry(259, 3, 1, short(comp_tag))
     entry(262, 3, 1, short(photometric))
-    if predictor == 2:
+    if TIFF_PREDICTOR == 2:
         entry(317, 3, 1, short(2))
     entry(273, 4, 1, long_(data_off))
     entry(277, 3, 1, short(spp))

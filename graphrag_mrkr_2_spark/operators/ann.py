@@ -99,31 +99,31 @@ def hyperplane_signature(vec_col, planes: np.ndarray):
     return sig
 
 
-def hyperplane_buckets(df: DataFrame, dim: int, n_planes: int = 8) -> DataFrame:
-    planes = _hyperplanes(dim, n_planes)
+# hyperplanes per bucket signature and results per query of lsh_topk
+LSH_PLANES = 8
+LSH_TOPK = 5
+
+
+def hyperplane_buckets(df: DataFrame, dim: int) -> DataFrame:
+    planes = _hyperplanes(dim, LSH_PLANES)
     return df.withColumn("bucket", hyperplane_signature(F.col("embedding"), planes))
 
 
-def lsh_topk(
-    items: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 8,
-) -> DataFrame:
-    """ANN top-k: score only items sharing the query's hyperplane bucket.
+def lsh_topk(items: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
+    """ANN top-``LSH_TOPK``: score only items sharing the query's
+    hyperplane bucket.
 
     One shuffle keyed by bucket; recall < 1 by design (raise via fewer
     planes or multiprobe). At 10^12 scale add multiprobe neighbors of the
     bucket id (hamming-1 flips) — same join shape.
     """
-    bi = hyperplane_buckets(items, dim, n_planes).select(
+    bi = hyperplane_buckets(items, dim).select(
         "vec_id", F.col("embedding").alias("ivec"), "bucket"
     )
-    bq = hyperplane_buckets(queries, dim, n_planes).select(
+    bq = hyperplane_buckets(queries, dim).select(
         "query_id", F.col("embedding").alias("qvec"), "bucket"
     )
-    return _cosine_topk(bi.join(bq, "bucket"), k)
+    return _cosine_topk(bi.join(bq, "bucket"), LSH_TOPK)
 
 
 # ---------------------------------------------------------------------------

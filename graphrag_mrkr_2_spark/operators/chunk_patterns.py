@@ -180,22 +180,23 @@ def _suggestion_frame(
     )
 
 
-def chunk_suggestions(
-    chunks: DataFrame,
-    patterns: tuple[ChunkPattern, ...] | list[ChunkPattern] | None = None,
-    max_suggestions: int = 10,
-) -> DataFrame:
-    """Apply chunk patterns over the chunks table; one row per suggestion.
+# suggestions kept per document
+MAX_SUGGESTIONS = 10
+
+
+def chunk_suggestions(chunks: DataFrame) -> DataFrame:
+    """Apply the enabled BUILTIN_PATTERNS over the chunks table; one row per
+    suggestion.
 
     Output: (document_id, chunk_id, chunk_index, action, confidence,
     reasoning, pattern_name, related_chunk_ids array<string>) — the
     ChunkSuggestion.to_dict shape (chunk_pattern_learner.py:44-55), of
-    confidence at least 0.5, limited to ``max_suggestions`` per document in
+    confidence at least 0.5, limited to ``MAX_SUGGESTIONS`` per document in
     the reference's sort order
     (get_suggestions :117-124: confidence DESC, stable over pattern then
     chunk iteration order).
     """
-    pats = [p for p in (patterns if patterns is not None else BUILTIN_PATTERNS) if p.enabled]
+    pats = [p for p in BUILTIN_PATTERNS if p.enabled]
     src = chunks.select("document_id", "chunk_id", "content", "chunk_index")
 
     content = F.col("content")
@@ -358,6 +359,6 @@ def chunk_suggestions(
     )
     return (
         out.withColumn("_rank", F.row_number().over(rank_w))
-        .where(F.col("_rank") <= max_suggestions)
+        .where(F.col("_rank") <= MAX_SUGGESTIONS)
         .drop("_rank", "_pattern_idx")
     )

@@ -22,7 +22,7 @@ Spark-first re-architecture:
      aggregation per Traag et al. 2019, modularity objective, seeded
      deterministic; the same algorithm/objective as the reference's igraph
      community_leiden call). Giant components exceeding
-     ``max_component_size`` route to distributed weighted label propagation
+     ``MAX_COMPONENT_SIZE`` route to distributed weighted label propagation
      rather than OOMing an executor. A graph of at most
      graphalgo.LOCAL_EDGE_LIMIT edges is collected once and clustered on
      the driver by the same union-find and the same per-component kernel,
@@ -93,7 +93,13 @@ _MEMBERSHIP_SCHEMA = StructType(
 )
 
 
-def detect_communities(edges: DataFrame, max_component_size: int = 500_000) -> DataFrame:
+# Edge count above which a component is clustered by distributed label
+# propagation instead of the per-component kernel (calibration in
+# detect_communities' docstring).
+MAX_COMPONENT_SIZE = 500_000
+
+
+def detect_communities(edges: DataFrame) -> DataFrame:
     """G3 — CC then per-component Leiden modularity clustering of
     (src, dst, weight) edges.
 
@@ -102,17 +108,17 @@ def detect_communities(edges: DataFrame, max_component_size: int = 500_000) -> D
     id — no driver-side counters).
 
     A graph of at most graphalgo.LOCAL_EDGE_LIMIT edges (and at most
-    ``max_component_size``) is collected once and clustered on the driver:
+    ``MAX_COMPONENT_SIZE``) is collected once and clustered on the driver:
     the union-find of connected_components' local path groups the edges by
     component and the per-component kernel runs on each group, as the
     reference clusters its whole graph in one process. Larger graphs go
-    through connected_components, a join and one mapInPandas stage that
+    through graphalgo.star_components, a join and one mapInPandas stage that
     walks the component runs of each task (``_cluster_sorted``) and runs
     the same kernel; both paths emit the same rows.
 
     Components small enough to fit one executor are clustered in that
     stage (modularity — the reference's semantics). Components whose
-    edge count exceeds ``max_component_size`` — at web scale exactly the
+    edge count exceeds ``MAX_COMPONENT_SIZE`` — at web scale exactly the
     giant component that matters most — are routed to distributed weighted
     label propagation (graphalgo.label_propagation) instead of being
     collapsed into a single community, so a giant component still yields
@@ -121,7 +127,7 @@ def detect_communities(edges: DataFrame, max_component_size: int = 500_000) -> D
 
     The (src, dst, weight) edges are pinned once and counted first. A
     component's edges are a subset of all edges, so when the total is at or
-    below ``max_component_size`` no component can be giant and the per-
+    below ``MAX_COMPONENT_SIZE`` no component can be giant and the per-
     component size aggregate and its probe job are skipped; only above the
     cap does the giant probe run (and LPA, if some component exceeds it).
 
@@ -156,23 +162,24 @@ def detect_communities(edges: DataFrame, max_component_size: int = 500_000) -> D
         .observe(obs, F.count(F.lit(1)).alias("n"))
     )
     n_edges = obs.get["n"]
-    # a limit of 0 disables the driver path, as local_threshold=0 does CC's
+    # a limit of 0 disables the driver path, as it does CC's
     limit = graphalgo.LOCAL_EDGE_LIMIT
-    if limit > 0 and n_edges <= min(max_component_size, limit):
+    if limit > 0 and n_edges <= min(MAX_COMPONENT_SIZE, limit):
         return _cluster_on_driver(e.collect(), e.sparkSession)
 
-    cc = graphalgo.connected_components(e, "src", "dst")
+    # e is already pinned and counted: run the star loop on it directly
+    cc = graphalgo.star_components(e, "src", "dst")
     tagged = e.join(cc.withColumnRenamed("node", "src"), "src")
 
     # a component's edges are a subset of all edges, so at or below the cap
     # no component can be giant: skip the size aggregate and its probe job
-    if n_edges <= max_component_size:
+    if n_edges <= MAX_COMPONENT_SIZE:
         return _cluster_sorted(tagged)
 
     comp_sizes = tagged.groupBy("component").agg(F.count(F.lit(1)).alias("n_edges"))
     tagged = tagged.join(
         comp_sizes.select(
-            F.col("component"), (F.col("n_edges") > max_component_size).alias("is_giant")
+            F.col("component"), (F.col("n_edges") > MAX_COMPONENT_SIZE).alias("is_giant")
         ),
         "component",
     )
@@ -185,7 +192,7 @@ def detect_communities(edges: DataFrame, max_component_size: int = 500_000) -> D
     # `giant`: the condition is identical (a giant exists iff some component
     # exceeds the cap) and the lineage is one aggregate instead of
     # aggregate + two joins + filter (r8).
-    if comp_sizes.where(F.col("n_edges") > max_component_size).limit(1).isEmpty():
+    if comp_sizes.where(F.col("n_edges") > MAX_COMPONENT_SIZE).limit(1).isEmpty():
         return small_mem
 
     lpa = graphalgo.label_propagation(giant, "src", "dst", "weight")

@@ -131,13 +131,14 @@ def char_ngram_tokens(
     )
 
 
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact dedup groups: md5(text) → group size + representative (min id)."""
+def exact_duplicates(df: DataFrame) -> DataFrame:
+    """Exact dedup groups of (doc_id, text): md5(text) → group size +
+    representative (min id)."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
+        df.groupBy(F.md5(F.col("text")).alias("content_hash"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(F.col(id_col)).alias("representative"),
+            F.min(F.col("doc_id")).alias("representative"),
         )
         .where(F.col("n_docs") > 1)
     )
@@ -297,9 +298,13 @@ def _xxhash64_rehash_matrix(h_signed: np.ndarray, num_hashes: int) -> np.ndarray
     return _xxh64_hash_int(_xxh64_hash_long(h_signed)[:, None], np.arange(num_hashes))
 
 
-def minhash_signatures(df: DataFrame, num_hashes: int = 64) -> DataFrame:
-    """k-permutation MinHash signature of (doc_id, text) over word 3-gram
-    shingles: h_i(s) = xxhash64(xxhash64(s), i).
+# MinHash signature length: minhash_lsh_pairs bands it as 16 bands x 4 rows
+MINHASH_HASHES = 64
+
+
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """``MINHASH_HASHES``-permutation MinHash signature of (doc_id, text)
+    over word 3-gram shingles: h_i(s) = xxhash64(xxhash64(s), i).
 
     Shingle construction and the per-shingle string hash stay JVM-side
     (whole-stage codegen, one compact-row exchange — see shingle_tokens);
@@ -316,6 +321,8 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 64) -> DataFrame:
     row order end to end).
     """
     id_type = df.schema["doc_id"].dataType.simpleString()
+    # bound here, on the driver: the UDF closure carries the value to workers
+    num_hashes = MINHASH_HASHES
     # distinct=False: min is duplicate-insensitive, and the non-distinct
     # path preserves the window's doc-contiguous row order the group walk
     # below depends on (see shingle_tokens' order contract)
@@ -390,38 +397,33 @@ def band_pairs(buckets: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    verify: bool = True,
-) -> DataFrame:
-    """Near-dup pairs of (doc_id, text) via banded MinHash-LSH, optionally
-    verified exactly.
-
-    64 hashes in 16 bands of 4 rows; candidate pairs share ≥1 band
-    bucket (equi-join on (band, xxhash64(band slice)) — one shuffle keyed by
-    bucket, AQE handles bucket skew). With verify=True candidates are
-    re-checked with exact Jaccard ≥ τ, making the output identical to
-    ngram_jaccard_pairs up to LSH recall.
-    """
+def _minhash_candidates(df: DataFrame) -> DataFrame:
+    """(doc1, doc2) candidate pairs of (doc_id, text): 64 hashes in 16
+    bands of 4 rows; candidate pairs share ≥1 band bucket (equi-join on
+    (band, xxhash64(band slice)) — one shuffle keyed by bucket, AQE handles
+    bucket skew)."""
     # materialize the signatures once: the band self-join references the
     # signature subtree from BOTH sides, and only the bottom exchange is
     # runtime-reused — the window + k-fold re-hash above it executed twice
     # (r8 plan audit; 2.4-2.7 s -> 1.9 s at sf0.1 with the checkpoint).
     # The checkpointed rows are tiny: (doc, k longs).
     sigs = pin(minhash_signatures(df))
-
-    candidates = band_pairs(_minhash_buckets(sigs, "doc", 16, 4)).select(
+    return band_pairs(_minhash_buckets(sigs, "doc", 16, 4)).select(
         F.col("id1").alias("doc1"), F.col("id2").alias("doc2")
     )
-    if not verify:
-        return candidates
 
+
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Near-dup pairs of (doc_id, text) via banded MinHash-LSH, verified
+    exactly: the ``_minhash_candidates`` are re-checked with exact Jaccard
+    ≥ τ, making the output identical to ngram_jaccard_pairs up to LSH
+    recall.
+    """
     # verify only candidate docs: semi-join before shingling so the exact
     # jaccard pass re-shingles O(candidates) docs, not the whole corpus.
     # Candidates feed two consumers (the id set and the pair join) —
     # materialize once or the banding path runs twice.
-    candidates = pin(candidates)
+    candidates = pin(_minhash_candidates(df))
     cand_ids = (
         candidates.select(F.col("doc1").alias("doc_id"))
         .unionByName(candidates.select(F.col("doc2").alias("doc_id")))
@@ -606,46 +608,29 @@ def _multiband_hyperplane_buckets(
     )
 
 
-def embedding_near_dupes(
-    df: DataFrame,
-    threshold: float = 0.95,
-    method: str = "lsh",
-) -> DataFrame:
+def embedding_near_dupes(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Cosine-similar pairs (id1 < id2, cosine >= τ) of (vec_id, embedding).
 
-    method="lsh" (DEFAULT — the scale path): banded random-hyperplane
-    buckets generate candidates (equi-join on (band, bucket), one shuffle
-    keyed by bucket, AQE covers bucket skew), then every candidate is
-    EXACT-verified with the JVM cosine fold — so false positives are
-    impossible and recall is the only approximation. At τ=0.95 its 12 bands
-    × 6 planes (seed 7) give P(miss) = (1 - p^6)^12 ≈ 1e-4 for a pair at
-    exactly τ (p = 1 - acos(τ)/π ≈ 0.899), and less for anything closer.
-
-    method="exact": the quadratic self-join — the correctness baseline for
-    tests and small n (tests assert lsh ≡ exact on planted fixtures).
+    Banded random-hyperplane buckets generate candidates (equi-join on
+    (band, bucket), one shuffle keyed by bucket, AQE covers bucket skew),
+    then every candidate is EXACT-verified with the JVM cosine fold — so
+    false positives are impossible and recall is the only approximation.
+    At τ=0.95 its 12 bands × 6 planes (seed 7) give P(miss) = (1 - p^6)^12
+    ≈ 1e-4 for a pair at exactly τ (p = 1 - acos(τ)/π ≈ 0.899), and less
+    for anything closer. Tests compare it with a quadratic self-join on
+    planted fixtures.
     """
     from .ann import _as_double, _dot, _norm
 
     v = df.select(F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec"))
-    if method == "exact":
-        a, b = v.alias("a"), v.alias("b")
-        pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            F.col("a.vec").alias("v1"),
-            F.col("b.vec").alias("v2"),
-        )
-    elif method == "lsh":
-        # checkpoint: the banded self-join reads this from both sides —
-        # without it the hyperplane-projection UDF ran twice per call (r8)
-        bb = pin(_multiband_hyperplane_buckets(df, "vec_id", 12, 6))
-        pairs = (
-            band_pairs(bb)
-            .join(v.select(F.col("id").alias("id1"), F.col("vec").alias("v1")), "id1")
-            .join(v.select(F.col("id").alias("id2"), F.col("vec").alias("v2")), "id2")
-        )
-    else:
-        raise ValueError(f"unknown method {method!r} (use 'lsh' or 'exact')")
+    # checkpoint: the banded self-join reads this from both sides —
+    # without it the hyperplane-projection UDF ran twice per call (r8)
+    bb = pin(_multiband_hyperplane_buckets(df, "vec_id", 12, 6))
+    pairs = (
+        band_pairs(bb)
+        .join(v.select(F.col("id").alias("id1"), F.col("vec").alias("v1")), "id1")
+        .join(v.select(F.col("id").alias("id2"), F.col("vec").alias("v2")), "id2")
+    )
     cos = _dot(F.col("v1"), F.col("v2")) / (_norm(F.col("v1")) * _norm(F.col("v2")))
     return pairs.select("id1", "id2", cos.alias("cosine")).where(F.col("cosine") >= threshold)
 

@@ -12,12 +12,19 @@ Beyond", SoCC'14) as a DataFrame loop:
   small-star: link every *smaller-or-equal* neighbor (and u) to the minimum.
 
 Each round is two hash aggregations + a join; converges in O(log n) rounds
-even on path graphs. Works on any orderable id type (we use the node id
-strings directly — no global re-indexing shuffle needed). Every round's
-edge list is pinned with ``session.pin`` to truncate lineage (the
-convergence check is an action, so an unpinned loop would recompute the
-whole upstream plan each round); ``pin``'s docstring says when a pin
+even on path graphs (``star_components``). Works on any orderable id type
+(we use the node ids directly — no global re-indexing shuffle needed), on
+both paths: the driver path types its output from the input id column.
+Every round's edge list is pinned with ``session.pin`` to truncate lineage
+(the convergence check is an action, so an unpinned loop would recompute
+the whole upstream plan each round); ``pin``'s docstring says when a pin
 survives a lost executor.
+
+``connected_components`` picks the path per call: an edge list of at most
+``LOCAL_EDGE_LIMIT`` rows (read when called, so tests can patch it) is
+collected once and solved by union-find on the driver; larger ones run
+``star_components``. Callers that already know their graph is large call
+``star_components`` directly.
 """
 
 from __future__ import annotations
@@ -25,6 +32,8 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructField, StructType
 
 from ..session import pin
 
@@ -99,9 +108,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-# Edge lists of at most this many rows are handled on the driver after one
-# collect: connected_components' default ``local_threshold`` and the gate of
-# communities.detect_communities' driver path.
+# Inputs of at most this many rows are handled on the driver after one
+# collect: the gate of connected_components', resolution.entity_mapping's
+# and communities.detect_communities' driver paths. 0 disables all three.
 LOCAL_EDGE_LIMIT = 100_000
 
 
@@ -148,26 +157,24 @@ def _union_find(pairs) -> dict[str, str]:
     return {n: find(n) for n in list(parent)}
 
 
-def _local_components_rows(rows, spark) -> DataFrame:
-    """Driver-side union-find over already-collected (u, v) rows.
+def root_relation(spark, keys: list, roots: dict, field: StructField, names: tuple) -> DataFrame:
+    """(key, root) rows for every key, root = ``roots.get(key, key)``, both
+    columns typed as the input id ``field`` and named ``names``.
 
-    The alternating-star loop costs ~10-20 Spark jobs of fixed scheduling
-    latency — pure waste on a graph that fits in one collect. The result is
-    the same (node, component=min id) mapping the symmetric-distinct loop
-    computes.
-
-    The mapping is handed to Spark as a pyarrow Table, so it plans as a
-    LocalRelation (also when empty): downstream joins read it in the JVM. A
-    Python list would go through a PythonRDD and start a Python-worker stage
-    on every read; an empty pandas frame falls back to that same path."""
-    comp = _union_find((r["u"], r["v"]) for r in rows)
+    The driver paths' one way back into Spark: the rows go over as a
+    pyarrow Table, so the frame plans as a LocalRelation (also when empty)
+    and downstream joins read it in the JVM. A Python list would go through
+    a PythonRDD and start a Python-worker stage on every read; an empty
+    pandas frame falls back to that same path."""
+    arrow_type = to_arrow_type(field.dataType)
     table = pa.table(
         {
-            "node": pa.array(list(comp), pa.string()),
-            "component": pa.array(list(comp.values()), pa.string()),
+            names[0]: pa.array(keys, arrow_type),
+            names[1]: pa.array([roots.get(k, k) for k in keys], arrow_type),
         }
     )
-    return spark.createDataFrame(table)
+    schema = StructType([StructField(c, field.dataType, field.nullable) for c in names])
+    return spark.createDataFrame(table, schema=schema)
 
 
 def label_propagation(
@@ -261,53 +268,62 @@ def label_propagation(
     return labels
 
 
-def connected_components(
-    edges: DataFrame,
-    src_col: str = "u",
-    dst_col: str = "v",
-    local_threshold: int = LOCAL_EDGE_LIMIT,
-) -> DataFrame:
+def connected_components(edges: DataFrame, src_col: str = "u", dst_col: str = "v") -> DataFrame:
     """Edge list → (node, component) with component = min node id (orderable).
 
     Input may be directed/undirected/duplicated; isolated nodes (no edges)
     are the caller's concern (left-join the node table afterwards and
     coalesce(component, node)).
 
-    ``local_threshold``: edge lists at or below this size are solved with
-    driver-side union-find (one collect) instead of the distributed loop —
-    the loop's per-iteration job latency dwarfs the work for small graphs.
-    The size is the count of RAW input rows, as given: directed, possibly
-    duplicated, not symmetrized or deduplicated first (so an undirected
-    graph supplied in both directions counts each edge twice). The local
-    result is an Arrow-built local relation, so reading it starts no
-    Python-worker stage. Set 0 to force the distributed path (tests do).
-    At 10^12-document scale the global match graph far exceeds any sane
-    threshold, so the large-star/small-star path is the one that runs.
-
-    The distributed loop runs at most 20 rounds, and every round is
-    pinned: the loop's convergence check is an action, so without
-    truncation each round would recompute the whole upstream lineage (and
-    the plan would double per round).
+    Edge lists of at most ``LOCAL_EDGE_LIMIT`` rows (read at call time; 0
+    disables the driver path) are solved with driver-side union-find after
+    one collect instead of the distributed loop — the loop's per-iteration
+    job latency dwarfs the work for small graphs. The size is the count of
+    RAW input rows, as given: directed, possibly duplicated, not
+    symmetrized or deduplicated first (so an undirected graph supplied in
+    both directions counts each edge twice). The local result is an
+    Arrow-built local relation typed as the input id column, so reading it
+    starts no Python-worker stage. Larger edge lists run
+    ``star_components``: at 10^12-document scale the global match graph far
+    exceeds any sane limit, so the large-star/small-star path is the one
+    that runs.
     """
     raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    if local_threshold > 0:
-        # checkpoint the RAW edges (one evaluation of the possibly
-        # expensive lineage) and count them in the same pass through an
-        # Observation, then collect the materialized blocks. The r1-r7 shape
-        # symmetrized + distinct-exchanged BEFORE the checkpoint, paying a
-        # full explode+shuffle+dedup even when the graph then fit in one
-        # collect; union-find is insensitive to direction/duplicates, so
-        # feeding it the raw rows yields the identical (node, component)
-        # mapping. (An incremental limit-probe was tried first and rejected:
-        # CollectLimit's scale-up rounds cost more scheduling latency than
-        # the count they avoid.)
-        obs = Observation()
-        raw_ckpt = pin(raw.observe(obs, F.count(F.lit(1)).alias("n")))
-        if obs.get["n"] <= local_threshold:
-            return _local_components_rows(raw_ckpt.collect(), edges.sparkSession)
-        e = pin(_symmetric(raw_ckpt))
-    else:
-        e = pin(_symmetric(raw))
+    limit = LOCAL_EDGE_LIMIT
+    if limit <= 0:
+        return star_components(raw)
+    # checkpoint the RAW edges (one evaluation of the possibly expensive
+    # lineage) and count them in the same pass through an Observation, then
+    # collect the materialized blocks. The r1-r7 shape symmetrized +
+    # distinct-exchanged BEFORE the checkpoint, paying a full
+    # explode+shuffle+dedup even when the graph then fit in one collect;
+    # union-find is insensitive to direction/duplicates, so feeding it the
+    # raw rows yields the identical (node, component) mapping. (An
+    # incremental limit-probe was tried first and rejected: CollectLimit's
+    # scale-up rounds cost more scheduling latency than the count they
+    # avoid.)
+    obs = Observation()
+    raw_ckpt = pin(raw.observe(obs, F.count(F.lit(1)).alias("n")))
+    if obs.get["n"] > limit:
+        return star_components(raw_ckpt)
+    comp = _union_find((r["u"], r["v"]) for r in raw_ckpt.collect())
+    return root_relation(
+        edges.sparkSession, list(comp), comp, raw.schema["u"], ("node", "component")
+    )
+
+
+def star_components(edges: DataFrame, src_col: str = "u", dst_col: str = "v") -> DataFrame:
+    """Edge list → (node, component), component = min node id, by the
+    distributed large-star/small-star loop (Kiveris et al.), whatever the
+    edge count.
+
+    The loop runs at most 20 rounds, and every round is pinned: the loop's
+    convergence check is an action, so without truncation each round would
+    recompute the whole upstream lineage (and the plan would double per
+    round).
+    """
+    raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+    e = pin(_symmetric(raw))
     prev = None
     for _ in range(20):
         e = _large_star(e)

@@ -262,9 +262,15 @@ def _auto_image_decoder():
     return _AUTO_IMAGE_DECODER
 
 
+# Settings no product caller varies; tests patch them. Each operator binds
+# its value on the driver, so the UDF closure carries it to the workers.
+IMAGE_FEATURE_BINS = 16  # luminance histogram bins of image_features
+AUDIO_STRICT = False  # audio_features raises on undecodable audio
+OCR_ENABLED = True  # extract_image_text emits rows (image_loader's switch)
+
+
 def image_features(
     media: DataFrame,
-    dim: int = 16,
     strict: bool = False,
     decoder=None,
 ) -> DataFrame:
@@ -283,7 +289,7 @@ def image_features(
     only through an injected ``decoder`` (NativeImageDecoder routes them to
     the system libheif, bit-exact per tests/test_heifcodec.py); without
     one, strict=True raises and strict=False falls back to the
-    deterministic fake. Corrupt or
+    deterministic fake. The feature has ``IMAGE_FEATURE_BINS`` bins. Corrupt or
     unsupported-variant payloads of a RECOGNIZED container (lossless
     JPEG, truncated files) quarantine to the same fake fallback
     (or re-raise under strict) so one bad file can't fail a 100 TB job.
@@ -300,6 +306,7 @@ def image_features(
     """
     from graphrag_mrkr_2_spark.functions.imagecodecs import decode_image, sniff_image
 
+    dim = IMAGE_FEATURE_BINS
     if decoder is None:
         # prefer-native default (bit-identical jpeg/webp only; see
         # _auto_image_decoder). ``decoder=False`` forces the pure kernels
@@ -369,10 +376,7 @@ AUDIO_FEATURE_SCHEMA = StructType(
 )
 
 
-def audio_features(
-    media: DataFrame,
-    strict: bool = False,
-) -> DataFrame:
+def audio_features(media: DataFrame) -> DataFrame:
     """Decode → featurize audio via mapInPandas (r4).
 
     RIFF/WAVE PCM payloads decode FOR REAL through the pure-stdlib kernel
@@ -380,11 +384,13 @@ def audio_features(
     samples: RMS amplitude (mean over channels, int16-normalized) and
     zero-crossing rate of channel 0, plus the container's true sample
     rate / channel count / duration. Compressed audio (MP3/AAC/Opus — the
-    codec seam, like JPEG for images): strict=True raises
-    NotImplementedError, strict=False emits metadata-derived fakes so the
+    codec seam, like JPEG for images): with ``AUDIO_STRICT`` it raises
+    NotImplementedError, otherwise it emits metadata-derived fakes so the
     Arrow plumbing stays testable.
     """
     from graphrag_mrkr_2_spark.functions.audiocodecs import decode_wav, sniff_audio
+
+    strict = AUDIO_STRICT
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1286,7 +1292,6 @@ IMAGE_TEXT_SCHEMA = StructType(
 def extract_image_text(
     media: DataFrame,
     ocr=None,
-    enable_ocr: bool = True,
     strict: bool = False,
     passthrough_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -1300,7 +1305,7 @@ def extract_image_text(
     language) -> str | None`` (external tesseract-class model, same seam
     category as the LLM callable).  Contract mirrored from the reference:
 
-    - ``enable_ocr=False`` → no rows at all (loader returns None when OCR
+    - ``OCR_ENABLED`` false → no rows at all (loader returns None when OCR
       is disabled, image_loader.py:47-49);
     - no extractable text → ``content`` NULL with analysis metadata intact
       (no-text→None contract, image_loader.py:56-58);
@@ -1320,7 +1325,7 @@ def extract_image_text(
         list(IMAGE_TEXT_SCHEMA.fields)
         + [media.schema[c] for c in extra]
     )
-    if not enable_ocr:
+    if not OCR_ENABLED:
         return media.select(
             F.col("media_id").cast("string").alias("media_id")
         ).limit(0).select(

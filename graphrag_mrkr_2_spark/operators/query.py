@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from ..functions import sentences as _sentences
 from ..session import pin
 
 # ---------------------------------------------------------------------------
@@ -167,27 +168,27 @@ def weighted_fuse(
 # ---------------------------------------------------------------------------
 
 
-def find_scored_paths(
-    edges: DataFrame,
-    nodes: DataFrame,
-    seed_ids: list[str],
-    max_hops: int = 2,
-    beam_size: int = 8,
-    min_strength: float = 0.0,
-) -> DataFrame:
+# Q5 search limits, shared by find_scored_paths and beam_expand
+MAX_HOPS = 2
+BEAM_SIZE = 8
+MIN_STRENGTH = 0.0
+
+
+def find_scored_paths(edges: DataFrame, nodes: DataFrame, seed_ids: list[str]) -> DataFrame:
     """Q5 exact reference semantics (core/graph_db.py:4788-4967
     find_scored_paths):
 
     - a path starts at each seed with score = the seed's importance_score;
-    - each hop expands the path's LAST entity over undirected edges with
-      strength >= min_strength, excluding nodes already on that path
-      (per-path visited set — an array column, bounded by max_hops+1);
-    - per path, only the top ``beam_size*2`` candidate edges by strength are
+    - each hop (at most ``MAX_HOPS``) expands the path's LAST entity over
+      undirected edges with strength >= ``MIN_STRENGTH``, excluding nodes
+      already on that path (per-path visited set — an array column, bounded
+      by MAX_HOPS+1);
+    - per path, only the top ``BEAM_SIZE*2`` candidate edges by strength are
       considered (the reference's ORDER BY r.strength DESC LIMIT beam*2;
       ties broken by target id for determinism where Neo4j is arbitrary);
     - new_score = 0.5*path_score + 0.3*strength + 0.2*target_importance
       (:4935-4940);
-    - after each hop, a GLOBAL top-``beam_size`` prune over all paths
+    - after each hop, a GLOBAL top-``BEAM_SIZE`` prune over all paths
       (:4950-4952) — per query, not per seed;
     - a hop that yields no expansions terminates the loop with an EMPTY
       result: the reference assigns current_paths = next_paths[:beam_size]
@@ -196,7 +197,7 @@ def find_scored_paths(
       and a dead-end hop (even from an unexpandable seed) returns nothing.
 
     Returns (path array<string>, last, hop, score) sorted by score desc.
-    Each hop is one join + two windows; per-hop frontier is <= beam_size
+    Each hop is one join + two windows; per-hop frontier is <= BEAM_SIZE
     rows, so the loop's cost is dominated by the edge probe join — at scale,
     broadcast the tiny frontier against the bucketed edge table.
     """
@@ -213,7 +214,7 @@ def find_scored_paths(
                 F.col("strength").cast("double").alias("w"),
             )
         )
-        .where(F.col("w") >= min_strength)
+        .where(F.col("w") >= MIN_STRENGTH)
     )
     imp = nodes.select(
         F.col("entity_id").alias("b"),
@@ -234,7 +235,7 @@ def find_scored_paths(
     )
 
     result = frontier
-    for hop in range(1, max_hops + 1):
+    for hop in range(1, MAX_HOPS + 1):
         cand = (
             frontier.join(sym, frontier["last"] == sym["a"])
             .where(~F.array_contains(F.col("path"), F.col("b")))
@@ -243,7 +244,7 @@ def find_scored_paths(
         )
         w_path = Window.partitionBy("path").orderBy(F.desc("w"), F.asc("b"))
         capped = cand.withColumn("cand_rn", F.row_number().over(w_path)).where(
-            F.col("cand_rn") <= beam_size * 2
+            F.col("cand_rn") <= BEAM_SIZE * 2
         )
         expanded = capped.select(
             F.concat(F.col("path"), F.array(F.col("b"))).alias("path"),
@@ -256,7 +257,7 @@ def find_scored_paths(
         w_global = Window.orderBy(F.desc("score"), F.asc(F.to_json(F.struct("path"))))
         pruned = pin(
             expanded.withColumn("rn", F.row_number().over(w_global))
-            .where(F.col("rn") <= beam_size)
+            .where(F.col("rn") <= BEAM_SIZE)
             .drop("rn")
         )
         # reference order (:4950-4956): frontier becomes the pruned set FIRST,
@@ -269,17 +270,13 @@ def find_scored_paths(
     return result.orderBy(F.desc("score"), F.asc(F.to_json(F.struct("path"))))
 
 
-def beam_expand(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int = 2,
-    beam_size: int = 8,
-) -> DataFrame:
+def beam_expand(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Frontier-expansion variant of Q5 (engine extension, NOT the
     reference's path semantics — use find_scored_paths for exact parity).
 
     seeds: (seed_id). Returns (seed_id, node, hop, path_score) — per seed,
-    each hop keeps the top ``beam_size`` frontier nodes by accumulated path
+    each of ``MAX_HOPS`` hops keeps the top ``BEAM_SIZE`` frontier nodes by
+    accumulated path
     score (product of non-negative edge strengths), expanding edges in both
     directions.
     Useful as a retrieval expander when per-node reach matters more than
@@ -301,7 +298,7 @@ def beam_expand(
         F.col("seed_id"), F.col("seed_id").alias("node"), F.lit(0).alias("hop"), F.lit(1.0).alias("path_score")
     )
     result = frontier
-    for hop in range(1, max_hops + 1):
+    for hop in range(1, MAX_HOPS + 1):
         expanded = (
             frontier.join(sym, frontier["node"] == sym["a"])
             .select(
@@ -321,7 +318,7 @@ def beam_expand(
                       (F.col("node") == F.col("seen")) & (best["seed_id"] == result["seed_id"]),
                       "left_anti")
             .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= beam_size)
+            .where(F.col("rn") <= BEAM_SIZE)
             .drop("rn")
         )
         result = result.unionByName(frontier.select("seed_id", "node", "hop", "path_score"))
@@ -366,13 +363,14 @@ def split_sentences(chunks: DataFrame) -> DataFrame:
     )
 
 
-def sentence_windows(sentences: DataFrame, window_size: int = 5) -> DataFrame:
-    """±window sentence context via collect over a bounded window frame —
-    the lag/lead expansion of core/graph_db.py:1918-1991."""
+def sentence_windows(sentences: DataFrame) -> DataFrame:
+    """±``sentences.SENTENCE_WINDOW`` sentence context via collect over a
+    bounded window frame — the lag/lead expansion of
+    core/graph_db.py:1918-1991."""
     w = (
         Window.partitionBy("chunk_id")
         .orderBy("sentence_index")
-        .rowsBetween(-window_size, window_size)
+        .rowsBetween(-_sentences.SENTENCE_WINDOW, _sentences.SENTENCE_WINDOW)
     )
     return sentences.withColumn(
         "window_text", F.array_join(F.collect_list("sentence").over(w), " ")
@@ -469,19 +467,23 @@ def expand_query_terms(
 # ---------------------------------------------------------------------------
 
 
+# graph expansion limits: seed chunks per query and the enhanced list's
+# length per query
+GRAPH_MAX_SEEDS = 3
+GRAPH_TOTAL_CAP = 10
+
+
 def graph_expand_chunks(
     retrieved: DataFrame,
     similar_edges: DataFrame,
     chunk_docs: DataFrame,
-    max_seeds: int = 3,
-    total_cap: int = 10,
 ) -> DataFrame:
     """Graph-based context expansion (rag/nodes/graph_reasoning.py:14-94) of
     the (query_id, chunk_id, rank) ``retrieved`` rows: from each query's
-    top ``max_seeds`` retrieved chunks, pull chunks reachable over
+    top ``GRAPH_MAX_SEEDS`` retrieved chunks, pull chunks reachable over
     SIMILAR_TO edges (depth 1-2) and HAS_CHUNK document
     siblings (depth 2: chunk → its document → sibling chunks), skip chunks
-    already retrieved, and cap the enhanced list at ``total_cap`` rows per
+    already retrieved, and cap the enhanced list at ``GRAPH_TOTAL_CAP`` rows per
     query (originals always kept; expansions fill the remainder).
 
     Returns (query_id, chunk_id, rank, is_expansion, seed_chunk, distance):
@@ -493,7 +495,7 @@ def graph_expand_chunks(
     the (pre-bucketed) edge tables; the cap is a per-query window. No
     driver loops — thousands of queries expand in one plan.
     """
-    seeds = retrieved.where(F.col("rank") <= max_seeds).select(
+    seeds = retrieved.where(F.col("rank") <= GRAPH_MAX_SEEDS).select(
         F.col("query_id"), F.col("chunk_id").alias("seed"), F.col("rank").alias("seed_rank")
     )
 
@@ -552,7 +554,7 @@ def graph_expand_chunks(
         .withColumn("__rn_seed", F.row_number().over(w_seed))
         .join(F.broadcast(n_orig), "query_id")
         .where(
-            (F.col("__rn") <= F.greatest(F.lit(total_cap) - F.col("n_orig"), F.lit(0)))
+            (F.col("__rn") <= F.greatest(F.lit(GRAPH_TOTAL_CAP) - F.col("n_orig"), F.lit(0)))
             | (F.col("__rn_seed") == 1)
         )
         .withColumn("__rn", F.row_number().over(w_fill))

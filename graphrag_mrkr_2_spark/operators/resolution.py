@@ -27,11 +27,8 @@ Pipeline:
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import StructField, StructType
 
 from ..session import pin
 from . import graphalgo
@@ -304,9 +301,10 @@ def _map_on_driver(proj: DataFrame, threshold: float, num_hashes: int, bands: in
       Spark path scores every pair of their rows;
     - matches are clustered by graphalgo._union_find (min id per component).
 
-    Every distinct id, null included, gets a row. The mapping is an
-    Arrow-built LocalRelation, as connected_components' local path returns,
-    so reading it starts no Python-worker stage."""
+    Every distinct id, null included, gets a row. The mapping is
+    graphalgo.root_relation's Arrow-built LocalRelation, as
+    connected_components' local path returns, so reading it starts no
+    Python-worker stage."""
     rows = proj.collect()
     # null ids never pair: the band join's id1 < id2 is null-rejecting.
     # Sorted, so index order is id order: i < j means id1 < id2
@@ -350,18 +348,9 @@ def _map_on_driver(proj: DataFrame, threshold: float, num_hashes: int, bands: in
         comp = graphalgo._union_find((ids[i[k]], ids[j[k]]) for k in hits)
 
     keys = list(dict.fromkeys(r["id"] for r in rows))
-    field = proj.schema["id"]
-    arrow_type = to_arrow_type(field.dataType)
-    table = pa.table(
-        {
-            "entity_id": pa.array(keys, arrow_type),
-            "canonical_id": pa.array([comp.get(k, k) for k in keys], arrow_type),
-        }
+    return graphalgo.root_relation(
+        proj.sparkSession, keys, comp, proj.schema["id"], ("entity_id", "canonical_id")
     )
-    schema = StructType(
-        [StructField(c, field.dataType, field.nullable) for c in ("entity_id", "canonical_id")]
-    )
-    return proj.sparkSession.createDataFrame(table, schema=schema)
 
 
 def _band_candidates(sig: np.ndarray, bands: int) -> tuple[np.ndarray, np.ndarray]:

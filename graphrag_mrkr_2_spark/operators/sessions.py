@@ -99,9 +99,9 @@ _SESSION_STATE = StructType(
 )
 
 
-def sessionize_stream(events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Streaming sessionization of (user_id, ts, value) events via
-    applyInPandasWithState.
+    applyInPandasWithState, at a gap of ``DEFAULT_GAP_SECONDS``.
 
     Emits a session row when a later event CLOSES it (gap exceeded), i.e.
     exactly the sessions the batch twin reports minus each user's final
@@ -109,6 +109,8 @@ def sessionize_stream(events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS)
     lives in per-user state (one constant-size tuple) until more data or a
     state timeout policy flushes it.
     """
+    # bound here, on the driver: the UDF closure carries the value to workers
+    gap_seconds = DEFAULT_GAP_SECONDS
 
     def _update(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         (user,) = key

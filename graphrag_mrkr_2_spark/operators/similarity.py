@@ -12,11 +12,12 @@ Reference semantics:
   over entity embeddings, skipping identical (name, type) pairs, MERGE
   SIMILAR_TO {similarity}.
 
-Spark shape: a within-document self-join is shuffle-partitioned by
+Spark shape: J1 is one NumPy gram matrix per document after a shuffle by
 document_id (docs are small → no skew blowup); the global entity variant is
 quadratic and therefore gated behind banded random-hyperplane LSH
 (dedup._multiband_hyperplane_buckets → dedup.band_pairs) — at 10^12 docs J1
-stays per-doc (linear), J2 runs bucketed.
+stays per-doc (linear), J2 runs bucketed. The within-document self-join and
+the entity crossJoin are test oracles (tests/helpers.py).
 """
 
 from __future__ import annotations
@@ -45,49 +46,6 @@ def with_embeddings(df: DataFrame, text_col: str = "content") -> DataFrame:
     return df.withColumn("embedding", _embed(F.col(text_col)))
 
 
-def chunk_similarity_edges(
-    chunks: DataFrame,
-    threshold: float = 0.7,
-    max_connections: int = 5,
-) -> DataFrame:
-    """J1 — within-document SIMILAR_TO edges with per-source rank, over
-    (document_id, chunk_id, embedding).
-
-    Directed top-k per source first (rank semantics of graph_db.py:2056-2083),
-    then undirected canonicalization (least/greatest) keeping the best
-    (score, min rank) per pair — matching the MERGE-undirected persistence.
-    """
-    left = chunks.select(
-        F.col("document_id").alias("doc"), F.col("chunk_id").alias("src"), F.col("embedding").alias("v1")
-    )
-    right = chunks.select(
-        F.col("document_id").alias("doc"), F.col("chunk_id").alias("dst"), F.col("embedding").alias("v2")
-    )
-    v1, v2 = _as_double(F.col("v1")), _as_double(F.col("v2"))
-    pairs = (
-        left.join(right, "doc")
-        .where(F.col("src") != F.col("dst"))
-        .withColumn("score", _dot(v1, v2) / (_norm(v1) * _norm(v2)))
-        .where(F.col("score") >= threshold)
-    )
-    w = Window.partitionBy("doc", "src").orderBy(F.desc("score"), F.asc("dst"))
-    ranked = pairs.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= max_connections
-    )
-    return (
-        ranked.select(
-            F.col("doc").alias("document_id"),
-            F.least(F.col("src"), F.col("dst")).alias("id1"),
-            F.greatest(F.col("src"), F.col("dst")).alias("id2"),
-            F.col("score"),
-            F.col("rank"),
-        )
-        .groupBy("document_id", "id1", "id2")
-        .agg(F.max("score").alias("score"), F.min("rank").alias("rank"))
-        .withColumn("edge_type", F.lit("SIMILAR_TO"))
-    )
-
-
 def chunk_similarity_edges_grams(chunks: DataFrame, threshold: float = 0.7) -> DataFrame:
     """J1 via per-document NumPy gram matrices — the plan SURVEY §2.5
     prescribes: documents are small (tens of chunks), so the all-pairs
@@ -102,8 +60,8 @@ def chunk_similarity_edges_grams(chunks: DataFrame, threshold: float = 0.7) -> D
     call + pandas-frame construction for every document — at web scale
     documents are tiny groups, and that per-group overhead dominated the
     stage 3:1 over the actual math (measured r8: 7.0 s -> 2.2 s at sf0.1,
-    byte-identical output). Output contract identical to
-    chunk_similarity_edges with ``max_connections=5`` (tests assert it).
+    byte-identical output). Output contract identical to the self-join
+    with ``max_connections=5`` (tests assert it).
     """
     import numpy as np
 
@@ -174,47 +132,44 @@ def chunk_similarity_edges_grams(chunks: DataFrame, threshold: float = 0.7) -> D
     return out.withColumn("edge_type", F.lit("SIMILAR_TO"))
 
 
-def entity_similarity_edges(
-    nodes: DataFrame,
-    threshold: float = 0.7,
-    method: str = "lsh",
-) -> DataFrame:
+# J2's cosine threshold (the reference's similarity_threshold)
+ENTITY_SIMILARITY_THRESHOLD = 0.7
+
+
+def entity_similarity_edges(nodes: DataFrame) -> DataFrame:
     """J2 — entity SIMILAR_TO edges (global) over (entity_id, embedding),
     each entity keeping its top 5.
 
-    method="lsh" (DEFAULT — the scale path): candidates from banded
-    random-hyperplane buckets (equi-join keyed by (band, bucket), AQE covers
-    bucket skew) then exact cosine verification, so false positives are
-    impossible and recall is the only approximation (P(miss) ≈ 1% for a
-    pair at exactly τ=0.7 with 12×4 bands, less above it). The quadratic
-    crossJoin is reachable only as the explicitly named method="exact"
-    baseline (round-1's trap default, now inverted — same posture as
-    dedup.embedding_near_dupes).
+    Candidates come from banded random-hyperplane buckets (equi-join keyed
+    by (band, bucket), AQE covers bucket skew), then exact cosine
+    verification, so false positives are impossible and recall is the only
+    approximation (P(miss) ≈ 1% for a pair at exactly τ=0.7 with 12×4
+    bands, less above it). Tests compare it with the quadratic crossJoin.
     """
     v = nodes.select(F.col("entity_id").alias("id"), F.col("embedding").alias("v"))
-    if method == "exact":
-        a, b = v.alias("a"), v.alias("b")
-        join = a.crossJoin(b).where(F.col("a.id") < F.col("b.id"))
-    elif method == "lsh":
-        # read from both band-join sides (r8)
-        bb = pin(_multiband_hyperplane_buckets(nodes, "entity_id", 12, 4))
-        join = (
-            band_pairs(bb)
-            .join(v.select(F.col("id").alias("id1"), F.col("v").alias("v1")), "id1")
-            .join(v.select(F.col("id").alias("id2"), F.col("v").alias("v2")), "id2")
-            .select(
-                F.struct(F.col("id1").alias("id"), F.col("v1").alias("v")).alias("a"),
-                F.struct(F.col("id2").alias("id"), F.col("v2").alias("v")).alias("b"),
-            )
+    # read from both band-join sides (r8)
+    bb = pin(_multiband_hyperplane_buckets(nodes, "entity_id", 12, 4))
+    join = (
+        band_pairs(bb)
+        .join(v.select(F.col("id").alias("id1"), F.col("v").alias("v1")), "id1")
+        .join(v.select(F.col("id").alias("id2"), F.col("v").alias("v2")), "id2")
+        .select(
+            F.struct(F.col("id1").alias("id"), F.col("v1").alias("v")).alias("a"),
+            F.struct(F.col("id2").alias("id"), F.col("v2").alias("v")).alias("b"),
         )
-    else:
-        raise ValueError(f"unknown method {method!r} (use 'lsh' or 'exact')")
+    )
+    return _top_similar(join)
+
+
+def _top_similar(join: DataFrame) -> DataFrame:
+    """SIMILAR_TO edges of (a, b) candidate pairs of (id, v) structs, a.id
+    < b.id: cosine ≥ ENTITY_SIMILARITY_THRESHOLD, top 5 per entity."""
     # each undirected pair is scored once, then mirrored so both endpoints
     # rank it: the cosine fold is symmetric bit for bit
     va, vb = _as_double(F.col("a.v")), _as_double(F.col("b.v"))
     sim = (_dot(va, vb) / (_norm(va) * _norm(vb))).alias("similarity")
     scored = join.select(F.col("a.id").alias("a"), F.col("b.id").alias("b"), sim).where(
-        F.col("similarity") >= threshold
+        F.col("similarity") >= ENTITY_SIMILARITY_THRESHOLD
     )
     pairs = scored.select(
         F.explode(

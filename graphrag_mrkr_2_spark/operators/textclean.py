@@ -215,24 +215,6 @@ def ngram_hashes(
     )
 
 
-def _ngram_hashes_interpreted(df: DataFrame, n: int) -> DataFrame:
-    """The pre-r4 higher-order-function gram builder over (doc_id, text),
-    kept ONLY as the equality oracle for ngram_hashes (tests) — do not use
-    on scan paths."""
-    toks_df = df.select(
-        F.col("doc_id"),
-        ascii_word_tokens(F.col("text")).alias("__toks"),
-    )
-    t = F.col("__toks")
-    grams = F.transform(
-        F.slice(t, 1, F.greatest(F.size(t) - (n - 1), F.lit(0))),
-        lambda w, i: F.xxhash64(
-            F.concat_ws(" ", F.array([F.element_at(t, i + j + 1) for j in range(n)]))
-        ),
-    )
-    return toks_df.select(F.col("doc_id"), F.explode(grams).alias("gram_hash"))
-
-
 def contamination_overlap(
     docs: DataFrame,
     benchmark: DataFrame,

@@ -38,9 +38,8 @@ Orphan entities (C5, entity_graph.py:292-341): the batch path does not
 union orphan rows into entities_doc, because the X10 endpoint check leaves
 none. consolidate_relationships_per_doc keeps a relationship only if both
 upper(trim()) endpoint keys are in its document's entity name set
-(triples.py:371-376), and orphan_entities_per_doc anti-joins on that same
-key against that same entities_doc. orphan_entities_per_doc stays as the C5
-operator for relationships that skip the endpoint check.
+(triples.py:371-376), and the C5 orphan anti-join (kept as a test oracle)
+keys on that same upper(trim()) name against that same entities_doc.
 
 Scale notes:
 - extraction is chunk-local: no shuffle; Arrow batch size bounds UDF memory.
@@ -133,30 +132,6 @@ def mention_frame(
     cols["importance"] = pd.array(importances, dtype="float64")
     cols["strength"] = pd.array(strengths, dtype="float64")
     return pd.DataFrame(cols)
-
-
-def extract_mentions(
-    chunks: DataFrame,
-    llm: Callable[[str, str, int], str] = mock_llm_response,
-    max_gleanings: int = 1,
-) -> DataFrame:
-    """S4+S5: run the gleaning extraction per chunk, emit mention rows.
-
-    One union table ('entity'/'relationship' rows) so the LLM runs once per
-    chunk; split with ``entity_mentions``/``relationship_mentions`` below.
-    """
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = mention_frame(
-                zip(pdf["chunk_id"], pdf["document_id"], pdf["content"]), llm, max_gleanings
-            )
-            if len(out):
-                yield out
-
-    return chunks.select("chunk_id", "document_id", "content").mapInPandas(
-        _extract, MENTION_SCHEMA
-    )
 
 
 UNIFIED_EXTRA_FIELDS = [
@@ -380,38 +355,6 @@ def consolidate_relationships_per_doc(
     )
 
 
-def orphan_entities_per_doc(
-    rels_doc: DataFrame, entities_doc: DataFrame
-) -> DataFrame:
-    """C5 — endpoints that resolve to no entity by name become orphan rows
-    (type '', importance 0, mention_count 0, is_orphan=true;
-    entity_graph.py:292-341). Empty by construction after the consolidation
-    endpoint check (triples.py:371-376), so ``canonicalize`` does not call
-    it; real for the direct-persistence path and exercised by the F4
-    fixtures.
-    """
-    endpoints = (
-        rels_doc.select("document_id", F.col("source_entity").alias("name"))
-        .unionByName(rels_doc.select("document_id", F.col("target_entity").alias("name")))
-        .withColumn("name_key", F.upper(F.trim(F.col("name"))))
-        .dropDuplicates(["document_id", "name_key"])
-    )
-    known = entities_doc.select(
-        "document_id", F.upper(F.trim(F.col("name"))).alias("name_key")
-    ).distinct()
-    missing = endpoints.join(known, ["document_id", "name_key"], "left_anti")
-    return missing.select(
-        "document_id",
-        F.trim(F.col("name")).alias("name"),
-        F.lit("").alias("type"),
-        F.lit("").alias("description"),
-        F.lit(0.0).alias("importance_score"),
-        F.array().cast(ArrayType(StringType())).alias("source_chunks"),
-        F.lit(0).cast("long").alias("mention_count"),
-        F.lit(True).alias("is_orphan"),
-    )
-
-
 def canonicalize(
     mentions: DataFrame,
     importance_threshold: float = 0.3,
@@ -426,8 +369,8 @@ def canonicalize(
     entities_doc carries ``is_orphan = False`` on every row and no C5
     orphan rows are unioned in: the X10 endpoint check
     (triples.py:371-376) drops every relationship whose source or target
-    key is missing from the document's gated entity set, so
-    ``orphan_entities_per_doc(rels_doc, entities_doc)`` is empty by
+    key is missing from the document's gated entity set, so the C5
+    orphan anti-join of rels_doc against entities_doc is empty by
     construction, and unioning it in would re-run the relationship
     consolidation and an anti-join inside every entities_doc query.
     """

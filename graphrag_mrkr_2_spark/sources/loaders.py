@@ -315,7 +315,6 @@ MAX_FILE_BYTES = 256 * 1024 * 1024
 def read_binary_documents(
     spark: SparkSession,
     path: str,
-    max_bytes: int = MAX_FILE_BYTES,
     keep_binary: bool = False,
 ) -> DataFrame:
     """PDF/DOCX/XLSX/PPTX files → pages(url, warc_ts, html, text, lang).
@@ -332,7 +331,7 @@ def read_binary_documents(
     decoded content (NULL = quarantine), html = NULL (no markup source).
     Composes directly with the KG pipeline like every other loader.
 
-    ``max_bytes`` guards against pathological uploads: the filter on the
+    ``MAX_FILE_BYTES`` guards against pathological uploads: the filter on the
     scan's ``length`` column is PUSHED DOWN by BinaryFileFormat, so an
     oversized file is skipped without ever materializing its content row
     (Spark binary cells cap at 2 GB; one 10 GB PDF must not OOM a task).
@@ -342,7 +341,7 @@ def read_binary_documents(
     files = (
         spark.read.format("binaryFile")
         .load(path)
-        .where(F.col("length") <= max_bytes)
+        .where(F.col("length") <= MAX_FILE_BYTES)
         .select("path", "modificationTime", "content")
     )
 
@@ -377,7 +376,6 @@ def read_image_documents(
     spark: SparkSession,
     path: str,
     ocr=None,
-    enable_ocr: bool = True,
 ) -> DataFrame:
     """Standalone image files → pages(url, warc_ts, html, text, lang) via
     intelligent OCR — the reference ImageLoader as a distributed source
@@ -405,7 +403,6 @@ def read_image_documents(
     extracted = extract_image_text(
         files,
         ocr=ocr,
-        enable_ocr=enable_ocr,
         passthrough_cols=["warc_ts"],  # rides the UDF — no join, no shuffle
     )
     # no-text → None contract: images without extractable text yield no page

@@ -167,9 +167,11 @@ def make_page(i: int, seed: int = 42) -> dict:
 
 
 _ADVERSARIAL_VARIANTS = 8
+# Length of variant 5's single <p>; the 10 MB test patches it.
+BIG_PAGE_CHARS = 200_000
 
 
-def make_adversarial_page(i: int, big_page_chars: int = 200_000) -> dict:
+def make_adversarial_page(i: int) -> dict:
     """Hostile-input page generator (VERDICT r3 'Next round' #8): the checked-
     in fixture source for the adversarial parity gate. Variant ``i % 8``:
 
@@ -181,8 +183,8 @@ def make_adversarial_page(i: int, big_page_chars: int = 200_000) -> dict:
                              <style> that must NOT surface or chunk
     4. unicode soup          BOM, NBSP, ZWJ, combining marks, CJK, emoji,
                              RTL runs mixed into mentions
-    5. single-tag megapage   ONE <p> of ~``big_page_chars`` chars (the
-                             10 MB case: pass big_page_chars=10_000_000)
+    5. single-tag megapage   ONE <p> of ~``BIG_PAGE_CHARS`` chars (the
+                             10 MB case: BIG_PAGE_CHARS=10_000_000)
     6. attribute bombs       multi-KB attribute values, quotes/brackets
                              inside attributes, duplicate ids
     7. hollow page           boilerplate-only / whitespace body
@@ -236,7 +238,7 @@ def make_adversarial_page(i: int, big_page_chars: int = 200_000) -> dict:
         )
     elif variant == 5:
         sent = f"{names[0]} is documented here. {names[1]} is documented here. "
-        reps = max(1, big_page_chars // len(sent))
+        reps = max(1, BIG_PAGE_CHARS // len(sent))
         body = f"<p>{sent * reps}</p>"
     elif variant == 6:
         bomb = "x" * 4096

@@ -1,39 +1,24 @@
 #!/usr/bin/env bash
-# Package the engine and run the KG job (scripts/submit_job.py) via
-# spark-submit --py-files. Locally: MASTER=local[32]; on a cluster:
-# MASTER=yarn|k8s://... unchanged. PAGES=<path> reads real input with
-# FORMAT; unset, the job builds DEMO_PAGES synthetic pages. OUT is a snapshot
-# catalog: a re-run over the same input resumes from its committed stages.
+# Package the engine as a zip and run the KG job (scripts/submit_job.py)
+# with spark-submit --py-files from a scratch working directory, so the
+# driver and the executors import the package from the zip, never from the
+# working tree. The master comes from MASTER (local[4] when unset; yarn or
+# k8s://... on a cluster); every argument goes through to submit_job.py.
+# Give it absolute paths: the scratch directory is removed on exit.
+#
+#   MASTER='local[4]' scripts/run_spark_submit.sh --demo-pages 200 --out /tmp/kg_catalog
 set -euo pipefail
-cd "$(dirname "$0")/.."
 
-MASTER="${MASTER:-local[32]}"
-OUT="${OUT:-/tmp/kg_catalog}"
-PARTITIONS="${PARTITIONS:-64}"
-FORMAT="${FORMAT:-parquet}"
-if [[ -n "${PAGES:-}" ]]; then
-  INPUT=(--pages "$PAGES" --format "$FORMAT")
-else
-  INPUT=(--demo-pages "${DEMO_PAGES:-500}")
-fi
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+WORK="$(mktemp -d)"
+trap 'rm -rf "$WORK"' EXIT
 
-ZIP=/tmp/graphrag_mrkr_2_spark.zip
-rm -f "$ZIP"
-python -c "
-import zipfile, os
-with zipfile.ZipFile('$ZIP', 'w') as z:
-    for root, _, files in os.walk('graphrag_mrkr_2_spark'):
-        if '__pycache__' in root: continue
-        for f in files:
-            if f.endswith('.py'):
-                p = os.path.join(root, f)
-                z.write(p, p)
-print('packaged', '$ZIP')
-"
+cd "$REPO"
+zip -qr "$WORK/graphrag_mrkr_2_spark.zip" graphrag_mrkr_2_spark -x '*__pycache__*'
+cp scripts/submit_job.py "$WORK/"
 
-exec spark-submit \
-  --master "$MASTER" \
-  --conf spark.sql.shuffle.partitions="$PARTITIONS" \
-  --conf spark.sql.adaptive.enabled=true \
-  --py-files "$ZIP" \
-  scripts/submit_job.py "${INPUT[@]}" --out "$OUT" --partitions "$PARTITIONS" "$@"
+cd "$WORK"  # leave the repo so the package can only come from the zip
+spark-submit \
+  --master "${MASTER:-local[4]}" \
+  --py-files "$WORK/graphrag_mrkr_2_spark.zip" \
+  "$WORK/submit_job.py" "$@"

@@ -31,10 +31,10 @@ pass a new one when the data at a path changes.
 outside the catalog (``session.pin``: entity resolution, communities, the
 dedup and query operators) a reliable checkpoint; see ``pin``'s docstring.
 
-``scripts/run_spark_submit.sh`` packages the zip and submits this script;
-``scripts/submit_smoke.sh`` runs it end-to-end under ``local[4]`` from a
-scratch cwd, so the driver imports the package from the zip, not from the
-working tree.
+``scripts/run_spark_submit.sh`` packages the zip and submits this script
+to ``$MASTER`` (default ``local[4]``) from a scratch cwd, passing its
+arguments through, so the driver imports the package from the zip, not
+from the working tree.
 
 Prints one JSON line to stdout for the calling orchestrator: the node, edge
 and triple counts (the committed snapshots' manifest row counts) and the

@@ -25,8 +25,8 @@ def _modular_kg(pages, cfg=None, strategy="html_heading"):
         build_edges,
         build_triples,
         canonicalize,
-        extract_mentions,
     )
+    from helpers import extract_mentions
 
     cfg = cfg or DEFAULT_CONFIG
     if "text" not in pages.columns:

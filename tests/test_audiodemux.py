@@ -7,9 +7,11 @@ injected decoder exactly the coded frames the muxer wrote, byte for byte,
 through every framing real crawls ship."""
 
 import struct
+from unittest import mock
 
 import pytest
 
+from graphrag_mrkr_2_spark.functions import audiodemux, mp4mux
 from graphrag_mrkr_2_spark.functions.audiodemux import (
     mkv_audio_samples,
     mkv_audio_track_info,
@@ -34,9 +36,9 @@ FRAMES = [bytes([i]) * (20 + (i * 37) % 300) for i in range(23)]
 
 class TestMkvAudio:
     @pytest.mark.parametrize("lacing", [None, "xiph", "ebml"])
-    def test_roundtrip_all_lacings(self, lacing):
-        blob = mux_mkv_audio(FRAMES, codec_id=b"A_OPUS", lacing=lacing,
-                             frames_per_block=5)
+    def test_roundtrip_all_lacings(self, lacing, monkeypatch):
+        monkeypatch.setattr(audiodemux, "MKV_AUDIO_FRAMES_PER_BLOCK", 5)
+        blob = mux_mkv_audio(FRAMES, codec_id=b"A_OPUS", lacing=lacing)
         info = mkv_audio_track_info(blob)
         assert [p for _, p in info["samples"]] == FRAMES
         # laced frames reconstruct timestamps from DefaultDuration
@@ -47,29 +49,31 @@ class TestMkvAudio:
 
     def test_fixed_lacing_roundtrip(self):
         eq = [bytes([i]) * 64 for i in range(10)]
-        blob = mux_mkv_audio(eq, lacing="fixed", frames_per_block=4)
+        blob = mux_mkv_audio(eq, lacing="fixed")
         assert [p for _, p in mkv_audio_samples(blob)] == eq
 
-    def test_fixed_lacing_rejects_unequal_frames(self):
+    def test_fixed_lacing_rejects_unequal_frames(self, monkeypatch):
+        monkeypatch.setattr(audiodemux, "MKV_AUDIO_FRAMES_PER_BLOCK", 2)
         with pytest.raises(ValueError, match="equal-size"):
-            mux_mkv_audio([b"aa", b"bbb"], lacing="fixed",
-                          frames_per_block=2)
+            mux_mkv_audio([b"aa", b"bbb"], lacing="fixed")
 
-    def test_xiph_255_boundary_frames(self):
+    def test_xiph_255_boundary_frames(self, monkeypatch):
         # frame sizes at the 255-run boundaries are the classic Xiph bug
         frames = [b"a" * 254, b"b" * 255, b"c" * 256, b"d" * 510, b"e"]
-        blob = mux_mkv_audio(frames, lacing="xiph", frames_per_block=5)
+        monkeypatch.setattr(audiodemux, "MKV_AUDIO_FRAMES_PER_BLOCK", 5)
+        blob = mux_mkv_audio(frames, lacing="xiph")
         assert [p for _, p in mkv_audio_samples(blob)] == frames
 
-    def test_ebml_lacing_negative_deltas(self):
+    def test_ebml_lacing_negative_deltas(self, monkeypatch):
         # shrinking frame sizes force negative signed-vint deltas
         frames = [b"x" * n for n in (400, 100, 350, 20, 500)]
-        blob = mux_mkv_audio(frames, lacing="ebml", frames_per_block=5)
+        monkeypatch.setattr(audiodemux, "MKV_AUDIO_FRAMES_PER_BLOCK", 5)
+        blob = mux_mkv_audio(frames, lacing="ebml")
         assert [p for _, p in mkv_audio_samples(blob)] == frames
 
-    def test_codec_private_surfaces(self):
-        blob = mux_mkv_audio([b"pkt"], codec_id=b"A_VORBIS",
-                             codec_private=b"\x02abc")
+    def test_codec_private_surfaces(self, monkeypatch):
+        monkeypatch.setattr(audiodemux, "MKV_AUDIO_CODEC_PRIVATE", b"\x02abc")
+        blob = mux_mkv_audio([b"pkt"], codec_id=b"A_VORBIS")
         assert mkv_audio_track_info(blob)["codec_private"] == b"\x02abc"
 
     def test_no_audio_track_raises(self):
@@ -79,9 +83,9 @@ class TestMkvAudio:
         with pytest.raises(ValueError, match="no audio track"):
             mkv_audio_track_info(vid)
 
-    def test_truncated_lace_table_raises(self):
-        blob = bytearray(mux_mkv_audio(FRAMES[:6], lacing="xiph",
-                                       frames_per_block=6))
+    def test_truncated_lace_table_raises(self, monkeypatch):
+        monkeypatch.setattr(audiodemux, "MKV_AUDIO_FRAMES_PER_BLOCK", 6)
+        blob = bytearray(mux_mkv_audio(FRAMES[:6], lacing="xiph"))
         # corrupt the lace count byte to claim more frames than sizes
         # present: find the SimpleBlock body and bump its frame count
         # body layout: track vint (the 0x81), s16 timestamp, flags, count
@@ -139,10 +143,11 @@ class TestMkvBlockGroupKeyframes:
 
 
 class TestMp4Audio:
-    def test_roundtrip_ragged_chunks(self):
+    def test_roundtrip_ragged_chunks(self, monkeypatch):
+        monkeypatch.setattr(mp4mux, "MP4_AUDIO_CONFIG_RECORD", b"\x03\x80\x22")
+        monkeypatch.setattr(mp4mux, "MP4_AUDIO_CHUNK_PATTERN", (3, 1, 4))
         blob = mux_mp4_audio(FRAMES, codec="mp4a", sample_rate=44100,
-                             channels=2, config_record=b"\x03\x80\x22",
-                             chunk_pattern=(3, 1, 4))
+                             channels=2)
         info = mp4_audio_track_info(blob)
         assert [p for _, _, p in info["samples"]] == FRAMES
         assert (info["codec"], info["channels"], info["sample_rate"]) == \
@@ -158,10 +163,11 @@ class TestMp4Audio:
         assert info["config"] is None
         assert [p for _, p in mp4_audio_samples(blob)] == FRAMES[:5]
 
-    def test_opus_config_box(self):
+    def test_opus_config_box(self, monkeypatch):
         dops = b"\x00\x02\x00\x78\x00\x00\xbb\x80\x00\x00\x00"
+        monkeypatch.setattr(mp4mux, "MP4_AUDIO_CONFIG_RECORD", dops)
         blob = mux_mp4_audio(FRAMES[:3], codec="Opus", sample_rate=48000,
-                             channels=2, config_record=dops)
+                             channels=2)
         assert mp4_audio_track_info(blob)["config"] == dops
 
     def test_video_reader_skips_audio_only_file(self):
@@ -261,9 +267,11 @@ class TestOggPackets:
         pkts = [b"a" * 510, b"b"]
         assert ogg_packets(mux_ogg(pkts)) == pkts
 
-    def test_multiplexed_serial_skipped(self):
-        a = mux_ogg(_PKTS[:3], serial=7)
-        b = mux_ogg([b"other"], serial=9)
+    def test_multiplexed_serial_skipped(self, monkeypatch):
+        monkeypatch.setattr(audiodemux, "OGG_SERIAL", 7)
+        a = mux_ogg(_PKTS[:3])
+        monkeypatch.setattr(audiodemux, "OGG_SERIAL", 9)
+        b = mux_ogg([b"other"])
 
         def pages(x):
             out, pos = [], 0
@@ -323,14 +331,15 @@ class TestSampleAudioPayloads:
         import numpy as np
 
         wav = encode_wav(np.zeros((160, 1), dtype=np.int16), 16000)
+        with mock.patch.object(mp4mux, "MP4_AUDIO_CONFIG_RECORD", b"\x03\x22"):
+            mp4_aac = mux_mp4_audio(FRAMES, codec="mp4a", sample_rate=44100,
+                                    channels=2)
         rows = [
-            ("mp4", "audio",
-             mux_mp4_audio(FRAMES, codec="mp4a", sample_rate=44100,
-                           channels=2, config_record=b"\x03\x22"),
+            ("mp4", "audio", mp4_aac,
              {"codec": "aac"}),
             ("mkv", "audio",
-             mux_mkv_audio(FRAMES, codec_id=b"A_VORBIS", lacing="xiph",
-                           frames_per_block=4), {"codec": "vorbis"}),
+             mux_mkv_audio(FRAMES, codec_id=b"A_VORBIS", lacing="xiph"),
+             {"codec": "vorbis"}),
             ("ogg", "audio", mux_ogg(_PKTS), {"codec": "opus"}),
             ("mp3", "audio", _mp3_frame(_MP3_HDR_128) * 7,
              {"codec": "mp3"}),

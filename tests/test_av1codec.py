@@ -14,6 +14,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from graphrag_mrkr_2_spark.functions import av1codec
 from graphrag_mrkr_2_spark.functions.av1codec import (
     aom_decoder_available,
     avif_primary_obu,
@@ -52,7 +53,7 @@ class TestDav1dDecode:
     def test_lossless_identity_bit_exact(self):
         _require_encode()
         pxs = _corpus()
-        frames = decode_av1_frames([_obu(p) for p in pxs], matrix="identity")
+        frames = decode_av1_frames([_obu(p) for p in pxs])
         assert len(frames) == len(pxs)
         for f, p in zip(frames, pxs):
             assert np.array_equal(f, p)
@@ -61,7 +62,7 @@ class TestDav1dDecode:
         _require_encode()
         px = np.random.default_rng(2).integers(
             0, 256, size=(17, 31, 3), dtype=np.uint8)
-        (f,) = decode_av1_frames([_obu(px)], matrix="identity")
+        (f,) = decode_av1_frames([_obu(px)])
         assert f.shape == (17, 31, 3) and np.array_equal(f, px)
 
     def test_corrupt_obu_raises(self):
@@ -138,13 +139,11 @@ class TestWebM:
     def test_mux_demux_decode_roundtrip(self):
         _require_encode()
         pxs = _corpus()
-        webm = mux_webm_av1([_obu(p) for p in pxs], 32, 24,
-                            frame_duration_ms=40)
+        webm = mux_webm_av1([_obu(p) for p in pxs], 32, 24)
         samples = mkv_video_samples(webm)
         assert [t for t, _, _ in samples] == [0, 40, 80]
         assert all(k for _, k, _ in samples)
-        frames = decode_av1_frames([p for _, _, p in samples],
-                                   matrix="identity")
+        frames = decode_av1_frames([p for _, _, p in samples])
         for f, p in zip(frames, pxs):
             assert np.array_equal(f, p)
 
@@ -153,8 +152,7 @@ class TestWebM:
         from graphrag_mrkr_2_spark.functions.mediaprobe import probe_mkv
         from graphrag_mrkr_2_spark.operators.multimodal import probe_media
 
-        webm = mux_webm_av1([_obu(p) for p in _corpus()], 32, 24,
-                            frame_duration_ms=40)
+        webm = mux_webm_av1([_obu(p) for p in _corpus()], 32, 24)
         out = probe_mkv(webm)
         assert out["codec"] == "av1"
         assert (out["width"], out["height"]) == (32, 24)
@@ -166,7 +164,7 @@ class TestWebM:
         with pytest.raises(ValueError):
             mkv_video_samples(b"not a matroska file at all")
 
-    def test_sample_video_frames_end_to_end(self, spark):
+    def test_sample_video_frames_end_to_end(self, spark, monkeypatch):
         """kind=video AV1 WebM rows decode REAL frames through the
         mapInPandas plumbing (strict mode — no fallback may fire)."""
         _require_encode()
@@ -176,8 +174,8 @@ class TestWebM:
         )
 
         pxs = _corpus(n=5)
-        webm = mux_webm_av1([_obu(p) for p in pxs], 32, 24,
-                            frame_duration_ms=500)
+        monkeypatch.setattr(av1codec, "MKV_FRAME_MS", 500)
+        webm = mux_webm_av1([_obu(p) for p in pxs], 32, 24)
         df = spark.createDataFrame(
             [("vid0", "video", webm, {})],
             "media_id string, kind string, payload binary, "

@@ -1,10 +1,12 @@
 """MJPEG-AVI container codec + the real video-frame sampling chain."""
 
 import struct
+from unittest import mock
 
 import numpy as np
 import pytest
 
+from graphrag_mrkr_2_spark.functions import avicodec
 from graphrag_mrkr_2_spark.functions.avicodec import (
     decode_frame,
     encode_avi_mjpeg,
@@ -13,14 +15,16 @@ from graphrag_mrkr_2_spark.functions.avicodec import (
     sniff_video,
 )
 from graphrag_mrkr_2_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
+from helpers import encode_jpeg_at, image_features_binned
 
 
 def _mjpeg_avi(n_frames=10, fps=5, size=16):
     frames = [
-        encode_jpeg(np.full((size, size, 3), (17 * i) % 250, dtype=np.uint8), quality=95)
+        encode_jpeg_at(np.full((size, size, 3), (17 * i) % 250, dtype=np.uint8), quality=95)
         for i in range(n_frames)
     ]
-    return frames, encode_avi_mjpeg(frames, size, size, fps=fps)
+    with mock.patch.object(avicodec, "AVI_FPS", fps):
+        return frames, encode_avi_mjpeg(frames, size, size)
 
 
 class TestContainer:
@@ -39,7 +43,8 @@ class TestContainer:
         odd = frames[1] + b"\x00" if len(frames[1]) % 2 == 0 else frames[1]
         # force one odd frame in the middle
         f2 = [frames[0], odd[:-1] if len(odd) % 2 == 0 else odd, frames[2]]
-        avi = encode_avi_mjpeg(f2, 16, 16, fps=5)
+        with mock.patch.object(avicodec, "AVI_FPS", 5):
+            avi = encode_avi_mjpeg(f2, 16, 16)
         assert parse_avi(avi)["frames"] == f2
 
     def test_sampling_by_container_fps(self):
@@ -73,7 +78,7 @@ class TestMjpegNoDhtQuirk:
     def test_frame_without_dht_uses_standard_tables(self):
         """The classic MJPEG quirk: frames written without DHT segments must
         decode via the Annex-K defaults."""
-        jpeg = encode_jpeg(np.full((16, 16, 3), 60, dtype=np.uint8), quality=95)
+        jpeg = encode_jpeg_at(np.full((16, 16, 3), 60, dtype=np.uint8), quality=95)
         out = bytearray()
         i = 0
         while i < len(jpeg):
@@ -97,10 +102,7 @@ class TestSparkWiring:
         )
 
     def test_sample_video_frames_real_avi(self, spark):
-        from graphrag_mrkr_2_spark.operators.multimodal import (
-            image_features,
-            sample_video_frames,
-        )
+        from graphrag_mrkr_2_spark.operators.multimodal import sample_video_frames
 
         _, avi = _mjpeg_avi(n_frames=10, fps=5)
         media = self._media(
@@ -117,7 +119,7 @@ class TestSparkWiring:
                 for r in frames
             ],
         )
-        feats = image_features(fmedia, dim=4, strict=True, decoder=False).collect()
+        feats = image_features_binned(fmedia, 4, strict=True, decoder=False).collect()
         assert len(feats) == 2
 
     def test_strict_raises_for_h264(self, spark):

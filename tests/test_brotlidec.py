@@ -15,9 +15,11 @@ from __future__ import annotations
 
 import os
 import random
+from unittest import mock
 
 import pytest
 
+from graphrag_mrkr_2_spark.functions import httppayload
 from graphrag_mrkr_2_spark.functions.httppayload import (
     decode_brotli_native,
     decode_content_encoding,
@@ -53,7 +55,9 @@ class TestAgainstSystemBrotli:
             for q in (0, 1, 2, 5, 9, 11):
                 for w in (10, 18, 24):
                     for mode in (0, 1):
-                        c = encode_brotli_native(t, q, w, mode)
+                        with mock.patch.multiple(httppayload, BROTLI_LGWIN=w,
+                                                 BROTLI_MODE=mode):
+                            c = encode_brotli_native(t, q)
                         assert decode_brotli_native(c) == t, (len(t), q, w,
                                                               mode)
 
@@ -62,8 +66,7 @@ class TestAgainstSystemBrotli:
         Content-Encoding chain alike."""
         rng = random.Random(1)
         stream = encode_brotli_native(
-            open(os.path.join(_REPO, "SURVEY.md"), "rb").read()[:20000],
-            9, 22)
+            open(os.path.join(_REPO, "SURVEY.md"), "rb").read()[:20000], 9)
         cuts = sorted(rng.sample(range(1, len(stream)), 40))
         cuts += [len(stream) - 1]
         for cut in cuts:
@@ -81,8 +84,7 @@ class TestAgainstSystemBrotli:
 
         rng = random.Random(2)
         stream = encode_brotli_native(
-            open(os.path.join(_REPO, "SURVEY.md"), "rb").read()[:20000],
-            9, 22)
+            open(os.path.join(_REPO, "SURVEY.md"), "rb").read()[:20000], 9)
         rejected = 0
         for _ in range(150):
             b = bytearray(stream)
@@ -128,14 +130,17 @@ class TestPureDecoder:
         with pytest.raises(ValueError):
             decode_brotli_native(s + b"\x00")
 
-    def test_max_output_guard(self):
+    def test_max_output_guard(self, monkeypatch):
         s = encode_brotli_uncompressed(b"x" * 100_000)
-        assert len(decode_brotli_native(s, max_output=100_000)) == 100_000
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 100_000)
+        assert len(decode_brotli_native(s)) == 100_000
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 99_999)
         with pytest.raises(ValueError):
-            decode_brotli_native(s, max_output=99_999)
+            decode_brotli_native(s)
         bomb = encode_brotli_native(b"\x00" * (4 << 20), 5)  # ~1e4:1
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 1 << 20)
         with pytest.raises(ValueError, match="max_output"):
-            decode_brotli_native(bomb, max_output=1 << 20)
+            decode_brotli_native(bomb)
 
     def test_metadata_block_skipped(self):
         # hand-assembled: WBITS=16, one metadata block (2 skip bytes), then
@@ -192,13 +197,14 @@ class TestPureDecoder:
         with pytest.raises(ValueError):
             decode_brotli_native(bytes(s))
 
-    def test_fuzz_never_crashes(self):
+    def test_fuzz_never_crashes(self, monkeypatch):
         """Random garbage must raise ValueError, never anything else."""
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 1 << 20)
         rng = random.Random(3)
         for _ in range(500):
             blob = bytes(rng.randrange(256)
                          for _ in range(rng.randrange(1, 200)))
             try:
-                decode_brotli_native(blob, max_output=1 << 20)
+                decode_brotli_native(blob)
             except ValueError:
                 pass

@@ -165,7 +165,7 @@ def test_spark_consolidation_matches_graph_semantics(spark):
 
 @pytest.mark.spark
 def test_spark_orphans(spark):
-    from graphrag_mrkr_2_spark.operators.triples import orphan_entities_per_doc
+    from helpers import orphan_entities_per_doc
 
     e_doc = spark.createDataFrame(
         [("d1", "KNOWN X", "SERVICE", "", 0.8, ["c1"], 1)],
@@ -187,9 +187,9 @@ def _old_canonicalize(mentions):
         consolidate_entities_per_doc,
         consolidate_relationships_per_doc,
         entity_mentions,
-        orphan_entities_per_doc,
         relationship_mentions,
     )
+    from helpers import orphan_entities_per_doc
 
     entities_doc = consolidate_entities_per_doc(entity_mentions(mentions)).where(
         F.col("importance_score") >= 0.3
@@ -258,8 +258,8 @@ def test_canonicalize_leaves_no_orphans(spark, source):
         build_triples,
         canonicalize,
         extract_mentions_fused,
-        orphan_entities_per_doc,
     )
+    from helpers import orphan_entities_per_doc
     from graphrag_mrkr_2_spark.sources.pages import (
         generate_adversarial_pages,
         generate_pages,
@@ -486,11 +486,8 @@ def test_mentions_table_explodes_provenance(spark):
     entities_doc provenance, with entity_id = normalize.entity_id(name)."""
     from graphrag_mrkr_2_spark.functions.normalize import entity_id
     from graphrag_mrkr_2_spark.operators.extract import chunk_pages, filter_chunks
-    from graphrag_mrkr_2_spark.operators.triples import (
-        canonicalize,
-        extract_mentions,
-        mentions_table,
-    )
+    from graphrag_mrkr_2_spark.operators.triples import canonicalize, mentions_table
+    from helpers import extract_mentions
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
     chunks = filter_chunks(chunk_pages(generate_pages(spark, 15)))

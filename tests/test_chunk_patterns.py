@@ -11,9 +11,11 @@ from __future__ import annotations
 
 import sys
 import types
+from unittest import mock
 
 import pytest
 
+from graphrag_mrkr_2_spark.operators import chunk_patterns
 from graphrag_mrkr_2_spark.operators.chunk_patterns import (
     BUILTIN_PATTERNS,
     ChunkPattern,
@@ -94,11 +96,19 @@ def _ref_suggestions(rows, patterns, min_confidence=0.5, max_suggestions=10):
     return sorted(out)
 
 
+def _suggest(df, patterns=BUILTIN_PATTERNS, max_suggestions=10):
+    """chunk_suggestions with a pattern store and per-document limit."""
+    with mock.patch.multiple(
+        chunk_patterns, BUILTIN_PATTERNS=patterns, MAX_SUGGESTIONS=max_suggestions
+    ):
+        return chunk_suggestions(df)
+
+
 def _spark_suggestions(spark, rows, **kwargs):
     df = spark.createDataFrame(
         rows, "document_id string, chunk_id string, chunk_index int, content string"
     )
-    got = chunk_suggestions(df, **kwargs).collect()
+    got = _suggest(df, **kwargs).collect()
     return sorted(
         (
             r.document_id,
@@ -216,7 +226,7 @@ class TestOperatorContract:
         df = spark.createDataFrame(
             rows, "document_id string, chunk_id string, chunk_index int, content string"
         )
-        out = chunk_suggestions(df, patterns=pats).collect()
+        out = _suggest(df, patterns=pats).collect()
         assert len(out) == 1
         (r,) = out
         assert r.chunk_id == "c0"
@@ -234,7 +244,7 @@ class TestOperatorContract:
         df = spark.createDataFrame(
             rows, "document_id string, chunk_id string, chunk_index int, content string"
         )
-        out = chunk_suggestions(df, patterns=pats).collect()
+        out = _suggest(df, patterns=pats).collect()
         assert [(r.chunk_id, r.related_chunk_ids) for r in out] == [("c1", ["c0"])]
 
     def test_disabled_and_empty_patterns(self, spark):
@@ -251,8 +261,8 @@ class TestOperatorContract:
                 enabled=False,
             )
         ]
-        assert chunk_suggestions(df, patterns=disabled).count() == 0
-        assert chunk_suggestions(df, patterns=[]).count() == 0
+        assert _suggest(df, patterns=disabled).count() == 0
+        assert _suggest(df, patterns=[]).count() == 0
 
     def test_invalid_regex_skips_pattern_not_job(self, spark):
         """A non-compiling (or Python-only dialect) regex must skip that
@@ -283,7 +293,7 @@ class TestOperatorContract:
             ),
         ]
         with pytest.warns(UserWarning, match="does not compile"):
-            out = chunk_suggestions(df, patterns=pats).collect()
+            out = _suggest(df, patterns=pats).collect()
         assert [r.pattern_name for r in out] == ["Good"]
 
     def test_plan_stays_jvm_side_for_row_patterns(self, spark):
@@ -303,6 +313,6 @@ class TestOperatorContract:
                 confidence=0.8,
             )
         ]
-        plan = chunk_suggestions(df, patterns=pats)._jdf.queryExecution().executedPlan().toString()
+        plan = _suggest(df, patterns=pats)._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan

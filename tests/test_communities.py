@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from graphrag_mrkr_2_spark.operators import graphalgo
+from graphrag_mrkr_2_spark.operators import communities, graphalgo
 from graphrag_mrkr_2_spark.operators.communities import (
     community_summaries,
     detect_communities,
@@ -97,14 +97,15 @@ def test_small_graph_clusters_without_python_workers(planted_edges, monkeypatch)
 
 
 @pytest.mark.spark
-def test_giant_component_still_splits(planted_edges):
+def test_giant_component_still_splits(planted_edges, monkeypatch):
     """A component over max_component_size must NOT collapse to one
     community: the distributed LPA path has to recover the planted split
     (VERDICT r1 'What's missing' #4). The two cliques here are connected by
     a weak bridge, so they form ONE component of 21 edges; with
-    max_component_size=10 that component routes to label_propagation."""
+    MAX_COMPONENT_SIZE=10 that component routes to label_propagation."""
     pe = project_edges(normalize_edge_weights(planted_edges))
-    mem = detect_communities(pe, max_component_size=10)
+    monkeypatch.setattr(communities, "MAX_COMPONENT_SIZE", 10)
+    mem = detect_communities(pe)
     comms = {}
     for r in mem.collect():
         comms.setdefault(r["community_id"], set()).add(r["node"])
@@ -116,14 +117,15 @@ def test_giant_component_still_splits(planted_edges):
 
 
 @pytest.mark.spark
-def test_lpa_symmetric_pair_no_oscillation(spark):
+def test_lpa_symmetric_pair_no_oscillation(spark, monkeypatch):
     """Synchronous LPA label-swaps forever on automorphic pairs; the
     period-2 checksum resolution must merge them (found by a live probe:
     without it, a-b and c-d come out as four singleton communities)."""
     tiny = spark.createDataFrame(
         [("a", "b", 1.0), ("c", "d", 1.0)], "src string, dst string, weight double"
     )
-    mem = detect_communities(tiny, max_component_size=0)  # force LPA for all
+    monkeypatch.setattr(communities, "MAX_COMPONENT_SIZE", 0)  # force LPA for all
+    mem = detect_communities(tiny)
     comms = {}
     for r in mem.collect():
         comms.setdefault(r["community_id"], set()).add(r["node"])

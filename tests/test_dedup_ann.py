@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from graphrag_mrkr_2_spark.operators import ann
 from graphrag_mrkr_2_spark.operators.ann import brute_force_topk, knn_join, lsh_topk
 from graphrag_mrkr_2_spark.operators.dedup import (
     embedding_near_dupes,
@@ -11,6 +12,7 @@ from graphrag_mrkr_2_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
+from helpers import embedding_near_dupes_exact
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog today"),
@@ -196,11 +198,13 @@ def test_knn_join_matches_brute_force(emb_df):
 
 
 @pytest.mark.spark
-def test_lsh_topk_recall(emb_df):
+def test_lsh_topk_recall(emb_df, monkeypatch):
     queries = emb_df.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    got = lsh_topk(emb_df, queries, dim=64, k=1, n_planes=6).collect()
+    monkeypatch.setattr(ann, "LSH_TOPK", 1)
+    monkeypatch.setattr(ann, "LSH_PLANES", 6)
+    got = lsh_topk(emb_df, queries, dim=64).collect()
     # rank-1 for each query must be the query itself (same bucket, cos=1)
     top1 = {r["query_id"]: r["vec_id"] for r in got if r["rank"] == 1}
     assert top1 == {i: i for i in range(5)}
@@ -237,11 +241,11 @@ def test_embedding_near_dupes_lsh_equals_exact(spark):
 
     exact = {
         (r["id1"], r["id2"])
-        for r in embedding_near_dupes(df, threshold=0.95, method="exact").collect()
+        for r in embedding_near_dupes_exact(df, threshold=0.95).collect()
     }
     lsh = {
         (r["id1"], r["id2"])
-        for r in embedding_near_dupes(df, threshold=0.95, method="lsh").collect()
+        for r in embedding_near_dupes(df, threshold=0.95).collect()
     }
     assert all((j, 100 + j) in exact for j in range(10))
     assert lsh == exact
@@ -367,13 +371,14 @@ def test_numpy_hash_int_step_matches_spark_xxhash64(spark):
     assert mat.tolist() == [list(r) for r in want]
 
 
-def test_minhash_signatures_match_jvm_aggregate_form(spark):
+def test_minhash_signatures_match_jvm_aggregate_form(spark, monkeypatch):
     """The r8 numpy signature stage must equal the r2-r7 JVM k-min-agg
     form exactly (same hash family over the same shingle set)."""
     import random
 
     from pyspark.sql import functions as F
 
+    from graphrag_mrkr_2_spark.operators import dedup
     from graphrag_mrkr_2_spark.operators.dedup import (
         minhash_signatures,
         shingle_tokens,
@@ -386,8 +391,9 @@ def test_minhash_signatures_match_jvm_aggregate_form(spark):
         for i in range(60)
     ] + [(1000, ""), (1001, "one two")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(dedup, "MINHASH_HASHES", 16)
     got = {r["doc"]: list(r["signature"])
-           for r in minhash_signatures(df, num_hashes=16).collect()}
+           for r in minhash_signatures(df).collect()}
     toks = shingle_tokens(df).select("doc", F.xxhash64("shingle").alias("h"))
     aggs = [F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"m{i}") for i in range(16)]
     ref = {r["doc"]: [r[f"m{i}"] for i in range(16)]
@@ -396,7 +402,8 @@ def test_minhash_signatures_match_jvm_aggregate_form(spark):
 
     # string ids keep their type through the python stage
     sdf = df.select(F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text")
-    srows = minhash_signatures(sdf, num_hashes=4).collect()
+    monkeypatch.setattr(dedup, "MINHASH_HASHES", 4)
+    srows = minhash_signatures(sdf).collect()
     assert srows and all(isinstance(r["doc"], str) for r in srows)
 
 

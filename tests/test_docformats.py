@@ -499,14 +499,16 @@ class TestPdfRobustness:
 
 
 class TestSizeGuard:
-    def test_oversized_files_filtered_with_pushdown(self, spark, tmp_path):
+    def test_oversized_files_filtered_with_pushdown(self, spark, tmp_path, monkeypatch):
         (tmp_path / "small.docx").write_bytes(build_docx(["keep me"]))
         (tmp_path / "big.docx").write_bytes(build_docx(["drop me " * 2000]))
 
+        from graphrag_mrkr_2_spark.sources import loaders
         from graphrag_mrkr_2_spark.sources.loaders import read_binary_documents
 
         small_size = (tmp_path / "small.docx").stat().st_size
-        df = read_binary_documents(spark, str(tmp_path), max_bytes=small_size)
+        monkeypatch.setattr(loaders, "MAX_FILE_BYTES", small_size)
+        df = read_binary_documents(spark, str(tmp_path))
         rows = df.collect()
         assert [r["url"].rsplit("/", 1)[-1] for r in rows] == ["small.docx"]
         # the length predicate reaches the binaryFile scan (pushdown)

@@ -66,7 +66,7 @@ def test_full_journey(spark, tmp_path):
     clean = redact_pii(texted)
     assert clean.where(F.col("n_email") > 0).count() >= 1
     assert "[EMAIL]" in clean.where(F.col("n_email") > 0).collect()[0]["clean_text"]
-    assert exact_duplicates(texted, text_col="text", id_col="doc_id").count() >= 1
+    assert exact_duplicates(texted).count() >= 1
 
     # -- KG construction with URL curation (the utm dup must vanish)
     res = run_kg_pipeline(dedup_normalized_urls(with_normalized_urls(pages)))

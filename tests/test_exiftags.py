@@ -48,8 +48,7 @@ class TestRoundTrips:
         pixels around the spliced APP1."""
         from graphrag_mrkr_2_spark.functions.jpegcodec import decode_jpeg
 
-        px = np.full((8, 8, 3), 200, dtype=np.uint8)
-        jpeg = build_exif_jpeg({"title": "t"}, px=px)
+        jpeg = build_exif_jpeg({"title": "t"})
         assert decode_jpeg(jpeg).shape == (8, 8, 3)
 
     def test_partial_tags(self):
@@ -188,4 +187,4 @@ class TestReviewRegressions:
         px = np.full((8, 8, 3), 128, dtype=np.uint8)
         tags = {"title": "same"}
         assert splice_exif_app1(encode_jpeg(px), tags) == \
-            build_exif_jpeg(tags, px=px)
+            build_exif_jpeg(tags)

@@ -5,25 +5,23 @@ import random
 import networkx as nx
 import pytest
 
-from graphrag_mrkr_2_spark.operators.graphalgo import connected_components
+from graphrag_mrkr_2_spark.operators import graphalgo
+from graphrag_mrkr_2_spark.operators.graphalgo import connected_components, star_components
 
 
 def _check(spark, edges):
     g = nx.Graph()
     g.add_edges_from(edges)
     df = spark.createDataFrame(edges, ["u", "v"])
-    # distributed large-star/small-star path (local_threshold=0) AND the
-    # small-graph union-find fallback must both match networkx
-    for threshold in (0, 100_000):
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(df, local_threshold=threshold).collect()
-        }
+    # distributed large-star/small-star path AND the small-graph union-find
+    # path must both match networkx
+    for path, cc in (("star", star_components), ("local", connected_components)):
+        got = {r["node"]: r["component"] for r in cc(df).collect()}
         for comp in nx.connected_components(g):
             comp = sorted(comp)
             labels = {got.get(n) for n in comp}
             assert labels == {comp[0]}, (
-                f"threshold={threshold}: component {comp} got labels {labels}"
+                f"{path}: component {comp} got labels {labels}"
             )
 
 
@@ -77,7 +75,7 @@ def test_mega_hub_no_wide_aggregation_buffer(spark):
     )
     # a second small component to prove labels don't bleed
     other = spark.createDataFrame([("x1", "x2"), ("x2", "x3")], ["u", "v"])
-    got = connected_components(hub.unionByName(other), local_threshold=0)
+    got = star_components(hub.unionByName(other))
     comps = {r["component"] for r in got.collect()}
     assert comps == {"hub", "x1"}
     assert got.count() == n + 1 + 3
@@ -108,3 +106,47 @@ def test_local_result_is_local_relation(spark):
         assert "LocalRelation" in classes and "LogicalRDD" not in classes, classes
         assert got.schema.simpleString() == "struct<node:string,component:string>"
         assert got.count() == n_rows
+
+
+@pytest.mark.spark
+def test_local_path_keeps_the_id_type(spark):
+    """Below the limit connected_components answers on the driver; its
+    Arrow relation is typed from the input id column, so long ids give the
+    star loop's rows and long columns (a string-typed Arrow table raised
+    ArrowTypeError on them)."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (7, 7), (12, 10)], "u long, v long"
+    )
+    local, star = connected_components(edges), star_components(edges)
+    assert "LocalRelation" in _optimized_plan_classes(local)
+    for got in (local, star):
+        assert [f.dataType.simpleString() for f in got.schema] == ["bigint", "bigint"]
+    assert sorted(map(tuple, local.collect())) == sorted(map(tuple, star.collect()))
+
+
+@pytest.mark.spark
+def test_limit_zero_runs_the_star_loop(spark, monkeypatch):
+    """With LOCAL_EDGE_LIMIT patched to 0, the Spark paths of entity_mapping
+    and detect_communities cluster with the star loop: the limit is read
+    when connected_components is called, not bound at import, so the
+    driver's union-find never runs."""
+    from graphrag_mrkr_2_spark.operators.communities import detect_communities
+    from graphrag_mrkr_2_spark.operators.resolution import entity_mapping
+
+    def no_union_find(pairs):
+        raise AssertionError("union-find ran on the driver")
+
+    monkeypatch.setattr(graphalgo, "LOCAL_EDGE_LIMIT", 0)
+    monkeypatch.setattr(graphalgo, "_union_find", no_union_find)
+    names = spark.createDataFrame(
+        [("a", "ACME Systems"), ("b", "ACME Systems Inc"), ("c", "Blue River")],
+        "entity_id string, name string",
+    )
+    mapping = {r["entity_id"]: r["canonical_id"] for r in entity_mapping(names, threshold=0.7).collect()}
+    assert mapping == {"a": "a", "b": "a", "c": "c"}
+    edges = spark.createDataFrame(
+        [("a", "b", 1.0), ("b", "c", 1.0), ("x", "y", 1.0)],
+        "src string, dst string, weight double",
+    )
+    nodes = {r["node"] for r in detect_communities(edges).collect()}
+    assert nodes == {"a", "b", "c", "x", "y"}

@@ -12,6 +12,8 @@ sample_video_frames end to end; the MP4 leg lives in test_mp4mux.py.
 
 from __future__ import annotations
 
+from unittest import mock
+
 import numpy as np
 import pytest
 
@@ -116,7 +118,7 @@ class TestDe265Decode:
         (y, u, v, layout, _mtrx, _full), = decode_hevc_frames_yuv(
             params + samples)
         assert layout == 1  # 4:2:0
-        hy, hcb, hcr = decode_heif_native_yuv(heic, chroma="420")
+        hy, hcb, hcr = decode_heif_native_yuv(heic)
         ydiff = np.abs(y[:hy.shape[0], :hy.shape[1]].astype(np.int16)
                        - hy.astype(np.int16))
         assert ydiff.max() <= 1 and (ydiff > 0).sum() <= 4
@@ -206,13 +208,13 @@ class TestNalFraming:
 
 class TestMkvHevc:
     def _mux(self, pxs, frame_duration_ms=40):
-        from graphrag_mrkr_2_spark.functions.av1codec import mux_mkv_video
+        from graphrag_mrkr_2_spark.functions import av1codec
 
         record, samples = encode_hevc_samples(pxs)
-        return mux_mkv_video(samples, 16, 12,
-                             codec_id=b"V_MPEGH/ISO/HEVC",
-                             codec_private=record,
-                             frame_duration_ms=frame_duration_ms)
+        with mock.patch.multiple(av1codec, MKV_VIDEO_CODEC_PRIVATE=record,
+                                 MKV_FRAME_MS=frame_duration_ms):
+            return av1codec.mux_mkv_video(samples, 16, 12,
+                                          codec_id=b"V_MPEGH/ISO/HEVC")
 
     def test_mux_demux_decode_roundtrip(self):
         _require_hevc()

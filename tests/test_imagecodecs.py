@@ -19,6 +19,7 @@ from graphrag_mrkr_2_spark.functions.imagecodecs import (
     encode_png,
     sniff_image,
 )
+from helpers import image_features_binned
 
 
 class TestPNG:
@@ -202,8 +203,6 @@ class TestSparkWiring:
     def test_image_features_uses_real_pixels(self, spark):
         """A black PNG and a white PNG must land their full histogram mass
         in the first/last bin — impossible with the hash-seeded fake."""
-        from graphrag_mrkr_2_spark.operators.multimodal import image_features
-
         black = encode_png(np.zeros((8, 8, 3), dtype=np.uint8))
         white = encode_png(np.full((8, 8, 3), 255, dtype=np.uint8))
         media = spark.createDataFrame(
@@ -216,7 +215,7 @@ class TestSparkWiring:
         )
         feats = {
             r["media_id"]: r["feature"]
-            for r in image_features(media, dim=4, strict=True, decoder=False).collect()
+            for r in image_features_binned(media, 4, strict=True, decoder=False).collect()
         }
         assert feats["black"][0] == pytest.approx(1.0)
         assert feats["white"][-1] == pytest.approx(1.0)
@@ -295,7 +294,7 @@ class TestAnimatedGif:
             np.full((5, 6, 3), 10, dtype=np.uint8),
             np.full((5, 6, 3), 200, dtype=np.uint8),
         ]
-        data = encode_gif_frames(frames)
+        data = encode_gif_frames(frames, [100] * len(frames))
         assert (decode_gif(data) == gif_frames(data)[0][1]).all()
 
     def test_transparency_and_partial_frame_compositing(self):
@@ -372,6 +371,6 @@ class TestAnimatedGif:
         a = np.zeros((4, 4, 3), dtype=np.uint8)
         b = np.zeros((2, 2, 3), dtype=np.uint8)
         with pytest.raises(ValueError, match="uniform"):
-            encode_gif_frames([a, b])
+            encode_gif_frames([a, b], [100, 100])
         with pytest.raises(ValueError, match="delays"):
             encode_gif_frames([a, a], delays_ms=[10])

@@ -20,7 +20,8 @@ from graphrag_mrkr_2_spark.functions.imagecodecs import (
     encode_gif,
     encode_png,
 )
-from graphrag_mrkr_2_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
+from graphrag_mrkr_2_spark.functions.jpegcodec import decode_jpeg
+from helpers import encode_jpeg_at, image_features_binned
 
 
 def _imageio_read(spark, data: bytes) -> np.ndarray:
@@ -130,7 +131,7 @@ class TestOursToImageIO:
     def test_jpeg(self, spark, subsampling):
         yy, xx = np.mgrid[0:24, 0:32]
         px = np.stack([40 + yy * 2, 60 + xx, 50 + yy + xx], axis=2).astype(np.uint8)
-        data = encode_jpeg(px, quality=95, subsampling=subsampling)
+        data = encode_jpeg_at(px, quality=95, subsampling=subsampling)
         got = _imageio_read(spark, data)
         err = np.abs(got.astype(int) - px.astype(int))
         assert err.max() <= 8, (subsampling, int(err.max()))  # encoder loss
@@ -213,10 +214,7 @@ class TestImageIOToOurs:
         """Operator-level wiring: a progressive JPEG must flow through
         with_probed_media → image_features in STRICT mode (real decode,
         no quarantine fallback) with correct probed dimensions."""
-        from graphrag_mrkr_2_spark.operators.multimodal import (
-            image_features,
-            with_probed_media,
-        )
+        from graphrag_mrkr_2_spark.operators.multimodal import with_probed_media
 
         yy, xx = np.mgrid[0:24, 0:32]
         px = np.stack([40 + yy * 2, 60 + xx, 50 + yy + xx], axis=2).astype(np.uint8)
@@ -227,7 +225,7 @@ class TestImageIOToOurs:
         media = with_probed_media(raw)
         meta = media.collect()[0]["meta"]
         assert meta["codec"] == "jpeg" and meta["width"] == 32 and meta["height"] == 24
-        feats = image_features(media, dim=8, strict=True, decoder=False).collect()
+        feats = image_features_binned(media, 8, strict=True, decoder=False).collect()
         assert len(feats) == 1
         hist = np.array(feats[0]["feature"])
         assert hist.sum() == pytest.approx(1.0) and (hist >= 0).all()

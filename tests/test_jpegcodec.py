@@ -15,6 +15,7 @@ from graphrag_mrkr_2_spark.functions.jpegcodec import (
     decode_jpeg,
     encode_jpeg,
 )
+from helpers import encode_jpeg_at, image_features_binned
 
 
 class TestTables:
@@ -31,7 +32,7 @@ class TestRoundtrip:
     def test_constant_image_exact(self):
         for v in (0, 77, 128, 255):
             px = np.full((16, 16, 3), v, dtype=np.uint8)
-            back = decode_jpeg(encode_jpeg(px, quality=90))
+            back = decode_jpeg(encode_jpeg_at(px, quality=90))
             assert back.shape == px.shape
             assert int(np.abs(back.astype(int) - int(v)).max()) <= 1
 
@@ -40,14 +41,14 @@ class TestRoundtrip:
         px = np.stack(
             [40 + yy * 2, 60 + xx, 50 + yy + xx], axis=2
         ).astype(np.uint8)
-        back = decode_jpeg(encode_jpeg(px, quality=95))
+        back = decode_jpeg(encode_jpeg_at(px, quality=95))
         err = np.abs(back.astype(int) - px.astype(int))
         assert err.max() <= 4, err.max()
 
     def test_noise_image_bounded(self):
         rng = np.random.RandomState(11)
         px = rng.randint(0, 256, size=(24, 24, 3), dtype=np.uint8)
-        back = decode_jpeg(encode_jpeg(px, quality=95))
+        back = decode_jpeg(encode_jpeg_at(px, quality=95))
         err = np.abs(back.astype(int) - px.astype(int))
         # noise is the worst case for DCT coding; q95 keeps it moderate
         assert err.mean() < 12, err.mean()
@@ -59,7 +60,7 @@ class TestRoundtrip:
         )
         errs = []
         for q in (30, 60, 95):
-            back = decode_jpeg(encode_jpeg(px, quality=q))
+            back = decode_jpeg(encode_jpeg_at(px, quality=q))
             errs.append(float(np.abs(back.astype(int) - px.astype(int)).mean()))
         assert errs[0] >= errs[1] >= errs[2]
 
@@ -69,7 +70,7 @@ class TestRoundtrip:
             px = np.clip(
                 rng.randint(60, 90, size=(h, w, 3)).astype(np.uint8), 0, 255
             )
-            back = decode_jpeg(encode_jpeg(px, quality=95))
+            back = decode_jpeg(encode_jpeg_at(px, quality=95))
             assert back.shape == (h, w, 3)
             assert np.abs(back.astype(int) - px.astype(int)).mean() < 16
 
@@ -78,23 +79,23 @@ class TestRoundtrip:
         per MCU) and the 2x chroma upsampling path — untouched by 4:4:4."""
         yy, xx = np.mgrid[0:33, 0:47]
         px = np.stack([40 + yy * 2, 60 + xx, 50 + yy + xx], axis=2).astype(np.uint8)
-        back = decode_jpeg(encode_jpeg(px, quality=95, subsampling="420"))
+        back = decode_jpeg(encode_jpeg_at(px, quality=95, subsampling="420"))
         assert back.shape == px.shape
         err = np.abs(back.astype(int) - px.astype(int))
         assert err.max() <= 8 and err.mean() < 1.5
         # constant image through 4:2:0 is exact
         const = np.full((20, 20, 3), 99, dtype=np.uint8)
-        back_c = decode_jpeg(encode_jpeg(const, quality=90, subsampling="420"))
+        back_c = decode_jpeg(encode_jpeg_at(const, quality=90, subsampling="420"))
         assert int(np.abs(back_c.astype(int) - 99).max()) == 0
 
     def test_bad_subsampling_rejected(self):
         with pytest.raises(ValueError, match="subsampling"):
-            encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8), subsampling="422")
+            encode_jpeg_at(np.zeros((8, 8, 3), dtype=np.uint8), subsampling="422")
 
     def test_grayscale(self):
         yy, xx = np.mgrid[0:16, 0:16]
         px = (yy * 8 + xx).astype(np.uint8)
-        back = decode_jpeg(encode_jpeg(px, quality=95))
+        back = decode_jpeg(encode_jpeg_at(px, quality=95))
         assert back.shape == (16, 16, 1)
         assert np.abs(back[:, :, 0].astype(int) - px.astype(int)).max() <= 6
 
@@ -151,21 +152,19 @@ class TestDispatch:
         from graphrag_mrkr_2_spark.functions.imagecodecs import decode_image
 
         px = np.full((9, 11, 3), 130, dtype=np.uint8)
-        back = decode_image(encode_jpeg(px, quality=90))
+        back = decode_image(encode_jpeg_at(px, quality=90))
         assert back.shape == (9, 11, 3)
         assert int(np.abs(back.astype(int) - 130).max()) <= 1
 
     @pytest.mark.spark
     def test_image_features_decodes_jpeg(self, spark):
-        from graphrag_mrkr_2_spark.operators.multimodal import image_features
-
-        dark = encode_jpeg(np.full((8, 8, 3), 5, dtype=np.uint8), quality=95)
+        dark = encode_jpeg_at(np.full((8, 8, 3), 5, dtype=np.uint8), quality=95)
         media = spark.createDataFrame(
             [("d", "image", bytearray(dark), ("jpeg", 8, 8, None))],
             "media_id string, kind string, payload binary, "
             "meta struct<codec:string,width:int,height:int,duration_ms:int>",
         )
-        feats = image_features(media, dim=4, strict=True, decoder=False).collect()
+        feats = image_features_binned(media, 4, strict=True, decoder=False).collect()
         assert feats[0]["feature"][0] == pytest.approx(1.0)
 
 

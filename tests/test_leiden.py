@@ -7,7 +7,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from graphrag_mrkr_2_spark.functions.leiden import leiden_communities, modularity
+from graphrag_mrkr_2_spark.functions.leiden import leiden_communities
+from helpers import modularity
 
 
 def clique(prefix: str, n: int, w: float = 1.0):
@@ -49,7 +50,8 @@ class TestPlanted:
 
     def test_isolated_nodes_get_own_communities(self):
         _, es = clique("c", 4)
-        mem = leiden_communities(es, nodes=["c0", "c1", "c2", "c3", "lone1", "lone2"])
+        # isolated nodes: zero-weight self-loops put them in the graph
+        mem = leiden_communities(es + [(n, n, 0.0) for n in ("lone1", "lone2")])
         assert mem["lone1"] != mem["lone2"]
         assert mem["lone1"] not in {mem["c0"]}
 
@@ -212,7 +214,8 @@ class TestIgraphAB:
                 if rng.random() < p:
                     edges.append((nodes[i], nodes[j], 1.0))
 
-        ours = leiden_communities(edges, nodes=nodes, seed=seed)
+        # zero-weight self-loops first: every node indexed in igraph's order
+        ours = leiden_communities([(n, n, 0.0) for n in nodes] + edges, seed=seed)
 
         g = igraph.Graph()
         g.add_vertices(nodes)

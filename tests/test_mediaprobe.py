@@ -106,12 +106,15 @@ class TestMp4:
         assert out["kind"] == "video" and out["codec"] is None
 
 
-def _fmp4(n=10, **kw) -> bytes:
-    from graphrag_mrkr_2_spark.functions.mp4mux import mux_fmp4_video
+def _fmp4(n=10, mehd=False, sidx=False) -> bytes:
+    from unittest import mock
 
-    return mux_fmp4_video([bytes([i]) * 6 for i in range(n)], 8, 8,
-                          "hvc1", b"\x01" * 23, frame_duration_ms=40,
-                          samples_per_fragment=3, **kw)
+    from graphrag_mrkr_2_spark.functions import mp4mux
+
+    with mock.patch.multiple(mp4mux, FMP4_SAMPLES_PER_FRAGMENT=3,
+                             FMP4_MEHD=mehd, FMP4_SIDX=sidx):
+        return mp4mux.mux_fmp4_video([bytes([i]) * 6 for i in range(n)], 8, 8,
+                                     "hvc1", b"\x01" * 23)
 
 
 def _sidx(ref_id, timescale, entries) -> bytes:

@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import ctypes
 import ctypes.util
+from unittest import mock
 
 import numpy as np
 import pytest
 
+from graphrag_mrkr_2_spark.functions import av1codec
 from graphrag_mrkr_2_spark.functions.av1codec import (
     mkv_video_samples,
     mux_mkv_video,
@@ -79,8 +81,8 @@ class TestVp8InMkv:
     def _fixture(self, lib, n=3, frame_duration_ms=40):
         webps = [_encode_webp(lib, _smooth(48, 64, seed=i)) for i in range(n)]
         payloads = [_walk_chunks(w)[b"VP8 "] for w in webps]
-        mkv = mux_mkv_video(payloads, 64, 48, codec_id=b"V_VP8",
-                            frame_duration_ms=frame_duration_ms)
+        with mock.patch.object(av1codec, "MKV_FRAME_MS", frame_duration_ms):
+            mkv = mux_mkv_video(payloads, 64, 48, codec_id=b"V_VP8")
         return webps, mkv
 
     def test_probe_classifies_vp8_track(self, webp_lib):
@@ -116,9 +118,8 @@ class TestVp8InMkv:
         webps = [_encode_webp(webp_lib, _smooth(48, 64, seed=i))
                  for i in range(3)]
         payloads = [_walk_chunks(w)[b"VP8 "] for w in webps]
-        mkv = mux_mkv_video(payloads, 64, 48, codec_id=b"V_VP8",
-                            frame_duration_ms=40,
-                            keyframes=[True, False, True])
+        with mock.patch.object(av1codec, "MKV_VIDEO_KEYFRAMES", [True, False, True]):
+            mkv = mux_mkv_video(payloads, 64, 48, codec_id=b"V_VP8")
         df = spark.createDataFrame(
             [("vid0", "video", mkv, {})],
             "media_id string, kind string, payload binary, "

@@ -11,9 +11,12 @@ self-consistent.
 
 from __future__ import annotations
 
+from unittest import mock
+
 import numpy as np
 import pytest
 
+from graphrag_mrkr_2_spark.functions import mp4mux
 from graphrag_mrkr_2_spark.functions.mp4mux import (
     mp4_video_samples,
     mp4_video_track_info,
@@ -53,8 +56,8 @@ class TestMuxDemux:
         """Synthetic (non-coded) samples: the tables must round-trip
         byte-for-byte regardless of codec payload contents."""
         samples = [bytes([i]) * (10 + 7 * i) for i in range(5)]
-        mp4 = mux_mp4_video(samples, 64, 48, "hvc1", b"\x01" + b"\x00" * 22,
-                            frame_duration_ms=33, samples_per_chunk=2)
+        with mock.patch.object(mp4mux, "MP4_FRAME_MS", 33):
+            mp4 = mux_mp4_video(samples, 64, 48, "hvc1", b"\x01" + b"\x00" * 22)
         got = mp4_video_samples(mp4)
         assert [p for _, _, p in got] == samples
         assert [t for t, _, _ in got] == [0, 33, 66, 99, 132]
@@ -62,8 +65,8 @@ class TestMuxDemux:
 
     def test_single_chunk_layout(self):
         samples = [b"abc", b"defg", b"h"]
-        mp4 = mux_mp4_video(samples, 8, 8, "av01", b"\x81\x05\x0c\x00",
-                            samples_per_chunk=10)
+        with mock.patch.object(mp4mux, "MP4_SAMPLES_PER_CHUNK", 10):
+            mp4 = mux_mp4_video(samples, 8, 8, "av01", b"\x81\x05\x0c\x00")
         info = mp4_video_track_info(mp4)
         assert [p for _, _, p in info["samples"]] == samples
         assert info["codec"] == "av01"
@@ -73,8 +76,8 @@ class TestMuxDemux:
         from graphrag_mrkr_2_spark.functions.mediaprobe import probe_mp4
 
         samples = [b"x" * 20] * 4
-        mp4 = mux_mp4_video(samples, 320, 240, "hvc1", b"\x01" * 23,
-                            frame_duration_ms=25)
+        with mock.patch.object(mp4mux, "MP4_FRAME_MS", 25):
+            mp4 = mux_mp4_video(samples, 320, 240, "hvc1", b"\x01" * 23)
         meta = probe_mp4(mp4)
         assert meta["kind"] == "video"
         assert meta["codec"] == "hvc1"
@@ -97,8 +100,7 @@ class TestMuxDemux:
         """One sample with samples_per_chunk=2: stsc must declare the REAL
         count (1), not the nominal run size — sum over stsc chunks must
         equal stsz's sample count or conforming readers walk past mdat."""
-        mp4 = mux_mp4_video([b"z" * 9], 8, 8, "hvc1", b"\x01" * 23,
-                            samples_per_chunk=2)
+        mp4 = mux_mp4_video([b"z" * 9], 8, 8, "hvc1", b"\x01" * 23)
         import struct
 
         stsc = mp4.find(b"stsc")
@@ -164,8 +166,7 @@ class TestFragmentedMp4:
 
     def test_roundtrip_payloads_timestamps(self):
         samples = [bytes([i]) * (10 + 3 * i) for i in range(5)]
-        fmp4 = mux_fmp4_video(samples, 16, 12, "hvc1", b"\x01" * 23,
-                              frame_duration_ms=40, samples_per_fragment=2)
+        fmp4 = mux_fmp4_video(samples, 16, 12, "hvc1", b"\x01" * 23)
         got = mp4_video_samples(fmp4)
         assert [p for _, _, p in got] == samples
         assert [t for t, _, _ in got] == [0, 40, 80, 120, 160]
@@ -173,8 +174,8 @@ class TestFragmentedMp4:
 
     def test_keyframe_flags_roundtrip(self):
         samples = [b"x" * 9] * 4
-        fmp4 = mux_fmp4_video(samples, 8, 8, "av01", b"\x81\x05\x0c\x00",
-                              keyframes=[True, False, False, True])
+        with mock.patch.object(mp4mux, "FMP4_KEYFRAMES", [True, False, False, True]):
+            fmp4 = mux_fmp4_video(samples, 8, 8, "av01", b"\x81\x05\x0c\x00")
         got = mp4_video_samples(fmp4)
         assert [k for _, k, _ in got] == [True, False, False, True]
 
@@ -272,9 +273,9 @@ class TestFragmentedMp4:
             mp4_video_samples(self._hand_fragment(truns, b"AAAABBBB"))
 
     def test_keyframes_length_mismatch_raises(self):
-        with pytest.raises(ValueError):
-            mux_fmp4_video([b"a", b"b", b"c"], 8, 8, "hvc1", b"\x01" * 23,
-                           keyframes=[True])
+        with mock.patch.object(mp4mux, "FMP4_KEYFRAMES", [True]), \
+                pytest.raises(ValueError):
+            mux_fmp4_video([b"a", b"b", b"c"], 8, 8, "hvc1", b"\x01" * 23)
 
     def test_hevc_decode_through_fragments(self):
         _require_hevc()
@@ -286,8 +287,7 @@ class TestFragmentedMp4:
 
         pxs = _corpus(n=5)
         record, samples = _hevc_fixture(pxs)
-        fmp4 = mux_fmp4_video(samples, 16, 12, "hvc1", record,
-                              samples_per_fragment=2)
+        fmp4 = mux_fmp4_video(samples, 16, 12, "hvc1", record)
         info = mp4_video_track_info(fmp4)
         cfg = parse_hvcc(info["config"])
         nals = list(cfg["param_nals"])
@@ -308,8 +308,8 @@ class TestFragmentedMp4:
 
         pxs = _corpus(n=5)
         record, samples = _hevc_fixture(pxs)
-        fmp4 = mux_fmp4_video(samples, 16, 12, "hvc1", record,
-                              frame_duration_ms=500)
+        with mock.patch.object(mp4mux, "MP4_FRAME_MS", 500):
+            fmp4 = mux_fmp4_video(samples, 16, 12, "hvc1", record)
         df = spark.createDataFrame(
             [("vid0", "video", fmp4, {})],
             "media_id string, kind string, payload binary, "
@@ -333,8 +333,7 @@ class TestHevcInMp4:
 
         pxs = _corpus(n=5)
         record, samples = _hevc_fixture(pxs)
-        mp4 = mux_mp4_video(samples, 16, 12, "hvc1", record,
-                            samples_per_chunk=2)  # ragged: chunks 2+2+1
+        mp4 = mux_mp4_video(samples, 16, 12, "hvc1", record)  # ragged: chunks 2+2+1
         info = mp4_video_track_info(mp4)
         cfg = parse_hvcc(info["config"])
         nals = list(cfg["param_nals"])
@@ -355,8 +354,8 @@ class TestHevcInMp4:
 
         pxs = _corpus(n=5)
         record, samples = _hevc_fixture(pxs)
-        mp4 = mux_mp4_video(samples, 16, 12, "hvc1", record,
-                            frame_duration_ms=500)
+        with mock.patch.object(mp4mux, "MP4_FRAME_MS", 500):
+            mp4 = mux_mp4_video(samples, 16, 12, "hvc1", record)
         df = spark.createDataFrame(
             [("vid0", "video", mp4, {})],
             "media_id string, kind string, payload binary, "
@@ -436,9 +435,9 @@ class TestAv1InMp4:
             pytest.skip("AVIF encode / dav1d not available")
         pxs = _corpus(n=3)
         avifs = [encode_heif_lossless(p, fmt="avif") for p in pxs]
-        mp4 = mux_mp4_video([avif_primary_obu(a) for a in avifs], 16, 12,
-                            "av01", heif_item_config(avifs[0], b"av1C"),
-                            frame_duration_ms=1000)
+        with mock.patch.object(mp4mux, "MP4_FRAME_MS", 1000):
+            mp4 = mux_mp4_video([avif_primary_obu(a) for a in avifs], 16, 12,
+                                "av01", heif_item_config(avifs[0], b"av1C"))
         df = spark.createDataFrame(
             [("vid0", "video", mp4, {})],
             "media_id string, kind string, payload binary, "

@@ -1,14 +1,19 @@
 """Multimodal plumbing: schema, batch shape, determinism, strict stubs."""
 
+from unittest import mock
+
 import pytest
 from pyspark.sql import functions as F
 
+from graphrag_mrkr_2_spark.functions import avicodec
+from graphrag_mrkr_2_spark.operators import multimodal
 from graphrag_mrkr_2_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     image_features,
     metadata_only_stats,
     sample_video_frames,
 )
+from helpers import image_features_binned
 
 
 @pytest.fixture(scope="module")
@@ -24,8 +29,8 @@ def media_df(spark):
 
 @pytest.mark.spark
 def test_image_features_shape_and_determinism(media_df):
-    f1 = {r["media_id"]: r["feature"] for r in image_features(media_df, dim=16).collect()}
-    f2 = {r["media_id"]: r["feature"] for r in image_features(media_df, dim=16).collect()}
+    f1 = {r["media_id"]: r["feature"] for r in image_features(media_df).collect()}
+    f2 = {r["media_id"]: r["feature"] for r in image_features(media_df).collect()}
     assert set(f1) == {"m1", "m2"}  # only images
     assert all(len(v) == 16 for v in f1.values())
     assert f1 == f2  # deterministic fake decode
@@ -85,7 +90,8 @@ class TestProbeMedia:
             assert (p["width"], p["height"]) == (34, 12), codec
         wav = probe_media(encode_wav(np.zeros(16000, dtype=np.int16), 8000))
         assert (wav["kind"], wav["codec"], wav["duration_ms"]) == ("audio", "wav", 2000)
-        avi = probe_media(encode_avi_mjpeg([encode_jpeg(px)] * 10, 34, 12, fps=5))
+        with mock.patch.object(avicodec, "AVI_FPS", 5):
+            avi = probe_media(encode_avi_mjpeg([encode_jpeg(px)] * 10, 34, 12))
         assert (avi["kind"], avi["codec"], avi["duration_ms"]) == ("video", "mjpg", 2000)
         assert (avi["width"], avi["height"]) == (34, 12)
         assert probe_media(b"garbage")["kind"] is None
@@ -101,7 +107,6 @@ class TestProbeMedia:
         from graphrag_mrkr_2_spark.functions.imagecodecs import encode_png
         from graphrag_mrkr_2_spark.operators.multimodal import (
             audio_features,
-            image_features,
             with_probed_media,
         )
 
@@ -117,9 +122,10 @@ class TestProbeMedia:
         metas = {r["media_id"]: r["meta"] for r in media.collect()}
         assert metas["img"]["width"] == 8 and metas["img"]["codec"] == "png"
         assert metas["aud"]["duration_ms"] == 100
-        feats = image_features(media, dim=4, strict=True).collect()
+        feats = image_features_binned(media, 4, strict=True).collect()
         assert len(feats) == 1 and feats[0]["feature"][-1] == pytest.approx(1.0)
-        afeats = audio_features(media, strict=True).collect()
+        with mock.patch.object(multimodal, "AUDIO_STRICT", True):
+            afeats = audio_features(media).collect()
         assert len(afeats) == 1 and afeats[0]["duration_ms"] == 100
 
 

@@ -27,6 +27,7 @@ from graphrag_mrkr_2_spark.functions.imagecodecs import (
 )
 from graphrag_mrkr_2_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
 from graphrag_mrkr_2_spark.functions.webpcodec import decode_webp, encode_webp_lossless
+from helpers import encode_jpeg_at
 
 
 def _rng(seed=11):
@@ -94,7 +95,7 @@ class TestJpegParity:
     def test_color_bit_identical(self, subsampling, shape):
         h, w = shape
         for px in (_rng(h * w).randint(0, 256, size=(h, w, 3), dtype=np.uint8), _smooth(h, w)):
-            payload = encode_jpeg(px, quality=85, subsampling=subsampling)
+            payload = encode_jpeg_at(px, quality=85, subsampling=subsampling)
             pure = decode_jpeg(payload)
             native = nc.decode_jpeg_native(payload)
             assert native is not None
@@ -104,7 +105,7 @@ class TestJpegParity:
     @needs_jpeg
     def test_grayscale_bit_identical(self):
         px = _rng(7).randint(0, 256, size=(21, 18), dtype=np.uint8)
-        payload = encode_jpeg(px, quality=90)
+        payload = encode_jpeg_at(px, quality=90)
         pure = decode_jpeg(payload)
         native = nc.decode_jpeg_native(payload)
         assert native is not None
@@ -113,7 +114,7 @@ class TestJpegParity:
 
     @needs_jpeg
     def test_corrupt_payload_returns_none(self):
-        payload = encode_jpeg(_smooth(16, 16), quality=85)
+        payload = encode_jpeg_at(_smooth(16, 16), quality=85)
         assert nc.decode_jpeg_native(payload[: len(payload) // 2] ) is None
         assert nc.decode_jpeg_native(b"\xff\xd8\xff\xe0garbage") is None
 
@@ -184,8 +185,8 @@ class TestImageFeaturesInjection:
 
         rows = []
         px = _smooth(24, 24)
-        rows.append(("jpg444", encode_jpeg(px, quality=85, subsampling="444")))
-        rows.append(("jpg420", encode_jpeg(px, quality=85, subsampling="420")))
+        rows.append(("jpg444", encode_jpeg_at(px, quality=85, subsampling="444")))
+        rows.append(("jpg420", encode_jpeg_at(px, quality=85, subsampling="420")))
         rows.append(("png", encode_png(px)))
         rows.append(("gif", encode_gif((px // 64 * 64).astype(np.uint8))))  # <=256 colors
         rows.append(

@@ -248,12 +248,15 @@ class TestLanguageDetection:
         )
         assert detect_ocr_language(de) == "deu"
 
-    def test_short_text_falls_back(self):
-        assert detect_ocr_language("hi there", "eng") == "eng"
-        assert detect_ocr_language(None, "fra") == "fra"
+    def test_short_text_falls_back(self, monkeypatch):
+        from graphrag_mrkr_2_spark.functions import ocr
+
+        assert detect_ocr_language("hi there") == "eng"
+        monkeypatch.setattr(ocr, "OCR_DEFAULT_LANGUAGE", "fra")
+        assert detect_ocr_language(None) == "fra"
 
     def test_undetectable_falls_back(self):
-        assert detect_ocr_language("zzz qqq xxx www yyy kkk jjj mmm", "eng") == "eng"
+        assert detect_ocr_language("zzz qqq xxx www yyy kkk jjj mmm") == "eng"
 
 
 class TestProcessStandaloneImage:
@@ -346,10 +349,12 @@ class TestExtractImageTextSpark:
         assert out["img_text"]["content"] is None
         assert "no OCR engine" in out["img_text"]["error"]
 
-    def test_ocr_disabled_yields_nothing(self, spark):
+    def test_ocr_disabled_yields_nothing(self, spark, monkeypatch):
+        from graphrag_mrkr_2_spark.operators import multimodal
         from graphrag_mrkr_2_spark.operators.multimodal import extract_image_text
 
-        df = extract_image_text(self._media(spark), ocr=_fake_ocr, enable_ocr=False)
+        monkeypatch.setattr(multimodal, "OCR_ENABLED", False)
+        df = extract_image_text(self._media(spark), ocr=_fake_ocr)
         assert df.count() == 0
         assert [f.name for f in df.schema.fields[:2]] == ["media_id", "content"]
 
@@ -379,11 +384,13 @@ class TestReadImageDocumentsE2E:
         assert all(c["content"] in ENGLISH for c in chunks)
         assert chunks[0]["content"].startswith("The quick brown fox")
 
-    def test_ocr_disabled_loader_returns_empty(self, spark, tmp_path):
+    def test_ocr_disabled_loader_returns_empty(self, spark, tmp_path, monkeypatch):
+        from graphrag_mrkr_2_spark.operators import multimodal
         from graphrag_mrkr_2_spark.sources.loaders import read_image_documents
 
+        monkeypatch.setattr(multimodal, "OCR_ENABLED", False)
         (tmp_path / "scan.png").write_bytes(encode_png(_text_image()))
         assert (
-            read_image_documents(spark, str(tmp_path), ocr=_fake_ocr, enable_ocr=False).count()
+            read_image_documents(spark, str(tmp_path), ocr=_fake_ocr).count()
             == 0
         )

@@ -1,10 +1,14 @@
-"""Census of the package's settable values: every defaulted parameter is passed.
+"""Census of the package's settable values: every defaulted parameter is
+passed by a product caller, or is kept on purpose.
 
 Each defaulted parameter of a module-level function or class method in
-``graphrag_mrkr_2_spark/`` must be passed by at least one call site in the
-repo (the package, ``tests/``, ``perfbench/``, ``scripts/``, ``plans/`` and the
-root ``*.py``). A default that no caller overrides is a configuration nobody
-runs: turn it into the value every caller gets, or add the call that needs it.
+``graphrag_mrkr_2_spark/`` must be passed by at least one product call site:
+the package itself, ``plans/``, ``scripts/``, ``perfbench/`` and the root
+``*.py``. Files under ``tests/`` are not callers: a default that only a test
+overrides is a configuration the product never runs. Turn it into the value
+every caller gets (a module constant, which a test may monkeypatch), or add
+the product call that needs it. The only parameters allowed to stay
+unpassed are the ``KEPT`` entries, each with its reason.
 
 How a call is matched: by the callee's bare name (``f(...)``, ``obj.f(...)``;
 ``Cls(...)`` for ``Cls.__init__``), and through a dispatch table (a dict
@@ -17,9 +21,9 @@ counts as passing every parameter it can reach, and ``__main__`` prints it
 for a check by hand. A function that forwards its own never-passed
 parameter to another passes nothing.
 
-The only parameters allowed to stay unpassed are the seams where a real model
-replaces the mock one. AST only; no Spark. ``python tests/test_option_census.py``
-prints the census.
+AST only; no Spark. ``python tests/test_option_census.py`` prints the
+``KEPT`` list with reasons and the counts under both rules (tests counted
+as callers, and product callers only).
 """
 
 import ast
@@ -28,15 +32,36 @@ import pathlib
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "graphrag_mrkr_2_spark"
 
-SEAMS = {
-    ("extract_mentions_fused", "llm"),
-    ("extract_mentions", "llm"),
-    ("run_reference_pipeline", "llm"),
-    ("summarize_documents", "summarizer"),
-    ("summarize_descriptions", "summarizer"),
-    ("rerank_candidates", "scorer"),
-    ("StructuredQueryExecutor.__init__", "sql_corrector"),
-    ("StructuredQueryExecutor.__init__", "mention_extractor"),
+_SEAM = "model seam: "
+_CAPABILITY = "north-star capability no product caller composes yet: "
+_CFG = "PipelineConfig: the reference's settings.py values, hashed into the snapshot fingerprint"
+
+KEPT = {
+    ("extract_mentions_fused", "llm"): _SEAM + "a real LLM client replaces the mock extraction LLM",
+    ("run_reference_pipeline", "llm"): _SEAM + "a real LLM client replaces the mock in the sequential oracle",
+    ("summarize_documents", "summarizer"): _SEAM + "a real LLM summarizer replaces the deterministic one",
+    ("summarize_descriptions", "summarizer"): _SEAM + "a real LLM summarizer replaces the deterministic one",
+    ("classify_documents", "classifier"): _SEAM + "a real document classifier replaces the deterministic one",
+    ("expand_query_terms", "llm"): _SEAM + "a real LLM replaces the deterministic query-expansion stand-in",
+    ("rerank_candidates", "scorer"): _SEAM + "a cross-encoder replaces the lexical scorer",
+    ("StructuredQueryExecutor.__init__", "sql_generator"): _SEAM + "a text-to-SQL LLM replaces the template generator",
+    ("StructuredQueryExecutor.__init__", "sql_corrector"): _SEAM + "an LLM SQL fixer replaces the fallback-query stand-in",
+    ("StructuredQueryExecutor.__init__", "mention_extractor"): _SEAM + "an LLM mention extractor replaces the quoted/Title-Case stand-in",
+    ("StructuredQueryExecutor.__init__", "node_embeddings"): _SEAM + "a real model's node embeddings replace the pseudo-embedding of names",
+    ("read_image_documents", "ocr"): _SEAM + "a tesseract-class OCR engine plugs in; without one no text is extracted",
+    ("token_budget_shards", "snapshot_dir"): "deployment setting: where the shard snapshot is written",
+    ("entity_mapping", "vec_col"): _CAPABILITY + "the embedding-cosine scoring leg (SparkER)",
+    ("entity_mapping", "cosine_threshold"): _CAPABILITY + "the embedding-cosine scoring leg (SparkER)",
+    ("entity_mapping", "tfidf_threshold"): _CAPABILITY + "the TF-IDF cosine scoring leg (SparkER)",
+    ("score_pairs", "vec_col"): _CAPABILITY + "the embedding-cosine score of the ER candidates",
+    ("SnapshotCatalog.write", "metrics"): _CAPABILITY + "per-snapshot metrics in the catalog",
+    ("SnapshotCatalog.write", "partition_by"): _CAPABILITY + "partitioned snapshot tables",
+    ("SnapshotCatalog.read", "snapshot"): _CAPABILITY + "time travel to an older snapshot",
+    ("SnapshotCatalog.read", "with_current_schema"): _CAPABILITY + "reading an old snapshot under the current schema",
+    ("chunk_pages", "cfg"): _CFG,
+    ("with_content_filter", "cfg"): _CFG,
+    ("filter_chunks", "cfg"): _CFG,
+    ("run_kg_pipeline", "cfg"): _CFG,
 }
 
 
@@ -111,14 +136,22 @@ def _arguments(call, pos, dflt, literals, forwarded_kwargs):
     return args, unresolved
 
 
-def census():
-    """Return (defs, never passed {qualname: [params]}, unresolved spread sites)."""
+def _caller_files(with_tests):
+    for p in sorted(ROOT.rglob("*.py")):
+        rel = p.relative_to(ROOT)
+        if ".git" in rel.parts or (rel.parts[0] == "tests" and not with_tests):
+            continue
+        yield rel.as_posix(), p
+
+
+def census(with_tests=False):
+    """Return (defs, never passed {qualname: [params]}, unresolved spread
+    sites), counting product callers only, or tests as well."""
     defs = _definitions()
     by_name = {}
     for q, (name, _, _) in defs.items():
         by_name.setdefault(name, []).append(q)
-    trees = {p.relative_to(ROOT).as_posix(): ast.parse(p.read_text())
-             for p in ROOT.rglob("*.py") if ".git" not in p.parts}
+    trees = {rel: ast.parse(p.read_text()) for rel, p in _caller_files(with_tests)}
     assigns = [n for tree in trees.values() for n in ast.walk(tree) if isinstance(n, ast.Assign)]
     # Literals bound to a name anywhere: a ** spread of a dict literal passes
     # its keys, a * spread of a tuple literal passes that many positionals.
@@ -194,9 +227,13 @@ def _short(q):
 def test_every_default_is_passed_by_some_caller():
     _, never, _ = census()
     found = {(_short(q), p) for q, ps in never.items() for p in ps}
-    assert found == SEAMS, (
-        f"never passed, not a seam: {sorted(found - SEAMS)}; "
-        f"seams now passed or gone: {sorted(SEAMS - found)}")
+    assert found == set(KEPT), (
+        f"never passed by a product caller, not KEPT: {sorted(found - set(KEPT))}; "
+        f"KEPT but now passed or gone: {sorted(set(KEPT) - found)}")
+
+
+def test_every_kept_entry_has_a_reason():
+    assert all(r.strip() for r in KEPT.values())
 
 
 def test_census_sees_the_known_callers():
@@ -211,8 +248,16 @@ if __name__ == "__main__":
     defs, never, spreads = census()
     for s in spreads:
         print(f"unresolved spread, check by hand: {s}")
+    print("KEPT (never passed by a product caller, on purpose):")
+    for (q, p), reason in sorted(KEPT.items()):
+        print(f"  {q}({p}): {reason}")
     for q, ps in never.items():
-        print(f"{q}: {', '.join(ps)}")
+        for p in ps:
+            if (_short(q), p) not in KEPT:
+                print(f"NOT KEPT, never passed by a product caller: {q}: {p}")
     n_dflt = sum(len(d) for _, _, d in defs.values())
-    print(f"{sum(map(len, never.values()))} never passed; "
-          f"{n_dflt} defaulted in {len(defs)} functions and methods")
+    n_never = sum(map(len, never.values()))
+    n_never_tests = sum(map(len, census(with_tests=True)[1].values()))
+    print(f"{n_dflt} defaulted parameters in {len(defs)} functions and methods; "
+          f"never passed: {n_never} counting product callers only, "
+          f"{n_never_tests} counting tests as callers too")

@@ -59,6 +59,7 @@ def test_pin_is_the_only_checkpoint_call():
 def _pinned_outputs(spark):
     """Sorted rows of every table and operator that pins, on the smallest
     inputs their own tests use."""
+    from graphrag_mrkr_2_spark.operators import communities
     from graphrag_mrkr_2_spark.operators.communities import (
         detect_communities,
         normalize_edge_weights,
@@ -84,14 +85,14 @@ def _pinned_outputs(spark):
         "edge_type",
         F.col("strength").cast("double").alias("strength"),
     )
-    out["connected_components"] = rows(
-        graphalgo.connected_components(edges, "src", "dst", local_threshold=0)
-    )
+    out["connected_components"] = rows(graphalgo.star_components(edges, "src", "dst"))
     weighted = project_edges(normalize_edge_weights(edges))
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(graphalgo, "LOCAL_EDGE_LIMIT", 0)
         out["communities_spark"] = rows(detect_communities(weighted))
-    out["communities_lpa"] = rows(detect_communities(weighted, max_component_size=0))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(communities, "MAX_COMPONENT_SIZE", 0)
+        out["communities_lpa"] = rows(detect_communities(weighted))
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     out["minhash_lsh_pairs"] = rows(minhash_lsh_pairs(docs, threshold=0.3))
     return out

@@ -69,7 +69,7 @@ def test_minhash_scan_path_shape(spark):
     test_dedup_ann), fed by ONE exchange that carries compact pre-explode
     rows; never row-at-a-time Python, never a cross join."""
     from graphrag_mrkr_2_spark.operators.dedup import (
-        minhash_lsh_pairs,
+        _minhash_candidates,
         minhash_signatures,
     )
 
@@ -80,7 +80,7 @@ def test_minhash_scan_path_shape(spark):
     assert tree.count("MapInPandas") == 1
     assert tree.count("Exchange") == 1
 
-    plan = _plan(minhash_lsh_pairs(docs, threshold=0.5, verify=False))
+    plan = _plan(_minhash_candidates(docs))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
     # the candidate join is an equi-join on (band, bucket), never a cross

@@ -153,10 +153,8 @@ def test_post_entity_chunk_removal_matches_oracle(spark):
         filter_chunks,
         post_entity_chunk_removal,
     )
-    from graphrag_mrkr_2_spark.operators.triples import (
-        entity_counts_per_chunk,
-        extract_mentions,
-    )
+    from graphrag_mrkr_2_spark.operators.triples import entity_counts_per_chunk
+    from helpers import extract_mentions
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
     word = "abcdefghijklmnopqrstuvwxyzab"  # 28 letters: short once stripped

@@ -3,6 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
+from graphrag_mrkr_2_spark.functions import sentences
+from graphrag_mrkr_2_spark.operators import query
 from graphrag_mrkr_2_spark.functions.sentences import (
     get_sentence_window,
     split_into_sentences,
@@ -38,11 +40,13 @@ def test_sentence_split_min_length_and_fallback():
     assert split_into_sentences("") == []
 
 
-def test_sentence_window_bounds():
+def test_sentence_window_bounds(monkeypatch):
     sents = [f"s{i}" for i in range(10)]
-    assert get_sentence_window(sents, 0, 2) == "s0 s1 s2"
-    assert get_sentence_window(sents, 9, 2) == "s7 s8 s9"
-    assert get_sentence_window(sents, 5, 1) == "s4 s5 s6"
+    monkeypatch.setattr(sentences, "SENTENCE_WINDOW", 2)
+    assert get_sentence_window(sents, 0) == "s0 s1 s2"
+    assert get_sentence_window(sents, 9) == "s7 s8 s9"
+    monkeypatch.setattr(sentences, "SENTENCE_WINDOW", 1)
+    assert get_sentence_window(sents, 5) == "s4 s5 s6"
 
 
 @pytest.fixture(scope="module")
@@ -80,7 +84,7 @@ def test_weighted_fusion(spark):
 
 
 @pytest.mark.spark
-def test_find_scored_paths_matches_reference_semantics(spark):
+def test_find_scored_paths_matches_reference_semantics(spark, monkeypatch):
     """Q5 exact parity: sequential mirror of graph_db.py:4788-4967
     (seed score = importance; per-path visited; per-path 2*beam candidate
     cap by strength; new = 0.5*path + 0.3*strength + 0.2*importance; GLOBAL
@@ -129,17 +133,18 @@ def test_find_scored_paths_matches_reference_semantics(spark):
     edges_df = spark.createDataFrame(
         edges, "source_id string, target_id string, strength double"
     )
+    monkeypatch.setattr(query, "MAX_HOPS", max_hops)
+    monkeypatch.setattr(query, "BEAM_SIZE", beam)
+    monkeypatch.setattr(query, "MIN_STRENGTH", min_s)
     got = {
         (tuple(r["path"]), round(r["score"], 6))
-        for r in find_scored_paths(
-            edges_df, nodes_df, seeds, max_hops=max_hops, beam_size=beam, min_strength=min_s
-        ).collect()
+        for r in find_scored_paths(edges_df, nodes_df, seeds).collect()
     }
     assert got == expected
 
 
 @pytest.mark.spark
-def test_find_scored_paths_dead_end_returns_empty(spark):
+def test_find_scored_paths_dead_end_returns_empty(spark, monkeypatch):
     """Reference (graph_db.py:4950-4956) sets current_paths = next_paths[:beam]
     BEFORE the empty check, so a hop with zero expansions empties the result —
     even when earlier hops found paths."""
@@ -152,10 +157,12 @@ def test_find_scored_paths_dead_end_returns_empty(spark):
         [("a", "b", 0.9)], "source_id string, target_id string, strength double"
     )
     # hop 1 reaches b; hop 2 has no unvisited neighbors -> reference returns []
-    res = find_scored_paths(edges, nodes, ["a"], max_hops=2, beam_size=4).collect()
+    monkeypatch.setattr(query, "BEAM_SIZE", 4)
+    res = find_scored_paths(edges, nodes, ["a"]).collect()
     assert res == []
-    # ... but stopping at max_hops=1 keeps the hop-1 frontier
-    res1 = find_scored_paths(edges, nodes, ["a"], max_hops=1, beam_size=4).collect()
+    # ... but stopping at MAX_HOPS=1 keeps the hop-1 frontier
+    monkeypatch.setattr(query, "MAX_HOPS", 1)
+    res1 = find_scored_paths(edges, nodes, ["a"]).collect()
     assert len(res1) == 1
     assert list(res1[0]["path"]) == ["a", "b"]
     assert res1[0]["score"] == pytest.approx(0.8 * 0.5 + 0.9 * 0.3 + 0.6 * 0.2)
@@ -174,7 +181,7 @@ def test_beam_expand_hops_and_pruning(spark):
         "source_id string, target_id string, strength double",
     )
     seeds = spark.createDataFrame([("a",)], ["seed_id"])
-    res = beam_expand(edges, seeds, max_hops=2, beam_size=8)
+    res = beam_expand(edges, seeds)
     rows = {(r["node"]): (r["hop"], r["path_score"]) for r in res.collect()}
     assert rows["a"][0] == 0
     assert rows["b"] == (1, pytest.approx(0.9))
@@ -184,18 +191,19 @@ def test_beam_expand_hops_and_pruning(spark):
 
 
 @pytest.mark.spark
-def test_beam_size_limits_frontier(spark):
+def test_beam_size_limits_frontier(spark, monkeypatch):
     edges = spark.createDataFrame(
         [("s", f"n{i:02d}", 0.5 + i / 100) for i in range(20)],
         "source_id string, target_id string, strength double",
     )
     seeds = spark.createDataFrame([("s",)], ["seed_id"])
-    res = beam_expand(edges, seeds, max_hops=1, beam_size=8)
+    monkeypatch.setattr(query, "MAX_HOPS", 1)
+    res = beam_expand(edges, seeds)
     assert res.where(F.col("hop") == 1).count() == 8
 
 
 @pytest.mark.spark
-def test_split_sentences_and_windows(chunks_df, spark):
+def test_split_sentences_and_windows(chunks_df, spark, monkeypatch):
     df = spark.createDataFrame(
         [("c1", "First sentence is long enough. Second sentence is longer still. Third one rounds it out.")],
         ["chunk_id", "content"],
@@ -204,7 +212,8 @@ def test_split_sentences_and_windows(chunks_df, spark):
     rows = sents.orderBy("sentence_index").collect()
     assert len(rows) == 3
     assert all(len(r["sentence_id"]) == 16 for r in rows)
-    win = sentence_windows(sents, window_size=1).orderBy("sentence_index").collect()
+    monkeypatch.setattr(sentences, "SENTENCE_WINDOW", 1)
+    win = sentence_windows(sents).orderBy("sentence_index").collect()
     assert win[0]["window_text"].startswith("First sentence")
     assert "Second sentence" in win[0]["window_text"]
     assert "Third" not in win[0]["window_text"]
@@ -311,13 +320,14 @@ class TestGraphExpandChunks:
         exp_ranks = sorted(r["rank"] for r in out if r["is_expansion"])
         assert exp_ranks == [3, 4, 5, 6]
 
-    def test_total_cap_reference_semantics(self, spark):
+    def test_total_cap_reference_semantics(self, spark, monkeypatch):
         """Reference appends THEN checks (graph_reasoning.py:76-81): every
         seed still contributes its best candidate past the cap."""
         from graphrag_mrkr_2_spark.operators.query import graph_expand_chunks
 
         retrieved, similar, chunk_docs = self._fixtures(spark)
-        out = graph_expand_chunks(retrieved, similar, chunk_docs, total_cap=3).collect()
+        monkeypatch.setattr(query, "GRAPH_TOTAL_CAP", 3)
+        out = graph_expand_chunks(retrieved, similar, chunk_docs).collect()
         kept_exp = sorted(
             (r for r in out if r["is_expansion"]), key=lambda r: r["rank"]
         )
@@ -326,14 +336,13 @@ class TestGraphExpandChunks:
         assert [r["chunk_id"] for r in kept_exp] == ["c3", "c6"]
         assert [r["rank"] for r in kept_exp] == [3, 4]
 
-    def test_cap_saturated_still_one_per_seed(self, spark):
+    def test_cap_saturated_still_one_per_seed(self, spark, monkeypatch):
         """n_orig >= cap: the reference still adds one expansion per seed."""
         from graphrag_mrkr_2_spark.operators.query import graph_expand_chunks
 
         retrieved, similar, chunk_docs = self._fixtures(spark)
-        out = graph_expand_chunks(
-            retrieved, similar, chunk_docs, total_cap=2
-        ).collect()
+        monkeypatch.setattr(query, "GRAPH_TOTAL_CAP", 2)
+        out = graph_expand_chunks(retrieved, similar, chunk_docs).collect()
         kept_exp = [r for r in out if r["is_expansion"]]
         assert {r["seed_chunk"] for r in kept_exp} == {"c1", "c2"}
         assert len(kept_exp) == 2  # exactly the per-seed minimum grants
@@ -349,6 +358,6 @@ class TestGraphExpandChunks:
             [("c4", "x1")], "chunk1 string, chunk2 string"
         )
         docs = spark.createDataFrame([("c9", "d9")], "chunk_id string, document_id string")
-        out = graph_expand_chunks(retrieved, similar, docs, max_seeds=3).collect()
+        out = graph_expand_chunks(retrieved, similar, docs).collect()
         # c4 is rank 4 -> NOT a seed; its neighbor never appears
         assert all(r["chunk_id"] != "x1" for r in out)

@@ -482,13 +482,15 @@ def test_adversarial_html_parity(spark):
 
 
 @needs_reference
-def test_ten_megabyte_single_tag_page_chunks():
+def test_ten_megabyte_single_tag_page_chunks(monkeypatch):
     """The 10 MB single-<p> page (VERDICT r3 #8's extreme case) must chunk
     without pathological behavior: full coverage of the text, bounded chunk
     sizes, deterministic ids across two runs."""
+    from graphrag_mrkr_2_spark.sources import pages
     from graphrag_mrkr_2_spark.sources.pages import make_adversarial_page
 
-    page = make_adversarial_page(5, big_page_chars=10_000_000)
+    monkeypatch.setattr(pages, "BIG_PAGE_CHARS", 10_000_000)
+    page = make_adversarial_page(5)
     assert len(page["html"]) >= 10_000_000
 
     ck = HtmlHeadingChunker()

@@ -115,7 +115,7 @@ def test_stream_equals_batch_closed_sessions(spark, tmp_path):
         .parquet(str(stream_dir))
     )
     q = (
-        sessionize_stream(stream, gap_seconds=gap)
+        sessionize_stream(stream)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("sessions_out")

@@ -8,11 +8,12 @@ from graphrag_mrkr_2_spark.functions.embeddings import (
     cosine_similarity,
     pseudo_embedding,
 )
+from graphrag_mrkr_2_spark.operators import similarity
 from graphrag_mrkr_2_spark.operators.similarity import (
-    chunk_similarity_edges,
     entity_similarity_edges,
     with_embeddings,
 )
+from helpers import chunk_similarity_edges, entity_similarity_edges_exact
 
 
 def test_pseudo_embedding_deterministic_unit():
@@ -82,13 +83,13 @@ def test_entity_similarity_edges(spark):
         ("e3", _vec(3, 0.0)),
     ]
     df = spark.createDataFrame(rows, "entity_id string, embedding array<float>")
-    edges = entity_similarity_edges(df, threshold=0.7)  # default lsh path
+    edges = entity_similarity_edges(df)
     got = [(r["id1"], r["id2"]) for r in edges.collect()]
     assert got == [("e1", "e2")]
 
 
 @pytest.mark.spark
-def test_entity_similarity_lsh_equals_exact(spark):
+def test_entity_similarity_lsh_equals_exact(spark, monkeypatch):
     """The default banded-LSH candidate path must reproduce the quadratic
     baseline on planted high-similarity pairs (same posture as
     dedup.embedding_near_dupes: verify-exact, recall-only approximation)."""
@@ -99,13 +100,14 @@ def test_entity_similarity_lsh_equals_exact(spark):
         pert = base[j] + rng.normal(scale=0.05, size=32)
         rows.append((f"p{j:02d}", [float(x) for x in pert]))
     df = spark.createDataFrame(rows, "entity_id string, embedding array<float>")
+    monkeypatch.setattr(similarity, "ENTITY_SIMILARITY_THRESHOLD", 0.9)
     exact = {
         (r["id1"], r["id2"], round(r["similarity"], 6))
-        for r in entity_similarity_edges(df, threshold=0.9, method="exact").collect()
+        for r in entity_similarity_edges_exact(df).collect()
     }
     lsh = {
         (r["id1"], r["id2"], round(r["similarity"], 6))
-        for r in entity_similarity_edges(df, threshold=0.9, method="lsh").collect()
+        for r in entity_similarity_edges(df).collect()
     }
     assert exact and lsh == exact
 

@@ -33,7 +33,7 @@ from graphrag_mrkr_2_spark.functions.docformats import (
 class TestResolveStrategy:
     def test_html_extensions(self):
         for ext in (".html", ".htm", ".xhtml", ".xht", "HTML"):
-            assert resolve_chunking_strategy(ext) == "html_heading"
+            assert resolve_chunking_strategy(ext, has_structure=False) == "html_heading"
 
     def test_pdf_with_structure(self):
         assert resolve_chunking_strategy(".pdf", has_structure=True) == "structure_hybrid"

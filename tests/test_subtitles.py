@@ -9,8 +9,11 @@ and styling tags, hour-less VTT timestamps, the cue cap.
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 
+from graphrag_mrkr_2_spark.functions import subtitles
 from graphrag_mrkr_2_spark.functions.subtitles import (
     MAX_CUES,
     format_srt,
@@ -82,7 +85,8 @@ class TestWebVtt:
 
     def test_tags_kept_when_asked(self):
         vtt = "WEBVTT\n\n00:00.000 --> 00:01.000\n<v Amy>Hi.\n"
-        assert parse_webvtt(vtt, strip_tags=False) == [(0, 1000, "<v Amy>Hi.")]
+        with mock.patch.object(subtitles, "WEBVTT_STRIP_TAGS", False):
+            assert parse_webvtt(vtt) == [(0, 1000, "<v Amy>Hi.")]
 
     def test_sniff_with_bom(self):
         assert sniff_subtitle("﻿WEBVTT\n".encode()) == "webvtt"
@@ -94,7 +98,8 @@ class TestMkvSubtitles:
 
     def test_webvtt_codec_strips_tags(self):
         cues = [(0, 1000, "<b>Bold</b> text")]
-        mkv = mux_mkv_subtitles(cues, codec=b"S_TEXT/WEBVTT")
+        with mock.patch.object(subtitles, "MKV_SUBTITLE_CODEC", b"S_TEXT/WEBVTT"):
+            mkv = mux_mkv_subtitles(cues)
         assert mkv_subtitle_cues(mkv) == [(0, 1000, "Bold text")]
 
     def test_no_subtitle_track_raises(self):
@@ -238,7 +243,8 @@ class TestReviewRegressions:
         """Track 127 encodes as the all-ones vint 0xFF — 'unknown size'
         for element lengths but a perfectly valid track NUMBER; the old
         reader dropped every block of such tracks."""
-        mkv = mux_mkv_subtitles(CUES, track_num=127)
+        with mock.patch.object(subtitles, "MKV_SUBTITLE_TRACK", 127):
+            mkv = mux_mkv_subtitles(CUES)
         assert mkv_subtitle_cues(mkv) == CUES
 
     def test_laced_block_skipped_not_fatal(self):
@@ -485,7 +491,8 @@ class TestAss:
             (1000, 2500, "0,0,Default,,0,0,0,,{\\an8}Styled, text"),
             (3000, 4000, "1,0,Default,,0,0,0,,Plain\\Nsecond line"),
         ]
-        mkv = mux_mkv_subtitles(payload_cues, codec=b"S_TEXT/ASS")
+        with mock.patch.object(subtitles, "MKV_SUBTITLE_CODEC", b"S_TEXT/ASS"):
+            mkv = mux_mkv_subtitles(payload_cues)
         assert mkv_subtitle_cues(mkv) == [
             (1000, 2500, "Styled, text"),
             (3000, 4000, "Plain\nsecond line"),
@@ -555,8 +562,8 @@ class TestAssReviewRegressions:
             mux_mkv_subtitles,
         )
 
-        mkv = mux_mkv_subtitles([(0, 1000, "12,0,Default")],
-                                codec=b"S_TEXT/ASS")
+        with mock.patch.object(subtitles, "MKV_SUBTITLE_CODEC", b"S_TEXT/ASS"):
+            mkv = mux_mkv_subtitles([(0, 1000, "12,0,Default")])
         assert mkv_subtitle_cues(mkv) == []
 
 

@@ -116,7 +116,7 @@ class TestContamination:
         exact gram MULTISET of the interpreted transform/element_at builder
         it replaced, across empties, sub-n docs, punctuation, unicode, and
         repeated grams."""
-        from graphrag_mrkr_2_spark.operators.textclean import _ngram_hashes_interpreted
+        from helpers import ngram_hashes_interpreted
 
         rows = [
             ("empty", ""),
@@ -135,7 +135,7 @@ class TestContamination:
             )
             want = sorted(
                 (r["doc_id"], r["gram_hash"])
-                for r in _ngram_hashes_interpreted(df, n).collect()
+                for r in ngram_hashes_interpreted(df, n).collect()
             )
             assert got == want, f"n={n}"
 
@@ -144,7 +144,7 @@ class TestContamination:
         doc_id gram independently, matching the per-row interpreted builder
         (review r4 finding #1 / pass-2 finding #3: the default keeps the
         id-keyed single-exchange path for the unique-id contract)."""
-        from graphrag_mrkr_2_spark.operators.textclean import _ngram_hashes_interpreted
+        from helpers import ngram_hashes_interpreted
 
         rows = [
             ("dup", "alpha beta gamma delta"),
@@ -159,7 +159,7 @@ class TestContamination:
             )
             want = sorted(
                 (r["doc_id"], r["gram_hash"])
-                for r in _ngram_hashes_interpreted(df, n).collect()
+                for r in ngram_hashes_interpreted(df, n).collect()
             )
             assert got == want, f"n={n}"
 

@@ -11,6 +11,7 @@ from graphrag_mrkr_2_spark.functions.tiffcodec import (
     decode_tiff,
     encode_tiff,
 )
+from helpers import encode_tiff_lzw
 
 
 class TestRoundtrip:
@@ -198,7 +199,7 @@ class TestLzw:
     def test_tiff_lzw_image_roundtrip(self, channels, predictor):
         rng = np.random.RandomState(channels + predictor)
         px = rng.randint(0, 256, size=(19, 23, channels), dtype=np.uint8)
-        data = encode_tiff(px, compression="lzw", predictor=predictor)
+        data = encode_tiff_lzw(px, predictor)
         back = decode_tiff(data)
         assert back.shape == px.shape and (back == px).all()
         # the compressed payload really is LZW (tag 259 == 5)
@@ -210,8 +211,8 @@ class TestLzw:
         verify the size win on a gradient."""
         yy, xx = np.mgrid[0:64, 0:64]
         px = ((yy + xx) % 256).astype(np.uint8)[:, :, None]
-        plain = encode_tiff(px, compression="lzw", predictor=1)
-        pred = encode_tiff(px, compression="lzw", predictor=2)
+        plain = encode_tiff_lzw(px, 1)
+        pred = encode_tiff_lzw(px, 2)
         assert len(pred) < len(plain)
         assert (decode_tiff(pred) == px).all()
 
@@ -294,7 +295,7 @@ class TestLibtiffInterop:
         # our encoder writes -> libtiff reads
         p2 = str(tmp_path / "ours.tif")
         with open(p2, "wb") as f:
-            f.write(encode_tiff(px, compression="lzw", predictor=predictor))
+            f.write(encode_tiff_lzw(px, predictor))
         assert (self._read(lt, p2, 40, 50, spp) == px).all()
 
 

@@ -17,6 +17,7 @@ import random
 
 import pytest
 
+from graphrag_mrkr_2_spark.functions import httppayload
 from graphrag_mrkr_2_spark.functions.httppayload import (
     decode_content_encoding,
     decode_zstd_native,
@@ -104,11 +105,12 @@ class TestAgainstSystemZstd:
             with pytest.raises(ValueError):
                 decode_content_encoding(stream[:cut], "zstd")
 
-    def test_bit_corruption_never_crashes(self):
+    def test_bit_corruption_never_crashes(self, monkeypatch):
         """Single-bit flips: each one decodes to bytes or raises
         ValueError, never anything else. libzstd skips Huffman-stream
         consumption checks, so some corrupt literal sections decode to
         garbage rather than fail; the frame checksum catches those."""
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 10_000_000)
         rng = random.Random(2)
         plain = open(os.path.join(_REPO, "SURVEY.md"), "rb").read()[:30000]
         stream = _compress2(plain, 9, checksum=1)
@@ -117,7 +119,7 @@ class TestAgainstSystemZstd:
             b = bytearray(stream)
             b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
             try:
-                out = decode_zstd_native(bytes(b), max_output=10_000_000)
+                out = decode_zstd_native(bytes(b))
             except ValueError:
                 rejected += 1
             else:
@@ -146,18 +148,22 @@ class TestPureOnly:
         with pytest.raises(ValueError, match="(?i)dictionary"):
             decode_zstd_native(hdr + b"\x01\x00\x00")
 
-    def test_max_output_guard(self):
+    def test_max_output_guard(self, monkeypatch):
         blob = _compress2(b"x" * 100_000, 3)
-        assert len(decode_zstd_native(blob, max_output=100_000)) == 100_000
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 100_000)
+        assert len(decode_zstd_native(blob)) == 100_000
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 99_999)
         with pytest.raises(ValueError):
-            decode_zstd_native(blob, max_output=99_999)
+            decode_zstd_native(blob)
         # raw block: hand-build a tiny frame
         frame = ((0xFD2FB528).to_bytes(4, "little")
                  + bytes([0x20, 4])          # single-segment, FCS=4
                  + (4 * 8 + 1).to_bytes(3, "little") + b"abcd")
+        monkeypatch.undo()
         assert decode_zstd_native(frame) == b"abcd"
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 3)
         with pytest.raises(ValueError):
-            decode_zstd_native(frame, max_output=3)
+            decode_zstd_native(frame)
 
     def test_rle_block(self):
         # single-segment frame: one RLE block of 10 x 'z'
@@ -197,13 +203,14 @@ class TestPureOnly:
         # and invents no bytes
         assert decode_zstd_native(bytes.fromhex("28b52ffd0000050000")) == b""
 
-    def test_fuzz_never_crashes(self):
+    def test_fuzz_never_crashes(self, monkeypatch):
+        monkeypatch.setattr(httppayload, "MAX_OUTPUT", 1 << 20)
         rng = random.Random(3)
         magic = (0xFD2FB528).to_bytes(4, "little")
         for _ in range(500):
             blob = magic + bytes(rng.randrange(256)
                                  for _ in range(rng.randrange(1, 120)))
             try:
-                decode_zstd_native(blob, max_output=1 << 20)
+                decode_zstd_native(blob)
             except ValueError:
                 pass
