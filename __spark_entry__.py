@@ -204,9 +204,9 @@ def q_kg_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_structured_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 NL→SQL over the constructed KG (rows-only: inputs come from
-    extraction). Fixed natural-language question through the full executor
-    pipeline — risk gate, type detection, embedding entity-linking,
-    template SQL generation, read-only validation."""
+    extraction). Fixed natural-language question through the executor's
+    stages: type detection, embedding entity-linking, template SQL
+    generation, read-only validation."""
     from graphrag_mrkr_2_spark.operators.structured_query import (
         default_sql_generator,
         detect_query_type,

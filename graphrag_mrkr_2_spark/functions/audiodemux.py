@@ -5,10 +5,10 @@ library of any kind exists in this container, SCALE.md) stays injectable,
 but the DEMUX layer below it is real: this module surfaces the coded
 frames a user-injected decoder would consume, from
 
-- Matroska/WebM audio tracks (``mkv_audio_samples`` — SimpleBlock /
+- Matroska/WebM audio tracks (``mkv_audio_track_info`` — SimpleBlock /
   BlockGroup framing with full Xiph/fixed/EBML de-lacing via the shared
   ``mediaprobe.mkv_track_blocks`` walker; audio tracks lace routinely),
-- MP4 audio tracks (``mp4mux.mp4_audio_samples`` — stts/stsc/stsz/stco
+- MP4 audio tracks (``mp4mux.mp4_audio_track_info`` — stts/stsc/stsz/stco
   walk where ragged chunking is the norm, plus fragmented layouts),
 - bare MP3 streams (``mp3_frames`` — header-walk frame splitting with
   the same second-frame-consistency check ``mediaprobe.probe_mp3`` uses),
@@ -176,12 +176,6 @@ def mkv_audio_track_info(data: bytes) -> dict:
         "channels": track.get("channels"),
         "samples": samples,
     }
-
-
-def mkv_audio_samples(data: bytes) -> list:
-    """``[(ts_ms, payload), ...]`` coded audio frames of the first audio
-    track — the raw per-frame bytes an injected decoder consumes."""
-    return mkv_audio_track_info(data)["samples"][:MAX_FRAMES]
 
 
 def mp3_frames(data: bytes) -> list:

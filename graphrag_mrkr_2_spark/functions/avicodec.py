@@ -11,61 +11,14 @@ Annex-K defaults) — is handled in decode_jpeg itself.
 
 ``extract_frames`` returns the raw JPEG payloads (decode is the image
 layer's job — sample_video_frames emits them as image payloads that
-image_features can consume directly); ``encode_avi_mjpeg`` builds a
-playable MJPEG AVI for the round-trip oracle. Non-MJPEG codecs
+image_features can consume directly); the tests build playable MJPEG
+AVIs for the round-trip oracle (tests/media_fixtures.py). Non-MJPEG codecs
 (H.264/VP9/AV1) remain the ffmpeg-class seam.
 """
 
 from __future__ import annotations
 
 import struct
-
-import numpy as np
-
-
-def _chunk(fourcc: bytes, payload: bytes) -> bytes:
-    pad = b"\x00" if len(payload) & 1 else b""
-    return fourcc + struct.pack("<I", len(payload)) + payload + pad
-
-
-def _list(listtype: bytes, payload: bytes) -> bytes:
-    return _chunk(b"LIST", listtype + payload)
-
-
-# Frame rate the fixture muxer writes; tests patch it.
-AVI_FPS = 25
-
-
-def encode_avi_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
-    """Wrap pre-encoded JPEG frames into an MJPEG AVI container at
-    ``AVI_FPS`` frames per second."""
-    if not frames:
-        raise ValueError("encode_avi_mjpeg needs at least one frame")
-    period_us = int(round(1_000_000 / max(1, AVI_FPS)))
-    max_bytes = max(len(f) for f in frames)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        period_us, max_bytes * AVI_FPS, 0, 0x10, len(frames), 0, 1, max_bytes,
-        width, height, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"MJPG", 0, 0, 0, 0, 1, AVI_FPS, 0, len(frames),
-        max_bytes, 0xFFFFFFFF, 0, 0, 0, int(width), int(height),
-    )
-    # BITMAPINFOHEADER
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0x47504A4D,  # 'MJPG'
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = _list(
-        b"hdrl",
-        _chunk(b"avih", avih)
-        + _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
-    )
-    movi = _list(b"movi", b"".join(_chunk(b"00dc", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def parse_avi(data: bytes) -> dict:
@@ -138,8 +91,3 @@ def sniff_video(data: bytes) -> str | None:
     return None
 
 
-def decode_frame(jpeg_bytes: bytes) -> np.ndarray:
-    """Decode one sampled frame (JPEG) to pixels."""
-    from .jpegcodec import decode_jpeg
-
-    return decode_jpeg(jpeg_bytes)

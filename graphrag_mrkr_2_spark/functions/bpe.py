@@ -17,11 +17,11 @@ closes the remaining semantic gap — the ENCODER itself:
 The RANKS TABLE is injected, not vendored: this container has neither
 tiktoken nor network access to the ~1.7 MB cl100k_base.tiktoken data file.
 Point ``SPARK_GRAFT_BPE_RANKS`` at a ``.tiktoken`` ranks file (the public
-``base64(token) <space> rank`` per-line format) — or call
-``set_default_encoder`` — and every TokenCounter consumer (chunk packing,
-overlap tails, token splits in functions/tokens.py) switches from the
-fallback to true BPE counts. Tests exercise the algorithm against a small
-constructed ranks table with hand-computable merges.
+``base64(token) <space> rank`` per-line format) and every TokenCounter
+consumer (chunk packing, overlap tails, token splits in functions/tokens.py)
+switches from the fallback to true BPE counts. Tests exercise the
+algorithm against a small constructed ranks table with hand-computable
+merges.
 
 Special tokens (<|endoftext|> etc.) are NOT handled: the reference only ever
 encodes ordinary document text (encode(), count(), tail_text()), never
@@ -113,21 +113,12 @@ _DEFAULT: list[BytePairEncoder | None] = [None]
 _LOADED_FROM: list[str | None] = [None]
 
 
-def set_default_encoder(enc: BytePairEncoder | None) -> None:
-    """Install (or clear, with None) the process-wide encoder used by
-    functions/tokens.py. Executors pick the env-var path up independently."""
-    _DEFAULT[0] = enc
-    _LOADED_FROM[0] = "<injected>" if enc is not None else None
-
-
 def get_default_encoder() -> BytePairEncoder | None:
-    """The injected encoder, else one lazily loaded from the ranks file named
-    by ``SPARK_GRAFT_BPE_RANKS`` (cached per process; workers inherit the env
+    """The encoder lazily loaded from the ranks file named by
+    ``SPARK_GRAFT_BPE_RANKS`` (cached per process; workers inherit the env
     through spark.executorEnv / the OS environment). Tracks the env var both
     ways: setting/switching it (re)loads, UNSETTING it clears the cache and
     returns to fallback mode — no stale encoder survives."""
-    if _LOADED_FROM[0] == "<injected>":
-        return _DEFAULT[0]
     path = os.environ.get("SPARK_GRAFT_BPE_RANKS")
     if path != _LOADED_FROM[0]:
         _DEFAULT[0] = BytePairEncoder.from_tiktoken_file(path) if path else None

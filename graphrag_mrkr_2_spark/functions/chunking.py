@@ -160,23 +160,6 @@ def chunk_document(document_id: str, text: str, chunk_size: int = 1200, chunk_ov
     return assign_text_units(document_id, text, splitter.split_text(text))
 
 
-def resolve_chunking_strategy(file_extension: str | None, has_structure: bool) -> str:
-    """Strategy resolution mirroring ChunkingService._resolve_chunking_strategy
-    (core/chunking.py:283-295): html extensions → html_heading; pdf (and here
-    docx, whose OOXML styles carry the same document-model structure docling
-    extracts) → the structure-aware hybrid strategy WHEN a parsed structure is
-    available, else legacy — the reference downgrades to legacy when
-    ``docling_document is None`` or the docling chunker is unavailable; our
-    analog downgrades when ``document_blocks`` returned None.
-    """
-    ext = (file_extension or "").lower().lstrip(".")
-    if ext in {"html", "htm", "xhtml", "xht"}:
-        return "html_heading"
-    if ext in {"pdf", "docx"}:
-        return "structure_hybrid" if has_structure else "legacy"
-    return "legacy"
-
-
 class StructureHybridChunker:
     """Structure-aware hybrid chunking over parsed document blocks — the
     Spark analog of the reference's docling_hybrid strategy

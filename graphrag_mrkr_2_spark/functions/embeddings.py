@@ -85,13 +85,3 @@ def pseudo_embed_many(texts: list[str], dim: int = DEFAULT_DIM) -> np.ndarray:
             acc += v
         out[i] = _finalize(acc, dim)
     return out
-
-
-def cosine_similarity(vec1, vec2) -> float:
-    """Pure cosine, mirroring core/graph_db.py:2013-2028 (_cosine_similarity)."""
-    a = np.asarray(vec1, dtype=np.float64)
-    b = np.asarray(vec2, dtype=np.float64)
-    na, nb = np.linalg.norm(a), np.linalg.norm(b)
-    if na == 0.0 or nb == 0.0:
-        return 0.0
-    return float(np.dot(a, b) / (na * nb))

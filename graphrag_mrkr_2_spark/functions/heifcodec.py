@@ -44,12 +44,9 @@ _HEIF_CANDIDATES = (
 )
 
 # public enums (libheif.h, stable since 1.0)
-_COLORSPACE_YCBCR = 0
 _COLORSPACE_RGB = 1
-_CHROMA_420 = 1
 _CHROMA_INTERLEAVED_RGB = 10
 _CHROMA_INTERLEAVED_RGBA = 11
-_CHANNEL_Y, _CHANNEL_CB, _CHANNEL_CR = 0, 1, 2
 _CHANNEL_INTERLEAVED = 10
 _COMPRESSION_HEVC = 1
 _COMPRESSION_AV1 = 4
@@ -181,63 +178,6 @@ def decode_heif_native(data: bytes) -> np.ndarray:
             raise ValueError("libheif returned no interleaved plane")
         rows = np.ctypeslib.as_array(ptr, shape=(h, stride.value))
         return rows[:, : w * channels].reshape(h, w, channels).copy()
-    finally:
-        if img:
-            lib.heif_image_release(img)
-        if handle:
-            lib.heif_image_handle_release(handle)
-        lib.heif_context_free(ctx)
-
-
-def decode_heif_native_yuv(data: bytes) -> tuple:
-    """Decode a 4:2:0 AVIF/HEIC payload to raw ``(y, cb, cr)`` uint8 planes
-    (no RGB conversion; cb/cr keep their subsampled dims, None when absent).
-    This is the plane-level A/B surface: a direct codec binding
-    (``hevccodec``/``av1codec``) must reproduce these planes bit-exactly
-    on the same payload, with no color conversion policy in the
-    comparison.
-
-    The request STATES the stream's native 4:2:0 subsampling: libheif only
-    passes planes through untouched when the requested chroma equals the
-    coded one — requesting
-    heif_chroma_undefined makes 1.15 CONVERT (measured: a 4:2:0 stream
-    came back 4:4:4 with ±1 luma wobble from the resampling round-trip),
-    which would poison the A/B."""
-    lib = _load_heif()
-    if lib is None:
-        raise ValueError("libheif is not available on this host")
-    ctx = lib.heif_context_alloc()
-    if not ctx:
-        raise ValueError("libheif context allocation failed")
-    handle = ctypes.c_void_p()
-    img = ctypes.c_void_p()
-    buf = ctypes.create_string_buffer(data, len(data))
-    try:
-        _check(lib.heif_context_read_from_memory_without_copy(
-            ctx, buf, len(data), None), "read")
-        _check(lib.heif_context_get_primary_image_handle(
-            ctx, ctypes.byref(handle)), "primary handle")
-        _check(lib.heif_decode_image(
-            handle, ctypes.byref(img), _COLORSPACE_YCBCR,
-            _CHROMA_420, None), "decode")
-
-        def _read(channel):
-            w = lib.heif_image_get_width(img, channel)
-            h = lib.heif_image_get_height(img, channel)
-            if w <= 0 or h <= 0:
-                return None
-            stride = ctypes.c_int()
-            ptr = lib.heif_image_get_plane_readonly(
-                img, channel, ctypes.byref(stride))
-            if not ptr:
-                return None
-            rows = np.ctypeslib.as_array(ptr, shape=(h, stride.value))
-            return rows[:, :w].copy()
-
-        y = _read(_CHANNEL_Y)
-        if y is None:
-            raise ValueError("libheif returned no luma plane")
-        return y, _read(_CHANNEL_CB), _read(_CHANNEL_CR)
     finally:
         if img:
             lib.heif_image_release(img)

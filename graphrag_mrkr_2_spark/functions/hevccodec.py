@@ -132,49 +132,6 @@ def split_length_prefixed(data: bytes, nal_length_size: int = 4) -> list:
     return nals
 
 
-def annexb_to_nals(data: bytes) -> list:
-    """Split an Annex-B elementary stream (00 00 01 / 00 00 00 01 start
-    codes) into raw NAL units — the framing of standalone ``.h265``/
-    ``.hevc`` files found in crawls."""
-    nals = []
-    pos = data.find(b"\x00\x00\x01")
-    if pos < 0:
-        raise ValueError("no Annex-B start code found")
-    pos += 3
-    while pos < len(data):
-        nxt = data.find(b"\x00\x00\x01", pos)
-        if nxt < 0:
-            chunk = data[pos:]
-            nxt = len(data)
-        else:
-            chunk = data[pos:nxt]
-            nxt += 3
-        # a 4-byte start code leaves one trailing zero on the prior NAL
-        chunk = chunk[:-1] if chunk.endswith(b"\x00") else chunk
-        if chunk:
-            nals.append(chunk)
-        pos = nxt
-    return nals
-
-
-def hevc_nals_from_heic(heic: bytes) -> tuple:
-    """Extract ``(param_nals, sample_nals)`` from a HEIC still image.
-
-    The hvcC property associated with the primary item (pitm→ipma→ipco
-    walk, falling back to the first hvcC in ipco) yields the VPS/SPS/PPS;
-    the primary item's mdat payload (generic ISOBMFF iloc walk — shared
-    with the AVIF path) is split by the record's NAL length size. This
-    turns libheif's x265 encoder into an HEVC bitstream fixture source
-    for the libde265 binding under test.
-    """
-    from graphrag_mrkr_2_spark.functions.av1codec import avif_primary_obu
-
-    cfg = parse_hvcc(heif_item_config(heic, b"hvcC"))
-    payload = avif_primary_obu(heic)  # generic primary-item iloc walk
-    return cfg["param_nals"], split_length_prefixed(
-        payload, cfg["nal_length_size"])
-
-
 def heif_item_config(data: bytes, box_type: bytes = b"hvcC") -> bytes:
     """The raw codec-config record bytes (hvcC/av1C/…) of a HEIF file's
     primary item, via the pitm→ipma→ipco association walk with a

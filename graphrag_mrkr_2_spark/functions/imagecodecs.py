@@ -483,7 +483,8 @@ def _gif_palette(stack: np.ndarray):
     """Quantize (n, 3) uint8 rows to a power-of-two GIF color table.
     Returns (table bytes-ready array, per-pixel indices, bits,
     min_code_size) — the ONE palette builder shared by encode_gif and
-    encode_gif_frames (review r4 pass-4 finding #5)."""
+    the animated-GIF fixture encoder of the tests (review r4 pass-4
+    finding #5)."""
     colors, inverse = np.unique(stack, axis=0, return_inverse=True)
     inverse = np.asarray(inverse).reshape(-1)  # numpy 2.0 axis-unique quirk
     if len(colors) > 256:
@@ -501,39 +502,6 @@ def _write_subblocks(out: bytearray, seg: bytes) -> None:
         out.append(len(chunk))
         out += chunk
     out += b"\x00"
-
-
-def encode_gif_frames(frames: list[np.ndarray], delays_ms: list[int]) -> bytes:
-    """Encode full-screen RGB frames (shared <=256-color palette across all
-    frames) to an animated GIF89a with per-frame GCE delays — the
-    round-trip oracle for :func:`gif_frames` (disposal 0, no
-    transparency)."""
-    if not frames:
-        raise ValueError("encode_gif_frames needs at least one frame")
-    h, w, _ = frames[0].shape
-    if any(f.shape != (h, w, 3) for f in frames):
-        raise ValueError("encode_gif_frames needs uniform (h, w, 3) frames")
-    if len(delays_ms) != len(frames):
-        raise ValueError("delays_ms must have one entry per frame")
-    stack = np.concatenate([f.reshape(-1, 3) for f in frames], axis=0)
-    table, inverse, bits, min_code_size = _gif_palette(stack)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += table.tobytes()
-    per = w * h
-    for fi, _frame in enumerate(frames):
-        delay_cs = max(0, delays_ms[fi] // 10)
-        out += b"\x21\xf9\x04" + struct.pack("<BHB", 0, delay_cs, 0) + b"\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        out.append(min_code_size)
-        _write_subblocks(
-            out,
-            _lzw_encode(
-                [int(i) for i in inverse[fi * per : (fi + 1) * per]], min_code_size
-            ),
-        )
-    out += b"\x3b"
-    return bytes(out)
 
 
 def decode_gif(data: bytes) -> np.ndarray:
@@ -593,9 +561,9 @@ def decode_gif(data: bytes) -> np.ndarray:
 
 def encode_gif(pixels: np.ndarray) -> bytes:
     """Encode (h, w, 3) uint8 RGB (<= 256 distinct colors) to a GIF89a —
-    single-frame body built on the same palette/sub-block helpers as
-    encode_gif_frames (review r4 pass-4 finding #5: one copy of that
-    logic)."""
+    single-frame body built on the same palette/sub-block helpers as the
+    animated-GIF fixture encoder of the tests (review r4 pass-4 finding
+    #5: one copy of that logic)."""
     px = np.ascontiguousarray(pixels, dtype=np.uint8)
     if px.ndim != 3 or px.shape[2] != 3:
         raise ValueError("encode_gif expects (h, w, 3) RGB")

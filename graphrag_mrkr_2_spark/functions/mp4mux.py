@@ -78,11 +78,11 @@ def _sample_entry(fourcc: bytes, width: int, height: int,
 
 
 def _build_moov(width: int, height: int, stbl: bytes, duration: int,
-                mvex: bytes = b"", handler: bytes = b"vide") -> bytes:
+                handler: bytes = b"vide") -> bytes:
     """moov scaffolding (mvhd/trak/tkhd/mdia/mdhd/hdlr/minf/dinf) shared
-    by all muxers; only the stbl contents, duration, handler and the
-    optional mvex differ between the classic/fragmented/timed-text
-    layouts. Video tracks carry vmhd, others the null media header."""
+    by all muxers; only the stbl contents, duration and handler differ
+    between the video/audio/timed-text layouts. Video tracks carry vmhd,
+    others the null media header."""
     dinf = _box(b"dinf", _full_box(b"dref", 0, 0, struct.pack(">I", 1) +
                                    _full_box(b"url ", 0, 1, b"")))
     if handler == b"vide":
@@ -115,16 +115,12 @@ def _build_moov(width: int, height: int, stbl: bytes, duration: int,
                                  0, 0, 0x40000000) +
                      b"\x00" * 24 +
                      struct.pack(">I", 2))                # next_track_ID
-    return _box(b"moov", mvhd + trak + mvex)
+    return _box(b"moov", mvhd + trak)
 
 
 # Fixture muxer settings no product caller varies; tests patch them.
 MP4_FRAME_MS = 40
 MP4_SAMPLES_PER_CHUNK = 2
-FMP4_SAMPLES_PER_FRAGMENT = 2
-FMP4_KEYFRAMES = None  # per-sample flags; None marks every sample key
-FMP4_MEHD = False
-FMP4_SIDX = False
 MP4_AUDIO_CONFIG_RECORD = None
 MP4_AUDIO_CHUNK_PATTERN = (3, 1, 2)
 
@@ -614,113 +610,6 @@ def _parse_fragments(data: bytes, track_id: int, timescale: int,
     return samples, durations
 
 
-def mux_fmp4_video(samples, width: int, height: int, codec: str,
-                   config_record: bytes) -> bytes:
-    """Fragmented-MP4 twin of ``mux_mp4_video`` (fixture path for the
-    DASH/CMAF demux leg): init segment (ftyp + moov with EMPTY sample
-    tables + mvex/trex) followed by one moof+mdat pair per
-    ``FMP4_SAMPLES_PER_FRAGMENT`` samples — tfhd default-base-is-moof, tfdt
-    decode times, trun with data-offset + per-sample sizes.
-    ``FMP4_KEYFRAMES`` (default all-key) additionally writes per-sample trun
-    flags with sample_is_non_sync_sample set on interframes — the field
-    real DASH video uses to mark its GOP structure.
-
-    ``FMP4_MEHD`` writes the movie-extends header (ISO 14496-12 §8.8.2) with
-    the total fragment_duration; ``FMP4_SIDX`` writes a segment index
-    (§8.16.3) between the init segment and the first moof, one
-    media-referencing entry per fragment — the two spec'd duration fast
-    paths for fMP4 probes (r7, probe_mp4 precedence mvhd→mehd→sidx)."""
-    samples = [bytes(s) for s in samples]
-    if not samples:
-        raise ValueError("mux_fmp4_video: no samples")
-    if FMP4_KEYFRAMES is not None and len(FMP4_KEYFRAMES) != len(samples):
-        raise ValueError(
-            f"mux_fmp4_video: {len(FMP4_KEYFRAMES)} keyframe flags for "
-            f"{len(samples)} samples")
-    fourcc = codec.encode("ascii")
-    if fourcc not in _VIDEO_CONFIG_BOXES:
-        raise ValueError(f"unsupported MP4 video codec {codec!r}")
-
-    entry = _sample_entry(fourcc, width, height, config_record)
-    stbl = _box(b"stbl", b"".join([
-        _full_box(b"stsd", 0, 0, struct.pack(">I", 1) + entry),
-        _full_box(b"stts", 0, 0, struct.pack(">I", 0)),
-        _full_box(b"stsc", 0, 0, struct.pack(">I", 0)),
-        _full_box(b"stsz", 0, 0, struct.pack(">II", 0, 0)),
-        _full_box(b"stco", 0, 0, struct.pack(">I", 0)),
-    ]))
-    mvex_children = b""
-    if FMP4_MEHD:
-        mvex_children += _full_box(b"mehd", 1, 0, struct.pack(
-            ">Q", len(samples) * MP4_FRAME_MS))
-    mvex_children += _full_box(b"trex", 0, 0, struct.pack(
-        ">IIIII", 1, 1, MP4_FRAME_MS, 0, 0))
-    mvex = _box(b"mvex", mvex_children)
-    out = [_box(b"ftyp", b"iso5" + struct.pack(">I", 512) +
-                b"iso5" + b"iso6" + b"mp41"),
-           _build_moov(width, height, stbl, 0, mvex)]
-
-    spf = max(1, int(FMP4_SAMPLES_PER_FRAGMENT))
-    seq = 0
-    tcur = 0
-    frag_meta = []  # (moof+mdat bytes, duration ticks) per fragment
-    for i in range(0, len(samples), spf):
-        frag = samples[i:i + spf]
-        seq += 1
-        mfhd = _full_box(b"mfhd", 0, 0, struct.pack(">I", seq))
-        # tfhd: default-base-is-moof (0x020000); trun carries sizes
-        tfhd = _full_box(b"tfhd", 0, 0x020000, struct.pack(">I", 1))
-        tfdt = _full_box(b"tfdt", 1, 0, struct.pack(">Q", tcur))
-        # trun flags: data-offset (0x1) + sample-size (0x200), plus
-        # per-sample flags (0x400) when a keyframe pattern was given
-        frag_keys = (FMP4_KEYFRAMES[i:i + spf] if FMP4_KEYFRAMES is not None
-                     else [True] * len(frag))
-        tr_flags = 0x000201 | (0x000400 if FMP4_KEYFRAMES is not None else 0)
-        fields = b"".join(
-            struct.pack(">I", len(s)) +
-            (struct.pack(">I", 0 if k else 0x00010000)
-             if FMP4_KEYFRAMES is not None else b"")
-            for s, k in zip(frag, frag_keys))
-        # data offset = moof size + mdat header (8), relative to moof
-        # start (default-base-is-moof); moof size is fixed once the
-        # sample count is known: box sizes are hdr(8) + verflags(4) +
-        # payload for each FullBox below
-        trun_total = 8 + 4 + 4 + 4 + len(fields)
-        traf_total = 8 + 16 + 20 + trun_total  # hdr + tfhd + tfdt + trun
-        moof_len = 8 + 16 + traf_total         # hdr + mfhd + traf
-        trun = _full_box(b"trun", 0, tr_flags,
-                         struct.pack(">Ii", len(frag), moof_len + 8) +
-                         fields)
-        traf = _box(b"traf", tfhd + tfdt + trun)
-        moof = _box(b"moof", mfhd + traf)
-        if len(moof) != moof_len:
-            raise AssertionError(
-                f"fMP4 muxer offset math drifted: {len(moof)} != {moof_len}")
-        mdat = _box(b"mdat", b"".join(frag))
-        out.append(moof)
-        out.append(mdat)
-        frag_meta.append((len(moof) + len(mdat),
-                          len(frag) * MP4_FRAME_MS))
-        tcur += len(frag) * MP4_FRAME_MS
-    if FMP4_SIDX:
-        refs = b"".join(
-            struct.pack(">III", size, dur, 0x90000000)  # SAP=1, type 1
-            for size, dur in frag_meta)
-        sidx_box = _full_box(b"sidx", 0, 0, struct.pack(
-            ">IIIIHH", 1, 1000, 0, 0, 0, len(frag_meta)) + refs)
-        out.insert(2, sidx_box)  # between init segment and first moof
-    return b"".join(out)
-
-
-MAX_SAMPLES = 10_000  # samples one *_samples call returns
-
-
-def mp4_video_samples(data: bytes) -> list:
-    """``[(ts_ms, keyframe, payload), ...]`` for the first video track —
-    the same shape ``av1codec.mkv_video_samples`` returns for WebM."""
-    return mp4_video_track_info(data)["samples"][:MAX_SAMPLES]
-
-
 def mp4_audio_track_info(data: bytes) -> dict:
     """Sample-level info for the FIRST audio track (handler ``soun``) of
     an MP4: ``{codec, config, channels, sample_rate, timescale, samples,
@@ -738,13 +627,6 @@ def mp4_audio_track_info(data: bytes) -> dict:
     for info in _iter_tracks(data, (b"soun",), visual=False):
         return info
     raise ValueError("MP4: no audio track")
-
-
-def mp4_audio_samples(data: bytes) -> list:
-    """``[(ts_ms, payload), ...]`` coded audio frames of the first audio
-    track — the raw per-sample bytes an injected decoder consumes."""
-    return [(ts, p) for ts, _k, p
-            in mp4_audio_track_info(data)["samples"][:MAX_SAMPLES]]
 
 
 def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int) -> bytes:
@@ -819,65 +701,6 @@ def mux_mp4_audio(samples, codec: str, sample_rate: int, channels: int) -> bytes
                      b"".join(struct.pack(">I", o) for o in offsets))
     stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
     moov = _build_moov(0, 0, stbl, duration, handler=b"soun")
-    return ftyp + _box(b"mdat", mdat_payload) + moov
-
-
-def mux_mp4_timed_text(cues) -> bytes:
-    """3GPP timed-text (tx3g) track fixture: each cue becomes one sample
-    of ``u16 length + UTF-8 text``; gaps between cues become empty
-    samples (length 0) so the stts durations reconstruct exact
-    (start, end) windows — exactly how real players expect subtitle
-    tracks to be laid out. Cues must be sorted and non-overlapping."""
-    cues = list(cues)
-    if not cues:
-        raise ValueError("mux_mp4_timed_text: no cues")
-    samples, stts_entries = [], []
-    cur = 0
-    for start, end, text in cues:
-        if start < cur or end < start:
-            raise ValueError("timed-text cues must be sorted, non-overlap")
-        if start > cur:
-            samples.append(b"\x00\x00")          # gap: empty sample
-            stts_entries.append(start - cur)
-        enc = text.encode("utf-8")
-        if len(enc) > 0xFFFF:
-            raise ValueError("timed-text cue exceeds the u16 sample bound")
-        samples.append(struct.pack(">H", len(enc)) + enc)
-        stts_entries.append(max(1, end - start))
-        cur = max(end, start + 1)
-    duration = cur
-
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) +
-                b"isom" + b"iso2" + b"mp41")
-    mdat_payload = b"".join(samples)
-    mdat_start = len(ftyp) + 8
-    # tx3g sample description (ETSI TS 126.245 §5.16): SampleEntry base +
-    # displayFlags, justification, bg color, default text box, style
-    entry = _box(b"tx3g", b"".join([
-        b"\x00" * 6, struct.pack(">H", 1),   # reserved + data_ref_index
-        struct.pack(">I", 0),                # displayFlags
-        struct.pack(">bb", 1, -1),           # h/v justification
-        b"\x00\x00\x00\xff",                 # bg RGBA
-        struct.pack(">HHHH", 0, 0, 0, 0),    # default text box
-        struct.pack(">HH", 0, 0),            # style record: start/end
-        struct.pack(">HBB", 1, 0, 12),       # font id, face, size
-        b"\xff\xff\xff\xff",                 # text RGBA
-        _box(b"ftab", struct.pack(">HH", 1, 1) +  # mandatory font table
-             bytes([5]) + b"Serif"),
-    ]))
-    stsd = _full_box(b"stsd", 0, 0, struct.pack(">I", 1) + entry)
-    stts = _full_box(b"stts", 0, 0, struct.pack(">I", len(stts_entries)) +
-                     b"".join(struct.pack(">II", 1, d)
-                              for d in stts_entries))
-    stsc = _full_box(b"stsc", 0, 0, struct.pack(">I", 1) +
-                     struct.pack(">III", 1, len(samples), 1))
-    stsz = _full_box(b"stsz", 0, 0,
-                     struct.pack(">II", 0, len(samples)) +
-                     b"".join(struct.pack(">I", len(s)) for s in samples))
-    stco = _full_box(b"stco", 0, 0, struct.pack(">I", 1) +
-                     struct.pack(">I", mdat_start))
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    moov = _build_moov(0, 0, stbl, duration, handler=b"text")
     return ftyp + _box(b"mdat", mdat_payload) + moov
 
 

@@ -376,27 +376,6 @@ def parse_ass(text: str) -> list:
     return cues
 
 
-def format_ass(cues) -> str:
-    """Cues → a minimal ASS script (fixture path — parse_ass reads it
-    back; centisecond resolution, so cue times should be multiples of
-    10 ms)."""
-
-    def _ts(ms: int) -> str:
-        h, rem = divmod(ms, 3_600_000)
-        m, rem = divmod(rem, 60_000)
-        s, frac = divmod(rem, 1000)
-        return f"{h}:{m:02d}:{s:02d}.{frac // 10:02d}"
-
-    lines = ["[Script Info]", "Title: fixture", "", "[Events]",
-             "Format: Layer, Start, End, Style, Name, MarginL, MarginR, "
-             "MarginV, Effect, Text"]
-    for start, end, text in cues:
-        body = text.replace("\n", "\\N")
-        lines.append(f"Dialogue: 0,{_ts(start)},{_ts(end)},Default,,0,0,0,,"
-                     f"{body}")
-    return "\n".join(lines) + "\n"
-
-
 def mkv_chapters(data: bytes) -> list:
     """Chapter titles from a Matroska Chapters element →
     ``[(start_ms, title), ...]``: Segment → Chapters → EditionEntry →

@@ -91,61 +91,6 @@ def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
     return bytes(out[:expected])
 
 
-class _MsbBitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, width: int) -> None:
-        self.acc = (self.acc << width) | code
-        self.nbits += width
-        while self.nbits >= 8:
-            self.buf.append((self.acc >> (self.nbits - 8)) & 0xFF)
-            self.nbits -= 8
-            self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.buf.append((self.acc << (8 - self.nbits)) & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.buf)
-
-
-def _tiff_lzw_encode(data: bytes) -> bytes:
-    CLEAR, EOI = 256, 257
-    bw = _MsbBitWriter()
-
-    def reset():
-        return {bytes([i]): i for i in range(256)}, 258, 9
-
-    table, next_code, width = reset()
-    bw.write(CLEAR, width)
-    w = b""
-    for b in data:
-        wk = w + bytes([b])
-        if wk in table:
-            w = wk
-            continue
-        bw.write(table[w], width)
-        if next_code < 4094:  # leave room: table refills at 4094 per spec
-            table[wk] = next_code
-            next_code += 1
-            # encoder-side early change (decoder checks next_code + 1: it
-            # runs one add behind); threshold (1<<w)-1 per libtiff
-            if next_code > (1 << width) - 1 and width < 12:
-                width += 1
-        else:
-            bw.write(CLEAR, width)
-            table, next_code, width = reset()
-        w = bytes([b])
-    if w:
-        bw.write(table[w], width)
-    bw.write(EOI, width)
-    return bw.flush()
-
-
 def decode_tiff(data: bytes) -> np.ndarray:
     """Decode a baseline 8-bit TIFF (first IFD) to (h, w, c) uint8."""
     if data[:2] == b"II":
@@ -324,77 +269,3 @@ def decode_tiff(data: bytes) -> np.ndarray:
     return px
 
 
-# Encoder settings no product caller varies; tests patch them.
-TIFF_COMPRESSION = "none"
-TIFF_PREDICTOR = 1
-
-
-def encode_tiff(pixels: np.ndarray) -> bytes:
-    """Encode (h, w, c∈{1,3,4}) uint8 to a little-endian single-strip TIFF.
-    ``TIFF_COMPRESSION``: 'none' or 'lzw' (TIFF §13, early-change widths);
-    ``TIFF_PREDICTOR``: 1 (none) or 2 (horizontal differencing — the
-    standard LZW companion). Round-trip oracle for the decoder's compressed
-    paths."""
-    px = np.ascontiguousarray(pixels, dtype=np.uint8)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, spp = px.shape
-    if spp not in (1, 3, 4):
-        raise ValueError("encode_tiff expects 1, 3 or 4 channels")
-    if TIFF_PREDICTOR == 2:
-        diff = px.astype(np.int16)
-        diff[:, 1:, :] -= px[:, :-1, :].astype(np.int16)
-        body_px = (diff & 0xFF).astype(np.uint8)
-    elif TIFF_PREDICTOR == 1:
-        body_px = px
-    else:
-        raise ValueError(f"unsupported predictor {TIFF_PREDICTOR}")
-    body = body_px.tobytes()
-    if TIFF_COMPRESSION == "lzw":
-        comp_tag = 5
-        body = _tiff_lzw_encode(body)
-    elif TIFF_COMPRESSION == "none":
-        comp_tag = 1
-    else:
-        raise ValueError(f"unsupported compression {TIFF_COMPRESSION!r}")
-    photometric = 1 if spp == 1 else 2
-
-    entries = []
-
-    def entry(tag, ftype, count, value_bytes):
-        entries.append((tag, ftype, count, value_bytes))
-
-    # layout: header(8) + pixel data + bits table + IFD
-    data_off = 8
-    bits_off = data_off + len(body)
-    ifd_off = bits_off + 2 * spp
-
-    def short(v):
-        return struct.pack("<HH", v, 0)
-
-    def long_(v):
-        return struct.pack("<I", v)
-
-    entry(256, 4, 1, long_(w))
-    entry(257, 4, 1, long_(h))
-    if spp == 1:
-        entry(258, 3, 1, short(8))
-    else:
-        entry(258, 3, spp, long_(bits_off))
-    entry(259, 3, 1, short(comp_tag))
-    entry(262, 3, 1, short(photometric))
-    if TIFF_PREDICTOR == 2:
-        entry(317, 3, 1, short(2))
-    entry(273, 4, 1, long_(data_off))
-    entry(277, 3, 1, short(spp))
-    entry(278, 4, 1, long_(h))
-    entry(279, 4, 1, long_(len(body)))
-
-    out = bytearray(b"II" + struct.pack("<HI", 42, ifd_off))
-    out += body
-    out += struct.pack("<" + "H" * spp, *([8] * spp))
-    out += struct.pack("<H", len(entries))
-    for tag, ftype, count, vb in sorted(entries):
-        out += struct.pack("<HHI", tag, ftype, count) + vb
-    out += struct.pack("<I", 0)  # no next IFD
-    return bytes(out)

@@ -13,10 +13,9 @@ Reimplements the reference's ``core/token_counter.py`` in BOTH of its modes:
   #6): ``count = len(encode(text))``, ``tail_text = decode(tokens[-k:])``,
   and token-sliced splitting with overlap — the encoder-present branches of
   token_counter.py:44-47/71-76 and html_chunker.py:318-329. Set
-  ``SPARK_GRAFT_BPE_RANKS`` to a .tiktoken ranks file (or
-  bpe.set_default_encoder) to switch modes; the cl100k merges data itself is
-  absent from this container (no network), so tests pin the BPE mode with a
-  small constructed ranks table.
+  ``SPARK_GRAFT_BPE_RANKS`` to a .tiktoken ranks file to switch modes; the
+  cl100k merges data itself is absent from this container (no network), so
+  tests pin the BPE mode with a small constructed ranks table.
 """
 
 from __future__ import annotations

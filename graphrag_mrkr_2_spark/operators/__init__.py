@@ -8,6 +8,6 @@ Modules:
   communities  S10 — weight normalization, Leiden-style clustering
   dedup        training-data dedup suite (exact, minhash, simhash, ...)
   textstats    language-ID, quality scoring, token counts, fingerprints
-  ann          similarity search (brute-force + LSH-bucketed)
+  ann          similarity search (brute-force, k-NN join, IVF)
   incremental  content-hash diff / resume (J5)
 """

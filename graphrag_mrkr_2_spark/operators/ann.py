@@ -1,4 +1,4 @@
-"""Similarity search over embedding columns (brute force, LSH, IVF).
+"""Similarity search over embedding columns (brute force, IVF).
 
 Covers the reference's vector top-k (Q1, core/graph_db.py:2288-2360 — Neo4j
 vector index with a brute-force Python cosine fallback) re-expressed for
@@ -9,9 +9,6 @@ Spark, plus the scale paths a 100 TB corpus needs:
   and TakeOrderedAndProject gives a global top-k without a full sort.
 - knn_join: exact top-k for a *table* of query vectors via crossJoin of a
   broadcast query side + per-query window top-k.
-- hyperplane_buckets / lsh_topk: random-hyperplane signs (seeded,
-  deterministic) bucket vectors; queries probe only their bucket — recall
-  traded via number of planes / multiprobe.
 - ivf_train / ivf_topk: inverted-file ANN — spherical k-means coarse
   quantizer (trained with JVM map-side partial sums; only the k x dim
   centroid matrix ever reaches the driver), items partitioned into lists,
@@ -74,56 +71,11 @@ def knn_join(items: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact k-NN join: for each query row, top-k items by cosine.
 
     Broadcast the (small) query side; per-query window top-k. Exact but
-    O(|items|·|queries|) — the correctness baseline for lsh_topk.
+    O(|items|·|queries|) — the correctness baseline for ivf_topk.
     """
     q = queries.select("query_id", F.col("embedding").alias("qvec"))
     it = items.select("vec_id", F.col("embedding").alias("ivec"))
     return _cosine_topk(it.crossJoin(F.broadcast(q)), k)
-
-
-def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
-    rng = np.random.RandomState(7)
-    return rng.normal(size=(n_planes, dim)).astype(float)
-
-
-def hyperplane_signature(vec_col, planes: np.ndarray):
-    """Bit-sign signature as a long, built from JVM dot products."""
-    sig = None
-    for k, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(_dot(_as_double(vec_col), p) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        contrib = bit * F.lit(1 << k).cast("long")
-        sig = contrib if sig is None else sig + contrib
-    return sig
-
-
-# hyperplanes per bucket signature and results per query of lsh_topk
-LSH_PLANES = 8
-LSH_TOPK = 5
-
-
-def hyperplane_buckets(df: DataFrame, dim: int) -> DataFrame:
-    planes = _hyperplanes(dim, LSH_PLANES)
-    return df.withColumn("bucket", hyperplane_signature(F.col("embedding"), planes))
-
-
-def lsh_topk(items: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
-    """ANN top-``LSH_TOPK``: score only items sharing the query's
-    hyperplane bucket.
-
-    One shuffle keyed by bucket; recall < 1 by design (raise via fewer
-    planes or multiprobe). At 10^12 scale add multiprobe neighbors of the
-    bucket id (hamming-1 flips) — same join shape.
-    """
-    bi = hyperplane_buckets(items, dim).select(
-        "vec_id", F.col("embedding").alias("ivec"), "bucket"
-    )
-    bq = hyperplane_buckets(queries, dim).select(
-        "query_id", F.col("embedding").alias("qvec"), "bucket"
-    )
-    return _cosine_topk(bi.join(bq, "bucket"), LSH_TOPK)
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""S10: community detection (G1-G5).
+"""S10: community detection (G1-G4).
 
 Reference flow (core/graph_clustering.py:213-282): fetch whole graph into
 pandas → igraph Leiden (modularity, resolution 1.0) → write community_id
@@ -313,39 +313,3 @@ def write_membership(nodes: DataFrame, membership: DataFrame) -> DataFrame:
     return nodes.join(
         membership.withColumnRenamed("node", "entity_id"), "entity_id", "left"
     ).withColumn("level", F.coalesce(F.col("level"), F.lit(0)))
-
-
-def community_summaries(nodes_with_membership: DataFrame) -> DataFrame:
-    """G5 (non-LLM core) — per-community aggregates feeding the summarizer
-    (core/community_summarizer.py:21-175): member count, top 10 entities by
-    mention_count, mean importance. The LLM text generation is an optional
-    mapInPandas stage at deployment (out of the P/R-critical path).
-
-    Skew-safe top-k: the top entities come from a window row_number pruned
-    BEFORE any collect_list, so a web-scale mega-community never
-    materializes its full member list in one aggregation buffer (the
-    sort-comparator collect_list of round 1 did)."""
-    from pyspark.sql.window import Window
-
-    base = nodes_with_membership.where(F.col("community_id").isNotNull())
-    stats = base.groupBy("community_id", "level").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.avg("importance_score").alias("avg_importance"),
-    )
-    w = Window.partitionBy("community_id", "level").orderBy(
-        F.col("mention_count").cast("long").desc(), F.col("name").asc()
-    )
-    tops = (
-        base.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= 10)
-        .groupBy("community_id", "level")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("__rn").alias("rn"), F.col("name")))
-                ),
-                lambda s: s["name"],
-            ).alias("top_entities")
-        )
-    )
-    return stats.join(tops, ["community_id", "level"], "left")

@@ -1,12 +1,11 @@
-"""T10: document summary / classification + category propagation to chunks.
+"""T10: document classification + category propagation to chunks.
 
 Reference:
-- core/document_summarizer.py:183-320 (extract_summary): first
-  ``summarization_batch_size`` (20) chunks joined by "\\n\\n"; content over
-  15000 chars truncated to the first 12000 with a sentence-boundary trim
-  when the last period falls after char 10000; LLM returns
-  {summary, document_type, hashtags} with document_type drawn from the
-  DOCUMENT_TYPES list (document_summarizer.py:14-60).
+- core/document_summarizer.py:183-320 (extract_summary) assembles the
+  document content: the first ``summarization_batch_size`` (20) chunks
+  joined by "\\n\\n"; content over 15000 chars truncated to the first 12000
+  with a sentence-boundary trim when the last period falls after char
+  10000.
 - ingestion/document_processor.py:813-903 (classify_document_categories):
   LLM returns {categories, confidence, keywords, difficulty} from the first
   1200 chars.
@@ -15,12 +14,12 @@ Reference:
   (0.7, settings.py:344) else classification_default_category ('general',
   settings.py:348), then propagated onto every chunk's metadata.
 
-Spark shape (same seam pattern as C7/T8): per-document content assembly is
+Spark shape (same seam pattern as T8): per-document content assembly is
 pure JVM — a bounded per-doc collect_list (<= 20 rows, no skew) +
 concat + the truncation rules as column expressions — and the LLM is an
 injectable BATCH callable crossing to Python once per Arrow batch via
-mapInPandas. The default callables are deterministic, network-free
-stand-ins; a real LLM client drops into the identical seam.
+mapInPandas. The default classifier is a deterministic, network-free
+stand-in; a real LLM client drops into the identical seam.
 """
 
 from __future__ import annotations
@@ -32,20 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# core/document_summarizer.py:14-60 — the classification ontology the
-# reference prompts with (behavioral constant, copied by necessity).
-DOCUMENT_TYPES = [
-    "quote", "invoice", "receipt", "purchase_order", "contract",
-    "agreement", "report", "financial_report", "research_report",
-    "business_report", "technical_report", "resume", "cv", "cover_letter",
-    "insurance_document", "insurance_policy", "claim_form", "medical_record",
-    "prescription", "legal_document", "court_document", "deed", "will",
-    "power_of_attorney", "academic_paper", "thesis", "dissertation",
-    "article", "blog_post", "news_article", "press_release", "other",
-]
-
-# (summary, document_type, hashtags) per document content
-DocSummarizerFn = Callable[[list[str]], list[dict]]
 # (categories, confidence, keywords, difficulty) per document content
 DocClassifierFn = Callable[[list[str]], list[dict]]
 
@@ -102,29 +87,6 @@ def _hash_pick(text: str, options: list[str]) -> str:
     return options[_md5_lower64(text) % len(options)]
 
 
-def deterministic_doc_summarizer(contents: list[str]) -> list[dict]:
-    """LLM stand-in: summary = leading sentences up to 1000 chars,
-    document_type = content-hash pick from DOCUMENT_TYPES, hashtags = the 5
-    longest distinct lowercased words. Pure in content."""
-    out = []
-    for c in contents:
-        c = c or ""
-        summary = c[:1000]
-        cut = summary.rfind(".")
-        if cut > 200:
-            summary = summary[: cut + 1]
-        words = sorted({w.lower().strip(".,;:!?") for w in c.split() if len(w) > 5})
-        tags = [f"#{w}" for w in sorted(words, key=lambda w: (-len(w), w))[:5]]
-        out.append(
-            {
-                "summary": summary,
-                "document_type": _hash_pick(c, DOCUMENT_TYPES),
-                "hashtags": tags,
-            }
-        )
-    return out
-
-
 def deterministic_doc_classifier(contents: list[str]) -> list[dict]:
     """LLM stand-in mirroring classify_document_categories' output contract
     (document_processor.py:813-903): first 1200 chars drive a deterministic
@@ -146,37 +108,10 @@ def deterministic_doc_classifier(contents: list[str]) -> list[dict]:
     return out
 
 
-_SUMMARY_SCHEMA = (
-    "document_id string, summary string, document_type string, hashtags array<string>"
-)
 _CLASSIFY_SCHEMA = (
     "document_id string, categories array<string>, confidence double, "
     "keywords array<string>, difficulty string"
 )
-
-
-def summarize_documents(
-    chunks: DataFrame,
-    summarizer: DocSummarizerFn = deterministic_doc_summarizer,
-) -> DataFrame:
-    """T10 summary leg → (document_id, summary, document_type, hashtags)."""
-    docs = assemble_document_content(chunks)
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            res = summarizer(pdf["content"].fillna("").tolist())
-            yield pd.DataFrame(
-                {
-                    "document_id": pdf["document_id"].values,
-                    "summary": [r["summary"] for r in res],
-                    "document_type": [r["document_type"] for r in res],
-                    "hashtags": [r["hashtags"] for r in res],
-                }
-            )
-
-    return docs.mapInPandas(_run, _SUMMARY_SCHEMA)
 
 
 def classify_documents(

@@ -6,8 +6,9 @@ Spark-first design notes (scale rationale in SURVEY §4/§7):
   of the pages scan is preserved.
 - content filtering (T7, ingestion/content_filters.py:86-198) and quality
   scoring (T5, core/ocr.py:162-297) are pure per-row math → expressed as
-  built-in column expressions (JVM/whole-stage-codegen, no Python), with the
-  pure-Python twins in functions/quality.py serving as test oracles.
+  built-in column expressions (JVM/whole-stage-codegen, no Python), with
+  pure-Python twins serving as test oracles (functions/quality.py for the
+  filter, tests/helpers.py for the score).
 - The pages input is repartitioned by ``pmod(xxhash64(url), N)`` before the
   heavy UDF stages so Zipf-headed domains can't serialize a partition
   (north_rule skew requirement).
@@ -290,17 +291,8 @@ def with_content_filter(
     return chunks.withColumn("filter_reason", reason)
 
 
-def filter_chunks(chunks: DataFrame, cfg: ContentFilterConfig | None = None) -> DataFrame:
-    """Keep only chunks passing the content filter."""
-    return (
-        with_content_filter(chunks, cfg=cfg)
-        .where(F.col("filter_reason").isNull())
-        .drop("filter_reason")
-    )
-
-
 # ---------------------------------------------------------------------------
-# T5: quality scoring — column expressions (oracle: functions/quality.py)
+# T5: quality scoring — column expressions (oracle: tests/helpers.py)
 # ---------------------------------------------------------------------------
 
 
@@ -355,28 +347,3 @@ def with_quality_score(chunks: DataFrame, content_col: str = "content") -> DataF
         F.length(F.regexp_replace(c, _STRIP_RE, "")) < 5, F.lit(0.0)
     ).otherwise(score)
     return chunks.withColumn("quality_score", score)
-
-
-def post_entity_chunk_removal(chunks: DataFrame, entity_counts: DataFrame) -> DataFrame:
-    """T6 — drop chunks by quality + extraction yield (core/ocr.py:300-330).
-
-    ``entity_counts``: (chunk_id, entity_count, relationship_count). Chunks
-    missing from it count as 0/0. Broadcast-joinable in practice (counts are
-    small); left join + filter keeps the plan shuffle-light.
-    """
-    scored = with_quality_score(chunks)
-    joined = scored.join(entity_counts, on="chunk_id", how="left").fillna(
-        {"entity_count": 0, "relationship_count": 0}
-    )
-    keep = ~(
-        (
-            (F.col("quality_score") < 0.2)
-            & (F.col("entity_count") == 0)
-            & (F.col("relationship_count") == 0)
-        )
-        | (
-            (F.length(F.regexp_replace(F.col("content"), _STRIP_RE, "")) < 30)
-            & (F.col("entity_count") == 0)
-        )
-    )
-    return joined.where(keep).drop("quality_score", "entity_count", "relationship_count")

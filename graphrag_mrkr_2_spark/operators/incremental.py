@@ -40,12 +40,3 @@ def diff_counts(old_chunks: DataFrame, new_chunks: DataFrame) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.select("document_id", "state", "n")
-
-
-def orphan_chunk_cleanup(chunks: DataFrame, documents: DataFrame) -> DataFrame:
-    """S7-op — chunks whose document no longer exists (graph_db.py:2482-2562)
-    as one left-anti join (the 5-minute grace window is a timestamp filter
-    callers add when chunk rows carry ingest timestamps)."""
-    return chunks.join(
-        documents.select("document_id").distinct(), "document_id", "left_anti"
-    )

@@ -20,8 +20,8 @@ Kernel status:
   same playbook as docformats. ``image_features`` consumes real pixels
   for all of them (TIFF incl. LZW + horizontal predictor, interop-tested
   against libtiff). **Audio RIFF/WAVE PCM decodes for real too**
-  (``functions/audiocodecs.py``) feeding ``audio_features`` true
-  RMS/zero-crossing/duration; **video frames sample for real** from
+  (``functions/audiocodecs.py``, round-tripped by
+  ``audio_roundtrip_checksums``); **video frames sample for real** from
   MJPEG-AVI and animated GIF; progressive (SOF2) JPEG decodes for real
   (T.81 Annex G, bit-identical to the baseline decode of the same
   coefficients, pinned vs the JDK writer). **Standalone images OCR to
@@ -265,7 +265,6 @@ def _auto_image_decoder():
 # Settings no product caller varies; tests patch them. Each operator binds
 # its value on the driver, so the UDF closure carries it to the workers.
 IMAGE_FEATURE_BINS = 16  # luminance histogram bins of image_features
-AUDIO_STRICT = False  # audio_features raises on undecodable audio
 OCR_ENABLED = True  # extract_image_text emits rows (image_loader's switch)
 
 
@@ -362,106 +361,6 @@ def image_features(
     return media.where(F.col("kind") == "image").select("media_id", "payload", "meta").mapInPandas(
         _extract, IMAGE_FEATURE_SCHEMA
     )
-
-
-AUDIO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_channels", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-        StructField("rms", FloatType(), True),
-        StructField("zero_crossing_rate", FloatType(), True),
-    ]
-)
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """Decode → featurize audio via mapInPandas (r4).
-
-    RIFF/WAVE PCM payloads decode FOR REAL through the pure-stdlib kernel
-    (functions/audiocodecs.py); features are computed on the actual
-    samples: RMS amplitude (mean over channels, int16-normalized) and
-    zero-crossing rate of channel 0, plus the container's true sample
-    rate / channel count / duration. Compressed audio (MP3/AAC/Opus — the
-    codec seam, like JPEG for images): with ``AUDIO_STRICT`` it raises
-    NotImplementedError, otherwise it emits metadata-derived fakes so the
-    Arrow plumbing stays testable.
-    """
-    from graphrag_mrkr_2_spark.functions.audiocodecs import decode_wav, sniff_audio
-
-    strict = AUDIO_STRICT
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(rec.payload) if rec.payload is not None else b""
-                decoded = None
-                if sniff_audio(payload):
-                    try:
-                        decoded = decode_wav(payload)
-                    except Exception:
-                        if strict:
-                            raise
-                        decoded = None  # corrupt container -> fake fallback
-                if decoded is not None:
-                    samples, rate = decoded
-                    x = samples.astype(np.float64)
-                    if samples.dtype == np.uint8:
-                        x = (x - 128.0) * 256.0  # align 8-bit to int16 scale
-                    n = len(x)
-                    xn = x / 32768.0
-                    rms = float(np.sqrt(np.mean(xn * xn))) if n else 0.0
-                    ch0 = x[:, 0]
-                    zcr = (
-                        float(np.mean(np.signbit(ch0[1:]) != np.signbit(ch0[:-1])))
-                        if n > 1
-                        else 0.0
-                    )
-                    rows.append(
-                        {
-                            "media_id": rec.media_id,
-                            "sample_rate": int(rate),
-                            "n_channels": int(samples.shape[1]),
-                            "duration_ms": int(round(1000.0 * n / rate)) if rate else 0,
-                            "rms": np.float32(rms),
-                            "zero_crossing_rate": np.float32(zcr),
-                        }
-                    )
-                elif strict:
-                    raise NotImplementedError(
-                        "audio decode beyond RIFF/WAVE PCM requires codec "
-                        "libraries not present in this environment"
-                    )
-                else:
-                    meta = rec.meta if isinstance(rec.meta, dict) else (rec.meta.asDict() if rec.meta else {})
-                    seed = int.from_bytes(hashlib.sha256(payload).digest()[:4], "big")
-                    rows.append(
-                        {
-                            "media_id": rec.media_id,
-                            "sample_rate": 16000,
-                            "n_channels": 1,
-                            "duration_ms": int(meta.get("duration_ms") or 0),
-                            "rms": np.float32((seed % 1000) / 1000.0),
-                            "zero_crossing_rate": np.float32((seed % 97) / 97.0),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "sample_rate",
-                    "n_channels",
-                    "duration_ms",
-                    "rms",
-                    "zero_crossing_rate",
-                ],
-            )
-
-    return media.where(F.col("kind") == "audio").select(
-        "media_id", "payload", "meta"
-    ).mapInPandas(_extract, AUDIO_FEATURE_SCHEMA)
 
 
 IMAGE_ROUNDTRIP_SCHEMA = StructType(
@@ -717,9 +616,10 @@ def sample_video_frames(
     composited per their disposal/blend models (imagecodecs.gif_frames /
     webpcodec.webp_frames) and sampled by their own per-frame delays —
     emitted as PNG bytes. WebM/MKV and MP4 video tracks are demuxed at the
-    sample level (av1codec.mkv_video_samples / mp4mux.mp4_video_samples)
+    sample level (av1codec.mkv_video_samples / mp4mux.mp4_video_track_info)
     and decoded for real for every codec this container has a decoder
-    for: AV1 via the dav1d ctypes binding (A/B'd against libaom), HEVC
+    for: AV1 via the dav1d ctypes binding (A/B'd against libaom in the
+    tests), HEVC
     (hvc1/hev1/V_MPEGH) via the libde265 ctypes binding, VP8 via the
     pure-Python RFC 6386 decoder (bit-identical to libwebp; keyframe
     samples only — the container's keyframe flags route interframes out
@@ -973,9 +873,9 @@ def sample_audio_payloads(media: DataFrame, strict: bool = False) -> DataFrame:
     """Coded-audio frame extraction via row-multiplying mapInPandas —
     the audio twin of ``sample_video_frames``. The DEMUX layer is real
     for every audio framing real crawls ship: MP4 audio tracks
-    (mp4mux.mp4_audio_samples — stts/stsc/stsz/stco + fragmented
+    (mp4mux.mp4_audio_track_info — stts/stsc/stsz/stco + fragmented
     layouts, ragged chunking), Matroska/WebM audio tracks
-    (audiodemux.mkv_audio_samples — SimpleBlock/BlockGroup with full
+    (audiodemux.mkv_audio_track_info — SimpleBlock/BlockGroup with full
     Xiph/fixed/EBML de-lacing; audio blocks lace routinely), bare MP3
     streams (header-walk frame split), and Ogg Opus/Vorbis/FLAC
     (RFC 3533 page-lacing packet reassembly incl. cross-page
@@ -1246,31 +1146,6 @@ def _clean_probe(out: dict) -> dict:
     return out
 
 
-def with_probed_media(df: DataFrame) -> DataFrame:
-    """(media_id, payload) → full MEDIA_SCHEMA rows with kind/codec/dims/duration
-    probed from the real container headers. Unknown payloads keep
-    kind='unknown' so downstream filters can quarantine them."""
-    meta_fields = MEDIA_SCHEMA["meta"].dataType.fieldNames()
-
-    def rows_of(payload):
-        payload = bytes(payload or b"")
-        p = probe_media(payload)
-        yield p["kind"] or "unknown", payload, {k: p[k] for k in meta_fields}
-
-    return _row_table(df, "media_id", "payload", MEDIA_SCHEMA, rows_of,
-                      strict=True)
-
-
-def metadata_only_stats(media: DataFrame) -> DataFrame:
-    """Metadata aggregation that never touches payload bytes — parquet column
-    pruning makes this a cheap scan even over petabytes of media."""
-    return media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.avg(F.col("meta.width")).alias("avg_width"),
-        F.avg(F.col("meta.duration_ms")).alias("avg_duration_ms"),
-    )
-
-
 IMAGE_TEXT_SCHEMA = StructType(
     [
         StructField("media_id", StringType(), False),
@@ -1293,7 +1168,6 @@ def extract_image_text(
     media: DataFrame,
     ocr=None,
     strict: bool = False,
-    passthrough_cols: list[str] | None = None,
 ) -> DataFrame:
     """Pixels→text for standalone images — the reference image loader's
     intelligent-OCR path (ingestion/loaders/image_loader.py:35-80 →
@@ -1320,11 +1194,6 @@ def extract_image_text(
     """
     from graphrag_mrkr_2_spark.functions.ocr import process_standalone_image
 
-    extra = list(passthrough_cols or [])
-    out_schema = StructType(
-        list(IMAGE_TEXT_SCHEMA.fields)
-        + [media.schema[c] for c in extra]
-    )
     if not OCR_ENABLED:
         return media.select(
             F.col("media_id").cast("string").alias("media_id")
@@ -1332,7 +1201,7 @@ def extract_image_text(
             F.col("media_id"),
             *[
                 F.lit(None).cast(f.dataType).alias(f.name)
-                for f in out_schema.fields[1:]
+                for f in IMAGE_TEXT_SCHEMA.fields[1:]
             ],
         )
 
@@ -1358,7 +1227,6 @@ def extract_image_text(
                     )
                 rows.append(
                     {
-                        **{c: getattr(rec, c) for c in extra},
                         "media_id": str(rec.media_id),
                         "content": result["content"],
                         "processing_method": "image_ocr",
@@ -1373,10 +1241,10 @@ def extract_image_text(
                         "error": err,
                     }
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+            yield pd.DataFrame(rows, columns=IMAGE_TEXT_SCHEMA.fieldNames())
 
-    return media.select("media_id", "payload", *extra).mapInPandas(
-        _extract, out_schema)
+    return media.select("media_id", "payload").mapInPandas(
+        _extract, IMAGE_TEXT_SCHEMA)
 
 
 SUBTITLE_SCHEMA = StructType(

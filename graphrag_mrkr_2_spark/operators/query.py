@@ -1,42 +1,24 @@
-"""Query-side operators (SURVEY §2.7): vector top-k, BM25, fusion, beam search.
+"""Query-side operators (SURVEY §2.7) that the driver's queries run: BM25,
+RRF fusion, query expansion and graph context expansion.
 
 The reference's read path runs against Neo4j indexes (vector, fulltext) with
 Python-side fusion (rag/retriever.py). Re-expressed as DataFrame operators:
 
-  Q1 vector top-k       ann.brute_force_topk / lsh_topk (see ann.py)
+  Q1 vector top-k       ann.brute_force_topk (see ann.py)
   Q2 BM25 keyword       inverted-index DataFrames + Okapi BM25 scoring
                         (Neo4j fulltext analog, core/graph_db.py:3465-3561)
   Q3 RRF fusion         score[c] += 1/(k+rank), k=60 (rag/retriever.py:41-62)
-  Q4 hybrid weighted    chunk 70% / entity 30% (README.md:61)
-  Q5 multi-hop beam     seed expansion over RELATED_TO/SIMILAR_TO edges,
-                        beam 8, max 2 hops, min strength
-                        (core/graph_db.py:4788-4967)
-  Q7 sentence window    T9 sentences + lag/lead context via window functions
-                        (core/graph_db.py:1918-1991)
 
 Scale shape: BM25 posting lists and the doc-frequency table are one groupBy
-each; per-query scoring is a broadcast semi-join on query terms. Beam search
-is max_hops bounded joins with per-seed row_number pruning — no driver loop
-over rows.
+each; per-query scoring is a broadcast semi-join on query terms.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 from pyspark.sql.window import Window
-
-from ..functions import sentences as _sentences
-from ..session import pin
 
 # ---------------------------------------------------------------------------
 # Q2: BM25
@@ -106,7 +88,7 @@ def bm25_search(
 
 
 # ---------------------------------------------------------------------------
-# Q3/Q4: fusion
+# Q3: fusion
 # ---------------------------------------------------------------------------
 
 
@@ -125,255 +107,6 @@ def rrf_fuse(ranked_lists: list[DataFrame]) -> DataFrame:
         out.groupBy("chunk")
         .agg(F.sum("part").alias("rrf_score"))
         .orderBy(F.desc("rrf_score"), F.asc("chunk"))
-    )
-
-
-def weighted_fuse(
-    chunk_scores: DataFrame,
-    entity_scores: DataFrame,
-) -> DataFrame:
-    """Q4 hybrid weighted fusion (README.md:61 — 70% chunk / 30% entity).
-    Inputs carry (chunk, score) each, min-max normalized before mixing.
-    Normalization scalars ride as broadcast 1-row aggregates — no collects,
-    the whole fusion is one lazy plan."""
-
-    def norm(df: DataFrame) -> DataFrame:
-        stats = df.agg(
-            F.coalesce(F.min("score"), F.lit(0.0)).alias("lo"),
-            F.coalesce(F.max("score"), F.lit(1.0)).alias("hi"),
-        )
-        span = F.col("hi") - F.col("lo")
-        span = F.when(span != 0.0, span).otherwise(F.lit(1.0))
-        return df.crossJoin(F.broadcast(stats)).select(
-            "chunk", ((F.col("score") - F.col("lo")) / span).alias("nscore")
-        )
-
-    c = norm(chunk_scores).withColumnRenamed("nscore", "cscore")
-    e = norm(entity_scores).withColumnRenamed("nscore", "escore")
-    return (
-        c.join(e, "chunk", "outer")
-        .fillna({"cscore": 0.0, "escore": 0.0})
-        .select(
-            "chunk",
-            (F.col("cscore") * 0.7 + F.col("escore") * 0.3).alias(
-                "hybrid_score"
-            ),
-        )
-        .orderBy(F.desc("hybrid_score"), F.asc("chunk"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Q5: multi-hop beam expansion
-# ---------------------------------------------------------------------------
-
-
-# Q5 search limits, shared by find_scored_paths and beam_expand
-MAX_HOPS = 2
-BEAM_SIZE = 8
-MIN_STRENGTH = 0.0
-
-
-def find_scored_paths(edges: DataFrame, nodes: DataFrame, seed_ids: list[str]) -> DataFrame:
-    """Q5 exact reference semantics (core/graph_db.py:4788-4967
-    find_scored_paths):
-
-    - a path starts at each seed with score = the seed's importance_score;
-    - each hop (at most ``MAX_HOPS``) expands the path's LAST entity over
-      undirected edges with strength >= ``MIN_STRENGTH``, excluding nodes
-      already on that path (per-path visited set — an array column, bounded
-      by MAX_HOPS+1);
-    - per path, only the top ``BEAM_SIZE*2`` candidate edges by strength are
-      considered (the reference's ORDER BY r.strength DESC LIMIT beam*2;
-      ties broken by target id for determinism where Neo4j is arbitrary);
-    - new_score = 0.5*path_score + 0.3*strength + 0.2*target_importance
-      (:4935-4940);
-    - after each hop, a GLOBAL top-``BEAM_SIZE`` prune over all paths
-      (:4950-4952) — per query, not per seed;
-    - a hop that yields no expansions terminates the loop with an EMPTY
-      result: the reference assigns current_paths = next_paths[:beam_size]
-      BEFORE its empty check (:4950-4956), and seed/intermediate paths are
-      never carried forward, so only the deepest reached frontier survives —
-      and a dead-end hop (even from an unexpandable seed) returns nothing.
-
-    Returns (path array<string>, last, hop, score) sorted by score desc.
-    Each hop is one join + two windows; per-hop frontier is <= BEAM_SIZE
-    rows, so the loop's cost is dominated by the edge probe join — at scale,
-    broadcast the tiny frontier against the bucketed edge table.
-    """
-    sym = (
-        edges.select(
-            F.col("source_id").alias("a"),
-            F.col("target_id").alias("b"),
-            F.col("strength").cast("double").alias("w"),
-        )
-        .unionByName(
-            edges.select(
-                F.col("target_id").alias("a"),
-                F.col("source_id").alias("b"),
-                F.col("strength").cast("double").alias("w"),
-            )
-        )
-        .where(F.col("w") >= MIN_STRENGTH)
-    )
-    imp = nodes.select(
-        F.col("entity_id").alias("b"),
-        F.coalesce(F.col("importance_score").cast("double"), F.lit(0.5)).alias("imp_b"),
-    )
-
-    spark = edges.sparkSession
-    seeds = spark.createDataFrame([(s,) for s in seed_ids], "last string")
-    frontier = pin(
-        seeds.join(
-            nodes.select(
-                F.col("entity_id").alias("last"),
-                F.coalesce(F.col("importance_score").cast("double"), F.lit(0.5)).alias("score"),
-            ),
-            "last",
-        )
-        .select(F.array("last").alias("path"), "last", F.lit(0).alias("hop"), "score")
-    )
-
-    result = frontier
-    for hop in range(1, MAX_HOPS + 1):
-        cand = (
-            frontier.join(sym, frontier["last"] == sym["a"])
-            .where(~F.array_contains(F.col("path"), F.col("b")))
-            .join(imp, "b", "left")
-            .fillna({"imp_b": 0.5})
-        )
-        w_path = Window.partitionBy("path").orderBy(F.desc("w"), F.asc("b"))
-        capped = cand.withColumn("cand_rn", F.row_number().over(w_path)).where(
-            F.col("cand_rn") <= BEAM_SIZE * 2
-        )
-        expanded = capped.select(
-            F.concat(F.col("path"), F.array(F.col("b"))).alias("path"),
-            F.col("b").alias("last"),
-            F.lit(hop).alias("hop"),
-            (
-                F.col("score") * 0.5 + F.col("w") * 0.3 + F.col("imp_b") * 0.2
-            ).alias("score"),
-        )
-        w_global = Window.orderBy(F.desc("score"), F.asc(F.to_json(F.struct("path"))))
-        pruned = pin(
-            expanded.withColumn("rn", F.row_number().over(w_global))
-            .where(F.col("rn") <= BEAM_SIZE)
-            .drop("rn")
-        )
-        # reference order (:4950-4956): frontier becomes the pruned set FIRST,
-        # then the empty check breaks — so a dead-end hop leaves an empty
-        # result rather than keeping the previous frontier.
-        frontier = pruned
-        result = frontier
-        if pruned.isEmpty():
-            break
-    return result.orderBy(F.desc("score"), F.asc(F.to_json(F.struct("path"))))
-
-
-def beam_expand(edges: DataFrame, seeds: DataFrame) -> DataFrame:
-    """Frontier-expansion variant of Q5 (engine extension, NOT the
-    reference's path semantics — use find_scored_paths for exact parity).
-
-    seeds: (seed_id). Returns (seed_id, node, hop, path_score) — per seed,
-    each of ``MAX_HOPS`` hops keeps the top ``BEAM_SIZE`` frontier nodes by
-    accumulated path
-    score (product of non-negative edge strengths), expanding edges in both
-    directions.
-    Useful as a retrieval expander when per-node reach matters more than
-    enumerated paths.
-    """
-    sym = (
-        edges.select(
-            F.col("source_id").alias("a"), F.col("target_id").alias("b"), F.col("strength").alias("w")
-        )
-        .unionByName(
-            edges.select(
-                F.col("target_id").alias("a"), F.col("source_id").alias("b"), F.col("strength").alias("w")
-            )
-        )
-        .where(F.col("w") >= 0.0)
-    )
-
-    frontier = seeds.select(
-        F.col("seed_id"), F.col("seed_id").alias("node"), F.lit(0).alias("hop"), F.lit(1.0).alias("path_score")
-    )
-    result = frontier
-    for hop in range(1, MAX_HOPS + 1):
-        expanded = (
-            frontier.join(sym, frontier["node"] == sym["a"])
-            .select(
-                "seed_id",
-                F.col("b").alias("node"),
-                F.lit(hop).alias("hop"),
-                (F.col("path_score") * F.col("w")).alias("path_score"),
-            )
-        )
-        # best path per (seed, node), then beam prune per seed
-        best = expanded.groupBy("seed_id", "node").agg(
-            F.max("path_score").alias("path_score"), F.min("hop").alias("hop")
-        )
-        w = Window.partitionBy("seed_id").orderBy(F.desc("path_score"), F.asc("node"))
-        frontier = (
-            best.join(result.select("seed_id", F.col("node").alias("seen")),
-                      (F.col("node") == F.col("seen")) & (best["seed_id"] == result["seed_id"]),
-                      "left_anti")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= BEAM_SIZE)
-            .drop("rn")
-        )
-        result = result.unionByName(frontier.select("seed_id", "node", "hop", "path_score"))
-    return result
-
-
-# ---------------------------------------------------------------------------
-# Q7: sentence-window retrieval
-# ---------------------------------------------------------------------------
-
-_SENT_SCHEMA = StructType(
-    [
-        StructField("chunk_id", StringType(), False),
-        StructField("sentence_index", IntegerType(), False),
-        StructField("sentence", StringType(), False),
-    ]
-)
-
-
-def split_sentences(chunks: DataFrame) -> DataFrame:
-    """T9 — sentence rows per (chunk_id, content) chunk (ids mirror sha256(chunk:sN)[:16],
-    document_processor.py:1016)."""
-
-    def _split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.sentences import split_into_sentences
-
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                for i, s in enumerate(split_into_sentences(rec.content or "")):
-                    rows.append({"chunk_id": rec.chunk_id, "sentence_index": i, "sentence": s})
-            yield pd.DataFrame(rows, columns=["chunk_id", "sentence_index", "sentence"])
-
-    out = chunks.select("chunk_id", "content").mapInPandas(_split, _SENT_SCHEMA)
-    return out.withColumn(
-        "sentence_id",
-        F.substring(
-            F.sha2(F.concat_ws(":", F.col("chunk_id"), F.concat(F.lit("s"), F.col("sentence_index"))), 256),
-            1,
-            16,
-        ),
-    )
-
-
-def sentence_windows(sentences: DataFrame) -> DataFrame:
-    """±``sentences.SENTENCE_WINDOW`` sentence context via collect over a
-    bounded window frame — the lag/lead expansion of
-    core/graph_db.py:1918-1991."""
-    w = (
-        Window.partitionBy("chunk_id")
-        .orderBy("sentence_index")
-        .rowsBetween(-_sentences.SENTENCE_WINDOW, _sentences.SENTENCE_WINDOW)
-    )
-    return sentences.withColumn(
-        "window_text", F.array_join(F.collect_list("sentence").over(w), " ")
     )
 
 

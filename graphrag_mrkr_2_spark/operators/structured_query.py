@@ -1,28 +1,23 @@
 """Q8: natural-language → structured KG query (Text-to-SQL).
 
-Re-expresses rag/nodes/structured_kg_executor.py (670 LoC, Text-to-Cypher
-against Neo4j) for Spark: the generated artifact is READ-ONLY Spark SQL over
-registered ``kg_nodes`` / ``kg_edges`` temp views, with the same staged
-pipeline and the same deterministic guards:
+Re-expresses the stages of rag/nodes/structured_kg_executor.py (670 LoC,
+Text-to-Cypher against Neo4j) that the driver's kg_structured_query runs:
+the generated artifact is READ-ONLY Spark SQL over registered ``kg_nodes`` /
+``kg_edges`` temp views.
 
-  1. input risk gate          assess_input_risk (:53-62, regex ported)
-  2. query-type detection     detect_query_type (:192-227, keyword heuristics
+  1. query-type detection     detect_query_type (:192-227, keyword heuristics
                               ported verbatim)
-  3. suitability gate         is_suitable_for_structured (:230-241)
-  4. entity linking           mention embeddings vs node-name embeddings,
+  2. mention extraction       extract_mentions_default, the deterministic
+                              stand-in for the LLM extractor (:262-299)
+  3. entity linking           mention embeddings vs node-name embeddings,
                               best match per mention at threshold 0.85
-                              (:243-346; embeddings via the same injectable
-                              seam as T8)
-  5. SQL generation           injectable LLM callable; the deterministic
-                              default renders per-query-type templates
-                              (:349-450 generates Cypher via LLM — the seam
-                              is identical, the default is network-free)
-  6. read-only validation     validate_readonly_sql — the SQL analog of
+                              (:243-346; the same pseudo-embedding as T8)
+  4. SQL generation           default_sql_generator renders per-query-type
+                              templates (:349-450 generates Cypher via LLM)
+  5. read-only validation     validate_readonly_sql — the SQL analog of
                               validate_readonly_cypher (:65-78): no ';', no
                               DML/DDL keywords, SELECT required, LIMIT
                               required unless aggregating
-  7. execution w/ correction  max 2 correction attempts, validation re-run
-                              on every corrected query (:483-585)
 
 Scale note: everything the SQL touches executes as ordinary Spark plans over
 the KG tables (Catalyst optimizes the generated SQL like any other query);
@@ -32,18 +27,11 @@ the driver-side work is O(linked mentions).
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..functions.embeddings import pseudo_embedding
-
-# structured_kg_executor.py:42-46 (ported constant)
-INJECTION_RE = re.compile(
-    r"(ignore (all|previous) instructions|system prompt|developer message|reveal|jailbreak|DAN|prompt injection)",
-    re.IGNORECASE,
-)
 
 # SQL analog of FORBIDDEN_CYPHER_RE (:48-51)
 FORBIDDEN_SQL_RE = re.compile(
@@ -52,18 +40,6 @@ FORBIDDEN_SQL_RE = re.compile(
 )
 
 _AGG_TOKENS = ("COUNT(", "SUM(", "AVG(", "MIN(", "MAX(")
-
-
-def assess_input_risk(text: str) -> str:
-    """structured_kg_executor.py:53-62, ported verbatim."""
-    t = (text or "").strip()
-    if not t or len(t) > 4000:
-        return "high"
-    if INJECTION_RE.search(t):
-        return "high"
-    if t.count("```") >= 2 or t.count("<") > 200 or t.count("{") > 200:
-        return "medium"
-    return "low"
 
 
 def detect_query_type(query: str) -> str:
@@ -82,11 +58,6 @@ def detect_query_type(query: str) -> str:
     if any(p in q for p in ("find document", "search document", "documents that", "docs that", "which document")):
         return "relationship"
     return "general"
-
-
-def is_suitable_for_structured(query_type: str) -> bool:
-    """structured_kg_executor.py:230-241."""
-    return query_type in ("aggregation", "path", "comparison", "hierarchical", "relationship")
 
 
 def validate_readonly_sql(sql: str) -> bool:
@@ -126,62 +97,30 @@ def extract_mentions_default(query: str) -> list[str]:
     return uniq[:5]
 
 
-def prepare_node_embeddings(nodes: DataFrame) -> DataFrame:
-    """Embed the distinct node names ONCE for reuse across queries.
+def link_entities(mentions: list[str], nodes: DataFrame) -> list[dict]:
+    """Best embedding match per mention at the reference's 0.85 threshold
+    (:304-346), in ONE broadcast+window plan.
 
-    The KG pipeline already carries T8 embeddings for nodes; when a caller
-    has that table, pass it straight to ``link_entities_batch`` /
-    ``StructuredQueryExecutor(node_embeddings=...)`` instead — this helper
-    exists for callers holding only the raw node table. Returns
-    ``(name, embedding)``."""
-    from .similarity import with_embeddings
-
-    return with_embeddings(nodes.select("name").distinct(), text_col="name")
-
-
-def link_entities_batch(
-    mention_sets: dict,
-    nodes: DataFrame | None = None,
-    node_embeddings: DataFrame | None = None,
-) -> dict:
-    """Link ALL pending queries' mentions in ONE broadcast+window plan.
-
-    Reference semantics per mention are unchanged (:304-346, best cosine at
-    the 0.85 threshold); the batching is the Spark-scale move (VERDICT r3
-    'What's wrong' #2): mentions are de-duplicated across queries by exact
-    surface form, embedded driver-side (≤5 per query, tiny), broadcast
-    against the node-name embeddings — which are computed AT MOST ONCE per
-    call, or zero times when a precomputed ``node_embeddings(name,
-    embedding)`` table is supplied — and a per-mention ``row_number()==1``
-    window picks each winner. Only distinct-mention winners reach the
-    driver: O(distinct mentions), independent of node count and query count.
-
-    ``mention_sets`` maps query-id → mention list; returns query-id →
-    linked-entity list in the query's mention order.
+    Mentions are de-duplicated by exact surface form, embedded driver-side
+    (≤5 per query, tiny) and broadcast against the embeddings of the
+    distinct node names; a per-mention ``row_number()==1`` window picks each
+    winner. Only distinct-mention winners reach the driver: O(distinct
+    mentions), independent of node count. Returns the linked entities in
+    mention order.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from ..functions.embeddings import DEFAULT_DIM
+    from .similarity import with_embeddings
 
-    out: dict = {qid: [] for qid in mention_sets}
     # exact surface form is the dedup key: pseudo/real embeddings are
     # case-sensitive, so "Admin Panel" and "admin panel" may link differently
-    distinct: list[str] = []
-    seen: set[str] = set()
-    for ms in mention_sets.values():
-        for m in ms:
-            if m not in seen:
-                seen.add(m)
-                distinct.append(m)
+    distinct = list(dict.fromkeys(mentions))
     if not distinct:
-        return out
+        return []
 
-    if node_embeddings is None:
-        if nodes is None:
-            raise ValueError("link_entities_batch needs nodes or node_embeddings")
-        node_embeddings = prepare_node_embeddings(nodes)
-
+    node_embeddings = with_embeddings(nodes.select("name").distinct(), text_col="name")
     spark = node_embeddings.sparkSession
     mrows = []
     for mention in distinct:
@@ -212,19 +151,7 @@ def link_entities_batch(
         r["query_mention"]: {"name": r["name"], "confidence": float(r["confidence"])}
         for r in top
     }
-    for qid, ms in mention_sets.items():
-        out[qid] = [
-            {"query_mention": m, **best[m]} for m in ms if m in best
-        ]
-    return out
-
-
-def link_entities(mentions: list[str], nodes: DataFrame) -> list[dict]:
-    """Best embedding match per mention at the reference's 0.85 threshold
-    (:304-346) — single-query wrapper over ``link_entities_batch``."""
-    if not mentions:
-        return []
-    return link_entities_batch({0: mentions}, nodes)[0]
+    return [{"query_mention": m, **best[m]} for m in mentions if m in best]
 
 
 def _q(name: str) -> str:
@@ -280,129 +207,3 @@ def default_sql_generator(query: str, entities: list[dict], query_type: str) -> 
         )
     # under-linked path/comparison degrade to the relationship shape
     return default_sql_generator(query, entities, "relationship")
-
-
-SqlGenerator = Callable[[str, list[dict], str], str]
-SqlCorrector = Callable[[str, str], str]
-
-
-def default_sql_corrector(failed_sql: str, error: str) -> str:
-    """Deterministic correction stand-in (:586-660 uses the LLM): degrade to
-    the safest bounded query rather than retrying a broken artifact."""
-    return "SELECT name FROM kg_nodes ORDER BY importance_score DESC LIMIT 50"
-
-
-class StructuredQueryExecutor:
-    """The execute_query pipeline (:89-190) over Spark SQL."""
-
-    def __init__(
-        self,
-        sql_generator: SqlGenerator = default_sql_generator,
-        sql_corrector: SqlCorrector = default_sql_corrector,
-        mention_extractor: Callable[[str], list[str]] = extract_mentions_default,
-        node_embeddings: DataFrame | None = None,
-    ) -> None:
-        self.sql_generator = sql_generator
-        self.sql_corrector = sql_corrector
-        self.mention_extractor = mention_extractor
-        # precomputed (name, embedding) table — the KG pipeline's own node
-        # embeddings; supplying it means NO query ever re-embeds node names
-        self.node_embeddings = node_embeddings
-
-    def execute(
-        self,
-        spark: SparkSession,
-        query: str,
-        nodes: DataFrame,
-        edges: DataFrame,
-    ) -> dict:
-        return self.execute_batch(spark, [query], nodes, edges)[0]
-
-    def execute_batch(
-        self,
-        spark: SparkSession,
-        queries: list[str],
-        nodes: DataFrame,
-        edges: DataFrame,
-    ) -> list[dict]:
-        """Run N queries with ONE entity-linking plan (VERDICT r3 #2):
-        gates run per query driver-side (cheap regex/keyword work), then all
-        surviving queries' mentions link in a single broadcast+window job —
-        the node-name table is embedded at most once for the whole batch,
-        zero times when ``node_embeddings`` was supplied."""
-        prelim: list[dict | None] = []
-        mention_sets: dict[int, list[str]] = {}
-        qtypes: dict[int, str] = {}
-        for i, query in enumerate(queries):
-            risk = assess_input_risk(query)
-            if risk == "high":
-                prelim.append(
-                    {"success": False, "error": "input blocked by risk policy", "risk": risk}
-                )
-                continue
-            query_type = detect_query_type(query)
-            if not is_suitable_for_structured(query_type):
-                prelim.append({"success": False, "fallback": True, "query_type": query_type})
-                continue
-            prelim.append(None)
-            qtypes[i] = query_type
-            mention_sets[i] = self.mention_extractor(query)
-
-        if not mention_sets:
-            return [r for r in prelim if r is not None]
-
-        nodes.createOrReplaceTempView("kg_nodes")
-        edges.createOrReplaceTempView("kg_edges")
-        linked = link_entities_batch(mention_sets, nodes, node_embeddings=self.node_embeddings)
-        results: list[dict] = []
-        for i, pre in enumerate(prelim):
-            if pre is not None:
-                results.append(pre)
-            else:
-                results.append(
-                    self._run_sql(spark, queries[i], linked[i], qtypes[i])
-                )
-        return results
-
-    def _run_sql(
-        self, spark: SparkSession, query: str, entities: list[dict], query_type: str
-    ) -> dict:
-        sql = self.sql_generator(query, entities, query_type)
-
-        corrections = 0
-        current = sql
-        for attempt in range(3):  # the first try and up to 2 corrections
-            if not validate_readonly_sql(current):
-                return {
-                    "success": False,
-                    "error": "SQL blocked by security policy",
-                    "final_sql": current,
-                    "corrections": corrections,
-                }
-            try:
-                df = spark.sql(current)
-                records = [r.asDict() for r in df.collect()]
-                return {
-                    "success": True,
-                    "results": records,
-                    "final_sql": current,
-                    "query_type": query_type,
-                    "entities": entities,
-                    "corrections": corrections,
-                }
-            except Exception as exc:  # noqa: BLE001 — reference catches all (:537)
-                if attempt >= 2:
-                    return {
-                        "success": False,
-                        "error": str(exc),
-                        "final_sql": current,
-                        "corrections": corrections,
-                    }
-                current = self.sql_corrector(current, str(exc))
-                corrections += 1
-        return {
-            "success": False,
-            "error": "max correction attempts exceeded",
-            "final_sql": current,
-            "corrections": corrections,
-        }

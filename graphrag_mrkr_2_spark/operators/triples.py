@@ -497,25 +497,3 @@ def build_triples(edges: DataFrame) -> DataFrame:
     (subj, obj, rel_type): it groups by that key and left-joins provenance
     grouped by the same key. So no ``distinct`` (and no extra job) here."""
     return edges.select(F.col("subj"), F.col("rel_type").alias("pred"), F.col("obj"))
-
-
-def mentions_table(entities_doc: DataFrame) -> DataFrame:
-    """J4 — CONTAINS_ENTITY (chunk→entity) by exploding provenance
-    (core/graph_db.py:3908-3958)."""
-    return (
-        entities_doc.select(
-            F.substring(F.md5(F.lower(F.col("name"))), 1, 16).alias("entity_id"),
-            F.explode(F.col("source_chunks")).alias("chunk_id"),
-        )
-        .distinct()
-    )
-
-
-def entity_counts_per_chunk(mentions: DataFrame) -> DataFrame:
-    """Per-chunk extraction yield, input to T6 chunk removal and J6 metrics."""
-    return mentions.groupBy("chunk_id").agg(
-        F.sum(F.when(F.col("kind") == "entity", 1).otherwise(0)).alias("entity_count"),
-        F.sum(F.when(F.col("kind") == "relationship", 1).otherwise(0)).alias(
-            "relationship_count"
-        ),
-    )

@@ -98,18 +98,6 @@ def with_normalized_urls(df: DataFrame) -> DataFrame:
     )
 
 
-def dedup_normalized_urls(df: DataFrame) -> DataFrame:
-    """Crawl dedup (C4-style): one row per ``norm_url`` (tracking params,
-    fragments, default ports... collapse), deterministically the one with
-    the min raw ``url``. Input comes from ``with_normalized_urls``."""
-    w = Window.partitionBy("norm_url").orderBy("url")
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def cap_per_domain(
     df: DataFrame,
     max_per_domain: int,
@@ -227,65 +215,3 @@ def evaluate_robots(
            StructField("robots_allowed", BooleanType(), True)]
     )
     return joined.mapInPandas(_eval, schema).drop("__dom")
-
-
-def expand_discovery_payloads(df: DataFrame) -> DataFrame:
-    """Explode crawled discovery (url, payload) documents — sitemaps (urlset/
-    sitemapindex/text/gzip) and RSS/Atom feeds — into one row per
-    discovered URL (r7): columns (id = url, doc_kind, entry_index, loc, title,
-    lastmod). Per-payload quarantine: a malformed document contributes
-    zero rows instead of failing the task. 100-TB shape: one Arrow pass,
-    no shuffle; the output unions into the URL-curation chain
-    (normalize → registered_domain → caps → evaluate_robots)."""
-
-    def _expand(batches):
-        import pandas as pd
-
-        from graphrag_mrkr_2_spark.functions.feeds import parse_feed
-        from graphrag_mrkr_2_spark.functions.sitemaps import (
-            bounded_gunzip,
-            parse_sitemap,
-        )
-
-        for pdf in batches:
-            rows: list[dict] = []
-            for rid, payload in zip(pdf["url"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                # ADVICE r7: un-gzip ONCE up front (bounded_gunzip — the
-                # same 50 MB streaming-capped member handling parse_sitemap
-                # uses) so a compressed FEED also parses — previously
-                # parse_sitemap un-gzipped but rejected <rss>/<feed> roots,
-                # and parse_feed then received the still-compressed bytes
-                # and quarantined every .xml.gz feed
-                if data[:2] == b"\x1f\x8b":
-                    try:
-                        data = bounded_gunzip(data)
-                    except ValueError:
-                        continue  # quarantine: bad member / bomb
-                kind = None
-                entries = []
-                try:
-                    kind, entries = parse_sitemap(data)
-                except ValueError:
-                    try:
-                        kind, entries = parse_feed(data)
-                    except ValueError:
-                        continue  # quarantine: neither format
-                for i, e in enumerate(entries):
-                    rows.append({
-                        "id": str(rid),
-                        "doc_kind": kind,
-                        "entry_index": i,
-                        "loc": e.get("loc") or e.get("link"),
-                        "title": e.get("title"),
-                        "lastmod": e.get("lastmod") or e.get("published"),
-                    })
-            yield pd.DataFrame(
-                rows, columns=["id", "doc_kind", "entry_index", "loc",
-                               "title", "lastmod"])
-
-    return df.select("url", "payload").mapInPandas(
-        _expand,
-        "id string, doc_kind string, entry_index int, loc string, "
-        "title string, lastmod string",
-    )

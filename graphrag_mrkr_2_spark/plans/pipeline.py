@@ -134,7 +134,7 @@ def run_kg_pipeline(
     other table is planned on first access.
     ``num_partitions``: url-hash repartition width before the heavy
     UDF stage (head-domain skew, north_rule). None → keep input layout.
-    URL curation (operators/urlops.py: ``dedup_normalized_urls``,
+    URL curation (operators/urlops.py: ``with_normalized_urls``,
     ``cap_per_domain``) goes in front of this call, on ``pages``.
     ``materialize_chunks``: ignored, kept for callers written when the
     pinned pass was optional; the chunks are always pinned.

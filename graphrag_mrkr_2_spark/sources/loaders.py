@@ -370,46 +370,3 @@ def read_binary_documents(
     if keep_binary:
         schema = StructType([*PAGES_SCHEMA.fields, StructField("binary", BinaryType(), True)])
     return files.mapInPandas(_decode, schema)
-
-
-def read_image_documents(
-    spark: SparkSession,
-    path: str,
-    ocr=None,
-) -> DataFrame:
-    """Standalone image files → pages(url, warc_ts, html, text, lang) via
-    intelligent OCR — the reference ImageLoader as a distributed source
-    (ingestion/loaders/image_loader.py:22-33: load() returns the OCR'd
-    content or None; None-content images produce NO document).
-
-    binaryFile scan → real pixel decode + content analysis + the injected
-    OCR engine (operators/multimodal.extract_image_text) → rows shaped
-    exactly like read_binary_documents so the output composes with
-    chunking and the KG pipeline unchanged.  ``lang`` carries the
-    detected Tesseract language code (e.g. 'eng').
-    """
-    from graphrag_mrkr_2_spark.operators.multimodal import extract_image_text
-
-    files = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .where(F.col("length") <= MAX_FILE_BYTES)
-        .select(
-            F.col("path").alias("media_id"),
-            F.col("modificationTime").cast("string").alias("warc_ts"),
-            F.col("content").alias("payload"),
-        )
-    )
-    extracted = extract_image_text(
-        files,
-        ocr=ocr,
-        passthrough_cols=["warc_ts"],  # rides the UDF — no join, no shuffle
-    )
-    # no-text → None contract: images without extractable text yield no page
-    return extracted.where(F.col("content").isNotNull()).select(
-        F.col("media_id").alias("url"),
-        F.col("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("content").alias("text"),
-        F.col("detected_language").alias("lang"),
-    )

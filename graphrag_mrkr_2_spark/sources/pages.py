@@ -166,111 +166,6 @@ def make_page(i: int, seed: int = 42) -> dict:
     }
 
 
-_ADVERSARIAL_VARIANTS = 8
-# Length of variant 5's single <p>; the 10 MB test patches it.
-BIG_PAGE_CHARS = 200_000
-
-
-def make_adversarial_page(i: int) -> dict:
-    """Hostile-input page generator (VERDICT r3 'Next round' #8): the checked-
-    in fixture source for the adversarial parity gate. Variant ``i % 8``:
-
-    0. deep nesting          300-level div/span towers around real content
-    1. malformed entities    unterminated/unknown/overflowing &-references
-    2. mis-nested tags       unclosed <p>, interleaved <b><i></b></i>, stray
-                             closers, orphan <li>/<td>
-    3. comment/script traps  markup-shaped text inside <!-- -->, <script>,
-                             <style> that must NOT surface or chunk
-    4. unicode soup          BOM, NBSP, ZWJ, combining marks, CJK, emoji,
-                             RTL runs mixed into mentions
-    5. single-tag megapage   ONE <p> of ~``BIG_PAGE_CHARS`` chars (the
-                             10 MB case: BIG_PAGE_CHARS=10_000_000)
-    6. attribute bombs       multi-KB attribute values, quotes/brackets
-                             inside attributes, duplicate ids
-    7. hollow page           boilerplate-only / whitespace body
-
-    Every variant still embeds ENTITY_VOCAB mentions so the extraction
-    oracle has real work; text is the frozen extract_plain_text output,
-    keeping the byte-identical-per-url invariant.
-    """
-    nvocab = len(ENTITY_VOCAB)
-    base = _hint(42, i, "aent", nvocab)
-    mentions = [(base + 5 * j) % nvocab for j in range(4)]
-    mentions = list(dict.fromkeys(mentions))
-    names = [ENTITY_VOCAB[v][0] for v in mentions]
-    variant = i % _ADVERSARIAL_VARIANTS
-    url = f"https://hostile{i % 7}.example.test/adv/{variant}/case-{i}"
-
-    body = ""
-    if variant == 0:
-        depth = 300
-        inner = f"<h1>Deep dive {i}</h1><p>{names[0]} is documented here. " \
-                f"{names[1]} is documented here.</p>"
-        body = ("<div><span>" * depth) + inner + ("</span></div>" * depth)
-    elif variant == 1:
-        body = (
-            f"<h1>Entity torture {i}</h1>"
-            f"<p>{names[0]} is documented here.&nbsp with &#xZZ; broken refs "
-            f"&amp unterminated &bogusref; unknown &#99999999999; overflow "
-            f"and a stray & ampersand. {names[1]} is documented here.</p>"
-        )
-    elif variant == 2:
-        body = (
-            f"<h1>Mis-nesting {i}"
-            f"<p>{names[0]} is documented here. <b>bold <i>both</b> italic?</i>"
-            f"<p>{names[1]} is documented here.</div></div>"
-            f"<li>orphan item</li><td>orphan cell</td>"
-        )
-    elif variant == 3:
-        body = (
-            f"<h1>Trap markup {i}</h1>"
-            f"<!-- <h1>ghost heading</h1><p>ghost para</p> -->"
-            f"<script>var x = \"<h2>not a heading</h2>\"; if (a < b) {{}}</script>"
-            f"<style>.x::before {{ content: \"<li>styled</li>\"; }}</style>"
-            f"<p>{names[0]} is documented here. {names[1]} is documented here.</p>"
-        )
-    elif variant == 4:
-        body = (
-            f"﻿<h1>Unicode {i} 中文 \U0001f600</h1>"
-            f"<p>{names[0]} is documented here. ​"
-            f"naïve café שלום "
-            f"{names[1]} is documented here.</p>"
-        )
-    elif variant == 5:
-        sent = f"{names[0]} is documented here. {names[1]} is documented here. "
-        reps = max(1, BIG_PAGE_CHARS // len(sent))
-        body = f"<p>{sent * reps}</p>"
-    elif variant == 6:
-        bomb = "x" * 4096
-        body = (
-            f"<h1 id=\"dup\" data-blob=\"{bomb}\" title='quote\"inside'>Attr bomb {i}</h1>"
-            f"<p id=\"dup\" data-angle=\"a<b>c\">{names[0]} is documented here. "
-            f"{names[1]} is documented here.</p>"
-        )
-    else:
-        body = "<nav>ONLY NAV</nav>   \n\t  <footer>ONLY FOOTER</footer>"
-
-    html = f"<html><head><title>adv {i}</title></head><body>{body}</body></html>"
-    return {
-        "url": url,
-        "warc_ts": _BASE_TS + timedelta(seconds=i * 53 % 864000),
-        "html": html.encode("utf-8"),
-        "text": extract_plain_text(html),
-        "lang": "en",
-    }
-
-
-def generate_adversarial_pages(spark: SparkSession, n: int) -> DataFrame:
-    partitions = max(1, min(16, n // 8 or 1))
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [make_adversarial_page(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in PAGES_SCHEMA.fields])
-
-    return spark.range(0, n, numPartitions=partitions).mapInPandas(_gen, PAGES_SCHEMA)
-
-
 def generate_pages(spark: SparkSession, n: int, seed: int = 42, partitions: int | None = None) -> DataFrame:
     """Distributed generation: spark.range → mapInPandas(make_page)."""
     partitions = partitions or max(1, min(64, n // 200 or 1))

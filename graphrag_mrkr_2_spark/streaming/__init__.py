@@ -1,1 +1,1 @@
-"""Structured Streaming variants of the ingestion path + event analytics."""
+"""Windowed event aggregation that runs on batch and streaming DataFrames."""

@@ -12,14 +12,14 @@ def spark():
 
 
 def _modular_kg(pages, cfg=None, strategy="html_heading"):
-    """The unfused reference build: chunk_pages → filter_chunks →
-    extract_mentions → canonicalize → build_*, one operator per stage.
+    """The unfused reference build: chunk_pages → with_content_filter (the
+    rows with no filter_reason) → extract_mentions → canonicalize → build_*, one operator per stage.
     Returns (chunks, triples) to compare against run_kg_pipeline."""
     from graphrag_mrkr_2_spark.config import DEFAULT_CONFIG
     from graphrag_mrkr_2_spark.operators.extract import (
         chunk_pages,
         extract_text,
-        filter_chunks,
+        with_content_filter,
     )
     from graphrag_mrkr_2_spark.operators.triples import (
         build_edges,
@@ -31,8 +31,11 @@ def _modular_kg(pages, cfg=None, strategy="html_heading"):
     cfg = cfg or DEFAULT_CONFIG
     if "text" not in pages.columns:
         pages = extract_text(pages)
-    chunks = filter_chunks(
-        chunk_pages(pages, strategy=strategy, cfg=cfg.chunking), cfg=cfg.content_filter
+    chunks = (
+        with_content_filter(chunk_pages(pages, strategy=strategy, cfg=cfg.chunking),
+                            cfg=cfg.content_filter)
+        .where("filter_reason IS NULL")
+        .drop("filter_reason")
     )
     mentions = extract_mentions(chunks, max_gleanings=cfg.extraction.max_gleanings)
     _, rels_doc = canonicalize(

@@ -1,4 +1,4 @@
-"""Pure-stdlib RIFF/WAVE PCM codec + the audio_features Spark wiring."""
+"""Pure-stdlib RIFF/WAVE PCM codec + its Spark round-trip wiring."""
 
 import struct
 
@@ -74,51 +74,6 @@ class TestWav:
 
 @pytest.mark.spark
 class TestSparkWiring:
-    def _media(self, spark, rows):
-        return spark.createDataFrame(
-            rows,
-            "media_id string, kind string, payload binary, "
-            "meta struct<codec:string,width:int,height:int,duration_ms:int>",
-        )
-
-    def test_audio_features_real_samples(self, spark, monkeypatch):
-        from graphrag_mrkr_2_spark.operators import multimodal
-        from graphrag_mrkr_2_spark.operators.multimodal import audio_features
-
-        monkeypatch.setattr(multimodal, "AUDIO_STRICT", True)
-        # 1 kHz square wave at 8 kHz mono: rms 0.5, zcr = 2*f/rate = 0.25
-        n, rate = 8000, 8000
-        sq = (
-            np.where(np.arange(n) % 8 < 4, 16384, -16384).astype(np.int16)
-        )
-        silent = np.zeros(4000, dtype=np.int16)
-        media = self._media(
-            spark,
-            [
-                ("sq", "audio", bytearray(encode_wav(sq, rate)), ("wav", None, None, None)),
-                ("quiet", "audio", bytearray(encode_wav(silent, rate)), ("wav", None, None, None)),
-            ],
-        )
-        feats = {r["media_id"]: r for r in audio_features(media).collect()}
-        assert feats["sq"]["sample_rate"] == 8000
-        assert feats["sq"]["n_channels"] == 1
-        assert feats["sq"]["duration_ms"] == 1000
-        assert feats["sq"]["rms"] == pytest.approx(0.5, abs=0.01)
-        assert feats["sq"]["zero_crossing_rate"] == pytest.approx(0.25, abs=0.01)
-        assert feats["quiet"]["rms"] == pytest.approx(0.0, abs=1e-6)
-        assert feats["quiet"]["duration_ms"] == 500
-
-    def test_strict_raises_for_compressed(self, spark, monkeypatch):
-        from graphrag_mrkr_2_spark.operators import multimodal
-        from graphrag_mrkr_2_spark.operators.multimodal import audio_features
-
-        monkeypatch.setattr(multimodal, "AUDIO_STRICT", True)
-        media = self._media(
-            spark, [("m", "audio", bytearray(b"ID3\x03mp3"), ("mp3", None, None, 1000))]
-        )
-        with pytest.raises(Exception, match="NotImplementedError|codec"):
-            audio_features(media).collect()
-
     def test_roundtrip_checksums_match_formula(self, spark):
         from graphrag_mrkr_2_spark.operators.multimodal import (
             audio_roundtrip_checksums,

@@ -13,18 +13,15 @@ import pytest
 
 from graphrag_mrkr_2_spark.functions import audiodemux, mp4mux
 from graphrag_mrkr_2_spark.functions.audiodemux import (
-    mkv_audio_samples,
     mkv_audio_track_info,
     mp3_frames,
     mux_mkv_audio,
     mux_ogg,
     ogg_packets,
 )
-from graphrag_mrkr_2_spark.functions.mp4mux import (
-    mp4_audio_samples,
-    mp4_audio_track_info,
-    mux_mp4_audio,
-)
+from media_fixtures import mkv_audio_samples
+from graphrag_mrkr_2_spark.functions.mp4mux import mp4_audio_track_info, mux_mp4_audio
+from media_fixtures import mp4_audio_samples
 
 FRAMES = [bytes([i]) * (20 + (i * 37) % 300) for i in range(23)]
 

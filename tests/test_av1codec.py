@@ -16,15 +16,14 @@ import pytest
 
 from graphrag_mrkr_2_spark.functions import av1codec
 from graphrag_mrkr_2_spark.functions.av1codec import (
-    aom_decoder_available,
     avif_primary_obu,
     dav1d_available,
     decode_av1_frames,
     decode_av1_frames_yuv,
-    decode_av1_frames_yuv_aom,
     mkv_video_samples,
     mux_webm_av1,
 )
+from media_fixtures import aom_decoder_available, decode_av1_frames_yuv_aom
 from graphrag_mrkr_2_spark.functions.heifcodec import (
     encode_heif_lossless,
     heif_available,

@@ -14,7 +14,6 @@ import pytest
 from graphrag_mrkr_2_spark.functions.bpe import (
     BytePairEncoder,
     get_default_encoder,
-    set_default_encoder,
 )
 from graphrag_mrkr_2_spark.functions.tokens import (
     count_tokens,
@@ -37,10 +36,13 @@ def enc():
 
 
 @pytest.fixture()
-def bpe_mode(enc):
-    set_default_encoder(enc)
-    yield enc
-    set_default_encoder(None)
+def bpe_mode(enc, tmp_path, monkeypatch):
+    """Token counts come from the toy table, installed the way a deployment
+    installs cl100k: a ranks file named by SPARK_GRAFT_BPE_RANKS."""
+    ranks = tmp_path / "toy.tiktoken"
+    ranks.write_bytes(b"".join(base64.b64encode(t) + b" %d\n" % r for t, r in TOY_RANKS.items()))
+    monkeypatch.setenv("SPARK_GRAFT_BPE_RANKS", str(ranks))
+    return enc
 
 
 def test_whole_piece_shortcut(enc):
@@ -105,7 +107,7 @@ def test_count_monotone_under_concat(enc):
     assert toks and enc.decode(toks) == s
 
 
-def test_bpe_mode_chunker_golden(bpe_mode):
+def test_bpe_mode_chunker_golden(bpe_mode, monkeypatch):
     """BPE-mode golden alongside the fallback-mode goldens
     (test_tokenizer_parity): the SAME HTML chunks differently when token
     counts come from the encoder — frozen here so a regression in either the
@@ -120,7 +122,7 @@ def test_bpe_mode_chunker_golden(bpe_mode):
     bpe_chunks = HtmlHeadingChunker(
         target_tokens=60, min_tokens=10, max_tokens=80, overlap_tokens=5
     ).chunk_html(html)
-    set_default_encoder(None)
+    monkeypatch.delenv("SPARK_GRAFT_BPE_RANKS")
     fallback_chunks = HtmlHeadingChunker(
         target_tokens=60, min_tokens=10, max_tokens=80, overlap_tokens=5
     ).chunk_html(html)
@@ -160,12 +162,8 @@ class TestSeamRobustness:
     def test_env_unset_clears_cached_encoder(self, tmp_path, monkeypatch):
         import base64 as b64
 
-        from graphrag_mrkr_2_spark.functions.bpe import (
-            get_default_encoder,
-            set_default_encoder,
-        )
+        from graphrag_mrkr_2_spark.functions.bpe import get_default_encoder
 
-        set_default_encoder(None)
         ranks = tmp_path / "mini.tiktoken"
         ranks.write_bytes(b64.b64encode(b"a") + b" 0\n")
         monkeypatch.setenv("SPARK_GRAFT_BPE_RANKS", str(ranks))

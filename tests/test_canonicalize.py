@@ -259,11 +259,8 @@ def test_canonicalize_leaves_no_orphans(spark, source):
         canonicalize,
         extract_mentions_fused,
     )
-    from helpers import orphan_entities_per_doc
-    from graphrag_mrkr_2_spark.sources.pages import (
-        generate_adversarial_pages,
-        generate_pages,
-    )
+    from helpers import generate_adversarial_pages, orphan_entities_per_doc
+    from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
     if source == "variants":
         mentions = _variant_mentions(spark)
@@ -296,25 +293,6 @@ def test_canonicalize_leaves_no_orphans(spark, source):
         assert ("ACME CORPORATION", "USES", "GHOST NODE") not in triples
         assert ("ADMIN PANEL", "WEAK", "ACME CORPORATION") not in triples
         assert ("ACME CORP", "USES", "FAINT THING") not in triples
-
-
-@pytest.mark.spark
-def test_description_summarization_gate(spark):
-    """C7 — only long, frequently-mentioned descriptions are rewritten
-    (description_summarizer.py:347-373)."""
-    from graphrag_mrkr_2_spark.operators.summarize import summarize_descriptions
-
-    long_desc = "\n".join(f"line number {i} with some description text" for i in range(12))
-    rows = [
-        ("E LONG HOT", long_desc, 5),   # qualifies
-        ("E LONG COLD", long_desc, 2),  # too few mentions
-        ("E SHORT HOT", "short", 9),    # too short
-    ]
-    df = spark.createDataFrame(rows, "name string, description string, mention_count long")
-    out = {r["name"]: r["description"] for r in summarize_descriptions(df).collect()}
-    assert len(out["E LONG HOT"]) < len(long_desc)  # compressed
-    assert out["E LONG COLD"] == long_desc          # untouched
-    assert out["E SHORT HOT"] == "short"            # untouched
 
 
 @pytest.mark.spark
@@ -478,25 +456,3 @@ def test_global_provenance_cap(spark):
         assert row["source_chunks"] == first
         assert row["mention_count"] == n
         assert row["doc_count"] == n_docs
-
-
-@pytest.mark.spark
-def test_mentions_table_explodes_provenance(spark):
-    """J4: one (entity_id, chunk_id) row per distinct pair in the exploded
-    entities_doc provenance, with entity_id = normalize.entity_id(name)."""
-    from graphrag_mrkr_2_spark.functions.normalize import entity_id
-    from graphrag_mrkr_2_spark.operators.extract import chunk_pages, filter_chunks
-    from graphrag_mrkr_2_spark.operators.triples import canonicalize, mentions_table
-    from helpers import extract_mentions
-    from graphrag_mrkr_2_spark.sources.pages import generate_pages
-
-    chunks = filter_chunks(chunk_pages(generate_pages(spark, 15)))
-    entities_doc, _ = canonicalize(extract_mentions(chunks))
-    expected = {
-        (entity_id(r["name"]), c)
-        for r in entities_doc.collect()
-        for c in r["source_chunks"]
-    }
-    got = mentions_table(entities_doc).collect()
-    assert len(got) == len(expected) > 0
-    assert {(r["entity_id"], r["chunk_id"]) for r in got} == expected

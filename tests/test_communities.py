@@ -8,7 +8,6 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from graphrag_mrkr_2_spark.operators import communities, graphalgo
 from graphrag_mrkr_2_spark.operators.communities import (
-    community_summaries,
     detect_communities,
     normalize_edge_weights,
     project_edges,
@@ -198,13 +197,8 @@ def test_writeback_and_summaries(spark, planted_edges):
     )
     joined = write_membership(nodes, mem)
     assert joined.where(F.col("community_id").isNotNull()).count() == 10
-    summaries = community_summaries(joined).collect()
-    assert len(summaries) == 2
-    s = {r["community_id"]: r for r in summaries}
-    for r in summaries:
-        assert r["n_members"] == 5
-        # top members ranked by mention_count desc
-        assert r["top_entities"][0] in ("NAME 4", "NAME 9")
+    sizes = [r["count"] for r in joined.groupBy("community_id").count().collect()]
+    assert sorted(sizes) == [5, 5]
 
 
 def _parity_cases():

@@ -3,8 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from graphrag_mrkr_2_spark.operators import ann
-from graphrag_mrkr_2_spark.operators.ann import brute_force_topk, knn_join, lsh_topk
+from graphrag_mrkr_2_spark.operators.ann import brute_force_topk, knn_join
 from graphrag_mrkr_2_spark.operators.dedup import (
     embedding_near_dupes,
     exact_duplicates,
@@ -195,19 +194,6 @@ def test_knn_join_matches_brute_force(emb_df):
         qv = emb_df.where(F.col("vec_id") == qid).collect()[0]["embedding"]
         expect = [r["vec_id"] for r in brute_force_topk(emb_df, qv, k=4).collect()]
         assert [v for _, v in sorted(by_q[qid])] == expect
-
-
-@pytest.mark.spark
-def test_lsh_topk_recall(emb_df, monkeypatch):
-    queries = emb_df.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    monkeypatch.setattr(ann, "LSH_TOPK", 1)
-    monkeypatch.setattr(ann, "LSH_PLANES", 6)
-    got = lsh_topk(emb_df, queries, dim=64).collect()
-    # rank-1 for each query must be the query itself (same bucket, cos=1)
-    top1 = {r["query_id"]: r["vec_id"] for r in got if r["rank"] == 1}
-    assert top1 == {i: i for i in range(5)}
 
 
 @pytest.mark.spark

@@ -1,14 +1,12 @@
-"""T10: document summary/classification seam + category propagation."""
+"""T10: document content assembly, classification seam + category propagation."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from graphrag_mrkr_2_spark.operators.docsummary import (
-    DOCUMENT_TYPES,
     assemble_document_content,
     classify_documents,
     propagate_category,
-    summarize_documents,
 )
 
 
@@ -44,19 +42,6 @@ def test_smart_truncation_sentence_boundary(spark):
     assert content.endswith(".")  # trimmed at the period, inclusive
     period_pos = long_text.index(".") + 1
     assert len(content) == period_pos
-
-
-@pytest.mark.spark
-def test_summaries_deterministic_and_typed(chunks_df):
-    s1 = {r["document_id"]: r for r in summarize_documents(chunks_df).collect()}
-    s2 = {r["document_id"]: r for r in summarize_documents(chunks_df).collect()}
-    assert len(s1) == 3
-    for d, row in s1.items():
-        assert row["document_type"] in DOCUMENT_TYPES
-        assert row["summary"].startswith(f"Doc {d[-1]} chunk 0.")
-        assert row["hashtags"] and all(t.startswith("#") for t in row["hashtags"])
-        assert s2[d]["summary"] == row["summary"]
-        assert s2[d]["document_type"] == row["document_type"]
 
 
 @pytest.mark.spark

@@ -6,6 +6,7 @@ COMPOSE — the 'a reference user could switch and run everything' claim."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def _build_warc(pages: list[tuple[str, bytes]]) -> bytes:
@@ -29,10 +30,7 @@ def test_full_journey(spark, tmp_path):
     )
     from graphrag_mrkr_2_spark.operators.dedup import exact_duplicates
     from graphrag_mrkr_2_spark.operators.textclean import redact_pii
-    from graphrag_mrkr_2_spark.operators.urlops import (
-        dedup_normalized_urls,
-        with_normalized_urls,
-    )
+    from graphrag_mrkr_2_spark.operators.urlops import with_normalized_urls
     from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
     from graphrag_mrkr_2_spark.sources.catalog import SnapshotCatalog
     from graphrag_mrkr_2_spark.sources.loaders import (
@@ -69,7 +67,9 @@ def test_full_journey(spark, tmp_path):
     assert exact_duplicates(texted).count() >= 1
 
     # -- KG construction with URL curation (the utm dup must vanish)
-    res = run_kg_pipeline(dedup_normalized_urls(with_normalized_urls(pages)))
+    w = Window.partitionBy("norm_url").orderBy("url")
+    curated = with_normalized_urls(pages).withColumn("__rn", F.row_number().over(w))
+    res = run_kg_pipeline(curated.where(F.col("__rn") == 1).drop("__rn"))
     n_docs = res.mentions.select("document_id").distinct().count()
     assert n_docs == 5  # 5 distinct crawl pages; dup curated away; docx page
     # has no extractable mock-tuple content but decoded fine above

@@ -100,42 +100,6 @@ class TestHostile:
                 pass
 
 
-@pytest.mark.spark
-class TestDiscoveryOperator:
-    def test_expand_discovery_payloads(self, spark):
-        import gzip
-
-        from graphrag_mrkr_2_spark.operators.urlops import (
-            expand_discovery_payloads,
-        )
-
-        rows = [
-            ("https://a/sm.xml",
-             b"<urlset><url><loc>https://a/1</loc>"
-             b"<lastmod>2026-01-01</lastmod></url></urlset>"),
-            ("https://a/sm.txt", b"https://a/2\n"),
-            ("https://a/sm.gz", gzip.compress(
-                b"<urlset><url><loc>https://a/3</loc></url></urlset>")),
-            ("https://a/feed", RSS),
-            ("https://a/atom", ATOM),
-            ("https://a/junk", b"\x00not a discovery doc"),  # quarantined
-        ]
-        df = spark.createDataFrame(rows, "url string, payload binary")
-        got = expand_discovery_payloads(df).collect()
-        by_id = {}
-        for r in got:
-            by_id.setdefault(r.id, []).append((r.doc_kind, r.loc, r.lastmod))
-        assert by_id["https://a/sm.xml"] == [
-            ("urlset", "https://a/1", "2026-01-01")]
-        assert by_id["https://a/sm.txt"] == [("text", "https://a/2", None)]
-        assert by_id["https://a/sm.gz"] == [("urlset", "https://a/3", None)]
-        assert [x[1] for x in by_id["https://a/feed"]] == [
-            "https://x.example/1", "https://x.example/2"]
-        assert by_id["https://a/atom"][0] == (
-            "atom", "https://x.example/e1", "2026-01-05T10:00:00Z")
-        assert "https://a/junk" not in by_id
-
-
 def test_atom_first_alternate_link_wins():
     """ADVICE r7: a second rel=alternate must not overwrite the first."""
     from graphrag_mrkr_2_spark.functions.feeds import parse_feed
@@ -159,41 +123,3 @@ def test_atom_first_alternate_link_wins():
     assert entries[0]["link"] == "https://x.example/first"
     # self-only entry still falls back to the non-alternate placeholder
     assert entries[1]["link"] == "https://x.example/self2"
-
-
-def test_gzipped_feed_expands_through_discovery(spark):
-    """ADVICE r7: .xml.gz feeds must survive expand_discovery_payloads."""
-    import gzip
-
-    from graphrag_mrkr_2_spark.operators.urlops import expand_discovery_payloads
-
-    feed = (b'<?xml version="1.0"?><rss version="2.0"><channel><title>c</title>'
-            b"<item><title>i1</title><link>https://g.example/a</link></item>"
-            b"</channel></rss>")
-    df = spark.createDataFrame(
-        [("https://g.example/feed.xml.gz", bytearray(gzip.compress(feed)))],
-        "url string, payload binary",
-    )
-    rows = expand_discovery_payloads(df).collect()
-    assert len(rows) == 1 and rows[0]["loc"] == "https://g.example/a"
-    assert rows[0]["doc_kind"] == "rss"
-
-
-def test_corrupt_gzip_discovery_payload_quarantines_row(spark):
-    """Review r8: a gzip header with a corrupt deflate body raises
-    zlib.error from GzipFile — the expansion operator must quarantine the
-    row, not fail the task."""
-    from graphrag_mrkr_2_spark.operators.urlops import expand_discovery_payloads
-
-    import gzip
-
-    good = (b'<?xml version="1.0"?><rss version="2.0"><channel><title>c</title>'
-            b"<item><title>i</title><link>https://ok.example/a</link></item>"
-            b"</channel></rss>")
-    df = spark.createDataFrame(
-        [("https://bad.example/f.xml.gz", bytearray(b"\x1f\x8b\x08\x00" + b"corrupt!")),
-         ("https://ok.example/feed.xml.gz", bytearray(gzip.compress(good)))],
-        "url string, payload binary",
-    )
-    rows = expand_discovery_payloads(df).collect()
-    assert [r["loc"] for r in rows] == ["https://ok.example/a"]

@@ -18,16 +18,15 @@ import numpy as np
 import pytest
 
 from graphrag_mrkr_2_spark.functions.hevccodec import (
-    annexb_to_nals,
     de265_available,
     decode_hevc_frames,
     decode_hevc_frames_yuv,
     encode_hevc_samples,
     heif_item_config,
-    hevc_nals_from_heic,
     parse_hvcc,
     split_length_prefixed,
 )
+from media_fixtures import annexb_to_nals, hevc_nals_from_heic
 from graphrag_mrkr_2_spark.functions.heifcodec import (
     decode_heif_native,
     encode_heif_lossless,
@@ -105,9 +104,7 @@ class TestDe265Decode:
         bit-exactness anchor for plane reads is the 444-lossless leg,
         which compares against ground-truth input pixels."""
         _require_hevc()
-        from graphrag_mrkr_2_spark.functions.heifcodec import (
-            decode_heif_native_yuv,
-        )
+        from media_fixtures import decode_heif_native_yuv
 
         grad = np.zeros((12, 16, 3), dtype=np.uint8)
         grad[:, :, 0] = np.linspace(0, 255, 16, dtype=np.uint8)[None, :]

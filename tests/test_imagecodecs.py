@@ -268,10 +268,8 @@ class TestSparkWiring:
 
 class TestAnimatedGif:
     def test_multiframe_roundtrip_with_delays(self):
-        from graphrag_mrkr_2_spark.functions.imagecodecs import (
-            encode_gif_frames,
-            gif_frames,
-        )
+        from graphrag_mrkr_2_spark.functions.imagecodecs import gif_frames
+        from media_fixtures import encode_gif_frames
 
         rng = np.random.RandomState(2)
         pal = rng.randint(0, 256, size=(64, 3), dtype=np.uint8)
@@ -284,11 +282,8 @@ class TestAnimatedGif:
             assert g.shape == f.shape and (g == f).all()
 
     def test_first_frame_matches_decode_gif(self):
-        from graphrag_mrkr_2_spark.functions.imagecodecs import (
-            decode_gif,
-            encode_gif_frames,
-            gif_frames,
-        )
+        from graphrag_mrkr_2_spark.functions.imagecodecs import decode_gif, gif_frames
+        from media_fixtures import encode_gif_frames
 
         frames = [
             np.full((5, 6, 3), 10, dtype=np.uint8),
@@ -366,7 +361,7 @@ class TestAnimatedGif:
         assert (frames[0][1] == [0, 255, 0]).all()
 
     def test_encoder_validates_shapes_and_delays(self):
-        from graphrag_mrkr_2_spark.functions.imagecodecs import encode_gif_frames
+        from media_fixtures import encode_gif_frames
 
         a = np.zeros((4, 4, 3), dtype=np.uint8)
         b = np.zeros((2, 2, 3), dtype=np.uint8)

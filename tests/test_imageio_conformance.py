@@ -212,17 +212,14 @@ class TestImageIOToOurs:
 
     def test_progressive_jpeg_through_image_features(self, spark):
         """Operator-level wiring: a progressive JPEG must flow through
-        with_probed_media → image_features in STRICT mode (real decode,
-        no quarantine fallback) with correct probed dimensions."""
-        from graphrag_mrkr_2_spark.operators.multimodal import with_probed_media
+        probe_media → image_features in STRICT mode (real decode, no
+        quarantine fallback) with correct probed dimensions."""
+        from helpers import probed_media
 
         yy, xx = np.mgrid[0:24, 0:32]
         px = np.stack([40 + yy * 2, 60 + xx, 50 + yy + xx], axis=2).astype(np.uint8)
         data = _imageio_write_progressive_jpeg(spark, px)
-        raw = spark.createDataFrame(
-            [("prog", bytearray(data))], "media_id string, payload binary"
-        )
-        media = with_probed_media(raw)
+        media = probed_media(spark, [("prog", data)])
         meta = media.collect()[0]["meta"]
         assert meta["codec"] == "jpeg" and meta["width"] == 32 and meta["height"] == 24
         feats = image_features_binned(media, 8, strict=True, decoder=False).collect()
@@ -402,18 +399,13 @@ class TestJpegInTiffJdk:
 
     def test_probe_and_features_route_jpeg_in_tiff(self, spark):
         """Operator wiring: a JPEG-compressed TIFF flows through
-        with_probed_media -> image_features in STRICT mode."""
-        from graphrag_mrkr_2_spark.operators.multimodal import (
-            image_features,
-            with_probed_media,
-        )
+        probe_media -> image_features in STRICT mode."""
+        from graphrag_mrkr_2_spark.operators.multimodal import image_features
+        from helpers import probed_media
 
         px = self._smooth(48, 32)
         data = _imageio_write_tiff_jpeg(spark, px)
-        raw = spark.createDataFrame(
-            [("jit", bytearray(data))], "media_id string, payload binary"
-        )
-        media = with_probed_media(raw)
+        media = probed_media(spark, [("jit", data)])
         meta = media.collect()[0]["meta"]
         assert meta["codec"] == "tiff"
         assert int(meta["width"]) == 32 and int(meta["height"]) == 48

@@ -3,7 +3,7 @@
 import pytest
 
 from graphrag_mrkr_2_spark.functions.chunking import chunk_document
-from graphrag_mrkr_2_spark.operators.incremental import diff_chunks, orphan_chunk_cleanup
+from graphrag_mrkr_2_spark.operators.incremental import diff_chunks
 
 # each section body exceeds the 80-char chunk_size so the recursive splitter
 # chunks it independently of neighboring sections (boundary shifts in one
@@ -47,14 +47,3 @@ def test_rerun_is_idempotent(spark):
     assert d["added"].count() == 0
     assert d["removed"].count() == 0
     assert d["unchanged"].count() == chunks.count()
-
-
-@pytest.mark.spark
-def test_orphan_chunk_cleanup(spark):
-    chunks = spark.createDataFrame(
-        [("c1", "d1"), ("c2", "d1"), ("c3", "dgone")],
-        "chunk_id string, document_id string",
-    )
-    docs = spark.createDataFrame([("d1",)], "document_id string")
-    orphans = orphan_chunk_cleanup(chunks, docs).collect()
-    assert [r["chunk_id"] for r in orphans] == ["c3"]

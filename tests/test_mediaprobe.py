@@ -107,14 +107,10 @@ class TestMp4:
 
 
 def _fmp4(n=10, mehd=False, sidx=False) -> bytes:
-    from unittest import mock
+    from media_fixtures import mux_fmp4_video
 
-    from graphrag_mrkr_2_spark.functions import mp4mux
-
-    with mock.patch.multiple(mp4mux, FMP4_SAMPLES_PER_FRAGMENT=3,
-                             FMP4_MEHD=mehd, FMP4_SIDX=sidx):
-        return mp4mux.mux_fmp4_video([bytes([i]) * 6 for i in range(n)], 8, 8,
-                                     "hvc1", b"\x01" * 23)
+    return mux_fmp4_video([bytes([i]) * 6 for i in range(n)], 8, 8, "hvc1", b"\x01" * 23,
+                          samples_per_fragment=3, mehd=mehd, sidx=sidx)
 
 
 def _sidx(ref_id, timescale, entries) -> bytes:
@@ -333,7 +329,7 @@ class TestAnimationInfo:
         assert out["kind"] == "image" and out["duration_ms"] == 110
 
     def test_gif_animation_duration(self):
-        from graphrag_mrkr_2_spark.functions.imagecodecs import encode_gif_frames
+        from media_fixtures import encode_gif_frames
 
         data = encode_gif_frames(
             [np.zeros((3, 3, 3), np.uint8), np.full((3, 3, 3), 90, np.uint8)],
@@ -364,15 +360,13 @@ class TestHardening:
     def test_with_probed_media_survives_bogus_durations(self, spark):
         """The reviewer's repro: an int32-overflowing header duration must
         not ArrowInvalid-crash the whole scan."""
-        from graphrag_mrkr_2_spark.operators.multimodal import with_probed_media
+        from helpers import probed_media
 
         mvhd = _box(b"mvhd", b"\x00" + b"\x00" * 3 + b"\x00" * 8
                     + struct.pack(">II", 1, 0xFFFFFFF0) + b"\x00" * 80)
         bogus = _box(b"ftyp", b"isom") + _box(b"moov", mvhd)
-        df = spark.createDataFrame(
-            [("ok", bytearray(_mp4())), ("bogus", bytearray(bogus))],
-            "media_id string, payload binary")
-        rows = {r.media_id: r for r in with_probed_media(df).collect()}
+        df = probed_media(spark, [("ok", _mp4()), ("bogus", bogus)])
+        rows = {r.media_id: r for r in df.collect()}
         assert rows["ok"].meta["duration_ms"] == 12000
         assert rows["bogus"].meta["duration_ms"] is None  # clamped, not crashed
         assert rows["bogus"].kind == "video"

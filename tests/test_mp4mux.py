@@ -17,12 +17,8 @@ import numpy as np
 import pytest
 
 from graphrag_mrkr_2_spark.functions import mp4mux
-from graphrag_mrkr_2_spark.functions.mp4mux import (
-    mp4_video_samples,
-    mp4_video_track_info,
-    mux_fmp4_video,
-    mux_mp4_video,
-)
+from graphrag_mrkr_2_spark.functions.mp4mux import mp4_video_track_info, mux_mp4_video
+from media_fixtures import mp4_video_samples, mux_fmp4_video
 
 
 def _corpus(n=5, h=12, w=16, seed=23):
@@ -174,8 +170,8 @@ class TestFragmentedMp4:
 
     def test_keyframe_flags_roundtrip(self):
         samples = [b"x" * 9] * 4
-        with mock.patch.object(mp4mux, "FMP4_KEYFRAMES", [True, False, False, True]):
-            fmp4 = mux_fmp4_video(samples, 8, 8, "av01", b"\x81\x05\x0c\x00")
+        fmp4 = mux_fmp4_video(samples, 8, 8, "av01", b"\x81\x05\x0c\x00",
+                              keyframes=[True, False, False, True])
         got = mp4_video_samples(fmp4)
         assert [k for _, k, _ in got] == [True, False, False, True]
 
@@ -273,9 +269,8 @@ class TestFragmentedMp4:
             mp4_video_samples(self._hand_fragment(truns, b"AAAABBBB"))
 
     def test_keyframes_length_mismatch_raises(self):
-        with mock.patch.object(mp4mux, "FMP4_KEYFRAMES", [True]), \
-                pytest.raises(ValueError):
-            mux_fmp4_video([b"a", b"b", b"c"], 8, 8, "hvc1", b"\x01" * 23)
+        with pytest.raises(ValueError):
+            mux_fmp4_video([b"a", b"b", b"c"], 8, 8, "hvc1", b"\x01" * 23, keyframes=[True])
 
     def test_hevc_decode_through_fragments(self):
         _require_hevc()

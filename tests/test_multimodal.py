@@ -1,19 +1,13 @@
 """Multimodal plumbing: schema, batch shape, determinism, strict stubs."""
 
-from unittest import mock
-
 import pytest
-from pyspark.sql import functions as F
 
-from graphrag_mrkr_2_spark.functions import avicodec
-from graphrag_mrkr_2_spark.operators import multimodal
 from graphrag_mrkr_2_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     image_features,
-    metadata_only_stats,
     sample_video_frames,
 )
-from helpers import image_features_binned
+from helpers import image_features_binned, probed_media
 
 
 @pytest.fixture(scope="module")
@@ -55,14 +49,6 @@ def test_strict_mode_raises(media_df):
         image_features(media_df, strict=True).collect()
 
 
-@pytest.mark.spark
-def test_metadata_only_stats(media_df):
-    stats = {r["kind"]: r for r in metadata_only_stats(media_df).collect()}
-    assert stats["image"]["n_items"] == 2
-    assert stats["image"]["avg_width"] == 20.0
-    assert stats["video"]["avg_duration_ms"] == 3500.0
-
-
 class TestProbeMedia:
     def test_probe_all_containers(self):
         """probe_media must read real dims/duration from every pure-stdlib
@@ -70,14 +56,14 @@ class TestProbeMedia:
         import numpy as np
 
         from graphrag_mrkr_2_spark.functions.audiocodecs import encode_wav
-        from graphrag_mrkr_2_spark.functions.avicodec import encode_avi_mjpeg
+        from media_fixtures import encode_avi_mjpeg
         from graphrag_mrkr_2_spark.functions.imagecodecs import (
             encode_bmp,
             encode_gif,
             encode_png,
         )
         from graphrag_mrkr_2_spark.functions.jpegcodec import encode_jpeg
-        from graphrag_mrkr_2_spark.functions.tiffcodec import encode_tiff
+        from media_fixtures import encode_tiff
         from graphrag_mrkr_2_spark.operators.multimodal import probe_media
 
         px = np.zeros((12, 34, 3), dtype=np.uint8)
@@ -90,8 +76,7 @@ class TestProbeMedia:
             assert (p["width"], p["height"]) == (34, 12), codec
         wav = probe_media(encode_wav(np.zeros(16000, dtype=np.int16), 8000))
         assert (wav["kind"], wav["codec"], wav["duration_ms"]) == ("audio", "wav", 2000)
-        with mock.patch.object(avicodec, "AVI_FPS", 5):
-            avi = probe_media(encode_avi_mjpeg([encode_jpeg(px)] * 10, 34, 12))
+        avi = probe_media(encode_avi_mjpeg([encode_jpeg(px)] * 10, 34, 12, fps=5))
         assert (avi["kind"], avi["codec"], avi["duration_ms"]) == ("video", "mjpg", 2000)
         assert (avi["width"], avi["height"]) == (34, 12)
         assert probe_media(b"garbage")["kind"] is None
@@ -99,24 +84,19 @@ class TestProbeMedia:
 
     @pytest.mark.spark
     def test_with_probed_media_end_to_end(self, spark):
-        """Raw (id, payload) rows -> probed MEDIA_SCHEMA -> each kind's
-        feature operator consumes its own rows, unknown rows quarantine."""
+        """Raw (id, payload) rows -> probed MEDIA_SCHEMA -> the image feature
+        operator consumes its own rows, unknown rows quarantine."""
         import numpy as np
 
         from graphrag_mrkr_2_spark.functions.audiocodecs import encode_wav
         from graphrag_mrkr_2_spark.functions.imagecodecs import encode_png
-        from graphrag_mrkr_2_spark.operators.multimodal import (
-            audio_features,
-            with_probed_media,
-        )
 
         rows = [
-            ("img", bytearray(encode_png(np.full((8, 8, 3), 255, dtype=np.uint8)))),
-            ("aud", bytearray(encode_wav(np.zeros(800, dtype=np.int16), 8000))),
-            ("bad", bytearray(b"not media")),
+            ("img", encode_png(np.full((8, 8, 3), 255, dtype=np.uint8))),
+            ("aud", encode_wav(np.zeros(800, dtype=np.int16), 8000)),
+            ("bad", b"not media"),
         ]
-        raw = spark.createDataFrame(rows, "media_id string, payload binary")
-        media = with_probed_media(raw)
+        media = probed_media(spark, rows)
         kinds = {r["media_id"]: r["kind"] for r in media.collect()}
         assert kinds == {"img": "image", "aud": "audio", "bad": "unknown"}
         metas = {r["media_id"]: r["meta"] for r in media.collect()}
@@ -124,9 +104,6 @@ class TestProbeMedia:
         assert metas["aud"]["duration_ms"] == 100
         feats = image_features_binned(media, 4, strict=True).collect()
         assert len(feats) == 1 and feats[0]["feature"][-1] == pytest.approx(1.0)
-        with mock.patch.object(multimodal, "AUDIO_STRICT", True):
-            afeats = audio_features(media).collect()
-        assert len(afeats) == 1 and afeats[0]["duration_ms"] == 100
 
 
 class TestProbeJpegFillBytes:

@@ -248,11 +248,12 @@ class TestLoadLibrary:
         assert lib.zlibVersion().startswith(b"1.")
 
     def test_too_old_libraries_make_the_codecs_unavailable(self, monkeypatch):
+        import media_fixtures
         from graphrag_mrkr_2_spark.functions import av1codec, heifcodec, hevccodec
 
         for table in (nc._WEBP_PROTOTYPES, nc._JPEG_SHIM_PROTOTYPES,
                       heifcodec._HEIF_PROTOTYPES, hevccodec._DE265_PROTOTYPES,
-                      av1codec._DAV1D_PROTOTYPES, av1codec._AOM_PROTOTYPES):
+                      av1codec._DAV1D_PROTOTYPES, media_fixtures._AOM_PROTOTYPES):
             monkeypatch.setitem(table, "symbol_newer_than_this_library",
                                 (None, []))
         assert not nc.webp_available()
@@ -263,5 +264,5 @@ class TestLoadLibrary:
         assert not heifcodec.heif_available("heic")
         assert not hevccodec.de265_available()
         assert not av1codec.dav1d_available()
-        assert not av1codec.aom_decoder_available()
+        assert not media_fixtures.aom_decoder_available()
         assert nc.NativeImageDecoder().available_formats() == ()

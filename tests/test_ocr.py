@@ -357,40 +357,3 @@ class TestExtractImageTextSpark:
         df = extract_image_text(self._media(spark), ocr=_fake_ocr)
         assert df.count() == 0
         assert [f.name for f in df.schema.fields[:2]] == ["media_id", "content"]
-
-
-@pytest.mark.spark
-class TestReadImageDocumentsE2E:
-    def test_pixels_to_text_to_chunks(self, spark, tmp_path):
-        """The full reference path: scanned-image corpus → OCR pages →
-        TextUnits, composing with chunk_pages unchanged."""
-        from graphrag_mrkr_2_spark.operators.extract import chunk_pages
-        from graphrag_mrkr_2_spark.sources.loaders import read_image_documents
-
-        (tmp_path / "scan_a.png").write_bytes(encode_png(_text_image()))
-        (tmp_path / "photo.png").write_bytes(encode_png(_photo_image()))
-
-        pages = read_image_documents(spark, str(tmp_path), ocr=_fake_ocr)
-        rows = pages.collect()
-        assert len(rows) == 1  # the photo yields no document (None contract)
-        (row,) = rows
-        assert row["url"].endswith("scan_a.png")
-        assert row["text"] == ENGLISH
-        assert row["lang"] == "eng"
-        assert row["html"] is None and row["warc_ts"]
-
-        chunks = chunk_pages(pages, strategy="legacy").collect()
-        assert len(chunks) >= 1
-        assert all(c["content"] in ENGLISH for c in chunks)
-        assert chunks[0]["content"].startswith("The quick brown fox")
-
-    def test_ocr_disabled_loader_returns_empty(self, spark, tmp_path, monkeypatch):
-        from graphrag_mrkr_2_spark.operators import multimodal
-        from graphrag_mrkr_2_spark.sources.loaders import read_image_documents
-
-        monkeypatch.setattr(multimodal, "OCR_ENABLED", False)
-        (tmp_path / "scan.png").write_bytes(encode_png(_text_image()))
-        assert (
-            read_image_documents(spark, str(tmp_path), ocr=_fake_ocr).count()
-            == 0
-        )

@@ -1,5 +1,5 @@
-"""Census of the package's settable values: every defaulted parameter is
-passed by a product caller, or is kept on purpose.
+"""Census of the package: every function has a product caller, every
+defaulted parameter is passed by one, and no module keeps an unused import.
 
 Each defaulted parameter of a module-level function or class method in
 ``graphrag_mrkr_2_spark/`` must be passed by at least one product call site:
@@ -21,9 +21,23 @@ counts as passing every parameter it can reach, and ``__main__`` prints it
 for a check by hand. A function that forwards its own never-passed
 parameter to another passes nothing.
 
+Callers of functions: every module-level function or class of the package
+must be referenced by a product file outside its own body; the ones that
+are not must be exactly the ``KEPT_FUNCTIONS`` entries, each with its
+reason. A reference is the bare name as an identifier, an attribute, an
+imported name or a string constant (a name looked up by ``getattr`` or
+from a registry). References from inside a definition that no product
+code reaches do not count, so the private helpers only such a definition
+uses are found too; references from inside a kept entry do count.
+Fixture builders and the reference twins tests compare product code
+against live in ``tests/``, not in the package.
+
+Imports: no package module keeps a module-level import it never names.
+
 AST only; no Spark. ``python tests/test_option_census.py`` prints the
-``KEPT`` list with reasons and the counts under both rules (tests counted
-as callers, and product callers only).
+``KEPT`` and ``KEPT_FUNCTIONS`` lists with reasons, anything unreferenced
+or unused, and the counts under both rules of the parameter census (tests
+counted as callers, and product callers only).
 """
 
 import ast
@@ -39,16 +53,9 @@ _CFG = "PipelineConfig: the reference's settings.py values, hashed into the snap
 KEPT = {
     ("extract_mentions_fused", "llm"): _SEAM + "a real LLM client replaces the mock extraction LLM",
     ("run_reference_pipeline", "llm"): _SEAM + "a real LLM client replaces the mock in the sequential oracle",
-    ("summarize_documents", "summarizer"): _SEAM + "a real LLM summarizer replaces the deterministic one",
-    ("summarize_descriptions", "summarizer"): _SEAM + "a real LLM summarizer replaces the deterministic one",
     ("classify_documents", "classifier"): _SEAM + "a real document classifier replaces the deterministic one",
     ("expand_query_terms", "llm"): _SEAM + "a real LLM replaces the deterministic query-expansion stand-in",
     ("rerank_candidates", "scorer"): _SEAM + "a cross-encoder replaces the lexical scorer",
-    ("StructuredQueryExecutor.__init__", "sql_generator"): _SEAM + "a text-to-SQL LLM replaces the template generator",
-    ("StructuredQueryExecutor.__init__", "sql_corrector"): _SEAM + "an LLM SQL fixer replaces the fallback-query stand-in",
-    ("StructuredQueryExecutor.__init__", "mention_extractor"): _SEAM + "an LLM mention extractor replaces the quoted/Title-Case stand-in",
-    ("StructuredQueryExecutor.__init__", "node_embeddings"): _SEAM + "a real model's node embeddings replace the pseudo-embedding of names",
-    ("read_image_documents", "ocr"): _SEAM + "a tesseract-class OCR engine plugs in; without one no text is extracted",
     ("token_budget_shards", "snapshot_dir"): "deployment setting: where the shard snapshot is written",
     ("entity_mapping", "vec_col"): _CAPABILITY + "the embedding-cosine scoring leg (SparkER)",
     ("entity_mapping", "cosine_threshold"): _CAPABILITY + "the embedding-cosine scoring leg (SparkER)",
@@ -60,8 +67,14 @@ KEPT = {
     ("SnapshotCatalog.read", "with_current_schema"): _CAPABILITY + "reading an old snapshot under the current schema",
     ("chunk_pages", "cfg"): _CFG,
     ("with_content_filter", "cfg"): _CFG,
-    ("filter_chunks", "cfg"): _CFG,
     ("run_kg_pipeline", "cfg"): _CFG,
+}
+
+_D1 = "a paper table the one-DAG builder (ROADMAP D1) composes; no product caller builds it yet: "
+
+KEPT_FUNCTIONS = {
+    "operators.similarity.entity_similarity_edges": _D1 + "S9/J2 entity SIMILAR_TO edges",
+    "operators.communities.write_membership": _D1 + "S10 nodes.community_id (G4 writeback)",
 }
 
 
@@ -224,6 +237,66 @@ def _short(q):
     return q.split("::", 1)[1]
 
 
+def _dotted(path):
+    """graphrag_mrkr_2_spark/operators/x.py -> operators.x"""
+    return ".".join(path.relative_to(PACKAGE).with_suffix("").parts)
+
+
+def unreferenced():
+    """Module-level package functions and classes no product file reaches,
+    as sorted ``module.name`` strings."""
+    defs = {}  # (file, name) -> module.name
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[(path.relative_to(ROOT).as_posix(), node.name)] = \
+                    f"{_dotted(path)}.{node.name}"
+    refs = {}  # name -> {(file, enclosing top-level definition or None)}
+    for rel, path in _caller_files(with_tests=False):
+        for top in ast.parse(path.read_text()).body:
+            owner = (rel, getattr(top, "name", None))
+            for n in ast.walk(top):
+                if isinstance(n, ast.Name):
+                    name = n.id
+                elif isinstance(n, ast.Attribute):
+                    name = n.attr
+                elif isinstance(n, ast.alias):
+                    name = n.name.rsplit(".", 1)[-1]
+                elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                    name = n.value
+                else:
+                    continue
+                refs.setdefault(name, set()).add(owner)
+    # a reference from inside an unreached definition that is not kept
+    # does not count: iterate to a fixpoint
+    dead = set()
+    while True:
+        new = {d for d in defs if not any(
+            o != d and (o not in dead or defs.get(o) in KEPT_FUNCTIONS)
+            for o in refs.get(d[1], ()))}
+        if new == dead:
+            return sorted(defs[d] for d in dead)
+        dead = new
+
+
+def unused_imports():
+    """``module: name`` for each module-level import a package module never
+    names again."""
+    out = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if bound not in used:
+                        out.append(f"{_dotted(path)}: {bound}")
+    return out
+
+
 def test_every_default_is_passed_by_some_caller():
     _, never, _ = census()
     found = {(_short(q), p) for q, ps in never.items() for p in ps}
@@ -234,6 +307,7 @@ def test_every_default_is_passed_by_some_caller():
 
 def test_every_kept_entry_has_a_reason():
     assert all(r.strip() for r in KEPT.values())
+    assert len(KEPT_FUNCTIONS) <= 2 and all(r.strip() for r in KEPT_FUNCTIONS.values())
 
 
 def test_census_sees_the_known_callers():
@@ -244,10 +318,31 @@ def test_census_sees_the_known_callers():
     assert defs[cp][2] and cp not in never
 
 
+def test_every_function_has_a_product_caller():
+    found = set(unreferenced())
+    assert found == set(KEPT_FUNCTIONS), (
+        f"referenced by no product file, not KEPT_FUNCTIONS (delete them or "
+        f"move test-only code to tests/): {sorted(found - set(KEPT_FUNCTIONS))}; "
+        f"KEPT_FUNCTIONS but now referenced or gone: {sorted(set(KEPT_FUNCTIONS) - found)}")
+
+
+def test_no_unused_module_imports():
+    found = unused_imports()
+    assert not found, f"module-level imports never used: {found}"
+
+
 if __name__ == "__main__":
     defs, never, spreads = census()
     for s in spreads:
         print(f"unresolved spread, check by hand: {s}")
+    print("KEPT_FUNCTIONS (referenced by no product file, on purpose):")
+    for q, reason in sorted(KEPT_FUNCTIONS.items()):
+        print(f"  {q}: {reason}")
+    for q in unreferenced():
+        if q not in KEPT_FUNCTIONS:
+            print(f"NOT KEPT, referenced by no product file: {q}")
+    for q in unused_imports():
+        print(f"unused module-level import: {q}")
     print("KEPT (never passed by a product caller, on purpose):")
     for (q, p), reason in sorted(KEPT.items()):
         print(f"  {q}({p}): {reason}")

@@ -112,7 +112,7 @@ def _triple_set(df) -> set:
 def test_unified_pass_matches_modular_build(spark, modular_kg, strategy):
     """The builder's one fused pass (mentions AND chunk rows, pinned once)
     produces the same chunk table and triples as the unfused
-    chunk_pages → filter_chunks → extract_mentions chain, for each
+    chunk_pages → with_content_filter → extract_mentions chain, for each
     strategy that chunks web pages."""
     from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
     from graphrag_mrkr_2_spark.sources.pages import generate_pages

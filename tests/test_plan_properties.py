@@ -241,10 +241,9 @@ def test_repartition_skip_gate_markers(spark, tmp_path_factory, monkeypatch):
     scan, a curated scan and an in-memory relation keep the exchange. The
     mentions are read from the pinned pass, so a recorder around
     repartition_by_url observes the gate."""
-    from graphrag_mrkr_2_spark.operators.urlops import (
-        dedup_normalized_urls,
-        with_normalized_urls,
-    )
+    from pyspark.sql.window import Window
+
+    from graphrag_mrkr_2_spark.operators.urlops import with_normalized_urls
     from graphrag_mrkr_2_spark.plans import pipeline
     from graphrag_mrkr_2_spark.sources.pages import (
         PAGES_SCHEMA,
@@ -280,7 +279,10 @@ def test_repartition_skip_gate_markers(spark, tmp_path_factory, monkeypatch):
         assert scan.rdd.getNumPartitions() >= width
         assert not exchanged(scan), sub
         assert exchanged(scan.where(F.col("url") != "")), sub
-    assert exchanged(dedup_normalized_urls(with_normalized_urls(scan)))
+    # one row per normalized URL: a window over the scan keeps the exchange
+    w = Window.partitionBy("norm_url").orderBy("url")
+    curated = with_normalized_urls(scan).withColumn("__rn", F.row_number().over(w))
+    assert exchanged(curated.where(F.col("__rn") == 1).drop("__rn"))
 
     local = spark.createDataFrame([make_page(i) for i in range(8)], PAGES_SCHEMA)
     assert exchanged(local)

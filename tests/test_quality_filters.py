@@ -2,11 +2,8 @@
 
 import pytest
 
-from graphrag_mrkr_2_spark.functions.quality import (
-    analyze_text_quality,
-    should_embed_chunk,
-    should_remove_chunk,
-)
+from graphrag_mrkr_2_spark.functions.quality import should_embed_chunk
+from helpers import analyze_text_quality
 
 SAMPLES = [
     "This is a perfectly normal paragraph of english text with reasonable words in it for testing.",
@@ -29,12 +26,6 @@ def test_quality_oracle_basics():
     assert good["quality_score"] > 0.5 and good["is_readable"]
     assert analyze_text_quality("")["quality_score"] == 0.0
     assert analyze_text_quality("tiny")["quality_score"] == 0.0  # len<5
-
-
-def test_should_remove_chunk_rules():
-    assert should_remove_chunk("bad", 0, 0)  # short + no entities
-    assert not should_remove_chunk("bad", 1, 0)
-    assert not should_remove_chunk(SAMPLES[0], 0, 0)
 
 
 def test_content_filter_reasons():
@@ -139,62 +130,3 @@ def test_spark_quality_matches_oracle(spark):
             continue
         expected = analyze_text_quality(s)["quality_score"]
         assert got[i] == pytest.approx(expected, abs=1e-9), f"sample {i}"
-
-
-@pytest.mark.spark
-def test_post_entity_chunk_removal_matches_oracle(spark):
-    """T6 keeps exactly the chunks should_remove_chunk keeps, on the 40-page
-    chunks with their J6 extraction counts plus short chunks padded with
-    whitespace that Spark's trim (U+0020 only) does not strip."""
-    from collections import Counter
-
-    from graphrag_mrkr_2_spark.operators.extract import (
-        chunk_pages,
-        filter_chunks,
-        post_entity_chunk_removal,
-    )
-    from graphrag_mrkr_2_spark.operators.triples import entity_counts_per_chunk
-    from helpers import extract_mentions
-    from graphrag_mrkr_2_spark.sources.pages import generate_pages
-
-    word = "abcdefghijklmnopqrstuvwxyzab"  # 28 letters: short once stripped
-    padded = {
-        "pad-newlines": (word + "\n\n\n", 0, 0),
-        "pad-tab": ("\t" + word + " \n", 0, 0),
-        "pad-nbsp": ("\u00a0" + word + "\u3000", 0, 0),
-        "pad-separator": (word + "\x1c\x1f", 0, 0),
-        "pad-with-entity": (word + "\n\n\n", 1, 0),
-        "long-padded": ("\n" + word + "abcd\t", 0, 0),
-    }
-    chunks = filter_chunks(chunk_pages(generate_pages(spark, 40)))
-    mentions = extract_mentions(chunks)
-    counts = entity_counts_per_chunk(mentions)
-
-    # J6 against the mention rows themselves
-    kinds = Counter((r["chunk_id"], r["kind"]) for r in mentions.collect())
-    got_counts = {
-        r["chunk_id"]: (r["entity_count"], r["relationship_count"]) for r in counts.collect()
-    }
-    assert got_counts == {
-        c: (kinds[(c, "entity")], kinds[(c, "relationship")]) for c, _ in kinds
-    }
-
-    content = {r["chunk_id"]: r["content"] for r in chunks.collect()}
-    assert len(content) == 178
-    content.update({k: v[0] for k, v in padded.items()})
-    counts_of = {**got_counts, **{k: v[1:] for k, v in padded.items()}}
-    all_chunks = spark.createDataFrame(list(content.items()), ["chunk_id", "content"])
-    all_counts = spark.createDataFrame(
-        [(k, *v) for k, v in counts_of.items()],
-        "chunk_id string, entity_count long, relationship_count long",
-    )
-    kept = {
-        r["chunk_id"]
-        for r in post_entity_chunk_removal(all_chunks, all_counts).collect()
-    }
-    expected = {
-        c for c, text in content.items() if not should_remove_chunk(text, *counts_of.get(c, (0, 0)))
-    }
-    assert kept == expected
-    assert {"pad-with-entity", "long-padded"} <= kept
-    assert not kept & {"pad-newlines", "pad-tab", "pad-nbsp", "pad-separator"}

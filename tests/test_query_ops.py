@@ -1,22 +1,12 @@
-"""Query-side operators: BM25, RRF, hybrid fusion, beam search, sentences."""
+"""Query-side operators: BM25, RRF, query expansion, graph expansion."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from graphrag_mrkr_2_spark.functions import sentences
 from graphrag_mrkr_2_spark.operators import query
-from graphrag_mrkr_2_spark.functions.sentences import (
-    get_sentence_window,
-    split_into_sentences,
-)
 from graphrag_mrkr_2_spark.operators.query import (
-    beam_expand,
     bm25_search,
     build_bm25_index,
     rrf_fuse,
-    sentence_windows,
-    split_sentences,
-    weighted_fuse,
 )
 
 CHUNKS = [
@@ -25,28 +15,6 @@ CHUNKS = [
     ("c3", "backup engine writes snapshots to object storage volumes"),
     ("c4", "spark dataframes compile to catalyst plans with codegen"),
 ]
-
-
-def test_sentence_split_abbreviations():
-    s = split_into_sentences("Dr. Smith runs the lab. The lab is in Bldg 4 today.")
-    assert len(s) == 2  # no split after "Dr."
-    # faithful reference quirk: case-insensitive protection substitutes the
-    # lowercase abbreviation back (sentence_chunker.py:40-44)
-    assert s[0] == "dr. Smith runs the lab."
-
-
-def test_sentence_split_min_length_and_fallback():
-    assert split_into_sentences("Hi. No.") == ["Hi. No."]  # whole-text fallback
-    assert split_into_sentences("") == []
-
-
-def test_sentence_window_bounds(monkeypatch):
-    sents = [f"s{i}" for i in range(10)]
-    monkeypatch.setattr(sentences, "SENTENCE_WINDOW", 2)
-    assert get_sentence_window(sents, 0) == "s0 s1 s2"
-    assert get_sentence_window(sents, 9) == "s7 s8 s9"
-    monkeypatch.setattr(sentences, "SENTENCE_WINDOW", 1)
-    assert get_sentence_window(sents, 5) == "s4 s5 s6"
 
 
 @pytest.fixture(scope="module")
@@ -71,152 +39,6 @@ def test_rrf_fusion(spark):
     assert fused["c2"] == pytest.approx(1 / 61 + 1 / 62)
     assert fused["c1"] == pytest.approx(1 / 61)
     assert fused["c2"] > fused["c1"] > fused["c3"]
-
-
-@pytest.mark.spark
-def test_weighted_fusion(spark):
-    c = spark.createDataFrame([("c1", 10.0), ("c2", 0.0)], ["chunk", "score"])
-    e = spark.createDataFrame([("c2", 5.0), ("c3", 1.0)], ["chunk", "score"])
-    fused = {r["chunk"]: r["hybrid_score"] for r in weighted_fuse(c, e).collect()}
-    assert fused["c1"] == pytest.approx(0.7)  # top chunk score, no entity
-    assert fused["c2"] == pytest.approx(0.3)  # top entity score only
-    assert fused["c3"] < fused["c2"]
-
-
-@pytest.mark.spark
-def test_find_scored_paths_matches_reference_semantics(spark, monkeypatch):
-    """Q5 exact parity: sequential mirror of graph_db.py:4788-4967
-    (seed score = importance; per-path visited; per-path 2*beam candidate
-    cap by strength; new = 0.5*path + 0.3*strength + 0.2*importance; GLOBAL
-    beam prune per hop; an empty hop empties the result — the reference
-    assigns current_paths = next_paths[:beam] BEFORE its empty check)."""
-    import random
-
-    from graphrag_mrkr_2_spark.operators.query import find_scored_paths
-
-    rng = random.Random(7)
-    node_ids = [f"n{i:02d}" for i in range(14)]
-    importance = {n: round(rng.uniform(0.1, 1.0), 3) for n in node_ids}
-    edge_set = set()
-    while len(edge_set) < 30:
-        a, b = rng.sample(node_ids, 2)
-        edge_set.add((min(a, b), max(a, b)))
-    edges = [(a, b, round(rng.uniform(0.05, 1.0), 3)) for a, b in sorted(edge_set)]
-
-    seeds = ["n00", "n01"]
-    max_hops, beam, min_s = 2, 4, 0.2
-
-    # --- sequential oracle (the reference's loop, dicts and lists) ---------
-    adj = {}
-    for a, b, w in edges:
-        if w >= min_s:
-            adj.setdefault(a, []).append((b, w))
-            adj.setdefault(b, []).append((a, w))
-    paths = [([s], importance[s]) for s in seeds]
-    for _hop in range(max_hops):
-        nxt = []
-        for path, score in paths:
-            last = path[-1]
-            cands = [(b, w) for b, w in adj.get(last, []) if b not in path]
-            cands.sort(key=lambda t: (-t[1], t[0]))  # strength desc, id asc
-            for b, w in cands[: beam * 2]:
-                nxt.append((path + [b], score * 0.5 + w * 0.3 + importance[b] * 0.2))
-        nxt.sort(key=lambda t: (-t[1], t[0]))
-        paths = nxt[:beam]  # assigned BEFORE the empty check (:4950-4956)
-        if not paths:
-            break
-    expected = {(tuple(p), round(s, 6)) for p, s in paths}
-
-    nodes_df = spark.createDataFrame(
-        [(n, importance[n]) for n in node_ids], "entity_id string, importance_score double"
-    )
-    edges_df = spark.createDataFrame(
-        edges, "source_id string, target_id string, strength double"
-    )
-    monkeypatch.setattr(query, "MAX_HOPS", max_hops)
-    monkeypatch.setattr(query, "BEAM_SIZE", beam)
-    monkeypatch.setattr(query, "MIN_STRENGTH", min_s)
-    got = {
-        (tuple(r["path"]), round(r["score"], 6))
-        for r in find_scored_paths(edges_df, nodes_df, seeds).collect()
-    }
-    assert got == expected
-
-
-@pytest.mark.spark
-def test_find_scored_paths_dead_end_returns_empty(spark, monkeypatch):
-    """Reference (graph_db.py:4950-4956) sets current_paths = next_paths[:beam]
-    BEFORE the empty check, so a hop with zero expansions empties the result —
-    even when earlier hops found paths."""
-    from graphrag_mrkr_2_spark.operators.query import find_scored_paths
-
-    nodes = spark.createDataFrame(
-        [("a", 0.8), ("b", 0.6)], "entity_id string, importance_score double"
-    )
-    edges = spark.createDataFrame(
-        [("a", "b", 0.9)], "source_id string, target_id string, strength double"
-    )
-    # hop 1 reaches b; hop 2 has no unvisited neighbors -> reference returns []
-    monkeypatch.setattr(query, "BEAM_SIZE", 4)
-    res = find_scored_paths(edges, nodes, ["a"]).collect()
-    assert res == []
-    # ... but stopping at MAX_HOPS=1 keeps the hop-1 frontier
-    monkeypatch.setattr(query, "MAX_HOPS", 1)
-    res1 = find_scored_paths(edges, nodes, ["a"]).collect()
-    assert len(res1) == 1
-    assert list(res1[0]["path"]) == ["a", "b"]
-    assert res1[0]["score"] == pytest.approx(0.8 * 0.5 + 0.9 * 0.3 + 0.6 * 0.2)
-
-
-@pytest.mark.spark
-def test_beam_expand_hops_and_pruning(spark):
-    edges = spark.createDataFrame(
-        [
-            ("a", "b", 0.9),
-            ("b", "c", 0.8),
-            ("a", "d", 0.5),
-            ("d", "e", 0.9),
-            ("x", "y", 0.9),  # disconnected from seed
-        ],
-        "source_id string, target_id string, strength double",
-    )
-    seeds = spark.createDataFrame([("a",)], ["seed_id"])
-    res = beam_expand(edges, seeds)
-    rows = {(r["node"]): (r["hop"], r["path_score"]) for r in res.collect()}
-    assert rows["a"][0] == 0
-    assert rows["b"] == (1, pytest.approx(0.9))
-    assert rows["c"] == (2, pytest.approx(0.72))
-    assert rows["e"] == (2, pytest.approx(0.45))
-    assert "x" not in rows and "y" not in rows
-
-
-@pytest.mark.spark
-def test_beam_size_limits_frontier(spark, monkeypatch):
-    edges = spark.createDataFrame(
-        [("s", f"n{i:02d}", 0.5 + i / 100) for i in range(20)],
-        "source_id string, target_id string, strength double",
-    )
-    seeds = spark.createDataFrame([("s",)], ["seed_id"])
-    monkeypatch.setattr(query, "MAX_HOPS", 1)
-    res = beam_expand(edges, seeds)
-    assert res.where(F.col("hop") == 1).count() == 8
-
-
-@pytest.mark.spark
-def test_split_sentences_and_windows(chunks_df, spark, monkeypatch):
-    df = spark.createDataFrame(
-        [("c1", "First sentence is long enough. Second sentence is longer still. Third one rounds it out.")],
-        ["chunk_id", "content"],
-    )
-    sents = split_sentences(df)
-    rows = sents.orderBy("sentence_index").collect()
-    assert len(rows) == 3
-    assert all(len(r["sentence_id"]) == 16 for r in rows)
-    monkeypatch.setattr(sentences, "SENTENCE_WINDOW", 1)
-    win = sentence_windows(sents).orderBy("sentence_index").collect()
-    assert win[0]["window_text"].startswith("First sentence")
-    assert "Second sentence" in win[0]["window_text"]
-    assert "Third" not in win[0]["window_text"]
 
 
 class TestQueryExpansion:

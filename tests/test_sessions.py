@@ -1,14 +1,11 @@
-"""Gap sessionization: batch windows vs stateful-streaming twin."""
+"""Gap sessionization as windows + a running sum."""
 
 import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
 
-from graphrag_mrkr_2_spark.operators.sessions import (
-    sessionize_events,
-    sessionize_stream,
-)
+from graphrag_mrkr_2_spark.operators.sessions import sessionize_events
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -70,62 +67,3 @@ def test_subsecond_gap_boundary(spark):
     got = sessionize_events(df, gap_seconds=10)
     n = {r["user_id"]: r["n"] for r in got.groupBy("user_id").agg(F.count("*").alias("n")).collect()}
     assert n == {1: 2, 2: 1}
-
-
-@pytest.mark.spark
-def test_stream_equals_batch_closed_sessions(spark, tmp_path):
-    """The stateful stream emits exactly the batch sessions minus each
-    user's final (still-open) one, even when events arrive across several
-    micro-batches (state carries the open session between batches)."""
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    gap = 6 * 3600
-
-    batch = sessionize_events(events, gap_seconds=gap)
-    w_last = F.max("session_start").over(
-        __import__("pyspark").sql.window.Window.partitionBy("user_id")
-    )
-    closed_batch = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"], round(r["total_value"], 6))
-        for r in batch.withColumn("__last", w_last)
-        .where(F.col("session_start") != F.col("__last"))
-        .collect()
-    }
-
-    # feed the stream in three timestamp-ordered slices so availableNow
-    # produces multiple micro-batches and state must persist across them
-    stream_dir = tmp_path / "events"
-    stream_dir.mkdir()
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
-    c1 = lo + (hi - lo) / 3
-    c2 = lo + 2 * (hi - lo) / 3
-    slices = [
-        events.where(F.col("ts") <= F.lit(c1)),
-        events.where((F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))),
-        events.where(F.col("ts") > F.lit(c2)),
-    ]
-    for i, sl in enumerate(slices):
-        sl.coalesce(1).write.mode("append").parquet(str(stream_dir))
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(stream_dir))
-    )
-    q = (
-        sessionize_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"], round(r["total_value"], 6))
-        for r in spark.sql("select * from sessions_out").collect()
-    }
-    assert got == closed_batch and got

@@ -4,16 +4,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from graphrag_mrkr_2_spark.functions.embeddings import (
-    cosine_similarity,
-    pseudo_embedding,
-)
+from graphrag_mrkr_2_spark.functions.embeddings import pseudo_embedding
 from graphrag_mrkr_2_spark.operators import similarity
 from graphrag_mrkr_2_spark.operators.similarity import (
     entity_similarity_edges,
     with_embeddings,
 )
-from helpers import chunk_similarity_edges, entity_similarity_edges_exact
+from helpers import chunk_similarity_edges, cosine_similarity, entity_similarity_edges_exact
 
 
 def test_pseudo_embedding_deterministic_unit():
@@ -128,9 +125,10 @@ def test_gram_variant_matches_join_variant(spark):
         chunk_similarity_edges_grams,
     )
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
-    from graphrag_mrkr_2_spark.operators.extract import chunk_pages, filter_chunks
+    from graphrag_mrkr_2_spark.operators.extract import chunk_pages, with_content_filter
 
-    chunks = with_embeddings(filter_chunks(chunk_pages(generate_pages(spark, 15))))
+    chunks = with_content_filter(chunk_pages(generate_pages(spark, 15)))
+    chunks = with_embeddings(chunks.where("filter_reason IS NULL").drop("filter_reason"))
     a = {
         (r["document_id"], r["id1"], r["id2"]): (round(r["score"], 6), r["rank"])
         for r in chunk_similarity_edges(chunks).collect()

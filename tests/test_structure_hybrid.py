@@ -1,9 +1,6 @@
 """Structure-hybrid chunking — the docling_hybrid analog.
 
 Reference contract under test:
-- strategy dispatch: core/chunking.py:139-158 selects docling_hybrid when a
-  parsed document model exists, downgrading to legacy otherwise
-  (_resolve_chunking_strategy, core/chunking.py:283-295);
 - chunk shape: core/docling_chunker.py:55-73 — heading hierarchy kept,
   heading path prepended, token counts recorded, tables standalone.
 """
@@ -12,10 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from graphrag_mrkr_2_spark.functions.chunking import (
-    StructureHybridChunker,
-    resolve_chunking_strategy,
-)
+from graphrag_mrkr_2_spark.functions.chunking import StructureHybridChunker
 from graphrag_mrkr_2_spark.functions.docformats import (
     docx_blocks,
     document_blocks,
@@ -23,32 +17,6 @@ from graphrag_mrkr_2_spark.functions.docformats import (
     encode_pdf,
     pdf_blocks,
 )
-
-
-# ---------------------------------------------------------------------------
-# strategy resolution (core/chunking.py:283-295)
-# ---------------------------------------------------------------------------
-
-
-class TestResolveStrategy:
-    def test_html_extensions(self):
-        for ext in (".html", ".htm", ".xhtml", ".xht", "HTML"):
-            assert resolve_chunking_strategy(ext, has_structure=False) == "html_heading"
-
-    def test_pdf_with_structure(self):
-        assert resolve_chunking_strategy(".pdf", has_structure=True) == "structure_hybrid"
-
-    def test_pdf_without_structure_downgrades_to_legacy(self):
-        # reference: docling_document is None → "legacy" (chunking.py:288-290)
-        assert resolve_chunking_strategy(".pdf", has_structure=False) == "legacy"
-
-    def test_docx_mirrors_pdf(self):
-        assert resolve_chunking_strategy("docx", has_structure=True) == "structure_hybrid"
-        assert resolve_chunking_strategy("docx", has_structure=False) == "legacy"
-
-    def test_everything_else_legacy(self):
-        for ext in (".txt", ".md", "csv", "", None):
-            assert resolve_chunking_strategy(ext, has_structure=True) == "legacy"
 
 
 # ---------------------------------------------------------------------------

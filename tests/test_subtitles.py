@@ -278,7 +278,7 @@ class TestMp4TimedText:
             (3500, 4000, "Adjacent.")]
 
     def test_roundtrip_with_gaps(self):
-        from graphrag_mrkr_2_spark.functions.mp4mux import mux_mp4_timed_text
+        from media_fixtures import mux_mp4_timed_text
         from graphrag_mrkr_2_spark.functions.subtitles import (
             mp4_subtitle_cues,
         )
@@ -287,7 +287,7 @@ class TestMp4TimedText:
         assert mp4_subtitle_cues(mp4) == self.CUES
 
     def test_unsorted_cues_rejected_by_mux(self):
-        from graphrag_mrkr_2_spark.functions.mp4mux import mux_mp4_timed_text
+        from media_fixtures import mux_mp4_timed_text
 
         with pytest.raises(ValueError):
             mux_mp4_timed_text([(2000, 3000, "b"), (0, 1000, "a")])
@@ -305,7 +305,7 @@ class TestMp4TimedText:
             mp4_subtitle_cues(mp4)
 
     def test_operator_extracts_tx3g(self, spark):
-        from graphrag_mrkr_2_spark.functions.mp4mux import mux_mp4_timed_text
+        from media_fixtures import mux_mp4_timed_text
         from graphrag_mrkr_2_spark.operators.multimodal import (
             extract_subtitle_text,
         )
@@ -328,12 +328,8 @@ class TestMp4TimedTextRegressions:
         mp4_subtitle_cues crashed with KeyError."""
         import struct as st
 
-        from graphrag_mrkr_2_spark.functions.mp4mux import (
-            _box,
-            _full_box,
-            mux_fmp4_video,
-            mux_mp4_timed_text,
-        )
+        from graphrag_mrkr_2_spark.functions.mp4mux import _box, _full_box
+        from media_fixtures import mux_mp4_timed_text
         from graphrag_mrkr_2_spark.functions.subtitles import (
             mp4_subtitle_cues,
         )
@@ -366,7 +362,7 @@ class TestMp4TimedTextRegressions:
                                        st.pack(">IIIII", 1, 1, 1500, 0, 0)))
         ftyp = _box(b"ftyp", b"iso5" + st.pack(">I", 512) + b"iso5" +
                     b"iso6" + b"mp41")
-        init = ftyp + _build_moov(0, 0, stbl, 0, mvex, handler=b"text")
+        init = ftyp + _box(b"moov", _build_moov(0, 0, stbl, 0, handler=b"text")[8:] + mvex)
         samples = [st.pack(">H", len(t.encode())) + t.encode()
                    for _, _, t in cues]
         mfhd = _full_box(b"mfhd", 0, 0, st.pack(">I", 1))
@@ -387,9 +383,7 @@ class TestMp4TimedTextRegressions:
         of the tx3g track must be skipped, not fatal."""
         import struct as st
 
-        from graphrag_mrkr_2_spark.functions.mp4mux import (
-            mux_mp4_timed_text,
-        )
+        from media_fixtures import mux_mp4_timed_text
         from graphrag_mrkr_2_spark.functions.subtitles import (
             mp4_subtitle_cues,
         )
@@ -412,9 +406,7 @@ class TestMp4TimedTextRegressions:
         assert mp4_subtitle_cues(rebuilt) == cues
 
     def test_mux_rejects_backwards_and_oversize_cues(self):
-        from graphrag_mrkr_2_spark.functions.mp4mux import (
-            mux_mp4_timed_text,
-        )
+        from media_fixtures import mux_mp4_timed_text
 
         with pytest.raises(ValueError):
             mux_mp4_timed_text([(5, 3, "backwards")])
@@ -429,10 +421,8 @@ class TestAss:
             (4000, 5000, "Third!")]
 
     def test_roundtrip(self):
-        from graphrag_mrkr_2_spark.functions.subtitles import (
-            format_ass,
-            parse_ass,
-        )
+        from graphrag_mrkr_2_spark.functions.subtitles import parse_ass
+        from media_fixtures import format_ass
 
         assert parse_ass(format_ass(self.CUES)) == self.CUES
 
@@ -471,10 +461,8 @@ class TestAss:
         assert parse_ass(ass) == [(1000, 2000, "Short format.")]
 
     def test_sniff(self):
-        from graphrag_mrkr_2_spark.functions.subtitles import (
-            format_ass,
-            sniff_subtitle,
-        )
+        from graphrag_mrkr_2_spark.functions.subtitles import sniff_subtitle
+        from media_fixtures import format_ass
 
         assert sniff_subtitle(format_ass(self.CUES).encode()) == "ass"
         assert sniff_subtitle("﻿[script info]\n".encode()) == "ass"
@@ -499,7 +487,7 @@ class TestAss:
         ]
 
     def test_operator_dispatches_ass(self, spark):
-        from graphrag_mrkr_2_spark.functions.subtitles import format_ass
+        from media_fixtures import format_ass
         from graphrag_mrkr_2_spark.operators.multimodal import (
             extract_subtitle_text,
         )
@@ -515,10 +503,8 @@ class TestAss:
 
 class TestProbeMediaSubtitles:
     def test_probe_classifies_subtitle_scripts(self):
-        from graphrag_mrkr_2_spark.functions.subtitles import (
-            format_ass,
-            format_srt,
-        )
+        from graphrag_mrkr_2_spark.functions.subtitles import format_srt
+        from media_fixtures import format_ass
         from graphrag_mrkr_2_spark.operators.multimodal import probe_media
 
         assert probe_media(format_srt(CUES).encode())["kind"] == "subtitle"

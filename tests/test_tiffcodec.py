@@ -6,12 +6,8 @@ import struct
 import numpy as np
 import pytest
 
-from graphrag_mrkr_2_spark.functions.tiffcodec import (
-    _unpackbits,
-    decode_tiff,
-    encode_tiff,
-)
-from helpers import encode_tiff_lzw
+from graphrag_mrkr_2_spark.functions.tiffcodec import decode_tiff, _unpackbits
+from media_fixtures import encode_tiff
 
 
 class TestRoundtrip:
@@ -167,10 +163,8 @@ class TestLzw:
         """Enough distinct material to push the code width through 9→10→11
         bits (and table churn) — self-consistency of the early-change
         variable-width codec."""
-        from graphrag_mrkr_2_spark.functions.tiffcodec import (
-            _tiff_lzw_decode,
-            _tiff_lzw_encode,
-        )
+        from graphrag_mrkr_2_spark.functions.tiffcodec import _tiff_lzw_decode
+        from media_fixtures import _tiff_lzw_encode
 
         rng = np.random.RandomState(7)
         data = bytes(rng.randint(0, 256, size=20000, dtype=np.uint8))
@@ -184,10 +178,8 @@ class TestLzw:
         """The 9→10-bit switch happens one code EARLY (TIFF quirk vs GIF):
         a stream long enough to add entry 509 must still round-trip
         byte-exactly across the boundary."""
-        from graphrag_mrkr_2_spark.functions.tiffcodec import (
-            _tiff_lzw_decode,
-            _tiff_lzw_encode,
-        )
+        from graphrag_mrkr_2_spark.functions.tiffcodec import _tiff_lzw_decode
+        from media_fixtures import _tiff_lzw_encode
 
         # incompressible pattern: ~1 new table entry per 1-2 input bytes,
         # comfortably crossing 510 entries
@@ -199,7 +191,7 @@ class TestLzw:
     def test_tiff_lzw_image_roundtrip(self, channels, predictor):
         rng = np.random.RandomState(channels + predictor)
         px = rng.randint(0, 256, size=(19, 23, channels), dtype=np.uint8)
-        data = encode_tiff_lzw(px, predictor)
+        data = encode_tiff(px, "lzw", predictor)
         back = decode_tiff(data)
         assert back.shape == px.shape and (back == px).all()
         # the compressed payload really is LZW (tag 259 == 5)
@@ -211,8 +203,8 @@ class TestLzw:
         verify the size win on a gradient."""
         yy, xx = np.mgrid[0:64, 0:64]
         px = ((yy + xx) % 256).astype(np.uint8)[:, :, None]
-        plain = encode_tiff_lzw(px, 1)
-        pred = encode_tiff_lzw(px, 2)
+        plain = encode_tiff(px, "lzw", 1)
+        pred = encode_tiff(px, "lzw", 2)
         assert len(pred) < len(plain)
         assert (decode_tiff(pred) == px).all()
 
@@ -295,7 +287,7 @@ class TestLibtiffInterop:
         # our encoder writes -> libtiff reads
         p2 = str(tmp_path / "ours.tif")
         with open(p2, "wb") as f:
-            f.write(encode_tiff_lzw(px, predictor))
+            f.write(encode_tiff(px, "lzw", predictor))
         assert (self._read(lt, p2, 40, 50, spp) == px).all()
 
 

@@ -92,14 +92,15 @@ def test_frozen_chunk_ids_regression(spark):
     """Golden chunk boundaries for seed-42/40 pages: chunk_id embeds
     (doc, start, end, content-hash), so ANY boundary drift changes this set.
     Regenerate only for an intentional tokenizer/chunking change."""
-    from graphrag_mrkr_2_spark.operators.extract import chunk_pages, filter_chunks
+    from graphrag_mrkr_2_spark.operators.extract import chunk_pages, with_content_filter
     from graphrag_mrkr_2_spark.sources.pages import generate_pages
 
     fixture = os.path.join(
         os.path.dirname(__file__), "fixtures_chunks_seed42_40pages.json"
     )
     expected = {tuple(r) for r in json.load(open(fixture))}
-    chunks = filter_chunks(chunk_pages(generate_pages(spark, 40)))
+    chunks = with_content_filter(chunk_pages(generate_pages(spark, 40)))
+    chunks = chunks.where("filter_reason IS NULL").drop("filter_reason")
     got = {
         (r["chunk_id"], r["document_id"], r["chunk_index"], r["content_hash"])
         for r in chunks.select(

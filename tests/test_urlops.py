@@ -3,10 +3,10 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from graphrag_mrkr_2_spark.operators.urlops import (
     cap_per_domain,
-    dedup_normalized_urls,
     with_normalized_urls,
 )
 
@@ -15,6 +15,12 @@ def _norm(spark, url: str) -> tuple[str, str]:
     df = spark.createDataFrame([(url,)], "url string")
     r = with_normalized_urls(df).collect()[0]
     return r["norm_url"], r["domain"]
+
+
+def _first_per_norm_url(df):
+    """One row per ``norm_url``: the one with the min raw ``url``."""
+    w = Window.partitionBy("norm_url").orderBy("url")
+    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
 class TestNormalize:
@@ -157,7 +163,7 @@ class TestDomainCap:
 
 class TestPipelineCuration:
     def test_url_dedup_and_domain_cap_in_pipeline(self, spark):
-        """dedup_normalized_urls in front of the builder collapses
+        """One row per normalized URL in front of the builder collapses
         tracking-param variants of the same page before any heavy stage."""
         from graphrag_mrkr_2_spark.plans.pipeline import run_kg_pipeline
         from graphrag_mrkr_2_spark.sources.pages import generate_pages
@@ -168,7 +174,7 @@ class TestPipelineCuration:
             "url", F.concat("url", F.lit("?utm_source=feed#top"))
         )
         pages = base.unionByName(dup)
-        res = run_kg_pipeline(dedup_normalized_urls(with_normalized_urls(pages)))
+        res = run_kg_pipeline(_first_per_norm_url(with_normalized_urls(pages)))
         res_base = run_kg_pipeline(base)
         t_curated = {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()}
         t_base = {(r["subj"], r["pred"], r["obj"]) for r in res_base.triples.collect()}
@@ -181,7 +187,7 @@ class TestPipelineCuration:
 
         curated = with_normalized_urls(generate_pages(spark, 12))
         n_domains = curated.select("domain").distinct().count()
-        res = run_kg_pipeline(cap_per_domain(dedup_normalized_urls(curated), 1))
+        res = run_kg_pipeline(cap_per_domain(_first_per_norm_url(curated), 1))
         kept_chunk_docs = res.mentions.select("document_id").distinct().count()
         assert kept_chunk_docs <= n_domains
 
